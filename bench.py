@@ -4,11 +4,8 @@
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is executed with a count-style action that forces full
-evaluation without collecting rows to the driver. Sequential by
-default (honest per-query wall times on a CPU-bound local[32]);
-$SPARK_GRAFT_BENCH_THREADS>1 runs queries concurrently under the FAIR
-scheduler — useful on a real cluster where scheduling gaps dominate,
-measured neutral-to-worse on local mode.
+evaluation without collecting rows to the driver. Queries run one at
+a time, so each wall time is the query's own.
 
 $SPARK_GRAFT_BENCH_RUNS>1 switches to the pinned variance protocol
 (SCALE.md "Bench protocol"): the process re-execs itself N times —
@@ -27,7 +24,6 @@ import os
 import subprocess
 import sys
 import time
-from concurrent.futures import ThreadPoolExecutor
 from statistics import median
 
 
@@ -100,6 +96,20 @@ def _emit_compact(total: float, sf: str, timings: dict, extra: dict) -> None:
         compact = json.dumps(base)
     sys.stderr.flush()
     os.write(_REAL_STDOUT, (compact + "\n").encode())
+
+
+def _select_queries(qs: dict, only: str) -> dict:
+    """The ``SPARK_GRAFT_BENCH_ONLY`` subset (comma-separated names, in
+    the order given). Exits non-zero, naming them, if any name is not
+    a declared query."""
+    keep = [n.strip() for n in only.split(",") if n.strip()]
+    unknown = [n for n in keep if n not in qs]
+    if unknown:
+        sys.exit(
+            "[bench] SPARK_GRAFT_BENCH_ONLY names unknown queries: "
+            + ", ".join(unknown)
+        )
+    return {n: qs[n] for n in keep}
 
 
 def _multi_run(n_runs: int) -> None:
@@ -222,13 +232,20 @@ from recmetrics_pyspark_spark import get_spark  # noqa: E402
 
 
 def main() -> None:
+    qs = entrymod.queries()
+    # SPARK_GRAFT_BENCH_ONLY: comma-separated declared-query subset for
+    # SCRATCH lanes (the r13 sf1.0 scaling lane runs just the top-10
+    # heavies at 10x data). Unset, a run times the full declared set in
+    # declared order. Checked before any JVM starts, so a typo fails fast.
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        qs = _select_queries(qs, only)
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1"))
     if n_runs > 1:
         _multi_run(n_runs)
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    n_threads = int(os.environ.get("SPARK_GRAFT_BENCH_THREADS", "1"))
     load_start = _loadavg()
     spark = get_spark("recmetrics-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -262,19 +279,15 @@ def main() -> None:
     except Exception as exc:
         print(f"[bench] warm-up skipped: {exc}", file=sys.stderr)
 
-    qs = entrymod.queries()
-    # SPARK_GRAFT_BENCH_ONLY: comma-separated declared-query subset for
-    # SCRATCH lanes (the r13 sf1.0 scaling lane runs just the top-10
-    # heavies at 10x data). ADDITIVE knob: the driver never sets it, so
-    # its runs always time the full declared set in declared order.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = [n.strip() for n in only.split(",") if n.strip()]
-        qs = {n: qs[n] for n in keep}
     timings: dict[str, float] = {}
-
-    def run_one(item):
-        name, fn = item
+    t0_all = time.perf_counter()
+    # DECLARED order, not alphabetical: composite operators are declared
+    # after their parts (item_item_topk before item_based_recommendations),
+    # so each query's timing reflects its own marginal cost — the shared
+    # persisted lineage is paid by the operator that owns it, and
+    # composites reuse the session's plan cache exactly as a user's
+    # notebook session would.
+    for name, fn in qs.items():
         t0 = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -289,20 +302,6 @@ def main() -> None:
         except Exception as exc:  # keep benching the rest
             timings[name] = -1.0
             print(f"[bench] {name} FAILED: {exc}", file=sys.stderr)
-
-    t0_all = time.perf_counter()
-    # DECLARED order, not alphabetical: composite operators are declared
-    # after their parts (item_item_topk before item_based_recommendations),
-    # so each query's timing reflects its own marginal cost — the shared
-    # persisted lineage is paid by the operator that owns it, and
-    # composites reuse the session's plan cache exactly as a user's
-    # notebook session would.
-    if n_threads <= 1:
-        for item in qs.items():
-            run_one(item)
-    else:
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
-            list(pool.map(run_one, qs.items()))
     total = round(time.perf_counter() - t0_all, 3)
 
     # Full per-query map goes to a well-known file (overridable via

@@ -13,13 +13,15 @@ Design rules (SURVEY.md §7):
 - Broadcast small dimensions; AQE on; no dynamic pivot, no dense Gram matrix.
 """
 
-from .session import get_spark
+from .session import get_spark, release_shared, shared
 from .sources.io import TABLES, load_table, load_tables, register_views
 
 __version__ = "0.1.0"
 
 __all__ = [
     "get_spark",
+    "shared",
+    "release_shared",
     "TABLES",
     "load_table",
     "load_tables",

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shared
+
 
 def _node_broadcast_hint(df: DataFrame, limit: int):
     """Shared size guard for NODE-scale tables (degree/label tables —
@@ -361,9 +363,6 @@ def triangle_stats(
     )
 
 
-_ADJ_MEMO: dict = {}
-
-
 def _capped_adjacency(
     pairs: DataFrame,
     col_a: str,
@@ -372,24 +371,49 @@ def _capped_adjacency(
     top_neighbors: int,
     broadcast_node_limit: int,
 ):
-    """Session-scoped memo for the wedge machinery shared VERBATIM by
-    :func:`adamic_adar_links` and :func:`common_neighbor_links` (the
-    similarity family's ``_memo_trained`` pattern applied to graphs):
-    the symmetrized adjacency's degree table (checkpointed + counted
-    by the broadcast guard) and the top-``top_neighbors`` capped
-    adjacency (checkpointed — it feeds both sides of each predictor's
-    wedge self-join). Keyed by the pair table's analyzed-plan
-    semantic hash + params, so the two link predictors over the same
-    graph pay the edge-scale ranking window and the degree aggregate
-    ONCE per session instead of once each. Returns
-    (capped, deg, hint).
+    """Session-shared build (session.py::shared) of the wedge machinery
+    shared VERBATIM by :func:`adamic_adar_links` and
+    :func:`common_neighbor_links`: the symmetrized adjacency's degree
+    table (checkpointed + counted by the broadcast guard) and the
+    top-``top_neighbors`` capped adjacency (checkpointed — it feeds
+    both sides of each predictor's wedge self-join). Keyed by the pair
+    table's analyzed-plan semantic hash + params, so the two link
+    predictors over the same graph pay the edge-scale ranking window
+    and the degree aggregate ONCE per session instead of once each.
+    Returns (capped, deg, hint).
 
     Both frames are node-scale (deg) or node x top_neighbors
     (capped) — registry memory is negligible at any corpus size."""
     from pyspark.sql.window import Window
 
+    def build():
+        both = pairs.select(
+            F.col(col_a).alias("z"), F.col(col_b).alias("nbr"),
+            F.col(col_w).alias("w"),
+        ).unionByName(
+            pairs.select(
+                F.col(col_b).alias("z"), F.col(col_a).alias("nbr"),
+                F.col(col_w).alias("w"),
+            )
+        )
+        deg, _, hint = _node_broadcast_hint(
+            both.groupBy("z").agg(F.count(F.lit(1)).alias("deg")),
+            broadcast_node_limit,
+        )
+        wr = Window.partitionBy("z").orderBy(F.desc("w"), F.asc("nbr"))
+        # materialized: the capped adjacency feeds BOTH sides of the
+        # wedge self-join, and without the boundary the edge-scale
+        # top-neighbor window evaluates once per side (A/B at sf0.1
+        # over the cached pair table: 8.2-9.4 s -> 5.7-6.8 s).
+        # node x top_neighbors rows — tiny at any scale
+        capped = (
+            both.withColumn("r", F.row_number().over(wr))
+            .filter(F.col("r") <= top_neighbors)
+            .select("z", "nbr")
+        ).localCheckpoint(eager=True)
+        return capped, deg, hint
+
     key = (
-        pairs.sparkSession.sparkContext.applicationId,
         pairs._jdf.queryExecution().analyzed().semanticHash(),
         col_a,
         col_b,
@@ -397,43 +421,7 @@ def _capped_adjacency(
         int(top_neighbors),
         int(broadcast_node_limit),
     )
-    got = _ADJ_MEMO.get(key)
-    if got is not None:
-        return got
-    both = pairs.select(
-        F.col(col_a).alias("z"), F.col(col_b).alias("nbr"),
-        F.col(col_w).alias("w"),
-    ).unionByName(
-        pairs.select(
-            F.col(col_b).alias("z"), F.col(col_a).alias("nbr"),
-            F.col(col_w).alias("w"),
-        )
-    )
-    deg, _, hint = _node_broadcast_hint(
-        both.groupBy("z").agg(F.count(F.lit(1)).alias("deg")),
-        broadcast_node_limit,
-    )
-    wr = Window.partitionBy("z").orderBy(F.desc("w"), F.asc("nbr"))
-    # materialized: the capped adjacency feeds BOTH sides of the wedge
-    # self-join, and without the boundary the edge-scale top-neighbor
-    # window evaluates once per side (A/B at sf0.1 over the cached
-    # pair table: 8.2-9.4 s -> 5.7-6.8 s). node x top_neighbors rows —
-    # tiny at any scale
-    capped = (
-        both.withColumn("r", F.row_number().over(wr))
-        .filter(F.col("r") <= top_neighbors)
-        .select("z", "nbr")
-    ).localCheckpoint(eager=True)
-    _ADJ_MEMO[key] = (capped, deg, hint)
-    return _ADJ_MEMO[key]
-
-
-def clear_adjacency_cache() -> None:
-    """Drop every memoized adjacency (see :func:`_capped_adjacency`) —
-    the same explicit-lifecycle contract as
-    similarity.clear_trained_cache for callers that churn through
-    many graphs in one application."""
-    _ADJ_MEMO.clear()
+    return shared(pairs.sparkSession, "capped_adjacency", key, build)
 
 
 def adamic_adar_links(
@@ -476,7 +464,7 @@ def adamic_adar_links(
     join falls back to a shuffle join — the same guard as
     pagerank_from_edges / min_label_components / minhash_lsh_pairs.
     The degree table and the capped adjacency come from the
-    :func:`_capped_adjacency` session memo shared with
+    :func:`_capped_adjacency` shared build, also read by
     :func:`common_neighbor_links` — the two predictors over one graph
     pay the edge-scale ranking window once."""
     from pyspark.sql.window import Window
@@ -550,7 +538,7 @@ def common_neighbor_links(
     broadcast only at or below the limit; above it the two degree
     enrich joins fall back to shuffle joins — never hint-force a
     vocabulary-scale table at 100 TB. The degree table and the capped
-    adjacency come from the :func:`_capped_adjacency` session memo
+    adjacency come from the :func:`_capped_adjacency` shared build
     shared with :func:`adamic_adar_links`."""
     from pyspark.sql.window import Window
 

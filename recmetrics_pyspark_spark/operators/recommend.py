@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import shared
 from ..sources.io import load_table
 
 # Knuth-style multiplicative constants; small enough that
@@ -23,24 +24,6 @@ from ..sources.io import load_table
 _HASH_A = 2654435761
 _HASH_B = 40503
 _HASH_MOD = 1000003
-
-
-_INTERACTIONS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def clear_interactions_cache() -> None:
-    """Drop the memoized interactions frames (mirrors
-    similarity.clear_trained_cache). Call alongside
-    ``spark.catalog.clearCache()`` when switching corpora — clearing
-    only the Spark cache would leave the memo returning now-uncached
-    frames that silently recompute the orders⋈lineitem join per
-    consumer."""
-    for df in _INTERACTIONS_MEMO.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to drop
-            pass
-    _INTERACTIONS_MEMO.clear()
 
 
 def interactions(
@@ -51,32 +34,22 @@ def interactions(
     Mirrors the reference's tall/stacked data model (SURVEY.md §1.1):
     one row per purchase event; rating = l_quantity.
 
-    The (rated) frame is memoized and persisted per (application,
-    sf_dir): it is the shared input of the entire recommender-metric
-    family, and without materialization every consumer re-runs the
-    orders⋈lineitem join from the parquet scans. Session-lifetime
-    cache contract (MEMORY_AND_DISK, same as the dedup family's
-    shared intermediates); `spark.catalog.clearCache()` drops it
-    between corpora. The un-rated projection derives from the cached
+    The (rated) frame is a persisted shared build per (application,
+    sf_dir) (session.py::shared): it is the shared input of the entire
+    recommender-metric family, and without materialization every
+    consumer re-runs the orders⋈lineitem join from the parquet scans
+    (MEMORY_AND_DISK, same as the dedup family's shared
+    intermediates). The un-rated projection derives from the cached
     frame, so both variants share one materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _INTERACTIONS_MEMO.get(key)
-    if out is not None and not (
-        out.storageLevel.useMemory or out.storageLevel.useDisk
-    ):
-        # someone ran spark.catalog.clearCache() without
-        # clear_interactions_cache(): the memo would hand out an
-        # uncached frame forever, silently recomputing the join per
-        # consumer — re-persist to restore the memoization contract
-        out.persist()
-    if out is None:
+
+    def build():
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey"
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity"
         )
-        out = (
+        return (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(
                 F.col("o_custkey").alias("user"),
@@ -85,10 +58,27 @@ def interactions(
             )
             .persist()
         )
-        _INTERACTIONS_MEMO[key] = out
+
+    out = shared(spark, "interactions", sf_dir.rstrip("/"), build)
     if not with_rating:
         return out.select("user", "item")
     return out
+
+
+def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct purchased (user, item) pairs, a lazily persisted shared
+    build per (application, sf_dir). repartition("user") BEFORE the
+    distinct: one user-keyed exchange serves the distinct AND the
+    recs' ranking window (round 13)."""
+    return shared(
+        spark,
+        "distinct_pairs",
+        sf_dir.rstrip("/"),
+        lambda: interactions(spark, sf_dir)
+        .repartition("user")
+        .distinct()
+        .persist(),
+    )
 
 
 def pseudo_score(user_col, item_col):
@@ -190,20 +180,12 @@ def synthetic_recommendations(
     satisfies the (user, item) distinct's clustered distribution AND
     the window's partitionBy(user), so the explicit repartition
     replaces what were two exchanges (the distinct hashed on BOTH
-    columns, then the window re-shuffled back to user). Callers that
-    build the same frame (the coverage canary) use the identical
-    repartition("user").distinct() form so the session cache still
-    deduplicates the plan. Pass a pre-built (user, item) ``pairs``
-    frame to share lineage with other consumers; the distinct result
-    is persisted (vocabulary-scale) so metric queries that derive
-    both sales and recs from interactions scan the input once."""
+    columns, then the window re-shuffled back to user). ``pairs``
+    defaults to the session's :func:`distinct_pairs` build, so metric
+    queries that derive both sales and recs from interactions scan
+    the input once."""
     if pairs is None:
-        pairs = (
-            interactions(spark, sf_dir)
-            .repartition("user")
-            .distinct()
-            .persist()
-        )
+        pairs = distinct_pairs(spark, sf_dir)
     scored = pairs.withColumn("score", pseudo_score(F.col("user"), F.col("item")))
     return top_k_per_group(
         scored, "user", [F.asc("score"), F.asc("item")], k

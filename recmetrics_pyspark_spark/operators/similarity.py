@@ -19,40 +19,23 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot, norm
-
-
-_TRAINED: dict[tuple, DataFrame] = {}
+from ..session import shared
 
 
 def _memo_trained(kind: str, df: DataFrame, params: tuple, build):
-    """Session-scoped registry for trained index artifacts (k-means
-    centroids, PQ codebooks): identical (corpus plan, params) requests
-    return the SAME materialized DataFrame instead of re-running the
-    iterative trainer — train once, serve every ANN/dedup variant.
+    """Session-shared build (session.py::shared) of a trained index
+    artifact (k-means centroids, PQ codebooks): identical (corpus
+    plan, params) requests return the SAME materialized DataFrame
+    instead of re-running the iterative trainer — train once, serve
+    every ANN/dedup variant.
 
-    Keyed by the corpus' analyzed-plan semantic hash + the Spark
-    application id (a new session invalidates everything). Artifacts
-    are centroid/codebook-scale (k×dim — broadcast-sized), so the
-    registry's memory is negligible; callers who churn through many
-    corpora in one application can drop it with
-    :func:`clear_trained_cache` (the same explicit-lifecycle contract
-    as the dedup family's persisted intermediates)."""
-    key = (
-        kind,
-        df.sparkSession.sparkContext.applicationId,
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        *params,
-    )
-    got = _TRAINED.get(key)
-    if got is None:
-        got = build()
-        _TRAINED[key] = got
-    return got
-
-
-def clear_trained_cache() -> None:
-    """Drop every memoized trained artifact (see ``_memo_trained``)."""
-    _TRAINED.clear()
+    Keyed by the corpus' analyzed-plan semantic hash + params under
+    the artifact ``kind``. Artifacts are centroid/codebook-scale
+    (k×dim — broadcast-sized), so the registry's memory is
+    negligible; ``release_shared`` drops them with every other shared
+    build."""
+    key = (df._jdf.queryExecution().analyzed().semanticHash(), *params)
+    return shared(df.sparkSession, kind, key, build)
 
 
 def rademacher_planes(n_planes: int, dim: int, seed: str = "ann") -> list[list[float]]:

@@ -5,13 +5,17 @@ The reference (recmetrics_pyspark.py:264) leans on an ambient global
 conf that matters at 100 TB: AQE (runtime coalesce + skew-join splitting,
 the long-tail item skew is real), broadcast threshold, Arrow for any
 pandas-UDF path, UTC session time so event-time semantics are stable.
+It also holds the registry of shared builds: intermediates several
+queries read, built once per application (:func:`shared`).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from typing import Any, Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -67,8 +71,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # FAIR scheduling: concurrent jobs (bench thread pool, multi-user
-        # notebooks) share executors instead of FIFO head-of-line blocking
+        # FAIR scheduling: concurrent jobs (multi-user notebooks, threaded
+        # callers) share executors instead of FIFO head-of-line blocking
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         .config(
@@ -77,3 +81,63 @@ def get_spark(
         )
     )
     return builder.getOrCreate()
+
+
+# (applicationId, name, key) -> (value, its frames persisted at build)
+_SHARED: dict[tuple, tuple[Any, list[DataFrame]]] = {}
+# reentrant: builds nest (_bt_chain -> _arena_games -> interactions)
+_SHARED_LOCK = threading.RLock()
+
+
+def _frames(value: Any) -> list[DataFrame]:
+    """The DataFrames in a shared value: a frame, or a tuple, list or
+    dict holding frames."""
+    if isinstance(value, DataFrame):
+        return [value]
+    if isinstance(value, dict):
+        value = list(value.values())
+    if isinstance(value, (tuple, list)):
+        return [df for v in value for df in _frames(v)]
+    return []
+
+
+def _persisted(df: DataFrame) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def shared(
+    spark: SparkSession, name: str, key: Hashable, build: Callable[[], Any]
+) -> Any:
+    """Get-or-build one shared intermediate, keyed by
+    ``(applicationId, name, key)``. ``build`` runs at most once per
+    key, under one lock, so concurrent first requests all get the same
+    object; it also picks the materialization (eager
+    ``localCheckpoint``, ``persist()`` + an action, or a lazy
+    ``persist()``). A hit re-persists any frame that was persisted at
+    build time and has lost its storage level since
+    (``spark.catalog.clearCache()``), so an entry never silently
+    recomputes its lineage per consumer."""
+    full_key = (spark.sparkContext.applicationId, name, key)
+    with _SHARED_LOCK:
+        if full_key not in _SHARED:
+            value = build()
+            _SHARED[full_key] = (
+                value, [df for df in _frames(value) if _persisted(df)]
+            )
+            return value
+        value, persisted = _SHARED[full_key]
+        for df in persisted:
+            if not _persisted(df):
+                df.persist()
+        return value
+
+
+def release_shared(spark: SparkSession) -> None:
+    """Unpersist and forget every shared build of ``spark``'s
+    application; the next request rebuilds. Checkpointed frames have
+    nothing to unpersist: their blocks go once nothing refers to them."""
+    app = spark.sparkContext.applicationId
+    with _SHARED_LOCK:
+        for full_key in [k for k in _SHARED if k[0] == app]:
+            for df in _frames(_SHARED.pop(full_key)[0]):
+                df.unpersist()

@@ -17,7 +17,8 @@ Design notes (what "x10" means here):
 - documents: every whitespace token gets a per-replica suffix (r>0),
   so replicas share NO vocabulary — shingle/minhash/n-gram work
   scales ~N instead of creating a 45x cross-replica duplicate-pair
-  explosion that sf1.0 data would not have. n_chars is recomputed.
+  explosion that sf1.0 data would not have. n_chars is recomputed for
+  the suffixed replicas; replica 0 copies the source column through.
 - embeddings: vectors are rotated by r positions (norm-preserving,
   decorrelates replicas); vec_id shifts.
 - region/nation are dimension tables and copy through unchanged.
@@ -68,35 +69,30 @@ def _suffix_tokens(texts: pa.ChunkedArray, r: int) -> pa.Array:
 
 def _replica(name: str, tbl: pa.Table, r: int) -> pa.Table:
     if r == 0:
-        if name != "documents":
-            return tbl
-        # replica 0 keeps text; recompute n_chars anyway for uniformity
-        t = tbl
-    else:
-        t = tbl
-        for col, shift in SHIFTS.get(name, {}).items():
-            idx = t.schema.get_field_index(col)
-            typ = t.schema.field(idx).type
-            shifted = pc.add(t.column(col), pa.scalar(r * shift, type=typ))
-            t = t.set_column(idx, t.schema.field(idx), shifted)
-        if name == "documents":
-            idx = t.schema.get_field_index("text")
-            t = t.set_column(
-                idx, t.schema.field(idx), _suffix_tokens(t.column("text"), r)
-            )
-        if name == "embeddings":
-            idx = t.schema.get_field_index("embedding")
-            vecs = t.column("embedding").to_pylist()
-            rot = [v[r % len(v):] + v[: r % len(v)] if v else v for v in vecs]
-            t = t.set_column(
-                idx,
-                t.schema.field(idx),
-                pa.array(rot, type=t.schema.field(idx).type),
-            )
+        return tbl  # replica 0 is the source, n_chars included
+    t = tbl
+    for col, shift in SHIFTS.get(name, {}).items():
+        idx = t.schema.get_field_index(col)
+        typ = t.schema.field(idx).type
+        shifted = pc.add(t.column(col), pa.scalar(r * shift, type=typ))
+        t = t.set_column(idx, t.schema.field(idx), shifted)
     if name == "documents":
+        idx = t.schema.get_field_index("text")
+        t = t.set_column(
+            idx, t.schema.field(idx), _suffix_tokens(t.column("text"), r)
+        )
         idx = t.schema.get_field_index("n_chars")
         nch = pc.cast(pc.utf8_length(t.column("text")), pa.int64())
         t = t.set_column(idx, t.schema.field(idx), nch)
+    if name == "embeddings":
+        idx = t.schema.get_field_index("embedding")
+        vecs = t.column("embedding").to_pylist()
+        rot = [v[r % len(v):] + v[: r % len(v)] if v else v for v in vecs]
+        t = t.set_column(
+            idx,
+            t.schema.field(idx),
+            pa.array(rot, type=t.schema.field(idx).type),
+        )
     return t
 
 

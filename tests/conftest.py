@@ -92,8 +92,9 @@ def pytest_collection_modifyitems(config, items):
         return
     if config.getoption("-m"):
         return  # explicit marker expression: the user decides
-    # direct single-file / single-test invocation is an explicit ask
-    args = [a for a in config.invocation_params.args if not a.startswith("-")]
+    # direct single-file / single-test invocation is an explicit ask;
+    # config.args holds only the positional paths, never option values
+    args = config.args
     if args and all("tests" != os.path.basename(os.path.normpath(a)) for a in args):
         targeted = {os.path.basename(a.split("::")[0]) for a in args}
         if all(t.endswith(".py") for t in targeted):
@@ -110,3 +111,17 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("recmetrics-tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def shared_names(spark):
+    """Callable listing the names of the shared builds the session's
+    registry holds, one per entry: a name shows up once per key, so
+    ``count(name) == 1`` means every consumer hit the same entry."""
+    from recmetrics_pyspark_spark import session
+
+    def names():
+        app = spark.sparkContext.applicationId
+        return [key[1] for key in session._SHARED if key[0] == app]
+
+    return names

@@ -164,13 +164,13 @@ def test_semantic_dedup_accounting(spark):
 
 
 def test_trained_artifact_memo_contract(spark):
+    from recmetrics_pyspark_spark import release_shared
     from recmetrics_pyspark_spark.operators.similarity import (
-        clear_trained_cache,
         kmeans_centroids,
         pq_codebooks,
     )
 
-    clear_trained_cache()
+    release_shared(spark)
     vecs = [(i, [float(i % 4), float(i % 3), 1.0, 0.5]) for i in range(32)]
     df = spark.createDataFrame(vecs, ["vec_id", "embedding"])
     # identical (corpus plan, params) -> the SAME DataFrame object
@@ -193,7 +193,7 @@ def test_trained_artifact_memo_contract(spark):
     p1 = pq_codebooks(df, m=2, k_codes=4)
     p2 = pq_codebooks(df, m=2, k_codes=4)
     assert p1 is p2 and p1 is not a
-    clear_trained_cache()
+    release_shared(spark)
     assert kmeans_centroids(df, k=4, refinements=1) is not a
 
 

@@ -522,11 +522,12 @@ def test_duplicated_spans_extracts_shared_run(spark):
     assert 3 not in spans
 
 
-def test_interactions_memo_survives_clear_cache(spark):
+def test_interactions_memo_survives_clear_cache(spark, shared_names):
     """spark.catalog.clearCache() drops the persisted frame but not
-    the memo: the next interactions() call must re-persist (not hand
-    out an uncached frame forever), and clear_interactions_cache()
-    empties the memo itself."""
+    the shared build: the next interactions() call must re-persist
+    (not hand out an uncached frame forever), and release_shared()
+    unpersists and forgets the build itself."""
+    from recmetrics_pyspark_spark import release_shared
     from recmetrics_pyspark_spark.operators import recommend as R
 
     sf = "/root/testdata/sf0.001"
@@ -535,11 +536,13 @@ def test_interactions_memo_survives_clear_cache(spark):
     spark.catalog.clearCache()
     df2 = R.interactions(spark, sf, with_rating=True)
     assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
-    R.clear_interactions_cache()
-    assert R._INTERACTIONS_MEMO == {}
+    assert df2 is df  # the same entry, re-persisted
+    release_shared(spark)
+    assert "interactions" not in shared_names()
+    assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
     # and the next call rebuilds from scratch without error
     assert R.interactions(spark, sf).columns == ["user", "item"]
-    R.clear_interactions_cache()
+    release_shared(spark)
 
 
 def test_doc_perplexity_hand_computed(spark):

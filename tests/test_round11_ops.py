@@ -250,15 +250,14 @@ def test_ivf_recall_report_bounds_and_consistency(spark):
         assert 0.0 <= r.recall_at_10 <= 1.0
 
 
-def test_capped_adjacency_memo_shared_and_clearable(spark):
+def test_capped_adjacency_memo_shared_and_clearable(spark, shared_names):
     """The two link predictors over the same pair table share one
-    memoized (capped, deg) build; clear_adjacency_cache drops it; and
-    predictor outputs are identical whether the memo is cold or
+    (capped, deg) shared build; release_shared drops it; and
+    predictor outputs are identical whether the build is cold or
     warm."""
+    from recmetrics_pyspark_spark import release_shared
     from recmetrics_pyspark_spark.operators.graph import (
-        _ADJ_MEMO,
         adamic_adar_links,
-        clear_adjacency_cache,
         common_neighbor_links,
     )
 
@@ -266,13 +265,14 @@ def test_capped_adjacency_memo_shared_and_clearable(spark):
         [("a", "b", 3), ("a", "c", 2), ("b", "c", 2), ("b", "d", 1)],
         ["ia", "ib", "n_common"],
     )
-    clear_adjacency_cache()
+    release_shared(spark)
     cold_aa = sorted(map(tuple, adamic_adar_links(pairs).collect()))
-    assert len(_ADJ_MEMO) == 1
+    assert shared_names().count("capped_adjacency") == 1
     cold_cn = sorted(map(tuple, common_neighbor_links(pairs).collect()))
-    assert len(_ADJ_MEMO) == 1  # second predictor hit the same entry
-    clear_adjacency_cache()
-    assert len(_ADJ_MEMO) == 0
+    # second predictor hit the same entry
+    assert shared_names().count("capped_adjacency") == 1
+    release_shared(spark)
+    assert shared_names() == []
     warm_aa = sorted(map(tuple, adamic_adar_links(pairs).collect()))
     warm_cn = sorted(map(tuple, common_neighbor_links(pairs).collect()))
     assert cold_aa == warm_aa and cold_cn == warm_cn

@@ -1,14 +1,17 @@
-"""Round-12 additions: the _exact_pairs session memo (the exact
+"""Round-12 additions: the _exact_pairs shared build (the exact
 word-3-gram Jaccard truth table shared by ngram_jaccard_pairs,
 lsh_recall_report, and simhash_recall_report — round-11 verdict weak
-mark) and the shared ANN brute-force truth memo behind the recall
-reports."""
+mark) and the shared ANN brute-force truth build behind the recall
+reports. Every test starts and ends with ``release_shared`` so it
+sees the registry empty."""
 
 import os
 
 import pytest
 
 F = pytest.importorskip("pyspark.sql.functions")
+
+from recmetrics_pyspark_spark import release_shared  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -17,7 +20,7 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def test_exact_pairs_memo_shared_and_equal(spark):
+def test_exact_pairs_memo_shared_and_equal(spark, shared_names):
     """All three exact-Jaccard consumers hit ONE memo entry per
     (application, sf_dir), and the memoized table is row-identical to
     a fresh ngram_jaccard_pairs derivation (the memo changes where
@@ -25,15 +28,16 @@ def test_exact_pairs_memo_shared_and_equal(spark):
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._EXACT_PAIRS_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["ngram_jaccard_pairs"](spark, SF_DIR).collect())
     )
-    assert len(e._EXACT_PAIRS_MEMO) == 1
+    assert shared_names().count("exact_pairs") == 1
     qs["lsh_recall_report"](spark, SF_DIR).collect()
     qs["simhash_recall_report"](spark, SF_DIR).collect()
-    assert len(e._EXACT_PAIRS_MEMO) == 1  # both reports hit the entry
+    # both reports hit the entry
+    assert shared_names().count("exact_pairs") == 1
 
     fresh = sorted(
         map(
@@ -45,7 +49,7 @@ def test_exact_pairs_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._EXACT_PAIRS_MEMO.clear()
+    release_shared(spark)
 
 
 def test_recall_reports_consistent_with_memoized_truth(spark):
@@ -55,7 +59,7 @@ def test_recall_reports_consistent_with_memoized_truth(spark):
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._EXACT_PAIRS_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     n_fresh = D.ngram_jaccard_pairs(
         e._docs(spark, SF_DIR), threshold=0.1
@@ -67,7 +71,7 @@ def test_recall_reports_consistent_with_memoized_truth(spark):
     for r in list(lsh) + list(sim):
         assert r.n_exact == n_fresh
         assert 0 <= r.n_hit <= r.n_exact
-    e._EXACT_PAIRS_MEMO.clear()
+    release_shared(spark)
 
 
 def test_jaccard_threshold_sweep_exact_counts(spark):
@@ -101,7 +105,7 @@ def test_bt_shared_fit_matches_standalone(spark):
     """Ratings and sensitivity computed off ONE bt_fit_chain (round 4
     marked) are row-identical to each operator fitting its own chain
     — marking extra rounds records snapshots without changing the
-    chain, so the _bt_chain session memo is a pure sharing move."""
+    chain, so the _bt_chain shared build is a pure sharing move."""
     from recmetrics_pyspark_spark.operators.ranking import (
         bradley_terry_rank_sensitivity,
         bradley_terry_ratings,
@@ -130,21 +134,21 @@ def test_bt_shared_fit_matches_standalone(spark):
     assert [tuple(r) for r in shared_s] == [tuple(r) for r in solo_s]
 
 
-def test_bt_chain_memo_shared_across_arena_queries(spark):
+def test_bt_chain_memo_shared_across_arena_queries(spark, shared_names):
     """Both arena queries hit ONE _bt_chain entry per (application,
     sf_dir)."""
     import __spark_entry__ as e
 
-    e._BT_CHAIN_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     qs["arena_bt_ratings"](spark, SF_DIR).collect()
-    assert len(e._BT_CHAIN_MEMO) == 1
+    assert shared_names().count("bt_chain") == 1
     qs["arena_bt_sensitivity"](spark, SF_DIR).collect()
-    assert len(e._BT_CHAIN_MEMO) == 1
-    e._BT_CHAIN_MEMO.clear()
+    assert shared_names().count("bt_chain") == 1
+    release_shared(spark)
 
 
-def test_ann_truth_memo_shared_and_equal(spark):
+def test_ann_truth_memo_shared_and_equal(spark, shared_names):
     """The declared ann_bruteforce_topk query, the four recall
     reports, and hybrid_rrf_topk all hit ONE _ann_truth entry per
     (application, sf_dir); the memoized ranking is row-identical to
@@ -152,12 +156,12 @@ def test_ann_truth_memo_shared_and_equal(spark):
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators import similarity as S
 
-    e._ANN_TRUTH_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["ann_bruteforce_topk"](spark, SF_DIR).collect())
     )
-    assert len(e._ANN_TRUTH_MEMO) == 1
+    assert shared_names().count("ann_truth") == 1
     for name in (
         "ann_recall_report",
         "sq_recall_report",
@@ -166,7 +170,8 @@ def test_ann_truth_memo_shared_and_equal(spark):
         "hybrid_rrf_topk",
     ):
         qs[name](spark, SF_DIR).collect()
-    assert len(e._ANN_TRUTH_MEMO) == 1  # every consumer hit the entry
+    # every consumer hit the entry
+    assert shared_names().count("ann_truth") == 1
 
     embs = e._embs(spark, SF_DIR)
     fresh = sorted(
@@ -179,11 +184,11 @@ def test_ann_truth_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._ANN_TRUTH_MEMO.clear()
+    release_shared(spark)
 
 
-def test_kcore_memo_matches_fresh_converged(spark):
-    """The _kcore_core session memo (one fixed-8-round peel shared by
+def test_kcore_memo_matches_fresh_converged(spark, shared_names):
+    """The _kcore_core shared build (one fixed-8-round peel shared by
     kcore_items and kcore_items_converged) is row-identical to a
     FRESH until_converged=True run — the equality that lets the
     converged declared row read the memo — and both declared queries
@@ -194,14 +199,15 @@ def test_kcore_memo_matches_fresh_converged(spark):
     from recmetrics_pyspark_spark.operators import recommend as R
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
-    e._KCORE_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     memo_rows = sorted(map(tuple, qs["kcore_items"](spark, SF_DIR).collect()))
-    assert len(e._KCORE_MEMO) == 1
+    assert shared_names().count("kcore") == 1
     conv_rows = sorted(
         map(tuple, qs["kcore_items_converged"](spark, SF_DIR).collect())
     )
-    assert len(e._KCORE_MEMO) == 1  # second query hit the same entry
+    # second query hit the same entry
+    assert shared_names().count("kcore") == 1
     assert memo_rows == conv_rows
 
     inter = R.interactions(spark, SF_DIR)
@@ -217,11 +223,11 @@ def test_kcore_memo_matches_fresh_converged(spark):
     assert memo_rows == fresh
     assert len(memo_rows) > 0
     assert all(r[2] is True for r in memo_rows)  # converged witness
-    e._KCORE_MEMO.clear()
+    release_shared(spark)
 
 
-def test_neardup_comps_memo_shared_and_equal(spark):
-    """The _neardup_comps session memo feeds the declared
+def test_neardup_comps_memo_shared_and_equal(spark, shared_names):
+    """The _neardup_comps shared build feeds the declared
     neardup_components query AND the comps= handle of canonical_docs /
     soft_dedup_weights; the memoized table is row-identical to a fresh
     neardup_components derivation, and canonical_docs through the
@@ -229,19 +235,20 @@ def test_neardup_comps_memo_shared_and_equal(spark):
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._NEARDUP_COMPS_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["neardup_components"](spark, SF_DIR).collect())
     )
-    assert len(e._NEARDUP_COMPS_MEMO) == 1
+    assert shared_names().count("neardup_comps") == 1
     canon_rows = sorted(
         map(tuple, qs["canonical_docs"](spark, SF_DIR).collect())
     )
     soft_rows = sorted(
         map(tuple, qs["soft_dedup_weights"](spark, SF_DIR).collect())
     )
-    assert len(e._NEARDUP_COMPS_MEMO) == 1  # all three hit one entry
+    # all three hit one entry
+    assert shared_names().count("neardup_comps") == 1
 
     docs = e._docs(spark, SF_DIR)
     fresh_comps = sorted(
@@ -270,27 +277,30 @@ def test_neardup_comps_memo_shared_and_equal(spark):
         )
     )
     assert soft_rows == fresh_soft
-    e._NEARDUP_COMPS_MEMO.clear()
+    release_shared(spark)
 
 
-def test_synth_recs_memo_shared_and_equal(spark):
-    """The _synth_recs session memo (one ranked top-10 rec table shared
+def test_synth_recs_memo_shared_and_equal(spark, shared_names):
+    """The _synth_recs shared build (one ranked top-10 rec table shared
     by eleven declared queries) is row-identical to a fresh
     synthetic_recommendations derivation, and consumers all hit one
     memo entry."""
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators import recommend as R
 
-    e._SYNTH_RECS_MEMO.clear()
+    release_shared(spark)
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["recommendations_topk"](spark, SF_DIR).collect())
     )
-    assert len(e._SYNTH_RECS_MEMO) == 1
+    assert shared_names().count("synth_recs") == 1
     qs["coverage"](spark, SF_DIR).collect()
     qs["item_exposure"](spark, SF_DIR).collect()
     qs["ranking_metrics"](spark, SF_DIR).collect()
-    assert len(e._SYNTH_RECS_MEMO) == 1  # all consumers hit the entry
+    # all consumers hit the entry, and coverage's catalog side read
+    # the same distinct-pairs build the recs rank
+    assert shared_names().count("synth_recs") == 1
+    assert shared_names().count("distinct_pairs") == 1
 
     fresh = sorted(
         map(
@@ -302,4 +312,4 @@ def test_synth_recs_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._SYNTH_RECS_MEMO.clear()
+    release_shared(spark)

@@ -11,6 +11,8 @@ import pytest
 
 F = pytest.importorskip("pyspark.sql.functions")
 
+from recmetrics_pyspark_spark import release_shared, shared  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 pytestmark = pytest.mark.skipif(
@@ -54,26 +56,30 @@ def test_mmr_symmetric_equals_bidir_union(spark):
 
 
 def test_kcore_converged_guard_falls_back_on_unconverged_memo(spark):
-    """If the memoized fixed-8 peel did NOT converge (adversarial
+    """If the shared fixed-8 peel did NOT converge (adversarial
     graph: a long path peels only from the ends), the declared
     until-converged query must NOT serve the superset table — it
-    re-runs a real until-converged peel instead (round-12 verdict
-    item 5)."""
+    serves a real until-converged peel instead (round-12 verdict
+    item 5). That fallback is itself a shared build: two calls peel
+    once, and its rows carry a true ``converged`` witness."""
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
-    # path graph 0-1-2-...-24 with k=2: each peel only removes the two
-    # endpoints, so 8 rounds leave a non-empty superset, converged=false
+    # lollipop: a 25-node path 0-1-...-24 hanging off the triangle
+    # {100, 101, 102}, k=2. Each peel only removes the path's free
+    # end, so 8 rounds leave a superset with converged=false; the true
+    # 2-core is the triangle
     n = 25
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["ia", "ib"]
-    )
+    edges = [(i, i + 1) for i in range(n - 1)]
+    edges += [(24, 100), (100, 101), (101, 102), (100, 102)]
+    pairs = spark.createDataFrame(edges, ["ia", "ib"])
     fixed8 = k_core_decompose(pairs, k=2, rounds=8)
     rows8 = fixed8.collect()
     assert rows8 and not rows8[0]["converged"]  # precondition violated
 
-    key = (spark.sparkContext.applicationId, "<r13-kcore-guard>")
-    e._KCORE_MEMO[key] = fixed8
+    sf = "<r13-kcore-guard>"
+    release_shared(spark)
+    shared(spark, "kcore", sf, lambda: fixed8)
     calls = {"n": 0}
 
     def fake_pairs(*a, **kw):
@@ -87,21 +93,52 @@ def test_kcore_converged_guard_falls_back_on_unconverged_memo(spark):
     e.M.item_similarity_pairs = fake_pairs
     e._KCORE_K = 2
     try:
-        out = e._kcore_items_converged(spark, "<r13-kcore-guard>")
-        rows = out.collect()
+        first = e._kcore_items_converged(spark, sf)
+        second = e._kcore_items_converged(spark, sf)
+        rows = first.collect()
     finally:
         e.R.interactions = orig_inter
         e.M.item_similarity_pairs = orig_sims
         e._KCORE_K = orig_k
-        e._KCORE_MEMO.pop(key, None)
+        release_shared(spark)
 
-    assert calls["n"] == 1  # the fallback peel actually ran
-    # a 25-node path has NO 2-core: the true fixed point is empty
+    assert calls["n"] == 1  # the fallback peel ran, once for two calls
+    assert second is first
+    assert sorted(r["node"] for r in rows) == [100, 101, 102]
+    assert all(r["converged"] is True for r in rows)
+
+
+def test_kcore_converged_guard_no_core_is_empty(spark):
+    """A plain 25-node path has NO 2-core: the fallback's true fixed
+    point is empty, never the unconverged fixed-8 superset."""
+    import __spark_entry__ as e
+    from recmetrics_pyspark_spark.operators.graph import k_core_decompose
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(24)], ["ia", "ib"]
+    )
+    sf = "<r13-kcore-path>"
+    release_shared(spark)
+    shared(spark, "kcore", sf, lambda: k_core_decompose(pairs, k=2, rounds=8))
+    orig_inter = e.R.interactions
+    orig_sims = e.M.item_similarity_pairs
+    orig_k = e._KCORE_K
+    e.R.interactions = lambda spark, sf: None
+    e.M.item_similarity_pairs = lambda *a, **kw: pairs
+    e._KCORE_K = 2
+    try:
+        rows = e._kcore_items_converged(spark, sf).collect()
+    finally:
+        e.R.interactions = orig_inter
+        e.M.item_similarity_pairs = orig_sims
+        e._KCORE_K = orig_k
+        release_shared(spark)
+
     assert rows == []
 
 
 def test_kcore_converged_guard_serves_converged_memo(spark):
-    """Happy path: a memoized table whose witness is true is served
+    """Happy path: a shared table whose witness is true is served
     as-is (no rebuild)."""
     import __spark_entry__ as e
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
@@ -111,8 +148,9 @@ def test_kcore_converged_guard_serves_converged_memo(spark):
         [(1, 2), (2, 3), (1, 3)], ["ia", "ib"]
     )
     memo = k_core_decompose(pairs, k=2, rounds=8)
-    key = (spark.sparkContext.applicationId, "<r13-kcore-happy>")
-    e._KCORE_MEMO[key] = memo
+    sf = "<r13-kcore-happy>"
+    release_shared(spark)
+    shared(spark, "kcore", sf, lambda: memo)
 
     def boom(*a, **kw):  # the fallback must NOT run
         raise AssertionError("fallback peel ran on a converged memo")
@@ -120,10 +158,11 @@ def test_kcore_converged_guard_serves_converged_memo(spark):
     orig_sims = e.M.item_similarity_pairs
     e.M.item_similarity_pairs = boom
     try:
-        out = e._kcore_items_converged(spark, "<r13-kcore-happy>")
+        out = e._kcore_items_converged(spark, sf)
         rows = sorted(r["node"] for r in out.collect())
     finally:
         e.M.item_similarity_pairs = orig_sims
-        e._KCORE_MEMO.pop(key, None)
+        release_shared(spark)
 
+    assert out is memo
     assert rows == [1, 2, 3]

@@ -1,0 +1,85 @@
+"""The session's shared-build registry (session.py::shared): one build
+per (application, name, key) however many threads ask at once, the
+re-persist guard on a hit, and release_shared."""
+
+import sys
+import threading
+import time
+
+import pytest
+
+pytest.importorskip("pyspark")
+
+from recmetrics_pyspark_spark import release_shared, shared  # noqa: E402
+
+
+def _persisted(df):
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def test_concurrent_requests_build_once_and_release_rebuilds(spark):
+    release_shared(spark)
+    calls = []
+
+    def build():
+        calls.append(threading.get_ident())
+        time.sleep(0.2)  # hold the build open while the others arrive
+        return spark.range(10).persist()
+
+    start = threading.Barrier(8, timeout=60)
+    got = [None] * 8
+
+    def ask(i):
+        start.wait()
+        got[i] = shared(spark, "registry-test", "k", build)
+
+    threads = [threading.Thread(target=ask, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+
+    assert len(calls) == 1
+    first = got[0]
+    assert all(df is first for df in got)
+    assert _persisted(first)
+
+    release_shared(spark)
+    assert not _persisted(first)
+    again = shared(spark, "registry-test", "k", build)
+    assert len(calls) == 2
+    assert again is not first
+    release_shared(spark)
+
+
+def test_hit_repersists_after_clear_cache(spark):
+    release_shared(spark)
+    df = shared(spark, "registry-test", "p", lambda: spark.range(5).persist())
+    spark.catalog.clearCache()
+    assert not _persisted(df)
+    assert shared(spark, "registry-test", "p", lambda: None) is df
+    assert _persisted(df)
+    release_shared(spark)
+
+
+def test_nested_builds_and_keys(spark):
+    """A build may request another shared build (the lock is
+    reentrant); names and keys both separate entries."""
+    release_shared(spark)
+    inner = shared(spark, "registry-inner", "k", lambda: spark.range(3))
+    outer = shared(
+        spark,
+        "registry-outer",
+        "k",
+        lambda: (shared(spark, "registry-inner", "k", lambda: None), 7),
+    )
+    assert outer == (inner, 7)
+    other = shared(spark, "registry-inner", "k2", lambda: spark.range(4))
+    assert other is not inner
+    release_shared(spark)

@@ -106,12 +106,12 @@ def test_psi_drift_detects_planted_shift(spark):
 
 
 def test_cluster_eval_perfect_and_degenerate(spark):
+    from recmetrics_pyspark_spark import release_shared
     from recmetrics_pyspark_spark.operators.similarity import (
-        clear_trained_cache,
         cluster_eval,
     )
 
-    clear_trained_cache()
+    release_shared(spark)
     # two tight, well-separated groups whose labels match the geometry:
     # k=2 must recover them -> purity 1, NMI 1
     vecs = [
