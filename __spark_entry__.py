@@ -5,6 +5,10 @@ implemented operator (SURVEY.md §2) to a (spark, sf_dir) -> DataFrame
 callable; ``oracle_sql()`` provides the DuckDB-equivalent ANSI SQL the
 driver hash-compares against at sf0.01.
 
+Each query is declared once, by ``_query(name, oracle)`` directly
+above its callable (or, for a ``plans/relational.py`` plan, as a call
+at its place in the declaration order).
+
 Column-name discipline: every computed column is aliased identically in
 the Spark plan and the oracle SQL; float aggregates are rounded to 6
 decimals on both sides so summation-order differences cannot flip the
@@ -20,18 +24,110 @@ from pyspark.sql import functions as F
 
 from recmetrics_pyspark_spark.functions import curation as C
 from recmetrics_pyspark_spark.functions import text as T
+from recmetrics_pyspark_spark.functions.curation import (
+    TRACKING_PARAM_PATTERN as _CUR_TRACK,
+    _SCHEME_STRIP_PATTERN as _CUR_SCHEME_STRIP,
+    _URL_PARTS_PATTERN as _CUR_URL_PARTS,
+    _URL_SCHEME_PATTERN as _CUR_URL_SCHEME,
+)
 from recmetrics_pyspark_spark.operators import dedup as D
 from recmetrics_pyspark_spark.operators import metrics as M
 from recmetrics_pyspark_spark.operators import recommend as R
 from recmetrics_pyspark_spark.operators import joins as J
 from recmetrics_pyspark_spark.operators import similarity as S
 from recmetrics_pyspark_spark.plans import relational as Q
-from recmetrics_pyspark_spark.plans import relational2 as Q2
-from recmetrics_pyspark_spark.plans import relational3 as Q3
-from recmetrics_pyspark_spark.plans import relational4 as Q4
 from recmetrics_pyspark_spark.session import shared
 from recmetrics_pyspark_spark.sources.io import load_table
 from recmetrics_pyspark_spark.streaming import windows as W
+
+
+_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+_ORACLES: dict[str, str | None] = {}
+
+
+def _query(name: str, oracle: str | None):
+    """Declare query ``name`` with its DuckDB oracle SQL; ``None`` marks a
+    query with no SQL twin (rows-only, listed in ``NO_ORACLE``).
+    Declaring a name twice raises. Decorator arguments are evaluated at
+    import, so every SQL fragment an oracle uses is defined above the
+    first declaration."""
+
+    def register(fn):
+        if name in _QUERIES:
+            raise ValueError(f"query {name!r} is declared twice")
+        _QUERIES[name] = fn
+        _ORACLES[name] = oracle
+        return fn
+
+    return register
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    ordered = {k: _QUERIES[k] for k in _DRIVER_WINDOW}
+    ordered.update(_QUERIES)
+    return ordered
+
+
+def oracle_sql() -> dict[str, str]:
+    return {k: sql for k, sql in _ORACLES.items() if sql is not None}
+
+
+# queries() lists these names first, then every other query in
+# declaration order. The driver's correctness harness checks the first
+# 50 names; scripts/witness_audit.py --window composes the next window.
+_DRIVER_WINDOW = [
+    "coverage",
+    "personalization",
+    "item_item_topk",
+    "minhash_lsh_pairs",
+    "event_sessionize",
+    "mmr_rerank",
+    "coverage_approx",
+    "gopher_quality_flags",
+    "web_curation_pipeline",
+    "data_mixture_pipeline",
+    "kcore_items",
+    "kcore_items_converged",
+    "arena_bt_ratings",
+    "arena_bt_sensitivity",
+    "dedup_threshold_sweep",
+    "adamic_adar_links",
+    "neardup_components",
+    "canonical_docs",
+    "soft_dedup_weights",
+    "dpo_pair_mining",
+    "recommendations_topk",
+    "novelty",
+    "novelty_per_user",
+    "intra_list_similarity",
+    "ranking_metrics",
+    "calibration_kl",
+    "benford_order_totals",
+    "bot_activity_flags",
+    "catalog_freshness",
+    "centroid_distances",
+    "cohort_ltv",
+    "corpus_entropy",
+    "daily_acf_events",
+    "embedding_outliers",
+    "gmv_mtd_report",
+    "heaps_law_docs",
+    "join_size_lineitem_part",
+    "k_anonymity_customers",
+    "lsh_parameter_plan",
+    "mad_outlier_docs",
+    "peak_concurrency",
+    "pq_distortion",
+    "q_key_skew_items",
+    "q_zorder_keys",
+    "redact_pii",
+    "revenue_concentration",
+    "scd2_customer_priority",
+    "seasonal_anomaly_days",
+    "seasonal_decompose_events",
+    "seasonal_profile_events",
+]
+
 
 # ---------------------------------------------------------------------------
 # Shared DuckDB CTE prologue: re-derives the exact interactions /
@@ -427,725 +523,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return Q.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# ---------------------------------------------------------------------------
-# Spark-side query callables
-# ---------------------------------------------------------------------------
-
-def _shared(spark: SparkSession, sf_dir: str, name: str, build):
-    """session.py::shared, keyed by the corpus directory."""
-    return shared(spark, name, sf_dir.rstrip("/"), build)
-
-
-def _synth_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic top-10 rec table (operators/recommend.py::
-    synthetic_recommendations), a shared build per (application,
-    sf_dir) — round-12: ELEVEN declared queries consume this same
-    (user, item, rnk) frame with identical parameters (k=10
-    everywhere), and while the distinct-pairs INPUT was shared, each
-    call re-ran the per-user ranking window over it (~1-2 s/query at
-    sf0.1; within-probe A/B in SCALE.md). user × k rows, eagerly
-    localCheckpointed."""
-    return _shared(
-        spark, sf_dir, "synth_recs",
-        lambda: R.synthetic_recommendations(
-            spark, sf_dir, pairs=R.distinct_pairs(spark, sf_dir)
-        ).localCheckpoint(eager=True),
-    )
-
-
-def _recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_recs(spark, sf_dir).select(
-        F.col("user").alias("user_id"),
-        F.col("item").alias("item_id"),
-        F.col("rnk").cast("long").alias("rnk"),
-    )
-
-
-def _coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one shared distinct-pairs build feeds both sides: recs derive
-    # from it, and |distinct items in ratings| == |distinct items in
-    # pairs| by construction, so the raw interactions scan happens once.
-    pairs = R.distinct_pairs(spark, sf_dir)
-    recs = _synth_recs(spark, sf_dir).select(
-        F.col("item").alias("item_id")
-    )
-    ratings = pairs.select(F.col("item").alias("item_id"))
-    return M.coverage(recs, ratings, col_item="item_id")
-
-
-def _novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sales = R.interactions(spark, sf_dir)
-    recs = _synth_recs(spark, sf_dir)
-    return M.novelty(sales, recs, col_user="user", col_item="item")
-
-
-def _novelty_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sales = R.interactions(spark, sf_dir)
-    recs = _synth_recs(spark, sf_dir)
-    per_user = M.novelty_per_user(sales, recs, col_user="user", col_item="item")
-    return per_user.select(
-        F.col("user").alias("user_id"), F.round("msi", 6).alias("msi")
-    )
-
-
-def _personalization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = R.interactions(spark, sf_dir)
-    return M.personalization(pairs, col_index="user", col_columns="item")
-
-
-def _intra_list_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs = _synth_recs(spark, sf_dir)
-    part = load_table(spark, sf_dir, "part")
-    feat = recs.join(part, recs.item == part.p_partkey).select(
-        F.col("user").alias("user_id"),
-        F.col("item").alias("item_id"),
-        F.col("p_brand").alias("feat"),
-        F.lit(1.0).alias("val"),
-    )
-    return M.intra_list_similarity(
-        feat,
-        col_group="user_id",
-        col_index="item_id",
-        col_columns="feat",
-        col_values="val",
-    )
-
-
-def _personalization_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Rating-weighted variant (compat.personalization_pandas semantics):
-    # user vectors weighted by avg rating instead of binary.
-    inter = R.interactions(spark, sf_dir, with_rating=True)
-    vecs = inter.groupBy("user", "item").agg(F.avg("rating").alias("v"))
-    norms = vecs.groupBy("user").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-    )
-    wtd = vecs.join(norms, "user").select(
-        "item", (F.col("v") / F.col("nrm")).alias("w")
-    )
-    # same closed form as metrics.personalization: per-item
-    # Σ_{u<v} w_u·w_v = ((Σw)² − Σw²)/2 — no self-join, O(nnz)
-    isum = wtd.groupBy("item").agg(
-        F.sum("w").alias("sw"), F.sum(F.col("w") * F.col("w")).alias("sww")
-    )
-    s = isum.agg(
-        F.coalesce(
-            F.sum((F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)),
-            F.lit(0.0),
-        ).alias("s")
-    )
-    n = norms.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    from pyspark.sql.functions import broadcast as bc
-
-    return s.crossJoin(bc(n)).select(
-        F.round(
-            F.lit(1.0) - F.lit(2.0) * F.col("s") / (F.col("n") * (F.col("n") - 1)),
-            6,
-        ).alias("personalization_weighted")
-    )
-
-
-def _decay_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Exponential time-decay scoring (half-life weighting): recent
-    # events count more. tau = 7 days; reference point = corpus max ts.
-    ev = load_table(spark, sf_dir, "events")
-    mx = ev.agg(F.max(F.unix_timestamp("ts")).alias("t_max"))
-    from pyspark.sql.functions import broadcast as bc
-
-    tau = 7 * 86400.0
-    return (
-        ev.crossJoin(bc(mx))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(
-                    F.exp(
-                        -(F.col("t_max") - F.unix_timestamp("ts")) / F.lit(tau)
-                    )
-                ),
-                6,
-            ).alias("decayed_score"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Fixed-width binning of events.value (floor to 25-wide buckets).
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.floor(F.col("value") / 25).cast("long").alias("bucket"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.min("value"), 6).alias("min_v"),
-            F.round(F.max("value"), 6).alias("max_v"),
-        )
-        .orderBy("bucket")
-    )
-
-
-def _item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return M.item_item_topk(
-        R.interactions(spark, sf_dir), col_user="user", col_item="item",
-        k=5, max_basket=MAX_BASKET,
-    )
-
-
-def _item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """item_based_recommendations' top-k output, a shared build per
-    (application, sf_dir) — the _arena_games pattern: the operator
-    persists its INPUTS (the ranked neighbour list, the basket
-    arrays) but not its user-grain output, so mmr_rerank re-paid the
-    candidate join + anti-join + window on top of the cached inputs
-    every run (~3-5 s at sf0.1 in-bench). user x k rows —
-    persist-cheap at any scale."""
-
-    def build():
-        out = R.item_based_recommendations(
-            R.interactions(spark, sf_dir),
-            col_user="user",
-            col_item="item",
-            k=10,
-            max_basket=MAX_BASKET,
-        ).persist()
-        out.count()
-        return out
-
-    return _shared(spark, sf_dir, "item_recs", build)
-
-
-def _item_based_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _item_recs(spark, sf_dir)
-
-
-def _long_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    inter = R.interactions(spark, sf_dir).select(F.col("item").alias("item_id"))
-    out = M.long_tail_stats(inter, col_item="item_id", percentage=0.5)
-    return out.select(
-        "item_id",
-        "volume",
-        "item_rank",
-        "cumulative_volume",
-        "pct_cumulative",
-        "bucket",
-    )
-
-
-def _long_tail_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """long_tail_stats with tie_buckets=8 — the salted variant whose
-    md5-bucket rank math (ties break by (md5 bucket, id) instead of
-    (id); offsets window on the (volume, bucket) grain) is the
-    100 TB scale path for the volume=1 tail. Oracle-pinned so the
-    conv/md5 bucket rule stays engine-portable, not just
-    curve-identical (the property test in tests/test_round7_ops.py
-    pins the curve; this pins the per-item ranks)."""
-    inter = R.interactions(spark, sf_dir).select(F.col("item").alias("item_id"))
-    out = M.long_tail_stats(
-        inter, col_item="item_id", percentage=0.5, tie_buckets=8
-    )
-    return out.select(
-        "item_id",
-        "volume",
-        "item_rank",
-        "cumulative_volume",
-        "pct_cumulative",
-        "bucket",
-    )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "embeddings")
-
-
-def _text_stats(spark, sf_dir):
-    df = T.text_stats(_docs(spark, sf_dir))
-    return df.withColumn("n_chars", F.col("n_chars").cast("long"))
-
-
-def _language_id(spark, sf_dir):
-    return T.language_id(_docs(spark, sf_dir))
-
-
-def _doc_fingerprint(spark, sf_dir):
-    return T.doc_fingerprint(_docs(spark, sf_dir))
-
-
-def _quality_score(spark, sf_dir):
-    return T.quality_score(_docs(spark, sf_dir))
-
-
-def _token_count_by_lang(spark, sf_dir):
-    return T.token_count_by_lang(_docs(spark, sf_dir))
-
-
-def _chunk_documents(spark, sf_dir):
-    return T.chunk_documents(_docs(spark, sf_dir), chunk_tokens=32, overlap=8)
-
-
-def _dataset_split(spark, sf_dir):
-    out = T.dataset_split(_docs(spark, sf_dir))
-    return (
-        out.groupBy("lang", "split")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "split")
-    )
-
-
-def _contamination(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    benchmark = docs.filter(F.col("doc_id") < 5)
-    return T.contamination_check(docs, benchmark)
-
-
-def _balanced_sample(spark, sf_dir):
-    # Deterministic class rebalancing via hash-threshold selection: each
-    # lang keeps the rows whose uniform 32-bit md5 key falls under
-    # floor(2^32 * min_n / n_lang).  Two tiny aggregates + a broadcast
-    # join + a filter -- no per-class window sort, so at 100 TB the
-    # dominant class is never a single reducer's sort (the one genuine
-    # scale-killer flagged in the r2 verdict).  Fully deterministic and
-    # portable: the oracle mirrors the identical key + threshold math.
-    docs = _docs(spark, sf_dir)
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    min_count = counts.agg(F.min("n").alias("min_n"))
-    thresholds = counts.crossJoin(F.broadcast(min_count)).select(
-        "lang",
-        F.floor(
-            F.lit(4294967296.0) * F.col("min_n") / F.col("n")
-        ).alias("u_threshold"),
-    )
-    key = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    kept = (
-        docs.withColumn("u", key)
-        .join(F.broadcast(thresholds), "lang")
-        .filter(F.col("u") < F.col("u_threshold"))
-    )
-    return (
-        kept.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _dedup_pipeline(spark, sf_dir):
-    # End-to-end dedup: drop exact duplicates (non-canonical copies),
-    # then greedily drop the higher id of every near-dup pair
-    # (Jaccard >= 0.8) -- the standard single-pass approximation of
-    # connected-component dedup. Output: surviving corpus per lang.
-    docs = _docs(spark, sf_dir)
-    exact = D.exact_dedup(docs)
-    survivors = docs.join(
-        exact.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
-    )
-    near = D.ngram_jaccard_pairs(docs, threshold=0.8).select(
-        F.col("id_b").alias("doc_id")
-    ).distinct()
-    kept = survivors.join(near, "doc_id", "left_anti")
-    return (
-        kept.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _hourly_anomaly(spark, sf_dir):
-    # Rolling z-score on hourly event counts: trailing-24-bucket mean
-    # and sample stddev per type (range frame over the hour number).
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-        "event_type",
-    ).agg(F.count(F.lit(1)).alias("n_events"))
-    hourly = hourly.withColumn(
-        "hour_num", (F.unix_timestamp("hour_start") / 3600).cast("long")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_num")
-        .rangeBetween(-23, 0)
-    )
-    return hourly.select(
-        "hour_start",
-        "event_type",
-        "n_events",
-        F.round(F.avg("n_events").over(w), 6).alias("rolling_mean"),
-        F.round(
-            F.coalesce(F.stddev_samp("n_events").over(w), F.lit(0.0)), 6
-        ).alias("rolling_std"),
-    )
-
-
-def _dedup_exact(spark, sf_dir):
-    return D.exact_dedup(_docs(spark, sf_dir))
-
-
-def _exact_pairs(spark, sf_dir):
-    """The exact word-3-gram Jaccard >= 0.1 truth table
-    (operators/dedup.py::ngram_jaccard_pairs — inverted-index,
-    df-capped), a shared build per (application, sf_dir) — the
-    _arena_games/_item_recs pattern applied to the recall-report
-    family: ngram_jaccard_pairs (the declared query),
-    lsh_recall_report, and simhash_recall_report each consumed this
-    same table, and each call re-paid the inverted-index join + pair
-    aggregation because the per-call localCheckpoint/persist copies
-    never share across queries (round-11 verdict weak mark; measured
-    ~13 s/round across the three at sf0.1 vs ~2-4 s marginal).
-    Materialized eagerly at the surviving-pair grain (output-scale:
-    pairs above threshold, not the corpus)."""
-    return _shared(
-        spark, sf_dir, "exact_pairs",
-        lambda: D.ngram_jaccard_pairs(
-            _docs(spark, sf_dir), threshold=0.1
-        ).localCheckpoint(eager=True),
-    )
-
-
-def _ngram_jaccard(spark, sf_dir):
-    return _exact_pairs(spark, sf_dir)
-
-
-def _dedup_threshold_sweep(spark, sf_dir):
-    """Dedup threshold-sizing report (operators/dedup.py::
-    jaccard_threshold_sweep): per candidate Jaccard threshold
-    (0.1-0.9), surviving pair count and distinct implicated docs —
-    the exact-truth sibling of lsh_parameter_plan, read before
-    picking the near-dup cut for a corpus run. Consumes the
-    _exact_pairs shared build (threshold floor 0.1 = the memo's own
-    cut), so the report costs one output-scale explode-aggregate on
-    top of the already-materialized truth table."""
-    return D.jaccard_threshold_sweep(_exact_pairs(spark, sf_dir))
-
-
-def _lsh_recall_report(spark, sf_dir):
-    """Witnessed DEDUP recall — the sq_recall_report pattern applied
-    to the near-dup family: one row reporting how many of the exact
-    Jaccard >= 0.1 pairs (ngram_jaccard_pairs, the all-pairs truth
-    the LSH path exists to avoid) the banded MinHash path
-    (minhash_lsh_pairs, 8 hashes x 4 bands) actually surfaces, plus
-    the mean true Jaccard of the MISSED pairs (misses should
-    concentrate just above threshold — the S-curve's soft region
-    lsh_parameter_plan models). Pins banding RECALL as a driver
-    oracle row rather than a pytest-only assertion; output-scale
-    work over two already-declared pair sets (the exact side from
-    the _exact_pairs shared build, also read by ngram_jaccard_pairs
-    and simhash_recall_report)."""
-    docs = _docs(spark, sf_dir)
-    exact = _exact_pairs(spark, sf_dir)
-    approx = D.minhash_lsh_pairs(docs, threshold=0.1).select(
-        "id_a", "id_b", F.lit(1).alias("hit")
-    )
-    j = exact.join(approx, ["id_a", "id_b"], "left")
-    # missed-pair mean via an exact DECIMAL sum over the already-6dp
-    # jaccards divided by the miss count (the house exact-sum rule —
-    # a double F.avg is partition-order dependent); both ratios are
-    # nullif-guarded (ANSI mode: zero exact pairs / zero misses must
-    # yield NULL, not DIVIDE_BY_ZERO), mirrored in the oracle.
-    return j.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.sum(F.coalesce("hit", F.lit(0)))
-        .cast("bigint")
-        .alias("n_hit"),
-        F.sum(
-            F.when(F.col("hit").isNull(), F.col("jaccard")).cast(
-                "decimal(18,6)"
-            )
-        ).alias("miss_sum"),
-        F.sum(
-            F.when(F.col("hit").isNull(), F.lit(1)).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n_miss"),
-    ).select(
-        "n_exact",
-        "n_hit",
-        F.round(
-            F.col("n_hit")
-            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0)),
-            6,
-        ).alias("recall"),
-        F.round(
-            F.col("miss_sum").cast("double")
-            / F.nullif(F.col("n_miss").cast("double"), F.lit(0.0)),
-            6,
-        ).alias("missed_mean_jaccard"),
-    )
-
-
-def _arena_games(spark, sf_dir):
-    """The mined DPO game table, a shared build per (application,
-    sf_dir) — the interactions build one level up: both arena queries
-    (ratings + iteration sensitivity) consume the SAME mining
-    pipeline (windows over the shared interactions frame), and
-    without sharing each pays it separately (bradley_terry's g1
-    localCheckpoint is per-call, so the cache manager's
-    canonicalized-plan matching never engages across queries).
-    Materialized eagerly at the game grain."""
-
-    def build():
-        pairs = C.dpo_pair_mining(
-            R.interactions(spark, sf_dir, with_rating=True),
-            min_margin=1.0,
-        )
-        return pairs.select(
-            F.col("chosen_item").alias("winner"),
-            F.col("rejected_item").alias("loser"),
-        ).localCheckpoint(eager=True)
-
-    return _shared(spark, sf_dir, "arena_games", build)
-
-
-def _bt_chain(spark, sf_dir):
-    """The 8-round Bradley-Terry MM chain over the shared
-    _arena_games table, fitted ONCE per (application, sf_dir) with
-    round 4 marked — both arena queries are snapshots of this one
-    chain (ratings reads round 8; sensitivity reads rounds 4 and 8).
-    Marking only records a snapshot, never changes the chain, so
-    snaps[8] here is bit-identical to an unmarked ratings fit
-    (pinned in tests/test_round12_ops.py). Item-grain frames only;
-    the chain's own internals are checkpointed by _bt_fit."""
-    from recmetrics_pyspark_spark.operators.ranking import bt_fit_chain
-
-    return _shared(
-        spark, sf_dir, "bt_chain",
-        lambda: bt_fit_chain(
-            _arena_games(spark, sf_dir), iters=8, marks=(4,)
-        ),
-    )
-
-
-def _arena_bt_ratings(spark, sf_dir):
-    """Arena-style preference leaderboard (operators/ranking.py::
-    bradley_terry_ratings): the mined DPO preference pairs (each
-    user's top-rated item beats their bottom-rated item) feed a
-    fixed-8-round Bradley-Terry MM fit — per item its win count,
-    game count, normalized rating, and leaderboard rank. The
-    pairwise-eval aggregation every LLM arena runs, expressed as
-    deterministic DataFrame rounds with an iteration-chained SQL
-    oracle. Games come from the shared _arena_games memo; the MM
-    chain itself comes from the _bt_chain shared build, also read by
-    arena_bt_sensitivity."""
-    from recmetrics_pyspark_spark.operators.ranking import (
-        bradley_terry_ratings,
-    )
-
-    return bradley_terry_ratings(
-        _arena_games(spark, sf_dir),
-        iters=8,
-        fit=_bt_chain(spark, sf_dir),
-    )
-
-
-def _simhash_recall_report(spark, sf_dir):
-    """Witnessed SimHash recall — lsh_recall_report's shape applied to
-    the Hamming-banded lane: per max_hamming radius (1 and 3), how
-    many of the exact Jaccard >= 0.1 pairs (ngram_jaccard_pairs, the
-    same truth the MinHash report uses) simhash_near_pairs surfaces,
-    plus the mean true Jaccard of the missed pairs. SimHash bands are
-    pigeonhole-EXACT vs the Hamming truth (zero misses by
-    construction, pinned in tests), so this row measures the
-    signature's fidelity as a Jaccard proxy — the radius-sizing
-    report a corpus run reads before picking max_hamming.
-    Output-scale work over already-declared pair sets (the exact
-    side from the _exact_pairs shared build — already checkpointed,
-    so both radius branches fan out from materialized blocks)."""
-    docs = _docs(spark, sf_dir)
-    exact = _exact_pairs(spark, sf_dir)
-    parts = []
-    for h in (1, 3):
-        near = D.simhash_near_pairs(docs, max_hamming=h).select(
-            "id_a", "id_b", F.lit(1).alias("hit")
-        )
-        j = exact.join(near, ["id_a", "id_b"], "left")
-        parts.append(
-            j.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_hit"),
-                F.sum(
-                    F.when(F.col("hit").isNull(), F.col("jaccard")).cast(
-                        "decimal(18,6)"
-                    )
-                ).alias("miss_sum"),
-                F.sum(
-                    F.when(F.col("hit").isNull(), F.lit(1)).otherwise(
-                        F.lit(0)
-                    )
-                )
-                .cast("bigint")
-                .alias("n_miss"),
-            ).select(
-                F.lit(h).cast("bigint").alias("max_hamming"),
-                "n_exact",
-                "n_hit",
-                F.round(
-                    F.col("n_hit")
-                    / F.nullif(
-                        F.col("n_exact").cast("double"), F.lit(0.0)
-                    ),
-                    6,
-                ).alias("recall"),
-                F.round(
-                    F.col("miss_sum").cast("double")
-                    / F.nullif(
-                        F.col("n_miss").cast("double"), F.lit(0.0)
-                    ),
-                    6,
-                ).alias("missed_mean_jaccard"),
-            )
-        )
-    return parts[0].unionByName(parts[1])
-
-
-def _arena_bt_sensitivity(spark, sf_dir):
-    """Witnessed iteration-sensitivity for the fixed-8-round
-    Bradley-Terry choice (the line_dedup_pages_mindf3 pattern: the
-    parameter the operator pins gets its own declared row): the same
-    mined game table fitted at iters=4 and iters=8, compared at the
-    leaderboard grain — items whose rank moved, the largest move, and
-    the top-10 overlap. All-integer output (rank deltas), so the row
-    is exact cross-engine. The two fits are snapshots of ONE MM
-    chain (operators/ranking.py::bradley_terry_rank_sensitivity —
-    an earlier fixed-iteration fit is a strict prefix of a later
-    one), so mining, pair tables, and rounds 1-4 are all shared;
-    the game table comes from the _arena_games shared build and the
-    chain itself from the _bt_chain memo shared with
-    arena_bt_ratings — across the two queries the 8-round fit runs
-    exactly once per session."""
-    from recmetrics_pyspark_spark.operators.ranking import (
-        bradley_terry_rank_sensitivity,
-    )
-
-    return bradley_terry_rank_sensitivity(
-        _arena_games(spark, sf_dir),
-        iters_a=4,
-        iters_b=8,
-        top_k=10,
-        fit=_bt_chain(spark, sf_dir),
-    )
-
-
-def _ivf_recall_report(spark, sf_dir):
-    """ann_recall_report's shape over the trained-IVF lane — the one
-    approximate retriever that had no witnessed recall row (LSH got
-    it in round 8, SQ8/IVF-SQ8 in round 10, PQ/IVF-PQ this round):
-    per-query recall@10 of ivf_ann_topk (8 cells, nprobe 3) against
-    the exact brute-force top-k, so the cell-routing recall trade is
-    oracle-pinned rather than pytest-only. Exact side from the
-    _ann_truth shared build."""
-    embs = _embs(spark, sf_dir)
-    qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = S.ivf_ann_topk(
-        embs, qset, k=10, n_cells=8, nprobe=3
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                "recall_at_10"
-            ),
-        )
-    )
-
-
-def _pq_recall_report(spark, sf_dir):
-    """sq_recall_report's pattern extended to the PQ lanes (round-10
-    verdict item 8): per-query recall@10 of pq_ann_topk and
-    ivfpq_ann_topk against the exact brute-force top-k — the PQ
-    compression and the IVF routing each get a witnessed retrieval-
-    quality row instead of a pytest-only bound. Exact side from the
-    _ann_truth shared build (already checkpointed — both lane
-    branches fan out from materialized blocks)."""
-    embs = _embs(spark, sf_dir)
-    qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    parts = []
-    for lane, approx in (
-        ("pq", S.pq_ann_topk(embs, qset, k=10, m=4, k_codes=16)),
-        (
-            "ivfpq",
-            S.ivfpq_ann_topk(
-                embs, qset, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
-            ),
-        ),
-    ):
-        a = approx.select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        parts.append(
-            exact.join(a, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_hit"),
-            )
-            .select(
-                F.lit(lane).alias("lane"),
-                "query_id",
-                "n_exact",
-                "n_hit",
-                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                    "recall_at_10"
-                ),
-            )
-        )
-    return parts[0].unionByName(parts[1])
-
-
-def _minhash_lsh(spark, sf_dir):
-    return D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
-
-
-def _neardup_comps(spark, sf_dir):
-    """The Jaccard >= 0.5 near-dup component table
-    (operators/dedup.py::neardup_components — min-label propagation,
-    iters=4), a shared build per (application, sf_dir): the declared
-    neardup_components query, canonical_docs, and soft_dedup_weights
-    all consumed this same table, and each call re-ran the 4
-    localCheckpointed propagation rounds (per-round checkpoints never
-    canonicalize equal across calls; within-probe A/B in SCALE.md
-    round-12). Component-grain frame (docs in >= 1 near-dup pair)."""
-    return _shared(
-        spark, sf_dir, "neardup_comps",
-        lambda: D.neardup_components(
-            _docs(spark, sf_dir), threshold=0.5, iters=4
-        ).localCheckpoint(eager=True),
-    )
-
-
-def _neardup_components(spark, sf_dir):
-    return _neardup_comps(spark, sf_dir)
-
-
 def _bt_oracle(iters: int = 8) -> str:
     """Mirror of operators/ranking.py::bradley_terry_ratings over the
     dpo_pair_mining games (the _DPO_PAIRS_SQL body reused verbatim):
@@ -1287,29 +664,6 @@ FROM full_t
     )
 
 
-def _neardup_components_star(spark, sf_dir):
-    """Same near-dup component output via the O(log n)-round
-    large-star/small-star contraction (operators/graph.py::
-    star_components) — oracle is the EXACT transitive closure (DuckDB
-    recursive CTE), so this witnesses the log-round algorithm against
-    ground truth rather than against the propagation twin."""
-    from recmetrics_pyspark_spark.operators.graph import star_components
-
-    pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    labels = star_components(edges)
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("component_size")
-    )
-    return labels.join(sizes, "label").select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("component_id"),
-        "component_size",
-    )
-
-
 def _neardup_star_oracle() -> str:
     # EXACT components via transitive closure: component id = min node
     # reachable. WITH RECURSIVE prefixes the shared doc CTEs (DuckDB
@@ -1334,385 +688,6 @@ sym AS (
 SELECT node AS doc_id, component_id, component_size
 FROM comp JOIN csizes USING (component_id)
 """
-    )
-
-
-def _simhash(spark, sf_dir):
-    return D.simhash_signatures(_docs(spark, sf_dir))
-
-
-def _simhash_near(spark, sf_dir):
-    return D.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=1)
-
-
-def _ann_truth(spark, sf_dir):
-    """The exact brute-force top-10 for the standard query set
-    (vec_id < 5), a shared build per (application, sf_dir) — the
-    _exact_pairs pattern applied to the ANN family: the declared
-    ann_bruteforce_topk query and all four recall reports
-    (ann/sq/ivf/pq) derive this identical truth, and each call
-    re-paid the full-corpus scoring scan (~1.2 s each at sf0.1, five
-    consumers). |Q| x k rows — output-scale, checkpoint-cheap at any
-    corpus size."""
-
-    def build():
-        embs = _embs(spark, sf_dir)
-        return S.ann_bruteforce_topk(
-            embs, embs.filter(F.col("vec_id") < 5), k=10
-        ).localCheckpoint(eager=True)
-
-    return _shared(spark, sf_dir, "ann_truth", build)
-
-
-def _ann_topk(spark, sf_dir):
-    return _ann_truth(spark, sf_dir)
-
-
-def _ivf_ann_topk(spark, sf_dir):
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.ivf_ann_topk(embs, queries_df, k=10, n_cells=8, nprobe=3)
-
-
-def _pq_ann_topk(spark, sf_dir):
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.pq_ann_topk(embs, queries_df, k=10, m=4, k_codes=16)
-
-
-def _pq_rerank_topk(spark, sf_dir):
-    """Two-stage retrieve-rerank: PQ-ADC retrieves an 8k candidate
-    pool, exact cosine re-ranks it (operators/similarity.py::
-    pq_ann_topk rerank_factor=8 — recall@10 90% while exact-scoring
-    16% of the corpus)."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.pq_ann_topk(
-        embs, queries_df, k=10, m=4, k_codes=16, rerank_factor=8
-    )
-
-
-def _ivfsq_ann_topk(spark, sf_dir):
-    """IVF-SQ8 (operators/similarity.py::ivfsq_ann_topk): the FAISS
-    IVF,SQ8 production composition — trained coarse cells bound WHO
-    a query scores, global SQ8 bounds WHAT a candidate costs (1
-    byte/dim). Agreement with IVF-Flat top-10 is 100% on this corpus
-    (8-bit reconstruction is near-lossless within probed cells)."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.ivfsq_ann_topk(
-        embs, queries_df, k=10, n_cells=8, nprobe=3
-    )
-
-
-def _sq_ann_topk(spark, sf_dir):
-    """SQ8 asymmetric ANN (operators/similarity.py::sq_ann_topk):
-    corpus scored through its scalar-quantized reconstruction
-    (256-level per-dimension codes, 4x storage cut), queries exact.
-    Near-lossless: recall@10 = 100% vs the brute-force baseline on
-    this corpus."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.sq_ann_topk(embs, queries_df, k=10)
-
-
-def _semantic_decontaminate(spark, sf_dir):
-    """Embedding-space decontamination (operators/similarity.py::
-    semantic_decontaminate): vectors 25+ are the training corpus,
-    vectors 0-24 the benchmark; any train vector with cosine >= 0.4
-    to an eval vector is flagged with its hit count and best match —
-    the paraphrase-leak scrub the n-gram scan cannot see."""
-    embs = _embs(spark, sf_dir)
-    return S.semantic_decontaminate(
-        embs.filter(F.col("vec_id") >= 25),
-        embs.filter(F.col("vec_id") < 25),
-        threshold=0.4,
-    )
-
-
-def _semantic_decontaminate_ivf(spark, sf_dir):
-    """The scale-out semantic-decontamination lane (operators/
-    similarity.py::semantic_decontaminate_ivf): same train/eval split
-    and threshold as the broadcast path, but eval vectors route
-    through the IVF coarse quantizer (8 cells, nprobe 3, trained on
-    the full vector table) so each eval vector scores only its probed
-    cells' train vectors — the candidate-bounding composition the
-    broadcast path's docstring names for huge eval sets. Flagged-set
-    agreement with the broadcast path is pinned in
-    tests/test_round10_ops.py."""
-    embs = _embs(spark, sf_dir)
-    return S.semantic_decontaminate_ivf(
-        embs.filter(F.col("vec_id") >= 25),
-        embs.filter(F.col("vec_id") < 25),
-        threshold=0.4,
-        n_cells=8,
-        nprobe=3,
-        refinements=1,
-        quantizer=embs,
-    )
-
-
-def _sq_recall_report(spark, sf_dir):
-    """Witnessed retrieval quality for the quantized lanes
-    (ann_recall_report's pattern extended per the round-9 verdict):
-    per-query recall@10 of sq_ann_topk and ivfsq_ann_topk against the
-    exact brute-force top-k, one row per (lane, query). Left-joining
-    exact against approximate is output-scale work (lanes x |Q| x k
-    rows). Exact side from the _ann_truth shared build."""
-    embs = _embs(spark, sf_dir)
-    qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    parts = []
-    for lane, approx in (
-        ("sq8", S.sq_ann_topk(embs, qset, k=10)),
-        ("ivfsq8", S.ivfsq_ann_topk(embs, qset, k=10)),
-    ):
-        a = approx.select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        parts.append(
-            exact.join(a, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_hit"),
-            )
-            .select(
-                F.lit(lane).alias("lane"),
-                "query_id",
-                "n_exact",
-                "n_hit",
-                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                    "recall_at_10"
-                ),
-            )
-        )
-    return parts[0].unionByName(parts[1])
-
-
-def _hybrid_rrf_topk(spark, sf_dir):
-    """Hybrid retrieval via Reciprocal Rank Fusion
-    (operators/ranking.py::rrf_fuse): the exact cosine, SQ8, and
-    multiprobe-LSH retrievers each contribute 1/(60 + rank) per
-    (query, neighbor); the fused top-10 re-ranks on the exact
-    DECIMAL sum. The RAG-era ensemble pattern — retrievers with
-    different candidate pools fused without score calibration.
-    The exact-cosine retriever comes from the _ann_truth session
-    memo (identical frame: same corpus, query set, and k)."""
-    from recmetrics_pyspark_spark.operators.ranking import rrf_fuse
-
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return rrf_fuse(
-        [
-            _ann_truth(spark, sf_dir),
-            S.sq_ann_topk(embs, queries_df, k=10),
-            S.ann_lsh_topk(embs, queries_df, k=10),
-        ],
-        k0=60,
-        k=10,
-    )
-
-
-def _dim_truncation_recall(spark, sf_dir):
-    """Matryoshka truncation sizing report (operators/similarity.py::
-    dim_truncation_recall): top-10 recall of prefix-truncated cosine
-    (full, half, quarter dims) against the exact full-dimension
-    ranking — the offline report that picks the stored dimensionality
-    before committing vectors at scale."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.dim_truncation_recall(embs, queries_df, k=10)
-
-
-def _ivfpq_ann_topk(spark, sf_dir):
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < 5)
-    return S.ivfpq_ann_topk(
-        embs, queries_df, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
-    )
-
-
-def _repetition_stats(spark, sf_dir):
-    return T.repetition_stats(_docs(spark, sf_dir))
-
-
-def _bm25_topk(spark, sf_dir):
-    return T.bm25_topk(_docs(spark, sf_dir))
-
-
-def _doc_lm_score(spark, sf_dir):
-    return T.doc_lm_score(_docs(spark, sf_dir))
-
-
-def _mixture_sample(spark, sf_dir):
-    return T.mixture_sample(_docs(spark, sf_dir))
-
-
-def _normalized_dedup(spark, sf_dir):
-    return D.normalized_dedup(_docs(spark, sf_dir))
-
-
-def _minhash_jaccard_estimate(spark, sf_dir):
-    return D.minhash_jaccard_estimate(_docs(spark, sf_dir), threshold=0.1)
-
-
-def _pack_sequences(spark, sf_dir):
-    return T.pack_sequences(_docs(spark, sf_dir))
-
-
-def _bigram_lm(spark, sf_dir):
-    return T.bigram_lm(_docs(spark, sf_dir))
-
-
-def _vocab_encode(spark, sf_dir):
-    return T.vocab_encode(_docs(spark, sf_dir))
-
-
-def _embedding_gram(spark, sf_dir):
-    return S.embedding_gram(_embs(spark, sf_dir))
-
-
-def _events_dedup_hourly(spark, sf_dir):
-    """Batch twin of the streaming stateful dedup: first event per
-    (user, type, hour), deterministic (ts, event_id) tiebreak."""
-    ev = load_table(spark, sf_dir, "events")
-    out = W.dedup_first_per_window(
-        ev, ["user_id", "event_type"], window="hour", tiebreak="event_id"
-    )
-    return out.select(
-        "user_id", "event_type", F.col("bucket").alias("hour"),
-        "event_id", "ts", F.round("value", 6).alias("value"),
-    )
-
-
-def _temporal_split(spark, sf_dir):
-    """Leakage-safe event-time split: everything at or before the exact
-    80th percentile of event time trains, the rest evaluates. The
-    cutoff is ONE row (exact percentile aggregate) broadcast back over
-    the scan — the corpus never shuffles for the split itself."""
-    ev = load_table(spark, sf_dir, "events")
-    # ts is TIMESTAMP_NTZ (not castable to double); tz-free micros since
-    # epoch keeps the cutoff affine-equivalent to the oracle's epoch(ts)
-    es = ev.withColumn(
-        "es",
-        F.expr(
-            "cast(timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) as double)"
-        ),
-    )
-    cut = es.agg(F.percentile("es", F.lit(0.8)).alias("p80"))
-    return (
-        es.crossJoin(F.broadcast(cut))
-        .withColumn(
-            "split",
-            F.when(F.col("es") <= F.col("p80"), F.lit("train")).otherwise(
-                F.lit("eval")
-            ),
-        )
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-        )
-    )
-
-
-def _wau_sliding(spark, sf_dir):
-    """Trailing-7-day active users per day, computed WITHOUT a non-equi
-    window join: each (day, user) activity row is exploded into the 7
-    future days it keeps the user 'active' for, then one distinct-count
-    per target day. The explode is a fixed ×7 fan-out of the DAY-level
-    distinct table (calendar × users, already aggregated), and the
-    count shuffles on day — the plan every rolling-DAU/WAU pipeline
-    wants at scale (the alternative, a day-range join, is a
-    nested-loop over the calendar)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.select(
-        F.to_date("ts").alias("d"), "user_id"
-    ).distinct()
-    contrib = daily.select(
-        "user_id", F.explode(F.expr("sequence(0, 6)")).alias("i"), "d"
-    ).select("user_id", F.expr("date_add(d, i)").alias("day"))
-    last_day = ev.agg(F.max(F.to_date("ts")).alias("maxd"))
-    return (
-        contrib.crossJoin(F.broadcast(last_day))
-        .filter(F.col("day") <= F.col("maxd"))
-        .groupBy("day")
-        .agg(F.countDistinct("user_id").alias("wau"))
-        # day as yyyy-MM-dd TEXT: pandas widens bare DATE columns to
-        # midnight timestamps on the oracle side, so the portable
-        # representation is the formatted string
-        .select(F.date_format("day", "yyyy-MM-dd").alias("day"), "wau")
-    )
-
-
-def _shuffle_shards(spark, sf_dir):
-    """Deterministic training-order shuffle: md5-derived shard +
-    within-shard position for every document
-    (functions/text.py::shuffle_shards)."""
-    return T.shuffle_shards(_docs(spark, sf_dir), n_shards=8)
-
-
-def _event_sessionize(spark, sf_dir):
-    """Row-level session assignment over the event stream (30-minute
-    inactivity gap) — streaming/windows.py::assign_session_ids, the
-    per-event twin of events_sessions' aggregate view."""
-    ev = load_table(spark, sf_dir, "events")
-    return W.assign_session_ids(ev, gap_minutes=30)
-
-
-def _q_key_skew_items(spark, sf_dir):
-    """Heavy-hitter diagnostic on the interaction item key (top-10
-    share + cumulative share) — operators/skew.py::key_skew_stats, the
-    measurement that picks a skew mitigation before a 100 TB join."""
-    from recmetrics_pyspark_spark.operators.skew import key_skew_stats
-
-    return key_skew_stats(R.interactions(spark, sf_dir), "item", top_k=10)
-
-
-def _redact_pii(spark, sf_dir):
-    """PII scrub over a deterministic synthetic-PII corpus: the driver
-    documents contain no emails/IPs, so each doc gets a doc_id-derived
-    contact block appended (same construction in the oracle), then
-    functions/text.py::redact_pii masks emails, IPv4s, and phones in
-    one codegen'd scan-side projection."""
-    docs = _docs(spark, sf_dir)
-    with_pii = docs.select(
-        "doc_id",
-        F.expr(
-            "concat(text, ' contact u', doc_id, '@mail.example.com"
-            " from 10.', doc_id % 200, '.0.1 call +1-555-',"
-            " lpad(cast(doc_id % 10000 as string), 4, '0'),"
-            " case when doc_id % 3 = 0 then ' cc admin@ex.org'"
-            " else '' end)"
-        ).alias("text"),
-    )
-    return T.redact_pii(with_pii)
-
-
-def _snapshot_diff_orders(spark, sf_dir):
-    """CDC diff of two deterministic order-table snapshots (old drops
-    every 11th key → inserts; new drops every 7th ≡ 3 key → deletes;
-    every 5th key's price shifts by +1.0 → updates) —
-    operators/cdc.py::snapshot_diff, one full-outer shuffle join."""
-    from recmetrics_pyspark_spark.operators.cdc import snapshot_diff
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
-    )
-    old = orders.filter(F.col("o_orderkey") % 11 != 0)
-    new = orders.filter(F.col("o_orderkey") % 7 != 3).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + F.lit(1.0)
-        ).otherwise(F.col("o_totalprice")),
-    )
-    return snapshot_diff(
-        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
     )
 
 
@@ -1741,226 +716,6 @@ WITH RECURSIVE bfs(node, hops) AS (
 SELECT node, CAST(min(hops) AS BIGINT) AS min_hops
 FROM bfs GROUP BY node
 """
-
-
-def _q_recursive_bfs(spark, sf_dir):
-    """Recursive-CTE surface (Spark 4 WITH RECURSIVE): 2-hop BFS
-    reachability with min-hop aggregation over a vocabulary-bounded
-    item graph. The recursion is hop-bounded (the UNION ALL frontier
-    cannot run away) and the edge set is restricted to a catalog
-    slice, so the per-iteration join stays basket-scale. The oracle
-    runs the byte-identical SQL text."""
-    from recmetrics_pyspark_spark.sources.io import register_views
-
-    register_views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(RECURSIVE_BFS_SQL)
-
-
-def _session_paths(spark, sf_dir):
-    """Top-20 session journeys: event-type paths per (user, session)
-    — composition of assign_session_ids + one ordered array aggregate.
-    The collect_list is SESSION-bounded (watermark-analogous bound in
-    batch), the path ranking runs over the path-vocabulary aggregate,
-    and ties break lexicographically for determinism."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    sess = W.assign_session_ids(ev, gap_minutes=30)
-    with_type = sess.join(
-        ev.select("event_id", "event_type"), "event_id"
-    )
-    paths = (
-        with_type.groupBy("user_id", "session_idx")
-        .agg(
-            F.concat_ws(
-                ">",
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(
-                            F.struct("ts", "event_id", "event_type")
-                        )
-                    ),
-                    lambda s: s["event_type"],
-                ),
-            ).alias("path")
-        )
-        .groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n_sessions"))
-    )
-    w = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
-    return (
-        paths.orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(20)
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-    )
-
-
-def _source_overlap(spark, sf_dir):
-    """Cross-source duplication-leakage matrix over the documents
-    corpus (operators/dedup.py::source_overlap): shared word-3-gram
-    shingles, overlap coefficient and Jaccard per source pair — rides
-    the shared persisted shingle table; the self-join runs on the
-    (source, shingle) DISTINCT projection so fan-out per shingle is
-    capped at n_sources, never doc-quadratic."""
-    return D.source_overlap(_docs(spark, sf_dir)).orderBy(
-        "source_a", "source_b"
-    )
-
-
-def _next_item_examples(spark, sf_dir):
-    """Sequential-recommendation training examples
-    (operators/recommend.py::sequence_examples): per-customer
-    purchase history ordered by (o_orderdate, o_orderkey, l_partkey),
-    emitting (context-of-≤8-prior-items, next-item label) pairs via
-    ONE bounded-frame user window — the SASRec/GRU4Rec data-prep
-    shape, no global sort, no self-join."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    timed = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("user"),
-            F.col("o_orderdate").alias("dt"),
-            F.col("o_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        )
-        .distinct()
-    )
-    return R.sequence_examples(timed)
-
-
-def _log_odds_terms(spark, sf_dir):
-    """Distinctive terms per source: Dirichlet-prior log-odds z-scores
-    vs the rest of the corpus (functions/text.py::log_odds_terms,
-    Monroe et al. 2008) — one corpus-scale (source, token) count, then
-    vocabulary-scale arithmetic and a per-source ranking window."""
-    return T.log_odds_terms(_docs(spark, sf_dir))
-
-
-def _hashing_features(spark, sf_dir):
-    """Feature-hashing vectorizer (functions/text.py::
-    hashing_vectorize): signed md5-bucketed token counts, 64 dims —
-    vocabulary-free sparse features from one explode + one (doc, dim)
-    aggregate; md5-derived buckets keep the oracle bit-identical."""
-    return T.hashing_vectorize(_docs(spark, sf_dir))
-
-
-def _adamic_adar_links(spark, sf_dir):
-    """Adamic–Adar link prediction over the item co-occurrence graph
-    (operators/graph.py::adamic_adar_links): top-20 NOT-yet-linked
-    item pairs by Σ 1/ln(deg) over common neighbors, wedges enumerated
-    through each node's 6 strongest edges (hub-capped fan-out);
-    contributions summed in exact DECIMAL. Rides the persisted
-    item-similarity pair table."""
-    from recmetrics_pyspark_spark.operators.graph import adamic_adar_links
-
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    return adamic_adar_links(pairs, col_w="sim")
-
-
-def _common_neighbor_links(spark, sf_dir):
-    """Common-neighbors/Jaccard link prediction over the item
-    co-occurrence graph (operators/graph.py::common_neighbor_links):
-    the counting twin of adamic_adar_links — exact-integer scores, the
-    same hub-capped wedge enumeration, riding the same persisted
-    item-similarity pair table."""
-    from recmetrics_pyspark_spark.operators.graph import (
-        common_neighbor_links,
-    )
-
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    return common_neighbor_links(pairs, col_w="sim")
-
-
-def _ips_offline_eval(spark, sf_dir):
-    """Counterfactual IPS/SNIPS offline evaluation of the synthetic
-    top-10 policy against logged purchases
-    (operators/recommend.py::ips_offline_eval): popularity-share
-    propensities, quantity rewards, DECIMAL-exact one-row estimates."""
-    logs = R.interactions(spark, sf_dir, with_rating=True)
-    recs = _synth_recs(spark, sf_dir).select(
-        "user", "item"
-    )
-    return R.ips_offline_eval(logs, recs, k=10)
-
-
-def _canonical_docs(spark, sf_dir):
-    """Survivor selection per near-dup cluster
-    (operators/dedup.py::canonical_docs): every doc labeled with its
-    component and a canonical flag — highest quality_score wins, ties
-    to lowest id. Detection → decision: filtering is_canonical IS the
-    deduplicated corpus, with the drop decisions auditable. Components
-    come from the _neardup_comps shared build (round-12) — the same
-    table the declared neardup_components query returns."""
-    return D.canonical_docs(
-        _docs(spark, sf_dir), comps=_neardup_comps(spark, sf_dir)
-    )
-
-
-def _soft_dedup_weights(spark, sf_dir):
-    """Soft dedup (the SemDeDup-paper alternative to hard removal):
-    keep every near-dup cluster member but down-weight each to
-    1/cluster_size, so a cluster contributes one document's worth of
-    training mass however many copies it has. Rides canonical_docs'
-    component table (via the _neardup_comps shared build, round-12);
-    singletons weigh 1."""
-    out = D.canonical_docs(
-        _docs(spark, sf_dir), comps=_neardup_comps(spark, sf_dir)
-    )
-    return out.select(
-        "doc_id",
-        "component_id",
-        "n_members",
-        F.round(F.lit(1.0) / F.col("n_members"), 6).alias("weight"),
-    )
-
-
-def _weighted_sample(spark, sf_dir):
-    """Per-language weighted sample without replacement, 25 docs per
-    stratum with inclusion ∝ n_chars (functions/curation.py::
-    weighted_sample, Efraimidis–Spirakis priority keys; md5-uniform,
-    RNG-free, repartition-stable)."""
-    return C.weighted_sample(
-        _docs(spark, sf_dir), n=25, col_weight="n_chars",
-        col_stratum="lang",
-    )
-
-
-def _langid_confusion(spark, sf_dir):
-    """Declared-vs-detected language confusion matrix with per-true-
-    language recall (functions/text.py::langid_confusion) — the
-    detector audit run before trusting language routing."""
-    return T.langid_confusion(_docs(spark, sf_dir))
-
-
-def _quantile_normalize(spark, sf_dir):
-    """Per-source decile of document length (functions/curation.py::
-    quantile_normalize) — cross-source score calibration via exact
-    per-group percentile cutoffs broadcast over the scan; no per-group
-    window sort."""
-    return C.quantile_normalize(_docs(spark, sf_dir))
-
-
-def _incremental_neardup(spark, sf_dir):
-    """NEAR-dup classification of an incoming batch (doc_id % 5 = 0)
-    against the accumulated LSH index of the rest
-    (operators/dedup.py::incremental_neardup) — the fuzzy twin of
-    incremental_dedup: only the batch is shingled, the index
-    contributes one bucket join, verification reads signatures only."""
-    docs = _docs(spark, sf_dir)
-    batch = docs.filter("doc_id % 5 = 0")
-    seen = docs.filter("doc_id % 5 != 0")
-    return D.incremental_neardup(batch, D.lsh_index(seen))
 
 
 def _incr_neardup_oracle() -> str:
@@ -2011,192 +766,6 @@ FROM documents d LEFT JOIN best b ON d.doc_id = b.bid
 WHERE d.doc_id % 5 = 0
 """
     )
-
-
-def _duplicated_spans(spark, sf_dir):
-    """Maximal duplicated token spans per document
-    (operators/dedup.py::duplicated_spans) — the span-level signal an
-    exact-substring dedup rewriter consumes; gaps-and-islands run
-    assembly inside document-bounded windows."""
-    return D.duplicated_spans(_docs(spark, sf_dir))
-
-
-def _remove_duplicated_spans_docs(spark, sf_dir):
-    """Exact-substring dedup REWRITE (operators/dedup.py::
-    remove_duplicated_spans): every token inside a corpus-duplicated
-    span is deleted from every carrier and documents re-assembled in
-    token order — the Lee et al. 2022 treatment consuming
-    duplicated_spans' detection; array-local filter, no second
-    corpus pass."""
-    return D.remove_duplicated_spans(_docs(spark, sf_dir))
-
-
-def _q_data_quality(spark, sf_dir):
-    """Promotion gate over the orders table: null/range/set column
-    checks compiled into ONE scan, key uniqueness, and an orders→
-    customer referential check (operators/quality.py). One row per
-    check with violation counts."""
-    from recmetrics_pyspark_spark.operators import quality as QC
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    col_checks = QC.check_columns(
-        orders,
-        {
-            "orderkey_not_null": F.col("o_orderkey").isNull(),
-            "totalprice_positive": ~(F.col("o_totalprice") > 0),
-            "status_in_domain": ~F.col("o_orderstatus").isin("O", "F", "P"),
-            "date_in_range": ~F.col("o_orderdate").between(
-                "1992-01-01", "1998-12-31"
-            ),
-        },
-    )
-    uniq = QC.check_unique(orders, ["o_orderkey"], "orderkey_unique")
-    fk = QC.check_foreign_key(
-        orders, "o_custkey", cust, "c_custkey", "custkey_fk"
-    )
-    return QC.run_checks([col_checks, uniq, fk])
-
-
-def _dup_ngram_fraction(spark, sf_dir):
-    """Corpus-level duplicate 3-gram fraction per document
-    (operators/dedup.py::dup_ngram_fraction) — the Gopher-style
-    repetition filter signal, over the shared shingle table."""
-    return D.dup_ngram_fraction(_docs(spark, sf_dir))
-
-
-def _ranking_metrics(spark, sf_dir):
-    """Offline eval of the synthetic recommender against a temporal
-    holdout (orders from 1995-07-01 on): macro precision/recall/NDCG@10
-    (operators/recommend.py::ranking_metrics_at_k)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    truth = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(F.col("o_orderdate") >= F.lit("1995-07-01"))
-        .select(
-            F.col("o_custkey").alias("user"), F.col("l_partkey").alias("item")
-        )
-    )
-    recs = _synth_recs(spark, sf_dir)  # k=10, the memo's shape
-    return R.ranking_metrics_at_k(recs, truth, k=10)
-
-
-def _rollup_incremental(spark, sf_dir):
-    """Incremental rollup maintenance: yesterday's (status → count,
-    revenue) rollup merged with today's CDC diff
-    (operators/cdc.py::rollup_merge). The ORACLE is the direct rollup
-    of the new snapshot — so a green row PROVES the incremental path
-    equals the full recompute."""
-    from recmetrics_pyspark_spark.operators.cdc import (
-        rollup_merge,
-        snapshot_diff,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round("o_totalprice", 2).alias("o_totalprice"),
-    )
-    old = orders.filter(F.col("o_orderkey") % 11 != 0)
-    new = orders.filter(F.col("o_orderkey") % 7 != 3).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + F.lit(1.0)
-        ).otherwise(F.col("o_totalprice")),
-    )
-    rollup = old.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("o_totalprice").alias("sum_value"),
-    )
-    diff = snapshot_diff(
-        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
-    )
-    # round_scale=2 here, at the comparison boundary with the oracle's
-    # direct recompute — the operator itself no longer rounds per merge
-    return rollup_merge(
-        rollup, diff, ["o_orderstatus"], "o_totalprice", round_scale=2
-    )
-
-
-def _q_zorder_keys(spark, sf_dir):
-    """Morton keys for lineitem's (partkey, suppkey) pair — the sort
-    key zorder_compact lays files out by. Emitted per row so the
-    oracle checks the bit interleave exactly; the layout itself (range
-    partition + sort + write) is exercised by tests/test_zorder.py."""
-    from recmetrics_pyspark_spark.sources.sinks import zorder_value
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_partkey") % 65536).alias("zx"),
-        (F.col("l_suppkey") % 65536).alias("zy"),
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        zorder_value("zx", "zy").alias("zval"),
-    )
-
-
-def _attribution_last_touch(spark, sf_dir):
-    """Last-touch marketing attribution: each purchase is credited to
-    the user's most recent click at or before it (point-in-time as-of
-    lookup — operators/joins.py::asof_join, one key-partitioned sort,
-    no per-row range probe). Purchases with no prior click are organic."""
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts", F.round("value", 6).alias("value")
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_eid"))
-    )
-    out = J.asof_join(purchases, clicks, on="user_id", right_cols=["click_eid"])
-    sec = F.unix_timestamp("ts")
-    csec = F.unix_timestamp("ts_asof")
-    return out.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.col("click_eid_asof"),
-        F.col("ts_asof").alias("click_ts"),
-        F.when(F.col("click_eid_asof").isNotNull(), sec - csec).alias("gap_s"),
-        F.col("click_eid_asof").isNotNull().alias("attributed"),
-    )
-
-
-def _pagerank_items(spark, sf_dir):
-    """PageRank over the item co-occurrence graph (edges = item pairs
-    bought together by ≥2 users, both directions) — 3 fixed rounds,
-    damping 0.85 (operators/graph.py::pagerank_from_edges)."""
-    from recmetrics_pyspark_spark.operators.graph import pagerank_from_edges
-
-    inter = R.interactions(spark, sf_dir)
-    # item_similarity_pairs is the persisted intermediate shared with
-    # item_item_topk — same canonicalized plan, so a session that ran
-    # the item queries reuses the cache and the graph build is free
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    edges = pairs.select(
-        F.col("ia").alias("src"), F.col("ib").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("ib").alias("src"), F.col("ia").alias("dst"))
-    )
-    # the union of both pair directions is symmetric BY CONSTRUCTION,
-    # so the operator's entry check (one extra edge-scale job) would be
-    # pure overhead here — 'ignore' keeps the documented fast path
-    pr = pagerank_from_edges(
-        edges, iters=3, damping=0.85, on_asymmetric="ignore"
-    )
-    return pr.select(F.col("node").alias("item_id"), "pagerank")
 
 
 def _zorder_oracle() -> str:
@@ -2262,38 +831,6 @@ SELECT node AS item_id, round(pr, 6) AS pagerank FROM p3
     )
 
 
-def _salted_user_spend(spark, sf_dir):
-    """Skew-mitigated fact⋈dim join witnessed by an oracle: salting
-    changes only physical distribution, so the result must equal the
-    plain join bit-for-bit (operators/skew.py::salted_join)."""
-    from recmetrics_pyspark_spark.operators.skew import salted_join
-
-    events = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").alias("custkey"), "value"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("custkey"), "c_mktsegment"
-    )
-    joined = salted_join(events, cust, on="custkey")
-    return joined.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 6).alias("sum_value"),
-    )
-
-
-def _event_transitions(spark, sf_dir):
-    return Q3.q_event_transitions(spark, sf_dir)
-
-
-def _embedding_neardup(spark, sf_dir):
-    return S.embedding_near_duplicates(_embs(spark, sf_dir), threshold=0.35)
-
-
-def _ann_lsh_topk(spark, sf_dir):
-    embs = _embs(spark, sf_dir)
-    return S.ann_lsh_topk(embs, embs.filter(F.col("vec_id") < 5), k=10)
-
-
 def _ann_lsh_oracle() -> str:
     planes = S.rademacher_planes(4, 64)
     def arr(p):
@@ -2321,265 +858,6 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM (
   FROM scored) t
 WHERE rnk <= 10
 """
-
-
-def _events_asof_purchase(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("p_eid"),
-            F.max("value").alias("p_value"),
-        )
-    )
-    out = J.asof_join(
-        ev, purchases, on="user_id", right_cols=["p_eid", "p_value"]
-    )
-    return out.select(
-        "user_id", "event_id", "ts", "p_eid_asof", "p_value_asof", "ts_asof"
-    )
-
-
-def _events_asof_next_purchase(spark, sf_dir):
-    """Forward as-of with tolerance: for every click, the NEXT purchase
-    by the same user within 2 hours (operators/joins.py::asof_join
-    direction='forward', tolerance_seconds=7200 — pandas merge_asof
-    parity; the oracle uses DuckDB's ASOF with the reversed comparison
-    plus the same tolerance null-out)."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click")
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("p_eid"),
-            F.max("value").alias("p_value"),
-        )
-    )
-    out = J.asof_join(
-        clicks,
-        purchases,
-        on="user_id",
-        right_cols=["p_eid", "p_value"],
-        direction="forward",
-        tolerance_seconds=7200,
-    )
-    return out.select(
-        "user_id", "event_id", "ts", "p_eid_asof", "p_value_asof", "ts_asof"
-    )
-
-
-def _events_range_pairs(spark, sf_dir):
-    return J.range_self_join(
-        load_table(spark, sf_dir, "events"),
-        key="user_id",
-        max_gap_seconds=300,
-    )
-
-
-def _profile_customer(spark, sf_dir):
-    from recmetrics_pyspark_spark.operators.profile import profile_table
-
-    return profile_table(load_table(spark, sf_dir, "customer"))
-
-
-def _tfidf_top_terms(spark, sf_dir):
-    return T.tfidf_top_terms(_docs(spark, sf_dir), k=5)
-
-
-def _label_centroids(spark, sf_dir):
-    return S.label_centroids(_embs(spark, sf_dir))
-
-
-def _kmeans(spark, sf_dir):
-    return S.kmeans_assignments(_embs(spark, sf_dir), k=8, iters=2)
-
-
-def _semantic_dedup(spark, sf_dir):
-    """SemDeDup: k-means cells as dedup buckets, within-cell cosine
-    prune (operators/similarity.py::semantic_dedup). Threshold 0.35
-    matches embedding_neardup's data-appropriate setting for the
-    synthetic embeddings."""
-    return S.semantic_dedup(
-        _embs(spark, sf_dir), k=8, iters=2, threshold=0.35
-    )
-
-
-def _coverage_approx(spark, sf_dir):
-    # SELF-CHECKING sketch: the HLL estimate (approx_count_distinct,
-    # rsd=0.01) is computed alongside the exact distinct, and the query
-    # returns the exact values plus a bounds flag (|approx-exact| <= 5%
-    # = 5x the configured rsd). The oracle recomputes the exact columns
-    # and pins the flag TRUE — a drifting sketch turns the driver row
-    # red. Upgraded from rows-only.
-    #
-    # Round-13 single-pass shape (verdict item 6, guide §2.3): the
-    # previous mixed countDistinct + approx_count_distinct aggregate
-    # made the planner key the PARTIAL HLL sketch by item — 1,640
-    # bigint register columns PER DISTINCT ITEM through two exchanges
-    # (plans/r13/coverage_approx_before.txt op (3): "Results [1640]").
-    # Distinct-first instead: reduce to the distinct item set (narrow
-    # 8-byte rows, map-side partial distinct), then ONE global
-    # aggregate computes count (== countDistinct over the raw rows)
-    # and the HLL estimate (bit-identical: HLL registers are a max
-    # over hashed DISTINCT values — duplicate inserts are idempotent,
-    # so the sketch over the distinct set equals the sketch over the
-    # raw rows). Both aggregates stay — the query's point is the
-    # self-check.
-    rec_items_d = _synth_recs(spark, sf_dir).select("item").distinct()
-    rec = rec_items_d.agg(
-        F.count("item").alias("rec_items"),
-        F.approx_count_distinct("item", 0.01).alias("rec_approx"),
-    )
-    cat_items_d = (
-        R.interactions(spark, sf_dir).select("item").distinct()
-    )
-    cat = cat_items_d.agg(
-        F.count("item").alias("catalog_items"),
-        F.approx_count_distinct("item", 0.01).alias("cat_approx"),
-    )
-    from pyspark.sql.functions import broadcast
-
-    ok = (
-        F.abs(F.col("rec_approx") - F.col("rec_items"))
-        <= 0.05 * F.col("rec_items")
-    ) & (
-        F.abs(F.col("cat_approx") - F.col("catalog_items"))
-        <= 0.05 * F.col("catalog_items")
-    )
-    return rec.crossJoin(broadcast(cat)).select(
-        "rec_items",
-        "catalog_items",
-        F.round(F.col("rec_items") / F.col("catalog_items"), 6).alias(
-            "coverage"
-        ),
-        ok.alias("sketch_within_bounds"),
-    )
-
-
-def _quantiles_approx(spark, sf_dir):
-    # SELF-CHECKING sketch percentiles: percentile_approx(accuracy=1000)
-    # guarantees rank error <= n/1000; the flag asserts each estimate
-    # lies between the exact (p-0.01) and (p+0.01) quantiles (10x
-    # headroom), all computed in the one grouped aggregate. The oracle
-    # recomputes the exact quantiles and pins the flag TRUE.
-    li = load_table(spark, sf_dir, "lineitem")
-    # ARRAY-form percentile: all six exact quantiles share ONE sort
-    # buffer, and both sketch quantiles share one t-digest (six
-    # separate aggregates measured 7.1s vs ~3.6s for the array form
-    # at sf0.1 — same cost class as the exact q_quantiles_by_flag)
-    g = li.groupBy("l_returnflag").agg(
-        F.expr(
-            "percentile(l_extendedprice,"
-            " array(0.49, 0.5, 0.51, 0.94, 0.95, 0.96))"
-        ).alias("ex"),
-        F.expr(
-            "percentile_approx(l_extendedprice, array(0.5, 0.95), 1000)"
-        ).alias("ap"),
-    )
-    ok = (
-        F.col("ap")[0].between(F.col("ex")[0], F.col("ex")[2])
-        & F.col("ap")[1].between(F.col("ex")[3], F.col("ex")[5])
-    )
-    return g.select(
-        "l_returnflag",
-        F.round(F.col("ex")[1], 6).alias("p50"),
-        F.round(F.col("ex")[4], 6).alias("p95"),
-        ok.alias("sketch_within_bounds"),
-    ).orderBy("l_returnflag")
-
-
-def _media_features(spark, sf_dir):
-    # Multimodal pipeline in the graded surface: deterministic synthetic
-    # PPM images scaled by SF, decoded (REAL binary-PPM parse, pure
-    # numpy — no codec library needed) and featurized via Arrow-batched
-    # mapInPandas. Python-side by necessity (codec work) -> rows-only
-    # check; compressed formats would route through PIL when present.
-    from recmetrics_pyspark_spark import multimodal as MM
-
-    n = {"0.001": 64, "0.01": 256, "0.1": 1024}.get(
-        sf_dir.rstrip("/").rsplit("sf", 1)[-1], 64
-    )
-    img = MM.decode_and_featurize(
-        MM.synthetic_media(spark, n=n), resize_to=4
-    )
-    # audio rides the same FEATURE_SCHEMA: REAL RIFF/WAVE PCM16 parse
-    # (pure numpy) -> per-frame RMS + zero-crossing features
-    aud = MM.featurize_audio(
-        MM.synthetic_audio(spark, n=n // 2), n_frames=8
-    )
-    feats = img.unionByName(aud)
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.round(
-            F.aggregate("feature", F.lit(0.0), lambda a, x: a + x)
-            / F.size("feature"),
-            4,
-        ).alias("mean_feature"),
-    )
-
-
-def _funnel_conversion(spark, sf_dir):
-    """Ordered view→click→purchase funnel over events
-    (operators/funnel.py::funnel_conversion): first-touch step
-    binding, per-step user counts and conversion rates; per-step
-    shrinking user-keyed joins, no windows over the event stream."""
-    from recmetrics_pyspark_spark.operators.funnel import funnel_conversion
-
-    return funnel_conversion(
-        load_table(spark, sf_dir, "events"), ["view", "click", "purchase"]
-    )
-
-
-def _cohort_retention(spark, sf_dir):
-    """Weekly signup-cohort retention matrix
-    (operators/funnel.py::cohort_retention): activity collapses to
-    user-week grain before the cohort join; output is cohorts ×
-    offsets, calendar-bounded."""
-    from recmetrics_pyspark_spark.operators.funnel import cohort_retention
-
-    out = cohort_retention(load_table(spark, sf_dir, "events"))
-    # ISO string for the compare harness: pandas renders a DuckDB DATE
-    # as a midnight Timestamp, but a Spark DateType as datetime.date
-    return out.withColumn(
-        "cohort_week", F.col("cohort_week").cast("string")
-    )
-
-
-def _ann_recall_report(spark, sf_dir):
-    """Witnessed ANN quality: per-query recall@10 of the LSH
-    multi-probe path against the exact brute-force top-k — the driver
-    twin of tests/test_ann_recall.py's gates, so retrieval QUALITY
-    (not just result determinism) carries an oracle row. Left-joining
-    the exact set against the approximate set is output-scale work
-    (|Q|·k rows). Exact side from the _ann_truth shared build."""
-    embs = _embs(spark, sf_dir)
-    qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = S.ann_lsh_topk(embs, qset, k=10).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                "recall_at_10"
-            ),
-        )
-    )
 
 
 def _ann_recall_oracle() -> str:
@@ -2677,311 +955,6 @@ WHERE rnk <= 10
 """
 
 
-def _sequential_rules(spark, sf_dir):
-    """Directed A-then-B purchase rules
-    (operators/recommend.py::sequential_rules): first-adoption times
-    per (customer, part), strictly-later pairs, per-user sequence
-    capped at 20 earliest adoptions; integer-ratio confidence/lift."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    timed = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        F.col("o_custkey").alias("user"),
-        F.col("o_orderdate").alias("dt"),
-        F.col("l_partkey").alias("item"),
-    )
-    return R.sequential_rules(timed)
-
-
-def _containment_pairs(spark, sf_dir):
-    """Near-superset pairs (operators/dedup.py::containment_pairs):
-    containment = |A∩B| / min(|A|,|B|) over the df-capped shingle
-    universe — catches quoted-inclusion duplicates symmetric Jaccard
-    misses; same inverted-index plan as ngram_jaccard_pairs."""
-    return D.containment_pairs(_docs(spark, sf_dir), threshold=0.6)
-
-
-def _churn_training_set(spark, sf_dir):
-    """Leakage-safe churn training set (operators/funnel.py::
-    churn_training_set): pre-cutoff features, post-cutoff label,
-    7-day horizon; exact integers only."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        churn_training_set,
-    )
-
-    return churn_training_set(load_table(spark, sf_dir, "events"))
-
-
-def _wow_trending(spark, sf_dir):
-    """Week-over-week trending users by purchase count
-    (operators/funnel.py::wow_trending): lag over the key-week
-    aggregate, exact integer deltas, global top-k."""
-    from recmetrics_pyspark_spark.operators.funnel import wow_trending
-
-    return wow_trending(load_table(spark, sf_dir, "events"))
-
-
-def _skipgram_pairs(spark, sf_dir):
-    """item2vec skip-gram pair distribution
-    (operators/recommend.py::skipgram_pairs): directed co-occurrence
-    counts within a +/-2 position window of each customer's purchase
-    sequence — one bounded-frame window, no positional self-join."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    timed = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("user"),
-            F.col("o_orderdate").alias("dt"),
-            F.col("o_orderkey").alias("ok"),
-            F.col("l_partkey").alias("item"),
-        )
-        .distinct()
-    )
-    return R.skipgram_pairs(timed)
-
-
-def _daily_anomaly_events(spark, sf_dir):
-    """Trailing-7-day z-score anomaly monitor per event type
-    (operators/timeseries.py::trailing_window_anomaly): baseline
-    excludes the current day; day-scale windows only."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        trailing_window_anomaly,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return trailing_window_anomaly(ev, "event_type", "ts", "value")
-
-
-def _split_leakage_audit(spark, sf_dir):
-    """Train/eval contamination audit for the hash split
-    (functions/curation.py::split_leakage_audit): distinct content
-    hashes by boundary status; 'leaked' counts exact dups straddling
-    the split."""
-    return C.split_leakage_audit(_docs(spark, sf_dir))
-
-
-def _user_erasure_audit(spark, sf_dir):
-    """GDPR erasure-cascade audit (operators/cdc.py::
-    user_erasure_audit): deterministic deletion set (c_custkey %% 97
-    == 0), cascade customer -> orders -> lineitem; the oracle pins the
-    computed residual_refs at zero."""
-    from recmetrics_pyspark_spark.operators.cdc import user_erasure_audit
-
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    erase = cust.filter(F.col("c_custkey") % 97 == 0).select("c_custkey")
-    return user_erasure_audit(cust, orders, li, erase)
-
-
-def _conversion_latency(spark, sf_dir):
-    """View-to-purchase time-to-convert distribution
-    (operators/funnel.py::conversion_latency): one-row exact-percentile
-    summary over user-scale integer latencies; DECIMAL-exact mean."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        conversion_latency,
-    )
-
-    return conversion_latency(load_table(spark, sf_dir, "events"))
-
-
-def _rfm_segments(spark, sf_dir):
-    """RFM customer segmentation over orders
-    (operators/funnel.py::rfm_segments): quintile bins from one
-    broadcast percentile row, scan-side array binning, DECIMAL-exact
-    spend sums."""
-    from recmetrics_pyspark_spark.operators.funnel import rfm_segments
-
-    return rfm_segments(load_table(spark, sf_dir, "orders"))
-
-
-def _doc_perplexity(spark, sf_dir):
-    """Self-scored bigram cross-entropy per document
-    (functions/text.py::doc_perplexity): the in-corpus analogue of
-    CCNet's perplexity filter; DECIMAL-exact bit sums, LM join is
-    vocabulary-keyed."""
-    return T.doc_perplexity(_docs(spark, sf_dir))
-
-
-def _dsir_importance(spark, sf_dir):
-    """DSIR hashed-ngram importance weights toward the English slice
-    (functions/curation.py::dsir_importance): bucket log-ratios are
-    64-row broadcasts; one corpus-scale shuffle."""
-    return C.dsir_importance(_docs(spark, sf_dir))
-
-
-def _media_decode_meta(spark, sf_dir):
-    """Codec-lane correctness witness (multimodal.py::decode_meta):
-    REAL PPM/WAV parses over mapInPandas, emitting only deterministic
-    integers (decoded dims, payload bytes, exact red-channel sum) that
-    the DuckDB oracle recomputes from the synthetic generator's closed
-    form — so the Python decode path is hash-checked, not rows-only.
-    Row count is FIXED (256 images + 128 audio) at every sf: the
-    payloads are synthetic either way, and a constant n keeps the
-    static oracle SQL valid at every ORACLE_SF_DIR."""
-    from recmetrics_pyspark_spark import multimodal as MM
-
-    img = MM.decode_meta(MM.synthetic_media(spark, n=256))
-    aud = MM.decode_meta(MM.synthetic_audio(spark, n=128))
-    return img.unionByName(aud)
-
-
-# Queries whose outputs are Python-side pipelines with no SQL twin:
-# deliberately no oracle_sql entry (the driver records a rows-only
-# check). The sketch queries (coverage_approx, quantiles_approx) are
-# SELF-CHECKING instead: they return exact values plus an in-bounds
-# flag the oracle pins TRUE, so they carry full oracle entries.
-# media_features' float feature pipeline stays rows-only, but the
-# codec lane itself is hash-checked via media_decode_meta.
-NO_ORACLE = ("media_features",)
-
-
-def _events_tumbling(spark, sf_dir):
-    return W.tumbling_counts(load_table(spark, sf_dir, "events"))
-
-
-def _events_sliding(spark, sf_dir):
-    return W.sliding_counts(load_table(spark, sf_dir, "events"))
-
-
-def _events_sessions(spark, sf_dir):
-    return W.session_stats(load_table(spark, sf_dir, "events"))
-
-
-# ---------------------------------------------------------------------------
-# Round-3 curation operators (functions/curation.py)
-# ---------------------------------------------------------------------------
-
-
-def _dpo_pair_mining(spark, sf_dir):
-    """Preference-pair mining for DPO-style training data: per user,
-    (top-rated, bottom-rated) item with deterministic tie-breaks
-    (functions/curation.py::dpo_pair_mining)."""
-    return C.dpo_pair_mining(
-        R.interactions(spark, sf_dir, with_rating=True), min_margin=1.0
-    )
-
-
-def _stratified_metrics(spark, sf_dir):
-    return C.stratified_metrics(_docs(spark, sf_dir))
-
-
-def _doc_cooccurrence_pmi(spark, sf_dir):
-    return C.doc_cooccurrence_pmi(_docs(spark, sf_dir))
-
-
-def _entity_extract_stats(spark, sf_dir):
-    return C.entity_extract_stats(_docs(spark, sf_dir))
-
-
-def _seqlen_histogram(spark, sf_dir):
-    return C.seqlen_histogram(_docs(spark, sf_dir))
-
-
-def _tokenizer_fertility(spark, sf_dir):
-    return C.tokenizer_fertility(_docs(spark, sf_dir))
-
-
-def _loss_mask_spans(spark, sf_dir):
-    return C.loss_mask_spans(_docs(spark, sf_dir))
-
-
-def _curriculum_order(spark, sf_dir):
-    return C.curriculum_order(_docs(spark, sf_dir))
-
-
-def _curriculum_cuts(spark, sf_dir):
-    return C.curriculum_cuts(_docs(spark, sf_dir))
-
-
-def _zipf_fit(spark, sf_dir):
-    return C.zipf_fit(_docs(spark, sf_dir))
-
-
-def _psi_drift(spark, sf_dir):
-    """Value-distribution drift (PSI) per event_type between the first
-    and second half of the events time range
-    (operators/quality.py::psi_drift)."""
-    from recmetrics_pyspark_spark.operators import quality as QC
-
-    return QC.psi_drift(load_table(spark, sf_dir, "events"))
-
-
-def _cluster_eval(spark, sf_dir):
-    """Purity + NMI of the deterministic k-means cells against the
-    embeddings' label column (operators/similarity.py::cluster_eval) —
-    rides the memoized centroid table."""
-    return S.cluster_eval(_embs(spark, sf_dir), k=8, iters=2)
-
-
-def _association_rules(spark, sf_dir):
-    """Market-basket 2-itemset rules (support/confidence/lift) over the
-    shared co-occurrence pair tables
-    (operators/recommend.py::association_rules)."""
-    return R.association_rules(
-        R.interactions(spark, sf_dir), max_basket=MAX_BASKET
-    )
-
-
-def _item_exposure(spark, sf_dir):
-    """Rank-discounted exposure shares over the deterministic rec lists
-    (operators/recommend.py::item_exposure)."""
-    return R.item_exposure(_synth_recs(spark, sf_dir))
-
-
-def _calibration_kl(spark, sf_dir):
-    """Calibrated-recommendation audit: mean KL(p_rec || p_hist) over
-    the brand mix (operators/recommend.py::calibration_kl; Steck
-    2018)."""
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("item"), F.col("p_brand").alias("category")
-    )
-    return R.calibration_kl(
-        R.interactions(spark, sf_dir),
-        _synth_recs(spark, sf_dir),
-        part,
-    )
-
-
-def _serendipity(spark, sf_dir):
-    """Serendipity/unexpectedness vs the top-100 popularity baseline
-    (operators/recommend.py::serendipity_at_k)."""
-    return R.serendipity_at_k(
-        _synth_recs(spark, sf_dir),
-        R.interactions(spark, sf_dir),
-        k=10,
-        baseline_k=100,
-    )
-
-
-def _mmr_rerank(spark, sf_dir):
-    """MMR-diversified top-5 over the item-based candidate lists
-    (operators/recommend.py::mmr_rerank; Carbonell & Goldstein 1998).
-    Rides the persisted similarity table for both candidate scoring
-    and the diversity penalty; candidates come from the shared
-    _item_recs memo (the same frame the item_based_recommendations
-    query declares), not a re-derivation."""
-    inter = R.interactions(spark, sf_dir)
-    cands = _item_recs(spark, sf_dir)
-    sims = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    # symmetric=True (round 13): item_similarity_pairs IS the canonical
-    # ia<ib cosine table, so the operator probes it directly — half the
-    # candidate-pair generate, half the sims join side vs the previous
-    # 2x bidirectional union; values bit-identical (see mmr_rerank's
-    # contract note), oracle unchanged.
-    return R.mmr_rerank(cands, sims, k=5, lam=0.7, symmetric=True)
-
-
 def _mmr_oracle() -> str:
     # unrolled greedy stages: sel{t} accumulates picks; stage t scores
     # every remaining candidate by 0.7*rel - 0.3*max-sim-to-selected.
@@ -3061,507 +1034,6 @@ FROM ("""
     )
 
 
-def _popularity_concentration(spark, sf_dir):
-    """Gini / entropy / effective-catalog-size of item popularity
-    (operators/metrics.py::popularity_concentration)."""
-    return M.popularity_concentration(
-        R.interactions(spark, sf_dir), "user", "item"
-    )
-
-
-def _baseline_rmse(spark, sf_dir):
-    """Bias baseline predictor mu + b_u + b_i and its RMSE/MAE vs the
-    observed ratings (operators/recommend.py::baseline_predictor_rmse)."""
-    return R.baseline_predictor_rmse(
-        R.interactions(spark, sf_dir, with_rating=True)
-    )
-
-
-def _mad_outlier_docs(spark, sf_dir):
-    # the synthetic corpus has near-uniform lengths (max |score| 1.35),
-    # so the textbook 3.5 cutoff flags nothing; 1.2 keeps a real ~5%
-    # tail in the witnessed output (the unit test exercises 3.5 on a
-    # corpus with planted outliers)
-    return C.mad_outlier_docs(_docs(spark, sf_dir), cutoff=1.2)
-
-
-def _q_window_dedup_rank(spark, sf_dir):
-    """Keep-first-per-key dedup (the DISTINCT ON shape): the earliest
-    event per (user, event_type), then per-type survivor stats."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        "ts", "event_id"
-    )
-    first = ev.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
-    return (
-        first.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_first"),
-            F.round(F.avg("value"), 6).alias("avg_first_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def _freshness_decay_sample(spark, sf_dir):
-    """Freshness-weighted deterministic sampling: keep orders with
-    probability 0.5^age_years via the same 32-bit md5-prefix threshold
-    trick as balanced_sample (no RNG, no window; one broadcast of the
-    max-year row). Output: per-year achieved vs target rate."""
-    orders = load_table(spark, sf_dir, "orders")
-    yr = F.year("o_orderdate")
-    mx = orders.agg(F.max(yr).alias("max_year"))
-    u = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    keyed = orders.select(
-        yr.alias("o_year"), u.alias("u")
-    ).crossJoin(F.broadcast(mx))
-    rate = F.pow(F.lit(0.5), (F.col("max_year") - F.col("o_year")))
-    flagged = keyed.select(
-        "o_year",
-        "u",
-        F.floor(F.lit(4294967296.0) * rate).alias("u_threshold"),
-        F.round(rate, 6).alias("target_rate"),
-    )
-    return (
-        flagged.groupBy("o_year", "target_rate")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(
-                F.when(F.col("u") < F.col("u_threshold"), 1).otherwise(0)
-            ).cast("bigint").alias("n_kept"),
-        )
-        .select(
-            "o_year",
-            "n_orders",
-            "n_kept",
-            F.round(F.col("n_kept") / F.col("n_orders"), 6).alias(
-                "achieved_rate"
-            ),
-            "target_rate",
-        )
-        .orderBy("o_year")
-    )
-
-
-def _grouped_split(spark, sf_dir):
-    """Leakage-safe GROUP-level dataset split: every event of a user
-    lands in the same train/val/test bucket (split on md5(user_id),
-    not per-row — per-row splits leak user behavior across splits,
-    the classic recommender-eval mistake). Output proves the property:
-    per-split user/event counts plus a cross-split-user counter the
-    oracle pins at ZERO."""
-    ev = load_table(spark, sf_dir, "events")
-    u = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    split = (
-        F.when(u % 10 < 8, "train")
-        .when(u % 10 < 9, "val")
-        .otherwise("test")
-    )
-    tagged = ev.select("user_id", "event_id", split.alias("split"))
-    per_split = tagged.groupBy("split").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    leaked = (
-        tagged.groupBy("user_id")
-        .agg(F.countDistinct("split").alias("n_splits"))
-        .agg(
-            F.sum(F.when(F.col("n_splits") > 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("leaked_users")
-        )
-    )
-    return (
-        per_split.crossJoin(F.broadcast(leaked))
-        .select("split", "n_users", "n_events", "leaked_users")
-        .orderBy("split")
-    )
-
-
-def _attribution_linear(spark, sf_dir):
-    """Multi-touch LINEAR attribution: each purchase's value is split
-    equally across the user's clicks in the prior 2 hours (the
-    single-touch last-click twin is attribution_last_touch). One
-    range-bounded join on user_id + one purchase-scale aggregate +
-    one click-scale aggregate — never clicks × purchases beyond the
-    2-hour band. Output: per-user attributed value totals."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("p_id"),
-        F.col("ts").alias("p_ts"), F.col("value").alias("p_value"),
-    )
-    # band join: clicks within (p_ts - 2h, p_ts]
-    pairs = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (F.col("click_ts") <= F.col("p_ts"))
-        & (
-            F.expr("timestampdiff(MICROSECOND, click_ts, p_ts)")
-            <= 7200 * 1_000_000
-        ),
-    ).select(purchases.user_id, "p_id", "p_value", "click_id")
-    touch_counts = pairs.groupBy("p_id").agg(
-        F.count(F.lit(1)).alias("n_touches")
-    )
-    credited = pairs.join(touch_counts, "p_id").select(
-        "user_id",
-        "click_id",
-        (F.col("p_value") / F.col("n_touches")).alias("credit"),
-    )
-    return (
-        credited.groupBy("user_id")
-        .agg(
-            F.countDistinct("click_id").alias("n_credited_clicks"),
-            F.round(F.sum("credit"), 6).alias("attributed_value"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def _feature_binning(spark, sf_dir):
-    """Numeric feature binning both ways in one query: equi-WIDTH
-    (floor arithmetic over the broadcast [min,max] range — scan-side)
-    and equi-DEPTH (ntile quantile bins) for order totals, with per-bin
-    occupancy. Width bins are skew-visible (heavy bins), depth bins are
-    balanced by construction — the table a feature-engineering pass
-    reads before choosing. Depth binning is the documented-global-sort
-    exact twin; at 100 TB swap ntile for percentile-cut filters (the
-    balanced_sample trick)."""
-    from pyspark.sql.window import Window
-
-    orders = load_table(spark, sf_dir, "orders")
-    rng = orders.agg(
-        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
-    )
-    # explicit floor arithmetic rather than width_bucket: DuckDB lacks
-    # the function, and mirroring the exact expression on both sides
-    # guarantees identical float edge behavior
-    wb = orders.crossJoin(F.broadcast(rng)).select(
-        (
-            F.floor(
-                (F.col("o_totalprice") - F.col("lo"))
-                / ((F.col("hi") + 0.000001 - F.col("lo")) / 8.0)
-            )
-            + 1
-        ).cast("bigint").alias("width_bin"),
-        F.ntile(8)
-        .over(Window.orderBy("o_totalprice", "o_orderkey"))
-        .cast("bigint")
-        .alias("depth_bin"),
-        "o_totalprice",
-    )
-    width = wb.groupBy(F.col("width_bin").alias("bin")).agg(
-        F.count(F.lit(1)).alias("n_width"),
-        F.round(F.min("o_totalprice"), 6).alias("width_lo"),
-    )
-    depth = wb.groupBy(F.col("depth_bin").alias("bin")).agg(
-        F.count(F.lit(1)).alias("n_depth"),
-        F.round(F.min("o_totalprice"), 6).alias("depth_lo"),
-    )
-    return width.join(depth, "bin", "full_outer").orderBy("bin")
-
-
-def _freq_sketch_events(spark, sf_dir):
-    """Frequency-sketch surface (DataSketches frequent-items via
-    approx_top_k): estimated per-type event counts vs the exact
-    aggregate, with the estimates verified EQUAL here because the
-    tracker (maxItemsTracked=100) exceeds the distinct-type count — at
-    production cardinalities (items >> tracker) the same call degrades
-    gracefully per the frequent-items guarantee (true heavy hitters
-    survive, counts within εN). Output is the exact counts + a flag
-    the oracle pins TRUE."""
-    ev = load_table(spark, sf_dir, "events")
-    sk = ev.agg(
-        F.expr("approx_top_k(event_type, 5, 100)").alias("top")
-    ).select(
-        F.explode("top").alias("e")
-    ).select(
-        F.col("e.item").alias("event_type"),
-        F.col("e.count").alias("est_count"),
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-    return (
-        exact.join(sk, "event_type", "left")
-        .select(
-            "event_type",
-            "n_events",
-            (F.col("est_count") == F.col("n_events")).alias(
-                "sketch_within_bounds"
-            ),
-        )
-        .orderBy("event_type")
-    )
-
-
-def _curation_pipeline(spark, sf_dir):
-    """End-to-end corpus curation — the composition a training-data
-    run executes, as ONE declared query: exact-dedup survivors →
-    quality-score floor → deterministic per-lang hash-balancing (the
-    balanced_sample trick) → per-lang yield accounting with surviving
-    token mass. Every stage is an existing operator; the oracle chains
-    their SQL mirrors, so green proves the COMPOSITION, not just the
-    parts."""
-    docs = _docs(spark, sf_dir)
-    survivors = docs.join(
-        D.exact_dedup(docs).filter(~F.col("is_dup")).select("doc_id"),
-        "doc_id",
-    )
-    scored = survivors.join(T.quality_score(survivors), "doc_id").filter(
-        F.col("quality") >= 0.5
-    )
-    counts = scored.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    min_count = counts.agg(F.min("n").alias("min_n"))
-    thresholds = counts.crossJoin(F.broadcast(min_count)).select(
-        "lang",
-        F.floor(
-            F.lit(4294967296.0) * F.col("min_n") / F.col("n")
-        ).alias("u_threshold"),
-    )
-    key = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    kept = (
-        scored.withColumn("u", key)
-        .join(F.broadcast(thresholds), "lang")
-        .filter(F.col("u") < F.col("u_threshold"))
-    )
-    return (
-        kept.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.expr("size(split(text, ' '))")).cast("bigint").alias(
-                "n_tokens"
-            ),
-            F.round(F.avg("quality"), 6).alias("avg_quality"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _wau_hll_mergeable(spark, sf_dir):
-    """Mergeable-sketch weekly active users: per-DAY HLL sketches
-    (DataSketches, lgConfigK=12) unioned into weekly estimates — the
-    pattern that makes incremental distinct counts possible at 100 TB
-    (a day's sketch is built once from that day's events; the weekly
-    refresh unions 7 fixed-size sketches and never rescans raw).
-    SELF-CHECKING: the query also computes the exact weekly distinct
-    and returns it plus an in-bounds flag (HLL lgK=12 rsd ≈ 0.8%, flag
-    allows 5%); the oracle recomputes the exact count and pins the
-    flag TRUE."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
-    weekly_est = daily.groupBy(
-        F.date_trunc("week", F.col("d")).alias("week_start")
-    ).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
-    )
-    weekly_exact = ev.groupBy(
-        F.date_trunc("week", F.col("ts")).alias("week_start")
-    ).agg(F.countDistinct("user_id").alias("wau"))
-    ok = (
-        F.abs(F.col("est") - F.col("wau"))
-        <= 0.05 * F.col("wau")
-    )
-    return (
-        weekly_exact.join(weekly_est, "week_start")
-        .select("week_start", "wau", ok.alias("sketch_within_bounds"))
-        .orderBy("week_start")
-    )
-
-
-def _q_rollup_tree(spark, sf_dir):
-    """Hypertable-style rollup tree: weekly per-type stats derived
-    hour→day→week, each level aggregating ONLY the level below (the
-    materialized-view hierarchy a time-series store maintains — at
-    100 TB each refresh touches hour-scale rows, never raw events).
-    The ORACLE computes weekly directly from raw events, so a green
-    row PROVES the tree derivation equals the direct aggregate.
-    Only the final level rounds (intermediate rounding would compound
-    and diverge from the direct recompute)."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
-    )
-    daily = hourly.groupBy(
-        F.date_trunc("day", F.col("h")).alias("d"), "event_type"
-    ).agg(F.sum("n").alias("n"), F.sum("v").alias("v"))
-    weekly = daily.groupBy(
-        F.date_trunc("week", F.col("d")).alias("week_start"), "event_type"
-    ).agg(
-        F.sum("n").cast("bigint").alias("n_events"),
-        F.round(F.sum("v"), 6).alias("sum_value"),
-        F.count(F.lit(1)).cast("bigint").alias("n_days"),
-    )
-    return weekly.orderBy("week_start", "event_type")
-
-
-def _cross_lingual_contamination(spark, sf_dir):
-    """Docs whose min-shingle fingerprint (functions/text.py::
-    doc_fingerprint) collides across DIFFERENT languages — the
-    translated/transliterated near-dup leak a multilingual corpus has
-    to quarantine. One fingerprint scan + one fingerprint-scale
-    aggregate; langs joined into a sorted CSV string so the output is
-    deterministic and hash-comparable."""
-    docs = _docs(spark, sf_dir)
-    fp = T.doc_fingerprint(docs).join(
-        docs.select("doc_id", "lang"), "doc_id"
-    )
-    groups = (
-        fp.groupBy("shingle_fp")
-        .agg(
-            F.countDistinct("lang").alias("n_langs"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-            F.concat_ws(
-                ",", F.sort_array(F.collect_set("lang"))
-            ).alias("langs"),
-        )
-        .filter(F.col("n_langs") > 1)
-    )
-    return groups.select(
-        "shingle_fp", "n_langs", "n_docs", "min_doc", "langs"
-    )
-
-
-def _hard_negatives(spark, sf_dir):
-    """Contrastive-training hard-negative miner (operators/
-    similarity.py::hard_negative_mining): exact cosine top-10 among
-    DIFFERENT-label vectors for each of the 5 probe queries."""
-    embs = _embs(spark, sf_dir)
-    return S.hard_negative_mining(
-        embs, embs.filter(F.col("vec_id") < 5), k=10
-    )
-
-
-def _negative_sampling(spark, sf_dir):
-    """BPR/sampled-softmax negative candidate generator (operators/
-    recommend.py::negative_sampling): 5 deterministic non-interacted
-    items per user over the interactions item domain."""
-    return R.negative_sampling(R.interactions(spark, sf_dir), k=5)
-
-
-def _record_linkage_parts(spark, sf_dir):
-    """Entity-resolution candidate pairs over the part catalog
-    (operators/dedup.py::record_linkage_pairs): blocked on
-    (p_brand, first name token), Levenshtein-verified."""
-    part = load_table(spark, sf_dir, "part")
-    return D.record_linkage_pairs(
-        part, "p_partkey", "p_name", ["p_brand"], max_dist=12
-    )
-
-
-def _incremental_dedup(spark, sf_dir):
-    """Batch-vs-history dedup (operators/dedup.py::incremental_dedup):
-    docs with doc_id % 5 == 0 arrive as the new batch; the rest are
-    the accumulated corpus whose content hashes are already known."""
-    docs = _docs(spark, sf_dir)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    seen = docs.filter(F.col("doc_id") % 5 != 0).select(
-        F.md5(F.col("text")).alias("content_hash")
-    )
-    return D.incremental_dedup(batch, seen)
-
-
-def _ab_test_events(spark, sf_dir):
-    """Deterministic A/B readout over events (operators/
-    experiment.py::ab_test_analysis): md5-salted arm assignment on
-    user_id, per-user value sums, Welch t between arms."""
-    from recmetrics_pyspark_spark.operators.experiment import (
-        ab_test_analysis,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return ab_test_analysis(ev, "user_id", "value", salt="exp1")
-
-
-def _km_retention(spark, sf_dir):
-    """Kaplan-Meier churn curve over event activity lifetimes
-    (operators/experiment.py::km_survival): right-censored at a
-    14-day horizon before the corpus' last timestamp."""
-    from recmetrics_pyspark_spark.operators.experiment import km_survival
-
-    ev = load_table(spark, sf_dir, "events")
-    return km_survival(ev, "user_id", "ts", censor_horizon_days=14)
-
-
-def _holt_forecast_events(spark, sf_dir):
-    """Holt linear-trend smoothing of daily event value per type
-    (operators/timeseries.py::holt_forecast): the recurrence folds
-    array-locally per key — sequential in time, parallel in keys."""
-    from recmetrics_pyspark_spark.operators.timeseries import holt_forecast
-
-    ev = load_table(spark, sf_dir, "events")
-    return holt_forecast(
-        ev, "event_type", "ts", "value", alpha=0.5, beta=0.3, horizon=3
-    )
-
-
-def _cusum_changepoint_events(spark, sf_dir):
-    """CUSUM level-shift locator per event type (operators/
-    timeseries.py::cusum_changepoint): peak |cumulative deviation
-    from the mean| over the daily value series."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        cusum_changepoint,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return cusum_changepoint(ev, "event_type", "ts", "value")
-
-
-def _seasonal_profile_events(spark, sf_dir):
-    """ISO-weekday seasonality profile per event type (operators/
-    timeseries.py::seasonal_profile): mean daily value and weekly
-    share per dow."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        seasonal_profile,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    return seasonal_profile(ev, "event_type", "ts", "value")
-
-
-def _item_triangles(spark, sf_dir):
-    """Per-item triangle count + local clustering coefficient over the
-    co-occurrence graph (operators/graph.py::triangle_stats): degree-
-    ordered orientation bounds the wedge join at O(m^1.5). Rides the
-    persisted similarity pair table."""
-    from recmetrics_pyspark_spark.operators.graph import triangle_stats
-
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    return triangle_stats(pairs, "ia", "ib")
-
-
-def _bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer training over documents (functions/
-    bpe.py::bpe_train): 8 merge rounds, each one vocabulary-scale
-    pair aggregate + one-row argmax broadcast + scan-local greedy
-    merge application."""
-    from recmetrics_pyspark_spark.functions.bpe import bpe_train
-
-    return bpe_train(_docs(spark, sf_dir), "text", n_merges=8)
-
-
 def _bpe_oracle(n_merges: int = 8) -> str:
     # mirror bpe_train round by round: pair counts → deterministic
     # argmax → greedy merge application (three chained CTEs per round:
@@ -3625,1828 +1097,6 @@ s{r} AS (
         for r in range(1, n_merges + 1)
     )
     return "".join(parts) + "\n" + unions
-
-
-def _qa_eval_docs(spark, sf_dir):
-    """SQuAD-style EM/token-F1 per example (functions/evals.py::
-    qa_token_f1): predictions = first 8 tokens of each doc,
-    references = tokens 4-11 — deterministic partial overlap."""
-    from recmetrics_pyspark_spark.functions.evals import qa_token_f1
-
-    docs = _docs(spark, sf_dir)
-    t = docs.select(
-        "doc_id",
-        F.expr("array_join(slice(split(text, ' '), 1, 8), ' ')").alias(
-            "pred"
-        ),
-        F.expr("array_join(slice(split(text, ' '), 4, 8), ' ')").alias(
-            "ref"
-        ),
-    )
-    return qa_token_f1(t, "doc_id", "pred", "ref")
-
-
-def _rouge2_eval_docs(spark, sf_dir):
-    """ROUGE-2 per example (functions/evals.py::rouge_n): candidates
-    = first 12 tokens of each doc, references = tokens 7-18 —
-    deterministic partial overlap, so precision/recall/F1 spread
-    across the whole [0, 1] range. Scan-local array lambdas, zero
-    shuffles."""
-    from recmetrics_pyspark_spark.functions.evals import rouge_n
-
-    docs = _docs(spark, sf_dir)
-    t = docs.select(
-        "doc_id",
-        F.expr("array_join(slice(split(text, ' '), 1, 12), ' ')").alias(
-            "pred"
-        ),
-        F.expr("array_join(slice(split(text, ' '), 7, 12), ' ')").alias(
-            "ref"
-        ),
-    )
-    return rouge_n(t, "doc_id", "pred", "ref", n=2)
-
-
-def _nb_source_classifier(spark, sf_dir):
-    """GPT-3-style quality classifier (functions/curation.py::
-    nb_quality_classifier): multinomial Naive Bayes trained in one
-    aggregation pass with sources src0-src3 as the 'curated' positive
-    class, then every document scored by its smoothed log-odds.
-    Token-grain + doc-grain shuffles only; the vocabulary-scale LLR
-    table broadcasts."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_quality_classifier,
-    )
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    return nb_quality_classifier(docs, "is_hq")
-
-
-def _nb_score_holdout(spark, sf_dir):
-    """Train-offline / score-online NB split (functions/curation.py::
-    nb_train + nb_score): the model is trained on the 80% of
-    documents with doc_id % 5 != 0 and scores the held-out 20% —
-    out-of-vocabulary tokens take the model's constant unseen_llr9,
-    driver-pinning the Laplace fallback path the in-corpus classifier
-    never exercises."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    return nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
-
-
-def _nb_holdout_eval(spark, sf_dir):
-    """Classifier quality report (functions/evals.py::
-    classifier_eval) over the nb_score_holdout pipeline: confusion
-    matrix at threshold 0, precision/recall/F1, and tie-aware
-    rank-sum ROC AUC of the held-out 20% against their true source
-    labels — the evaluate stage of train -> score -> evaluate."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
-    from recmetrics_pyspark_spark.functions.evals import (
-        classifier_eval,
-    )
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
-    labeled = scored.join(
-        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
-        "doc_id",
-    )
-    return classifier_eval(labeled, "y", "nb_log_odds")
-
-
-def _ccnet_perplexity_buckets(spark, sf_dir):
-    """CCNet head/middle/tail perplexity bucketing
-    (functions/curation.py::ccnet_perplexity_buckets): tercile
-    cutoffs over the in-corpus bigram perplexity, md5-bucket keep
-    decisions at rates 1.0/0.5/0.1 — the Wenzek et al. 2020 filter
-    step as one declared query."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        ccnet_perplexity_buckets,
-    )
-
-    return ccnet_perplexity_buckets(_docs(spark, sf_dir))
-
-
-def _excess_surprisal_docs(spark, sf_dir):
-    """Reference-model selection signal (functions/text.py::
-    excess_surprisal): every non-src0 document scored under its own
-    corpus's unigram LM minus the src0 reference LM — the RHO-loss /
-    DoReMi-family 'learnable and not yet learned' ranking at unigram
-    grain; union-vocabulary Laplace smoothing on both sides."""
-    from recmetrics_pyspark_spark.functions.text import (
-        excess_surprisal,
-    )
-
-    docs = _docs(spark, sf_dir)
-    return excess_surprisal(
-        docs.filter(F.col("source") != "src0"),
-        docs.filter(F.col("source") == "src0"),
-    )
-
-
-def _nb_calibration_bins(spark, sf_dir):
-    """Reliability diagram + ECE (functions/evals.py::
-    calibration_bins) of the NB holdout scores: log-odds squashed
-    through a sigmoid pre-rounded to 9 decimals (so binning agrees
-    across engines), fixed-width decile bins, N-weighted |gap| ECE —
-    the calibration half of the classifier report."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
-    from recmetrics_pyspark_spark.functions.evals import (
-        calibration_bins,
-    )
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
-    labeled = scored.join(
-        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
-        "doc_id",
-    ).withColumn(
-        "p", F.round(1.0 / (1.0 + F.exp(-F.col("nb_log_odds"))), 9)
-    )
-    return calibration_bins(labeled, "y", "p")
-
-
-def _pass_at_k_items(spark, sf_dir):
-    """Unbiased pass@k per part (functions/evals.py::pass_at_k):
-    n = purchases capped at 10, c = returned among them."""
-    from recmetrics_pyspark_spark.functions.evals import pass_at_k
-
-    li = load_table(spark, sf_dir, "lineitem")
-    n = F.least(F.count(F.lit(1)), F.lit(10))
-    per = li.groupBy(F.col("l_partkey").alias("task")).agg(
-        n.alias("n"),
-        F.least(
-            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)),
-            n,
-        ).alias("c"),
-    )
-    return pass_at_k(per, "task", "n", "c", ks=(1, 5))
-
-
-def _rolling_origin_cv(spark, sf_dir):
-    """Rolling-origin CV fold audit over orders (functions/
-    curation.py::rolling_origin_folds): 3 forward-chaining folds on
-    o_orderdate, row + revenue totals per (fold, split)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return C.rolling_origin_folds(
-        orders, "o_orderdate", n_folds=3, value_col="o_totalprice"
-    )
-
-
-def _user_behavior_entropy(spark, sf_dir):
-    """Per-user Shannon entropy of the item distribution
-    (operators/metrics.py::user_behavior_entropy): top-20 most diverse
-    users over the shared interactions table; DECIMAL-exact
-    contribution sums rank-stable across engines."""
-    return M.user_behavior_entropy(R.interactions(spark, sf_dir))
-
-
-def _ucb_arm_stats(spark, sf_dir):
-    """Batch UCB1 bandit readout over events
-    (operators/experiment.py::ucb_arm_stats): 4 md5-salted arms,
-    pulls/mean reward/UCB1 index per arm; one arm-keyed aggregate,
-    N via an arm-scale window — zero driver actions."""
-    from recmetrics_pyspark_spark.operators.experiment import ucb_arm_stats
-
-    ev = load_table(spark, sf_dir, "events")
-    return ucb_arm_stats(ev, "user_id", "value", salt="bandit1", n_arms=4)
-
-
-def _item_trend_slope(spark, sf_dir):
-    """Top-20 steepest-rising parts by OLS slope of daily order-line
-    counts (operators/timeseries.py::trend_slope_topk): exact BIGINT
-    Σx/Σy/Σxy/Σx² per part, one closed-form division."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        trend_slope_topk,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    daily = li.join(orders, li.l_orderkey == orders.o_orderkey)
-    return trend_slope_topk(daily, "l_partkey", "o_orderdate")
-
-
-def _prefix_dedup(spark, sf_dir):
-    """Shared-prefix boilerplate groups over documents
-    (operators/dedup.py::prefix_dedup): first-4-token md5 groups with
-    ≥2 docs, keeper + distinct-source counts, one hash-keyed
-    aggregate."""
-    return D.prefix_dedup(_docs(spark, sf_dir), k_tokens=4)
-
-
-def _ngram_novelty_by_source(spark, sf_dir):
-    """Per-source first-seen 3-gram novelty
-    (operators/dedup.py::ngram_novelty_by_source): fraction of
-    shingles each doc introduces (min-doc-id credit), averaged per
-    source over the shared shingle table."""
-    return D.ngram_novelty_by_source(_docs(spark, sf_dir))
-
-
-def _repurchase_intervals(spark, sf_dir):
-    """Per-part repurchase cadence (operators/funnel.py::
-    repurchase_intervals): day gaps between a customer's consecutive
-    purchases of the same part; top-20 parts by repurchase volume
-    with exact mean and interpolated median gaps."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        repurchase_intervals,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    purchases = li.join(orders, li.l_orderkey == orders.o_orderkey)
-    return repurchase_intervals(
-        purchases, col_user="o_custkey", col_item="l_partkey",
-        col_date="o_orderdate",
-    )
-
-
-def _daily_acf_events(spark, sf_dir):
-    """Lag-1..7 autocorrelation of the daily event-count series
-    (operators/timeseries.py::daily_autocorrelation): corpus collapses
-    to day grain; lag pairing is a ×7 explode equi-join, never a
-    date-range self-join; DECIMAL-exact cross-product sums."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        daily_autocorrelation,
-    )
-
-    return daily_autocorrelation(load_table(spark, sf_dir, "events"))
-
-
-def _cohort_ltv(spark, sf_dir):
-    """Weekly-cohort cumulative revenue / LTV curve
-    (operators/funnel.py::cohort_ltv): revenue collapses to
-    (user, week) grain before the cohort join; DECIMAL running sums."""
-    from recmetrics_pyspark_spark.operators.funnel import cohort_ltv
-
-    out = cohort_ltv(load_table(spark, sf_dir, "events"))
-    return out.withColumn(
-        "cohort_week", F.col("cohort_week").cast("string")
-    )
-
-
-def _ab_power_mde(spark, sf_dir):
-    """Minimum detectable effect at 80% power for the running A/B
-    (operators/experiment.py::ab_power_mde): one unit aggregate, one
-    2-row arm aggregate, one-row output."""
-    from recmetrics_pyspark_spark.operators.experiment import ab_power_mde
-
-    return ab_power_mde(
-        load_table(spark, sf_dir, "events"), "user_id", "value",
-        salt="exp1",
-    )
-
-
-def _benford_order_totals(spark, sf_dir):
-    """Benford first-digit audit of order totals
-    (operators/quality.py::benford_deviation): digit from the STRING
-    form (no log-floor boundary hazard); 9-row output."""
-    from recmetrics_pyspark_spark.operators.quality import (
-        benford_deviation,
-    )
-
-    return benford_deviation(
-        load_table(spark, sf_dir, "orders"), "o_totalprice"
-    )
-
-
-def _k_anonymity_customers(spark, sf_dir):
-    """k-anonymity audit of the (nation, market-segment)
-    quasi-identifier projection (operators/quality.py::
-    k_anonymity_audit): one groupBy + one-row class-size reduction."""
-    from recmetrics_pyspark_spark.operators.quality import (
-        k_anonymity_audit,
-    )
-
-    return k_anonymity_audit(
-        load_table(spark, sf_dir, "customer"),
-        ["c_nationkey", "c_mktsegment"],
-        k=5,
-    )
-
-
-def _attribution_time_decay(spark, sf_dir):
-    """Multi-touch TIME-DECAY attribution: each purchase's value splits
-    across the user's prior-2h clicks with half-life-30min exponential
-    weights (recency-weighted twin of attribution_linear's equal
-    split). Same band join; weights pre-rounded to DECIMAL(18,9), and
-    per-pair credits to DECIMAL(18,6), so the per-user totals are
-    partial-aggregation-order independent."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("p_id"),
-        F.col("ts").alias("p_ts"), F.col("value").alias("p_value"),
-    )
-    pairs = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (F.col("click_ts") <= F.col("p_ts"))
-        & (
-            F.expr("timestampdiff(MICROSECOND, click_ts, p_ts)")
-            <= 7200 * 1_000_000
-        ),
-    ).select(
-        purchases.user_id, "p_id", "p_value", "click_id",
-        F.expr(
-            "CAST(round(power(0.5, timestampdiff(MICROSECOND, click_ts,"
-            " p_ts) / 60e6 / 30.0), 9) AS DECIMAL(18,9))"
-        ).alias("w"),
-    )
-    wsum = pairs.groupBy("p_id").agg(F.sum("w").alias("sw"))
-    credited = pairs.join(wsum, "p_id").select(
-        "user_id",
-        "click_id",
-        F.expr(
-            "CAST(round(p_value * (CAST(w AS DOUBLE)"
-            " / CAST(sw AS DOUBLE)), 6) AS DECIMAL(18,6))"
-        ).alias("credit"),
-    )
-    return (
-        credited.groupBy("user_id")
-        .agg(
-            F.countDistinct("click_id").alias("n_credited_clicks"),
-            F.round(F.sum("credit").cast("double"), 6).alias(
-                "attributed_value"
-            ),
-        )
-        .orderBy("user_id")
-    )
-
-
-def _centroid_distances(spark, sf_dir):
-    """Pairwise label-centroid distances
-    (operators/similarity.py::centroid_distances): between-class
-    separation over the label×dimension centroid table."""
-    return S.centroid_distances(_embs(spark, sf_dir))
-
-
-def _heaps_law_docs(spark, sf_dir):
-    """Vocabulary growth curve + Heaps β
-    (functions/text.py::heaps_law_points): cumulative tokens vs
-    cumulative vocabulary at 10 doc-id cutoffs from ONE pass (token
-    first-seen buckets), log-log OLS fit."""
-    return T.heaps_law_points(_docs(spark, sf_dir))
-
-
-# the k every declared k-core query peels at; the convergence guard's
-# fallback must rebuild with the SAME k (tests override it to drive
-# adversarial graphs through the guard)
-_KCORE_K = 3
-
-
-def _kcore_core(spark, sf_dir):
-    """The 3-core peel OUTPUT (node, degree, converged), a shared build
-    per (application, sf_dir) — the _bt_chain doctrine applied to the
-    k-core twins: kcore_items (fixed 8 rounds) and
-    kcore_items_converged (peel-to-fixed-point) produce the identical
-    table on every declared corpus — the peel converges within 8
-    rounds (property-pinned by test_kcore_peel_idempotent_past_
-    convergence) and BOTH queries are checked against the same
-    fixed-8-round oracle CTE (_kcore_oracle) — yet each ran its own
-    ~8-round peel loop (per-round localCheckpoints never canonicalize
-    equal across calls; round-12 within-probe A/B: the second peel
-    cost 4.7-5.6 s at sf0.1). The build runs ONE fixed-8-round peel
-    (the mode whose round count the shared oracle mirrors exactly;
-    its convergence WITNESS covers the until_converged exit — an
-    unchanged final round IS the fixed point) and both queries read
-    it. The until_converged loop-exit machinery stays pinned by
-    tests/test_round12_ops.py::test_kcore_memo_matches_fresh_converged
-    (fresh until_converged run == shared table) and the round-6
-    property test. Node-grain frame."""
-    return _shared(
-        spark, sf_dir, "kcore",
-        lambda: _kcore_peel(spark, sf_dir, rounds=8).localCheckpoint(
-            eager=True
-        ),
-    )
-
-
-def _kcore_peel(spark, sf_dir, **peel):
-    """k_core_decompose at _KCORE_K over the item co-occurrence graph
-    (the persisted item-pair table over the shared interactions)."""
-    from recmetrics_pyspark_spark.operators.graph import k_core_decompose
-
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    return k_core_decompose(pairs, k=_KCORE_K, **peel)
-
-
-def _kcore_items(spark, sf_dir):
-    """3-core of the item co-occurrence graph
-    (operators/graph.py::k_core_decompose): 8 synchronous peels over
-    the persisted item-pair table; surviving (node, degree) rows —
-    the dense-community extractor. Reads the _kcore_core session
-    memo shared with kcore_items_converged."""
-    return _kcore_core(spark, sf_dir)
-
-
-def _kcore_items_converged(spark, sf_dir):
-    """k_core_decompose's opt-in ``until_converged=True`` mode over
-    the same 3-core input as kcore_items. CONTRACT (round-13, verdict
-    item 5): this query may read the _kcore_core shared build ONLY
-    while its fixed-8 peel carries a true ``converged``
-    witness — on every declared corpus it does (convergence within 8
-    rounds is property-pinned by test_kcore_peel_idempotent_past_
-    convergence, and then the fixed-8 table IS the fixed point this
-    mode must land on, bit-identically). On an adversarial graph
-    (a long path needs ~n/2 peels) the witness is false and the
-    shared table is a SUPERSET of the true core — the guard below
-    detects that and serves a real until-converged peel instead,
-    itself a shared build (eagerly localCheckpointed, like
-    _kcore_core) so repeated calls peel once. The happy-path cost is
-    one head(1) over the checkpointed node-grain table (the
-    established size-guard-count convention); guard behavior pinned
-    both ways in tests/test_round13_ops.py, shared-vs-fresh equality
-    in tests/test_round12_ops.py."""
-    out = _kcore_core(spark, sf_dir)
-    if out.filter(~F.col("converged")).head(1):
-        return _shared(
-            spark, sf_dir, "kcore_converged",
-            lambda: _kcore_peel(
-                spark, sf_dir, until_converged=True
-            ).localCheckpoint(eager=True),
-        )
-    return out
-
-
-def _corpus_entropy(spark, sf_dir):
-    """Unigram/bigram/conditional entropy rates of the document token
-    stream (functions/text.py::corpus_entropy_rates): DECIMAL-exact
-    contribution sums, one-row output."""
-    return T.corpus_entropy_rates(_docs(spark, sf_dir))
-
-
-def _seasonal_decompose_events(spark, sf_dir):
-    """Additive trend/seasonal/residual decomposition of daily
-    purchase revenue (operators/timeseries.py::
-    seasonal_decompose_daily): centered-7-day DECIMAL trend, ISO-dow
-    seasonal means, per-day residuals."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        seasonal_decompose_daily,
-    )
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    return seasonal_decompose_daily(ev)
-
-
-def _pq_distortion(spark, sf_dir):
-    """PQ reconstruction-error report per subspace
-    (operators/similarity.py::pq_distortion): mean/max squared
-    assignment distance from the memoized codebooks — the compression
-    quality behind pq_ann_topk's estimates."""
-    return S.pq_distortion(_embs(spark, sf_dir))
-
-
-def _shipping_sla_compliance(spark, sf_dir):
-    """Order-to-ship SLA compliance per order priority: line counts,
-    share shipped within 7 days, exact mean lag and interpolated p90 —
-    one fact join + one priority-scale aggregate (integer lags, single
-    double divisions)."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_shipdate"
-    )
-    j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-        "o_orderpriority",
-        F.datediff("l_shipdate", "o_orderdate").cast("bigint").alias(
-            "lag"
-        ),
-    )
-    return (
-        j.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
-            F.round(
-                F.sum(
-                    F.when(F.col("lag") <= 7, 1).otherwise(0)
-                ).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("pct_within_7d"),
-            F.round(
-                F.sum("lag").cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_lag_days"),
-            F.expr("percentile(lag, 0.9)").alias("p90_lag_days"),
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-def _source_divergence(spark, sf_dir):
-    """Pairwise Jensen-Shannon divergence between sources' smoothed
-    unigram distributions (functions/curation.py::source_divergence):
-    the mixture-balance diagnostic, one number per source pair."""
-    return C.source_divergence(_docs(spark, sf_dir))
-
-
-def _session_summary(spark, sf_dir):
-    """One-row session KPI header (operators/funnel.py::
-    session_summary): session count, events/session, bounce rate,
-    mean + median duration over 30-min-gap sessionization."""
-    from recmetrics_pyspark_spark.operators.funnel import session_summary
-
-    return session_summary(load_table(spark, sf_dir, "events"))
-
-
-def _degree_distribution(spark, sf_dir):
-    """Degree histogram + power-law alpha of the item co-occurrence
-    graph (operators/graph.py::degree_distribution): the hub-structure
-    readout behind the wedge caps."""
-    from recmetrics_pyspark_spark.operators.graph import (
-        degree_distribution,
-    )
-
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    return degree_distribution(pairs)
-
-
-def _gmv_mtd_report(spark, sf_dir):
-    """Daily GMV with month-to-date running totals and same-day
-    month-over-month ratios (operators/timeseries.py::gmv_mtd_report)
-    over the trailing 120 days of orders; DECIMAL sums throughout."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        gmv_mtd_report,
-    )
-
-    return gmv_mtd_report(load_table(spark, sf_dir, "orders"))
-
-
-def _catalog_freshness(spark, sf_dir):
-    """Weekly new-item interaction share (operators/recommend.py::
-    catalog_freshness): cold-start pressure per week from each item's
-    introduction week."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    timed = li.join(orders, li.l_orderkey == orders.o_orderkey)
-    return R.catalog_freshness(
-        timed, col_item="l_partkey", col_time="o_orderdate"
-    )
-
-
-def _lsh_parameter_plan(spark, sf_dir):
-    """MinHash-LSH banding planner (operators/dedup.py::
-    lsh_parameter_plan): S-curve thresholds and capture probabilities
-    per (bands, rows) configuration — pure closed-form math."""
-    return D.lsh_parameter_plan(spark)
-
-
-def _user_lifecycle_stages(spark, sf_dir):
-    """Weekly growth accounting (operators/funnel.py::
-    user_lifecycle_stages): new / retained / resurrected / churned
-    user counts per week at user-week grain."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        user_lifecycle_stages,
-    )
-
-    return user_lifecycle_stages(load_table(spark, sf_dir, "events"))
-
-
-def _revenue_concentration(spark, sf_dir):
-    """Customer revenue Pareto (operators/funnel.py::
-    revenue_concentration): top-1%/10%/20%/50% customer revenue shares
-    via percentile thresholds — no global sort."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        revenue_concentration,
-    )
-
-    return revenue_concentration(load_table(spark, sf_dir, "orders"))
-
-
-def _embedding_outliers(spark, sf_dir):
-    """Top-20 far-from-centroid embeddings (operators/similarity.py::
-    embedding_outliers): global-centroid distance screen, exact
-    DECIMAL deviation sums."""
-    return S.embedding_outliers(_embs(spark, sf_dir))
-
-
-def _scd2_customer_priority(spark, sf_dir):
-    """Type-2 SCD build (operators/cdc.py::scd2_history): customer
-    order-priority history as half-open validity intervals — change
-    runs collapse, same-day ties break by max order key."""
-    from recmetrics_pyspark_spark.operators.cdc import scd2_history
-
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "od", F.col("o_orderdate").cast("date")
-    )
-    return scd2_history(
-        orders, "o_custkey", "o_orderpriority", "od", "o_orderkey"
-    )
-
-
-def _join_size_lineitem_part(spark, sf_dir):
-    """Join-cardinality pre-flight (operators/skew.py::
-    join_size_report): exact output size and top skew keys for the
-    lineitem ⋈ lineitem self-join on l_partkey — the pair-table
-    blowup predictor."""
-    from recmetrics_pyspark_spark.operators.skew import (
-        join_size_report,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return join_size_report(li, li, "l_partkey", "l_partkey", top_k=10)
-
-
-def _token_budget_plan(spark, sf_dir):
-    """Training-mixture allocator (functions/curation.py::
-    token_budget_plan): equal-weight token budget split across
-    sources with keep rates and epoch factors."""
-    return C.token_budget_plan(
-        load_table(spark, sf_dir, "documents"), 1_000_000
-    )
-
-
-def _temperature_mixture_plan(spark, sf_dir):
-    """Temperature-scaled mixture allocator (functions/curation.py::
-    temperature_mixture_plan): the GPT-3 / XLM-R T=0.7 flattening of
-    natural source shares — w_i = p_i^0.7 / Σ p_j^0.7 — with per-
-    source allocations, keep rates, and epoch factors over a 10M
-    token budget."""
-    return C.temperature_mixture_plan(
-        load_table(spark, sf_dir, "documents"), 10_000_000, 0.7
-    )
-
-
-def _bot_activity_flags(spark, sf_dir):
-    """Bot/abuse screen (operators/funnel.py::bot_activity_flags):
-    per-user sustained rate + max 10-second burst over the event
-    stream, with inhuman-activity flags."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        bot_activity_flags,
-    )
-
-    return bot_activity_flags(load_table(spark, sf_dir, "events"))
-
-
-def _theil_sen_orders(spark, sf_dir):
-    """Robust daily-revenue trend (operators/timeseries.py::
-    theil_sen_trend): median of pairwise day slopes over the last 120
-    days — the outlier-proof companion to the OLS trend."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        theil_sen_trend,
-    )
-
-    return theil_sen_trend(
-        load_table(spark, sf_dir, "orders"),
-        "o_orderdate",
-        "o_totalprice",
-    )
-
-
-def _seasonal_anomaly_days(spark, sf_dir):
-    """Weekday-adjusted volume anomalies (operators/timeseries.py::
-    seasonal_residual_anomalies): days whose residual vs their
-    day-of-week mean exceeds 2 robust (MAD) sigmas."""
-    from recmetrics_pyspark_spark.operators.timeseries import (
-        seasonal_residual_anomalies,
-    )
-
-    return seasonal_residual_anomalies(
-        load_table(spark, sf_dir, "events"), "ts", z_threshold=2.0
-    )
-
-
-def _peak_concurrency(spark, sf_dir):
-    """Peak simultaneous sessions per day (operators/funnel.py::
-    peak_concurrency): day-partitioned +1/−1 sweep over sessionized
-    event intervals, exact microsecond arithmetic."""
-    from recmetrics_pyspark_spark.operators.funnel import (
-        peak_concurrency,
-    )
-
-    return peak_concurrency(load_table(spark, sf_dir, "events"))
-
-
-def _docs_with_urls(spark, sf_dir):
-    """Documents with a DETERMINISTIC synthetic URL column (the
-    testdata has no URL grain): ~50 registrable domains with a
-    quadratically skewed size distribution (site index =
-    floor(sqrt(doc_id % 625)), so domain k holds ~2k+1 of every 625
-    docs), an occasional ``news.`` subdomain (doc_id % 7 — exercises
-    label stripping), and a co.uk share (doc_id % 3 — exercises the
-    multi-part-suffix rule). Mirrored VERBATIM in the oracle ``u``
-    CTE (_DOMAIN_PROLOGUE); sqrt is IEEE-exact so floor(sqrt(·)) is
-    engine-identical."""
-    docs = load_table(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit("news.")).otherwise(
-            F.lit("")
-        ),
-        F.lit("site"),
-        F.floor(F.sqrt((F.col("doc_id") % 625).cast("double")))
-        .cast("int")
-        .cast("string"),
-        F.lit("."),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("co.uk")).otherwise(
-            F.lit("com")
-        ),
-        F.lit("/p/"),
-        F.col("doc_id").cast("string"),
-    )
-    return docs.withColumn("url", url)
-
-
-def _domain_mix_stats(spark, sf_dir):
-    """Top-20 registrable domains by doc count + an (other) residual
-    row, with doc/char shares and cumulative doc share
-    (functions/curation.py::domain_mix_stats over the synthetic-URL
-    documents)."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        domain_mix_stats,
-    )
-
-    return domain_mix_stats(
-        _docs_with_urls(spark, sf_dir), "url", "n_chars", top_k=20
-    )
-
-
-def _domain_cap_sample(spark, sf_dir):
-    """Per-registrable-domain document cap: ≤ 10 docs per domain by
-    deterministic md5(domain:id) hash order
-    (functions/curation.py::domain_cap_sample over the synthetic-URL
-    documents)."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        domain_cap_sample,
-    )
-
-    return domain_cap_sample(
-        _docs_with_urls(spark, sf_dir), "url", "doc_id",
-        max_per_domain=10,
-    )
-
-
-def _docs_with_messy_urls(spark, sf_dir):
-    """Documents with a DETERMINISTIC synthetic MESSY URL column:
-    consecutive doc pairs (2k, 2k+1) fetch the same page
-    (path /p/(doc_id div 2)) but through different surface noise —
-    www. prefix on odd ids, explicit :443 on id%11, trailing slash on
-    id%5, a utm_source tracking param on odd ids, unsorted param order
-    on all, #fragment on id%7 — so url_canonicalize must collapse each
-    pair to one key. Mirrored VERBATIM in the canonical_url_dups
-    oracle's ``u`` CTE."""
-    docs = load_table(spark, sf_dir, "documents")
-    page = F.expr("doc_id div 2").cast("string")
-    url = F.concat(
-        F.lit("https://"),
-        F.when(F.col("doc_id") % 2 == 1, F.lit("www.")).otherwise(
-            F.lit("")
-        ),
-        F.lit("site"),
-        F.expr("(doc_id div 2) % 50").cast("string"),
-        F.when(
-            F.expr("(doc_id div 2) % 3 = 0"), F.lit(".co.uk")
-        ).otherwise(F.lit(".com")),
-        F.when(F.col("doc_id") % 11 == 0, F.lit(":443")).otherwise(
-            F.lit("")
-        ),
-        F.lit("/p/"),
-        page,
-        F.when(F.col("doc_id") % 5 == 0, F.lit("/")).otherwise(
-            F.lit("")
-        ),
-        F.when(
-            F.col("doc_id") % 2 == 1,
-            F.lit("?utm_source=feed&b=2&a=1"),
-        ).otherwise(F.lit("?b=2&a=1")),
-        F.when(F.col("doc_id") % 7 == 0, F.lit("#f")).otherwise(
-            F.lit("")
-        ),
-    )
-    return docs.withColumn("url", url)
-
-
-def _canonical_url_dups(spark, sf_dir):
-    """URL-identity dedup table over the messy synthetic URLs
-    (functions/curation.py::canonical_url_dups): canonicalization
-    must collapse every (2k, 2k+1) fetch pair — tracking params,
-    www/port/slash/fragment noise, param order — to one key."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        canonical_url_dups,
-    )
-
-    return canonical_url_dups(
-        _docs_with_messy_urls(spark, sf_dir), "doc_id", "url",
-        min_variants=2,
-    )
-
-
-def _domain_neardup_rates(spark, sf_dir):
-    """Per-registrable-domain near-dup pressure
-    (functions/curation.py::domain_neardup_rates): MinHash+LSH pairs
-    joined to the domain grain, counting within-domain pairs only.
-    The pair table is handed in PRE-BUILT from the same bare
-    (doc_id, text) projection the minhash_lsh_pairs canary persists —
-    deriving it from the url-augmented frame is a different
-    canonicalized plan, so the session cache silently missed and the
-    whole LSH chain re-ran (measured +8.5 s at sf0.1)."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        domain_neardup_rates,
-    )
-
-    pairs = D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
-    return domain_neardup_rates(
-        _docs_with_urls(spark, sf_dir), "doc_id", "text", "url",
-        threshold=0.1, pairs=pairs,
-    )
-
-
-def _gopher_quality_flags(spark, sf_dir):
-    """Gopher-rules quality gate over documents (functions/text.py::
-    gopher_quality_flags, Rae et al. 2021 A1.1): per-rule booleans +
-    the composite keep decision — the standard CommonCrawl pre-filter
-    as a tunable flag table."""
-    from recmetrics_pyspark_spark.functions.text import (
-        gopher_quality_flags,
-    )
-
-    return gopher_quality_flags(load_table(spark, sf_dir, "documents"))
-
-
-def _c4_clean(spark, sf_dir):
-    """C4 line-level cleaner (functions/text.py::c4_clean) over
-    synthetic pages built deterministically from doc_id + text (the
-    corpus itself is single-line and punctuation-free, so the page
-    builder — mirrored VERBATIM in the oracle's ``u`` CTE — plants
-    kept/dropped lines, varying sentence counts, and lorem/brace
-    tells): line-ending punctuation + min-words retention, sentence
-    minimum, placeholder/code page kills."""
-    from recmetrics_pyspark_spark.functions.text import c4_clean
-
-    docs = load_table(spark, sf_dir, "documents")
-    nl = F.lit("\n")
-    page = F.concat(
-        F.concat(F.lit("Intro sentence number "),
-                 F.col("doc_id").cast("string"), F.lit(".")),
-        nl,
-        F.when(F.col("doc_id") % 3 == 0, F.lit("short.")).otherwise(
-            F.lit("This kept line has plenty of words.")
-        ),
-        nl,
-        F.concat(F.lit("no terminal punct here "),
-                 F.substring(F.col("text"), 1, 20)),
-        nl,
-        F.when(
-            F.col("doc_id") % 2 == 0,
-            F.lit("One more. And another! Plus a third? Then four."
-                  " Finally five."),
-        ).otherwise(F.lit("Just one more here.")),
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(nl, F.lit("Filler Lorem Ipsum paragraph.")),
-        ).otherwise(F.lit("")),
-        F.when(
-            F.col("doc_id") % 11 == 0,
-            F.concat(nl, F.lit("Contains a { brace in code.")),
-        ).otherwise(F.lit("")),
-    )
-    pages = docs.select("doc_id", page.alias("text"))
-    return c4_clean(pages)
-
-
-def _corpus_datacard(spark, sf_dir):
-    """Per-source corpus data card (functions/text.py::corpus_datacard):
-    volumes, mean doc length, language mix, DECIMAL-exact mean quality,
-    exact-duplicate pressure — one row per source."""
-    from recmetrics_pyspark_spark.functions.text import corpus_datacard
-
-    return corpus_datacard(load_table(spark, sf_dir, "documents"))
-
-
-def _ngram_decontaminate(spark, sf_dir):
-    """Cross-corpus eval decontamination
-    (operators/dedup.py::ngram_decontaminate): the src0 documents play
-    the benchmark/eval corpus, every other source is the train corpus;
-    word-5-gram collisions flag contaminated train docs (k=5 keeps the
-    synthetic corpus's collision set non-trivial at every SF — the
-    operator's production default is the GPT-3-style k=13)."""
-    from recmetrics_pyspark_spark.operators.dedup import (
-        ngram_decontaminate,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
-    tr = docs.filter(F.col("source") != "src0").select("doc_id", "text")
-    return ngram_decontaminate(tr, ev, k=5)
-
-
-def _eval_contamination_report(spark, sf_dir):
-    """Eval-grain flip side of ngram_decontaminate
-    (operators/dedup.py::eval_contamination_report): which src0
-    benchmark docs leaked into the train sources, and how widely —
-    same collision join, eval-keyed aggregate."""
-    from recmetrics_pyspark_spark.operators.dedup import (
-        eval_contamination_report,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
-    tr = docs.filter(F.col("source") != "src0").select("doc_id", "text")
-    return eval_contamination_report(tr, ev, k=5)
-
-
-def _synthetic_pages(docs):
-    """Deterministic multi-line 'web page' builder over the single-line
-    punctuation-free corpus — shared by web_curation_pipeline and
-    line_dedup_pages (mirrored VERBATIM by the oracle-side _PAGE_CTE).
-    Keyed on length(text), NOT doc_id, so exact-duplicate documents
-    remain exact-duplicate pages; the fixed lines ('short.', the
-    parity/filler lines) repeat across ALL pages, giving the
-    line-grain operators cross-document boilerplate to bite on."""
-    nl = F.lit("\n")
-    ln = F.length("text")
-    page = F.concat(
-        F.col("text"), F.lit("."),
-        nl, F.lit("short."),
-        nl, F.concat(F.lit("no punct line here "),
-                     F.substring("text", 1, 12)),
-        F.when(
-            ln % 2 == 0,
-            F.concat(nl, F.lit("One more. And another! Plus a third?"
-                               " Then four. Finally five.")),
-        ).otherwise(
-            F.concat(nl, F.lit("Just a little more text arrives here."))
-        ),
-        F.when(
-            ln % 7 == 0,
-            F.concat(nl, F.lit("Filler Lorem Ipsum paragraph appears.")),
-        ).otherwise(F.lit("")),
-        F.when(
-            ln % 11 == 0,
-            F.concat(nl, F.lit("Contains a { brace in code block.")),
-        ).otherwise(F.lit("")),
-    )
-    return docs.select("doc_id", "source", page.alias("text"))
-
-
-def _line_dedup_pages(spark, sf_dir):
-    """CCNet/RefinedWeb-style cross-document line dedup with document
-    rewrite (operators/dedup.py::line_dedup, keep_first mode): the
-    synthetic pages share their boilerplate lines ('short.', the
-    parity and filler lines) across every document, so the operator
-    keeps one canonical occurrence of each normalized duplicate line
-    and rewrites every other page without it — live at ALL SFs
-    (unlike the doc-grain dedup stages, which only bite at sf0.1).
-    The page-text lead line is unique per distinct text, so pages
-    survive with their content intact. Oracle: same page CTE, same
-    normalization (lowercase, digits stripped, whitespace collapsed,
-    trimmed), DuckDB window row_number for the first occurrence
-    (the Spark side uses a partial-aggregable min-of-struct instead —
-    same result, skew-safe plan)."""
-    from recmetrics_pyspark_spark.operators.dedup import line_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _synthetic_pages(docs).select("doc_id", "text")
-    return line_dedup(pages, min_df=2, mode="keep_first")
-
-
-def _line_dedup_pages_mindf3(spark, sf_dir):
-    """min_df sensitivity row for line_dedup (same pages, same
-    keep_first mode, threshold raised to 3): a line must appear in
-    >= 3 DISTINCT documents before the dedup engages, so df-2 lines
-    — e.g. the lead lines of exact-duplicate page texts, live at
-    sf0.1 — survive untouched here while line_dedup_pages drops
-    them. Pins the threshold semantics (distinct-doc df, strict <
-    comparison) under rotation; boilerplate lines shared by every
-    page dedup identically in both rows."""
-    from recmetrics_pyspark_spark.operators.dedup import line_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _synthetic_pages(docs).select("doc_id", "text")
-    return line_dedup(pages, min_df=3, mode="keep_first")
-
-
-def _line_dedup_pages_dropall(spark, sf_dir):
-    """The drop_all branch of line_dedup (RefinedWeb-style
-    boilerplate removal: EVERY occurrence of a cross-document
-    duplicated line is dropped, no canonical survivor) over the same
-    synthetic pages — driver-pins the mode the standalone keep_first
-    query (line_dedup_pages) and the pipeline composition cannot
-    reach. Oracle: the shared _line_dedup_ctes fragment with the
-    first-occurrence exemption compiled out."""
-    from recmetrics_pyspark_spark.operators.dedup import line_dedup
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _synthetic_pages(docs).select("doc_id", "text")
-    return line_dedup(pages, min_df=2, mode="drop_all")
-
-
-def _incremental_line_dedup_pages(spark, sf_dir):
-    """Batch-vs-state line dedup (operators/dedup.py::
-    incremental_line_dedup): pages with doc_id % 5 == 0 arrive as the
-    new batch; the rest are the accumulated corpus whose line-hash
-    state (line_stats_table) is already built. Stream-consistent
-    keep_first: a batch line duplicated in HISTORY is always dropped
-    (the shipped copy is immutable); a line first duplicated within
-    the batch keeps its smallest (id, pos) occurrence. Live at all
-    SFs — the page boilerplate lines sit in the history state with
-    n_docs >= min_df, so every batch page gets rewritten."""
-    from recmetrics_pyspark_spark.operators.dedup import (
-        incremental_line_dedup,
-        line_stats_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _synthetic_pages(docs).select("doc_id", "text")
-    batch = pages.filter(F.col("doc_id") % 5 == 0)
-    hist = pages.filter(F.col("doc_id") % 5 != 0)
-    return incremental_line_dedup(batch, line_stats_table(hist))
-
-
-def _web_curation_pipeline(spark, sf_dir):
-    """The canonical web-curation stack end-to-end, as ONE declared
-    query with ONE composed oracle: C4 line cleaning (paper defaults)
-    → exact document dedup (canonical survivor per md5 of cleaned
-    text — BEFORE line dedup, the RefinedWeb ordering: a full-doc
-    duplicate is a set of corpus-duplicated lines, so keep_first
-    line dedup run first would empty copies 2..n itself and leave
-    this stage inert) → cross-document line dedup with rewrite
-    (line_dedup keep_first — CCNet's global paragraph dedup) →
-    Gopher gate keep-filter on the line-deduplicated text
-    (corpus-tuned min_words=20 / min_stopwords=1 — the synthetic
-    vocabulary carries one Gopher stopword, and gate thresholds are
-    corpus policy) → ngram_decontaminate anti-join (eval corpus =
-    RAW src0 texts, k=5, same convention as the declared
-    decontamination queries) → corpus_datacard over what ships.
-    Green pins stage COMPOSITION — schema handoffs, keep-flag
-    filtering, the two clean-text rewrites feeding downstream
-    hashing/shingling — which the per-operator oracles cannot see.
-
-    The corpus is single-line and punctuation-free, so pages are
-    built deterministically from each document (mirrored VERBATIM in
-    the oracle's ``p`` CTE) — keyed on length(text), NOT doc_id, so
-    exact-duplicate documents remain exact-duplicate pages and the
-    dedup stage keeps its bite. Scale: every stage is the declared
-    operator itself (scan-side c4 + gopher's gram aggregate +
-    one md5-grain agg + the broadcast decontamination join + the
-    source-grain card) — composition adds two doc-grain semi/anti
-    joins plus two doc-grain localCheckpoint stage boundaries (the
-    gated and deduped survivor sets each feed 2-4 downstream
-    consumers; without the boundary the Gopher gram aggregate
-    re-runs per consumer — measured 149.5s vs 17.5s at sf0.1. A
-    production pipeline writes each stage to parquet; the
-    checkpoint is the in-session analogue and is doc-grain-sized).
-
-    Stage bite by SF (measured, oracle funnel): sf0.1 = 5000 docs →
-    1944 after C4 → 1941 after exact dedup → 1941 docs after line
-    dedup with 1940 of them REWRITTEN (mean 50% of lines dropped —
-    the stage's bite is the rewrite: the downstream gopher gate
-    kills 644 docs here vs 170 on un-line-deduped text) → 1297
-    after gopher → 1241 train-side → 45 decontaminated → 1196
-    shipped (every stage live). At sf0.001/0.01 the corpus carries
-    no exact-dup texts and no SURVIVING src0 containments, so the
-    exact-dedup/decontamination stages pass everything through —
-    inert-but-mirrored there, live at sf0.1 (the same convention as
-    the basket cap / shingle df-cap; sf0.1 is judge-verified each
-    round); line dedup is live at EVERY SF (the boilerplate lines
-    repeat across all pages)."""
-    from recmetrics_pyspark_spark.functions.text import (
-        c4_clean,
-        corpus_datacard,
-        gopher_quality_flags,
-    )
-    from recmetrics_pyspark_spark.operators.dedup import (
-        exact_dedup,
-        line_dedup,
-        ngram_decontaminate,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pages = _synthetic_pages(docs)
-    # stage 1: C4 clean + keep-filter + rewrite to the cleaned text
-    # (materialized: stage 2 consumes it twice — exact_dedup's
-    # internal hash-group self-join plus the left-semi probe side)
-    cleaned = pages.select("doc_id", "source").join(
-        c4_clean(pages).filter("keep").select("doc_id", "clean_text"),
-        "doc_id",
-    ).select(
-        "doc_id", "source", F.col("clean_text").alias("text")
-    ).localCheckpoint(eager=False)
-    # stage 2: exact document dedup — canonical survivor per
-    # cleaned-text hash. MUST run before line dedup: a full-document
-    # duplicate is a set of corpus-duplicated lines, so keep_first
-    # line dedup would otherwise empty copies 2..n itself and leave
-    # this stage inert (observed at sf0.1) — document-grain dedup
-    # first, then line-grain, is the RefinedWeb ordering
-    deduped = cleaned.join(
-        exact_dedup(cleaned).filter(~F.col("is_dup")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    ).localCheckpoint(eager=False)
-    # (deduped is materialized: stage 3 consumes it twice inside
-    # line_dedup and a third time in the source re-join below)
-    # stage 3: cross-document line dedup (CCNet global paragraph
-    # dedup, keep_first) — boilerplate lines the C4 rules keep
-    # (well-formed sentences repeated on every page) are dropped
-    # corpus-wide, one canonical copy survives; docs losing every
-    # line leave the funnel here
-    ld = line_dedup(
-        deduped.select("doc_id", "text"), min_df=2, mode="keep_first"
-    )
-    cleaned2 = (
-        ld.filter(F.col("n_lines_kept") > 0)
-        .select("doc_id", F.col("clean_text").alias("text"))
-        .join(deduped.select("doc_id", "source"), "doc_id")
-        .select("doc_id", "source", "text")
-    ).localCheckpoint(eager=False)
-    # stage 4: Gopher gate on the deduplicated text (tuned thresholds).
-    # The gate's token-scale gram aggregate is the pipeline's heavy
-    # stage, and the survivor set feeds the decontamination train
-    # side, the anti-join, and the data card — so it is MATERIALIZED
-    # as a stage boundary (localCheckpoint truncates the lineage; in
-    # a production run each stage writes parquet and this is the
-    # in-session analogue). Without boundaries the gram aggregate
-    # re-ran per consumer (measured 149.5s -> 17.5s cold at sf0.1
-    # for the original five-stage DAG).
-    gated = cleaned2.join(
-        gopher_quality_flags(cleaned2, min_words=20, min_stopwords=1)
-        .filter("keep")
-        .select("doc_id"),
-        "doc_id",
-        "left_semi",
-    ).localCheckpoint(eager=False)
-    # stage 5: decontamination anti-join (train = non-src0 survivors,
-    # eval = RAW src0 documents)
-    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
-    tr = gated.filter(F.col("source") != "src0")
-    bad = ngram_decontaminate(
-        tr.select("doc_id", "text"), ev, k=5
-    ).select("doc_id")
-    shipped = tr.join(bad, "doc_id", "left_anti")
-    # stage 6: the data card over what ships
-    return corpus_datacard(shipped)
-
-
-def _data_mixture_pipeline(spark, sf_dir):
-    """The selection/mixture layer end-to-end, as ONE declared query
-    with ONE composed oracle (the web_curation_pipeline pattern
-    applied to the sampling side): CCNet perplexity bucketing
-    (tercile keep gate, rates 1.0/0.5/0.1) → soft dedup weights
-    (1/cluster_size over canonical_docs of the KEPT corpus) →
-    temperature-mixture allocation (T = 0.7 over the WEIGHTED
-    per-source token mass) with the equal-weight token_budget_plan
-    twin columns beside it, over a 10M-token budget. Green pins the
-    stage HANDOFFS — keep flags filtering the dedup-cluster universe,
-    cluster weights scaling the per-source inventories the allocator
-    normalizes — which the per-operator oracles cannot see.
-
-    Cross-engine determinism: the stage handoff is kept in exact
-    integers — each doc's 6-dp soft weight travels as BIGINT
-    micro-units w6 = round(1e6 / n_members), so the per-source
-    effective mass eff6 = Σ t·w6 is an exact BIGINT sum and the
-    temperature shares divide BIGINT by BIGINT (the
-    temperature_mixture_plan IEEE rule); the only libm term p^0.7 is
-    round-9 DECIMAL(18,9) summed exactly. (A cluster larger than 2M
-    members would floor w6 to 0 — acceptable: a 2M-way duplicate
-    contributes ~nothing by design.)
-
-    Stage bite (oracle funnel, sf0.1): 5000 docs → ~3250 kept by the
-    perplexity gate → clusters re-formed on the kept corpus →
-    per-source weighted masses ~2-5% below raw token counts → 5
-    allocation rows. Scale shape: stage 1 is the perplexity scorer
-    (one token-grain agg) + broadcast cutoffs; stage 2 is the
-    LSH/components machinery of canonical_docs; stage 3-4 are
-    source-grain aggregates with one-row broadcasts — composition
-    adds ONE doc-grain join (kept ⋈ weights), nothing else
-    corpus-scale. The kept corpus is localCheckpointed once (it
-    feeds both the cluster build and the token projection)."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        ccnet_perplexity_buckets,
-    )
-
-    docs = _docs(spark, sf_dir)
-    # stage 1: CCNet perplexity keep gate
-    keep_ids = (
-        ccnet_perplexity_buckets(docs).filter("keep").select("doc_id")
-    )
-    kept = docs.join(keep_ids, "doc_id", "left_semi").localCheckpoint(
-        eager=False
-    )
-    # stage 2: soft dedup weights over the kept corpus, as exact
-    # BIGINT micro-units (w6 = round(1e6 / cluster_size))
-    wts = D.canonical_docs(kept).select(
-        "doc_id",
-        F.round(F.lit(1000000.0) / F.col("n_members"))
-        .cast("bigint")
-        .alias("w6"),
-    )
-    # stage 3: weighted per-source effective token mass (exact BIGINT)
-    per = (
-        kept.select(
-            "doc_id",
-            "source",
-            F.expr("size(split(text, ' '))").cast("long").alias("t"),
-        )
-        .join(wts, "doc_id")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("t").cast("bigint").alias("n_tokens"),
-            F.sum(F.col("t") * F.col("w6")).cast("bigint").alias("eff6"),
-        )
-    )
-    # stage 4: temperature allocator (T=0.7) over eff6 + the
-    # equal-weight token_budget_plan twin
-    budget = 10_000_000
-    tot = per.agg(
-        F.sum("eff6").cast("bigint").alias("__tot6"),
-        F.count(F.lit(1)).cast("bigint").alias("n_sources"),
-    )
-    shared = per.crossJoin(F.broadcast(tot)).withColumn(
-        "__p",
-        F.col("eff6").cast("double") / F.col("__tot6").cast("double"),
-    )
-    keyed = shared.withColumn(
-        "__pt",
-        F.round(F.pow(F.col("__p"), F.lit(0.7)), 9).cast(
-            "decimal(18,9)"
-        ),
-    )
-    normz = keyed.agg(F.sum("__pt").alias("__z"))
-    out = (
-        keyed.crossJoin(F.broadcast(normz))
-        .withColumn(
-            "w9",
-            F.round(
-                F.col("__pt").cast("double")
-                / F.col("__z").cast("double"),
-                9,
-            ),
-        )
-        .withColumn(
-            "allocated_tokens",
-            F.floor(F.lit(budget) * F.col("w9")).cast("bigint"),
-        )
-    )
-    effd = F.col("eff6").cast("double") / F.lit(1000000.0)
-    rate = F.col("allocated_tokens").cast("double") / effd
-    eq_alloc = F.expr(f"{budget}L DIV n_sources").cast("bigint")
-    return out.select(
-        "source",
-        "n_docs",
-        "n_tokens",
-        F.round(effd, 6).alias("eff_tokens"),
-        F.round("__p", 6).alias("natural_share"),
-        F.round("w9", 6).alias("weight"),
-        "allocated_tokens",
-        F.round(F.least(F.lit(1.0), rate), 6).alias("sample_rate"),
-        F.round(rate, 6).alias("epochs"),
-        eq_alloc.alias("equal_allocated_tokens"),
-        F.round(eq_alloc.cast("double") / effd, 6).alias(
-            "equal_epochs"
-        ),
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declaration order is load-bearing: the driver's correctness
-    harness evaluates the FIRST 50 entries. Round-13 window
-    (`_ROUND13_WINDOW` below), executing the round-12 rotation note +
-    verdict item 8: the 5 stable canaries lead (they own the shared
-    cache builds, so rotated-in queries show marginal bench cost);
-    then every query whose CODE changed in this optimization round —
-    mmr_rerank (symmetric-sims pair-join halving), coverage_approx
-    (distinct-first single-pass sketch), gopher_quality_flags +
-    web_curation_pipeline + data_mixture_pipeline (one-exchange gram
-    stats; the pipelines embed the gopher stage), kcore_items +
-    kcore_items_converged (convergence guard on the _kcore_core
-    memo) — each verified against its oracle at sf0.001/0.01/0.1 via
-    driver_check on the change, equality pins in
-    tests/test_round13_ops.py; then the round-12 memo/rewrite rows
-    whose driver vintage predates those commits — arena_bt_ratings +
-    arena_bt_sensitivity (_bt_chain), dedup_threshold_sweep (FIRST
-    driver witness), adamic_adar_links (_capped_adjacency re-witness,
-    closes the r11-item-6 class), neardup_components (also closes the
-    r12 sf0.1-oracle gap at the driver's standard SF) +
-    canonical_docs + soft_dedup_weights (_neardup_comps),
-    dpo_pair_mining (struct-extreme mining), and the six _synth_recs
-    consumers not already re-witnessed inside the r12 window
-    (recommendations_topk, novelty, novelty_per_user,
-    intra_list_similarity, ranking_metrics, calibration_kl); the
-    remaining 24 slots take the r6 cohort oldest-first alphabetical
-    (benford_order_totals .. seasonal_profile_events).
-
-    ROUND-14 ROTATION NOTE: after this window lands the r6 remainder
-    is 10 rows (session_summary, shipping_sla_compliance,
-    snapshot_diff_orders, source_divergence, stratified_metrics,
-    theil_sen_orders, token_budget_plan, user_erasure_audit,
-    user_lifecycle_stages, zipf_fit) — lead the r14 window with them,
-    then media_features (rows-only waiver lane, every-3-rounds
-    deadline hits r14), then the r7 cohort oldest-first;
-    scripts/witness_audit.py prints the live histogram and the next
-    window's composition.
-    """
-    base = {
-        # --- round-2 operators rotated in for driver witnessing
-        "redact_pii": _redact_pii,
-        "snapshot_diff_orders": _snapshot_diff_orders,
-        "q_zorder_keys": _q_zorder_keys,
-        "event_sessionize": _event_sessionize,
-        "q_key_skew_items": _q_key_skew_items,
-        "shuffle_shards": _shuffle_shards,
-        "rollup_incremental": _rollup_incremental,
-        "q_variant_props": Q2.q_variant_props,
-        "ranking_metrics": _ranking_metrics,
-        "dup_ngram_fraction": _dup_ngram_fraction,
-        "q_data_quality": _q_data_quality,
-        "session_paths": _session_paths,
-        "q_recursive_bfs": _q_recursive_bfs,
-        "q_unpivot_lineitem": Q2.q_unpivot_lineitem,
-        "mixture_sample": _mixture_sample,
-        "q_event_transitions": _event_transitions,
-        "normalized_dedup": _normalized_dedup,
-        "minhash_jaccard_estimate": _minhash_jaccard_estimate,
-        "pack_sequences": _pack_sequences,
-        "bigram_lm": _bigram_lm,
-        "vocab_encode": _vocab_encode,
-        "embedding_gram": _embedding_gram,
-        "q_salted_user_spend": _salted_user_spend,
-        "q_first_last_orders": Q3.q_first_last_orders,
-        "pagerank_items": _pagerank_items,
-        "events_dedup_hourly": _events_dedup_hourly,
-        "temporal_split": _temporal_split,
-        "q_revenue_streaks": Q3.q_revenue_streaks,
-        "attribution_last_touch": _attribution_last_touch,
-        "wau_sliding": _wau_sliding,
-        # --- sketches upgraded to self-checking oracles this round
-        "coverage_approx": _coverage_approx,
-        "quantiles_approx": _quantiles_approx,
-        # --- constructions changed in round 3: re-witness
-        "balanced_sample": _balanced_sample,
-        "simhash_signatures": _simhash,
-        "simhash_near_pairs": _simhash_near,
-        "neardup_components": _neardup_components,
-        # --- stable canaries (r2-green) to detect harness regressions
-        "coverage": _coverage,
-        "personalization": _personalization,
-        "minhash_lsh_pairs": _minhash_lsh,
-        # --- new round-3 queries (window slots up to 50)
-        "dpo_pair_mining": _dpo_pair_mining,
-        "stratified_metrics": _stratified_metrics,
-        "q_window_dedup_rank": _q_window_dedup_rank,
-        "doc_cooccurrence_pmi": _doc_cooccurrence_pmi,
-        "entity_extract_stats": _entity_extract_stats,
-        "seqlen_histogram": _seqlen_histogram,
-        "freshness_decay_sample": _freshness_decay_sample,
-        "cross_lingual_contamination": _cross_lingual_contamination,
-        "tokenizer_fertility": _tokenizer_fertility,
-        "loss_mask_spans": _loss_mask_spans,
-        "curriculum_order": _curriculum_order,
-        # ================= position > 50 below =================
-        # --- reference-surface recommender metrics (operators/metrics.py,
-        #     operators/recommend.py; reference recmetrics_pyspark.py:106-432)
-        "recommendations_topk": _recommendations,
-        "novelty": _novelty,
-        "novelty_per_user": _novelty_per_user,
-        "personalization_weighted": _personalization_weighted,
-        "intra_list_similarity": _intra_list_similarity,
-        "item_item_topk": _item_item_topk,
-        "item_based_recommendations": _item_based_recs,
-        "long_tail_stats": _long_tail,
-        "decay_popularity": _decay_popularity,
-        "value_histogram": _value_histogram,
-        # --- dedup (operators/dedup.py)
-        "dedup_exact": _dedup_exact,
-        "ngram_jaccard_pairs": _ngram_jaccard,
-        # --- round-12 addition: the threshold-sizing report over the
-        # _exact_pairs memo (first driver witness due round 13)
-        "dedup_threshold_sweep": _dedup_threshold_sweep,
-        "lsh_recall_report": _lsh_recall_report,
-        "arena_bt_ratings": _arena_bt_ratings,
-        # --- round-11 additions (per the round-10 verdict): the
-        # SimHash twin of the LSH recall row, the fixed-iteration
-        # sensitivity witness, and the PQ-lane recall report
-        "simhash_recall_report": _simhash_recall_report,
-        "arena_bt_sensitivity": _arena_bt_sensitivity,
-        "pq_recall_report": _pq_recall_report,
-        "ivf_recall_report": _ivf_recall_report,
-        "dedup_pipeline": _dedup_pipeline,
-        # --- similarity search / clustering (operators/similarity.py)
-        "ann_bruteforce_topk": _ann_topk,
-        "ann_lsh_topk": _ann_lsh_topk,
-        "ivf_ann_topk": _ivf_ann_topk,
-        "pq_ann_topk": _pq_ann_topk,
-        "pq_rerank_topk": _pq_rerank_topk,
-        "ivfpq_ann_topk": _ivfpq_ann_topk,
-        "sq_ann_topk": _sq_ann_topk,
-        "ivfsq_ann_topk": _ivfsq_ann_topk,
-        "sq_recall_report": _sq_recall_report,
-        "dim_truncation_recall": _dim_truncation_recall,
-        "hybrid_rrf_topk": _hybrid_rrf_topk,
-        "semantic_decontaminate": _semantic_decontaminate,
-        "semantic_decontaminate_ivf": _semantic_decontaminate_ivf,
-        "embedding_neardup": _embedding_neardup,
-        "kmeans_assignments": _kmeans,
-        "semantic_dedup": _semantic_dedup,
-        "label_centroids": _label_centroids,
-        # --- text analysis (functions/text.py)
-        "text_stats": _text_stats,
-        "language_id": _language_id,
-        "doc_fingerprint": _doc_fingerprint,
-        "quality_score": _quality_score,
-        "token_count_by_lang": _token_count_by_lang,
-        "chunk_documents": _chunk_documents,
-        "dataset_split": _dataset_split,
-        "contamination_check": _contamination,
-        "tfidf_top_terms": _tfidf_top_terms,
-        "repetition_stats": _repetition_stats,
-        "bm25_topk": _bm25_topk,
-        "doc_lm_score": _doc_lm_score,
-        # --- event-time windows + temporal joins (streaming/windows.py,
-        #     operators/joins.py; batch-mode here, streaming in tests)
-        "events_tumbling": _events_tumbling,
-        "events_sliding": _events_sliding,
-        "events_sessions": _events_sessions,
-        "events_asof_purchase": _events_asof_purchase,
-        "events_range_pairs": _events_range_pairs,
-        "q_event_gaps": Q3.q_event_gaps,
-        "q_conversion_funnel": Q3.q_conversion_funnel,
-        "q_events_resampled": Q3.q_events_resampled,
-        "q_cohort_retention": Q3.q_cohort_retention,
-        "q_user_event_type_sets": Q3.q_user_event_type_sets,
-        "hourly_anomaly": _hourly_anomaly,
-        "q_json_props": Q2.q_json_props,
-        "profile_customer": _profile_customer,
-        "q_top_tokens": Q3.q_top_tokens,
-        "q1_pricing_summary": Q.q1_pricing_summary,
-        "q_rolling_revenue": Q3.q_rolling_revenue,
-        # relational core (plans/relational.py)
-        "q3_shipping_priority": Q.q3_shipping_priority,
-        "q4_order_priority": Q.q_order_priority_count,
-        "q5_region_volume": Q.q5_region_volume,
-        "q6_forecast_revenue": Q.q6_forecast_revenue,
-        "q10_returned_items": Q.q10_returned_items,
-        "q18_large_orders": Q.q18_large_orders,
-        "q_top_parts_per_brand": Q.q_top_parts_per_brand,
-        # advanced relational (plans/relational2.py)
-        "q_rollup_returns": Q2.q_rollup_returns,
-        "q_cube_brand_status": Q2.q_cube_brand_status,
-        "q_set_ops_customers": Q2.q_set_ops_customers,
-        "q_anti_join_customers": Q2.q_anti_join_customers,
-        "q_multi_distinct": Q2.q_multi_distinct,
-        "q_orders_by_month": Q2.q_orders_by_month,
-        "q_string_funcs_parts": Q2.q_string_funcs_parts,
-        "q_case_null_buckets": Q2.q_case_null_buckets,
-        "q_quantiles_by_flag": Q2.q_quantiles_by_flag,
-        "q_sql_surface": Q2.q_sql_surface,
-        # further TPC-H shapes (plans/relational3.py)
-        "q7_nation_volume": Q3.q7_nation_volume,
-        "q9_profit_by_nation_year": Q3.q9_profit_by_nation_year,
-        "q12_priority_by_date": Q3.q12_priority_by_date,
-        "q14_promo_revenue": Q3.q14_promo_revenue,
-        "q19_disjunctive": Q3.q19_disjunctive,
-        "q22_dormant_rich_customers": Q3.q22_dormant_rich_customers,
-        "q_pivot_static": Q3.q_pivot_static,
-        "q_customer_spend_ranks": Q3.q_customer_spend_ranks,
-        "q_correlation_stats": Q3.q_correlation_stats,
-        "q_winsorized_stats": Q3.q_winsorized_stats,
-        "q_fuzzy_part_names": Q3.q_fuzzy_part_names,
-        "q_regexp_extract": Q3.q_regexp_extract,
-        "q_grouping_sets": Q3.q_grouping_sets,
-        # round-3 TPC-H correlation shapes (plans/relational4.py)
-        "q2_min_cost_supplier": Q4.q2_min_cost_supplier,
-        "q8_market_share": Q4.q8_market_share,
-        "q11_important_stock": Q4.q11_important_stock,
-        "q13_order_count_distribution": Q4.q13_order_count_distribution,
-        "q15_top_supplier": Q4.q15_top_supplier,
-        "q16_supplier_cnt_by_part": Q4.q16_supplier_cnt_by_part,
-        "q17_small_quantity_revenue": Q4.q17_small_quantity_revenue,
-        "q20_candidate_suppliers": Q4.q20_candidate_suppliers,
-        "q21_sole_latest_supplier": Q4.q21_sole_latest_supplier,
-        "q_rollup_tree": _q_rollup_tree,
-        "wau_hll_mergeable": _wau_hll_mergeable,
-        "freq_sketch_events": _freq_sketch_events,
-        "curation_pipeline": _curation_pipeline,
-        "events_asof_next_purchase": _events_asof_next_purchase,
-        "grouped_split": _grouped_split,
-        "attribution_linear": _attribution_linear,
-        "feature_binning": _feature_binning,
-        "curriculum_cuts": _curriculum_cuts,
-        "zipf_fit": _zipf_fit,
-        "mad_outlier_docs": _mad_outlier_docs,
-        "psi_drift": _psi_drift,
-        "cluster_eval": _cluster_eval,
-        "association_rules": _association_rules,
-        "popularity_concentration": _popularity_concentration,
-        "item_exposure": _item_exposure,
-        "calibration_kl": _calibration_kl,
-        "neardup_components_star": _neardup_components_star,
-        "serendipity": _serendipity,
-        "mmr_rerank": _mmr_rerank,
-        "baseline_predictor_rmse": _baseline_rmse,
-        # --- round-3 late additions (rotate into the window in r4)
-        "hard_negatives": _hard_negatives,
-        "negative_sampling": _negative_sampling,
-        "record_linkage_parts": _record_linkage_parts,
-        "incremental_dedup": _incremental_dedup,
-        "rolling_origin_cv": _rolling_origin_cv,
-        "ab_test_events": _ab_test_events,
-        "km_retention": _km_retention,
-        "holt_forecast_events": _holt_forecast_events,
-        "cusum_changepoint_events": _cusum_changepoint_events,
-        "seasonal_profile_events": _seasonal_profile_events,
-        "item_triangles": _item_triangles,
-        "bpe_merges": _bpe_merges,
-        "qa_eval_docs": _qa_eval_docs,
-        "pass_at_k_items": _pass_at_k_items,
-        "source_overlap": _source_overlap,
-        "next_item_examples": _next_item_examples,
-        "log_odds_terms": _log_odds_terms,
-        "hashing_features": _hashing_features,
-        "adamic_adar_links": _adamic_adar_links,
-        "ips_offline_eval": _ips_offline_eval,
-        "canonical_docs": _canonical_docs,
-        "weighted_sample": _weighted_sample,
-        "langid_confusion": _langid_confusion,
-        "quantile_normalize": _quantile_normalize,
-        "incremental_neardup": _incremental_neardup,
-        "duplicated_spans": _duplicated_spans,
-        # python-side pipeline (no oracle -- NO_ORACLE)
-        "media_features": _media_features,
-        # codec lane witness: Python decode, hash-checked oracle
-        "media_decode_meta": _media_decode_meta,
-        # --- round-4 additions (rotate into the window in round 5)
-        "funnel_conversion": _funnel_conversion,
-        "cohort_retention": _cohort_retention,
-        "doc_perplexity": _doc_perplexity,
-        "dsir_importance": _dsir_importance,
-        "ann_recall_report": _ann_recall_report,
-        "common_neighbor_links": _common_neighbor_links,
-        "rfm_segments": _rfm_segments,
-        "conversion_latency": _conversion_latency,
-        "user_erasure_audit": _user_erasure_audit,
-        "split_leakage_audit": _split_leakage_audit,
-        "daily_anomaly_events": _daily_anomaly_events,
-        "skipgram_pairs": _skipgram_pairs,
-        "wow_trending": _wow_trending,
-        "churn_training_set": _churn_training_set,
-        "containment_pairs": _containment_pairs,
-        "sequential_rules": _sequential_rules,
-        # --- round-5 additions (witnessed on arrival via the window)
-        "user_behavior_entropy": _user_behavior_entropy,
-        "ucb_arm_stats": _ucb_arm_stats,
-        "item_trend_slope": _item_trend_slope,
-        "prefix_dedup": _prefix_dedup,
-        "ngram_novelty_by_source": _ngram_novelty_by_source,
-        "repurchase_intervals": _repurchase_intervals,
-        # --- round-5 late additions (window full at 50; rotate into
-        # the round-6 window — see ROUND-6 ROTATION NOTE)
-        "daily_acf_events": _daily_acf_events,
-        "cohort_ltv": _cohort_ltv,
-        "ab_power_mde": _ab_power_mde,
-        "benford_order_totals": _benford_order_totals,
-        "k_anonymity_customers": _k_anonymity_customers,
-        "attribution_time_decay": _attribution_time_decay,
-        "centroid_distances": _centroid_distances,
-        "heaps_law_docs": _heaps_law_docs,
-        "kcore_items": _kcore_items,
-        "corpus_entropy": _corpus_entropy,
-        "seasonal_decompose_events": _seasonal_decompose_events,
-        "pq_distortion": _pq_distortion,
-        "shipping_sla_compliance": _shipping_sla_compliance,
-        "source_divergence": _source_divergence,
-        "session_summary": _session_summary,
-        "degree_distribution": _degree_distribution,
-        "gmv_mtd_report": _gmv_mtd_report,
-        "catalog_freshness": _catalog_freshness,
-        "lsh_parameter_plan": _lsh_parameter_plan,
-        "user_lifecycle_stages": _user_lifecycle_stages,
-        "revenue_concentration": _revenue_concentration,
-        "embedding_outliers": _embedding_outliers,
-        "scd2_customer_priority": _scd2_customer_priority,
-        "join_size_lineitem_part": _join_size_lineitem_part,
-        "token_budget_plan": _token_budget_plan,
-        "bot_activity_flags": _bot_activity_flags,
-        "theil_sen_orders": _theil_sen_orders,
-        "seasonal_anomaly_days": _seasonal_anomaly_days,
-        "peak_concurrency": _peak_concurrency,
-        # --- round-6 additions (domain-grain curation)
-        "domain_mix_stats": _domain_mix_stats,
-        "domain_cap_sample": _domain_cap_sample,
-        # --- round-7 additions (URL identity + domain×dedup compose)
-        "canonical_url_dups": _canonical_url_dups,
-        "domain_neardup_rates": _domain_neardup_rates,
-        "gopher_quality_flags": _gopher_quality_flags,
-        # --- round-8 additions
-        "ngram_decontaminate": _ngram_decontaminate,
-        "long_tail_stats_salted": _long_tail_salted,
-        # --- round-8 late additions (window full at 50; verified at
-        # sf0.001/0.01/0.1 on arrival; rotate into the round-9 window)
-        "c4_clean": _c4_clean,
-        "eval_contamination_report": _eval_contamination_report,
-        "corpus_datacard": _corpus_datacard,
-        # --- round-9 additions
-        "kcore_items_converged": _kcore_items_converged,
-        "web_curation_pipeline": _web_curation_pipeline,
-        "data_mixture_pipeline": _data_mixture_pipeline,
-        # post-window round-9 additions (window full at 50; verified
-        # at sf0.001/0.01/0.1 on arrival; rotate into round 10)
-        "line_dedup_pages": _line_dedup_pages,
-        "line_dedup_pages_mindf3": _line_dedup_pages_mindf3,
-        "line_dedup_pages_dropall": _line_dedup_pages_dropall,
-        "incremental_line_dedup_pages": _incremental_line_dedup_pages,
-        "temperature_mixture_plan": _temperature_mixture_plan,
-        "rouge2_eval_docs": _rouge2_eval_docs,
-        "nb_source_classifier": _nb_source_classifier,
-        "nb_score_holdout": _nb_score_holdout,
-        "nb_holdout_eval": _nb_holdout_eval,
-        "remove_duplicated_spans_docs": _remove_duplicated_spans_docs,
-        "nb_calibration_bins": _nb_calibration_bins,
-        "excess_surprisal_docs": _excess_surprisal_docs,
-        "ccnet_perplexity_buckets": _ccnet_perplexity_buckets,
-        "soft_dedup_weights": _soft_dedup_weights,
-    }
-    ordered = {k: base[k] for k in _ROUND13_WINDOW}
-    ordered.update((k, v) for k, v in base.items() if k not in ordered)
-    return ordered
-
-
-# The first-50 driver witness window for round 13: 5 canaries, then
-# every query whose CODE changed this optimization round (mmr_rerank
-# symmetric contract, coverage_approx distinct-first, the gopher
-# one-exchange gram stats + its two pipeline embedders, the k-core
-# guard pair), then the round-12 memo/rewrite queries whose driver
-# rows predate those commits (verdict item 8: arena pair via
-# _bt_chain, dedup_threshold_sweep's FIRST witness, one adjacency
-# re-witness, the _neardup_comps trio, dpo_pair_mining, and the
-# _synth_recs consumers not already witnessed in the r12 window),
-# then the r6 cohort oldest-first alphabetical (24 rows; the 10-row
-# remainder plus r7 seeds the r14 plan — scripts/witness_audit.py
-# prints the live histogram). media_features' every-3-rounds
-# rows-only deadline is r14 — schedule it there.
-_ROUND13_WINDOW = [
-    # 5 canaries (own the shared cache builds; green every round)
-    "coverage",
-    "personalization",
-    "item_item_topk",
-    "minhash_lsh_pairs",
-    "event_sessionize",
-    # round-13 code-changed re-witnesses
-    "mmr_rerank",
-    "coverage_approx",
-    "gopher_quality_flags",
-    "web_curation_pipeline",
-    "data_mixture_pipeline",
-    "kcore_items",
-    "kcore_items_converged",
-    # round-12 memo/rewrite rows with pre-r12 driver vintages
-    "arena_bt_ratings",
-    "arena_bt_sensitivity",
-    "dedup_threshold_sweep",
-    "adamic_adar_links",
-    "neardup_components",
-    "canonical_docs",
-    "soft_dedup_weights",
-    "dpo_pair_mining",
-    # _synth_recs consumers not witnessed post-memo in the r12 window
-    "recommendations_topk",
-    "novelty",
-    "novelty_per_user",
-    "intra_list_similarity",
-    "ranking_metrics",
-    "calibration_kl",
-    # freshness: r6 cohort oldest-first alphabetical (24 of 34
-    # remaining after intra_list_similarity above)
-    "benford_order_totals",
-    "bot_activity_flags",
-    "catalog_freshness",
-    "centroid_distances",
-    "cohort_ltv",
-    "corpus_entropy",
-    "daily_acf_events",
-    "embedding_outliers",
-    "gmv_mtd_report",
-    "heaps_law_docs",
-    "join_size_lineitem_part",
-    "k_anonymity_customers",
-    "lsh_parameter_plan",
-    "mad_outlier_docs",
-    "peak_concurrency",
-    "pq_distortion",
-    "q_key_skew_items",
-    "q_zorder_keys",
-    "redact_pii",
-    "revenue_concentration",
-    "scd2_customer_priority",
-    "seasonal_anomaly_days",
-    "seasonal_decompose_events",
-    "seasonal_profile_events",
-]
-
-
-# The round-12 window, kept for the rotation ledger (see queries()
-# docstring history). 5 canaries + the 2 _item_recs memo re-witnesses
-# + the 2 _exact_pairs memo report rows + the 6 _ann_truth memo rows
-# + the FULL 32-row r5 cohort + the first 3 r6 rows. Order is
-# bench-accounting: canaries own the shared cache builds;
-# ann_bruteforce_topk leads its family so the memoized brute-force
-# truth (and the shared _embs scan) is charged to the row that
-# declares it; ngram_jaccard_pairs sits inside the alphabetical r5
-# cohort, AFTER lsh/simhash_recall_report — those two charge the
-# _exact_pairs build, the declared truth query then reads the memo
-# (position accounting only; values are position-independent).
-_ROUND12_WINDOW = [
-    # 5 canaries (own the shared cache builds; green every round)
-    "coverage",
-    "personalization",
-    "item_item_topk",
-    "minhash_lsh_pairs",
-    "event_sessionize",
-    # _item_recs memo re-witnesses (code changed late round 11)
-    "item_based_recommendations",
-    "mmr_rerank",
-    # _exact_pairs memo re-witnesses (round-12 change)
-    "lsh_recall_report",
-    "simhash_recall_report",
-    # _ann_truth memo re-witnesses (round-12 change; truth owner first)
-    "ann_bruteforce_topk",
-    "ann_recall_report",
-    "sq_recall_report",
-    "ivf_recall_report",
-    "pq_recall_report",
-    "hybrid_rrf_topk",
-    # freshness: the full 32-row r5 cohort, oldest-first
-    "containment_pairs",
-    "conversion_latency",
-    "daily_anomaly_events",
-    "dedup_pipeline",
-    "doc_perplexity",
-    "dsir_importance",
-    "dup_ngram_fraction",
-    "funnel_conversion",
-    "hashing_features",
-    "ips_offline_eval",
-    "item_exposure",
-    "item_trend_slope",
-    "log_odds_terms",
-    "media_decode_meta",
-    "minhash_jaccard_estimate",
-    "neardup_components",
-    "ngram_jaccard_pairs",
-    "ngram_novelty_by_source",
-    "pass_at_k_items",
-    "prefix_dedup",
-    "qa_eval_docs",
-    "quantile_normalize",
-    "repurchase_intervals",
-    "rfm_segments",
-    "sequential_rules",
-    "serendipity",
-    "skipgram_pairs",
-    "source_overlap",
-    "split_leakage_audit",
-    "ucb_arm_stats",
-    "user_behavior_entropy",
-    "wow_trending",
-    # freshness: the r6 cohort starts
-    "ab_power_mde",
-    "ab_test_events",
-    "attribution_time_decay",
-]
 
 
 # DuckDB CTE prologue for document ops: tokenized docs + distinct
@@ -5541,16 +1191,6 @@ WHERE j.jaccard >= 0.1
 _NGRAM_JACCARD_SQL = _DOC_BASE + """
 SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.1
 """
-
-
-
-
-from recmetrics_pyspark_spark.functions.curation import (  # noqa: E402
-    TRACKING_PARAM_PATTERN as _CUR_TRACK,
-    _SCHEME_STRIP_PATTERN as _CUR_SCHEME_STRIP,
-    _URL_PARTS_PATTERN as _CUR_URL_PARTS,
-    _URL_SCHEME_PATTERN as _CUR_URL_SCHEME,
-)
 
 
 _CLEAN_URL_CTE = """u AS (
@@ -5912,7 +1552,6 @@ WHERE rnk <= 10
 """
 
 
-
 # ---------------------------------------------------------------------------
 # Parameterized oracle fragments shared by the standalone queries and the
 # composed web_curation_pipeline oracle (single source of truth: the
@@ -6117,7 +1756,6 @@ def _gopher_ctes(src: str = "documents", min_words: int = 50,
     return _GOPHER_CTES_TEMPLATE.format(
         src=src, min_words=min_words, min_stopwords=min_stopwords
     )
-
 
 
 def _datacard_ctes(src: str = "documents") -> str:
@@ -6443,533 +2081,1431 @@ def _web_curation_oracle() -> str:
 {_DATACARD_SELECT}"""
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
-        # Recomputes multimodal.py's synthetic-generator closed form:
-        # image i is a (32+i%32)x32 PPM whose red channel is
-        # (8x+i)%256 (y-independent, so the full sum is 32x the row
-        # sum); PPM n_bytes = 13-byte header + 3wh. Audio i is PCM16
-        # mono at 8000 Hz, 200+i%300 ms -> 8*(200+i%300) samples,
-        # 44-byte RIFF header + 2 bytes/sample. The Spark side gets
-        # these numbers by PARSING real payloads; the oracle gets them
-        # from arithmetic — a hash match witnesses the decode.
-        "media_decode_meta": """
-WITH img AS (
-  SELECT i AS media_id, 32 + i % 32 AS w FROM range(0, 256) t(i)
-), imgm AS (
-  SELECT CAST(media_id AS BIGINT) AS media_id, 'image' AS kind,
-    CAST(13 + 3 * 32 * w AS BIGINT) AS n_bytes,
-    CAST(w AS BIGINT) AS dim_a, CAST(32 AS BIGINT) AS dim_b,
-    CAST(32 * sum((8 * x + media_id) % 256) AS BIGINT) AS sum_r
-  FROM img JOIN range(0, 64) s(x) ON x < w
-  GROUP BY media_id, w
-), aud AS (
-  SELECT CAST(i AS BIGINT) AS media_id, 'audio' AS kind,
-    CAST(44 + 16 * (200 + i % 300) AS BIGINT) AS n_bytes,
-    CAST(8 * (200 + i % 300) AS BIGINT) AS dim_a,
-    CAST(8000 AS BIGINT) AS dim_b,
-    CAST(NULL AS BIGINT) AS sum_r
-  FROM range(0, 128) t(i)
+# ---------------------------------------------------------------------------
+# Spark-side shared inputs and builds
+# ---------------------------------------------------------------------------
+
+
+def _shared(spark: SparkSession, sf_dir: str, name: str, build):
+    """session.py::shared, keyed by the corpus directory."""
+    return shared(spark, name, sf_dir.rstrip("/"), build)
+
+
+def _synth_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic top-10 rec table (operators/recommend.py::
+    synthetic_recommendations), a shared build per (application,
+    sf_dir) — round-12: ELEVEN declared queries consume this same
+    (user, item, rnk) frame with identical parameters (k=10
+    everywhere), and while the distinct-pairs INPUT was shared, each
+    call re-ran the per-user ranking window over it (~1-2 s/query at
+    sf0.1; within-probe A/B in SCALE.md). user × k rows, eagerly
+    localCheckpointed."""
+    return _shared(
+        spark, sf_dir, "synth_recs",
+        lambda: R.synthetic_recommendations(
+            spark, sf_dir, pairs=R.distinct_pairs(spark, sf_dir)
+        ).localCheckpoint(eager=True),
+    )
+
+
+def _item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """item_based_recommendations' top-k output, a shared build per
+    (application, sf_dir) — the _arena_games pattern: the operator
+    persists its INPUTS (the ranked neighbour list, the basket
+    arrays) but not its user-grain output, so mmr_rerank re-paid the
+    candidate join + anti-join + window on top of the cached inputs
+    every run (~3-5 s at sf0.1 in-bench). user x k rows —
+    persist-cheap at any scale."""
+
+    def build():
+        out = R.item_based_recommendations(
+            R.interactions(spark, sf_dir),
+            col_user="user",
+            col_item="item",
+            k=10,
+            max_basket=MAX_BASKET,
+        ).persist()
+        out.count()
+        return out
+
+    return _shared(spark, sf_dir, "item_recs", build)
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "documents")
+
+
+def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "embeddings")
+
+
+def _exact_pairs(spark, sf_dir):
+    """The exact word-3-gram Jaccard >= 0.1 truth table
+    (operators/dedup.py::ngram_jaccard_pairs — inverted-index,
+    df-capped), a shared build per (application, sf_dir) — the
+    _arena_games/_item_recs pattern applied to the recall-report
+    family: ngram_jaccard_pairs (the declared query),
+    lsh_recall_report, and simhash_recall_report each consumed this
+    same table, and each call re-paid the inverted-index join + pair
+    aggregation because the per-call localCheckpoint/persist copies
+    never share across queries (round-11 verdict weak mark; measured
+    ~13 s/round across the three at sf0.1 vs ~2-4 s marginal).
+    Materialized eagerly at the surviving-pair grain (output-scale:
+    pairs above threshold, not the corpus)."""
+    return _shared(
+        spark, sf_dir, "exact_pairs",
+        lambda: D.ngram_jaccard_pairs(
+            _docs(spark, sf_dir), threshold=0.1
+        ).localCheckpoint(eager=True),
+    )
+
+
+def _arena_games(spark, sf_dir):
+    """The mined DPO game table, a shared build per (application,
+    sf_dir) — the interactions build one level up: both arena queries
+    (ratings + iteration sensitivity) consume the SAME mining
+    pipeline (windows over the shared interactions frame), and
+    without sharing each pays it separately (bradley_terry's g1
+    localCheckpoint is per-call, so the cache manager's
+    canonicalized-plan matching never engages across queries).
+    Materialized eagerly at the game grain."""
+
+    def build():
+        pairs = C.dpo_pair_mining(
+            R.interactions(spark, sf_dir, with_rating=True),
+            min_margin=1.0,
+        )
+        return pairs.select(
+            F.col("chosen_item").alias("winner"),
+            F.col("rejected_item").alias("loser"),
+        ).localCheckpoint(eager=True)
+
+    return _shared(spark, sf_dir, "arena_games", build)
+
+
+def _bt_chain(spark, sf_dir):
+    """The 8-round Bradley-Terry MM chain over the shared
+    _arena_games table, fitted ONCE per (application, sf_dir) with
+    round 4 marked — both arena queries are snapshots of this one
+    chain (ratings reads round 8; sensitivity reads rounds 4 and 8).
+    Marking only records a snapshot, never changes the chain, so
+    snaps[8] here is bit-identical to an unmarked ratings fit
+    (pinned in tests/test_round12_ops.py). Item-grain frames only;
+    the chain's own internals are checkpointed by _bt_fit."""
+    from recmetrics_pyspark_spark.operators.ranking import bt_fit_chain
+
+    return _shared(
+        spark, sf_dir, "bt_chain",
+        lambda: bt_fit_chain(
+            _arena_games(spark, sf_dir), iters=8, marks=(4,)
+        ),
+    )
+
+
+def _neardup_comps(spark, sf_dir):
+    """The Jaccard >= 0.5 near-dup component table
+    (operators/dedup.py::neardup_components — min-label propagation,
+    iters=4), a shared build per (application, sf_dir): the declared
+    neardup_components query, canonical_docs, and soft_dedup_weights
+    all consumed this same table, and each call re-ran the 4
+    localCheckpointed propagation rounds (per-round checkpoints never
+    canonicalize equal across calls; within-probe A/B in SCALE.md
+    round-12). Component-grain frame (docs in >= 1 near-dup pair)."""
+    return _shared(
+        spark, sf_dir, "neardup_comps",
+        lambda: D.neardup_components(
+            _docs(spark, sf_dir), threshold=0.5, iters=4
+        ).localCheckpoint(eager=True),
+    )
+
+
+def _ann_truth(spark, sf_dir):
+    """The exact brute-force top-10 for the standard query set
+    (vec_id < 5), a shared build per (application, sf_dir) — the
+    _exact_pairs pattern applied to the ANN family: the declared
+    ann_bruteforce_topk query and all four recall reports
+    (ann/sq/ivf/pq) derive this identical truth, and each call
+    re-paid the full-corpus scoring scan (~1.2 s each at sf0.1, five
+    consumers). |Q| x k rows — output-scale, checkpoint-cheap at any
+    corpus size."""
+
+    def build():
+        embs = _embs(spark, sf_dir)
+        return S.ann_bruteforce_topk(
+            embs, embs.filter(F.col("vec_id") < 5), k=10
+        ).localCheckpoint(eager=True)
+
+    return _shared(spark, sf_dir, "ann_truth", build)
+
+
+# the k every declared k-core query peels at; the convergence guard's
+# fallback must rebuild with the SAME k (tests override it to drive
+# adversarial graphs through the guard)
+_KCORE_K = 3
+
+
+def _kcore_core(spark, sf_dir):
+    """The 3-core peel OUTPUT (node, degree, converged), a shared build
+    per (application, sf_dir) — the _bt_chain doctrine applied to the
+    k-core twins: kcore_items (fixed 8 rounds) and
+    kcore_items_converged (peel-to-fixed-point) produce the identical
+    table on every declared corpus — the peel converges within 8
+    rounds (property-pinned by test_kcore_peel_idempotent_past_
+    convergence) and BOTH queries are checked against the same
+    fixed-8-round oracle CTE (_kcore_oracle) — yet each ran its own
+    ~8-round peel loop (per-round localCheckpoints never canonicalize
+    equal across calls; round-12 within-probe A/B: the second peel
+    cost 4.7-5.6 s at sf0.1). The build runs ONE fixed-8-round peel
+    (the mode whose round count the shared oracle mirrors exactly;
+    its convergence WITNESS covers the until_converged exit — an
+    unchanged final round IS the fixed point) and both queries read
+    it. The until_converged loop-exit machinery stays pinned by
+    tests/test_round12_ops.py::test_kcore_memo_matches_fresh_converged
+    (fresh until_converged run == shared table) and the round-6
+    property test. Node-grain frame."""
+    return _shared(
+        spark, sf_dir, "kcore",
+        lambda: _kcore_peel(spark, sf_dir, rounds=8).localCheckpoint(
+            eager=True
+        ),
+    )
+
+
+def _kcore_peel(spark, sf_dir, **peel):
+    """k_core_decompose at _KCORE_K over the item co-occurrence graph
+    (the persisted item-pair table over the shared interactions)."""
+    from recmetrics_pyspark_spark.operators.graph import k_core_decompose
+
+    inter = R.interactions(spark, sf_dir)
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    return k_core_decompose(pairs, k=_KCORE_K, **peel)
+
+
+def _docs_with_urls(spark, sf_dir):
+    """Documents with a DETERMINISTIC synthetic URL column (the
+    testdata has no URL grain): ~50 registrable domains with a
+    quadratically skewed size distribution (site index =
+    floor(sqrt(doc_id % 625)), so domain k holds ~2k+1 of every 625
+    docs), an occasional ``news.`` subdomain (doc_id % 7 — exercises
+    label stripping), and a co.uk share (doc_id % 3 — exercises the
+    multi-part-suffix rule). Mirrored VERBATIM in the oracle ``u``
+    CTE (_DOMAIN_PROLOGUE); sqrt is IEEE-exact so floor(sqrt(·)) is
+    engine-identical."""
+    docs = load_table(spark, sf_dir, "documents")
+    url = F.concat(
+        F.lit("https://"),
+        F.when(F.col("doc_id") % 7 == 0, F.lit("news.")).otherwise(
+            F.lit("")
+        ),
+        F.lit("site"),
+        F.floor(F.sqrt((F.col("doc_id") % 625).cast("double")))
+        .cast("int")
+        .cast("string"),
+        F.lit("."),
+        F.when(F.col("doc_id") % 3 == 0, F.lit("co.uk")).otherwise(
+            F.lit("com")
+        ),
+        F.lit("/p/"),
+        F.col("doc_id").cast("string"),
+    )
+    return docs.withColumn("url", url)
+
+
+def _docs_with_messy_urls(spark, sf_dir):
+    """Documents with a DETERMINISTIC synthetic MESSY URL column:
+    consecutive doc pairs (2k, 2k+1) fetch the same page
+    (path /p/(doc_id div 2)) but through different surface noise —
+    www. prefix on odd ids, explicit :443 on id%11, trailing slash on
+    id%5, a utm_source tracking param on odd ids, unsorted param order
+    on all, #fragment on id%7 — so url_canonicalize must collapse each
+    pair to one key. Mirrored VERBATIM in the canonical_url_dups
+    oracle's ``u`` CTE."""
+    docs = load_table(spark, sf_dir, "documents")
+    page = F.expr("doc_id div 2").cast("string")
+    url = F.concat(
+        F.lit("https://"),
+        F.when(F.col("doc_id") % 2 == 1, F.lit("www.")).otherwise(
+            F.lit("")
+        ),
+        F.lit("site"),
+        F.expr("(doc_id div 2) % 50").cast("string"),
+        F.when(
+            F.expr("(doc_id div 2) % 3 = 0"), F.lit(".co.uk")
+        ).otherwise(F.lit(".com")),
+        F.when(F.col("doc_id") % 11 == 0, F.lit(":443")).otherwise(
+            F.lit("")
+        ),
+        F.lit("/p/"),
+        page,
+        F.when(F.col("doc_id") % 5 == 0, F.lit("/")).otherwise(
+            F.lit("")
+        ),
+        F.when(
+            F.col("doc_id") % 2 == 1,
+            F.lit("?utm_source=feed&b=2&a=1"),
+        ).otherwise(F.lit("?b=2&a=1")),
+        F.when(F.col("doc_id") % 7 == 0, F.lit("#f")).otherwise(
+            F.lit("")
+        ),
+    )
+    return docs.withColumn("url", url)
+
+
+def _synthetic_pages(docs):
+    """Deterministic multi-line 'web page' builder over the single-line
+    punctuation-free corpus — shared by web_curation_pipeline and
+    line_dedup_pages (mirrored VERBATIM by the oracle-side _PAGE_CTE).
+    Keyed on length(text), NOT doc_id, so exact-duplicate documents
+    remain exact-duplicate pages; the fixed lines ('short.', the
+    parity/filler lines) repeat across ALL pages, giving the
+    line-grain operators cross-document boilerplate to bite on."""
+    nl = F.lit("\n")
+    ln = F.length("text")
+    page = F.concat(
+        F.col("text"), F.lit("."),
+        nl, F.lit("short."),
+        nl, F.concat(F.lit("no punct line here "),
+                     F.substring("text", 1, 12)),
+        F.when(
+            ln % 2 == 0,
+            F.concat(nl, F.lit("One more. And another! Plus a third?"
+                               " Then four. Finally five.")),
+        ).otherwise(
+            F.concat(nl, F.lit("Just a little more text arrives here."))
+        ),
+        F.when(
+            ln % 7 == 0,
+            F.concat(nl, F.lit("Filler Lorem Ipsum paragraph appears.")),
+        ).otherwise(F.lit("")),
+        F.when(
+            ln % 11 == 0,
+            F.concat(nl, F.lit("Contains a { brace in code block.")),
+        ).otherwise(F.lit("")),
+    )
+    return docs.select("doc_id", "source", page.alias("text"))
+
+
+# ---------------------------------------------------------------------------
+# Declared queries, each with its DuckDB oracle
+# ---------------------------------------------------------------------------
+
+
+@_query("redact_pii", """
+WITH pii AS (
+  SELECT doc_id,
+    text || ' contact u' || doc_id || '@mail.example.com from 10.'
+      || (doc_id % 200) || '.0.1 call +1-555-'
+      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+      || CASE WHEN doc_id % 3 = 0 THEN ' cc admin@ex.org' ELSE '' END
+      AS text
+  FROM documents
 )
-SELECT * FROM imgm UNION ALL SELECT * FROM aud
-""",
-        "sequential_rules": """
-WITH firsts AS (
-  SELECT o_custkey AS u, l_partkey AS it, min(o_orderdate) AS t
+SELECT doc_id,
+  regexp_replace(regexp_replace(regexp_replace(text,
+      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+      '\\b(\\d{1,3}\\.){3}\\d{1,3}\\b', '[IP]', 'g'),
+      '\\+\\d{1,3}-\\d{3,4}-\\d{3,4}', '[PHONE]', 'g') AS redacted,
+  CAST(len(regexp_extract_all(text,
+      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT)
+    AS n_emails,
+  CAST(len(regexp_extract_all(text,
+      '\\b(\\d{1,3}\\.){3}\\d{1,3}\\b')) AS BIGINT) AS n_ips,
+  CAST(len(regexp_extract_all(text,
+      '\\+\\d{1,3}-\\d{3,4}-\\d{3,4}')) AS BIGINT) AS n_phones
+FROM pii
+""")
+def _redact_pii(spark, sf_dir):
+    """PII scrub over a deterministic synthetic-PII corpus: the driver
+    documents contain no emails/IPs, so each doc gets a doc_id-derived
+    contact block appended (same construction in the oracle), then
+    functions/text.py::redact_pii masks emails, IPv4s, and phones in
+    one codegen'd scan-side projection."""
+    docs = _docs(spark, sf_dir)
+    with_pii = docs.select(
+        "doc_id",
+        F.expr(
+            "concat(text, ' contact u', doc_id, '@mail.example.com"
+            " from 10.', doc_id % 200, '.0.1 call +1-555-',"
+            " lpad(cast(doc_id % 10000 as string), 4, '0'),"
+            " case when doc_id % 3 = 0 then ' cc admin@ex.org'"
+            " else '' end)"
+        ).alias("text"),
+    )
+    return T.redact_pii(with_pii)
+
+
+@_query("snapshot_diff_orders", """
+WITH base AS (
+  SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS o_totalprice
+  FROM orders
+), old AS (
+  SELECT * FROM base WHERE o_orderkey % 11 != 0
+), new AS (
+  SELECT o_orderkey, o_orderstatus,
+    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
+         ELSE o_totalprice END AS o_totalprice
+  FROM base WHERE o_orderkey % 7 != 3
+)
+SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
+  CASE WHEN o.o_orderkey IS NULL THEN 'insert'
+       WHEN n.o_orderkey IS NULL THEN 'delete'
+       ELSE 'update' END AS change_type,
+  o.o_orderstatus AS old_o_orderstatus,
+  o.o_totalprice AS old_o_totalprice,
+  n.o_orderstatus AS new_o_orderstatus,
+  n.o_totalprice AS new_o_totalprice
+FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
+WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
+   OR (o.o_orderstatus IS DISTINCT FROM n.o_orderstatus)
+   OR (o.o_totalprice IS DISTINCT FROM n.o_totalprice)
+""")
+def _snapshot_diff_orders(spark, sf_dir):
+    """CDC diff of two deterministic order-table snapshots (old drops
+    every 11th key → inserts; new drops every 7th ≡ 3 key → deletes;
+    every 5th key's price shifts by +1.0 → updates) —
+    operators/cdc.py::snapshot_diff, one full-outer shuffle join."""
+    from recmetrics_pyspark_spark.operators.cdc import snapshot_diff
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
+    )
+    old = orders.filter(F.col("o_orderkey") % 11 != 0)
+    new = orders.filter(F.col("o_orderkey") % 7 != 3).withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + F.lit(1.0)
+        ).otherwise(F.col("o_totalprice")),
+    )
+    return snapshot_diff(
+        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
+    )
+
+
+@_query("q_zorder_keys", _zorder_oracle())
+def _q_zorder_keys(spark, sf_dir):
+    """Morton keys for lineitem's (partkey, suppkey) pair — the sort
+    key zorder_compact lays files out by. Emitted per row so the
+    oracle checks the bit interleave exactly; the layout itself (range
+    partition + sort + write) is exercised by tests/test_zorder.py."""
+    from recmetrics_pyspark_spark.sources.sinks import zorder_value
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        "l_linenumber",
+        (F.col("l_partkey") % 65536).alias("zx"),
+        (F.col("l_suppkey") % 65536).alias("zy"),
+    )
+    return li.select(
+        "l_orderkey",
+        "l_linenumber",
+        zorder_value("zx", "zy").alias("zval"),
+    )
+
+
+@_query("event_sessionize", """
+WITH ordered AS (
+  SELECT user_id, event_id, ts,
+    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+  FROM events
+)
+SELECT user_id, event_id, ts,
+  CAST(sum(CASE WHEN prev_ts IS NULL
+                  OR date_diff('microsecond', prev_ts, ts) > 1800000000
+                THEN 1 ELSE 0 END)
+    OVER (PARTITION BY user_id ORDER BY ts, event_id
+          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
+FROM ordered
+""")
+def _event_sessionize(spark, sf_dir):
+    """Row-level session assignment over the event stream (30-minute
+    inactivity gap) — streaming/windows.py::assign_session_ids, the
+    per-event twin of events_sessions' aggregate view."""
+    ev = load_table(spark, sf_dir, "events")
+    return W.assign_session_ids(ev, gap_minutes=30)
+
+
+@_query("q_key_skew_items", """
+WITH counts AS (
+  SELECT l_partkey AS key, count(*) AS n
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY 1, 2
-), capped AS (
-  SELECT u, it, t FROM (
-    SELECT u, it, t,
-      row_number() OVER (PARTITION BY u ORDER BY t, it) AS r
-    FROM firsts) q
-  WHERE r <= 20
-), nu AS (SELECT count(DISTINCT u) AS n_users FROM capped),
-adopters AS (
-  SELECT it, CAST(count(*) AS BIGINT) AS n_adopt FROM capped GROUP BY 1
-), pairs AS (
-  SELECT a.it AS ant, b.it AS cons,
-    CAST(count(*) AS BIGINT) AS n_ab
-  FROM capped a JOIN capped b ON a.u = b.u AND a.t < b.t
-  GROUP BY 1, 2
-  HAVING count(*) >= 2
+  GROUP BY l_partkey
+), total AS (SELECT sum(n) AS total FROM counts),
+top AS (
+  SELECT key, n FROM counts ORDER BY n DESC, key LIMIT 10
 )
-SELECT CAST(ant AS BIGINT) AS antecedent,
-  CAST(cons AS BIGINT) AS consequent, n_ab,
-  round(n_ab / CAST(na.n_adopt AS DOUBLE), 6) AS confidence,
-  round((n_ab * nu.n_users)
-        / CAST(na.n_adopt * nb.n_adopt AS DOUBLE), 6) AS lift,
-  CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (
-    ORDER BY n_ab DESC, ant, cons) AS rnk
-  FROM pairs) p
-JOIN adopters na ON p.ant = na.it
-JOIN adopters nb ON p.cons = nb.it
-CROSS JOIN nu
-WHERE rnk <= 50
-""",
-        "containment_pairs": """
+SELECT CAST(row_number() OVER w AS BIGINT) AS rnk, key, n,
+  round(n / CAST(total AS DOUBLE), 6) AS share,
+  round(sum(n) OVER (ORDER BY n DESC, key ROWS UNBOUNDED PRECEDING)
+        / CAST(total AS DOUBLE), 6) AS cum_share
+FROM top CROSS JOIN total
+WINDOW w AS (ORDER BY n DESC, key)
+""")
+def _q_key_skew_items(spark, sf_dir):
+    """Heavy-hitter diagnostic on the interaction item key (top-10
+    share + cumulative share) — operators/skew.py::key_skew_stats, the
+    measurement that picks a skew mitigation before a 100 TB join."""
+    from recmetrics_pyspark_spark.operators.skew import key_skew_stats
+
+    return key_skew_stats(R.interactions(spark, sf_dir), "item", top_k=10)
+
+
+@_query("shuffle_shards", """
+WITH hashed AS (
+  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
+    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT)
+      % 8 AS shard
+  FROM documents
+)
+SELECT doc_id, shard,
+  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
+    AS BIGINT) AS pos
+FROM hashed
+""")
+def _shuffle_shards(spark, sf_dir):
+    """Deterministic training-order shuffle: md5-derived shard +
+    within-shard position for every document
+    (functions/text.py::shuffle_shards)."""
+    return T.shuffle_shards(_docs(spark, sf_dir), n_shards=8)
+
+
+@_query("rollup_incremental", """
+-- direct rollup of the NEW snapshot: equality with the Spark side's
+-- (old rollup + CDC delta) merge proves incremental maintenance
+WITH base AS (
+  SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS o_totalprice
+  FROM orders
+), new AS (
+  SELECT o_orderkey, o_orderstatus,
+    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
+         ELSE o_totalprice END AS o_totalprice
+  FROM base WHERE o_orderkey % 7 != 3
+)
+SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_rows,
+  round(sum(o_totalprice), 2) AS sum_value
+FROM new GROUP BY o_orderstatus
+""")
+def _rollup_incremental(spark, sf_dir):
+    """Incremental rollup maintenance: yesterday's (status → count,
+    revenue) rollup merged with today's CDC diff
+    (operators/cdc.py::rollup_merge). The ORACLE is the direct rollup
+    of the new snapshot — so a green row PROVES the incremental path
+    equals the full recompute."""
+    from recmetrics_pyspark_spark.operators.cdc import (
+        rollup_merge,
+        snapshot_diff,
+    )
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.round("o_totalprice", 2).alias("o_totalprice"),
+    )
+    old = orders.filter(F.col("o_orderkey") % 11 != 0)
+    new = orders.filter(F.col("o_orderkey") % 7 != 3).withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + F.lit(1.0)
+        ).otherwise(F.col("o_totalprice")),
+    )
+    rollup = old.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum("o_totalprice").alias("sum_value"),
+    )
+    diff = snapshot_diff(
+        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
+    )
+    # round_scale=2 here, at the comparison boundary with the oracle's
+    # direct recompute — the operator itself no longer rounds per merge
+    return rollup_merge(
+        rollup, diff, ["o_orderstatus"], "o_totalprice", round_scale=2
+    )
+
+
+_query("q_variant_props", """
+SELECT event_type,
+  CAST(floor(CAST(json_extract(props, '$.k') AS BIGINT) / 10)
+    AS BIGINT) AS k_decade,
+  count(*) AS n
+FROM events
+GROUP BY event_type, k_decade
+ORDER BY event_type, k_decade
+""")(Q.q_variant_props)
+
+
+@_query("ranking_metrics", ORACLE_BASE
++ """
+, truth AS (
+  SELECT DISTINCT o_custkey AS u, l_partkey AS i
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  WHERE o_orderdate >= DATE '1995-07-01'
+), sizes AS (
+  SELECT u, count(*) AS n_truth FROM truth GROUP BY u
+), idcg AS (
+  SELECT u, sum(1.0 / log2(pos + 1)) AS idcg FROM (
+    SELECT u, row_number() OVER (PARTITION BY u ORDER BY i) AS pos
+    FROM truth) x
+  WHERE pos <= 10 GROUP BY u
+), hits AS (
+  SELECT r.user_id AS u, count(*) AS n_hits,
+    sum(1.0 / log2(r.rnk + 1)) AS dcg
+  FROM recs r JOIN truth t ON r.user_id = t.u AND r.item_id = t.i
+  GROUP BY r.user_id
+), per_user AS (
+  SELECT s.u,
+    coalesce(h.n_hits, 0) / 10.0 AS precision,
+    coalesce(h.n_hits, 0) / CAST(s.n_truth AS DOUBLE) AS recall,
+    coalesce(h.dcg, 0.0) / g.idcg AS ndcg
+  FROM sizes s JOIN idcg g ON s.u = g.u
+  LEFT JOIN hits h ON s.u = h.u
+)
+SELECT CAST(count(*) AS BIGINT) AS n_users,
+  round(avg(precision), 6) AS precision_at_k,
+  round(avg(recall), 6) AS recall_at_k,
+  round(avg(ndcg), 6) AS ndcg_at_k
+FROM per_user
+""")
+def _ranking_metrics(spark, sf_dir):
+    """Offline eval of the synthetic recommender against a temporal
+    holdout (orders from 1995-07-01 on): macro precision/recall/NDCG@10
+    (operators/recommend.py::ranking_metrics_at_k)."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    truth = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .filter(F.col("o_orderdate") >= F.lit("1995-07-01"))
+        .select(
+            F.col("o_custkey").alias("user"), F.col("l_partkey").alias("item")
+        )
+    )
+    recs = _synth_recs(spark, sf_dir)  # k=10, the memo's shape
+    return R.ranking_metrics_at_k(recs, truth, k=10)
+
+
+@_query("dup_ngram_fraction", """
 WITH d AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), sh0 AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(list_slice(toks, i, i+2), ' ') AS s
-  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
 ), sh AS (
-  SELECT sh0.doc_id, sh0.s FROM sh0
-  JOIN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 1000) keep
-    USING (s)
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+  SELECT DISTINCT doc_id, array_to_string(list_slice(toks, i, i+2), ' ') AS s
+  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
+), dfreq AS (
+  SELECT s, count(*) AS n_docs_with FROM sh GROUP BY s
 )
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  CAST(count(*) AS BIGINT) AS n_inter,
-  round(count(*) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6)
-    AS containment,
-  round(count(*) / CAST(sa.n_sh + sb.n_sh - count(*) AS DOUBLE), 6)
-    AS jaccard
-FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-JOIN sizes sa ON a.doc_id = sa.doc_id
-JOIN sizes sb ON b.doc_id = sb.doc_id
-GROUP BY 1, 2, sa.n_sh, sb.n_sh
-HAVING round(count(*) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6)
-       >= 0.6
-""",
-        "churn_training_set": """
-WITH b AS (
-  SELECT max(ts) AS max_ts, max(ts) - INTERVAL 7 DAY AS cutoff
+SELECT sh.doc_id,
+  CAST(count(*) AS BIGINT) AS n_shingles,
+  CAST(sum(CASE WHEN f.n_docs_with >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_dup,
+  round(sum(CASE WHEN f.n_docs_with >= 2 THEN 1 ELSE 0 END)
+    / CAST(count(*) AS DOUBLE), 6) AS dup_fraction
+FROM sh JOIN dfreq f ON sh.s = f.s
+GROUP BY sh.doc_id
+""")
+def _dup_ngram_fraction(spark, sf_dir):
+    """Corpus-level duplicate 3-gram fraction per document
+    (operators/dedup.py::dup_ngram_fraction) — the Gopher-style
+    repetition filter signal, over the shared shingle table."""
+    return D.dup_ngram_fraction(_docs(spark, sf_dir))
+
+
+@_query("q_data_quality", """
+WITH col_checks AS (
+  SELECT * FROM (
+    SELECT
+      CAST(count(*) AS BIGINT) AS n_rows,
+      CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        AS orderkey_not_null,
+      CAST(sum(CASE WHEN NOT (o_totalprice > 0) THEN 1 ELSE 0 END)
+        AS BIGINT) AS totalprice_positive,
+      CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1
+        ELSE 0 END) AS BIGINT) AS status_in_domain,
+      CAST(sum(CASE WHEN o_orderdate NOT BETWEEN DATE '1992-01-01'
+        AND DATE '1998-12-31' THEN 1 ELSE 0 END) AS BIGINT)
+        AS date_in_range
+    FROM orders) s,
+    LATERAL (VALUES
+      ('orderkey_not_null', s.orderkey_not_null),
+      ('totalprice_positive', s.totalprice_positive),
+      ('status_in_domain', s.status_in_domain),
+      ('date_in_range', s.date_in_range)) AS v("check", n_violations)
+), uniq AS (
+  SELECT 'orderkey_unique' AS "check",
+    CAST(coalesce(sum(c - 1), 0) AS BIGINT) AS n_violations,
+    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows
+  FROM (SELECT count(*) AS c FROM orders GROUP BY o_orderkey
+        HAVING count(*) > 1) d
+), fk AS (
+  SELECT 'custkey_fk' AS "check",
+    CAST(count(*) AS BIGINT) AS n_violations,
+    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows
+  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+  WHERE c.c_custkey IS NULL
+)
+SELECT "check", n_violations, n_rows, n_violations = 0 AS pass
+FROM (
+  SELECT "check", n_violations, n_rows FROM col_checks
+  UNION ALL SELECT * FROM uniq
+  UNION ALL SELECT * FROM fk
+) t
+""")
+def _q_data_quality(spark, sf_dir):
+    """Promotion gate over the orders table: null/range/set column
+    checks compiled into ONE scan, key uniqueness, and an orders→
+    customer referential check (operators/quality.py). One row per
+    check with violation counts."""
+    from recmetrics_pyspark_spark.operators import quality as QC
+
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    col_checks = QC.check_columns(
+        orders,
+        {
+            "orderkey_not_null": F.col("o_orderkey").isNull(),
+            "totalprice_positive": ~(F.col("o_totalprice") > 0),
+            "status_in_domain": ~F.col("o_orderstatus").isin("O", "F", "P"),
+            "date_in_range": ~F.col("o_orderdate").between(
+                "1992-01-01", "1998-12-31"
+            ),
+        },
+    )
+    uniq = QC.check_unique(orders, ["o_orderkey"], "orderkey_unique")
+    fk = QC.check_foreign_key(
+        orders, "o_custkey", cust, "c_custkey", "custkey_fk"
+    )
+    return QC.run_checks([col_checks, uniq, fk])
+
+
+@_query("session_paths", """
+WITH ordered AS (
+  SELECT user_id, event_id, ts, event_type,
+    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
   FROM events
-), feats AS (
-  SELECT e.user_id AS u,
-    CAST(count(*) AS BIGINT) AS n_events,
-    CAST(sum(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END)
-         AS BIGINT) AS n_purchases,
-    CAST(count(DISTINCT CAST(e.ts AS DATE)) AS BIGINT)
-      AS n_active_days,
-    CAST(date_diff('day', CAST(max(e.ts) AS DATE),
-                   CAST(max(b.cutoff) AS DATE)) AS INT)
-      AS recency_days
-  FROM events e CROSS JOIN b
-  WHERE e.ts < b.cutoff GROUP BY 1
-), post AS (
-  SELECT DISTINCT e.user_id AS u FROM events e CROSS JOIN b
-  WHERE e.ts >= b.cutoff
-)
-SELECT f.u AS user_id, n_events, n_purchases, n_active_days,
-  recency_days, (p.u IS NULL) AS churned
-FROM feats f LEFT JOIN post p USING (u) ORDER BY 1
-""",
-        "wow_trending": """
-WITH weekly AS (
-  SELECT user_id AS key,
-    CAST(date_trunc('week', ts) AS DATE) AS wk,
-    CAST(count(*) AS BIGINT) AS n
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-), scored AS (
-  SELECT key, CAST(wk AS VARCHAR) AS week, n,
-    n - lag(n) OVER (PARTITION BY key ORDER BY wk) AS delta,
-    round(CAST(n AS DOUBLE)
-          / lag(n) OVER (PARTITION BY key ORDER BY wk), 6) AS ratio
-  FROM weekly
-)
-SELECT key, week, n, delta, ratio, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (
-    ORDER BY abs(delta) DESC, key, week) AS rnk
-  FROM scored WHERE delta IS NOT NULL) t
-WHERE rnk <= 20
-""",
-        "skipgram_pairs": """
-WITH t AS (
-  SELECT DISTINCT o_custkey AS u, o_orderdate AS dt,
-    o_orderkey AS ok, l_partkey AS it
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), seq AS (
-  SELECT u, it, row_number() OVER (
-    PARTITION BY u ORDER BY dt, ok, it) AS pos
-  FROM t
-), pairs AS (
-  SELECT a.it AS center, b.it AS context,
-    CAST(count(*) AS BIGINT) AS n_cooc
-  FROM seq a JOIN seq b
-    ON a.u = b.u AND b.pos <> a.pos AND abs(a.pos - b.pos) <= 2
-  GROUP BY 1, 2
-)
-SELECT CAST(center AS BIGINT) AS center,
-  CAST(context AS BIGINT) AS context, n_cooc,
-  CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (
-    ORDER BY n_cooc DESC, center, context) AS rnk
-  FROM pairs) q
-WHERE rnk <= 200
-""",
-        "daily_anomaly_events": """
-WITH daily AS (
-  SELECT event_type AS key, CAST(ts AS DATE) AS day,
-    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
-  FROM events GROUP BY 1, 2
-), base AS (
-  SELECT key, day, round(v, 6) AS v,
-    round(avg(v) OVER w, 6) AS base_mean,
-    round(stddev_samp(v) OVER w, 6) AS base_std
-  FROM daily
-  WINDOW w AS (PARTITION BY key ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT key, CAST(day AS VARCHAR) AS day, v, base_mean, base_std,
-  round((v - base_mean) / base_std, 6) AS z_score,
-  abs(round((v - base_mean) / base_std, 6)) >= 2.0 AS is_anomaly
-FROM base
-WHERE base_std IS NOT NULL AND base_std > 0
-ORDER BY 1, 2
-""",
-        "split_leakage_audit": """
-WITH tagged AS (
-  SELECT md5(text) AS content_hash,
-    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-              ::BIGINT % 10 < 8
-         THEN 'train' ELSE 'eval' END AS split
-  FROM documents
-), per_hash AS (
-  SELECT content_hash, CAST(count(*) AS BIGINT) AS n_docs,
-    max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS in_train,
-    max(CASE WHEN split = 'eval' THEN 1 ELSE 0 END) AS in_eval
-  FROM tagged GROUP BY content_hash
-)
-SELECT CASE WHEN in_train = 1 AND in_eval = 1 THEN 'leaked'
-            WHEN in_train = 1 THEN 'train_only'
-            ELSE 'eval_only' END AS status,
-  CAST(count(*) AS BIGINT) AS n_hashes,
-  CAST(sum(n_docs) AS BIGINT) AS n_docs
-FROM per_hash GROUP BY 1 ORDER BY 1
-""",
-        "user_erasure_audit": """
-WITH eids AS (
-  SELECT c_custkey AS eid FROM customer WHERE c_custkey % 97 = 0
-), delo AS (
-  SELECT o_orderkey FROM orders
-  WHERE o_custkey IN (SELECT eid FROM eids)
-), c AS (
-  SELECT 'customer' AS table_name,
-    CAST(count(*) AS BIGINT) AS n_before,
-    CAST(sum(CASE WHEN c_custkey IN (SELECT eid FROM eids)
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_deleted
-  FROM customer
-), o AS (
-  SELECT 'orders',
-    CAST(count(*) AS BIGINT),
-    CAST(sum(CASE WHEN o_custkey IN (SELECT eid FROM eids)
-             THEN 1 ELSE 0 END) AS BIGINT)
-  FROM orders
-), l AS (
-  SELECT 'lineitem',
-    CAST(count(*) AS BIGINT),
-    CAST(sum(CASE WHEN l_orderkey IN (SELECT o_orderkey FROM delo)
-             THEN 1 ELSE 0 END) AS BIGINT)
-  FROM lineitem
-), u AS (
-  SELECT * FROM c UNION ALL SELECT * FROM o UNION ALL SELECT * FROM l
-)
-SELECT table_name, n_before, n_deleted,
-  n_before - n_deleted AS n_after,
-  CAST(0 AS BIGINT) AS residual_refs
-FROM u
-""",
-        "conversion_latency": """
-WITH fa AS (
-  SELECT user_id AS u, min(ts) AS t0 FROM events
-  WHERE event_type = 'view' GROUP BY 1
-), lat AS (
-  SELECT date_diff('second', x.t0, min(e.ts)) AS latency_sec
-  FROM fa x JOIN events e ON e.user_id = x.u
-  WHERE e.event_type = 'purchase' AND e.ts >= x.t0
-  GROUP BY x.u, x.t0
-)
-SELECT CAST(count(*) AS BIGINT) AS n_converted,
-  round(quantile_cont(latency_sec, 0.25), 6) AS p25,
-  round(quantile_cont(latency_sec, 0.5), 6) AS p50,
-  round(quantile_cont(latency_sec, 0.75), 6) AS p75,
-  round(quantile_cont(latency_sec, 0.9), 6) AS p90,
-  round(CAST(sum(CAST(latency_sec AS DECIMAL(18,6))) AS DOUBLE)
-        / count(*), 6) AS mean_sec
-FROM lat
-""",
-        "rfm_segments": """
-WITH per AS (
-  SELECT o_custkey, max(o_orderdate) AS last_order,
-    CAST(count(*) AS BIGINT) AS frequency,
-    sum(CAST(o_totalprice AS DECIMAL(18,6))) AS m_dec
-  FROM orders GROUP BY 1
-), mx AS (SELECT max(o_orderdate) AS max_date FROM orders),
-rfm AS (
-  SELECT date_diff('day', last_order, max_date) AS recency_days,
-    frequency, round(CAST(m_dec AS DOUBLE), 2) AS monetary, m_dec
-  FROM per CROSS JOIN mx
-), cuts AS (
-  SELECT quantile_cont(recency_days, [0.2, 0.4, 0.6, 0.8]) AS rc,
-    quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]) AS fc,
-    quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]) AS mc
-  FROM rfm
-), binned AS (
-  SELECT
-    CAST(len(list_filter(c.rc, x -> r.recency_days > x)) AS INT)
-      AS r_bin,
-    CAST(len(list_filter(c.fc, x -> r.frequency > x)) AS INT)
-      AS f_bin,
-    CAST(len(list_filter(c.mc, x -> r.monetary > x)) AS INT)
-      AS m_bin,
-    r.m_dec
-  FROM rfm r CROSS JOIN cuts c
-)
-SELECT r_bin, f_bin, m_bin,
-  CAST(count(*) AS BIGINT) AS n_customers,
-  round(CAST(sum(m_dec) AS DOUBLE) / count(*), 6) AS avg_monetary
-FROM binned GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-""",
-        "doc_perplexity": _DOC_PPLX_SQL,
-        # mirrors functions/curation.py::ccnet_perplexity_buckets:
-        # the doc_perplexity SQL as the scorer subquery, round-6
-        # quantile_cont cutoffs, mixture_sample's md5-bucket keep
-        "ccnet_perplexity_buckets": f"""
-WITH px AS (
-  SELECT doc_id, avg_bits FROM ({_DOC_PPLX_SQL}) t),
-cut AS (
-  SELECT round(quantile_cont(avg_bits, 0.33), 6) AS c1,
-    round(quantile_cont(avg_bits, 0.67), 6) AS c2
-  FROM px)
-SELECT doc_id, avg_bits,
-  CASE WHEN avg_bits <= c1 THEN 'head'
-       WHEN avg_bits <= c2 THEN 'middle' ELSE 'tail' END AS bucket,
-  CASE WHEN avg_bits <= c1 THEN 1.0
-       WHEN avg_bits <= c2 THEN 0.5 ELSE 0.1 END AS keep_rate,
-  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 3)) AS BIGINT)
-      / 4096.0
-    < CASE WHEN avg_bits <= c1 THEN 1.0
-           WHEN avg_bits <= c2 THEN 0.5 ELSE 0.1 END AS keep
-FROM px CROSS JOIN cut
-""",
-        "dsir_importance": """
-WITH tb AS (
-  SELECT doc_id, lang,
-    ('0x' || substr(md5(token), 1, 8))::BIGINT % 64 AS b
-  FROM (SELECT doc_id, lang,
-          unnest(string_split(text, ' ')) AS token FROM documents)
-), raw AS (
-  SELECT b, count(*) AS r_b FROM tb GROUP BY 1
-), tgt AS (
-  SELECT b, count(*) AS t_b FROM tb WHERE lang = 'en' GROUP BY 1
-), tot AS (
-  SELECT count(*) AS r_total,
-    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_total
-  FROM tb
-), lr AS (
-  SELECT raw.b,
-    CAST(round(
-      log2((coalesce(t_b, 0) + 1) / CAST(t_total + 64 AS DOUBLE))
-      - log2((r_b + 1) / CAST(r_total + 64 AS DOUBLE)), 9)
-      AS DECIMAL(18,9)) AS lr
-  FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot
-)
-SELECT t.doc_id, t.lang, CAST(count(*) AS BIGINT) AS n_tokens,
-  round(CAST(sum(l.lr) AS DOUBLE) / count(*), 6) AS avg_log_ratio
-FROM tb t JOIN lr l USING (b)
-GROUP BY t.doc_id, t.lang
-""",
-        "funnel_conversion": """
-WITH s1 AS (
-  SELECT user_id AS u, min(ts) AS t0 FROM events
-  WHERE event_type = 'view' GROUP BY 1
-), s2 AS (
-  SELECT e.user_id AS u, min(e.ts) AS t0 FROM events e
-  JOIN s1 ON e.user_id = s1.u
-  WHERE e.event_type = 'click' AND e.ts >= s1.t0 GROUP BY 1
-), s3 AS (
-  SELECT e.user_id AS u, min(e.ts) AS t0 FROM events e
-  JOIN s2 ON e.user_id = s2.u
-  WHERE e.event_type = 'purchase' AND e.ts >= s2.t0 GROUP BY 1
+), sess AS (
+  SELECT user_id, event_id, ts, event_type,
+    sum(CASE WHEN prev_ts IS NULL
+               OR date_diff('microsecond', prev_ts, ts) > 1800000000
+             THEN 1 ELSE 0 END)
+      OVER (PARTITION BY user_id ORDER BY ts, event_id
+            ROWS UNBOUNDED PRECEDING) AS session_idx
+  FROM ordered
+), paths AS (
+  SELECT string_agg(event_type, '>' ORDER BY ts, event_id) AS path
+  FROM sess GROUP BY user_id, session_idx
 ), counts AS (
-  SELECT 1 AS step_idx, 'view' AS step,
-    CAST(count(*) AS BIGINT) AS n_users FROM s1
-  UNION ALL SELECT 2, 'click', count(*) FROM s2
-  UNION ALL SELECT 3, 'purchase', count(*) FROM s3
+  SELECT path, count(*) AS n_sessions FROM paths GROUP BY path
+  ORDER BY n_sessions DESC, path LIMIT 20
 )
-SELECT step_idx, step, n_users,
-  round(n_users / first_value(n_users) OVER (ORDER BY step_idx), 6)
-    AS rate_from_first,
-  round(n_users / coalesce(lag(n_users) OVER (ORDER BY step_idx),
-                           n_users), 6) AS rate_from_prev
-FROM counts ORDER BY step_idx
-""",
-        "cohort_retention": """
-WITH ev AS (
-  SELECT user_id AS u,
-    CAST(date_trunc('week', ts) AS DATE) AS wk, event_type
+SELECT path, n_sessions,
+  CAST(row_number() OVER (ORDER BY n_sessions DESC, path) AS BIGINT)
+    AS rnk
+FROM counts
+""")
+def _session_paths(spark, sf_dir):
+    """Top-20 session journeys: event-type paths per (user, session)
+    — composition of assign_session_ids + one ordered array aggregate.
+    The collect_list is SESSION-bounded (watermark-analogous bound in
+    batch), the path ranking runs over the path-vocabulary aggregate,
+    and ties break lexicographically for determinism."""
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    sess = W.assign_session_ids(ev, gap_minutes=30)
+    with_type = sess.join(
+        ev.select("event_id", "event_type"), "event_id"
+    )
+    paths = (
+        with_type.groupBy("user_id", "session_idx")
+        .agg(
+            F.concat_ws(
+                ">",
+                F.transform(
+                    F.sort_array(
+                        F.collect_list(
+                            F.struct("ts", "event_id", "event_type")
+                        )
+                    ),
+                    lambda s: s["event_type"],
+                ),
+            ).alias("path")
+        )
+        .groupBy("path")
+        .agg(F.count(F.lit(1)).alias("n_sessions"))
+    )
+    w = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
+    return (
+        paths.orderBy(F.desc("n_sessions"), F.asc("path"))
+        .limit(20)
+        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
+    )
+
+
+@_query("q_recursive_bfs", RECURSIVE_BFS_SQL)
+def _q_recursive_bfs(spark, sf_dir):
+    """Recursive-CTE surface (Spark 4 WITH RECURSIVE): 2-hop BFS
+    reachability with min-hop aggregation over a vocabulary-bounded
+    item graph. The recursion is hop-bounded (the UNION ALL frontier
+    cannot run away) and the edge set is restricted to a catalog
+    slice, so the per-iteration join stays basket-scale. The oracle
+    runs the byte-identical SQL text."""
+    from recmetrics_pyspark_spark.sources.io import register_views
+
+    register_views(spark, sf_dir, ("orders", "lineitem"))
+    return spark.sql(RECURSIVE_BFS_SQL)
+
+
+_query("q_unpivot_lineitem", """
+WITH long AS (
+  SELECT l_returnflag, 'l_quantity' AS metric, l_quantity AS value
+  FROM lineitem
+  UNION ALL
+  SELECT l_returnflag, 'l_extendedprice', l_extendedprice FROM lineitem
+  UNION ALL
+  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem
+  UNION ALL
+  SELECT l_returnflag, 'l_tax', l_tax FROM lineitem
+)
+SELECT l_returnflag, metric, CAST(count(*) AS BIGINT) AS n,
+  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value,
+  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_value
+FROM long GROUP BY l_returnflag, metric
+""")(Q.q_unpivot_lineitem)
+
+
+@_query("mixture_sample", """
+SELECT doc_id, source, keep_rate FROM (
+  SELECT doc_id, source,
+    CASE WHEN CAST(regexp_extract(source, '(\\d+)$', 1) AS BIGINT) % 2 = 0
+         THEN 0.9 ELSE 0.4 END AS keep_rate,
+    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 3)) AS BIGINT)
+      / 4096.0 AS u
+  FROM documents) t
+WHERE u < keep_rate
+""")
+def _mixture_sample(spark, sf_dir):
+    return T.mixture_sample(_docs(spark, sf_dir))
+
+
+_query("q_event_transitions", """
+WITH pairs AS (
+  SELECT event_type AS from_type,
+    lead(event_type) OVER (PARTITION BY user_id
+      ORDER BY ts, event_id) AS to_type
   FROM events
-), cohorts AS (
-  SELECT u, min(wk) AS cohort_week FROM ev
-  WHERE event_type = 'signup' GROUP BY u
-), sizes AS (
-  SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_size
-  FROM cohorts GROUP BY 1
-), j AS (
-  SELECT c.cohort_week,
-    CAST(date_diff('day', c.cohort_week, a.wk) / 7 AS INT)
-      AS week_offset,
-    a.u
-  FROM (SELECT DISTINCT u, wk FROM ev) a JOIN cohorts c USING (u)
-  WHERE date_diff('day', c.cohort_week, a.wk) BETWEEN 0 AND 56
+), counts AS (
+  SELECT from_type, to_type, count(*) AS n FROM pairs
+  WHERE to_type IS NOT NULL GROUP BY from_type, to_type
 )
-SELECT CAST(j.cohort_week AS VARCHAR) AS cohort_week, j.week_offset,
-  CAST(count(DISTINCT j.u) AS BIGINT) AS n_active,
-  s.cohort_size,
-  round(count(DISTINCT j.u) / s.cohort_size, 6) AS retention
-FROM j JOIN sizes s ON j.cohort_week = s.cohort_week
-GROUP BY j.cohort_week, j.week_offset, s.cohort_size
-ORDER BY 1, 2
-""",
-        "q1_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 6)
-    AS sum_qty,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
-    AS sum_base_price,
-  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6)))
-    AS DOUBLE), 6) AS sum_disc_price,
-  round(CAST(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax)
-    AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_charge,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-    / count(*), 6) AS avg_qty,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-    / count(*), 6) AS avg_price,
-  round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE)
-    / count(*), 6) AS avg_disc,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-        "q3_shipping_priority": """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-  round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10
-""",
-        "q4_order_priority": """
-SELECT o_orderpriority, count(*) AS order_count
+SELECT from_type, to_type, n,
+  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type), 6) AS p
+FROM counts
+""")(Q.q_event_transitions)
+
+
+@_query("normalized_dedup", """
+WITH hashed AS (
+  SELECT doc_id,
+    md5(trim(regexp_replace(
+      regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
+      ' +', ' ', 'g'))) AS norm_hash
+  FROM documents
+), groups AS (
+  SELECT norm_hash, count(*) AS n_copies, min(doc_id) AS canonical_id
+  FROM hashed GROUP BY norm_hash
+)
+SELECT h.doc_id, h.norm_hash, g.n_copies, g.canonical_id,
+  h.doc_id <> g.canonical_id AS is_dup
+FROM hashed h JOIN groups g USING (norm_hash)
+""")
+def _normalized_dedup(spark, sf_dir):
+    return D.normalized_dedup(_docs(spark, sf_dir))
+
+
+@_query("minhash_jaccard_estimate", _DOC_BASE
++ """
+, sig AS (
+  SELECT doc_id,
+    """
++ ",\n    ".join(
+    f"min(md5('{i}|' || s)) AS mh{i}" for i in range(8)
+)
++ """
+  FROM sh GROUP BY doc_id
+)
+SELECT j.id_a, j.id_b, j.jaccard,
+  round(("""
++ " + ".join(
+    f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(8)
+)
++ """) / 8.0, 6) AS mh_est,
+  round(abs(("""
++ " + ".join(
+    f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(8)
+)
++ """) / 8.0 - j.jaccard), 6) AS abs_err
+FROM jac j
+JOIN sig a ON j.id_a = a.doc_id
+JOIN sig b ON j.id_b = b.doc_id
+WHERE j.jaccard >= 0.1
+""")
+def _minhash_jaccard_estimate(spark, sf_dir):
+    return D.minhash_jaccard_estimate(_docs(spark, sf_dir), threshold=0.1)
+
+
+@_query("pack_sequences", """
+WITH b AS (
+  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
+    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+  FROM documents
+), c AS (
+  SELECT doc_id, shard, n_tokens,
+    CAST(sum(n_tokens) OVER (
+      PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS cum_tokens
+  FROM b
+)
+SELECT doc_id, shard, n_tokens, cum_tokens,
+  CAST((cum_tokens - n_tokens) // 512 AS BIGINT) AS bin_id
+FROM c
+""")
+def _pack_sequences(spark, sf_dir):
+    return T.pack_sequences(_docs(spark, sf_dir))
+
+
+@_query("bigram_lm", """
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+big AS (
+  SELECT toks[i] AS w1, toks[i + 1] AS w2
+  FROM d, unnest(generate_series(1, len(toks) - 1)) AS u(i)
+), c AS (
+  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM big GROUP BY w1, w2
+), s AS (
+  SELECT w1, w2, c12,
+    CAST(sum(c12) OVER (PARTITION BY w1) AS BIGINT) AS c1
+  FROM c
+)
+SELECT w1, w2, c12, c1,
+  round(CAST(c12 AS DOUBLE) / c1, 6) AS p_cond,
+  CAST(row_number() OVER (ORDER BY c12 DESC, w1, w2) AS BIGINT) AS rnk
+FROM s QUALIFY rnk <= 100
+""")
+def _bigram_lm(spark, sf_dir):
+    return T.bigram_lm(_docs(spark, sf_dir))
+
+
+@_query("vocab_encode", """
+WITH c AS (
+  SELECT t.w AS token, CAST(count(*) AS BIGINT) AS freq
+  FROM (SELECT string_split(text, ' ') AS toks FROM documents) d,
+       unnest(toks) AS t(w)
+  GROUP BY t.w
+)
+SELECT token,
+  CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT) AS token_id,
+  freq
+FROM c
+""")
+def _vocab_encode(spark, sf_dir):
+    return T.vocab_encode(_docs(spark, sf_dir))
+
+
+@_query("embedding_gram", """
+WITH e AS (SELECT embedding::DOUBLE[] AS v FROM embeddings),
+p AS (
+  SELECT a.i AS i, b.j AS j, v[a.i] * v[b.j] AS p
+  FROM e,
+       unnest(generate_series(1, len(v))) AS a(i),
+       unnest(generate_series(1, len(v))) AS b(j)
+  WHERE b.j >= a.i
+)
+SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
+  round(sum(p), 6) AS g
+FROM p GROUP BY i, j
+""")
+def _embedding_gram(spark, sf_dir):
+    return S.embedding_gram(_embs(spark, sf_dir))
+
+
+@_query("q_salted_user_spend", """
+SELECT c.c_mktsegment, count(*) AS n_events,
+  round(sum(e.value), 6) AS sum_value
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+GROUP BY c.c_mktsegment
+""")
+def _salted_user_spend(spark, sf_dir):
+    """Skew-mitigated fact⋈dim join witnessed by an oracle: salting
+    changes only physical distribution, so the result must equal the
+    plain join bit-for-bit (operators/skew.py::salted_join)."""
+    from recmetrics_pyspark_spark.operators.skew import salted_join
+
+    events = load_table(spark, sf_dir, "events").select(
+        F.col("user_id").alias("custkey"), "value"
+    )
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("custkey"), "c_mktsegment"
+    )
+    joined = salted_join(events, cust, on="custkey")
+    return joined.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 6).alias("sum_value"),
+    )
+
+
+_query("q_first_last_orders", """
+SELECT DISTINCT o_custkey AS custkey,
+  first_value(o_orderdate) OVER w AS first_date,
+  last_value(o_orderdate) OVER w AS last_date,
+  round(first_value(o_totalprice) OVER w, 6) AS first_price,
+  round(last_value(o_totalprice) OVER w, 6) AS last_price,
+  CAST(count(*) OVER w AS BIGINT) AS n_orders
 FROM orders
-WHERE o_orderdate >= TIMESTAMP '1993-07-01'
-  AND o_orderdate < TIMESTAMP '1993-10-01'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-        "q5_region_volume": """
-SELECT n_name, round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1994-01-01'
-  AND o_orderdate < TIMESTAMP '1995-01-01'
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""",
-        "q6_forecast_revenue": """
-SELECT round(CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1994-01-01'
-  AND l_shipdate < TIMESTAMP '1995-01-01'
-  AND l_discount >= 0.03 AND l_discount <= 0.07
-  AND l_quantity < 24
-""",
-        "q10_returned_items": """
-SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment,
-  round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1993-10-01'
-  AND o_orderdate < TIMESTAMP '1994-01-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
-ORDER BY revenue DESC, c_custkey
-LIMIT 20
-""",
-        "q18_large_orders": """
-WITH big AS (
-  SELECT l_orderkey, sum(l_quantity) AS sum_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 300
+WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+""")(Q.q_first_last_orders)
+
+
+@_query("pagerank_items", _pagerank_oracle())
+def _pagerank_items(spark, sf_dir):
+    """PageRank over the item co-occurrence graph (edges = item pairs
+    bought together by ≥2 users, both directions) — 3 fixed rounds,
+    damping 0.85 (operators/graph.py::pagerank_from_edges)."""
+    from recmetrics_pyspark_spark.operators.graph import pagerank_from_edges
+
+    inter = R.interactions(spark, sf_dir)
+    # item_similarity_pairs is the persisted intermediate shared with
+    # item_item_topk — same canonicalized plan, so a session that ran
+    # the item queries reuses the cache and the graph build is free
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    edges = pairs.select(
+        F.col("ia").alias("src"), F.col("ib").alias("dst")
+    ).unionByName(
+        pairs.select(F.col("ib").alias("src"), F.col("ia").alias("dst"))
+    )
+    # the union of both pair directions is symmetric BY CONSTRUCTION,
+    # so the operator's entry check (one extra edge-scale job) would be
+    # pure overhead here — 'ignore' keeps the documented fast path
+    pr = pagerank_from_edges(
+        edges, iters=3, damping=0.85, on_asymmetric="ignore"
+    )
+    return pr.select(F.col("node").alias("item_id"), "pagerank")
+
+
+@_query("events_dedup_hourly", """
+SELECT user_id, event_type, hour, event_id, ts, value FROM (
+  SELECT user_id, event_type, date_trunc('hour', ts) AS hour,
+    event_id, ts, round(value, 6) AS value,
+    row_number() OVER (
+      PARTITION BY user_id, event_type, date_trunc('hour', ts)
+      ORDER BY ts, event_id) AS rn
+  FROM events) t
+WHERE rn = 1
+""")
+def _events_dedup_hourly(spark, sf_dir):
+    """Batch twin of the streaming stateful dedup: first event per
+    (user, type, hour), deterministic (ts, event_id) tiebreak."""
+    ev = load_table(spark, sf_dir, "events")
+    out = W.dedup_first_per_window(
+        ev, ["user_id", "event_type"], window="hour", tiebreak="event_id"
+    )
+    return out.select(
+        "user_id", "event_type", F.col("bucket").alias("hour"),
+        "event_id", "ts", F.round("value", 6).alias("value"),
+    )
+
+
+@_query("temporal_split", """
+WITH cut AS (
+  SELECT quantile_cont(epoch(ts), 0.8) AS p80 FROM events
 )
-SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-  round(sum_qty, 6) AS sum_qty
-FROM big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-""",
-        "q_top_parts_per_brand": """
-WITH rev AS (
-  SELECT l_partkey, round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
-  FROM lineitem GROUP BY l_partkey
+SELECT split, count(*) AS n_events, min(ts) AS min_ts, max(ts) AS max_ts
+FROM (
+  SELECT CASE WHEN epoch(ts) <= cut.p80 THEN 'train' ELSE 'eval' END AS split,
+    ts
+  FROM events CROSS JOIN cut) t
+GROUP BY split
+""")
+def _temporal_split(spark, sf_dir):
+    """Leakage-safe event-time split: everything at or before the exact
+    80th percentile of event time trains, the rest evaluates. The
+    cutoff is ONE row (exact percentile aggregate) broadcast back over
+    the scan — the corpus never shuffles for the split itself."""
+    ev = load_table(spark, sf_dir, "events")
+    # ts is TIMESTAMP_NTZ (not castable to double); tz-free micros since
+    # epoch keeps the cutoff affine-equivalent to the oracle's epoch(ts)
+    es = ev.withColumn(
+        "es",
+        F.expr(
+            "cast(timestampdiff(MICROSECOND,"
+            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) as double)"
+        ),
+    )
+    cut = es.agg(F.percentile("es", F.lit(0.8)).alias("p80"))
+    return (
+        es.crossJoin(F.broadcast(cut))
+        .withColumn(
+            "split",
+            F.when(F.col("es") <= F.col("p80"), F.lit("train")).otherwise(
+                F.lit("eval")
+            ),
+        )
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
+        )
+    )
+
+
+_query("q_revenue_streaks", """
+WITH daily AS (
+  SELECT o_orderdate AS d, round(sum(o_totalprice), 6) AS rev
+  FROM orders GROUP BY o_orderdate
+), med AS (SELECT quantile_cont(rev, 0.5) AS m FROM daily),
+hot AS (SELECT d, rev FROM daily CROSS JOIN med WHERE rev > m),
+isl AS (
+  SELECT d, rev,
+    CAST(d AS DATE) - CAST(row_number() OVER (ORDER BY d) AS INTEGER) AS grp
+  FROM hot
+), s AS (
+  SELECT min(d) AS streak_start, max(d) AS streak_end,
+    CAST(count(*) AS BIGINT) AS n_days, round(sum(rev), 6) AS total_rev
+  FROM isl GROUP BY grp
 )
-SELECT p_brand, p_partkey, revenue, brand_rank FROM (
-  SELECT p_brand, p_partkey, revenue,
-    CAST(row_number() OVER (PARTITION BY p_brand
-      ORDER BY revenue DESC, p_partkey) AS INTEGER) AS brand_rank
-  FROM rev JOIN part ON l_partkey = p_partkey) t
-WHERE brand_rank <= 3
-ORDER BY p_brand, brand_rank
-""",
-        "recommendations_topk": ORACLE_BASE
-        + """
-SELECT user_id, item_id, rnk FROM recs
-""",
-        "coverage": ORACLE_BASE
-        + """
-, r AS (SELECT count(DISTINCT item_id) AS rec_items FROM recs),
-c AS (SELECT count(DISTINCT item_id) AS catalog_items FROM interactions)
-SELECT rec_items, catalog_items,
-  round(CAST(rec_items AS DOUBLE)/catalog_items, 6) AS coverage
-FROM r, c
-""",
-        # self-checking sketch twins: exact columns recomputed here, the
-        # in-bounds flag pinned TRUE (Spark side turns it FALSE if the
-        # sketch drifts past its documented error bound)
-        "coverage_approx": ORACLE_BASE
-        + """
+SELECT streak_start, streak_end, n_days, total_rev,
+  CAST(row_number() OVER (ORDER BY n_days DESC, streak_start) AS BIGINT) AS rnk
+FROM s QUALIFY rnk <= 10
+""")(Q.q_revenue_streaks)
+
+
+@_query("attribution_last_touch", """
+WITH p AS (
+  SELECT user_id, event_id, ts, round(value, 6) AS value
+  FROM events WHERE event_type = 'purchase'
+), c AS (
+  SELECT user_id, ts, max(event_id) AS click_eid
+  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
+)
+SELECT p.user_id, p.event_id, p.ts, p.value,
+  c.click_eid AS click_eid_asof, c.ts AS click_ts,
+  CASE WHEN c.click_eid IS NOT NULL
+       THEN CAST(floor(epoch(p.ts)) AS BIGINT)
+            - CAST(floor(epoch(c.ts)) AS BIGINT) END AS gap_s,
+  c.click_eid IS NOT NULL AS attributed
+FROM p ASOF LEFT JOIN c
+  ON p.user_id = c.user_id AND p.ts >= c.ts
+""")
+def _attribution_last_touch(spark, sf_dir):
+    """Last-touch marketing attribution: each purchase is credited to
+    the user's most recent click at or before it (point-in-time as-of
+    lookup — operators/joins.py::asof_join, one key-partitioned sort,
+    no per-row range probe). Purchases with no prior click are organic."""
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "event_id", "ts", F.round("value", 6).alias("value")
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("event_id").alias("click_eid"))
+    )
+    out = J.asof_join(purchases, clicks, on="user_id", right_cols=["click_eid"])
+    sec = F.unix_timestamp("ts")
+    csec = F.unix_timestamp("ts_asof")
+    return out.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.col("click_eid_asof"),
+        F.col("ts_asof").alias("click_ts"),
+        F.when(F.col("click_eid_asof").isNotNull(), sec - csec).alias("gap_s"),
+        F.col("click_eid_asof").isNotNull().alias("attributed"),
+    )
+
+
+@_query("wau_sliding", """
+WITH daily AS (
+  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
+), maxd AS (SELECT max(CAST(ts AS DATE)) AS maxd FROM events),
+contrib AS (
+  SELECT user_id, d + CAST(i AS INTEGER) AS day
+  FROM daily, unnest(generate_series(0, 6)) AS u(i)
+)
+SELECT strftime(day, '%Y-%m-%d') AS day, count(DISTINCT user_id) AS wau
+FROM contrib CROSS JOIN maxd
+WHERE day <= maxd
+GROUP BY day
+""")
+def _wau_sliding(spark, sf_dir):
+    """Trailing-7-day active users per day, computed WITHOUT a non-equi
+    window join: each (day, user) activity row is exploded into the 7
+    future days it keeps the user 'active' for, then one distinct-count
+    per target day. The explode is a fixed ×7 fan-out of the DAY-level
+    distinct table (calendar × users, already aggregated), and the
+    count shuffles on day — the plan every rolling-DAU/WAU pipeline
+    wants at scale (the alternative, a day-range join, is a
+    nested-loop over the calendar)."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.select(
+        F.to_date("ts").alias("d"), "user_id"
+    ).distinct()
+    contrib = daily.select(
+        "user_id", F.explode(F.expr("sequence(0, 6)")).alias("i"), "d"
+    ).select("user_id", F.expr("date_add(d, i)").alias("day"))
+    last_day = ev.agg(F.max(F.to_date("ts")).alias("maxd"))
+    return (
+        contrib.crossJoin(F.broadcast(last_day))
+        .filter(F.col("day") <= F.col("maxd"))
+        .groupBy("day")
+        .agg(F.countDistinct("user_id").alias("wau"))
+        # day as yyyy-MM-dd TEXT: pandas widens bare DATE columns to
+        # midnight timestamps on the oracle side, so the portable
+        # representation is the formatted string
+        .select(F.date_format("day", "yyyy-MM-dd").alias("day"), "wau")
+    )
+
+
+# self-checking sketch twins: exact columns recomputed here, the
+# in-bounds flag pinned TRUE (Spark side turns it FALSE if the
+# sketch drifts past its documented error bound)
+@_query("coverage_approx", ORACLE_BASE
++ """
 , r AS (SELECT count(DISTINCT item_id) AS rec_items FROM recs),
 c AS (SELECT count(DISTINCT item_id) AS catalog_items FROM interactions)
 SELECT rec_items, catalog_items,
   round(CAST(rec_items AS DOUBLE)/catalog_items, 6) AS coverage,
   TRUE AS sketch_within_bounds
 FROM r, c
-""",
-        "quantiles_approx": """
+""")
+def _coverage_approx(spark, sf_dir):
+    # SELF-CHECKING sketch: the HLL estimate (approx_count_distinct,
+    # rsd=0.01) is computed alongside the exact distinct, and the query
+    # returns the exact values plus a bounds flag (|approx-exact| <= 5%
+    # = 5x the configured rsd). The oracle recomputes the exact columns
+    # and pins the flag TRUE — a drifting sketch turns the driver row
+    # red. Upgraded from rows-only.
+    #
+    # Round-13 single-pass shape (verdict item 6, guide §2.3): the
+    # previous mixed countDistinct + approx_count_distinct aggregate
+    # made the planner key the PARTIAL HLL sketch by item — 1,640
+    # bigint register columns PER DISTINCT ITEM through two exchanges
+    # (plans/r13/coverage_approx_before.txt op (3): "Results [1640]").
+    # Distinct-first instead: reduce to the distinct item set (narrow
+    # 8-byte rows, map-side partial distinct), then ONE global
+    # aggregate computes count (== countDistinct over the raw rows)
+    # and the HLL estimate (bit-identical: HLL registers are a max
+    # over hashed DISTINCT values — duplicate inserts are idempotent,
+    # so the sketch over the distinct set equals the sketch over the
+    # raw rows). Both aggregates stay — the query's point is the
+    # self-check.
+    rec_items_d = _synth_recs(spark, sf_dir).select("item").distinct()
+    rec = rec_items_d.agg(
+        F.count("item").alias("rec_items"),
+        F.approx_count_distinct("item", 0.01).alias("rec_approx"),
+    )
+    cat_items_d = (
+        R.interactions(spark, sf_dir).select("item").distinct()
+    )
+    cat = cat_items_d.agg(
+        F.count("item").alias("catalog_items"),
+        F.approx_count_distinct("item", 0.01).alias("cat_approx"),
+    )
+    from pyspark.sql.functions import broadcast
+
+    ok = (
+        F.abs(F.col("rec_approx") - F.col("rec_items"))
+        <= 0.05 * F.col("rec_items")
+    ) & (
+        F.abs(F.col("cat_approx") - F.col("catalog_items"))
+        <= 0.05 * F.col("catalog_items")
+    )
+    return rec.crossJoin(broadcast(cat)).select(
+        "rec_items",
+        "catalog_items",
+        F.round(F.col("rec_items") / F.col("catalog_items"), 6).alias(
+            "coverage"
+        ),
+        ok.alias("sketch_within_bounds"),
+    )
+
+
+@_query("quantiles_approx", """
 SELECT l_returnflag,
   round(quantile_cont(l_extendedprice, 0.5), 6) AS p50,
   round(quantile_cont(l_extendedprice, 0.95), 6) AS p95,
   TRUE AS sketch_within_bounds
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-""",
-        # ---- round-3 curation operators (functions/curation.py) ----
-        "dpo_pair_mining": _DPO_PAIRS_SQL,
-        "stratified_metrics": """
+""")
+def _quantiles_approx(spark, sf_dir):
+    # SELF-CHECKING sketch percentiles: percentile_approx(accuracy=1000)
+    # guarantees rank error <= n/1000; the flag asserts each estimate
+    # lies between the exact (p-0.01) and (p+0.01) quantiles (10x
+    # headroom), all computed in the one grouped aggregate. The oracle
+    # recomputes the exact quantiles and pins the flag TRUE.
+    li = load_table(spark, sf_dir, "lineitem")
+    # ARRAY-form percentile: all six exact quantiles share ONE sort
+    # buffer, and both sketch quantiles share one t-digest (six
+    # separate aggregates measured 7.1s vs ~3.6s for the array form
+    # at sf0.1 — same cost class as the exact q_quantiles_by_flag)
+    g = li.groupBy("l_returnflag").agg(
+        F.expr(
+            "percentile(l_extendedprice,"
+            " array(0.49, 0.5, 0.51, 0.94, 0.95, 0.96))"
+        ).alias("ex"),
+        F.expr(
+            "percentile_approx(l_extendedprice, array(0.5, 0.95), 1000)"
+        ).alias("ap"),
+    )
+    ok = (
+        F.col("ap")[0].between(F.col("ex")[0], F.col("ex")[2])
+        & F.col("ap")[1].between(F.col("ex")[3], F.col("ex")[5])
+    )
+    return g.select(
+        "l_returnflag",
+        F.round(F.col("ex")[1], 6).alias("p50"),
+        F.round(F.col("ex")[4], 6).alias("p95"),
+        ok.alias("sketch_within_bounds"),
+    ).orderBy("l_returnflag")
+
+
+@_query("balanced_sample", """
+WITH counts AS (
+  SELECT lang, count(*) AS n FROM documents GROUP BY lang
+), mn AS (SELECT min(n) AS min_n FROM counts),
+th AS (
+  SELECT lang,
+    CAST(floor(4294967296.0 * min_n / n) AS BIGINT) AS u_threshold
+  FROM counts, mn
+), keyed AS (
+  SELECT lang, doc_id,
+    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+  FROM documents
+)
+SELECT k.lang, count(*) AS n_docs, min(doc_id) AS first_doc
+FROM keyed k JOIN th ON k.lang = th.lang
+WHERE u < u_threshold
+GROUP BY k.lang ORDER BY k.lang
+""")
+def _balanced_sample(spark, sf_dir):
+    # Deterministic class rebalancing via hash-threshold selection: each
+    # lang keeps the rows whose uniform 32-bit md5 key falls under
+    # floor(2^32 * min_n / n_lang).  Two tiny aggregates + a broadcast
+    # join + a filter -- no per-class window sort, so at 100 TB the
+    # dominant class is never a single reducer's sort (the one genuine
+    # scale-killer flagged in the r2 verdict).  Fully deterministic and
+    # portable: the oracle mirrors the identical key + threshold math.
+    docs = _docs(spark, sf_dir)
+    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    min_count = counts.agg(F.min("n").alias("min_n"))
+    thresholds = counts.crossJoin(F.broadcast(min_count)).select(
+        "lang",
+        F.floor(
+            F.lit(4294967296.0) * F.col("min_n") / F.col("n")
+        ).alias("u_threshold"),
+    )
+    key = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    kept = (
+        docs.withColumn("u", key)
+        .join(F.broadcast(thresholds), "lang")
+        .filter(F.col("u") < F.col("u_threshold"))
+    )
+    return (
+        kept.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("doc_id").alias("first_doc"),
+        )
+        .orderBy("lang")
+    )
+
+
+@_query("simhash_signatures", f"""
+SELECT doc_id, {_simhash_sql_expr()} AS simhash
+FROM ({_SIMHASH_HS_SQL})
+""")
+def _simhash(spark, sf_dir):
+    return D.simhash_signatures(_docs(spark, sf_dir))
+
+
+@_query("simhash_near_pairs", f"""
+WITH sig AS (
+  SELECT doc_id, {_simhash_sql_expr()} AS simhash
+  FROM ({_SIMHASH_HS_SQL})
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+  a.simhash AS sh_a, b.simhash AS sh_b,
+  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
+""")
+def _simhash_near(spark, sf_dir):
+    return D.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=1)
+
+
+@_query("neardup_components", _neardup_components_oracle())
+def _neardup_components(spark, sf_dir):
+    return _neardup_comps(spark, sf_dir)
+
+
+@_query("coverage", ORACLE_BASE
++ """
+, r AS (SELECT count(DISTINCT item_id) AS rec_items FROM recs),
+c AS (SELECT count(DISTINCT item_id) AS catalog_items FROM interactions)
+SELECT rec_items, catalog_items,
+  round(CAST(rec_items AS DOUBLE)/catalog_items, 6) AS coverage
+FROM r, c
+""")
+def _coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # one shared distinct-pairs build feeds both sides: recs derive
+    # from it, and |distinct items in ratings| == |distinct items in
+    # pairs| by construction, so the raw interactions scan happens once.
+    pairs = R.distinct_pairs(spark, sf_dir)
+    recs = _synth_recs(spark, sf_dir).select(
+        F.col("item").alias("item_id")
+    )
+    ratings = pairs.select(F.col("item").alias("item_id"))
+    return M.coverage(recs, ratings, col_item="item_id")
+
+
+@_query("personalization", ORACLE_BASE
++ """
+, sizes AS (SELECT user_id, count(*) AS sz FROM upairs GROUP BY user_id),
+wtd AS (SELECT p.user_id, p.item_id, 1.0/sqrt(sz) AS w
+        FROM upairs p JOIN sizes USING (user_id)),
+isum AS (SELECT item_id, sum(w) AS sw, sum(w*w) AS sww
+         FROM wtd GROUP BY item_id),
+s AS (SELECT coalesce(sum((sw*sw - sww) / 2.0), 0.0) AS s FROM isum),
+n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM sizes)
+SELECT round(1.0 - 2.0*s/(n*(n-1)), 6) AS personalization FROM s, n
+""")
+def _personalization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = R.interactions(spark, sf_dir)
+    return M.personalization(pairs, col_index="user", col_columns="item")
+
+
+@_query("minhash_lsh_pairs", _MINHASH_LSH_SQL)
+def _minhash_lsh(spark, sf_dir):
+    return D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
+
+
+@_query("dpo_pair_mining", _DPO_PAIRS_SQL)
+def _dpo_pair_mining(spark, sf_dir):
+    """Preference-pair mining for DPO-style training data: per user,
+    (top-rated, bottom-rated) item with deterministic tie-breaks
+    (functions/curation.py::dpo_pair_mining)."""
+    return C.dpo_pair_mining(
+        R.interactions(spark, sf_dir, with_rating=True), min_margin=1.0
+    )
+
+
+@_query("stratified_metrics", """
 WITH per AS (
   SELECT lang, count(*) AS n_docs,
     round(avg(length(text)), 6) AS avg_chars,
@@ -6981,8 +3517,47 @@ WITH per AS (
 SELECT lang, n_docs, avg_chars, avg_tokens,
   round((avg_chars - mu) / nullif(sigma, 0), 6) AS len_zscore
 FROM per, st ORDER BY lang
-""",
-        "doc_cooccurrence_pmi": """
+""")
+def _stratified_metrics(spark, sf_dir):
+    return C.stratified_metrics(_docs(spark, sf_dir))
+
+
+@_query("q_window_dedup_rank", """
+WITH first AS (
+  SELECT event_type, value FROM (
+    SELECT event_type, value,
+      row_number() OVER (PARTITION BY user_id, event_type
+        ORDER BY ts, event_id) AS rn
+    FROM events) t
+  WHERE rn = 1
+)
+SELECT event_type, count(*) AS n_first,
+  round(avg(value), 6) AS avg_first_value
+FROM first GROUP BY event_type ORDER BY event_type
+""")
+def _q_window_dedup_rank(spark, sf_dir):
+    """Keep-first-per-key dedup (the DISTINCT ON shape): the earliest
+    event per (user, event_type), then per-type survivor stats."""
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id", "event_type").orderBy(
+        "ts", "event_id"
+    )
+    first = ev.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") == 1
+    )
+    return (
+        first.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_first"),
+            F.round(F.avg("value"), 6).alias("avg_first_value"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@_query("doc_cooccurrence_pmi", """
 WITH d AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
 ), tk AS (
@@ -7008,8 +3583,12 @@ SELECT CAST(row_number() OVER (ORDER BY pmi DESC, tok_a, tok_b)
             AS BIGINT) AS rnk,
   tok_a, tok_b, n_ab, pmi
 FROM scored QUALIFY rnk <= 50
-""",
-        "entity_extract_stats": r"""
+""")
+def _doc_cooccurrence_pmi(spark, sf_dir):
+    return C.doc_cooccurrence_pmi(_docs(spark, sf_dir))
+
+
+@_query("entity_extract_stats", r"""
 SELECT lang, count(*) AS n_docs,
   CAST(sum(len(regexp_extract_all(text, '\b[A-Z][a-z]+'))) AS BIGINT)
     AS capitalized_words,
@@ -7020,8 +3599,12 @@ SELECT lang, count(*) AS n_docs,
   round(avg(len(regexp_extract_all(text, '\b[A-Z][a-z]+'))), 6)
     AS avg_cap_per_doc
 FROM documents GROUP BY lang ORDER BY lang
-""",
-        "seqlen_histogram": """
+""")
+def _entity_extract_stats(spark, sf_dir):
+    return C.entity_extract_stats(_docs(spark, sf_dir))
+
+
+@_query("seqlen_histogram", """
 WITH per AS (
   SELECT CASE WHEN len(string_split(text, ' ')) <= 1 THEN 1
     ELSE (1::BIGINT << length(bin(len(string_split(text, ' ')) - 1)))
@@ -7037,70 +3620,12 @@ SELECT len_bucket, n_docs, n_tokens,
   round(CAST(sum(n_tokens) OVER (ORDER BY len_bucket
       ROWS UNBOUNDED PRECEDING) AS DOUBLE) / tot, 6) AS cum_token_share
 FROM agg, tot ORDER BY len_bucket
-""",
-        "tokenizer_fertility": """
-SELECT lang,
-  CAST(sum(len(regexp_extract_all(text,
-    '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]'))) AS BIGINT) AS n_pieces,
-  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_words,
-  round(CAST(sum(len(regexp_extract_all(text,
-      '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]'))) AS DOUBLE)
-    / sum(len(string_split(text, ' '))), 6) AS fertility
-FROM documents GROUP BY lang ORDER BY lang
-""",
-        "loss_mask_spans": f"""
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-)
-SELECT doc_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
-     + len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-     AS BIGINT) AS n_masked,
-  CAST(len(toks)
-     - len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
-     - len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-     AS BIGINT) AS n_loss_tokens,
-  round(CAST(len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
-     + len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-     AS DOUBLE) / len(toks), 6) AS mask_ratio
-FROM d
-""",
-        "curriculum_order": """
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), sc AS (
-  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS n_tok,
-    round(least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.5
-      + (CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum')
-          AS DOUBLE) / CAST(len(toks) AS DOUBLE)) / 10.0 * 0.5,
-      6) AS difficulty
-  FROM d
-), st AS (
-  SELECT doc_id, n_tok, difficulty,
-    CAST(ntile(4) OVER (ORDER BY difficulty, doc_id) AS BIGINT) AS stage
-  FROM sc
-)
-SELECT stage, count(*) AS n_docs,
-  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-  round(min(difficulty), 6) AS min_difficulty,
-  round(max(difficulty), 6) AS max_difficulty
-FROM st GROUP BY stage ORDER BY stage
-""",
-        "q_window_dedup_rank": """
-WITH first AS (
-  SELECT event_type, value FROM (
-    SELECT event_type, value,
-      row_number() OVER (PARTITION BY user_id, event_type
-        ORDER BY ts, event_id) AS rn
-    FROM events) t
-  WHERE rn = 1
-)
-SELECT event_type, count(*) AS n_first,
-  round(avg(value), 6) AS avg_first_value
-FROM first GROUP BY event_type ORDER BY event_type
-""",
-        "freshness_decay_sample": """
+""")
+def _seqlen_histogram(spark, sf_dir):
+    return C.seqlen_histogram(_docs(spark, sf_dir))
+
+
+@_query("freshness_decay_sample", """
 WITH mx AS (SELECT max(year(o_orderdate)) AS max_year FROM orders),
 k AS (
   SELECT year(o_orderdate) AS o_year,
@@ -7120,9 +3645,2100 @@ SELECT o_year, count(*) AS n_orders,
     / count(*), 6) AS achieved_rate,
   target_rate
 FROM f GROUP BY o_year, target_rate ORDER BY o_year
-""",
-        # ---- round-3 TPC-H correlation shapes (plans/relational4.py) ----
-        "q2_min_cost_supplier": """
+""")
+def _freshness_decay_sample(spark, sf_dir):
+    """Freshness-weighted deterministic sampling: keep orders with
+    probability 0.5^age_years via the same 32-bit md5-prefix threshold
+    trick as balanced_sample (no RNG, no window; one broadcast of the
+    max-year row). Output: per-year achieved vs target rate."""
+    orders = load_table(spark, sf_dir, "orders")
+    yr = F.year("o_orderdate")
+    mx = orders.agg(F.max(yr).alias("max_year"))
+    u = F.conv(
+        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    keyed = orders.select(
+        yr.alias("o_year"), u.alias("u")
+    ).crossJoin(F.broadcast(mx))
+    rate = F.pow(F.lit(0.5), (F.col("max_year") - F.col("o_year")))
+    flagged = keyed.select(
+        "o_year",
+        "u",
+        F.floor(F.lit(4294967296.0) * rate).alias("u_threshold"),
+        F.round(rate, 6).alias("target_rate"),
+    )
+    return (
+        flagged.groupBy("o_year", "target_rate")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(
+                F.when(F.col("u") < F.col("u_threshold"), 1).otherwise(0)
+            ).cast("bigint").alias("n_kept"),
+        )
+        .select(
+            "o_year",
+            "n_orders",
+            "n_kept",
+            F.round(F.col("n_kept") / F.col("n_orders"), 6).alias(
+                "achieved_rate"
+            ),
+            "target_rate",
+        )
+        .orderBy("o_year")
+    )
+
+
+@_query("cross_lingual_contamination", """
+WITH d AS (
+  SELECT doc_id, lang, text, string_split(text, ' ') AS toks
+  FROM documents
+), fp AS (
+  SELECT doc_id, lang,
+    CASE WHEN len(toks) >= 3 THEN
+      list_min(list_transform(generate_series(1, len(toks) - 2),
+        i -> md5(array_to_string(list_slice(toks, i, i + 2), ' '))))
+    ELSE md5(text) END AS shingle_fp
+  FROM d
+)
+SELECT shingle_fp,
+  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+  count(*) AS n_docs,
+  min(doc_id) AS min_doc,
+  array_to_string(list_sort(list(DISTINCT lang)), ',') AS langs
+FROM fp GROUP BY shingle_fp HAVING count(DISTINCT lang) > 1
+""")
+def _cross_lingual_contamination(spark, sf_dir):
+    """Docs whose min-shingle fingerprint (functions/text.py::
+    doc_fingerprint) collides across DIFFERENT languages — the
+    translated/transliterated near-dup leak a multilingual corpus has
+    to quarantine. One fingerprint scan + one fingerprint-scale
+    aggregate; langs joined into a sorted CSV string so the output is
+    deterministic and hash-comparable."""
+    docs = _docs(spark, sf_dir)
+    fp = T.doc_fingerprint(docs).join(
+        docs.select("doc_id", "lang"), "doc_id"
+    )
+    groups = (
+        fp.groupBy("shingle_fp")
+        .agg(
+            F.countDistinct("lang").alias("n_langs"),
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("doc_id").alias("min_doc"),
+            F.concat_ws(
+                ",", F.sort_array(F.collect_set("lang"))
+            ).alias("langs"),
+        )
+        .filter(F.col("n_langs") > 1)
+    )
+    return groups.select(
+        "shingle_fp", "n_langs", "n_docs", "min_doc", "langs"
+    )
+
+
+@_query("tokenizer_fertility", """
+SELECT lang,
+  CAST(sum(len(regexp_extract_all(text,
+    '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]'))) AS BIGINT) AS n_pieces,
+  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_words,
+  round(CAST(sum(len(regexp_extract_all(text,
+      '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]'))) AS DOUBLE)
+    / sum(len(string_split(text, ' '))), 6) AS fertility
+FROM documents GROUP BY lang ORDER BY lang
+""")
+def _tokenizer_fertility(spark, sf_dir):
+    return C.tokenizer_fertility(_docs(spark, sf_dir))
+
+
+@_query("loss_mask_spans", f"""
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+)
+SELECT doc_id,
+  CAST(len(toks) AS BIGINT) AS n_tokens,
+  CAST(len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
+     + len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+     AS BIGINT) AS n_masked,
+  CAST(len(toks)
+     - len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
+     - len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+     AS BIGINT) AS n_loss_tokens,
+  round(CAST(len(list_filter(toks, x -> regexp_matches(x, '^[0-9]+$')))
+     + len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+     AS DOUBLE) / len(toks), 6) AS mask_ratio
+FROM d
+""")
+def _loss_mask_spans(spark, sf_dir):
+    return C.loss_mask_spans(_docs(spark, sf_dir))
+
+
+@_query("curriculum_order", """
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), sc AS (
+  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS n_tok,
+    round(least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.5
+      + (CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum')
+          AS DOUBLE) / CAST(len(toks) AS DOUBLE)) / 10.0 * 0.5,
+      6) AS difficulty
+  FROM d
+), st AS (
+  SELECT doc_id, n_tok, difficulty,
+    CAST(ntile(4) OVER (ORDER BY difficulty, doc_id) AS BIGINT) AS stage
+  FROM sc
+)
+SELECT stage, count(*) AS n_docs,
+  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+  round(min(difficulty), 6) AS min_difficulty,
+  round(max(difficulty), 6) AS max_difficulty
+FROM st GROUP BY stage ORDER BY stage
+""")
+def _curriculum_order(spark, sf_dir):
+    return C.curriculum_order(_docs(spark, sf_dir))
+
+
+@_query("recommendations_topk", ORACLE_BASE
++ """
+SELECT user_id, item_id, rnk FROM recs
+""")
+def _recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _synth_recs(spark, sf_dir).select(
+        F.col("user").alias("user_id"),
+        F.col("item").alias("item_id"),
+        F.col("rnk").cast("long").alias("rnk"),
+    )
+
+
+@_query("novelty", ORACLE_BASE
++ """
+, u AS (SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS u FROM interactions),
+pop AS (SELECT item_id, count(*) AS pop FROM interactions GROUP BY item_id),
+lg AS (SELECT item_id, -log2(pop/u) AS log2_si FROM pop, u),
+j AS (SELECT r.user_id, lg.log2_si FROM recs r LEFT JOIN lg USING (item_id)),
+per_user AS (SELECT user_id, sum(log2_si)/count(*) AS msi FROM j GROUP BY user_id)
+SELECT round(avg(msi), 6) AS novelty FROM per_user
+""")
+def _novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sales = R.interactions(spark, sf_dir)
+    recs = _synth_recs(spark, sf_dir)
+    return M.novelty(sales, recs, col_user="user", col_item="item")
+
+
+@_query("novelty_per_user", ORACLE_BASE
++ """
+, u AS (SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS u FROM interactions),
+pop AS (SELECT item_id, count(*) AS pop FROM interactions GROUP BY item_id),
+lg AS (SELECT item_id, -log2(pop/u) AS log2_si FROM pop, u),
+j AS (SELECT r.user_id, lg.log2_si FROM recs r LEFT JOIN lg USING (item_id))
+SELECT user_id, round(sum(log2_si)/count(*), 6) AS msi FROM j GROUP BY user_id
+""")
+def _novelty_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sales = R.interactions(spark, sf_dir)
+    recs = _synth_recs(spark, sf_dir)
+    per_user = M.novelty_per_user(sales, recs, col_user="user", col_item="item")
+    return per_user.select(
+        F.col("user").alias("user_id"), F.round("msi", 6).alias("msi")
+    )
+
+
+@_query("personalization_weighted", ORACLE_BASE
++ """
+, vw AS (
+  SELECT user_id, item_id, avg(rating) AS v FROM interactions
+  GROUP BY user_id, item_id
+), nrm AS (
+  SELECT user_id, sqrt(sum(v*v)) AS nrm FROM vw GROUP BY user_id
+), wtd AS (
+  SELECT vw.user_id, vw.item_id, vw.v / nrm.nrm AS w
+  FROM vw JOIN nrm USING (user_id)
+), isum AS (
+  SELECT item_id, sum(w) AS sw, sum(w*w) AS sww FROM wtd GROUP BY item_id
+), s AS (
+  SELECT coalesce(sum((sw*sw - sww) / 2.0), 0.0) AS s FROM isum
+), n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nrm)
+SELECT round(1.0 - 2.0*s/(n*(n-1)), 6) AS personalization_weighted
+FROM s, n
+""")
+def _personalization_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Rating-weighted variant (compat.personalization_pandas semantics):
+    # user vectors weighted by avg rating instead of binary.
+    inter = R.interactions(spark, sf_dir, with_rating=True)
+    vecs = inter.groupBy("user", "item").agg(F.avg("rating").alias("v"))
+    norms = vecs.groupBy("user").agg(
+        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
+    )
+    wtd = vecs.join(norms, "user").select(
+        "item", (F.col("v") / F.col("nrm")).alias("w")
+    )
+    # same closed form as metrics.personalization: per-item
+    # Σ_{u<v} w_u·w_v = ((Σw)² − Σw²)/2 — no self-join, O(nnz)
+    isum = wtd.groupBy("item").agg(
+        F.sum("w").alias("sw"), F.sum(F.col("w") * F.col("w")).alias("sww")
+    )
+    s = isum.agg(
+        F.coalesce(
+            F.sum((F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)),
+            F.lit(0.0),
+        ).alias("s")
+    )
+    n = norms.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    from pyspark.sql.functions import broadcast as bc
+
+    return s.crossJoin(bc(n)).select(
+        F.round(
+            F.lit(1.0) - F.lit(2.0) * F.col("s") / (F.col("n") * (F.col("n") - 1)),
+            6,
+        ).alias("personalization_weighted")
+    )
+
+
+@_query("intra_list_similarity", ORACLE_BASE
++ """
+, vecs AS (
+  SELECT r.user_id AS g, r.item_id AS it, p.p_brand AS f,
+         avg(CAST(1.0 AS DOUBLE)) AS v
+  FROM recs r JOIN part p ON r.item_id = p.p_partkey
+  GROUP BY 1, 2, 3
+), norms AS (
+  SELECT g, it, sqrt(sum(v*v)) AS nrm FROM vecs GROUP BY g, it
+), n_items AS (
+  SELECT g, count(*) AS n_it FROM norms GROUP BY g
+), w AS (
+  SELECT vecs.g, vecs.f, vecs.v / nullif(norms.nrm, 0) AS w
+  FROM vecs JOIN norms ON vecs.g = norms.g AND vecs.it = norms.it
+), fsum AS (
+  SELECT g, f, sum(w) AS sw, sum(w*w) AS sww FROM w GROUP BY g, f
+), cos_sums AS (
+  SELECT g, sum((sw*sw - sww) / 2.0) AS cos_sum FROM fsum GROUP BY g
+)
+SELECT n_items.g AS user_id,
+  CASE WHEN n_it >= 2
+       THEN round(coalesce(cos_sum, 0.0)/(n_it*(n_it-1)/2.0), 6)
+  END AS intra_list_similarity
+FROM n_items LEFT JOIN cos_sums ON n_items.g = cos_sums.g
+""")
+def _intra_list_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    recs = _synth_recs(spark, sf_dir)
+    part = load_table(spark, sf_dir, "part")
+    feat = recs.join(part, recs.item == part.p_partkey).select(
+        F.col("user").alias("user_id"),
+        F.col("item").alias("item_id"),
+        F.col("p_brand").alias("feat"),
+        F.lit(1.0).alias("val"),
+    )
+    return M.intra_list_similarity(
+        feat,
+        col_group="user_id",
+        col_index="item_id",
+        col_columns="feat",
+        col_values="val",
+    )
+
+
+@_query("item_item_topk", ORACLE_BASE
++ ITEM_SIMS_SQL
++ """
+SELECT item_id, neighbor_id, sim, rnk FROM item_topk
+""")
+def _item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return M.item_item_topk(
+        R.interactions(spark, sf_dir), col_user="user", col_item="item",
+        k=5, max_basket=MAX_BASKET,
+    )
+
+
+@_query("item_based_recommendations", ORACLE_BASE
++ ITEM_SIMS_SQL
++ """
+, cand AS (
+  SELECT u.user_id AS buser, t.neighbor_id, sum(t.sim) AS score
+  FROM upairs u JOIN item_topk t ON u.item_id = t.item_id
+  GROUP BY u.user_id, t.neighbor_id
+), fresh AS (
+  SELECT c.buser, c.neighbor_id, c.score FROM cand c
+  WHERE NOT EXISTS (SELECT 1 FROM upairs o
+                    WHERE o.user_id = c.buser AND o.item_id = c.neighbor_id)
+)
+SELECT buser AS user_id, neighbor_id AS item_id,
+  round(score, 6) AS score, rnk
+FROM (
+  SELECT buser, neighbor_id, score,
+    CAST(row_number() OVER (PARTITION BY buser
+      ORDER BY round(score, 6) DESC, neighbor_id) AS BIGINT) AS rnk
+  FROM fresh) t
+WHERE rnk <= 10
+""")
+def _item_based_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _item_recs(spark, sf_dir)
+
+
+@_query("long_tail_stats", ORACLE_BASE
++ """
+, vol AS (SELECT item_id, count(*) AS volume FROM interactions GROUP BY item_id),
+tot AS (SELECT CAST(sum(volume) AS DOUBLE) AS total FROM vol),
+w AS (
+  SELECT item_id, volume,
+    CAST(row_number() OVER (ORDER BY volume DESC, item_id) AS BIGINT) AS item_rank,
+    CAST(sum(volume) OVER (ORDER BY volume DESC, item_id
+         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumulative_volume
+  FROM vol)
+SELECT item_id, volume, item_rank, cumulative_volume,
+  round(cumulative_volume/total, 6) AS pct_cumulative,
+  CASE WHEN round(cumulative_volume/total, 6) <= 0.5
+       THEN 'head' ELSE 'tail' END AS bucket
+FROM w, tot
+""")
+def _long_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
+    inter = R.interactions(spark, sf_dir).select(F.col("item").alias("item_id"))
+    out = M.long_tail_stats(inter, col_item="item_id", percentage=0.5)
+    return out.select(
+        "item_id",
+        "volume",
+        "item_rank",
+        "cumulative_volume",
+        "pct_cumulative",
+        "bucket",
+    )
+
+
+@_query("decay_popularity", """
+WITH mx AS (
+  SELECT CAST(floor(epoch(max(ts))) AS BIGINT) AS t_max FROM events
+)
+SELECT event_type, count(*) AS n_events,
+  round(sum(exp(-(t_max - CAST(floor(epoch(ts)) AS BIGINT))
+              / 604800.0)), 6) AS decayed_score
+FROM events, mx GROUP BY event_type ORDER BY event_type
+""")
+def _decay_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Exponential time-decay scoring (half-life weighting): recent
+    # events count more. tau = 7 days; reference point = corpus max ts.
+    ev = load_table(spark, sf_dir, "events")
+    mx = ev.agg(F.max(F.unix_timestamp("ts")).alias("t_max"))
+    from pyspark.sql.functions import broadcast as bc
+
+    tau = 7 * 86400.0
+    return (
+        ev.crossJoin(bc(mx))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(
+                F.sum(
+                    F.exp(
+                        -(F.col("t_max") - F.unix_timestamp("ts")) / F.lit(tau)
+                    )
+                ),
+                6,
+            ).alias("decayed_score"),
+        )
+        .orderBy("event_type")
+    )
+
+
+@_query("value_histogram", """
+SELECT CAST(floor(value/25) AS BIGINT) AS bucket,
+  count(*) AS n_events,
+  round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
+FROM events GROUP BY bucket ORDER BY bucket
+""")
+def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Fixed-width binning of events.value (floor to 25-wide buckets).
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.groupBy(
+            F.floor(F.col("value") / 25).cast("long").alias("bucket"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.min("value"), 6).alias("min_v"),
+            F.round(F.max("value"), 6).alias("max_v"),
+        )
+        .orderBy("bucket")
+    )
+
+
+@_query("dedup_exact", """
+WITH h AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
+g AS (SELECT content_hash, count(*) AS n_copies, min(doc_id) AS canonical_id
+      FROM h GROUP BY content_hash)
+SELECT doc_id, h.content_hash, n_copies, canonical_id,
+  doc_id <> canonical_id AS is_dup
+FROM h JOIN g USING (content_hash)
+""")
+def _dedup_exact(spark, sf_dir):
+    return D.exact_dedup(_docs(spark, sf_dir))
+
+
+@_query("ngram_jaccard_pairs", _NGRAM_JACCARD_SQL)
+def _ngram_jaccard(spark, sf_dir):
+    return _exact_pairs(spark, sf_dir)
+
+
+# threshold sweep: the exact pair body reused verbatim, one
+# threshold-explode join + two counting aggregates on top
+@_query("dedup_threshold_sweep", f"""
+WITH exact AS MATERIALIZED (
+  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
+th AS (
+  SELECT unnest([0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
+    AS threshold),
+hits AS MATERIALIZED (
+  SELECT th.threshold, e.id_a, e.id_b
+  FROM exact e JOIN th ON e.jaccard >= th.threshold),
+np AS (
+  SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
+  FROM hits GROUP BY threshold),
+nd AS (
+  SELECT threshold, CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
+  FROM (SELECT threshold, id_a AS doc FROM hits
+        UNION ALL SELECT threshold, id_b FROM hits) s
+  GROUP BY threshold)
+SELECT round(np.threshold, 6) AS threshold, np.n_pairs, nd.n_docs
+FROM np JOIN nd USING (threshold)
+ORDER BY threshold
+""")
+def _dedup_threshold_sweep(spark, sf_dir):
+    """Dedup threshold-sizing report (operators/dedup.py::
+    jaccard_threshold_sweep): per candidate Jaccard threshold
+    (0.1-0.9), surviving pair count and distinct implicated docs —
+    the exact-truth sibling of lsh_parameter_plan, read before
+    picking the near-dup cut for a corpus run. Consumes the
+    _exact_pairs shared build (threshold floor 0.1 = the memo's own
+    cut), so the report costs one output-scale explode-aggregate on
+    top of the already-materialized truth table."""
+    return D.jaccard_threshold_sweep(_exact_pairs(spark, sf_dir))
+
+
+# dedup recall row: the exact-Jaccard and banded-LSH pair
+# bodies reused verbatim, left-joined at the pair grain
+@_query("lsh_recall_report", f"""
+WITH exact AS MATERIALIZED (
+  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
+approx AS MATERIALIZED (
+  SELECT id_a, id_b FROM ({_MINHASH_LSH_SQL}) t)
+SELECT CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.id_a IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(CAST(sum(CASE WHEN a.id_a IS NOT NULL THEN 1 ELSE 0 END)
+             AS DOUBLE)
+        / nullif(CAST(count(*) AS DOUBLE), 0.0), 6) AS recall,
+  round(CAST(sum(CASE WHEN a.id_a IS NULL
+                 THEN CAST(e.jaccard AS DECIMAL(18,6)) END)
+             AS DOUBLE)
+        / nullif(CAST(sum(CASE WHEN a.id_a IS NULL THEN 1 ELSE 0 END)
+                      AS DOUBLE), 0.0), 6)
+    AS missed_mean_jaccard
+FROM exact e LEFT JOIN approx a
+  ON e.id_a = a.id_a AND e.id_b = a.id_b
+""")
+def _lsh_recall_report(spark, sf_dir):
+    """Witnessed DEDUP recall — the sq_recall_report pattern applied
+    to the near-dup family: one row reporting how many of the exact
+    Jaccard >= 0.1 pairs (ngram_jaccard_pairs, the all-pairs truth
+    the LSH path exists to avoid) the banded MinHash path
+    (minhash_lsh_pairs, 8 hashes x 4 bands) actually surfaces, plus
+    the mean true Jaccard of the MISSED pairs (misses should
+    concentrate just above threshold — the S-curve's soft region
+    lsh_parameter_plan models). Pins banding RECALL as a driver
+    oracle row rather than a pytest-only assertion; output-scale
+    work over two already-declared pair sets (the exact side from
+    the _exact_pairs shared build, also read by ngram_jaccard_pairs
+    and simhash_recall_report)."""
+    docs = _docs(spark, sf_dir)
+    exact = _exact_pairs(spark, sf_dir)
+    approx = D.minhash_lsh_pairs(docs, threshold=0.1).select(
+        "id_a", "id_b", F.lit(1).alias("hit")
+    )
+    j = exact.join(approx, ["id_a", "id_b"], "left")
+    # missed-pair mean via an exact DECIMAL sum over the already-6dp
+    # jaccards divided by the miss count (the house exact-sum rule —
+    # a double F.avg is partition-order dependent); both ratios are
+    # nullif-guarded (ANSI mode: zero exact pairs / zero misses must
+    # yield NULL, not DIVIDE_BY_ZERO), mirrored in the oracle.
+    return j.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+        F.sum(F.coalesce("hit", F.lit(0)))
+        .cast("bigint")
+        .alias("n_hit"),
+        F.sum(
+            F.when(F.col("hit").isNull(), F.col("jaccard")).cast(
+                "decimal(18,6)"
+            )
+        ).alias("miss_sum"),
+        F.sum(
+            F.when(F.col("hit").isNull(), F.lit(1)).otherwise(F.lit(0))
+        )
+        .cast("bigint")
+        .alias("n_miss"),
+    ).select(
+        "n_exact",
+        "n_hit",
+        F.round(
+            F.col("n_hit")
+            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0)),
+            6,
+        ).alias("recall"),
+        F.round(
+            F.col("miss_sum").cast("double")
+            / F.nullif(F.col("n_miss").cast("double"), F.lit(0.0)),
+            6,
+        ).alias("missed_mean_jaccard"),
+    )
+
+
+@_query("arena_bt_ratings", _bt_oracle(iters=8))
+def _arena_bt_ratings(spark, sf_dir):
+    """Arena-style preference leaderboard (operators/ranking.py::
+    bradley_terry_ratings): the mined DPO preference pairs (each
+    user's top-rated item beats their bottom-rated item) feed a
+    fixed-8-round Bradley-Terry MM fit — per item its win count,
+    game count, normalized rating, and leaderboard rank. The
+    pairwise-eval aggregation every LLM arena runs, expressed as
+    deterministic DataFrame rounds with an iteration-chained SQL
+    oracle. Games come from the shared _arena_games memo; the MM
+    chain itself comes from the _bt_chain shared build, also read by
+    arena_bt_sensitivity."""
+    from recmetrics_pyspark_spark.operators.ranking import (
+        bradley_terry_ratings,
+    )
+
+    return bradley_terry_ratings(
+        _arena_games(spark, sf_dir),
+        iters=8,
+        fit=_bt_chain(spark, sf_dir),
+    )
+
+
+# SimHash recall vs the same exact-Jaccard truth: the all-pairs
+# Hamming table at radius <= 3 (the banded Spark join is
+# pigeonhole-exact vs this truth), one report row per radius
+@_query("simhash_recall_report", f"""
+WITH exact AS MATERIALIZED (
+  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
+sig AS MATERIALIZED (
+  SELECT doc_id, {_simhash_sql_expr()} AS simhash
+  FROM ({_SIMHASH_HS_SQL})),
+near AS MATERIALIZED (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3)
+SELECT CAST(v.max_hamming AS BIGINT) AS max_hamming,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN n.id_a IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(CAST(sum(CASE WHEN n.id_a IS NOT NULL THEN 1 ELSE 0 END)
+             AS DOUBLE)
+        / nullif(CAST(count(*) AS DOUBLE), 0.0), 6) AS recall,
+  round(CAST(sum(CASE WHEN n.id_a IS NULL
+                 THEN CAST(e.jaccard AS DECIMAL(18,6)) END)
+             AS DOUBLE)
+        / nullif(CAST(sum(CASE WHEN n.id_a IS NULL THEN 1 ELSE 0 END)
+                      AS DOUBLE), 0.0), 6)
+    AS missed_mean_jaccard
+FROM (SELECT 1 AS max_hamming UNION ALL SELECT 3) v
+CROSS JOIN exact e
+LEFT JOIN near n
+  ON e.id_a = n.id_a AND e.id_b = n.id_b
+  AND n.hamming <= v.max_hamming
+GROUP BY v.max_hamming
+""")
+def _simhash_recall_report(spark, sf_dir):
+    """Witnessed SimHash recall — lsh_recall_report's shape applied to
+    the Hamming-banded lane: per max_hamming radius (1 and 3), how
+    many of the exact Jaccard >= 0.1 pairs (ngram_jaccard_pairs, the
+    same truth the MinHash report uses) simhash_near_pairs surfaces,
+    plus the mean true Jaccard of the missed pairs. SimHash bands are
+    pigeonhole-EXACT vs the Hamming truth (zero misses by
+    construction, pinned in tests), so this row measures the
+    signature's fidelity as a Jaccard proxy — the radius-sizing
+    report a corpus run reads before picking max_hamming.
+    Output-scale work over already-declared pair sets (the exact
+    side from the _exact_pairs shared build — already checkpointed,
+    so both radius branches fan out from materialized blocks)."""
+    docs = _docs(spark, sf_dir)
+    exact = _exact_pairs(spark, sf_dir)
+    parts = []
+    for h in (1, 3):
+        near = D.simhash_near_pairs(docs, max_hamming=h).select(
+            "id_a", "id_b", F.lit(1).alias("hit")
+        )
+        j = exact.join(near, ["id_a", "id_b"], "left")
+        parts.append(
+            j.agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+                F.sum(F.coalesce("hit", F.lit(0)))
+                .cast("bigint")
+                .alias("n_hit"),
+                F.sum(
+                    F.when(F.col("hit").isNull(), F.col("jaccard")).cast(
+                        "decimal(18,6)"
+                    )
+                ).alias("miss_sum"),
+                F.sum(
+                    F.when(F.col("hit").isNull(), F.lit(1)).otherwise(
+                        F.lit(0)
+                    )
+                )
+                .cast("bigint")
+                .alias("n_miss"),
+            ).select(
+                F.lit(h).cast("bigint").alias("max_hamming"),
+                "n_exact",
+                "n_hit",
+                F.round(
+                    F.col("n_hit")
+                    / F.nullif(
+                        F.col("n_exact").cast("double"), F.lit(0.0)
+                    ),
+                    6,
+                ).alias("recall"),
+                F.round(
+                    F.col("miss_sum").cast("double")
+                    / F.nullif(
+                        F.col("n_miss").cast("double"), F.lit(0.0)
+                    ),
+                    6,
+                ).alias("missed_mean_jaccard"),
+            )
+        )
+    return parts[0].unionByName(parts[1])
+
+
+# iteration-sensitivity row: the iters=8 and iters=4 oracle
+# chains nested whole, compared at the leaderboard grain
+@_query("arena_bt_sensitivity", f"""
+WITH b8 AS MATERIALIZED (
+  SELECT item, rnk FROM ({_bt_oracle(iters=8)}) t),
+b4 AS MATERIALIZED (
+  SELECT item, rnk FROM ({_bt_oracle(iters=4)}) t)
+SELECT CAST(count(*) AS BIGINT) AS n_items,
+  CAST(sum(CASE WHEN b8.rnk <> b4.rnk THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_rank_moves,
+  CAST(max(abs(b8.rnk - b4.rnk)) AS BIGINT) AS max_rank_delta,
+  CAST(sum(CASE WHEN b8.rnk <= 10 AND b4.rnk <= 10 THEN 1 ELSE 0 END)
+       AS BIGINT) AS top10_overlap
+FROM b8 JOIN b4 USING (item)
+""")
+def _arena_bt_sensitivity(spark, sf_dir):
+    """Witnessed iteration-sensitivity for the fixed-8-round
+    Bradley-Terry choice (the line_dedup_pages_mindf3 pattern: the
+    parameter the operator pins gets its own declared row): the same
+    mined game table fitted at iters=4 and iters=8, compared at the
+    leaderboard grain — items whose rank moved, the largest move, and
+    the top-10 overlap. All-integer output (rank deltas), so the row
+    is exact cross-engine. The two fits are snapshots of ONE MM
+    chain (operators/ranking.py::bradley_terry_rank_sensitivity —
+    an earlier fixed-iteration fit is a strict prefix of a later
+    one), so mining, pair tables, and rounds 1-4 are all shared;
+    the game table comes from the _arena_games shared build and the
+    chain itself from the _bt_chain memo shared with
+    arena_bt_ratings — across the two queries the 8-round fit runs
+    exactly once per session."""
+    from recmetrics_pyspark_spark.operators.ranking import (
+        bradley_terry_rank_sensitivity,
+    )
+
+    return bradley_terry_rank_sensitivity(
+        _arena_games(spark, sf_dir),
+        iters_a=4,
+        iters_b=8,
+        top_k=10,
+        fit=_bt_chain(spark, sf_dir),
+    )
+
+
+# sq_recall_report's shape over the PQ lanes (PQ-ADC and
+# IVF-routed PQ), each oracle chain nested whole
+@_query("pq_recall_report", f"""
+WITH exact AS (SELECT query_id, neighbor_id
+               FROM ({_ann_brute_oracle()}) t),
+pq AS (SELECT query_id, neighbor_id FROM ({_pq_oracle()}) t),
+ivfpq AS (SELECT query_id, neighbor_id FROM ({_ivfpq_oracle()}) t)
+SELECT 'pq' AS lane, e.query_id,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+        / count(*), 6) AS recall_at_10
+FROM exact e LEFT JOIN pq a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+UNION ALL
+SELECT 'ivfpq' AS lane, e.query_id,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+        / count(*), 6) AS recall_at_10
+FROM exact e LEFT JOIN ivfpq a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+""")
+def _pq_recall_report(spark, sf_dir):
+    """sq_recall_report's pattern extended to the PQ lanes (round-10
+    verdict item 8): per-query recall@10 of pq_ann_topk and
+    ivfpq_ann_topk against the exact brute-force top-k — the PQ
+    compression and the IVF routing each get a witnessed retrieval-
+    quality row instead of a pytest-only bound. Exact side from the
+    _ann_truth shared build (already checkpointed — both lane
+    branches fan out from materialized blocks)."""
+    embs = _embs(spark, sf_dir)
+    qset = embs.filter(F.col("vec_id") < 5)
+    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
+    parts = []
+    for lane, approx in (
+        ("pq", S.pq_ann_topk(embs, qset, k=10, m=4, k_codes=16)),
+        (
+            "ivfpq",
+            S.ivfpq_ann_topk(
+                embs, qset, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
+            ),
+        ),
+    ):
+        a = approx.select(
+            "query_id", "neighbor_id", F.lit(1).alias("hit")
+        )
+        parts.append(
+            exact.join(a, ["query_id", "neighbor_id"], "left")
+            .groupBy("query_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+                F.sum(F.coalesce("hit", F.lit(0)))
+                .cast("bigint")
+                .alias("n_hit"),
+            )
+            .select(
+                F.lit(lane).alias("lane"),
+                "query_id",
+                "n_exact",
+                "n_hit",
+                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
+                    "recall_at_10"
+                ),
+            )
+        )
+    return parts[0].unionByName(parts[1])
+
+
+# ann_recall_report's shape over the trained-IVF lane
+@_query("ivf_recall_report", f"""
+WITH exact AS (SELECT query_id, neighbor_id
+               FROM ({_ann_brute_oracle()}) t),
+iv AS (SELECT query_id, neighbor_id FROM ({_IVF_ANN_SQL}) t)
+SELECT e.query_id,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+        / count(*), 6) AS recall_at_10
+FROM exact e LEFT JOIN iv a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+""")
+def _ivf_recall_report(spark, sf_dir):
+    """ann_recall_report's shape over the trained-IVF lane — the one
+    approximate retriever that had no witnessed recall row (LSH got
+    it in round 8, SQ8/IVF-SQ8 in round 10, PQ/IVF-PQ this round):
+    per-query recall@10 of ivf_ann_topk (8 cells, nprobe 3) against
+    the exact brute-force top-k, so the cell-routing recall trade is
+    oracle-pinned rather than pytest-only. Exact side from the
+    _ann_truth shared build."""
+    embs = _embs(spark, sf_dir)
+    qset = embs.filter(F.col("vec_id") < 5)
+    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
+    approx = S.ivf_ann_topk(
+        embs, qset, k=10, n_cells=8, nprobe=3
+    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    return (
+        exact.join(approx, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
+                "n_hit"
+            ),
+        )
+        .select(
+            "query_id",
+            "n_exact",
+            "n_hit",
+            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
+                "recall_at_10"
+            ),
+        )
+    )
+
+
+@_query("dedup_pipeline", """
+WITH h AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
+g AS (SELECT content_hash, min(doc_id) AS canonical_id
+      FROM h GROUP BY content_hash),
+survivors AS (
+  SELECT d.* FROM documents d
+  JOIN h ON d.doc_id = h.doc_id
+  JOIN g ON h.content_hash = g.content_hash
+  WHERE d.doc_id = g.canonical_id
+), toks AS (
+  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+), sh0 AS (
+  SELECT DISTINCT doc_id,
+    array_to_string(list_slice(t, i, i+2), ' ') AS s
+  FROM toks, unnest(generate_series(1, greatest(len(t)-2, 1))) AS u(i)
+), sh AS (
+  -- same df <= 1000 cut as capped_shingles / _DOC_BASE's shc: the
+  -- Spark side routes through ngram_jaccard_pairs' capped universe
+  SELECT sh0.doc_id, sh0.s FROM sh0
+  JOIN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 1000) keep
+    USING (s)
+), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+near_b AS (
+  SELECT DISTINCT b.doc_id AS doc_id
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+  JOIN sizes sa ON a.doc_id = sa.doc_id
+  JOIN sizes sb ON b.doc_id = sb.doc_id
+  GROUP BY a.doc_id, b.doc_id, sa.n_sh, sb.n_sh
+  HAVING round(CAST(count(*) AS DOUBLE)
+         / (sa.n_sh + sb.n_sh - count(*)), 6) >= 0.8
+)
+SELECT lang, count(*) AS n_docs,
+  CAST(sum(n_chars) AS BIGINT) AS total_chars
+FROM survivors s
+WHERE NOT EXISTS (SELECT 1 FROM near_b nb WHERE nb.doc_id = s.doc_id)
+GROUP BY lang ORDER BY lang
+""")
+def _dedup_pipeline(spark, sf_dir):
+    # End-to-end dedup: drop exact duplicates (non-canonical copies),
+    # then greedily drop the higher id of every near-dup pair
+    # (Jaccard >= 0.8) -- the standard single-pass approximation of
+    # connected-component dedup. Output: surviving corpus per lang.
+    docs = _docs(spark, sf_dir)
+    exact = D.exact_dedup(docs)
+    survivors = docs.join(
+        exact.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
+    )
+    near = D.ngram_jaccard_pairs(docs, threshold=0.8).select(
+        F.col("id_b").alias("doc_id")
+    ).distinct()
+    kept = survivors.join(near, "doc_id", "left_anti")
+    return (
+        kept.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+        .orderBy("lang")
+    )
+
+
+@_query("ann_bruteforce_topk", _ann_brute_oracle())
+def _ann_topk(spark, sf_dir):
+    return _ann_truth(spark, sf_dir)
+
+
+@_query("ann_lsh_topk", _ann_lsh_oracle())
+def _ann_lsh_topk(spark, sf_dir):
+    embs = _embs(spark, sf_dir)
+    return S.ann_lsh_topk(embs, embs.filter(F.col("vec_id") < 5), k=10)
+
+
+@_query("ivf_ann_topk", _IVF_ANN_SQL)
+def _ivf_ann_topk(spark, sf_dir):
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.ivf_ann_topk(embs, queries_df, k=10, n_cells=8, nprobe=3)
+
+
+@_query("pq_ann_topk", _pq_oracle())
+def _pq_ann_topk(spark, sf_dir):
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.pq_ann_topk(embs, queries_df, k=10, m=4, k_codes=16)
+
+
+@_query("pq_rerank_topk", _pq_rerank_oracle())
+def _pq_rerank_topk(spark, sf_dir):
+    """Two-stage retrieve-rerank: PQ-ADC retrieves an 8k candidate
+    pool, exact cosine re-ranks it (operators/similarity.py::
+    pq_ann_topk rerank_factor=8 — recall@10 90% while exact-scoring
+    16% of the corpus)."""
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.pq_ann_topk(
+        embs, queries_df, k=10, m=4, k_codes=16, rerank_factor=8
+    )
+
+
+@_query("ivfpq_ann_topk", _ivfpq_oracle())
+def _ivfpq_ann_topk(spark, sf_dir):
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.ivfpq_ann_topk(
+        embs, queries_df, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
+    )
+
+
+# mirrors operators/similarity.py::sq_ann_topk — the SQ code
+# and midpoint-reconstruction kernels are index-form CASE/floor
+# expressions shared verbatim with the Spark side (_SQ_CODE /
+# _SQ_RECON), so the doubles agree bitwise before round(,6)
+@_query("sq_ann_topk", _SQ_ANN_SQL)
+def _sq_ann_topk(spark, sf_dir):
+    """SQ8 asymmetric ANN (operators/similarity.py::sq_ann_topk):
+    corpus scored through its scalar-quantized reconstruction
+    (256-level per-dimension codes, 4x storage cut), queries exact.
+    Near-lossless: recall@10 = 100% vs the brute-force baseline on
+    this corpus."""
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.sq_ann_topk(embs, queries_df, k=10)
+
+
+# mirrors operators/similarity.py::ivfsq_ann_topk: the IVF
+# cells/probes SQL composed with the SQ bounds + midpoint
+# reconstruction (global bounds over the full corpus)
+@_query("ivfsq_ann_topk", _IVFSQ_ANN_SQL)
+def _ivfsq_ann_topk(spark, sf_dir):
+    """IVF-SQ8 (operators/similarity.py::ivfsq_ann_topk): the FAISS
+    IVF,SQ8 production composition — trained coarse cells bound WHO
+    a query scores, global SQ8 bounds WHAT a candidate costs (1
+    byte/dim). Agreement with IVF-Flat top-10 is 100% on this corpus
+    (8-bit reconstruction is near-lossless within probed cells)."""
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.ivfsq_ann_topk(
+        embs, queries_df, k=10, n_cells=8, nprobe=3
+    )
+
+
+# recall@10 of the SQ8 and IVF-SQ8 lanes vs the brute-force
+# oracle — the three retrieval SQL bodies reused verbatim as
+# subqueries (the ann_recall_report pattern extended to the
+# quantized lanes, so their retrieval QUALITY carries a
+# driver-checked oracle row, not just determinism)
+@_query("sq_recall_report", f"""
+WITH exact AS (SELECT query_id, neighbor_id
+               FROM ({_ann_brute_oracle()}) t),
+sq AS (SELECT query_id, neighbor_id FROM ({_SQ_ANN_SQL}) t),
+iv AS (SELECT query_id, neighbor_id FROM ({_IVFSQ_ANN_SQL}) t)
+SELECT 'sq8' AS lane, e.query_id,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+        / count(*), 6) AS recall_at_10
+FROM exact e LEFT JOIN sq a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+UNION ALL
+SELECT 'ivfsq8' AS lane, e.query_id,
+  CAST(count(*) AS BIGINT) AS n_exact,
+  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       AS BIGINT) AS n_hit,
+  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+        / count(*), 6) AS recall_at_10
+FROM exact e LEFT JOIN iv a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+""")
+def _sq_recall_report(spark, sf_dir):
+    """Witnessed retrieval quality for the quantized lanes
+    (ann_recall_report's pattern extended per the round-9 verdict):
+    per-query recall@10 of sq_ann_topk and ivfsq_ann_topk against the
+    exact brute-force top-k, one row per (lane, query). Left-joining
+    exact against approximate is output-scale work (lanes x |Q| x k
+    rows). Exact side from the _ann_truth shared build."""
+    embs = _embs(spark, sf_dir)
+    qset = embs.filter(F.col("vec_id") < 5)
+    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
+    parts = []
+    for lane, approx in (
+        ("sq8", S.sq_ann_topk(embs, qset, k=10)),
+        ("ivfsq8", S.ivfsq_ann_topk(embs, qset, k=10)),
+    ):
+        a = approx.select(
+            "query_id", "neighbor_id", F.lit(1).alias("hit")
+        )
+        parts.append(
+            exact.join(a, ["query_id", "neighbor_id"], "left")
+            .groupBy("query_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+                F.sum(F.coalesce("hit", F.lit(0)))
+                .cast("bigint")
+                .alias("n_hit"),
+            )
+            .select(
+                F.lit(lane).alias("lane"),
+                "query_id",
+                "n_exact",
+                "n_hit",
+                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
+                    "recall_at_10"
+                ),
+            )
+        )
+    return parts[0].unionByName(parts[1])
+
+
+@_query("dim_truncation_recall", _dim_trunc_oracle())
+def _dim_truncation_recall(spark, sf_dir):
+    """Matryoshka truncation sizing report (operators/similarity.py::
+    dim_truncation_recall): top-10 recall of prefix-truncated cosine
+    (full, half, quarter dims) against the exact full-dimension
+    ranking — the offline report that picks the stored dimensionality
+    before committing vectors at scale."""
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return S.dim_truncation_recall(embs, queries_df, k=10)
+
+
+# mirrors operators/ranking.py::rrf_fuse over the three
+# retriever oracles reused verbatim as subqueries; fused
+# order compares the exact DECIMAL(18,9) sum + id tiebreak
+@_query("hybrid_rrf_topk", f"""
+WITH u AS (
+  SELECT query_id, neighbor_id, rnk FROM ({_ann_brute_oracle()}) b
+  UNION ALL
+  SELECT query_id, neighbor_id, rnk FROM ({_SQ_ANN_SQL}) s
+  UNION ALL
+  SELECT query_id, neighbor_id, rnk FROM ({_ann_lsh_oracle()}) l
+), a AS (
+  SELECT query_id, neighbor_id,
+    CAST(count(*) AS BIGINT) AS n_lists,
+    sum(CAST(round(1.0 / (60 + rnk), 9) AS DECIMAL(18,9))) AS s
+  FROM u GROUP BY 1, 2)
+SELECT query_id, neighbor_id, n_lists,
+  round(CAST(s AS DOUBLE), 6) AS rrf_score, rnk
+FROM (
+  SELECT query_id, neighbor_id, n_lists, s,
+    CAST(row_number() OVER (PARTITION BY query_id
+      ORDER BY s DESC, neighbor_id) AS BIGINT) AS rnk
+  FROM a) t
+WHERE rnk <= 10
+""")
+def _hybrid_rrf_topk(spark, sf_dir):
+    """Hybrid retrieval via Reciprocal Rank Fusion
+    (operators/ranking.py::rrf_fuse): the exact cosine, SQ8, and
+    multiprobe-LSH retrievers each contribute 1/(60 + rank) per
+    (query, neighbor); the fused top-10 re-ranks on the exact
+    DECIMAL sum. The RAG-era ensemble pattern — retrievers with
+    different candidate pools fused without score calibration.
+    The exact-cosine retriever comes from the _ann_truth session
+    memo (identical frame: same corpus, query set, and k)."""
+    from recmetrics_pyspark_spark.operators.ranking import rrf_fuse
+
+    embs = _embs(spark, sf_dir)
+    queries_df = embs.filter(F.col("vec_id") < 5)
+    return rrf_fuse(
+        [
+            _ann_truth(spark, sf_dir),
+            S.sq_ann_topk(embs, queries_df, k=10),
+            S.ann_lsh_topk(embs, queries_df, k=10),
+        ],
+        k0=60,
+        k=10,
+    )
+
+
+# mirrors operators/similarity.py::semantic_decontaminate:
+# broadcast-scale eval side, hit-filter before the per-train
+# window, best hit by (cos DESC, eval_id) — same cosine kernel
+# as the ANN oracles
+@_query("semantic_decontaminate", f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+t AS (SELECT vec_id AS train_id, v AS tv FROM e WHERE vec_id >= 25),
+q AS (SELECT vec_id AS eval_id, v AS qv FROM e WHERE vec_id < 25),
+hits AS (
+  SELECT train_id, eval_id,
+    round(list_dot_product(tv, qv)
+      / nullif(sqrt(list_dot_product(tv, tv))
+               * sqrt(list_dot_product(qv, qv)), 0.0), 6) AS cos_sim
+  FROM t, q),
+flagged AS (SELECT * FROM hits WHERE cos_sim >= 0.4)
+SELECT train_id, n_eval_hits, best_eval_id, best_cos FROM (
+  SELECT train_id, eval_id AS best_eval_id, cos_sim AS best_cos,
+    row_number() OVER (PARTITION BY train_id
+      ORDER BY cos_sim DESC, eval_id) AS rnk,
+    CAST(count(*) OVER (PARTITION BY train_id) AS BIGINT)
+      AS n_eval_hits
+  FROM flagged) f
+WHERE rnk = 1
+""")
+def _semantic_decontaminate(spark, sf_dir):
+    """Embedding-space decontamination (operators/similarity.py::
+    semantic_decontaminate): vectors 25+ are the training corpus,
+    vectors 0-24 the benchmark; any train vector with cosine >= 0.4
+    to an eval vector is flagged with its hit count and best match —
+    the paraphrase-leak scrub the n-gram scan cannot see."""
+    embs = _embs(spark, sf_dir)
+    return S.semantic_decontaminate(
+        embs.filter(F.col("vec_id") >= 25),
+        embs.filter(F.col("vec_id") < 25),
+        threshold=0.4,
+    )
+
+
+# mirrors operators/similarity.py::semantic_decontaminate_ivf:
+# coarse quantizer trained on the FULL vector table (KMEANS_CTE
+# c1, shared verbatim with the kmeans/ivf lanes), train side
+# (vid >= 25) assigned to cells, eval side (vid < 25) probing
+# its 3 nearest cells, hits >= 0.4 ranked per train vector
+@_query("semantic_decontaminate_ivf", KMEANS_CTE + """
+, cells AS (
+  SELECT vid AS train_id, v AS tv, cid FROM (
+    SELECT b.vid, b.v, c1.cid,
+      row_number() OVER (PARTITION BY b.vid
+        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
+                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
+    FROM b, c1 WHERE b.vid >= 25) t
+  WHERE rn = 1
+), qb AS (SELECT vid AS eval_id, v AS qv, v_sq AS q_sq FROM b
+          WHERE vid < 25),
+probes AS (
+  SELECT eval_id, qv, sqrt(q_sq) AS qn, cid FROM (
+    SELECT qb.eval_id, qb.qv, qb.q_sq, c1.cid,
+      row_number() OVER (PARTITION BY qb.eval_id
+        ORDER BY round(qb.q_sq - 2*list_dot_product(qb.qv, c1.c)
+                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
+    FROM qb, c1) t
+  WHERE rn <= 3
+), hits AS (
+  SELECT train_id, eval_id,
+    round(list_dot_product(tv, qv)
+      / nullif(sqrt(list_dot_product(tv, tv)) * qn, 0.0), 6)
+      AS cos_sim
+  FROM cells JOIN probes USING (cid))
+SELECT train_id, n_eval_hits, best_eval_id, best_cos FROM (
+  SELECT train_id, eval_id AS best_eval_id, cos_sim AS best_cos,
+    row_number() OVER (PARTITION BY train_id
+      ORDER BY cos_sim DESC, eval_id) AS rnk,
+    CAST(count(*) OVER (PARTITION BY train_id) AS BIGINT)
+      AS n_eval_hits
+  FROM hits WHERE cos_sim >= 0.4) f
+WHERE rnk = 1
+""")
+def _semantic_decontaminate_ivf(spark, sf_dir):
+    """The scale-out semantic-decontamination lane (operators/
+    similarity.py::semantic_decontaminate_ivf): same train/eval split
+    and threshold as the broadcast path, but eval vectors route
+    through the IVF coarse quantizer (8 cells, nprobe 3, trained on
+    the full vector table) so each eval vector scores only its probed
+    cells' train vectors — the candidate-bounding composition the
+    broadcast path's docstring names for huge eval sets. Flagged-set
+    agreement with the broadcast path is pinned in
+    tests/test_round10_ops.py."""
+    embs = _embs(spark, sf_dir)
+    return S.semantic_decontaminate_ivf(
+        embs.filter(F.col("vec_id") >= 25),
+        embs.filter(F.col("vec_id") < 25),
+        threshold=0.4,
+        n_cells=8,
+        nprobe=3,
+        refinements=1,
+        quantizer=embs,
+    )
+
+
+@_query("embedding_neardup", f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)
+SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS label,
+  {_COS_SQL.format(a='a.v', b='b.v')} AS cos_sim
+FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+WHERE {_COS_SQL.format(a='a.v', b='b.v')} >= 0.35
+""")
+def _embedding_neardup(spark, sf_dir):
+    return S.embedding_near_duplicates(_embs(spark, sf_dir), threshold=0.35)
+
+
+@_query("kmeans_assignments", KMEANS_CTE + """
+, a2 AS (
+  SELECT vid, cid, dist FROM (
+    SELECT b.vid, c1.cid,
+      round(b.v_sq - 2*list_dot_product(b.v, c1.c)
+            + list_dot_product(c1.c, c1.c), 6) AS dist,
+      row_number() OVER (PARTITION BY b.vid
+        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
+                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
+    FROM b, c1) t
+  WHERE rn = 1
+)
+SELECT cid, count(*) AS n_members, round(avg(dist), 6) AS mean_dist
+FROM a2 GROUP BY cid ORDER BY cid
+""")
+def _kmeans(spark, sf_dir):
+    return S.kmeans_assignments(_embs(spark, sf_dir), k=8, iters=2)
+
+
+@_query("semantic_dedup", KMEANS_CTE + """
+, a2 AS (
+  SELECT vid, v, cid FROM (
+    SELECT b.vid, b.v, c1.cid,
+      row_number() OVER (PARTITION BY b.vid
+        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
+                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
+    FROM b, c1) t
+  WHERE rn = 1
+), nn AS (
+  SELECT vid, v, cid, sqrt(list_dot_product(v, v)) AS nrm FROM a2
+), dropped AS (
+  SELECT DISTINCT y.vid
+  FROM nn x JOIN nn y ON x.cid = y.cid AND x.vid < y.vid
+  WHERE round(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) >= 0.35
+)
+SELECT cid,
+  count(*) AS n_docs,
+  CAST(sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_dropped,
+  CAST(count(*) - sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END)
+    AS BIGINT) AS n_kept,
+  round(sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
+    / count(*), 6) AS drop_ratio
+FROM nn LEFT JOIN dropped d USING (vid)
+GROUP BY cid ORDER BY cid
+""")
+def _semantic_dedup(spark, sf_dir):
+    """SemDeDup: k-means cells as dedup buckets, within-cell cosine
+    prune (operators/similarity.py::semantic_dedup). Threshold 0.35
+    matches embedding_neardup's data-appropriate setting for the
+    synthetic embeddings."""
+    return S.semantic_dedup(
+        _embs(spark, sf_dir), k=8, iters=2, threshold=0.35
+    )
+
+
+@_query("label_centroids", """
+SELECT label, i - 1 AS dim_idx, round(avg(v[i]), 6) AS centroid_val
+FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings) e,
+     unnest(generate_series(1, len(v))) AS s(i)
+GROUP BY label, i - 1
+""")
+def _label_centroids(spark, sf_dir):
+    return S.label_centroids(_embs(spark, sf_dir))
+
+
+@_query("text_stats", f"""
+SELECT doc_id,
+  CAST(length(text) AS BIGINT) AS n_chars,
+  CAST(len(toks) AS BIGINT) AS n_tokens,
+  round(CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum') AS DOUBLE)
+        / len(toks), 6) AS avg_token_len,
+  round(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
+        / CAST(length(text) AS DOUBLE), 6) AS alpha_ratio,
+  round(length(regexp_replace(text, '[^0-9]', '', 'g'))
+        / CAST(length(text) AS DOUBLE), 6) AS digit_ratio,
+  round(length(regexp_replace(text, '[^ ]', '', 'g'))
+        / CAST(length(text) AS DOUBLE), 6) AS space_ratio,
+  round(len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+        / CAST(len(toks) AS DOUBLE), 6) AS stopword_ratio,
+  CAST(ceil(length(text)/4.0) AS BIGINT) AS token_est_char4
+FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
+""")
+def _text_stats(spark, sf_dir):
+    df = T.text_stats(_docs(spark, sf_dir))
+    return df.withColumn("n_chars", F.col("n_chars").cast("long"))
+
+
+@_query("language_id", f"""
+SELECT doc_id, s_en, s_es, s_de, s_fr,
+  CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+       WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+       WHEN s_de >= s_fr THEN 'de'
+       ELSE 'fr' END AS lang_pred
+FROM (
+  SELECT doc_id,
+    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_EN)})) AS BIGINT) AS s_en,
+    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_ES)})) AS BIGINT) AS s_es,
+    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_DE)})) AS BIGINT) AS s_de,
+    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_FR)})) AS BIGINT) AS s_fr
+  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
+""")
+def _language_id(spark, sf_dir):
+    return T.language_id(_docs(spark, sf_dir))
+
+
+@_query("doc_fingerprint", """
+SELECT doc_id, md5(text) AS content_hash,
+  CASE WHEN len(toks) >= 3
+       THEN list_min(list_transform(generate_series(1, len(toks)-2),
+              i -> md5(array_to_string(list_slice(toks, i, i+2), ' '))))
+       ELSE md5(text) END AS shingle_fp
+FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
+""")
+def _doc_fingerprint(spark, sf_dir):
+    return T.doc_fingerprint(_docs(spark, sf_dir))
+
+
+@_query("quality_score", f"""
+SELECT doc_id,
+  round(least(len(toks)/50.0, 1.0)*0.4
+    + (length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
+       / CAST(length(text) AS DOUBLE))*0.4
+    + least(5.0*len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+            / CAST(len(toks) AS DOUBLE), 1.0)*0.2, 6) AS quality
+FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
+""")
+def _quality_score(spark, sf_dir):
+    return T.quality_score(_docs(spark, sf_dir))
+
+
+@_query("token_count_by_lang", """
+SELECT lang, count(*) AS n_docs,
+  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
+  round(avg(CAST(len(toks) AS DOUBLE)), 6) AS avg_tokens
+FROM (SELECT lang, string_split(text, ' ') AS toks FROM documents)
+GROUP BY lang
+""")
+def _token_count_by_lang(spark, sf_dir):
+    return T.token_count_by_lang(_docs(spark, sf_dir))
+
+
+@_query("chunk_documents", """
+WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
+starts AS (
+  SELECT doc_id, text, toks, len(toks) AS n,
+    generate_series(1, greatest(len(toks), 1), 24) AS ss
+  FROM d
+)
+SELECT doc_id,
+  CAST(i - 1 AS BIGINT) AS chunk_idx,
+  array_to_string(list_slice(toks, ss[i], ss[i] + 31), ' ') AS chunk_text,
+  CAST(least(n - ss[i] + 1, 32) AS BIGINT) AS n_tokens
+FROM starts, unnest(generate_series(1, len(ss))) AS u(i)
+WHERE ss[i] <= n
+""")
+def _chunk_documents(spark, sf_dir):
+    return T.chunk_documents(_docs(spark, sf_dir), chunk_tokens=32, overlap=8)
+
+
+@_query("dataset_split", """
+WITH assigned AS (
+  SELECT lang,
+    CASE WHEN b < 25 THEN 'val'
+         WHEN b < 50 THEN 'test'
+         ELSE 'train' END AS split
+  FROM (
+    SELECT lang,
+      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)) AS BIGINT) AS b
+    FROM documents) t
+)
+SELECT lang, split, count(*) AS n_docs
+FROM assigned GROUP BY lang, split ORDER BY lang, split
+""")
+def _dataset_split(spark, sf_dir):
+    out = T.dataset_split(_docs(spark, sf_dir))
+    return (
+        out.groupBy("lang", "split")
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .orderBy("lang", "split")
+    )
+
+
+@_query("contamination_check", """
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+sh AS (
+  SELECT DISTINCT doc_id,
+    array_to_string(list_slice(toks, i, i + 7), ' ') AS s
+  FROM d, unnest(generate_series(1, greatest(len(toks) - 7, 1))) AS u(i)
+),
+bench AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 5),
+hits AS (
+  SELECT c.doc_id, b.bench_id
+  FROM sh c JOIN bench b ON c.s = b.s
+  WHERE c.doc_id <> b.bench_id
+)
+SELECT doc_id, count(*) AS n_shared_shingles,
+  array_to_string(list_sort(list(DISTINCT bench_id)), ',') AS contaminated_by
+FROM hits GROUP BY doc_id
+""")
+def _contamination(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    benchmark = docs.filter(F.col("doc_id") < 5)
+    return T.contamination_check(docs, benchmark)
+
+
+@_query("tfidf_top_terms", """
+WITH toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
+), tf AS (
+  SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token
+), dfreq AS (
+  SELECT token, count(*) AS df FROM tf GROUP BY token
+), n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
+idf AS (
+  SELECT token, ln((n_docs + 1)/(df + 1)) + 1.0 AS idf FROM dfreq, n
+), scored AS (
+  SELECT tf.doc_id, tf.token, round(tf.tf * idf.idf, 6) AS tfidf
+  FROM tf JOIN idf USING (token)
+)
+SELECT doc_id, token, tfidf, rnk FROM (
+  SELECT doc_id, token, tfidf,
+    CAST(row_number() OVER (PARTITION BY doc_id
+      ORDER BY tfidf DESC, token) AS BIGINT) AS rnk
+  FROM scored) t
+WHERE rnk <= 5
+""")
+def _tfidf_top_terms(spark, sf_dir):
+    return T.tfidf_top_terms(_docs(spark, sf_dir), k=5)
+
+
+@_query("repetition_stats", """
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+ws AS (
+  SELECT doc_id, len(toks) AS n_words,
+    len(list_distinct(toks)) AS n_distinct
+  FROM d
+), bg AS (
+  SELECT doc_id, array_to_string(list_slice(toks, i, i + 1), ' ') AS b
+  FROM d, unnest(generate_series(1, greatest(len(toks) - 1, 1))) AS u(i)
+), bgs AS (
+  SELECT doc_id, count(*) AS n_bigrams,
+    count(DISTINCT b) AS n_distinct_bigrams
+  FROM bg GROUP BY doc_id
+), wc AS (
+  SELECT doc_id, w, count(*) AS n
+  FROM (SELECT doc_id, unnest(toks) AS w FROM d) GROUP BY doc_id, w
+), tops AS (SELECT doc_id, max(n) AS top_word_n FROM wc GROUP BY doc_id)
+SELECT ws.doc_id, n_words,
+  round(1.0 - CAST(n_distinct AS DOUBLE) / n_words, 6) AS dup_word_frac,
+  round(CAST(top_word_n AS DOUBLE) / n_words, 6) AS top_word_frac,
+  round(1.0 - CAST(n_distinct_bigrams AS DOUBLE) / n_bigrams, 6)
+    AS dup_bigram_frac
+FROM ws JOIN tops USING (doc_id) JOIN bgs USING (doc_id)
+""")
+def _repetition_stats(spark, sf_dir):
+    return T.repetition_stats(_docs(spark, sf_dir))
+
+
+@_query("bm25_topk", _bm25_oracle())
+def _bm25_topk(spark, sf_dir):
+    return T.bm25_topk(_docs(spark, sf_dir))
+
+
+@_query("doc_lm_score", """
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+w AS (SELECT doc_id, unnest(toks) AS w FROM d),
+uni AS (SELECT w, count(*) AS wn FROM w GROUP BY w),
+tot AS (SELECT CAST(sum(wn) AS DOUBLE) AS total FROM uni),
+freq AS (SELECT w, -log2(wn / total) AS surprisal FROM uni, tot)
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+  round(avg(surprisal), 6) AS mean_surprisal
+FROM w JOIN freq USING (w) GROUP BY doc_id
+""")
+def _doc_lm_score(spark, sf_dir):
+    return T.doc_lm_score(_docs(spark, sf_dir))
+
+
+@_query("events_tumbling", """
+SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
+  count(*) AS n_events, round(sum(value), 6) AS sum_value
+FROM events GROUP BY 1, 2
+""")
+def _events_tumbling(spark, sf_dir):
+    return W.tumbling_counts(load_table(spark, sf_dir, "events"))
+
+
+@_query("events_sliding", """
+SELECT time_bucket(INTERVAL '30 minutes', ts)
+         - k * INTERVAL '30 minutes' AS window_start,
+  event_type, count(*) AS n_events
+FROM events, unnest([0, 1]) AS off(k)
+GROUP BY 1, 2
+""")
+def _events_sliding(spark, sf_dir):
+    return W.sliding_counts(load_table(spark, sf_dir, "events"))
+
+
+@_query("events_sessions", """
+WITH marked AS (
+  SELECT user_id, ts, value,
+    CASE WHEN lag(ts) OVER w IS NULL
+           OR ts - lag(ts) OVER w > INTERVAL '10 minutes'
+         THEN 1 ELSE 0 END AS new_session
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), numbered AS (
+  SELECT user_id, ts, value,
+    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
+      ROWS UNBOUNDED PRECEDING) AS sid
+  FROM marked
+)
+SELECT user_id, min(ts) AS session_start,
+  max(ts) + INTERVAL '10 minutes' AS session_end,
+  count(*) AS n_events, round(sum(value), 6) AS sum_value
+FROM numbered GROUP BY user_id, sid
+""")
+def _events_sessions(spark, sf_dir):
+    return W.session_stats(load_table(spark, sf_dir, "events"))
+
+
+@_query("events_asof_purchase", """
+WITH p AS (
+  SELECT user_id, ts, max(event_id) AS p_eid, max(value) AS p_value
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
+)
+SELECT e.user_id, e.event_id, e.ts,
+  p.p_eid AS p_eid_asof, p.p_value AS p_value_asof, p.ts AS ts_asof
+FROM events e ASOF LEFT JOIN p
+  ON e.user_id = p.user_id AND e.ts >= p.ts
+""")
+def _events_asof_purchase(spark, sf_dir):
+    ev = load_table(spark, sf_dir, "events")
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(
+            F.max("event_id").alias("p_eid"),
+            F.max("value").alias("p_value"),
+        )
+    )
+    out = J.asof_join(
+        ev, purchases, on="user_id", right_cols=["p_eid", "p_value"]
+    )
+    return out.select(
+        "user_id", "event_id", "ts", "p_eid_asof", "p_value_asof", "ts_asof"
+    )
+
+
+@_query("events_range_pairs", """
+WITH e AS (
+  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
+  FROM events)
+SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
+  b.sec - a.sec AS gap_seconds
+FROM e a JOIN e b
+  ON a.user_id = b.user_id AND a.event_id < b.event_id
+ AND abs(b.sec - a.sec) <= 300
+""")
+def _events_range_pairs(spark, sf_dir):
+    return J.range_self_join(
+        load_table(spark, sf_dir, "events"),
+        key="user_id",
+        max_gap_seconds=300,
+    )
+
+
+_query("q_event_gaps", """
+SELECT user_id, event_id,
+  CAST(floor(epoch(ts)) AS BIGINT)
+    - lag(CAST(floor(epoch(ts)) AS BIGINT))
+        OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_prev_s,
+  lead(CAST(floor(epoch(ts)) AS BIGINT))
+        OVER (PARTITION BY user_id ORDER BY ts, event_id)
+    - CAST(floor(epoch(ts)) AS BIGINT) AS gap_next_s
+FROM events
+""")(Q.q_event_gaps)
+
+_query("q_conversion_funnel", """
+WITH s AS (
+  SELECT user_id, min(ts) AS s_ts FROM events
+  WHERE event_type = 'signup' GROUP BY user_id
+), c AS (
+  SELECT e.user_id, min(e.ts) AS c_ts
+  FROM events e JOIN s ON e.user_id = s.user_id
+  WHERE e.event_type = 'click' AND e.ts >= s.s_ts GROUP BY e.user_id
+), p AS (
+  SELECT e.user_id, min(e.ts) AS p_ts
+  FROM events e JOIN c ON e.user_id = c.user_id
+  WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY e.user_id
+)
+SELECT (SELECT count(*) FROM s) AS n_signup,
+       (SELECT count(*) FROM c) AS n_click_after,
+       (SELECT count(*) FROM p) AS n_purchase_after
+""")(Q.q_conversion_funnel)
+
+_query("q_events_resampled", """
+WITH bounds AS (
+  SELECT date_trunc('hour', min(ts)) AS lo, date_trunc('hour', max(ts)) AS hi
+  FROM events
+), hours AS (
+  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour_start
+  FROM bounds
+), types AS (SELECT DISTINCT event_type FROM events),
+counts AS (
+  SELECT date_trunc('hour', ts) AS hour_start, event_type,
+    count(*) AS n_events
+  FROM events GROUP BY 1, 2
+)
+SELECT h.hour_start, t.event_type,
+  coalesce(c.n_events, 0) AS n_events
+FROM hours h CROSS JOIN types t
+LEFT JOIN counts c
+  ON h.hour_start = c.hour_start AND t.event_type = c.event_type
+""")(Q.q_events_resampled)
+
+_query("q_cohort_retention", """
+WITH first AS (
+  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
+  FROM events GROUP BY user_id
+), active AS (
+  SELECT DISTINCT user_id, date_trunc('week', ts) AS act_week FROM events
+)
+SELECT cohort_week,
+  CAST(date_diff('day', cohort_week, act_week) // 7 AS BIGINT) AS week_offset,
+  count(DISTINCT a.user_id) AS n_users
+FROM active a JOIN first USING (user_id)
+GROUP BY cohort_week, week_offset
+ORDER BY cohort_week, week_offset
+""")(Q.q_cohort_retention)
+
+_query("q_user_event_type_sets", """
+SELECT user_id,
+  array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_types,
+  count(*) AS n_events
+FROM events GROUP BY user_id
+""")(Q.q_user_event_type_sets)
+
+
+@_query("hourly_anomaly", """
+WITH hourly AS (
+  SELECT date_trunc('hour', ts) AS hour_start, event_type,
+    count(*) AS n_events,
+    CAST(floor(epoch(date_trunc('hour', ts))/3600) AS BIGINT) AS hour_num
+  FROM events GROUP BY 1, 2
+)
+SELECT hour_start, event_type, n_events,
+  round(avg(n_events) OVER w, 6) AS rolling_mean,
+  round(coalesce(stddev_samp(n_events) OVER w, 0.0), 6) AS rolling_std
+FROM hourly
+WINDOW w AS (PARTITION BY event_type ORDER BY hour_num
+  RANGE BETWEEN 23 PRECEDING AND CURRENT ROW)
+""")
+def _hourly_anomaly(spark, sf_dir):
+    # Rolling z-score on hourly event counts: trailing-24-bucket mean
+    # and sample stddev per type (range frame over the hour number).
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("hour_start"),
+        "event_type",
+    ).agg(F.count(F.lit(1)).alias("n_events"))
+    hourly = hourly.withColumn(
+        "hour_num", (F.unix_timestamp("hour_start") / 3600).cast("long")
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("hour_num")
+        .rangeBetween(-23, 0)
+    )
+    return hourly.select(
+        "hour_start",
+        "event_type",
+        "n_events",
+        F.round(F.avg("n_events").over(w), 6).alias("rolling_mean"),
+        F.round(
+            F.coalesce(F.stddev_samp("n_events").over(w), F.lit(0.0)), 6
+        ).alias("rolling_std"),
+    )
+
+
+_query("q_json_props", """
+SELECT event_type, count(*) AS n_events,
+  CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
+  round(avg(CAST(props->>'k' AS BIGINT)), 6) AS avg_k
+FROM events GROUP BY event_type ORDER BY event_type
+""")(Q.q_json_props)
+
+
+@_query("profile_customer", "\nUNION ALL\n".join(
+    f"""SELECT '{c}' AS col_name, count(*) AS n_rows,
+  CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+  count(DISTINCT {c}) AS n_distinct,
+  CAST(min({c}) AS VARCHAR) AS min_value,
+  CAST(max({c}) AS VARCHAR) AS max_value FROM customer"""
+    for c in ("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
+))
+def _profile_customer(spark, sf_dir):
+    from recmetrics_pyspark_spark.operators.profile import profile_table
+
+    return profile_table(load_table(spark, sf_dir, "customer"))
+
+
+_query("q_top_tokens", """
+SELECT token, n, rnk FROM (
+  SELECT token, n,
+    CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rnk
+  FROM (
+    SELECT token, count(*) AS n FROM (
+      SELECT unnest(string_split(text, ' ')) AS token FROM documents) u
+    GROUP BY token) c
+) t WHERE rnk <= 50
+""")(Q.q_top_tokens)
+
+_query("q1_pricing_summary", """
+SELECT l_returnflag, l_linestatus,
+  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 6)
+    AS sum_qty,
+  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
+    AS sum_base_price,
+  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6)))
+    AS DOUBLE), 6) AS sum_disc_price,
+  round(CAST(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax)
+    AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_charge,
+  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
+    / count(*), 6) AS avg_qty,
+  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
+    / count(*), 6) AS avg_price,
+  round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE)
+    / count(*), 6) AS avg_disc,
+  count(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+""")(Q.q1_pricing_summary)
+
+_query("q_rolling_revenue", """
+WITH daily AS (
+  SELECT date_trunc('day', o_orderdate) AS day,
+    round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue,
+    CAST(floor(epoch(date_trunc('day', o_orderdate))/86400) AS BIGINT)
+      AS day_num
+  FROM orders GROUP BY 1
+)
+SELECT day, revenue,
+  round(sum(revenue) OVER (ORDER BY day_num
+    RANGE BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS rolling_3d_revenue
+FROM daily
+""")(Q.q_rolling_revenue)
+
+_query("q3_shipping_priority", """
+SELECT l_orderkey, o_orderdate, o_orderpriority,
+  round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1995-03-15'
+  AND l_shipdate > TIMESTAMP '1995-03-15'
+GROUP BY l_orderkey, o_orderdate, o_orderpriority
+ORDER BY revenue DESC, l_orderkey
+LIMIT 10
+""")(Q.q3_shipping_priority)
+
+_query("q4_order_priority", """
+SELECT o_orderpriority, count(*) AS order_count
+FROM orders
+WHERE o_orderdate >= TIMESTAMP '1993-07-01'
+  AND o_orderdate < TIMESTAMP '1993-10-01'
+  AND EXISTS (SELECT 1 FROM lineitem
+              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+GROUP BY o_orderpriority
+ORDER BY o_orderpriority
+""")(Q.q_order_priority_count)
+
+_query("q5_region_volume", """
+SELECT n_name, round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation ON s_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1994-01-01'
+  AND o_orderdate < TIMESTAMP '1995-01-01'
+GROUP BY n_name
+ORDER BY revenue DESC, n_name
+""")(Q.q5_region_volume)
+
+_query("q6_forecast_revenue", """
+SELECT round(CAST(sum(CAST(l_extendedprice*l_discount AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1994-01-01'
+  AND l_shipdate < TIMESTAMP '1995-01-01'
+  AND l_discount >= 0.03 AND l_discount <= 0.07
+  AND l_quantity < 24
+""")(Q.q6_forecast_revenue)
+
+_query("q10_returned_items", """
+SELECT c_custkey, c_name, c_acctbal, n_name, c_mktsegment,
+  round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+  AND o_orderdate >= TIMESTAMP '1993-10-01'
+  AND o_orderdate < TIMESTAMP '1994-01-01'
+GROUP BY c_custkey, c_name, c_acctbal, n_name, c_mktsegment
+ORDER BY revenue DESC, c_custkey
+LIMIT 20
+""")(Q.q10_returned_items)
+
+_query("q18_large_orders", """
+WITH big AS (
+  SELECT l_orderkey, sum(l_quantity) AS sum_qty
+  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 300
+)
+SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+  round(sum_qty, 6) AS sum_qty
+FROM big
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 100
+""")(Q.q18_large_orders)
+
+_query("q_top_parts_per_brand", """
+WITH rev AS (
+  SELECT l_partkey, round(sum(l_extendedprice*(1-l_discount)), 6) AS revenue
+  FROM lineitem GROUP BY l_partkey
+)
+SELECT p_brand, p_partkey, revenue, brand_rank FROM (
+  SELECT p_brand, p_partkey, revenue,
+    CAST(row_number() OVER (PARTITION BY p_brand
+      ORDER BY revenue DESC, p_partkey) AS INTEGER) AS brand_rank
+  FROM rev JOIN part ON l_partkey = p_partkey) t
+WHERE brand_rank <= 3
+ORDER BY p_brand, brand_rank
+""")(Q.q_top_parts_per_brand)
+
+_query("q_rollup_returns", """
+SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_qty
+FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+""")(Q.q_rollup_returns)
+
+_query("q_cube_brand_status", """
+SELECT p_brand, l_linestatus, count(*) AS n_rows,
+  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
+    AS sum_price
+FROM lineitem JOIN part ON l_partkey = p_partkey
+GROUP BY CUBE (p_brand, l_linestatus)
+""")(Q.q_cube_brand_status)
+
+_query("q_set_ops_customers", """
+WITH y94 AS (SELECT DISTINCT o_custkey FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1994-01-01'
+    AND o_orderdate < TIMESTAMP '1995-01-01'),
+y95 AS (SELECT DISTINCT o_custkey FROM orders
+  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+    AND o_orderdate < TIMESTAMP '1996-01-01')
+SELECT o_custkey, 'both' AS cohort FROM (SELECT o_custkey FROM y94 INTERSECT SELECT o_custkey FROM y95)
+UNION ALL
+SELECT o_custkey, 'only_1994' AS cohort FROM (SELECT o_custkey FROM y94 EXCEPT ALL SELECT o_custkey FROM y95)
+""")(Q.q_set_ops_customers)
+
+_query("q_anti_join_customers", """
+SELECT c_mktsegment, count(*) AS n_customers
+FROM customer
+WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY c_mktsegment ORDER BY c_mktsegment
+""")(Q.q_anti_join_customers)
+
+_query("q_multi_distinct", """
+SELECT l_returnflag,
+  count(DISTINCT l_partkey) AS n_parts,
+  count(DISTINCT l_suppkey) AS n_suppliers,
+  count(DISTINCT l_orderkey) AS n_orders,
+  count(*) AS n_rows
+FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+""")(Q.q_multi_distinct)
+
+_query("q_orders_by_month", """
+SELECT CAST(date_part('year', o_orderdate) AS INTEGER) AS o_year,
+  CAST(date_part('month', o_orderdate) AS INTEGER) AS o_month,
+  count(*) AS n_orders, round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
+FROM orders GROUP BY 1, 2 ORDER BY 1, 2
+""")(Q.q_orders_by_month)
+
+_query("q_string_funcs_parts", """
+SELECT p_brand, count(*) AS n_parts,
+  round(avg(CAST(name_len AS DOUBLE)), 6) AS avg_name_len,
+  min(name_prefix) AS first_prefix
+FROM (
+  SELECT p_brand, upper(substr(p_name, 1, 5)) AS name_prefix,
+    CAST(length(p_name) AS INTEGER) AS name_len
+  FROM part WHERE p_type LIKE '%BRASS%') t
+GROUP BY p_brand ORDER BY p_brand
+""")(Q.q_string_funcs_parts)
+
+_query("q_case_null_buckets", """
+SELECT CASE WHEN c_acctbal IS NULL THEN 'unknown'
+            WHEN c_acctbal < 0 THEN 'negative'
+            WHEN c_acctbal < 5000 THEN 'low'
+            ELSE 'high' END AS balance_bucket,
+  count(*) AS n_customers,
+  CAST(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_building
+FROM customer GROUP BY 1 ORDER BY 1
+""")(Q.q_case_null_buckets)
+
+_query("q_quantiles_by_flag", """
+SELECT l_returnflag,
+  round(quantile_cont(l_extendedprice, 0.25), 6) AS p25,
+  round(quantile_cont(l_extendedprice, 0.5), 6) AS p50,
+  round(quantile_cont(l_extendedprice, 0.75), 6) AS p75,
+  round(min(l_extendedprice), 6) AS min_price,
+  round(max(l_extendedprice), 6) AS max_price
+FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+""")(Q.q_quantiles_by_flag)
+
+_query("q_sql_surface", """
+SELECT n_name, count(*) AS n_lineitems,
+  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
+    AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
+FROM lineitem
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+GROUP BY n_name
+ORDER BY revenue DESC, n_name
+""")(Q.q_sql_surface)
+
+_query("q7_nation_volume", """
+SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+  CAST(date_part('year', l_shipdate) AS INTEGER) AS l_year,
+  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS volume
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation n1 ON s_nationkey = n1.n_nationkey
+JOIN nation n2 ON c_nationkey = n2.n_nationkey
+WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+  AND l_shipdate < TIMESTAMP '1997-01-01'
+  AND n1.n_name <> n2.n_name
+GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+""")(Q.q7_nation_volume)
+
+_query("q9_profit_by_nation_year", """
+SELECT n_name AS nation,
+  CAST(date_part('year', l_shipdate) AS INTEGER) AS o_year,
+  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) - p_retailprice*l_quantity*0.1 AS DECIMAL(18,6))) AS DOUBLE), 6)
+    AS sum_profit
+FROM lineitem
+JOIN part ON l_partkey = p_partkey
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+WHERE p_name LIKE '%ol%'
+GROUP BY 1, 2 ORDER BY nation, o_year DESC
+""")(Q.q9_profit_by_nation_year)
+
+_query("q12_priority_by_date", """
+SELECT l_returnflag,
+  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
+       THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+WHERE l_shipdate >= TIMESTAMP '1994-01-01'
+  AND l_shipdate < TIMESTAMP '1995-01-01'
+GROUP BY l_returnflag ORDER BY l_returnflag
+""")(Q.q12_priority_by_date)
+
+_query("q14_promo_revenue", """
+SELECT round(100.0 * CAST(sum(CAST(CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
+       / CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS promo_revenue_pct
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE l_shipdate >= TIMESTAMP '1995-09-01'
+  AND l_shipdate < TIMESTAMP '1995-10-01'
+""")(Q.q14_promo_revenue)
+
+_query("q19_disjunctive", """
+SELECT round(CAST(sum(CAST(l_extendedprice*(1-l_discount)
+    AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue,
+  count(*) AS n_lines
+FROM lineitem JOIN part ON l_partkey = p_partkey
+WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+       AND l_quantity BETWEEN 1 AND 20)
+   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
+       AND l_quantity BETWEEN 10 AND 40)
+""")(Q.q19_disjunctive)
+
+_query("q22_dormant_rich_customers", """
+WITH avg_bal AS (
+  SELECT avg(c_acctbal) AS avg_bal FROM customer WHERE c_acctbal > 0
+)
+SELECT substr(c_name, 18, 1) AS name_digit,
+  count(*) AS n_custs, round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_bal
+FROM customer, avg_bal
+WHERE c_acctbal > avg_bal
+  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+GROUP BY 1 ORDER BY 1
+""")(Q.q22_dormant_rich_customers)
+
+_query("q_pivot_static", """
+SELECT n_name,
+  round(sum(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 6) AS qty_a,
+  round(sum(CASE WHEN l_returnflag = 'N' THEN l_quantity END), 6) AS qty_n,
+  round(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity END), 6) AS qty_r
+FROM lineitem
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ON s_nationkey = n_nationkey
+GROUP BY n_name ORDER BY n_name
+""")(Q.q_pivot_static)
+
+_query("q_customer_spend_ranks", """
+WITH spend AS (
+  SELECT o_custkey, round(sum(o_totalprice), 6) AS total_spend
+  FROM orders GROUP BY o_custkey
+)
+SELECT o_custkey, total_spend,
+  CAST(rank() OVER w AS BIGINT) AS spend_rank,
+  round(percent_rank() OVER w, 6) AS pct_rank,
+  round(cume_dist() OVER w, 6) AS cume,
+  CAST(ntile(4) OVER w AS BIGINT) AS quartile
+FROM spend
+WINDOW w AS (ORDER BY total_spend DESC, o_custkey)
+""")(Q.q_customer_spend_ranks)
+
+_query("q_correlation_stats", """
+SELECT l_returnflag,
+  round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
+  round(covar_samp(l_quantity, l_extendedprice), 6) AS covar_qty_price,
+  round(stddev_samp(l_extendedprice), 6) AS std_price,
+  round(var_samp(l_quantity), 6) AS var_qty
+FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+""")(Q.q_correlation_stats)
+
+_query("q_winsorized_stats", """
+WITH bounds AS (
+  SELECT l_returnflag,
+    quantile_cont(l_extendedprice, 0.05) AS p05,
+    quantile_cont(l_extendedprice, 0.95) AS p95
+  FROM lineitem GROUP BY l_returnflag
+)
+SELECT l.l_returnflag, count(*) AS n_kept,
+  round(avg(l_extendedprice), 6) AS trimmed_mean,
+  round(min(l_extendedprice), 6) AS trimmed_min,
+  round(max(l_extendedprice), 6) AS trimmed_max
+FROM lineitem l JOIN bounds b ON l.l_returnflag = b.l_returnflag
+WHERE l_extendedprice >= p05 AND l_extendedprice <= p95
+GROUP BY l.l_returnflag ORDER BY l.l_returnflag
+""")(Q.q_winsorized_stats)
+
+_query("q_fuzzy_part_names", """
+SELECT p_brand, count(*) AS n_close_pairs,
+  round(avg(CAST(dist AS DOUBLE)), 6) AS avg_dist,
+  CAST(min(dist) AS INTEGER) AS min_dist
+FROM (
+  SELECT a.p_brand, levenshtein(a.p_name, b.p_name) AS dist
+  FROM part a JOIN part b
+    ON a.p_brand = b.p_brand AND a.p_size = b.p_size
+   AND a.p_partkey < b.p_partkey
+) t WHERE dist <= 4
+GROUP BY p_brand ORDER BY p_brand
+""")(Q.q_fuzzy_part_names)
+
+_query("q_regexp_extract", """
+SELECT c_custkey % 10 AS last_digit, count(*) AS n_customers,
+  CAST(sum(CASE WHEN CAST(regexp_extract(c_name, 'Customer#(\\d+)', 1)
+                     AS BIGINT) = c_custkey THEN 1 ELSE 0 END) AS BIGINT)
+    AS n_matching
+FROM customer GROUP BY 1 ORDER BY 1
+""")(Q.q_regexp_extract)
+
+_query("q_grouping_sets", """
+SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
+    AS sum_price
+FROM lineitem
+GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
+""")(Q.q_grouping_sets)
+
+_query("q2_min_cost_supplier", """
 WITH part3 AS (SELECT p_partkey, p_name FROM part WHERE p_size <= 3),
 costs AS (
   SELECT p_partkey, p_name, l_suppkey, l_extendedprice
@@ -7137,8 +5753,35 @@ FROM costs
 JOIN mc ON p_partkey = mk AND l_extendedprice = min_price
 JOIN supplier ON l_suppkey = s_suppkey
 ORDER BY p_partkey, supplier
-""",
-        "q13_order_count_distribution": """
+""")(Q.q2_min_cost_supplier)
+
+_query("q8_market_share", """
+WITH j AS (
+  SELECT year(o_orderdate) AS o_year, n_name,
+    l_extendedprice * (1 - l_discount) AS vol
+  FROM lineitem
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN supplier ON l_suppkey = s_suppkey
+  JOIN nation ON s_nationkey = n_nationkey
+)
+SELECT o_year,
+  round(CAST(sum(CAST(CASE WHEN n_name = 'FRANCE' THEN vol ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
+    / CAST(sum(CAST(vol AS DECIMAL(18,6))) AS DOUBLE), 6) AS mkt_share,
+  round(CAST(sum(CAST(vol AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_volume
+FROM j GROUP BY o_year ORDER BY o_year
+""")(Q.q8_market_share)
+
+_query("q11_important_stock", """
+WITH pp AS (
+  SELECT l_partkey, sum(l_extendedprice * (1 - l_discount)) AS part_value
+  FROM lineitem GROUP BY l_partkey
+), t AS (SELECT sum(part_value) * 0.0001 AS cutoff FROM pp)
+SELECT l_partkey, round(part_value, 6) AS part_value
+FROM pp, t WHERE part_value > cutoff
+ORDER BY part_value DESC, l_partkey
+""")(Q.q11_important_stock)
+
+_query("q13_order_count_distribution", """
 WITH o AS (SELECT * FROM orders WHERE o_orderpriority <> '1-URGENT'),
 pc AS (
   SELECT c_custkey, count(o_orderkey) AS c_count
@@ -7147,8 +5790,40 @@ pc AS (
 )
 SELECT c_count, count(*) AS custdist
 FROM pc GROUP BY c_count ORDER BY custdist DESC, c_count DESC
-""",
-        "q17_small_quantity_revenue": """
+""")(Q.q13_order_count_distribution)
+
+_query("q15_top_supplier", """
+WITH r AS (
+  SELECT l_suppkey,
+    round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_revenue
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+    AND l_shipdate < TIMESTAMP '1996-04-01'
+  GROUP BY l_suppkey
+), m AS (SELECT max(total_revenue) AS max_revenue FROM r)
+SELECT l_suppkey, s_name AS supplier, total_revenue
+FROM r, m
+JOIN supplier ON l_suppkey = s_suppkey
+WHERE total_revenue = max_revenue
+ORDER BY l_suppkey
+""")(Q.q15_top_supplier)
+
+_query("q16_supplier_cnt_by_part", """
+WITH cut AS (SELECT avg(s_acctbal) AS cut FROM supplier),
+excl AS (SELECT s_suppkey FROM supplier, cut WHERE s_acctbal < cut),
+kept AS (
+  SELECT l_partkey, l_suppkey FROM lineitem
+  WHERE l_suppkey NOT IN (SELECT s_suppkey FROM excl)
+)
+SELECT p_brand, substr(p_type, 1, 6) AS p_type_prefix, p_size,
+  count(DISTINCT l_suppkey) AS supplier_cnt
+FROM kept JOIN part ON l_partkey = p_partkey
+WHERE p_size <= 10
+GROUP BY p_brand, p_type_prefix, p_size
+ORDER BY supplier_cnt DESC, p_brand, p_type_prefix, p_size
+""")(Q.q16_supplier_cnt_by_part)
+
+_query("q17_small_quantity_revenue", """
 WITH p AS (SELECT p_partkey FROM part WHERE p_brand = 'Brand#1'),
 b AS (
   SELECT l_partkey, l_quantity, l_extendedprice
@@ -7160,8 +5835,22 @@ b AS (
 SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / 7.0, 6) AS avg_yearly,
   count(*) AS n_lines
 FROM b JOIN a ON l_partkey = ak WHERE l_quantity < qty_cut
-""",
-        "q21_sole_latest_supplier": """
+""")(Q.q17_small_quantity_revenue)
+
+_query("q20_candidate_suppliers", """
+WITH q AS (
+  SELECT DISTINCT l_suppkey FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+    AND l_shipdate < TIMESTAMP '1997-01-01'
+    AND l_quantity >= 45
+    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 5)
+)
+SELECT s_suppkey, s_name AS supplier, s_acctbal
+FROM supplier WHERE s_suppkey IN (SELECT l_suppkey FROM q)
+ORDER BY s_suppkey
+""")(Q.q20_candidate_suppliers)
+
+_query("q21_sole_latest_supplier", """
 WITH o AS (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'),
 l1 AS (
   SELECT l_orderkey, l_suppkey, l_shipdate
@@ -7178,90 +5867,261 @@ WHERE EXISTS (
     WHERE y.l_orderkey = l1.l_orderkey AND y.l_suppkey <> l1.l_suppkey
       AND y.l_shipdate > l1.l_shipdate)
 GROUP BY s_name ORDER BY numwait DESC, supplier ASC
-""",
-        "q8_market_share": """
-WITH j AS (
-  SELECT year(o_orderdate) AS o_year, n_name,
-    l_extendedprice * (1 - l_discount) AS vol
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-)
-SELECT o_year,
-  round(CAST(sum(CAST(CASE WHEN n_name = 'FRANCE' THEN vol ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-    / CAST(sum(CAST(vol AS DECIMAL(18,6))) AS DOUBLE), 6) AS mkt_share,
-  round(CAST(sum(CAST(vol AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_volume
-FROM j GROUP BY o_year ORDER BY o_year
-""",
-        "q11_important_stock": """
-WITH pp AS (
-  SELECT l_partkey, sum(l_extendedprice * (1 - l_discount)) AS part_value
-  FROM lineitem GROUP BY l_partkey
-), t AS (SELECT sum(part_value) * 0.0001 AS cutoff FROM pp)
-SELECT l_partkey, round(part_value, 6) AS part_value
-FROM pp, t WHERE part_value > cutoff
-ORDER BY part_value DESC, l_partkey
-""",
-        "q15_top_supplier": """
-WITH r AS (
-  SELECT l_suppkey,
-    round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-), m AS (SELECT max(total_revenue) AS max_revenue FROM r)
-SELECT l_suppkey, s_name AS supplier, total_revenue
-FROM r, m
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE total_revenue = max_revenue
-ORDER BY l_suppkey
-""",
-        "q16_supplier_cnt_by_part": """
-WITH cut AS (SELECT avg(s_acctbal) AS cut FROM supplier),
-excl AS (SELECT s_suppkey FROM supplier, cut WHERE s_acctbal < cut),
-kept AS (
-  SELECT l_partkey, l_suppkey FROM lineitem
-  WHERE l_suppkey NOT IN (SELECT s_suppkey FROM excl)
-)
-SELECT p_brand, substr(p_type, 1, 6) AS p_type_prefix, p_size,
-  count(DISTINCT l_suppkey) AS supplier_cnt
-FROM kept JOIN part ON l_partkey = p_partkey
-WHERE p_size <= 10
-GROUP BY p_brand, p_type_prefix, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type_prefix, p_size
-""",
-        "q20_candidate_suppliers": """
-WITH q AS (
-  SELECT DISTINCT l_suppkey FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1997-01-01'
-    AND l_quantity >= 45
-    AND l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 5)
-)
-SELECT s_suppkey, s_name AS supplier, s_acctbal
-FROM supplier WHERE s_suppkey IN (SELECT l_suppkey FROM q)
-ORDER BY s_suppkey
-""",
-        # exact weekly distinct + TRUE flag: the Spark side flips the
-        # flag if the unioned per-day HLL sketches drift past 5%
-        "wau_hll_mergeable": """
-SELECT date_trunc('week', ts) AS week_start,
-  CAST(count(DISTINCT user_id) AS BIGINT) AS wau,
-  TRUE AS sketch_within_bounds
-FROM events GROUP BY 1 ORDER BY week_start
-""",
-        # direct weekly recompute from raw events: green PROVES the
-        # hour->day->week tree derivation equals the direct aggregate
-        "q_rollup_tree": """
+""")(Q.q21_sole_latest_supplier)
+
+
+# direct weekly recompute from raw events: green PROVES the
+# hour->day->week tree derivation equals the direct aggregate
+@_query("q_rollup_tree", """
 SELECT date_trunc('week', ts) AS week_start, event_type,
   count(*) AS n_events,
   round(sum(value), 6) AS sum_value,
   CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) AS n_days
 FROM events GROUP BY 1, 2 ORDER BY week_start, event_type
-""",
-        "grouped_split": """
+""")
+def _q_rollup_tree(spark, sf_dir):
+    """Hypertable-style rollup tree: weekly per-type stats derived
+    hour→day→week, each level aggregating ONLY the level below (the
+    materialized-view hierarchy a time-series store maintains — at
+    100 TB each refresh touches hour-scale rows, never raw events).
+    The ORACLE computes weekly directly from raw events, so a green
+    row PROVES the tree derivation equals the direct aggregate.
+    Only the final level rounds (intermediate rounding would compound
+    and diverge from the direct recompute)."""
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
+    ).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
+    )
+    daily = hourly.groupBy(
+        F.date_trunc("day", F.col("h")).alias("d"), "event_type"
+    ).agg(F.sum("n").alias("n"), F.sum("v").alias("v"))
+    weekly = daily.groupBy(
+        F.date_trunc("week", F.col("d")).alias("week_start"), "event_type"
+    ).agg(
+        F.sum("n").cast("bigint").alias("n_events"),
+        F.round(F.sum("v"), 6).alias("sum_value"),
+        F.count(F.lit(1)).cast("bigint").alias("n_days"),
+    )
+    return weekly.orderBy("week_start", "event_type")
+
+
+# exact weekly distinct + TRUE flag: the Spark side flips the
+# flag if the unioned per-day HLL sketches drift past 5%
+@_query("wau_hll_mergeable", """
+SELECT date_trunc('week', ts) AS week_start,
+  CAST(count(DISTINCT user_id) AS BIGINT) AS wau,
+  TRUE AS sketch_within_bounds
+FROM events GROUP BY 1 ORDER BY week_start
+""")
+def _wau_hll_mergeable(spark, sf_dir):
+    """Mergeable-sketch weekly active users: per-DAY HLL sketches
+    (DataSketches, lgConfigK=12) unioned into weekly estimates — the
+    pattern that makes incremental distinct counts possible at 100 TB
+    (a day's sketch is built once from that day's events; the weekly
+    refresh unions 7 fixed-size sketches and never rescans raw).
+    SELF-CHECKING: the query also computes the exact weekly distinct
+    and returns it plus an in-bounds flag (HLL lgK=12 rsd ≈ 0.8%, flag
+    allows 5%); the oracle recomputes the exact count and pins the
+    flag TRUE."""
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        F.date_trunc("day", F.col("ts")).alias("d")
+    ).agg(F.hll_sketch_agg("user_id", F.lit(12)).alias("sk"))
+    weekly_est = daily.groupBy(
+        F.date_trunc("week", F.col("d")).alias("week_start")
+    ).agg(
+        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
+    )
+    weekly_exact = ev.groupBy(
+        F.date_trunc("week", F.col("ts")).alias("week_start")
+    ).agg(F.countDistinct("user_id").alias("wau"))
+    ok = (
+        F.abs(F.col("est") - F.col("wau"))
+        <= 0.05 * F.col("wau")
+    )
+    return (
+        weekly_exact.join(weekly_est, "week_start")
+        .select("week_start", "wau", ok.alias("sketch_within_bounds"))
+        .orderBy("week_start")
+    )
+
+
+@_query("freq_sketch_events", """
+SELECT event_type, count(*) AS n_events, TRUE AS sketch_within_bounds
+FROM events GROUP BY event_type ORDER BY event_type
+""")
+def _freq_sketch_events(spark, sf_dir):
+    """Frequency-sketch surface (DataSketches frequent-items via
+    approx_top_k): estimated per-type event counts vs the exact
+    aggregate, with the estimates verified EQUAL here because the
+    tracker (maxItemsTracked=100) exceeds the distinct-type count — at
+    production cardinalities (items >> tracker) the same call degrades
+    gracefully per the frequent-items guarantee (true heavy hitters
+    survive, counts within εN). Output is the exact counts + a flag
+    the oracle pins TRUE."""
+    ev = load_table(spark, sf_dir, "events")
+    sk = ev.agg(
+        F.expr("approx_top_k(event_type, 5, 100)").alias("top")
+    ).select(
+        F.explode("top").alias("e")
+    ).select(
+        F.col("e.item").alias("event_type"),
+        F.col("e.count").alias("est_count"),
+    )
+    exact = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+    return (
+        exact.join(sk, "event_type", "left")
+        .select(
+            "event_type",
+            "n_events",
+            (F.col("est_count") == F.col("n_events")).alias(
+                "sketch_within_bounds"
+            ),
+        )
+        .orderBy("event_type")
+    )
+
+
+@_query("curation_pipeline", f"""
+WITH h AS (SELECT doc_id, md5(text) AS ch FROM documents),
+g AS (SELECT ch, min(doc_id) AS canonical FROM h GROUP BY ch),
+surv AS (SELECT d.* FROM documents d JOIN g ON d.doc_id = g.canonical),
+q AS (
+  SELECT doc_id,
+    round(least(len(toks)/50.0, 1.0)*0.4
+      + (length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
+         / CAST(length(text) AS DOUBLE))*0.4
+      + least(5.0*len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
+              / CAST(len(toks) AS DOUBLE), 1.0)*0.2, 6) AS quality
+  FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM surv)
+),
+sc AS (
+  SELECT s.*, q.quality FROM surv s JOIN q USING (doc_id)
+  WHERE q.quality >= 0.5
+),
+counts AS (SELECT lang, count(*) AS n FROM sc GROUP BY lang),
+mn AS (SELECT min(n) AS min_n FROM counts),
+th AS (
+  SELECT lang,
+    CAST(floor(4294967296.0 * min_n / n) AS BIGINT) AS u_threshold
+  FROM counts, mn
+),
+keyed AS (
+  SELECT sc.*,
+    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
+  FROM sc
+),
+kept AS (
+  SELECT k.* FROM keyed k JOIN th ON k.lang = th.lang
+  WHERE u < u_threshold
+)
+SELECT lang, count(*) AS n_docs,
+  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
+  round(avg(quality), 6) AS avg_quality
+FROM kept GROUP BY lang ORDER BY lang
+""")
+def _curation_pipeline(spark, sf_dir):
+    """End-to-end corpus curation — the composition a training-data
+    run executes, as ONE declared query: exact-dedup survivors →
+    quality-score floor → deterministic per-lang hash-balancing (the
+    balanced_sample trick) → per-lang yield accounting with surviving
+    token mass. Every stage is an existing operator; the oracle chains
+    their SQL mirrors, so green proves the COMPOSITION, not just the
+    parts."""
+    docs = _docs(spark, sf_dir)
+    survivors = docs.join(
+        D.exact_dedup(docs).filter(~F.col("is_dup")).select("doc_id"),
+        "doc_id",
+    )
+    scored = survivors.join(T.quality_score(survivors), "doc_id").filter(
+        F.col("quality") >= 0.5
+    )
+    counts = scored.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    min_count = counts.agg(F.min("n").alias("min_n"))
+    thresholds = counts.crossJoin(F.broadcast(min_count)).select(
+        "lang",
+        F.floor(
+            F.lit(4294967296.0) * F.col("min_n") / F.col("n")
+        ).alias("u_threshold"),
+    )
+    key = F.conv(
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    kept = (
+        scored.withColumn("u", key)
+        .join(F.broadcast(thresholds), "lang")
+        .filter(F.col("u") < F.col("u_threshold"))
+    )
+    return (
+        kept.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.expr("size(split(text, ' '))")).cast("bigint").alias(
+                "n_tokens"
+            ),
+            F.round(F.avg("quality"), 6).alias("avg_quality"),
+        )
+        .orderBy("lang")
+    )
+
+
+@_query("events_asof_next_purchase", """
+WITH p AS (
+  SELECT user_id, ts, max(event_id) AS p_eid, max(value) AS p_value
+  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
+), m AS (
+  SELECT e.user_id, e.event_id, e.ts,
+    p.p_eid, p.p_value, p.ts AS p_ts
+  FROM events e ASOF LEFT JOIN p
+    ON e.user_id = p.user_id AND e.ts <= p.ts
+  WHERE e.event_type = 'click'
+)
+SELECT user_id, event_id, ts,
+  CASE WHEN p_ts IS NOT NULL
+        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
+       THEN p_eid END AS p_eid_asof,
+  CASE WHEN p_ts IS NOT NULL
+        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
+       THEN p_value END AS p_value_asof,
+  CASE WHEN p_ts IS NOT NULL
+        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
+       THEN p_ts END AS ts_asof
+FROM m
+""")
+def _events_asof_next_purchase(spark, sf_dir):
+    """Forward as-of with tolerance: for every click, the NEXT purchase
+    by the same user within 2 hours (operators/joins.py::asof_join
+    direction='forward', tolerance_seconds=7200 — pandas merge_asof
+    parity; the oracle uses DuckDB's ASOF with the reversed comparison
+    plus the same tolerance null-out)."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click")
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(
+            F.max("event_id").alias("p_eid"),
+            F.max("value").alias("p_value"),
+        )
+    )
+    out = J.asof_join(
+        clicks,
+        purchases,
+        on="user_id",
+        right_cols=["p_eid", "p_value"],
+        direction="forward",
+        tolerance_seconds=7200,
+    )
+    return out.select(
+        "user_id", "event_id", "ts", "p_eid_asof", "p_value_asof", "ts_asof"
+    )
+
+
+@_query("grouped_split", """
 WITH tagged AS (
   SELECT user_id, event_id,
     CASE WHEN ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
@@ -7282,8 +6142,45 @@ WITH tagged AS (
 )
 SELECT split, n_users, n_events, leaked_users
 FROM per, leaked ORDER BY split
-""",
-        "attribution_linear": """
+""")
+def _grouped_split(spark, sf_dir):
+    """Leakage-safe GROUP-level dataset split: every event of a user
+    lands in the same train/val/test bucket (split on md5(user_id),
+    not per-row — per-row splits leak user behavior across splits,
+    the classic recommender-eval mistake). Output proves the property:
+    per-split user/event counts plus a cross-split-user counter the
+    oracle pins at ZERO."""
+    ev = load_table(spark, sf_dir, "events")
+    u = F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    split = (
+        F.when(u % 10 < 8, "train")
+        .when(u % 10 < 9, "val")
+        .otherwise("test")
+    )
+    tagged = ev.select("user_id", "event_id", split.alias("split"))
+    per_split = tagged.groupBy("split").agg(
+        F.countDistinct("user_id").alias("n_users"),
+        F.count(F.lit(1)).alias("n_events"),
+    )
+    leaked = (
+        tagged.groupBy("user_id")
+        .agg(F.countDistinct("split").alias("n_splits"))
+        .agg(
+            F.sum(F.when(F.col("n_splits") > 1, 1).otherwise(0))
+            .cast("bigint")
+            .alias("leaked_users")
+        )
+    )
+    return (
+        per_split.crossJoin(F.broadcast(leaked))
+        .select("split", "n_users", "n_events", "leaked_users")
+        .orderBy("split")
+    )
+
+
+@_query("attribution_linear", """
 WITH c AS (
   SELECT user_id, event_id AS click_id, ts AS click_ts
   FROM events WHERE event_type = 'click'
@@ -7305,8 +6202,52 @@ SELECT user_id,
   CAST(count(DISTINCT click_id) AS BIGINT) AS n_credited_clicks,
   round(sum(credit), 6) AS attributed_value
 FROM credited GROUP BY user_id ORDER BY user_id
-""",
-        "feature_binning": """
+""")
+def _attribution_linear(spark, sf_dir):
+    """Multi-touch LINEAR attribution: each purchase's value is split
+    equally across the user's clicks in the prior 2 hours (the
+    single-touch last-click twin is attribution_last_touch). One
+    range-bounded join on user_id + one purchase-scale aggregate +
+    one click-scale aggregate — never clicks × purchases beyond the
+    2-hour band. Output: per-user attributed value totals."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("p_id"),
+        F.col("ts").alias("p_ts"), F.col("value").alias("p_value"),
+    )
+    # band join: clicks within (p_ts - 2h, p_ts]
+    pairs = purchases.join(
+        clicks,
+        (purchases.user_id == clicks.user_id)
+        & (F.col("click_ts") <= F.col("p_ts"))
+        & (
+            F.expr("timestampdiff(MICROSECOND, click_ts, p_ts)")
+            <= 7200 * 1_000_000
+        ),
+    ).select(purchases.user_id, "p_id", "p_value", "click_id")
+    touch_counts = pairs.groupBy("p_id").agg(
+        F.count(F.lit(1)).alias("n_touches")
+    )
+    credited = pairs.join(touch_counts, "p_id").select(
+        "user_id",
+        "click_id",
+        (F.col("p_value") / F.col("n_touches")).alias("credit"),
+    )
+    return (
+        credited.groupBy("user_id")
+        .agg(
+            F.countDistinct("click_id").alias("n_credited_clicks"),
+            F.round(F.sum("credit"), 6).alias("attributed_value"),
+        )
+        .orderBy("user_id")
+    )
+
+
+@_query("feature_binning", """
 WITH rng AS (
   SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM orders
 ), wb AS (
@@ -7327,8 +6268,79 @@ WITH rng AS (
 )
 SELECT bin, n_width, width_lo, n_depth, depth_lo
 FROM w FULL OUTER JOIN d USING (bin) ORDER BY bin
-""",
-        "zipf_fit": """
+""")
+def _feature_binning(spark, sf_dir):
+    """Numeric feature binning both ways in one query: equi-WIDTH
+    (floor arithmetic over the broadcast [min,max] range — scan-side)
+    and equi-DEPTH (ntile quantile bins) for order totals, with per-bin
+    occupancy. Width bins are skew-visible (heavy bins), depth bins are
+    balanced by construction — the table a feature-engineering pass
+    reads before choosing. Depth binning is the documented-global-sort
+    exact twin; at 100 TB swap ntile for percentile-cut filters (the
+    balanced_sample trick)."""
+    from pyspark.sql.window import Window
+
+    orders = load_table(spark, sf_dir, "orders")
+    rng = orders.agg(
+        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
+    )
+    # explicit floor arithmetic rather than width_bucket: DuckDB lacks
+    # the function, and mirroring the exact expression on both sides
+    # guarantees identical float edge behavior
+    wb = orders.crossJoin(F.broadcast(rng)).select(
+        (
+            F.floor(
+                (F.col("o_totalprice") - F.col("lo"))
+                / ((F.col("hi") + 0.000001 - F.col("lo")) / 8.0)
+            )
+            + 1
+        ).cast("bigint").alias("width_bin"),
+        F.ntile(8)
+        .over(Window.orderBy("o_totalprice", "o_orderkey"))
+        .cast("bigint")
+        .alias("depth_bin"),
+        "o_totalprice",
+    )
+    width = wb.groupBy(F.col("width_bin").alias("bin")).agg(
+        F.count(F.lit(1)).alias("n_width"),
+        F.round(F.min("o_totalprice"), 6).alias("width_lo"),
+    )
+    depth = wb.groupBy(F.col("depth_bin").alias("bin")).agg(
+        F.count(F.lit(1)).alias("n_depth"),
+        F.round(F.min("o_totalprice"), 6).alias("depth_lo"),
+    )
+    return width.join(depth, "bin", "full_outer").orderBy("bin")
+
+
+@_query("curriculum_cuts", """
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), sc AS (
+  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS n_tok,
+    round(least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.5
+      + (CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum')
+          AS DOUBLE) / CAST(len(toks) AS DOUBLE)) / 10.0 * 0.5,
+      6) AS difficulty
+  FROM d
+), cuts AS (
+  SELECT quantile_cont(difficulty, [0.25, 0.5, 0.75]) AS cuts FROM sc
+), st AS (
+  SELECT n_tok, difficulty,
+    CAST(1 + len(list_filter(cuts, c -> c < difficulty)) AS BIGINT)
+      AS stage
+  FROM sc, cuts
+)
+SELECT stage, count(*) AS n_docs,
+  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+  round(min(difficulty), 6) AS min_difficulty,
+  round(max(difficulty), 6) AS max_difficulty
+FROM st GROUP BY stage ORDER BY stage
+""")
+def _curriculum_cuts(spark, sf_dir):
+    return C.curriculum_cuts(_docs(spark, sf_dir))
+
+
+@_query("zipf_fit", """
 WITH toks AS (
   SELECT unnest(string_split(text, ' ')) AS tok FROM documents
 ), freqs AS (
@@ -7345,163 +6357,40 @@ SELECT count(*) AS n_tokens_fit,
   round(avg(y) - (covar_pop(x, y) / nullif(var_pop(x), 0)) * avg(x), 6)
     AS zipf_intercept
 FROM xy
-""",
-        "serendipity": ORACLE_BASE + """
-, pop AS (SELECT item_id AS i, count(*) AS cnt FROM upairs GROUP BY 1),
-baseline AS (
-  SELECT i FROM (
-    SELECT i, row_number() OVER (ORDER BY cnt DESC, i) AS brnk FROM pop) t
-  WHERE brnk <= 100
-), scored AS (
-  SELECT r.user_id AS u,
-    sum(CASE WHEN b.i IS NULL THEN 1 ELSE 0 END) AS n_unexpected,
-    sum(CASE WHEN b.i IS NULL AND h.item_id IS NOT NULL
-        THEN 1 ELSE 0 END) AS n_serendip,
-    count(*) AS n_recs
-  FROM recs r
-  LEFT JOIN baseline b ON r.item_id = b.i
-  LEFT JOIN upairs h ON r.user_id = h.user_id AND r.item_id = h.item_id
-  GROUP BY r.user_id
+""")
+def _zipf_fit(spark, sf_dir):
+    return C.zipf_fit(_docs(spark, sf_dir))
+
+
+@_query("mad_outlier_docs", """
+WITH t AS (
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS n
+  FROM documents
+), med AS (SELECT quantile_cont(n, 0.5) AS med FROM t),
+dev AS (SELECT doc_id, n, med, abs(n - med) AS ad FROM t, med),
+mad AS (
+  SELECT quantile_cont(ad, 0.5) AS mad, avg(ad) AS meanad FROM dev),
+scored AS (
+  SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
+    CASE WHEN mad > 0
+         THEN round(0.6745 * (n - med) / mad, 6)
+         ELSE round((n - med) / nullif(1.2533 * meanad, 0), 6)
+    END AS mod_zscore
+  FROM dev, mad
 )
-SELECT count(*) AS n_users,
-  round(avg(CAST(n_unexpected AS DOUBLE) / n_recs), 6)
-    AS unexpectedness,
-  round(avg(n_serendip / 10.0), 6) AS serendipity
-FROM scored
-""",
-        "item_exposure": ORACLE_BASE + """
-, per_item AS (
-  SELECT item_id AS item, sum(1.0 / log2(rnk + 1)) AS exposure,
-    count(*) AS n_impressions
-  FROM recs GROUP BY item_id
-), tot AS (SELECT sum(exposure) AS tot FROM per_item)
-SELECT rnk, item, n_impressions, exposure, exposure_share FROM (
-  SELECT CAST(row_number() OVER (
-      ORDER BY round(exposure, 6) DESC, item) AS BIGINT) AS rnk,
-    item, n_impressions, round(exposure, 6) AS exposure,
-    round(exposure / tot, 6) AS exposure_share
-  FROM per_item, tot) t
-WHERE rnk <= 20 ORDER BY rnk
-""",
-        "calibration_kl": ORACLE_BASE + """
-, cats AS (SELECT p_partkey AS i, p_brand AS cat FROM part),
-nc AS (SELECT CAST(count(DISTINCT cat) AS DOUBLE) AS n_cats FROM cats),
-hist AS (
-  SELECT user_id AS u, cat, count(*) AS n
-  FROM interactions JOIN cats ON item_id = i GROUP BY 1, 2
-), htot AS (SELECT u, sum(n) AS h_tot FROM hist GROUP BY u),
-rmix AS (
-  SELECT user_id AS u, cat, count(*) AS n
-  FROM recs JOIN cats ON item_id = i GROUP BY 1, 2
-), rtot AS (SELECT u, sum(n) AS r_tot FROM rmix GROUP BY u),
-pu AS (
-  SELECT r.u,
-    sum((r.n / rt.r_tot) * ln((r.n / rt.r_tot)
-      / ((coalesce(h.n, 0) + 0.5) / (ht.h_tot + 0.5 * n_cats)))) AS kl
-  FROM rmix r
-  JOIN rtot rt ON r.u = rt.u
-  LEFT JOIN hist h ON r.u = h.u AND r.cat = h.cat
-  JOIN htot ht ON r.u = ht.u, nc
-  GROUP BY r.u
-)
-SELECT count(*) AS n_users, round(avg(kl), 6) AS mean_kl,
-  round(max(kl), 6) AS max_kl FROM pu
-""",
-        # distinct-count-grain decomposition (mirrors the Spark plan):
-        # a tie-group of k items at count c after offset o contributes
-        # c*(k*o + k(k+1)/2) to the exact-BIGINT rank sum; entropy
-        # terms pre-rounded DECIMAL(18,9) for order-independence
-        "popularity_concentration": """
-WITH inter AS (
-  SELECT l_partkey AS i
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), pops AS (SELECT i, count(*) AS cnt FROM inter GROUP BY i),
-grp AS (
-  SELECT cnt, count(*) AS k,
-    coalesce(sum(count(*)) OVER (ORDER BY cnt
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS o
-  FROM pops GROUP BY cnt
-), tot AS (
-  SELECT sum(cnt * k) AS tot_l, sum(k) AS n_l FROM grp
-), scored AS (
-  SELECT CAST(CAST(cnt AS DECIMAL(38,0))
-              * (CAST(k AS DECIMAL(38,0)) * CAST(o AS DECIMAL(38,0))
-                 + CASE WHEN k % 2 = 0
-                        THEN CAST(k // 2 AS DECIMAL(38,0))
-                             * CAST(k + 1 AS DECIMAL(38,0))
-                        ELSE CAST(k AS DECIMAL(38,0))
-                             * CAST((k + 1) // 2 AS DECIMAL(38,0))
-                   END)
-         AS DECIMAL(38,0)) AS rnk_cnt,
-    CAST(round(-(k * cnt / CAST(tot_l AS DOUBLE))
-               * ln(cnt / CAST(tot_l AS DOUBLE)), 9)
-         AS DECIMAL(18,9)) AS h_dec,
-    tot_l, n_l
-  FROM grp, tot
-)
-SELECT CAST(max(n_l) AS BIGINT) AS n_items,
-  round((2.0 * sum(rnk_cnt) / max(tot_l) - (max(n_l) + 1))
-        / max(n_l), 6) AS gini,
-  round(CAST(sum(h_dec) AS DOUBLE), 6) AS entropy,
-  round(round(exp(CAST(sum(h_dec) AS DOUBLE)), 9), 6)
-    AS effective_catalog_size
-FROM scored
-""",
-        "association_rules": f"""
-WITH interactions AS (
-  SELECT o_custkey AS user_id, l_partkey AS item_id
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), upairs AS (
-  SELECT DISTINCT user_id, item_id FROM interactions
-), nu AS (
-  SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS n_users FROM upairs
-), isz AS (
-  SELECT item_id, count(*) AS sz FROM upairs GROUP BY item_id
-), {CAPPED_CTE}, pcounts AS (
-  SELECT a.item_id AS ia, b.item_id AS ib, count(*) AS n_common
-  FROM bcapped a JOIN bcapped b ON a.user_id = b.user_id
-    AND a.item_id < b.item_id
-  GROUP BY a.item_id, b.item_id
-  HAVING count(*) >= 2
-), bidir AS (
-  SELECT ia AS a, ib AS b, n_common FROM pcounts
-  UNION ALL SELECT ib, ia, n_common FROM pcounts
-), rules AS (
-  SELECT a AS antecedent, b AS consequent, n_common,
-    round(n_common / n_users, 6) AS support,
-    round(CAST(n_common AS DOUBLE) / sa.sz, 6) AS confidence,
-    round(n_common * n_users / (CAST(sa.sz AS DOUBLE) * sb.sz), 6)
-      AS lift
-  FROM bidir JOIN isz sa ON bidir.a = sa.item_id
-  JOIN isz sb ON bidir.b = sb.item_id, nu
-)
-SELECT rnk, antecedent, consequent, n_common, support, confidence, lift
-FROM (
-  SELECT *, CAST(row_number() OVER (
-    ORDER BY lift DESC, antecedent, consequent) AS BIGINT) AS rnk
-  FROM rules) t
-WHERE rnk <= 50
-""",
-        "baseline_predictor_rmse": """
-WITH r AS (
-  SELECT o_custkey AS u, l_partkey AS i, CAST(l_quantity AS DOUBLE) AS r
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-), mu AS (SELECT avg(r) AS mu FROM r),
-bu AS (SELECT u, avg(r - mu) AS bu FROM r, mu GROUP BY u),
-bi AS (
-  SELECT i, avg(r.r - mu - bu) AS bi
-  FROM r JOIN bu USING (u), mu GROUP BY i
-), scored AS (
-  SELECT r.r, mu, mu + bu + bi AS pred
-  FROM r JOIN bu USING (u) JOIN bi USING (i), mu
-)
-SELECT count(*) AS n_ratings,
-  round(sqrt(avg(power(r - pred, 2))), 6) AS rmse,
-  round(avg(abs(r - pred)), 6) AS mae,
-  round(sqrt(avg(power(r - mu, 2))), 6) AS rmse_mean_only
-FROM scored
-""",
-        "psi_drift": """
+SELECT doc_id, n_tokens, mod_zscore FROM scored
+WHERE abs(mod_zscore) >= 1.2
+ORDER BY abs(mod_zscore) DESC, doc_id
+""")
+def _mad_outlier_docs(spark, sf_dir):
+    # the synthetic corpus has near-uniform lengths (max |score| 1.35),
+    # so the textbook 3.5 cutoff flags nothing; 1.2 keeps a real ~5%
+    # tail in the witnessed output (the unit test exercises 3.5 on a
+    # corpus with planted outliers)
+    return C.mad_outlier_docs(_docs(spark, sf_dir), cutoff=1.2)
+
+
+@_query("psi_drift", """
 WITH stats AS (
   SELECT min(epoch_us(ts)) AS ts_lo, max(epoch_us(ts)) AS ts_hi,
          min(value) AS v_lo, max(value) AS v_hi FROM events
@@ -7544,8 +6433,17 @@ WITH stats AS (
 SELECT psi.grp AS event_type, n_ref, n_cur, psi,
   psi > 0.2 AS drift_alert
 FROM psi JOIN ns ON psi.grp = ns.grp ORDER BY event_type
-""",
-        "cluster_eval": KMEANS_CTE + """
+""")
+def _psi_drift(spark, sf_dir):
+    """Value-distribution drift (PSI) per event_type between the first
+    and second half of the events time range
+    (operators/quality.py::psi_drift)."""
+    from recmetrics_pyspark_spark.operators import quality as QC
+
+    return QC.psi_drift(load_table(spark, sf_dir, "events"))
+
+
+@_query("cluster_eval", KMEANS_CTE + """
 , a2 AS (
   SELECT vid, cid FROM (
     SELECT b.vid, c1.cid,
@@ -7573,1965 +6471,271 @@ SELECT CAST(nn AS BIGINT) AS n_points,
   round(pur_num / nn, 6) AS purity,
   round(2.0 * mi / (hc + hl), 6) AS nmi
 FROM tot, pur, mi, hc, hl
-""",
-        "mad_outlier_docs": """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS n
-  FROM documents
-), med AS (SELECT quantile_cont(n, 0.5) AS med FROM t),
-dev AS (SELECT doc_id, n, med, abs(n - med) AS ad FROM t, med),
-mad AS (
-  SELECT quantile_cont(ad, 0.5) AS mad, avg(ad) AS meanad FROM dev),
-scored AS (
-  SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-    CASE WHEN mad > 0
-         THEN round(0.6745 * (n - med) / mad, 6)
-         ELSE round((n - med) / nullif(1.2533 * meanad, 0), 6)
-    END AS mod_zscore
-  FROM dev, mad
+""")
+def _cluster_eval(spark, sf_dir):
+    """Purity + NMI of the deterministic k-means cells against the
+    embeddings' label column (operators/similarity.py::cluster_eval) —
+    rides the memoized centroid table."""
+    return S.cluster_eval(_embs(spark, sf_dir), k=8, iters=2)
+
+
+@_query("association_rules", f"""
+WITH interactions AS (
+  SELECT o_custkey AS user_id, l_partkey AS item_id
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+), upairs AS (
+  SELECT DISTINCT user_id, item_id FROM interactions
+), nu AS (
+  SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS n_users FROM upairs
+), isz AS (
+  SELECT item_id, count(*) AS sz FROM upairs GROUP BY item_id
+), {CAPPED_CTE}, pcounts AS (
+  SELECT a.item_id AS ia, b.item_id AS ib, count(*) AS n_common
+  FROM bcapped a JOIN bcapped b ON a.user_id = b.user_id
+    AND a.item_id < b.item_id
+  GROUP BY a.item_id, b.item_id
+  HAVING count(*) >= 2
+), bidir AS (
+  SELECT ia AS a, ib AS b, n_common FROM pcounts
+  UNION ALL SELECT ib, ia, n_common FROM pcounts
+), rules AS (
+  SELECT a AS antecedent, b AS consequent, n_common,
+    round(n_common / n_users, 6) AS support,
+    round(CAST(n_common AS DOUBLE) / sa.sz, 6) AS confidence,
+    round(n_common * n_users / (CAST(sa.sz AS DOUBLE) * sb.sz), 6)
+      AS lift
+  FROM bidir JOIN isz sa ON bidir.a = sa.item_id
+  JOIN isz sb ON bidir.b = sb.item_id, nu
 )
-SELECT doc_id, n_tokens, mod_zscore FROM scored
-WHERE abs(mod_zscore) >= 1.2
-ORDER BY abs(mod_zscore) DESC, doc_id
-""",
-        "curriculum_cuts": """
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), sc AS (
-  SELECT doc_id, CAST(len(toks) AS DOUBLE) AS n_tok,
-    round(least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) * 0.5
-      + (CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum')
-          AS DOUBLE) / CAST(len(toks) AS DOUBLE)) / 10.0 * 0.5,
-      6) AS difficulty
-  FROM d
-), cuts AS (
-  SELECT quantile_cont(difficulty, [0.25, 0.5, 0.75]) AS cuts FROM sc
-), st AS (
-  SELECT n_tok, difficulty,
-    CAST(1 + len(list_filter(cuts, c -> c < difficulty)) AS BIGINT)
-      AS stage
-  FROM sc, cuts
-)
-SELECT stage, count(*) AS n_docs,
-  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-  round(min(difficulty), 6) AS min_difficulty,
-  round(max(difficulty), 6) AS max_difficulty
-FROM st GROUP BY stage ORDER BY stage
-""",
-        "freq_sketch_events": """
-SELECT event_type, count(*) AS n_events, TRUE AS sketch_within_bounds
-FROM events GROUP BY event_type ORDER BY event_type
-""",
-        "curation_pipeline": f"""
-WITH h AS (SELECT doc_id, md5(text) AS ch FROM documents),
-g AS (SELECT ch, min(doc_id) AS canonical FROM h GROUP BY ch),
-surv AS (SELECT d.* FROM documents d JOIN g ON d.doc_id = g.canonical),
-q AS (
-  SELECT doc_id,
-    round(least(len(toks)/50.0, 1.0)*0.4
-      + (length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-         / CAST(length(text) AS DOUBLE))*0.4
-      + least(5.0*len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-              / CAST(len(toks) AS DOUBLE), 1.0)*0.2, 6) AS quality
-  FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM surv)
-),
-sc AS (
-  SELECT s.*, q.quality FROM surv s JOIN q USING (doc_id)
-  WHERE q.quality >= 0.5
-),
-counts AS (SELECT lang, count(*) AS n FROM sc GROUP BY lang),
-mn AS (SELECT min(n) AS min_n FROM counts),
-th AS (
-  SELECT lang,
-    CAST(floor(4294967296.0 * min_n / n) AS BIGINT) AS u_threshold
-  FROM counts, mn
-),
-keyed AS (
-  SELECT sc.*,
-    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
-  FROM sc
-),
-kept AS (
-  SELECT k.* FROM keyed k JOIN th ON k.lang = th.lang
-  WHERE u < u_threshold
-)
-SELECT lang, count(*) AS n_docs,
-  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-  round(avg(quality), 6) AS avg_quality
-FROM kept GROUP BY lang ORDER BY lang
-""",
-        "cross_lingual_contamination": """
-WITH d AS (
-  SELECT doc_id, lang, text, string_split(text, ' ') AS toks
-  FROM documents
-), fp AS (
-  SELECT doc_id, lang,
-    CASE WHEN len(toks) >= 3 THEN
-      list_min(list_transform(generate_series(1, len(toks) - 2),
-        i -> md5(array_to_string(list_slice(toks, i, i + 2), ' '))))
-    ELSE md5(text) END AS shingle_fp
-  FROM d
-)
-SELECT shingle_fp,
-  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-  count(*) AS n_docs,
-  min(doc_id) AS min_doc,
-  array_to_string(list_sort(list(DISTINCT lang)), ',') AS langs
-FROM fp GROUP BY shingle_fp HAVING count(DISTINCT lang) > 1
-""",
-        "novelty": ORACLE_BASE
-        + """
-, u AS (SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS u FROM interactions),
-pop AS (SELECT item_id, count(*) AS pop FROM interactions GROUP BY item_id),
-lg AS (SELECT item_id, -log2(pop/u) AS log2_si FROM pop, u),
-j AS (SELECT r.user_id, lg.log2_si FROM recs r LEFT JOIN lg USING (item_id)),
-per_user AS (SELECT user_id, sum(log2_si)/count(*) AS msi FROM j GROUP BY user_id)
-SELECT round(avg(msi), 6) AS novelty FROM per_user
-""",
-        "novelty_per_user": ORACLE_BASE
-        + """
-, u AS (SELECT CAST(count(DISTINCT user_id) AS DOUBLE) AS u FROM interactions),
-pop AS (SELECT item_id, count(*) AS pop FROM interactions GROUP BY item_id),
-lg AS (SELECT item_id, -log2(pop/u) AS log2_si FROM pop, u),
-j AS (SELECT r.user_id, lg.log2_si FROM recs r LEFT JOIN lg USING (item_id))
-SELECT user_id, round(sum(log2_si)/count(*), 6) AS msi FROM j GROUP BY user_id
-""",
-        "personalization": ORACLE_BASE
-        + """
-, sizes AS (SELECT user_id, count(*) AS sz FROM upairs GROUP BY user_id),
-wtd AS (SELECT p.user_id, p.item_id, 1.0/sqrt(sz) AS w
-        FROM upairs p JOIN sizes USING (user_id)),
-isum AS (SELECT item_id, sum(w) AS sw, sum(w*w) AS sww
-         FROM wtd GROUP BY item_id),
-s AS (SELECT coalesce(sum((sw*sw - sww) / 2.0), 0.0) AS s FROM isum),
-n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM sizes)
-SELECT round(1.0 - 2.0*s/(n*(n-1)), 6) AS personalization FROM s, n
-""",
-        "personalization_weighted": ORACLE_BASE
-        + """
-, vw AS (
-  SELECT user_id, item_id, avg(rating) AS v FROM interactions
-  GROUP BY user_id, item_id
-), nrm AS (
-  SELECT user_id, sqrt(sum(v*v)) AS nrm FROM vw GROUP BY user_id
-), wtd AS (
-  SELECT vw.user_id, vw.item_id, vw.v / nrm.nrm AS w
-  FROM vw JOIN nrm USING (user_id)
-), isum AS (
-  SELECT item_id, sum(w) AS sw, sum(w*w) AS sww FROM wtd GROUP BY item_id
-), s AS (
-  SELECT coalesce(sum((sw*sw - sww) / 2.0), 0.0) AS s FROM isum
-), n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nrm)
-SELECT round(1.0 - 2.0*s/(n*(n-1)), 6) AS personalization_weighted
-FROM s, n
-""",
-        "decay_popularity": """
-WITH mx AS (
-  SELECT CAST(floor(epoch(max(ts))) AS BIGINT) AS t_max FROM events
-)
-SELECT event_type, count(*) AS n_events,
-  round(sum(exp(-(t_max - CAST(floor(epoch(ts)) AS BIGINT))
-              / 604800.0)), 6) AS decayed_score
-FROM events, mx GROUP BY event_type ORDER BY event_type
-""",
-        "value_histogram": """
-SELECT CAST(floor(value/25) AS BIGINT) AS bucket,
-  count(*) AS n_events,
-  round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-FROM events GROUP BY bucket ORDER BY bucket
-""",
-        "intra_list_similarity": ORACLE_BASE
-        + """
-, vecs AS (
-  SELECT r.user_id AS g, r.item_id AS it, p.p_brand AS f,
-         avg(CAST(1.0 AS DOUBLE)) AS v
-  FROM recs r JOIN part p ON r.item_id = p.p_partkey
-  GROUP BY 1, 2, 3
-), norms AS (
-  SELECT g, it, sqrt(sum(v*v)) AS nrm FROM vecs GROUP BY g, it
-), n_items AS (
-  SELECT g, count(*) AS n_it FROM norms GROUP BY g
-), w AS (
-  SELECT vecs.g, vecs.f, vecs.v / nullif(norms.nrm, 0) AS w
-  FROM vecs JOIN norms ON vecs.g = norms.g AND vecs.it = norms.it
-), fsum AS (
-  SELECT g, f, sum(w) AS sw, sum(w*w) AS sww FROM w GROUP BY g, f
-), cos_sums AS (
-  SELECT g, sum((sw*sw - sww) / 2.0) AS cos_sum FROM fsum GROUP BY g
-)
-SELECT n_items.g AS user_id,
-  CASE WHEN n_it >= 2
-       THEN round(coalesce(cos_sum, 0.0)/(n_it*(n_it-1)/2.0), 6)
-  END AS intra_list_similarity
-FROM n_items LEFT JOIN cos_sums ON n_items.g = cos_sums.g
-""",
-        "item_item_topk": ORACLE_BASE
-        + ITEM_SIMS_SQL
-        + """
-SELECT item_id, neighbor_id, sim, rnk FROM item_topk
-""",
-        "item_based_recommendations": ORACLE_BASE
-        + ITEM_SIMS_SQL
-        + """
-, cand AS (
-  SELECT u.user_id AS buser, t.neighbor_id, sum(t.sim) AS score
-  FROM upairs u JOIN item_topk t ON u.item_id = t.item_id
-  GROUP BY u.user_id, t.neighbor_id
-), fresh AS (
-  SELECT c.buser, c.neighbor_id, c.score FROM cand c
-  WHERE NOT EXISTS (SELECT 1 FROM upairs o
-                    WHERE o.user_id = c.buser AND o.item_id = c.neighbor_id)
-)
-SELECT buser AS user_id, neighbor_id AS item_id,
-  round(score, 6) AS score, rnk
+SELECT rnk, antecedent, consequent, n_common, support, confidence, lift
 FROM (
-  SELECT buser, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY buser
-      ORDER BY round(score, 6) DESC, neighbor_id) AS BIGINT) AS rnk
-  FROM fresh) t
-WHERE rnk <= 10
-""",
-        "long_tail_stats": ORACLE_BASE
-        + """
-, vol AS (SELECT item_id, count(*) AS volume FROM interactions GROUP BY item_id),
-tot AS (SELECT CAST(sum(volume) AS DOUBLE) AS total FROM vol),
-w AS (
-  SELECT item_id, volume,
-    CAST(row_number() OVER (ORDER BY volume DESC, item_id) AS BIGINT) AS item_rank,
-    CAST(sum(volume) OVER (ORDER BY volume DESC, item_id
-         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumulative_volume
-  FROM vol)
-SELECT item_id, volume, item_rank, cumulative_volume,
-  round(cumulative_volume/total, 6) AS pct_cumulative,
-  CASE WHEN round(cumulative_volume/total, 6) <= 0.5
-       THEN 'head' ELSE 'tail' END AS bucket
-FROM w, tot
-""",
-        # salted tie-bucket variant: Spark decomposes rank/cumsum onto
-        # the (volume, md5-bucket) grain; within a tie group all items
-        # share the volume, so the decomposition equals ONE global
-        # order (volume DESC, bucket, item_id) — which DuckDB can
-        # afford at test scale. The md5 bucket mirrors
-        # conv(substr(md5(item), 1, 15), 16, 10) % 8 exactly.
-        "long_tail_stats_salted": ORACLE_BASE
-        + """
-, vol AS (
-  SELECT item_id, count(*) AS volume,
-    ('0x' || substr(md5(CAST(item_id AS VARCHAR)), 1, 15))::BIGINT % 8
-      AS tb
-  FROM interactions GROUP BY item_id),
-tot AS (SELECT CAST(sum(volume) AS DOUBLE) AS total FROM vol),
-w AS (
-  SELECT item_id, volume,
-    CAST(row_number() OVER (ORDER BY volume DESC, tb, item_id)
-         AS BIGINT) AS item_rank,
-    CAST(sum(volume) OVER (ORDER BY volume DESC, tb, item_id
-         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumulative_volume
-  FROM vol)
-SELECT item_id, volume, item_rank, cumulative_volume,
-  round(cumulative_volume/total, 6) AS pct_cumulative,
-  CASE WHEN round(cumulative_volume/total, 6) <= 0.5
-       THEN 'head' ELSE 'tail' END AS bucket
-FROM w, tot
-""",
-        "text_stats": f"""
-SELECT doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  round(CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum') AS DOUBLE)
-        / len(toks), 6) AS avg_token_len,
-  round(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-        / CAST(length(text) AS DOUBLE), 6) AS alpha_ratio,
-  round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-        / CAST(length(text) AS DOUBLE), 6) AS digit_ratio,
-  round(length(regexp_replace(text, '[^ ]', '', 'g'))
-        / CAST(length(text) AS DOUBLE), 6) AS space_ratio,
-  round(len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-        / CAST(len(toks) AS DOUBLE), 6) AS stopword_ratio,
-  CAST(ceil(length(text)/4.0) AS BIGINT) AS token_est_char4
-FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
-""",
-        "language_id": f"""
-SELECT doc_id, s_en, s_es, s_de, s_fr,
-  CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-       WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-       WHEN s_de >= s_fr THEN 'de'
-       ELSE 'fr' END AS lang_pred
-FROM (
-  SELECT doc_id,
-    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_EN)})) AS BIGINT) AS s_en,
-    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_ES)})) AS BIGINT) AS s_es,
-    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_DE)})) AS BIGINT) AS s_de,
-    CAST(len(list_filter(toks, x -> x IN {_sqlset(T.LEX_FR)})) AS BIGINT) AS s_fr
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
-""",
-        "doc_fingerprint": """
-SELECT doc_id, md5(text) AS content_hash,
-  CASE WHEN len(toks) >= 3
-       THEN list_min(list_transform(generate_series(1, len(toks)-2),
-              i -> md5(array_to_string(list_slice(toks, i, i+2), ' '))))
-       ELSE md5(text) END AS shingle_fp
-FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
-""",
-        "quality_score": f"""
-SELECT doc_id,
-  round(least(len(toks)/50.0, 1.0)*0.4
-    + (length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-       / CAST(length(text) AS DOUBLE))*0.4
-    + least(5.0*len(list_filter(toks, x -> x IN {_sqlset(T.STOPWORDS_EN)}))
-            / CAST(len(toks) AS DOUBLE), 1.0)*0.2, 6) AS quality
-FROM (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
-""",
-        "token_count_by_lang": """
-SELECT lang, count(*) AS n_docs,
-  CAST(sum(len(toks)) AS BIGINT) AS total_tokens,
-  round(avg(CAST(len(toks) AS DOUBLE)), 6) AS avg_tokens
-FROM (SELECT lang, string_split(text, ' ') AS toks FROM documents)
-GROUP BY lang
-""",
-        "chunk_documents": """
-WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-starts AS (
-  SELECT doc_id, text, toks, len(toks) AS n,
-    generate_series(1, greatest(len(toks), 1), 24) AS ss
-  FROM d
-)
-SELECT doc_id,
-  CAST(i - 1 AS BIGINT) AS chunk_idx,
-  array_to_string(list_slice(toks, ss[i], ss[i] + 31), ' ') AS chunk_text,
-  CAST(least(n - ss[i] + 1, 32) AS BIGINT) AS n_tokens
-FROM starts, unnest(generate_series(1, len(ss))) AS u(i)
-WHERE ss[i] <= n
-""",
-        "dataset_split": """
-WITH assigned AS (
-  SELECT lang,
-    CASE WHEN b < 25 THEN 'val'
-         WHEN b < 50 THEN 'test'
-         ELSE 'train' END AS split
-  FROM (
-    SELECT lang,
-      CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)) AS BIGINT) AS b
-    FROM documents) t
-)
-SELECT lang, split, count(*) AS n_docs
-FROM assigned GROUP BY lang, split ORDER BY lang, split
-""",
-        "contamination_check": """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(list_slice(toks, i, i + 7), ' ') AS s
-  FROM d, unnest(generate_series(1, greatest(len(toks) - 7, 1))) AS u(i)
-),
-bench AS (SELECT doc_id AS bench_id, s FROM sh WHERE doc_id < 5),
-hits AS (
-  SELECT c.doc_id, b.bench_id
-  FROM sh c JOIN bench b ON c.s = b.s
-  WHERE c.doc_id <> b.bench_id
-)
-SELECT doc_id, count(*) AS n_shared_shingles,
-  array_to_string(list_sort(list(DISTINCT bench_id)), ',') AS contaminated_by
-FROM hits GROUP BY doc_id
-""",
-        "balanced_sample": """
-WITH counts AS (
-  SELECT lang, count(*) AS n FROM documents GROUP BY lang
-), mn AS (SELECT min(n) AS min_n FROM counts),
-th AS (
-  SELECT lang,
-    CAST(floor(4294967296.0 * min_n / n) AS BIGINT) AS u_threshold
-  FROM counts, mn
-), keyed AS (
-  SELECT lang, doc_id,
-    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS u
-  FROM documents
-)
-SELECT k.lang, count(*) AS n_docs, min(doc_id) AS first_doc
-FROM keyed k JOIN th ON k.lang = th.lang
-WHERE u < u_threshold
-GROUP BY k.lang ORDER BY k.lang
-""",
-        "dedup_pipeline": """
-WITH h AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
-g AS (SELECT content_hash, min(doc_id) AS canonical_id
-      FROM h GROUP BY content_hash),
-survivors AS (
-  SELECT d.* FROM documents d
-  JOIN h ON d.doc_id = h.doc_id
-  JOIN g ON h.content_hash = g.content_hash
-  WHERE d.doc_id = g.canonical_id
-), toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sh0 AS (
-  SELECT DISTINCT doc_id,
-    array_to_string(list_slice(t, i, i+2), ' ') AS s
-  FROM toks, unnest(generate_series(1, greatest(len(t)-2, 1))) AS u(i)
-), sh AS (
-  -- same df <= 1000 cut as capped_shingles / _DOC_BASE's shc: the
-  -- Spark side routes through ngram_jaccard_pairs' capped universe
-  SELECT sh0.doc_id, sh0.s FROM sh0
-  JOIN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 1000) keep
-    USING (s)
-), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-near_b AS (
-  SELECT DISTINCT b.doc_id AS doc_id
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  JOIN sizes sa ON a.doc_id = sa.doc_id
-  JOIN sizes sb ON b.doc_id = sb.doc_id
-  GROUP BY a.doc_id, b.doc_id, sa.n_sh, sb.n_sh
-  HAVING round(CAST(count(*) AS DOUBLE)
-         / (sa.n_sh + sb.n_sh - count(*)), 6) >= 0.8
-)
-SELECT lang, count(*) AS n_docs,
-  CAST(sum(n_chars) AS BIGINT) AS total_chars
-FROM survivors s
-WHERE NOT EXISTS (SELECT 1 FROM near_b nb WHERE nb.doc_id = s.doc_id)
-GROUP BY lang ORDER BY lang
-""",
-        "hourly_anomaly": """
-WITH hourly AS (
-  SELECT date_trunc('hour', ts) AS hour_start, event_type,
-    count(*) AS n_events,
-    CAST(floor(epoch(date_trunc('hour', ts))/3600) AS BIGINT) AS hour_num
-  FROM events GROUP BY 1, 2
-)
-SELECT hour_start, event_type, n_events,
-  round(avg(n_events) OVER w, 6) AS rolling_mean,
-  round(coalesce(stddev_samp(n_events) OVER w, 0.0), 6) AS rolling_std
-FROM hourly
-WINDOW w AS (PARTITION BY event_type ORDER BY hour_num
-  RANGE BETWEEN 23 PRECEDING AND CURRENT ROW)
-""",
-        "dedup_exact": """
-WITH h AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
-g AS (SELECT content_hash, count(*) AS n_copies, min(doc_id) AS canonical_id
-      FROM h GROUP BY content_hash)
-SELECT doc_id, h.content_hash, n_copies, canonical_id,
-  doc_id <> canonical_id AS is_dup
-FROM h JOIN g USING (content_hash)
-""",
-        "ngram_jaccard_pairs": _NGRAM_JACCARD_SQL,
-        # threshold sweep: the exact pair body reused verbatim, one
-        # threshold-explode join + two counting aggregates on top
-        "dedup_threshold_sweep": f"""
-WITH exact AS MATERIALIZED (
-  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
-th AS (
-  SELECT unnest([0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
-    AS threshold),
-hits AS MATERIALIZED (
-  SELECT th.threshold, e.id_a, e.id_b
-  FROM exact e JOIN th ON e.jaccard >= th.threshold),
-np AS (
-  SELECT threshold, CAST(count(*) AS BIGINT) AS n_pairs
-  FROM hits GROUP BY threshold),
-nd AS (
-  SELECT threshold, CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-  FROM (SELECT threshold, id_a AS doc FROM hits
-        UNION ALL SELECT threshold, id_b FROM hits) s
-  GROUP BY threshold)
-SELECT round(np.threshold, 6) AS threshold, np.n_pairs, nd.n_docs
-FROM np JOIN nd USING (threshold)
-ORDER BY threshold
-""",
-        # dedup recall row: the exact-Jaccard and banded-LSH pair
-        # bodies reused verbatim, left-joined at the pair grain
-        "lsh_recall_report": f"""
-WITH exact AS MATERIALIZED (
-  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
-approx AS MATERIALIZED (
-  SELECT id_a, id_b FROM ({_MINHASH_LSH_SQL}) t)
-SELECT CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.id_a IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(CAST(sum(CASE WHEN a.id_a IS NOT NULL THEN 1 ELSE 0 END)
-             AS DOUBLE)
-        / nullif(CAST(count(*) AS DOUBLE), 0.0), 6) AS recall,
-  round(CAST(sum(CASE WHEN a.id_a IS NULL
-                 THEN CAST(e.jaccard AS DECIMAL(18,6)) END)
-             AS DOUBLE)
-        / nullif(CAST(sum(CASE WHEN a.id_a IS NULL THEN 1 ELSE 0 END)
-                      AS DOUBLE), 0.0), 6)
-    AS missed_mean_jaccard
-FROM exact e LEFT JOIN approx a
-  ON e.id_a = a.id_a AND e.id_b = a.id_b
-""",
-        # SimHash recall vs the same exact-Jaccard truth: the all-pairs
-        # Hamming table at radius <= 3 (the banded Spark join is
-        # pigeonhole-exact vs this truth), one report row per radius
-        "simhash_recall_report": f"""
-WITH exact AS MATERIALIZED (
-  SELECT id_a, id_b, jaccard FROM ({_NGRAM_JACCARD_SQL}) t),
-sig AS MATERIALIZED (
-  SELECT doc_id, {_simhash_sql_expr()} AS simhash
-  FROM ({_SIMHASH_HS_SQL})),
-near AS MATERIALIZED (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-  FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3)
-SELECT CAST(v.max_hamming AS BIGINT) AS max_hamming,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN n.id_a IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(CAST(sum(CASE WHEN n.id_a IS NOT NULL THEN 1 ELSE 0 END)
-             AS DOUBLE)
-        / nullif(CAST(count(*) AS DOUBLE), 0.0), 6) AS recall,
-  round(CAST(sum(CASE WHEN n.id_a IS NULL
-                 THEN CAST(e.jaccard AS DECIMAL(18,6)) END)
-             AS DOUBLE)
-        / nullif(CAST(sum(CASE WHEN n.id_a IS NULL THEN 1 ELSE 0 END)
-                      AS DOUBLE), 0.0), 6)
-    AS missed_mean_jaccard
-FROM (SELECT 1 AS max_hamming UNION ALL SELECT 3) v
-CROSS JOIN exact e
-LEFT JOIN near n
-  ON e.id_a = n.id_a AND e.id_b = n.id_b
-  AND n.hamming <= v.max_hamming
-GROUP BY v.max_hamming
-""",
-        "arena_bt_ratings": _bt_oracle(iters=8),
-        # iteration-sensitivity row: the iters=8 and iters=4 oracle
-        # chains nested whole, compared at the leaderboard grain
-        "arena_bt_sensitivity": f"""
-WITH b8 AS MATERIALIZED (
-  SELECT item, rnk FROM ({_bt_oracle(iters=8)}) t),
-b4 AS MATERIALIZED (
-  SELECT item, rnk FROM ({_bt_oracle(iters=4)}) t)
-SELECT CAST(count(*) AS BIGINT) AS n_items,
-  CAST(sum(CASE WHEN b8.rnk <> b4.rnk THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_rank_moves,
-  CAST(max(abs(b8.rnk - b4.rnk)) AS BIGINT) AS max_rank_delta,
-  CAST(sum(CASE WHEN b8.rnk <= 10 AND b4.rnk <= 10 THEN 1 ELSE 0 END)
-       AS BIGINT) AS top10_overlap
-FROM b8 JOIN b4 USING (item)
-""",
-        "minhash_lsh_pairs": _MINHASH_LSH_SQL,
-        "neardup_components": _neardup_components_oracle(),
-        "canonical_docs": _canonical_docs_oracle(),
-        # mirrors _soft_dedup_weights: the canonical_docs oracle
-        # reused verbatim, reduced to the 1/cluster_size weight
-        "soft_dedup_weights": f"""
-SELECT doc_id, component_id, n_members,
-  round(1.0 / n_members, 6) AS weight
-FROM ({_canonical_docs_oracle()}) t
-""",
-        "incremental_neardup": _incr_neardup_oracle(),
-        "duplicated_spans": _DUP_SPANS_CTES + """
-SELECT doc_id, start_tok, end_tok, n_dup_shingles FROM spansf
-""",
-        # mirrors operators/dedup.py::remove_duplicated_spans: the
-        # detector's span CTEs (shared verbatim) + a per-token
-        # anti-range filter and in-order reassembly
-        "remove_duplicated_spans_docs": _DUP_SPANS_CTES + """
-, tok AS (
-  SELECT doc_id, i, toks[i] AS t
-  FROM d, unnest(generate_series(1, len(toks))) AS u(i)
-), kept AS (
-  SELECT tok.doc_id, tok.i, tok.t FROM tok
-  WHERE NOT EXISTS (
-    SELECT 1 FROM spansf sp
-    WHERE sp.doc_id = tok.doc_id
-      AND tok.i BETWEEN sp.start_tok AND sp.end_tok)
-), agg AS (
-  SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS clean_text,
-    CAST(count(*) AS BIGINT) AS n_kept
-  FROM kept GROUP BY 1)
-SELECT d.doc_id, coalesce(agg.clean_text, '') AS clean_text,
-  CAST(len(d.toks) AS BIGINT) AS n_tokens,
-  CAST(len(d.toks) - coalesce(agg.n_kept, 0) AS BIGINT)
-    AS n_tokens_removed
-FROM d LEFT JOIN agg USING (doc_id)
-""",
-        "neardup_components_star": _neardup_star_oracle(),
-        "mmr_rerank": _mmr_oracle(),
-        "simhash_signatures": f"""
-SELECT doc_id, {_simhash_sql_expr()} AS simhash
-FROM ({_SIMHASH_HS_SQL})
-""",
-        "simhash_near_pairs": f"""
-WITH sig AS (
-  SELECT doc_id, {_simhash_sql_expr()} AS simhash
-  FROM ({_SIMHASH_HS_SQL})
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-  a.simhash AS sh_a, b.simhash AS sh_b,
-  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-""",
-        "ann_bruteforce_topk": _ann_brute_oracle(),
-        "ann_lsh_topk": _ann_lsh_oracle(),
-        "ann_recall_report": _ann_recall_oracle(),
-        "pq_ann_topk": _pq_oracle(),
-        "pq_rerank_topk": _pq_rerank_oracle(),
-        "ivfpq_ann_topk": _ivfpq_oracle(),
-        "dim_truncation_recall": _dim_trunc_oracle(),
-        # mirrors operators/similarity.py::semantic_decontaminate:
-        # broadcast-scale eval side, hit-filter before the per-train
-        # window, best hit by (cos DESC, eval_id) — same cosine kernel
-        # as the ANN oracles
-        "semantic_decontaminate": f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-t AS (SELECT vec_id AS train_id, v AS tv FROM e WHERE vec_id >= 25),
-q AS (SELECT vec_id AS eval_id, v AS qv FROM e WHERE vec_id < 25),
-hits AS (
-  SELECT train_id, eval_id,
-    round(list_dot_product(tv, qv)
-      / nullif(sqrt(list_dot_product(tv, tv))
-               * sqrt(list_dot_product(qv, qv)), 0.0), 6) AS cos_sim
-  FROM t, q),
-flagged AS (SELECT * FROM hits WHERE cos_sim >= 0.4)
-SELECT train_id, n_eval_hits, best_eval_id, best_cos FROM (
-  SELECT train_id, eval_id AS best_eval_id, cos_sim AS best_cos,
-    row_number() OVER (PARTITION BY train_id
-      ORDER BY cos_sim DESC, eval_id) AS rnk,
-    CAST(count(*) OVER (PARTITION BY train_id) AS BIGINT)
-      AS n_eval_hits
-  FROM flagged) f
-WHERE rnk = 1
-""",
-        # mirrors operators/ranking.py::rrf_fuse over the three
-        # retriever oracles reused verbatim as subqueries; fused
-        # order compares the exact DECIMAL(18,9) sum + id tiebreak
-        "hybrid_rrf_topk": f"""
-WITH u AS (
-  SELECT query_id, neighbor_id, rnk FROM ({_ann_brute_oracle()}) b
-  UNION ALL
-  SELECT query_id, neighbor_id, rnk FROM ({_SQ_ANN_SQL}) s
-  UNION ALL
-  SELECT query_id, neighbor_id, rnk FROM ({_ann_lsh_oracle()}) l
-), a AS (
-  SELECT query_id, neighbor_id,
-    CAST(count(*) AS BIGINT) AS n_lists,
-    sum(CAST(round(1.0 / (60 + rnk), 9) AS DECIMAL(18,9))) AS s
-  FROM u GROUP BY 1, 2)
-SELECT query_id, neighbor_id, n_lists,
-  round(CAST(s AS DOUBLE), 6) AS rrf_score, rnk
-FROM (
-  SELECT query_id, neighbor_id, n_lists, s,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY s DESC, neighbor_id) AS BIGINT) AS rnk
-  FROM a) t
-WHERE rnk <= 10
-""",
-        # mirrors operators/similarity.py::sq_ann_topk — the SQ code
-        # and midpoint-reconstruction kernels are index-form CASE/floor
-        # expressions shared verbatim with the Spark side (_SQ_CODE /
-        # _SQ_RECON), so the doubles agree bitwise before round(,6)
-        "sq_ann_topk": _SQ_ANN_SQL,
-        "embedding_neardup": f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS label,
-  {_COS_SQL.format(a='a.v', b='b.v')} AS cos_sim
-FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_COS_SQL.format(a='a.v', b='b.v')} >= 0.35
-""",
-        "q_rollup_returns": """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-        "q_cube_brand_status": """
-SELECT p_brand, l_linestatus, count(*) AS n_rows,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
-    AS sum_price
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY CUBE (p_brand, l_linestatus)
-""",
-        "q_set_ops_customers": """
-WITH y94 AS (SELECT DISTINCT o_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1994-01-01'
-    AND o_orderdate < TIMESTAMP '1995-01-01'),
-y95 AS (SELECT DISTINCT o_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1995-01-01'
-    AND o_orderdate < TIMESTAMP '1996-01-01')
-SELECT o_custkey, 'both' AS cohort FROM (SELECT o_custkey FROM y94 INTERSECT SELECT o_custkey FROM y95)
-UNION ALL
-SELECT o_custkey, 'only_1994' AS cohort FROM (SELECT o_custkey FROM y94 EXCEPT ALL SELECT o_custkey FROM y95)
-""",
-        "q_anti_join_customers": """
-SELECT c_mktsegment, count(*) AS n_customers
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment ORDER BY c_mktsegment
-""",
-        "q_multi_distinct": """
-SELECT l_returnflag,
-  count(DISTINCT l_partkey) AS n_parts,
-  count(DISTINCT l_suppkey) AS n_suppliers,
-  count(DISTINCT l_orderkey) AS n_orders,
-  count(*) AS n_rows
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-""",
-        "q_orders_by_month": """
-SELECT CAST(date_part('year', o_orderdate) AS INTEGER) AS o_year,
-  CAST(date_part('month', o_orderdate) AS INTEGER) AS o_month,
-  count(*) AS n_orders, round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
-FROM orders GROUP BY 1, 2 ORDER BY 1, 2
-""",
-        "q_string_funcs_parts": """
-SELECT p_brand, count(*) AS n_parts,
-  round(avg(CAST(name_len AS DOUBLE)), 6) AS avg_name_len,
-  min(name_prefix) AS first_prefix
-FROM (
-  SELECT p_brand, upper(substr(p_name, 1, 5)) AS name_prefix,
-    CAST(length(p_name) AS INTEGER) AS name_len
-  FROM part WHERE p_type LIKE '%BRASS%') t
-GROUP BY p_brand ORDER BY p_brand
-""",
-        "q_case_null_buckets": """
-SELECT CASE WHEN c_acctbal IS NULL THEN 'unknown'
-            WHEN c_acctbal < 0 THEN 'negative'
-            WHEN c_acctbal < 5000 THEN 'low'
-            ELSE 'high' END AS balance_bucket,
-  count(*) AS n_customers,
-  CAST(sum(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_building
-FROM customer GROUP BY 1 ORDER BY 1
-""",
-        "q_quantiles_by_flag": """
-SELECT l_returnflag,
-  round(quantile_cont(l_extendedprice, 0.25), 6) AS p25,
-  round(quantile_cont(l_extendedprice, 0.5), 6) AS p50,
-  round(quantile_cont(l_extendedprice, 0.75), 6) AS p75,
-  round(min(l_extendedprice), 6) AS min_price,
-  round(max(l_extendedprice), 6) AS max_price
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-""",
-        "q_sql_surface": """
-SELECT n_name, count(*) AS n_lineitems,
-  round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-    AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-""",
-        "q_json_props": """
-SELECT event_type, count(*) AS n_events,
-  CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-  round(avg(CAST(props->>'k' AS BIGINT)), 6) AS avg_k
-FROM events GROUP BY event_type ORDER BY event_type
-""",
-        "events_asof_purchase": """
-WITH p AS (
-  SELECT user_id, ts, max(event_id) AS p_eid, max(value) AS p_value
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-)
-SELECT e.user_id, e.event_id, e.ts,
-  p.p_eid AS p_eid_asof, p.p_value AS p_value_asof, p.ts AS ts_asof
-FROM events e ASOF LEFT JOIN p
-  ON e.user_id = p.user_id AND e.ts >= p.ts
-""",
-        "events_asof_next_purchase": """
-WITH p AS (
-  SELECT user_id, ts, max(event_id) AS p_eid, max(value) AS p_value
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-), m AS (
-  SELECT e.user_id, e.event_id, e.ts,
-    p.p_eid, p.p_value, p.ts AS p_ts
-  FROM events e ASOF LEFT JOIN p
-    ON e.user_id = p.user_id AND e.ts <= p.ts
-  WHERE e.event_type = 'click'
-)
-SELECT user_id, event_id, ts,
-  CASE WHEN p_ts IS NOT NULL
-        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
-       THEN p_eid END AS p_eid_asof,
-  CASE WHEN p_ts IS NOT NULL
-        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
-       THEN p_value END AS p_value_asof,
-  CASE WHEN p_ts IS NOT NULL
-        AND abs(date_diff('microsecond', ts, p_ts)) <= 7200000000
-       THEN p_ts END AS ts_asof
-FROM m
-""",
-        "events_range_pairs": """
-WITH e AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-  FROM events)
-SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b,
-  b.sec - a.sec AS gap_seconds
-FROM e a JOIN e b
-  ON a.user_id = b.user_id AND a.event_id < b.event_id
- AND abs(b.sec - a.sec) <= 300
-""",
-        "q7_nation_volume": """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-  CAST(date_part('year', l_shipdate) AS INTEGER) AS l_year,
-  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS volume
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation n1 ON s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c_nationkey = n2.n_nationkey
-WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND n1.n_name <> n2.n_name
-GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-""",
-        "q9_profit_by_nation_year": """
-SELECT n_name AS nation,
-  CAST(date_part('year', l_shipdate) AS INTEGER) AS o_year,
-  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) - p_retailprice*l_quantity*0.1 AS DECIMAL(18,6))) AS DOUBLE), 6)
-    AS sum_profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%ol%'
-GROUP BY 1, 2 ORDER BY nation, o_year DESC
-""",
-        "q12_priority_by_date": """
-SELECT l_returnflag,
-  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-       THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-       THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1994-01-01'
-  AND l_shipdate < TIMESTAMP '1995-01-01'
-GROUP BY l_returnflag ORDER BY l_returnflag
-""",
-        "q14_promo_revenue": """
-SELECT round(100.0 * CAST(sum(CAST(CASE WHEN p_type LIKE 'PROMO%' THEN l_extendedprice*(1-l_discount) ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-       / CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(18,6))) AS DOUBLE), 6) AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1995-09-01'
-  AND l_shipdate < TIMESTAMP '1995-10-01'
-""",
-        "q19_disjunctive": """
-SELECT round(CAST(sum(CAST(l_extendedprice*(1-l_discount)
-    AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue,
-  count(*) AS n_lines
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-       AND l_quantity BETWEEN 10 AND 40)
-""",
-        "q22_dormant_rich_customers": """
-WITH avg_bal AS (
-  SELECT avg(c_acctbal) AS avg_bal FROM customer WHERE c_acctbal > 0
-)
-SELECT substr(c_name, 18, 1) AS name_digit,
-  count(*) AS n_custs, round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 6) AS total_bal
-FROM customer, avg_bal
-WHERE c_acctbal > avg_bal
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY 1 ORDER BY 1
-""",
-        "q_events_resampled": """
-WITH bounds AS (
-  SELECT date_trunc('hour', min(ts)) AS lo, date_trunc('hour', max(ts)) AS hi
-  FROM events
-), hours AS (
-  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour_start
-  FROM bounds
-), types AS (SELECT DISTINCT event_type FROM events),
-counts AS (
-  SELECT date_trunc('hour', ts) AS hour_start, event_type,
-    count(*) AS n_events
-  FROM events GROUP BY 1, 2
-)
-SELECT h.hour_start, t.event_type,
-  coalesce(c.n_events, 0) AS n_events
-FROM hours h CROSS JOIN types t
-LEFT JOIN counts c
-  ON h.hour_start = c.hour_start AND t.event_type = c.event_type
-""",
-        "q_cohort_retention": """
-WITH first AS (
-  SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-  FROM events GROUP BY user_id
-), active AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS act_week FROM events
-)
-SELECT cohort_week,
-  CAST(date_diff('day', cohort_week, act_week) // 7 AS BIGINT) AS week_offset,
-  count(DISTINCT a.user_id) AS n_users
-FROM active a JOIN first USING (user_id)
-GROUP BY cohort_week, week_offset
-ORDER BY cohort_week, week_offset
-""",
-        "q_pivot_static": """
-SELECT n_name,
-  round(sum(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 6) AS qty_a,
-  round(sum(CASE WHEN l_returnflag = 'N' THEN l_quantity END), 6) AS qty_n,
-  round(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity END), 6) AS qty_r
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
-""",
-        "q_correlation_stats": """
-SELECT l_returnflag,
-  round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-  round(covar_samp(l_quantity, l_extendedprice), 6) AS covar_qty_price,
-  round(stddev_samp(l_extendedprice), 6) AS std_price,
-  round(var_samp(l_quantity), 6) AS var_qty
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-""",
-        "q_winsorized_stats": """
-WITH bounds AS (
-  SELECT l_returnflag,
-    quantile_cont(l_extendedprice, 0.05) AS p05,
-    quantile_cont(l_extendedprice, 0.95) AS p95
-  FROM lineitem GROUP BY l_returnflag
-)
-SELECT l.l_returnflag, count(*) AS n_kept,
-  round(avg(l_extendedprice), 6) AS trimmed_mean,
-  round(min(l_extendedprice), 6) AS trimmed_min,
-  round(max(l_extendedprice), 6) AS trimmed_max
-FROM lineitem l JOIN bounds b ON l.l_returnflag = b.l_returnflag
-WHERE l_extendedprice >= p05 AND l_extendedprice <= p95
-GROUP BY l.l_returnflag ORDER BY l.l_returnflag
-""",
-        "q_fuzzy_part_names": """
-SELECT p_brand, count(*) AS n_close_pairs,
-  round(avg(CAST(dist AS DOUBLE)), 6) AS avg_dist,
-  CAST(min(dist) AS INTEGER) AS min_dist
-FROM (
-  SELECT a.p_brand, levenshtein(a.p_name, b.p_name) AS dist
-  FROM part a JOIN part b
-    ON a.p_brand = b.p_brand AND a.p_size = b.p_size
-   AND a.p_partkey < b.p_partkey
-) t WHERE dist <= 4
-GROUP BY p_brand ORDER BY p_brand
-""",
-        "q_regexp_extract": """
-SELECT c_custkey % 10 AS last_digit, count(*) AS n_customers,
-  CAST(sum(CASE WHEN CAST(regexp_extract(c_name, 'Customer#(\\d+)', 1)
-                     AS BIGINT) = c_custkey THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_matching
-FROM customer GROUP BY 1 ORDER BY 1
-""",
-        "q_rolling_revenue": """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-    round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS revenue,
-    CAST(floor(epoch(date_trunc('day', o_orderdate))/86400) AS BIGINT)
-      AS day_num
-  FROM orders GROUP BY 1
-)
-SELECT day, revenue,
-  round(sum(revenue) OVER (ORDER BY day_num
-    RANGE BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS rolling_3d_revenue
-FROM daily
-""",
-        "q_customer_spend_ranks": """
-WITH spend AS (
-  SELECT o_custkey, round(sum(o_totalprice), 6) AS total_spend
-  FROM orders GROUP BY o_custkey
-)
-SELECT o_custkey, total_spend,
-  CAST(rank() OVER w AS BIGINT) AS spend_rank,
-  round(percent_rank() OVER w, 6) AS pct_rank,
-  round(cume_dist() OVER w, 6) AS cume,
-  CAST(ntile(4) OVER w AS BIGINT) AS quartile
-FROM spend
-WINDOW w AS (ORDER BY total_spend DESC, o_custkey)
-""",
-        "q_conversion_funnel": """
-WITH s AS (
-  SELECT user_id, min(ts) AS s_ts FROM events
-  WHERE event_type = 'signup' GROUP BY user_id
-), c AS (
-  SELECT e.user_id, min(e.ts) AS c_ts
-  FROM events e JOIN s ON e.user_id = s.user_id
-  WHERE e.event_type = 'click' AND e.ts >= s.s_ts GROUP BY e.user_id
-), p AS (
-  SELECT e.user_id, min(e.ts) AS p_ts
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY e.user_id
-)
-SELECT (SELECT count(*) FROM s) AS n_signup,
-       (SELECT count(*) FROM c) AS n_click_after,
-       (SELECT count(*) FROM p) AS n_purchase_after
-""",
-        "tfidf_top_terms": """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-), tf AS (
-  SELECT doc_id, token, count(*) AS tf FROM toks GROUP BY doc_id, token
-), dfreq AS (
-  SELECT token, count(*) AS df FROM tf GROUP BY token
-), n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-idf AS (
-  SELECT token, ln((n_docs + 1)/(df + 1)) + 1.0 AS idf FROM dfreq, n
+  SELECT *, CAST(row_number() OVER (
+    ORDER BY lift DESC, antecedent, consequent) AS BIGINT) AS rnk
+  FROM rules) t
+WHERE rnk <= 50
+""")
+def _association_rules(spark, sf_dir):
+    """Market-basket 2-itemset rules (support/confidence/lift) over the
+    shared co-occurrence pair tables
+    (operators/recommend.py::association_rules)."""
+    return R.association_rules(
+        R.interactions(spark, sf_dir), max_basket=MAX_BASKET
+    )
+
+
+# distinct-count-grain decomposition (mirrors the Spark plan):
+# a tie-group of k items at count c after offset o contributes
+# c*(k*o + k(k+1)/2) to the exact-BIGINT rank sum; entropy
+# terms pre-rounded DECIMAL(18,9) for order-independence
+@_query("popularity_concentration", """
+WITH inter AS (
+  SELECT l_partkey AS i
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+), pops AS (SELECT i, count(*) AS cnt FROM inter GROUP BY i),
+grp AS (
+  SELECT cnt, count(*) AS k,
+    coalesce(sum(count(*)) OVER (ORDER BY cnt
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS o
+  FROM pops GROUP BY cnt
+), tot AS (
+  SELECT sum(cnt * k) AS tot_l, sum(k) AS n_l FROM grp
 ), scored AS (
-  SELECT tf.doc_id, tf.token, round(tf.tf * idf.idf, 6) AS tfidf
-  FROM tf JOIN idf USING (token)
+  SELECT CAST(CAST(cnt AS DECIMAL(38,0))
+              * (CAST(k AS DECIMAL(38,0)) * CAST(o AS DECIMAL(38,0))
+                 + CASE WHEN k % 2 = 0
+                        THEN CAST(k // 2 AS DECIMAL(38,0))
+                             * CAST(k + 1 AS DECIMAL(38,0))
+                        ELSE CAST(k AS DECIMAL(38,0))
+                             * CAST((k + 1) // 2 AS DECIMAL(38,0))
+                   END)
+         AS DECIMAL(38,0)) AS rnk_cnt,
+    CAST(round(-(k * cnt / CAST(tot_l AS DOUBLE))
+               * ln(cnt / CAST(tot_l AS DOUBLE)), 9)
+         AS DECIMAL(18,9)) AS h_dec,
+    tot_l, n_l
+  FROM grp, tot
 )
-SELECT doc_id, token, tfidf, rnk FROM (
-  SELECT doc_id, token, tfidf,
-    CAST(row_number() OVER (PARTITION BY doc_id
-      ORDER BY tfidf DESC, token) AS BIGINT) AS rnk
-  FROM scored) t
-WHERE rnk <= 5
-""",
-        "repetition_stats": """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-ws AS (
-  SELECT doc_id, len(toks) AS n_words,
-    len(list_distinct(toks)) AS n_distinct
-  FROM d
-), bg AS (
-  SELECT doc_id, array_to_string(list_slice(toks, i, i + 1), ' ') AS b
-  FROM d, unnest(generate_series(1, greatest(len(toks) - 1, 1))) AS u(i)
-), bgs AS (
-  SELECT doc_id, count(*) AS n_bigrams,
-    count(DISTINCT b) AS n_distinct_bigrams
-  FROM bg GROUP BY doc_id
-), wc AS (
-  SELECT doc_id, w, count(*) AS n
-  FROM (SELECT doc_id, unnest(toks) AS w FROM d) GROUP BY doc_id, w
-), tops AS (SELECT doc_id, max(n) AS top_word_n FROM wc GROUP BY doc_id)
-SELECT ws.doc_id, n_words,
-  round(1.0 - CAST(n_distinct AS DOUBLE) / n_words, 6) AS dup_word_frac,
-  round(CAST(top_word_n AS DOUBLE) / n_words, 6) AS top_word_frac,
-  round(1.0 - CAST(n_distinct_bigrams AS DOUBLE) / n_bigrams, 6)
-    AS dup_bigram_frac
-FROM ws JOIN tops USING (doc_id) JOIN bgs USING (doc_id)
-""",
-        "bm25_topk": _bm25_oracle(),
-        "doc_lm_score": """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-w AS (SELECT doc_id, unnest(toks) AS w FROM d),
-uni AS (SELECT w, count(*) AS wn FROM w GROUP BY w),
-tot AS (SELECT CAST(sum(wn) AS DOUBLE) AS total FROM uni),
-freq AS (SELECT w, -log2(wn / total) AS surprisal FROM uni, tot)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-  round(avg(surprisal), 6) AS mean_surprisal
-FROM w JOIN freq USING (w) GROUP BY doc_id
-""",
-        "normalized_dedup": """
-WITH hashed AS (
-  SELECT doc_id,
-    md5(trim(regexp_replace(
-      regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-      ' +', ' ', 'g'))) AS norm_hash
-  FROM documents
-), groups AS (
-  SELECT norm_hash, count(*) AS n_copies, min(doc_id) AS canonical_id
-  FROM hashed GROUP BY norm_hash
+SELECT CAST(max(n_l) AS BIGINT) AS n_items,
+  round((2.0 * sum(rnk_cnt) / max(tot_l) - (max(n_l) + 1))
+        / max(n_l), 6) AS gini,
+  round(CAST(sum(h_dec) AS DOUBLE), 6) AS entropy,
+  round(round(exp(CAST(sum(h_dec) AS DOUBLE)), 9), 6)
+    AS effective_catalog_size
+FROM scored
+""")
+def _popularity_concentration(spark, sf_dir):
+    """Gini / entropy / effective-catalog-size of item popularity
+    (operators/metrics.py::popularity_concentration)."""
+    return M.popularity_concentration(
+        R.interactions(spark, sf_dir), "user", "item"
+    )
+
+
+@_query("item_exposure", ORACLE_BASE + """
+, per_item AS (
+  SELECT item_id AS item, sum(1.0 / log2(rnk + 1)) AS exposure,
+    count(*) AS n_impressions
+  FROM recs GROUP BY item_id
+), tot AS (SELECT sum(exposure) AS tot FROM per_item)
+SELECT rnk, item, n_impressions, exposure, exposure_share FROM (
+  SELECT CAST(row_number() OVER (
+      ORDER BY round(exposure, 6) DESC, item) AS BIGINT) AS rnk,
+    item, n_impressions, round(exposure, 6) AS exposure,
+    round(exposure / tot, 6) AS exposure_share
+  FROM per_item, tot) t
+WHERE rnk <= 20 ORDER BY rnk
+""")
+def _item_exposure(spark, sf_dir):
+    """Rank-discounted exposure shares over the deterministic rec lists
+    (operators/recommend.py::item_exposure)."""
+    return R.item_exposure(_synth_recs(spark, sf_dir))
+
+
+@_query("calibration_kl", ORACLE_BASE + """
+, cats AS (SELECT p_partkey AS i, p_brand AS cat FROM part),
+nc AS (SELECT CAST(count(DISTINCT cat) AS DOUBLE) AS n_cats FROM cats),
+hist AS (
+  SELECT user_id AS u, cat, count(*) AS n
+  FROM interactions JOIN cats ON item_id = i GROUP BY 1, 2
+), htot AS (SELECT u, sum(n) AS h_tot FROM hist GROUP BY u),
+rmix AS (
+  SELECT user_id AS u, cat, count(*) AS n
+  FROM recs JOIN cats ON item_id = i GROUP BY 1, 2
+), rtot AS (SELECT u, sum(n) AS r_tot FROM rmix GROUP BY u),
+pu AS (
+  SELECT r.u,
+    sum((r.n / rt.r_tot) * ln((r.n / rt.r_tot)
+      / ((coalesce(h.n, 0) + 0.5) / (ht.h_tot + 0.5 * n_cats)))) AS kl
+  FROM rmix r
+  JOIN rtot rt ON r.u = rt.u
+  LEFT JOIN hist h ON r.u = h.u AND r.cat = h.cat
+  JOIN htot ht ON r.u = ht.u, nc
+  GROUP BY r.u
 )
-SELECT h.doc_id, h.norm_hash, g.n_copies, g.canonical_id,
-  h.doc_id <> g.canonical_id AS is_dup
-FROM hashed h JOIN groups g USING (norm_hash)
-""",
-        "minhash_jaccard_estimate": _DOC_BASE
-        + """
-, sig AS (
-  SELECT doc_id,
-    """
-        + ",\n    ".join(
-            f"min(md5('{i}|' || s)) AS mh{i}" for i in range(8)
-        )
-        + """
-  FROM sh GROUP BY doc_id
-)
-SELECT j.id_a, j.id_b, j.jaccard,
-  round(("""
-        + " + ".join(
-            f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(8)
-        )
-        + """) / 8.0, 6) AS mh_est,
-  round(abs(("""
-        + " + ".join(
-            f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(8)
-        )
-        + """) / 8.0 - j.jaccard), 6) AS abs_err
-FROM jac j
-JOIN sig a ON j.id_a = a.doc_id
-JOIN sig b ON j.id_b = b.doc_id
-WHERE j.jaccard >= 0.1
-""",
-        "pack_sequences": """
-WITH b AS (
-  SELECT doc_id, CAST(doc_id % 8 AS BIGINT) AS shard,
-    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-  FROM documents
-), c AS (
-  SELECT doc_id, shard, n_tokens,
-    CAST(sum(n_tokens) OVER (
-      PARTITION BY shard ORDER BY doc_id) AS BIGINT) AS cum_tokens
-  FROM b
-)
-SELECT doc_id, shard, n_tokens, cum_tokens,
-  CAST((cum_tokens - n_tokens) // 512 AS BIGINT) AS bin_id
-FROM c
-""",
-        "bigram_lm": """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-big AS (
-  SELECT toks[i] AS w1, toks[i + 1] AS w2
-  FROM d, unnest(generate_series(1, len(toks) - 1)) AS u(i)
-), c AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM big GROUP BY w1, w2
-), s AS (
-  SELECT w1, w2, c12,
-    CAST(sum(c12) OVER (PARTITION BY w1) AS BIGINT) AS c1
-  FROM c
-)
-SELECT w1, w2, c12, c1,
-  round(CAST(c12 AS DOUBLE) / c1, 6) AS p_cond,
-  CAST(row_number() OVER (ORDER BY c12 DESC, w1, w2) AS BIGINT) AS rnk
-FROM s QUALIFY rnk <= 100
-""",
-        "vocab_encode": """
-WITH c AS (
-  SELECT t.w AS token, CAST(count(*) AS BIGINT) AS freq
-  FROM (SELECT string_split(text, ' ') AS toks FROM documents) d,
-       unnest(toks) AS t(w)
-  GROUP BY t.w
-)
-SELECT token,
-  CAST(row_number() OVER (ORDER BY freq DESC, token) AS BIGINT) AS token_id,
-  freq
-FROM c
-""",
-        "pagerank_items": _pagerank_oracle(),
-        "wau_sliding": """
-WITH daily AS (
-  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
-), maxd AS (SELECT max(CAST(ts AS DATE)) AS maxd FROM events),
-contrib AS (
-  SELECT user_id, d + CAST(i AS INTEGER) AS day
-  FROM daily, unnest(generate_series(0, 6)) AS u(i)
-)
-SELECT strftime(day, '%Y-%m-%d') AS day, count(DISTINCT user_id) AS wau
-FROM contrib CROSS JOIN maxd
-WHERE day <= maxd
-GROUP BY day
-""",
-        "attribution_last_touch": """
-WITH p AS (
-  SELECT user_id, event_id, ts, round(value, 6) AS value
-  FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, ts, max(event_id) AS click_eid
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
-)
-SELECT p.user_id, p.event_id, p.ts, p.value,
-  c.click_eid AS click_eid_asof, c.ts AS click_ts,
-  CASE WHEN c.click_eid IS NOT NULL
-       THEN CAST(floor(epoch(p.ts)) AS BIGINT)
-            - CAST(floor(epoch(c.ts)) AS BIGINT) END AS gap_s,
-  c.click_eid IS NOT NULL AS attributed
-FROM p ASOF LEFT JOIN c
-  ON p.user_id = c.user_id AND p.ts >= c.ts
-""",
-        "q_revenue_streaks": """
-WITH daily AS (
-  SELECT o_orderdate AS d, round(sum(o_totalprice), 6) AS rev
-  FROM orders GROUP BY o_orderdate
-), med AS (SELECT quantile_cont(rev, 0.5) AS m FROM daily),
-hot AS (SELECT d, rev FROM daily CROSS JOIN med WHERE rev > m),
-isl AS (
-  SELECT d, rev,
-    CAST(d AS DATE) - CAST(row_number() OVER (ORDER BY d) AS INTEGER) AS grp
-  FROM hot
-), s AS (
-  SELECT min(d) AS streak_start, max(d) AS streak_end,
-    CAST(count(*) AS BIGINT) AS n_days, round(sum(rev), 6) AS total_rev
-  FROM isl GROUP BY grp
-)
-SELECT streak_start, streak_end, n_days, total_rev,
-  CAST(row_number() OVER (ORDER BY n_days DESC, streak_start) AS BIGINT) AS rnk
-FROM s QUALIFY rnk <= 10
-""",
-        "events_dedup_hourly": """
-SELECT user_id, event_type, hour, event_id, ts, value FROM (
-  SELECT user_id, event_type, date_trunc('hour', ts) AS hour,
-    event_id, ts, round(value, 6) AS value,
-    row_number() OVER (
-      PARTITION BY user_id, event_type, date_trunc('hour', ts)
-      ORDER BY ts, event_id) AS rn
-  FROM events) t
-WHERE rn = 1
-""",
-        "temporal_split": """
-WITH cut AS (
-  SELECT quantile_cont(epoch(ts), 0.8) AS p80 FROM events
-)
-SELECT split, count(*) AS n_events, min(ts) AS min_ts, max(ts) AS max_ts
-FROM (
-  SELECT CASE WHEN epoch(ts) <= cut.p80 THEN 'train' ELSE 'eval' END AS split,
-    ts
-  FROM events CROSS JOIN cut) t
-GROUP BY split
-""",
-        "q_salted_user_spend": """
-SELECT c.c_mktsegment, count(*) AS n_events,
-  round(sum(e.value), 6) AS sum_value
-FROM events e JOIN customer c ON e.user_id = c.c_custkey
-GROUP BY c.c_mktsegment
-""",
-        "q_first_last_orders": """
-SELECT DISTINCT o_custkey AS custkey,
-  first_value(o_orderdate) OVER w AS first_date,
-  last_value(o_orderdate) OVER w AS last_date,
-  round(first_value(o_totalprice) OVER w, 6) AS first_price,
-  round(last_value(o_totalprice) OVER w, 6) AS last_price,
-  CAST(count(*) OVER w AS BIGINT) AS n_orders
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-""",
-        "embedding_gram": """
-WITH e AS (SELECT embedding::DOUBLE[] AS v FROM embeddings),
-p AS (
-  SELECT a.i AS i, b.j AS j, v[a.i] * v[b.j] AS p
-  FROM e,
-       unnest(generate_series(1, len(v))) AS a(i),
-       unnest(generate_series(1, len(v))) AS b(j)
-  WHERE b.j >= a.i
-)
-SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-  round(sum(p), 6) AS g
-FROM p GROUP BY i, j
-""",
-        "redact_pii": """
-WITH pii AS (
-  SELECT doc_id,
-    text || ' contact u' || doc_id || '@mail.example.com from 10.'
-      || (doc_id % 200) || '.0.1 call +1-555-'
-      || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-      || CASE WHEN doc_id % 3 = 0 THEN ' cc admin@ex.org' ELSE '' END
-      AS text
-  FROM documents
-)
-SELECT doc_id,
-  regexp_replace(regexp_replace(regexp_replace(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-      '\\b(\\d{1,3}\\.){3}\\d{1,3}\\b', '[IP]', 'g'),
-      '\\+\\d{1,3}-\\d{3,4}-\\d{3,4}', '[PHONE]', 'g') AS redacted,
-  CAST(len(regexp_extract_all(text,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT)
-    AS n_emails,
-  CAST(len(regexp_extract_all(text,
-      '\\b(\\d{1,3}\\.){3}\\d{1,3}\\b')) AS BIGINT) AS n_ips,
-  CAST(len(regexp_extract_all(text,
-      '\\+\\d{1,3}-\\d{3,4}-\\d{3,4}')) AS BIGINT) AS n_phones
-FROM pii
-""",
-        "snapshot_diff_orders": """
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS o_totalprice
-  FROM orders
-), old AS (
-  SELECT * FROM base WHERE o_orderkey % 11 != 0
-), new AS (
-  SELECT o_orderkey, o_orderstatus,
-    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
-         ELSE o_totalprice END AS o_totalprice
-  FROM base WHERE o_orderkey % 7 != 3
-)
-SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-  CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-       WHEN n.o_orderkey IS NULL THEN 'delete'
-       ELSE 'update' END AS change_type,
-  o.o_orderstatus AS old_o_orderstatus,
-  o.o_totalprice AS old_o_totalprice,
-  n.o_orderstatus AS new_o_orderstatus,
-  n.o_totalprice AS new_o_totalprice
-FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
-WHERE o.o_orderkey IS NULL OR n.o_orderkey IS NULL
-   OR (o.o_orderstatus IS DISTINCT FROM n.o_orderstatus)
-   OR (o.o_totalprice IS DISTINCT FROM n.o_totalprice)
-""",
-        "q_zorder_keys": _zorder_oracle(),
-        "q_recursive_bfs": RECURSIVE_BFS_SQL,
-        "q_unpivot_lineitem": """
-WITH long AS (
-  SELECT l_returnflag, 'l_quantity' AS metric, l_quantity AS value
-  FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_extendedprice', l_extendedprice FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_discount', l_discount FROM lineitem
-  UNION ALL
-  SELECT l_returnflag, 'l_tax', l_tax FROM lineitem
-)
-SELECT l_returnflag, metric, CAST(count(*) AS BIGINT) AS n,
-  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_value,
-  round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_value
-FROM long GROUP BY l_returnflag, metric
-""",
-        "session_paths": """
-WITH ordered AS (
-  SELECT user_id, event_id, ts, event_type,
-    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-), sess AS (
-  SELECT user_id, event_id, ts, event_type,
-    sum(CASE WHEN prev_ts IS NULL
-               OR date_diff('microsecond', prev_ts, ts) > 1800000000
-             THEN 1 ELSE 0 END)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM ordered
-), paths AS (
-  SELECT string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-  FROM sess GROUP BY user_id, session_idx
-), counts AS (
-  SELECT path, count(*) AS n_sessions FROM paths GROUP BY path
-  ORDER BY n_sessions DESC, path LIMIT 20
-)
-SELECT path, n_sessions,
-  CAST(row_number() OVER (ORDER BY n_sessions DESC, path) AS BIGINT)
-    AS rnk
-FROM counts
-""",
-        "q_data_quality": """
-WITH col_checks AS (
-  SELECT * FROM (
-    SELECT
-      CAST(count(*) AS BIGINT) AS n_rows,
-      CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        AS orderkey_not_null,
-      CAST(sum(CASE WHEN NOT (o_totalprice > 0) THEN 1 ELSE 0 END)
-        AS BIGINT) AS totalprice_positive,
-      CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P') THEN 1
-        ELSE 0 END) AS BIGINT) AS status_in_domain,
-      CAST(sum(CASE WHEN o_orderdate NOT BETWEEN DATE '1992-01-01'
-        AND DATE '1998-12-31' THEN 1 ELSE 0 END) AS BIGINT)
-        AS date_in_range
-    FROM orders) s,
-    LATERAL (VALUES
-      ('orderkey_not_null', s.orderkey_not_null),
-      ('totalprice_positive', s.totalprice_positive),
-      ('status_in_domain', s.status_in_domain),
-      ('date_in_range', s.date_in_range)) AS v("check", n_violations)
-), uniq AS (
-  SELECT 'orderkey_unique' AS "check",
-    CAST(coalesce(sum(c - 1), 0) AS BIGINT) AS n_violations,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows
-  FROM (SELECT count(*) AS c FROM orders GROUP BY o_orderkey
-        HAVING count(*) > 1) d
-), fk AS (
-  SELECT 'custkey_fk' AS "check",
-    CAST(count(*) AS BIGINT) AS n_violations,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows
-  FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-  WHERE c.c_custkey IS NULL
-)
-SELECT "check", n_violations, n_rows, n_violations = 0 AS pass
-FROM (
-  SELECT "check", n_violations, n_rows FROM col_checks
-  UNION ALL SELECT * FROM uniq
-  UNION ALL SELECT * FROM fk
-) t
-""",
-        "dup_ngram_fraction": """
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(toks, i, i+2), ' ') AS s
-  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
-), dfreq AS (
-  SELECT s, count(*) AS n_docs_with FROM sh GROUP BY s
-)
-SELECT sh.doc_id,
-  CAST(count(*) AS BIGINT) AS n_shingles,
-  CAST(sum(CASE WHEN f.n_docs_with >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_dup,
-  round(sum(CASE WHEN f.n_docs_with >= 2 THEN 1 ELSE 0 END)
-    / CAST(count(*) AS DOUBLE), 6) AS dup_fraction
-FROM sh JOIN dfreq f ON sh.s = f.s
-GROUP BY sh.doc_id
-""",
-        "source_overlap": """
-WITH d AS (
-  SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents
-), sh AS (
-  SELECT DISTINCT source,
-    array_to_string(list_slice(toks, i, i+2), ' ') AS s
-  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
-), sz AS (
-  SELECT source, count(*) AS n FROM sh GROUP BY source
-)
-SELECT a.source AS source_a, b.source AS source_b,
-  CAST(count(*) AS BIGINT) AS n_shared,
-  round(count(*) / CAST(least(sa.n, sb.n) AS DOUBLE), 6) AS overlap,
-  round(count(*) / CAST(sa.n + sb.n - count(*) AS DOUBLE), 6) AS jaccard
-FROM sh a
-JOIN sh b ON a.s = b.s AND a.source < b.source
-JOIN sz sa ON a.source = sa.source
-JOIN sz sb ON b.source = sb.source
-GROUP BY a.source, b.source, sa.n, sb.n
-ORDER BY source_a, source_b
-""",
-        "next_item_examples": """
-WITH t AS (
-  SELECT DISTINCT o_custkey AS u, o_orderdate AS dt,
-    o_orderkey AS ok, l_partkey AS it
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)
-SELECT u AS user_id,
-  CAST(row_number() OVER (
-    PARTITION BY u ORDER BY dt, ok, it) AS BIGINT) AS pos,
-  array_to_string(list(CAST(it AS VARCHAR)) OVER (
-    PARTITION BY u ORDER BY dt, ok, it
-    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING), '>') AS context,
-  CAST(it AS BIGINT) AS label
-FROM t
-QUALIFY pos >= 2
-""",
-        "adamic_adar_links": ORACLE_BASE + ITEM_SIMS_SQL + """
-, both_dirs AS (
-  SELECT ia AS z, ib AS nbr, sim AS w FROM sims
-  UNION ALL
-  SELECT ib AS z, ia AS nbr, sim AS w FROM sims
-), adeg AS (
-  SELECT z, count(*) AS deg FROM both_dirs GROUP BY z
-), capped AS (
-  SELECT z, nbr FROM (
-    SELECT z, nbr,
-      row_number() OVER (PARTITION BY z ORDER BY w DESC, nbr ASC) AS r
-    FROM both_dirs) t
-  WHERE r <= 6
-), wedges AS (
-  SELECT l.nbr AS a, r.nbr AS b,
-    CAST(round(1.0 / ln(CAST(deg AS DOUBLE)), 9) AS DECIMAL(18,9)) AS c
-  FROM capped l
-  JOIN capped r ON l.z = r.z AND l.nbr < r.nbr
-  JOIN adeg ON adeg.z = l.z
-), aa_scored AS (
-  SELECT a, b, sum(c) AS aa_dec FROM wedges GROUP BY a, b
-), new_links AS (
-  SELECT a, b, aa_dec FROM aa_scored s
-  WHERE NOT EXISTS (
-    SELECT 1 FROM pcounts p WHERE p.ia = s.a AND p.ib = s.b)
-)
-SELECT CAST(a AS BIGINT) AS item_a, CAST(b AS BIGINT) AS item_b,
-  round(CAST(aa_dec AS DOUBLE), 6) AS aa_score, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (ORDER BY aa_dec DESC, a, b) AS rnk
-  FROM new_links) t
-WHERE rnk <= 20
-""",
-        "common_neighbor_links": ORACLE_BASE + ITEM_SIMS_SQL + """
-, both_dirs AS (
-  SELECT ia AS z, ib AS nbr, sim AS w FROM sims
-  UNION ALL
-  SELECT ib AS z, ia AS nbr, sim AS w FROM sims
-), adeg AS (
-  SELECT z, count(*) AS deg FROM both_dirs GROUP BY z
-), capped AS (
-  SELECT z, nbr FROM (
-    SELECT z, nbr,
-      row_number() OVER (PARTITION BY z ORDER BY w DESC, nbr ASC) AS r
-    FROM both_dirs) t
-  WHERE r <= 6
-), cn_scored AS (
-  SELECT l.nbr AS a, r.nbr AS b, CAST(count(*) AS BIGINT) AS n_common_nbrs
-  FROM capped l
-  JOIN capped r ON l.z = r.z AND l.nbr < r.nbr
-  GROUP BY l.nbr, r.nbr
-), new_links AS (
-  SELECT s.a, s.b, s.n_common_nbrs,
-    round(s.n_common_nbrs
-      / CAST(da.deg + db.deg - s.n_common_nbrs AS DOUBLE), 6)
-      AS jaccard_nbrs
-  FROM cn_scored s
-  JOIN adeg da ON da.z = s.a
-  JOIN adeg db ON db.z = s.b
-  WHERE NOT EXISTS (
-    SELECT 1 FROM pcounts p WHERE p.ia = s.a AND p.ib = s.b)
-)
-SELECT CAST(a AS BIGINT) AS item_a, CAST(b AS BIGINT) AS item_b,
-  n_common_nbrs, jaccard_nbrs, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (
-    ORDER BY n_common_nbrs DESC, jaccard_nbrs DESC, a, b) AS rnk
-  FROM new_links) t
-WHERE rnk <= 20
-""",
-        "ips_offline_eval": ORACLE_BASE + """
-, pop AS (
-  SELECT item_id, count(*) AS n_i FROM interactions GROUP BY item_id
-), ntot AS (
-  SELECT count(*) AS n_all FROM interactions
-), j AS (
-  SELECT CAST(i.rating AS DECIMAL(9,3)) AS r,
-    CAST(round((CASE WHEN rec.item_id IS NOT NULL THEN 1 ELSE 0 END)
-      / (CAST(10 AS DOUBLE) * (p.n_i / n.n_all)), 9)
-      AS DECIMAL(18,9)) AS w
-  FROM interactions i
-  JOIN pop p ON i.item_id = p.item_id
-  CROSS JOIN ntot n
-  LEFT JOIN recs rec
-    ON i.user_id = rec.user_id AND i.item_id = rec.item_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n_logs,
-  round(avg(CASE WHEN w > 0 THEN 1.0 ELSE 0.0 END), 6) AS match_rate,
-  round(CAST(sum(w * r) AS DOUBLE) / count(*), 6) AS ips_value,
-  round(CAST(sum(w * r) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 6)
-    AS snips_value
-FROM j
-""",
-        "langid_confusion": f"""
-WITH pred AS (
-  SELECT doc_id,
-    CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-         WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-         WHEN s_de >= s_fr THEN 'de'
-         ELSE 'fr' END AS lang_pred
-  FROM (
-    SELECT doc_id,
-      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_EN)})) AS s_en,
-      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_ES)})) AS s_es,
-      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_DE)})) AS s_de,
-      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_FR)})) AS s_fr
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
-), cells AS (
-  SELECT d.lang AS lang_true, p.lang_pred,
-    CAST(count(*) AS BIGINT) AS n_docs
-  FROM documents d JOIN pred p ON d.doc_id = p.doc_id
-  GROUP BY d.lang, p.lang_pred
-)
-SELECT lang_true, lang_pred, n_docs,
-  round(n_docs / CAST(sum(n_docs) OVER (PARTITION BY lang_true)
-    AS DOUBLE), 6) AS recall
-FROM cells
-""",
-        "quantile_normalize": """
-WITH cuts AS (
-  SELECT source,
-    quantile_cont(n_chars, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
-      AS cuts
-  FROM documents GROUP BY source
-)
-SELECT d.doc_id, d.source, d.n_chars,
-  CAST(len(list_filter(c.cuts, x -> d.n_chars > x)) AS BIGINT) AS qbin
-FROM documents d JOIN cuts c ON d.source = c.source
-""",
-        "weighted_sample": """
-SELECT doc_id, lang, weight, priority, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT doc_id, lang, weight, priority,
-    row_number() OVER (
-      PARTITION BY lang ORDER BY priority DESC, doc_id ASC) AS rnk
-  FROM (
-    SELECT doc_id, lang, n_chars AS weight,
-      round(exp(ln(
-        (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-         + 1.0) / 4294967296.0)
-        / CAST(n_chars AS DOUBLE)), 9) AS priority
-    FROM documents) p
-) r
-WHERE rnk <= 25
-""",
-        "log_odds_terms": """
-WITH toks AS (
-  SELECT source AS grp, unnest(string_split(text, ' ')) AS token
-  FROM documents
-), gw AS (
-  SELECT grp, token, CAST(count(*) AS DOUBLE) AS y_sw
-  FROM toks GROUP BY grp, token
-), wtot AS (
-  SELECT token, sum(y_sw) AS y_w FROM gw GROUP BY token
-), gtot AS (
-  SELECT grp, sum(y_sw) AS n_s FROM gw GROUP BY grp
-), ntot AS (
-  SELECT sum(y_w) AS n FROM wtot
-), sc AS (
-  SELECT grp, token, y_sw,
-    (ln((y_sw + a_w) / (n_s + 100.0 - y_sw - a_w))
-     - ln((y_rw + a_w) / (n_r + 100.0 - y_rw - a_w)))
-    / sqrt(1.0 / (y_sw + a_w) + 1.0 / (y_rw + a_w)) AS zraw
-  FROM (
-    SELECT gw.grp, gw.token, y_sw, 100.0 * y_w / n AS a_w,
-      y_w - y_sw AS y_rw, n - n_s AS n_r, n_s
-    FROM gw JOIN wtot USING (token) JOIN gtot USING (grp) CROSS JOIN ntot
-  ) t
-)
-SELECT grp AS source, token, CAST(y_sw AS BIGINT) AS n_in_group,
-  round(zraw, 6) AS log_odds_z, CAST(rnk AS BIGINT) AS rnk
-FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY grp ORDER BY zraw DESC, token ASC) AS rnk
-  FROM sc
-) r
-WHERE rnk <= 10
-""",
-        "hashing_features": """
-SELECT doc_id,
-  CAST(('0x' || substr(md5(token), 1, 8))::BIGINT % 64 AS BIGINT) AS dim,
-  CAST(sum(CASE WHEN ('0x' || substr(md5(token), 9, 1))::BIGINT % 2 = 0
-           THEN 1 ELSE -1 END) AS BIGINT) AS weight
-FROM (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-) t
-GROUP BY doc_id, dim
-HAVING weight != 0
-""",
-        "ranking_metrics": ORACLE_BASE
-        + """
-, truth AS (
-  SELECT DISTINCT o_custkey AS u, l_partkey AS i
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  WHERE o_orderdate >= DATE '1995-07-01'
-), sizes AS (
-  SELECT u, count(*) AS n_truth FROM truth GROUP BY u
-), idcg AS (
-  SELECT u, sum(1.0 / log2(pos + 1)) AS idcg FROM (
-    SELECT u, row_number() OVER (PARTITION BY u ORDER BY i) AS pos
-    FROM truth) x
-  WHERE pos <= 10 GROUP BY u
-), hits AS (
-  SELECT r.user_id AS u, count(*) AS n_hits,
-    sum(1.0 / log2(r.rnk + 1)) AS dcg
-  FROM recs r JOIN truth t ON r.user_id = t.u AND r.item_id = t.i
+SELECT count(*) AS n_users, round(avg(kl), 6) AS mean_kl,
+  round(max(kl), 6) AS max_kl FROM pu
+""")
+def _calibration_kl(spark, sf_dir):
+    """Calibrated-recommendation audit: mean KL(p_rec || p_hist) over
+    the brand mix (operators/recommend.py::calibration_kl; Steck
+    2018)."""
+    part = load_table(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("item"), F.col("p_brand").alias("category")
+    )
+    return R.calibration_kl(
+        R.interactions(spark, sf_dir),
+        _synth_recs(spark, sf_dir),
+        part,
+    )
+
+
+@_query("neardup_components_star", _neardup_star_oracle())
+def _neardup_components_star(spark, sf_dir):
+    """Same near-dup component output via the O(log n)-round
+    large-star/small-star contraction (operators/graph.py::
+    star_components) — oracle is the EXACT transitive closure (DuckDB
+    recursive CTE), so this witnesses the log-round algorithm against
+    ground truth rather than against the propagation twin."""
+    from recmetrics_pyspark_spark.operators.graph import star_components
+
+    pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)
+    edges = pairs.select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    )
+    labels = star_components(edges)
+    sizes = labels.groupBy("label").agg(
+        F.count(F.lit(1)).alias("component_size")
+    )
+    return labels.join(sizes, "label").select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("component_id"),
+        "component_size",
+    )
+
+
+@_query("serendipity", ORACLE_BASE + """
+, pop AS (SELECT item_id AS i, count(*) AS cnt FROM upairs GROUP BY 1),
+baseline AS (
+  SELECT i FROM (
+    SELECT i, row_number() OVER (ORDER BY cnt DESC, i) AS brnk FROM pop) t
+  WHERE brnk <= 100
+), scored AS (
+  SELECT r.user_id AS u,
+    sum(CASE WHEN b.i IS NULL THEN 1 ELSE 0 END) AS n_unexpected,
+    sum(CASE WHEN b.i IS NULL AND h.item_id IS NOT NULL
+        THEN 1 ELSE 0 END) AS n_serendip,
+    count(*) AS n_recs
+  FROM recs r
+  LEFT JOIN baseline b ON r.item_id = b.i
+  LEFT JOIN upairs h ON r.user_id = h.user_id AND r.item_id = h.item_id
   GROUP BY r.user_id
-), per_user AS (
-  SELECT s.u,
-    coalesce(h.n_hits, 0) / 10.0 AS precision,
-    coalesce(h.n_hits, 0) / CAST(s.n_truth AS DOUBLE) AS recall,
-    coalesce(h.dcg, 0.0) / g.idcg AS ndcg
-  FROM sizes s JOIN idcg g ON s.u = g.u
-  LEFT JOIN hits h ON s.u = h.u
 )
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-  round(avg(precision), 6) AS precision_at_k,
-  round(avg(recall), 6) AS recall_at_k,
-  round(avg(ndcg), 6) AS ndcg_at_k
-FROM per_user
-""",
-        "q_variant_props": """
-SELECT event_type,
-  CAST(floor(CAST(json_extract(props, '$.k') AS BIGINT) / 10)
-    AS BIGINT) AS k_decade,
-  count(*) AS n
-FROM events
-GROUP BY event_type, k_decade
-ORDER BY event_type, k_decade
-""",
-        "rollup_incremental": """
--- direct rollup of the NEW snapshot: equality with the Spark side's
--- (old rollup + CDC delta) merge proves incremental maintenance
-WITH base AS (
-  SELECT o_orderkey, o_orderstatus, round(o_totalprice, 2) AS o_totalprice
-  FROM orders
-), new AS (
-  SELECT o_orderkey, o_orderstatus,
-    CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + 1.0
-         ELSE o_totalprice END AS o_totalprice
-  FROM base WHERE o_orderkey % 7 != 3
-)
-SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_rows,
-  round(sum(o_totalprice), 2) AS sum_value
-FROM new GROUP BY o_orderstatus
-""",
-        "shuffle_shards": """
-WITH hashed AS (
-  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT)
-      % 8 AS shard
-  FROM documents
-)
-SELECT doc_id, shard,
-  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-    AS BIGINT) AS pos
-FROM hashed
-""",
-        "event_sessionize": """
-WITH ordered AS (
-  SELECT user_id, event_id, ts,
-    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-)
-SELECT user_id, event_id, ts,
-  CAST(sum(CASE WHEN prev_ts IS NULL
-                  OR date_diff('microsecond', prev_ts, ts) > 1800000000
-                THEN 1 ELSE 0 END)
-    OVER (PARTITION BY user_id ORDER BY ts, event_id
-          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-FROM ordered
-""",
-        "q_key_skew_items": """
-WITH counts AS (
-  SELECT l_partkey AS key, count(*) AS n
+SELECT count(*) AS n_users,
+  round(avg(CAST(n_unexpected AS DOUBLE) / n_recs), 6)
+    AS unexpectedness,
+  round(avg(n_serendip / 10.0), 6) AS serendipity
+FROM scored
+""")
+def _serendipity(spark, sf_dir):
+    """Serendipity/unexpectedness vs the top-100 popularity baseline
+    (operators/recommend.py::serendipity_at_k)."""
+    return R.serendipity_at_k(
+        _synth_recs(spark, sf_dir),
+        R.interactions(spark, sf_dir),
+        k=10,
+        baseline_k=100,
+    )
+
+
+@_query("mmr_rerank", _mmr_oracle())
+def _mmr_rerank(spark, sf_dir):
+    """MMR-diversified top-5 over the item-based candidate lists
+    (operators/recommend.py::mmr_rerank; Carbonell & Goldstein 1998).
+    Rides the persisted similarity table for both candidate scoring
+    and the diversity penalty; candidates come from the shared
+    _item_recs memo (the same frame the item_based_recommendations
+    query declares), not a re-derivation."""
+    inter = R.interactions(spark, sf_dir)
+    cands = _item_recs(spark, sf_dir)
+    sims = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    # symmetric=True (round 13): item_similarity_pairs IS the canonical
+    # ia<ib cosine table, so the operator probes it directly — half the
+    # candidate-pair generate, half the sims join side vs the previous
+    # 2x bidirectional union; values bit-identical (see mmr_rerank's
+    # contract note), oracle unchanged.
+    return R.mmr_rerank(cands, sims, k=5, lam=0.7, symmetric=True)
+
+
+@_query("baseline_predictor_rmse", """
+WITH r AS (
+  SELECT o_custkey AS u, l_partkey AS i, CAST(l_quantity AS DOUBLE) AS r
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY l_partkey
-), total AS (SELECT sum(n) AS total FROM counts),
-top AS (
-  SELECT key, n FROM counts ORDER BY n DESC, key LIMIT 10
+), mu AS (SELECT avg(r) AS mu FROM r),
+bu AS (SELECT u, avg(r - mu) AS bu FROM r, mu GROUP BY u),
+bi AS (
+  SELECT i, avg(r.r - mu - bu) AS bi
+  FROM r JOIN bu USING (u), mu GROUP BY i
+), scored AS (
+  SELECT r.r, mu, mu + bu + bi AS pred
+  FROM r JOIN bu USING (u) JOIN bi USING (i), mu
 )
-SELECT CAST(row_number() OVER w AS BIGINT) AS rnk, key, n,
-  round(n / CAST(total AS DOUBLE), 6) AS share,
-  round(sum(n) OVER (ORDER BY n DESC, key ROWS UNBOUNDED PRECEDING)
-        / CAST(total AS DOUBLE), 6) AS cum_share
-FROM top CROSS JOIN total
-WINDOW w AS (ORDER BY n DESC, key)
-""",
-        "mixture_sample": """
-SELECT doc_id, source, keep_rate FROM (
-  SELECT doc_id, source,
-    CASE WHEN CAST(regexp_extract(source, '(\\d+)$', 1) AS BIGINT) % 2 = 0
-         THEN 0.9 ELSE 0.4 END AS keep_rate,
-    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 3)) AS BIGINT)
-      / 4096.0 AS u
-  FROM documents) t
-WHERE u < keep_rate
-""",
-        "q_event_transitions": """
-WITH pairs AS (
-  SELECT event_type AS from_type,
-    lead(event_type) OVER (PARTITION BY user_id
-      ORDER BY ts, event_id) AS to_type
-  FROM events
-), counts AS (
-  SELECT from_type, to_type, count(*) AS n FROM pairs
-  WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-)
-SELECT from_type, to_type, n,
-  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type), 6) AS p
-FROM counts
-""",
-        "label_centroids": """
-SELECT label, i - 1 AS dim_idx, round(avg(v[i]), 6) AS centroid_val
-FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings) e,
-     unnest(generate_series(1, len(v))) AS s(i)
-GROUP BY label, i - 1
-""",
-        "kmeans_assignments": KMEANS_CTE + """
-, a2 AS (
-  SELECT vid, cid, dist FROM (
-    SELECT b.vid, c1.cid,
-      round(b.v_sq - 2*list_dot_product(b.v, c1.c)
-            + list_dot_product(c1.c, c1.c), 6) AS dist,
-      row_number() OVER (PARTITION BY b.vid
-        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
-                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
-    FROM b, c1) t
-  WHERE rn = 1
-)
-SELECT cid, count(*) AS n_members, round(avg(dist), 6) AS mean_dist
-FROM a2 GROUP BY cid ORDER BY cid
-""",
-        "semantic_dedup": KMEANS_CTE + """
-, a2 AS (
-  SELECT vid, v, cid FROM (
-    SELECT b.vid, b.v, c1.cid,
-      row_number() OVER (PARTITION BY b.vid
-        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
-                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
-    FROM b, c1) t
-  WHERE rn = 1
-), nn AS (
-  SELECT vid, v, cid, sqrt(list_dot_product(v, v)) AS nrm FROM a2
-), dropped AS (
-  SELECT DISTINCT y.vid
-  FROM nn x JOIN nn y ON x.cid = y.cid AND x.vid < y.vid
-  WHERE round(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6) >= 0.35
-)
-SELECT cid,
-  count(*) AS n_docs,
-  CAST(sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_dropped,
-  CAST(count(*) - sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END)
-    AS BIGINT) AS n_kept,
-  round(sum(CASE WHEN d.vid IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-    / count(*), 6) AS drop_ratio
-FROM nn LEFT JOIN dropped d USING (vid)
-GROUP BY cid ORDER BY cid
-""",
-        # mirrors operators/similarity.py::ivfsq_ann_topk: the IVF
-        # cells/probes SQL composed with the SQ bounds + midpoint
-        # reconstruction (global bounds over the full corpus)
-        "ivfsq_ann_topk": _IVFSQ_ANN_SQL,
-        # recall@10 of the SQ8 and IVF-SQ8 lanes vs the brute-force
-        # oracle — the three retrieval SQL bodies reused verbatim as
-        # subqueries (the ann_recall_report pattern extended to the
-        # quantized lanes, so their retrieval QUALITY carries a
-        # driver-checked oracle row, not just determinism)
-        "sq_recall_report": f"""
-WITH exact AS (SELECT query_id, neighbor_id
-               FROM ({_ann_brute_oracle()}) t),
-sq AS (SELECT query_id, neighbor_id FROM ({_SQ_ANN_SQL}) t),
-iv AS (SELECT query_id, neighbor_id FROM ({_IVFSQ_ANN_SQL}) t)
-SELECT 'sq8' AS lane, e.query_id,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        / count(*), 6) AS recall_at_10
-FROM exact e LEFT JOIN sq a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-UNION ALL
-SELECT 'ivfsq8' AS lane, e.query_id,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        / count(*), 6) AS recall_at_10
-FROM exact e LEFT JOIN iv a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-""",
-        # ann_recall_report's shape over the trained-IVF lane
-        "ivf_recall_report": f"""
-WITH exact AS (SELECT query_id, neighbor_id
-               FROM ({_ann_brute_oracle()}) t),
-iv AS (SELECT query_id, neighbor_id FROM ({_IVF_ANN_SQL}) t)
-SELECT e.query_id,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        / count(*), 6) AS recall_at_10
-FROM exact e LEFT JOIN iv a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-""",
-        # sq_recall_report's shape over the PQ lanes (PQ-ADC and
-        # IVF-routed PQ), each oracle chain nested whole
-        "pq_recall_report": f"""
-WITH exact AS (SELECT query_id, neighbor_id
-               FROM ({_ann_brute_oracle()}) t),
-pq AS (SELECT query_id, neighbor_id FROM ({_pq_oracle()}) t),
-ivfpq AS (SELECT query_id, neighbor_id FROM ({_ivfpq_oracle()}) t)
-SELECT 'pq' AS lane, e.query_id,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        / count(*), 6) AS recall_at_10
-FROM exact e LEFT JOIN pq a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-UNION ALL
-SELECT 'ivfpq' AS lane, e.query_id,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       AS BIGINT) AS n_hit,
-  round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        / count(*), 6) AS recall_at_10
-FROM exact e LEFT JOIN ivfpq a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-""",
-        # mirrors operators/similarity.py::semantic_decontaminate_ivf:
-        # coarse quantizer trained on the FULL vector table (KMEANS_CTE
-        # c1, shared verbatim with the kmeans/ivf lanes), train side
-        # (vid >= 25) assigned to cells, eval side (vid < 25) probing
-        # its 3 nearest cells, hits >= 0.4 ranked per train vector
-        "semantic_decontaminate_ivf": KMEANS_CTE + """
-, cells AS (
-  SELECT vid AS train_id, v AS tv, cid FROM (
-    SELECT b.vid, b.v, c1.cid,
-      row_number() OVER (PARTITION BY b.vid
-        ORDER BY round(b.v_sq - 2*list_dot_product(b.v, c1.c)
-                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
-    FROM b, c1 WHERE b.vid >= 25) t
-  WHERE rn = 1
-), qb AS (SELECT vid AS eval_id, v AS qv, v_sq AS q_sq FROM b
-          WHERE vid < 25),
-probes AS (
-  SELECT eval_id, qv, sqrt(q_sq) AS qn, cid FROM (
-    SELECT qb.eval_id, qb.qv, qb.q_sq, c1.cid,
-      row_number() OVER (PARTITION BY qb.eval_id
-        ORDER BY round(qb.q_sq - 2*list_dot_product(qb.qv, c1.c)
-                 + list_dot_product(c1.c, c1.c), 6), c1.cid) AS rn
-    FROM qb, c1) t
-  WHERE rn <= 3
-), hits AS (
-  SELECT train_id, eval_id,
-    round(list_dot_product(tv, qv)
-      / nullif(sqrt(list_dot_product(tv, tv)) * qn, 0.0), 6)
-      AS cos_sim
-  FROM cells JOIN probes USING (cid))
-SELECT train_id, n_eval_hits, best_eval_id, best_cos FROM (
-  SELECT train_id, eval_id AS best_eval_id, cos_sim AS best_cos,
-    row_number() OVER (PARTITION BY train_id
-      ORDER BY cos_sim DESC, eval_id) AS rnk,
-    CAST(count(*) OVER (PARTITION BY train_id) AS BIGINT)
-      AS n_eval_hits
-  FROM hits WHERE cos_sim >= 0.4) f
-WHERE rnk = 1
-""",
-        "ivf_ann_topk": _IVF_ANN_SQL,
-        "q_event_gaps": """
-SELECT user_id, event_id,
-  CAST(floor(epoch(ts)) AS BIGINT)
-    - lag(CAST(floor(epoch(ts)) AS BIGINT))
-        OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_prev_s,
-  lead(CAST(floor(epoch(ts)) AS BIGINT))
-        OVER (PARTITION BY user_id ORDER BY ts, event_id)
-    - CAST(floor(epoch(ts)) AS BIGINT) AS gap_next_s
-FROM events
-""",
-        "q_grouping_sets": """
-SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE), 6)
-    AS sum_price
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-""",
-        "q_user_event_type_sets": """
-SELECT user_id,
-  array_to_string(list_sort(list(DISTINCT event_type)), ',') AS event_types,
-  count(*) AS n_events
-FROM events GROUP BY user_id
-""",
-        "q_top_tokens": """
-SELECT token, n, rnk FROM (
-  SELECT token, n,
-    CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS rnk
-  FROM (
-    SELECT token, count(*) AS n FROM (
-      SELECT unnest(string_split(text, ' ')) AS token FROM documents) u
-    GROUP BY token) c
-) t WHERE rnk <= 50
-""",
-        "profile_customer": "\nUNION ALL\n".join(
-            f"""SELECT '{c}' AS col_name, count(*) AS n_rows,
-  CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-  count(DISTINCT {c}) AS n_distinct,
-  CAST(min({c}) AS VARCHAR) AS min_value,
-  CAST(max({c}) AS VARCHAR) AS max_value FROM customer"""
-            for c in ("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-        ),
-        "events_tumbling": """
-SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
-  count(*) AS n_events, round(sum(value), 6) AS sum_value
-FROM events GROUP BY 1, 2
-""",
-        "events_sliding": """
-SELECT time_bucket(INTERVAL '30 minutes', ts)
-         - k * INTERVAL '30 minutes' AS window_start,
-  event_type, count(*) AS n_events
-FROM events, unnest([0, 1]) AS off(k)
-GROUP BY 1, 2
-""",
-        "events_sessions": """
-WITH marked AS (
-  SELECT user_id, ts, value,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR ts - lag(ts) OVER w > INTERVAL '10 minutes'
-         THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), numbered AS (
-  SELECT user_id, ts, value,
-    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-      ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT user_id, min(ts) AS session_start,
-  max(ts) + INTERVAL '10 minutes' AS session_end,
-  count(*) AS n_events, round(sum(value), 6) AS sum_value
-FROM numbered GROUP BY user_id, sid
-""",
-        "hard_negatives": f"""
+SELECT count(*) AS n_ratings,
+  round(sqrt(avg(power(r - pred, 2))), 6) AS rmse,
+  round(avg(abs(r - pred)), 6) AS mae,
+  round(sqrt(avg(power(r - mu, 2))), 6) AS rmse_mean_only
+FROM scored
+""")
+def _baseline_rmse(spark, sf_dir):
+    """Bias baseline predictor mu + b_u + b_i and its RMSE/MAE vs the
+    observed ratings (operators/recommend.py::baseline_predictor_rmse)."""
+    return R.baseline_predictor_rmse(
+        R.interactions(spark, sf_dir, with_rating=True)
+    )
+
+
+@_query("hard_negatives", f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 q AS (SELECT vec_id AS query_id, label AS qlabel, v AS qv
       FROM e WHERE vec_id < 5),
@@ -9545,8 +6749,18 @@ SELECT query_id, neighbor_id, neighbor_label, cos_sim, rnk FROM (
       ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rnk
   FROM scored) t
 WHERE rnk <= 10
-""",
-        "negative_sampling": ORACLE_BASE + """
+""")
+def _hard_negatives(spark, sf_dir):
+    """Contrastive-training hard-negative miner (operators/
+    similarity.py::hard_negative_mining): exact cosine top-10 among
+    DIFFERENT-label vectors for each of the 5 probe queries."""
+    embs = _embs(spark, sf_dir)
+    return S.hard_negative_mining(
+        embs, embs.filter(F.col("vec_id") < 5), k=10
+    )
+
+
+@_query("negative_sampling", ORACLE_BASE + """
 , nmax AS (SELECT max(item_id) AS n_max FROM upairs),
 users AS (SELECT DISTINCT user_id FROM upairs),
 cand AS (
@@ -9569,8 +6783,15 @@ SELECT user_id AS "user", neg_item, rnk FROM (
       AS rnk
   FROM nodup) t
 WHERE rnk <= 5
-""",
-        "record_linkage_parts": """
+""")
+def _negative_sampling(spark, sf_dir):
+    """BPR/sampled-softmax negative candidate generator (operators/
+    recommend.py::negative_sampling): 5 deterministic non-interacted
+    items per user over the interactions item domain."""
+    return R.negative_sampling(R.interactions(spark, sf_dir), k=5)
+
+
+@_query("record_linkage_parts", """
 WITH side AS (
   SELECT p_partkey AS id, p_name AS name,
     p_brand || '|' || string_split(p_name, ' ')[1] AS block
@@ -9579,8 +6800,18 @@ SELECT a.id AS id_a, b.id AS id_b,
   levenshtein(a.name, b.name) AS edit_dist
 FROM side a JOIN side b ON a.block = b.block AND a.id < b.id
 WHERE levenshtein(a.name, b.name) <= 12
-""",
-        "incremental_dedup": """
+""")
+def _record_linkage_parts(spark, sf_dir):
+    """Entity-resolution candidate pairs over the part catalog
+    (operators/dedup.py::record_linkage_pairs): blocked on
+    (p_brand, first name token), Levenshtein-verified."""
+    part = load_table(spark, sf_dir, "part")
+    return D.record_linkage_pairs(
+        part, "p_partkey", "p_name", ["p_brand"], max_dist=12
+    )
+
+
+@_query("incremental_dedup", """
 WITH batch AS (
   SELECT doc_id, md5(text) AS content_hash
   FROM documents WHERE doc_id % 5 = 0),
@@ -9597,8 +6828,20 @@ SELECT b.doc_id, b.content_hash,
 FROM batch b
 JOIN firsts f USING (content_hash)
 LEFT JOIN seen s USING (content_hash)
-""",
-        "rolling_origin_cv": """
+""")
+def _incremental_dedup(spark, sf_dir):
+    """Batch-vs-history dedup (operators/dedup.py::incremental_dedup):
+    docs with doc_id % 5 == 0 arrive as the new batch; the rest are
+    the accumulated corpus whose content hashes are already known."""
+    docs = _docs(spark, sf_dir)
+    batch = docs.filter(F.col("doc_id") % 5 == 0)
+    seen = docs.filter(F.col("doc_id") % 5 != 0).select(
+        F.md5(F.col("text")).alias("content_hash")
+    )
+    return D.incremental_dedup(batch, seen)
+
+
+@_query("rolling_origin_cv", """
 WITH bounds AS (
   SELECT min(o_orderdate::DATE) AS t0, max(o_orderdate::DATE) AS t1
   FROM orders),
@@ -9618,8 +6861,18 @@ SELECT fold, split, count(*) AS n_rows,
   round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 2)
     AS total_value
 FROM folded WHERE split IS NOT NULL GROUP BY fold, split
-""",
-        "ab_test_events": """
+""")
+def _rolling_origin_cv(spark, sf_dir):
+    """Rolling-origin CV fold audit over orders (functions/
+    curation.py::rolling_origin_folds): 3 forward-chaining folds on
+    o_orderdate, row + revenue totals per (fold, split)."""
+    orders = load_table(spark, sf_dir, "orders")
+    return C.rolling_origin_folds(
+        orders, "o_orderdate", n_folds=3, value_col="o_totalprice"
+    )
+
+
+@_query("ab_test_events", """
 WITH unit AS (
   SELECT user_id,
     CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS v
@@ -9651,8 +6904,20 @@ FROM (
       / nullif(b.n - 1, 0) AS var_b
   FROM (SELECT * FROM per_arm WHERE arm = 0) a
   CROSS JOIN (SELECT * FROM per_arm WHERE arm = 1) b) t
-""",
-        "km_retention": """
+""")
+def _ab_test_events(spark, sf_dir):
+    """Deterministic A/B readout over events (operators/
+    experiment.py::ab_test_analysis): md5-salted arm assignment on
+    user_id, per-user value sums, Welch t between arms."""
+    from recmetrics_pyspark_spark.operators.experiment import (
+        ab_test_analysis,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    return ab_test_analysis(ev, "user_id", "value", salt="exp1")
+
+
+@_query("km_retention", """
 WITH bounds AS (SELECT max(ts) AS tmax FROM events),
 life AS (
   SELECT date_diff('day', min(ts)::DATE, max(ts)::DATE) AS lifetime,
@@ -9676,8 +6941,18 @@ SELECT lifetime AS t_days, n_risk, d AS n_events,
     OVER (ORDER BY lifetime
       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6) AS survival
 FROM risk WHERE d > 0
-""",
-        "holt_forecast_events": """
+""")
+def _km_retention(spark, sf_dir):
+    """Kaplan-Meier churn curve over event activity lifetimes
+    (operators/experiment.py::km_survival): right-censored at a
+    14-day horizon before the corpus' last timestamp."""
+    from recmetrics_pyspark_spark.operators.experiment import km_survival
+
+    ev = load_table(spark, sf_dir, "events")
+    return km_survival(ev, "user_id", "ts", censor_horizon_days=14)
+
+
+@_query("holt_forecast_events", """
 WITH daily AS (
   SELECT event_type, ts::DATE AS day,
     CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -9704,8 +6979,20 @@ SELECT event_type, n_days,
   round(st[1], 6) AS level, round(st[2], 6) AS trend,
   round(st[1] + 3.0::DOUBLE * st[2], 6) AS forecast_3
 FROM folded
-""",
-        "cusum_changepoint_events": """
+""")
+def _holt_forecast_events(spark, sf_dir):
+    """Holt linear-trend smoothing of daily event value per type
+    (operators/timeseries.py::holt_forecast): the recurrence folds
+    array-locally per key — sequential in time, parallel in keys."""
+    from recmetrics_pyspark_spark.operators.timeseries import holt_forecast
+
+    ev = load_table(spark, sf_dir, "events")
+    return holt_forecast(
+        ev, "event_type", "ts", "value", alpha=0.5, beta=0.3, horizon=3
+    )
+
+
+@_query("cusum_changepoint_events", """
 WITH daily AS (
   SELECT event_type, ts::DATE AS day,
     CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -9728,8 +7015,20 @@ FROM (
       ORDER BY abs_cusum DESC, day) AS rn
   FROM run) t
 WHERE rn = 1
-""",
-        "seasonal_profile_events": """
+""")
+def _cusum_changepoint_events(spark, sf_dir):
+    """CUSUM level-shift locator per event type (operators/
+    timeseries.py::cusum_changepoint): peak |cumulative deviation
+    from the mean| over the daily value series."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        cusum_changepoint,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    return cusum_changepoint(ev, "event_type", "ts", "value")
+
+
+@_query("seasonal_profile_events", """
 WITH daily AS (
   SELECT event_type, ts::DATE AS day,
     CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -9748,274 +7047,20 @@ SELECT d.event_type, d.iso_dow, d.n_days,
   round(d.mean_v, 6) AS mean_daily_value,
   round(d.mean_v / nullif(t.tot_v, 0), 6) AS dow_share
 FROM dow d JOIN tot t USING (event_type)
-""",
-        "qa_eval_docs": r"""
-WITH t AS (
-  SELECT doc_id AS id,
-    array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ')
-      AS pred,
-    array_to_string(list_slice(string_split(text, ' '), 4, 11), ' ')
-      AS ref
-  FROM documents),
-n AS (
-  SELECT id,
-    string_split(trim(regexp_replace(lower(pred), '\s+', ' ', 'g')),
-                 ' ') AS ptoks,
-    string_split(trim(regexp_replace(lower(ref), '\s+', ' ', 'g')),
-                 ' ') AS rtoks
-  FROM t),
-c AS (
-  SELECT id, ptoks, rtoks,
-    coalesce(list_sum(list_transform(list_distinct(ptoks), tk ->
-      least(len(list_filter(ptoks, x1 -> x1 = tk)),
-            len(list_filter(rtoks, x2 -> x2 = tk))))), 0) AS common
-  FROM n)
-SELECT id, ptoks = rtoks AS em,
-  len(ptoks) AS n_pred, len(rtoks) AS n_ref,
-  CASE WHEN common = 0 THEN 0.0 ELSE
-    round(2 * (common / CAST(len(ptoks) AS DOUBLE))
-            * (common / CAST(len(rtoks) AS DOUBLE))
-          / ((common / CAST(len(ptoks) AS DOUBLE))
-             + (common / CAST(len(rtoks) AS DOUBLE))), 6) END AS f1
-FROM c
-""",
-        # mirrors functions/evals.py::rouge_n (n=2): bigrams built by
-        # a list_transform over positions, clipped multiset overlap by
-        # the same distinct-gram least() rule as qa_eval_docs
-        "rouge2_eval_docs": r"""
-WITH t AS (
-  SELECT doc_id AS id,
-    list_slice(string_split(text, ' '), 1, 12) AS p,
-    list_slice(string_split(text, ' '), 7, 18) AS r
-  FROM documents),
-g AS (
-  SELECT id,
-    CASE WHEN len(p) < 2 THEN [] ELSE
-      list_transform(generate_series(1, len(p) - 1),
-                     i -> array_to_string(p[i:i+1], ' ')) END AS pg,
-    CASE WHEN len(r) < 2 THEN [] ELSE
-      list_transform(generate_series(1, len(r) - 1),
-                     i -> array_to_string(r[i:i+1], ' ')) END AS rg
-  FROM t),
-c AS (
-  SELECT id, pg, rg,
-    CAST(coalesce(list_sum(list_transform(list_distinct(pg), gm ->
-      least(len(list_filter(pg, x1 -> x1 = gm)),
-            len(list_filter(rg, x2 -> x2 = gm))))), 0) AS BIGINT)
-      AS overlap
-  FROM g)
-SELECT id, CAST(len(pg) AS BIGINT) AS n_pred_grams,
-  CAST(len(rg) AS BIGINT) AS n_ref_grams, overlap,
-  CASE WHEN len(pg) = 0 THEN 0.0
-    ELSE round(overlap / CAST(len(pg) AS DOUBLE), 6) END AS rouge_p,
-  CASE WHEN len(rg) = 0 THEN 0.0
-    ELSE round(overlap / CAST(len(rg) AS DOUBLE), 6) END AS rouge_r,
-  CASE WHEN overlap = 0 THEN 0.0 ELSE
-    round(2 * (overlap / CAST(len(pg) AS DOUBLE))
-            * (overlap / CAST(len(rg) AS DOUBLE))
-          / ((overlap / CAST(len(pg) AS DOUBLE))
-             + (overlap / CAST(len(rg) AS DOUBLE))), 6) END
-    AS rouge_f1
-FROM c
-""",
-        # mirrors functions/curation.py::nb_quality_classifier:
-        # per-class Laplace token likelihoods; each ln() rounded to 9
-        # decimals as DECIMAL(18,9) BEFORE the per-doc sum (the
-        # doc_perplexity house rule), prior nullif-guarded
-        "nb_source_classifier": """
-WITH lab AS (
-  SELECT doc_id,
-    CAST(CASE WHEN source IN ('src0','src1','src2','src3')
-         THEN 1 ELSE 0 END AS INT) AS y, text
-  FROM documents),
-toks AS (
-  SELECT doc_id, y, unnest(string_split(text, ' ')) AS w FROM lab),
-st AS (
-  SELECT w, CAST(sum(y) AS BIGINT) AS c_pos,
-    CAST(sum(1 - y) AS BIGINT) AS c_neg
-  FROM toks GROUP BY 1),
-tot AS (
-  SELECT CAST(sum(c_pos) AS BIGINT) AS n_pos,
-    CAST(sum(c_neg) AS BIGINT) AS n_neg,
-    CAST(count(*) AS BIGINT) AS v
-  FROM st),
-llr AS (
-  SELECT w,
-    CAST(round(ln((c_pos + 1) / CAST(n_pos + v AS DOUBLE)), 9)
-         AS DECIMAL(18,9))
-  - CAST(round(ln((c_neg + 1) / CAST(n_neg + v AS DOUBLE)), 9)
-         AS DECIMAL(18,9)) AS llr9
-  FROM st CROSS JOIN tot),
-pri AS (
-  SELECT CAST(round(ln(CAST(sum(y) AS DOUBLE)
-    / nullif(CAST(sum(1 - y) AS DOUBLE), 0.0)), 9)
-    AS DECIMAL(18,9)) AS prior9
-  FROM lab),
-per AS (
-  SELECT doc_id, any_value(y) AS is_labeled_pos,
-    CAST(count(*) AS BIGINT) AS n_tokens, sum(llr9) AS s
-  FROM toks JOIN llr USING (w) GROUP BY 1)
-SELECT doc_id, is_labeled_pos, n_tokens,
-  round(CAST(prior9 + s AS DOUBLE), 6) AS nb_log_odds,
-  CAST(CASE WHEN CAST(prior9 + s AS DOUBLE) > 0 THEN 1
-            WHEN CAST(prior9 + s AS DOUBLE) <= 0 THEN 0
-       END AS INT) AS predicted_pos
-FROM per CROSS JOIN pri
-""",
-        # mirrors functions/curation.py::nb_train + nb_score: model
-        # trained on doc_id % 5 != 0, held-out 20% scored with the
-        # Laplace unseen-token constant via a LEFT join + coalesce
-        "nb_score_holdout": _NB_HOLDOUT_SQL,
-        # mirrors functions/text.py::excess_surprisal: union-vocab
-        # Laplace unigram bits under the scored corpus's own LM and
-        # the src0 reference LM, round-9 DECIMAL sums per doc
-        "excess_surprisal_docs": """
-WITH sd AS (
-  SELECT doc_id, text FROM documents WHERE source != 'src0'),
-rd AS (SELECT text FROM documents WHERE source = 'src0'),
-toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM sd),
-sc AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS c_self FROM toks GROUP BY 1),
-rc AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS c_ref FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM rd) t
-  GROUP BY 1),
-vocab AS (
-  SELECT coalesce(sc.w, rc.w) AS w,
-    coalesce(c_self, 0) AS c_self, coalesce(c_ref, 0) AS c_ref
-  FROM sc FULL JOIN rc ON sc.w = rc.w),
-tot AS (
-  SELECT CAST(sum(c_self) AS BIGINT) AS n_self,
-    CAST(sum(c_ref) AS BIGINT) AS n_ref,
-    CAST(count(*) AS BIGINT) AS v
-  FROM vocab),
-bits AS (
-  SELECT w,
-    CAST(round(-log2((c_self + 1) / CAST(n_self + v AS DOUBLE)), 9)
-         AS DECIMAL(18,9)) AS b_self9,
-    CAST(round(-log2((c_ref + 1) / CAST(n_ref + v AS DOUBLE)), 9)
-         AS DECIMAL(18,9)) AS b_ref9
-  FROM vocab CROSS JOIN tot)
-SELECT doc_id, n_tokens,
-  round(CAST(ss AS DOUBLE) / n_tokens, 6) AS bits_self,
-  round(CAST(sr AS DOUBLE) / n_tokens, 6) AS bits_ref,
-  round(CAST(ss - sr AS DOUBLE) / n_tokens, 6) AS excess_bits
-FROM (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-    sum(b_self9) AS ss, sum(b_ref9) AS sr
-  FROM toks JOIN bits USING (w) GROUP BY 1) p
-""",
-        # mirrors functions/evals.py::calibration_bins over the NB
-        # holdout scores: sigmoid pre-rounded to 9 (binning agrees
-        # across engines), DECIMAL bin means and gap masses, both ECE
-        # sums cast to double before dividing
-        "nb_calibration_bins": f"""
-WITH j AS (
-  SELECT d.y,
-    round(1.0 / (1.0 + exp(-sc.nb_log_odds)), 9) AS p
-  FROM ({_NB_HOLDOUT_SQL}) sc
-  JOIN (
-    SELECT doc_id,
-      CAST(CASE WHEN source IN ('src0','src1','src2','src3')
-           THEN 1 ELSE 0 END AS INT) AS y
-    FROM documents) d USING (doc_id)
-  WHERE sc.nb_log_odds IS NOT NULL),
-b AS (
-  SELECT y, p,
-    CAST(greatest(0, least(9, floor(p * 10))) AS INT) AS bin
-  FROM j),
-per AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS sy,
-    sum(CAST(round(p, 9) AS DECIMAL(18,9))) AS sp9
-  FROM b GROUP BY 1),
-g AS (
-  SELECT bin, n, sy, sp9,
-    CAST(round(abs(sy / CAST(n AS DOUBLE)
-                   - CAST(sp9 AS DOUBLE) / n) * n, 9)
-         AS DECIMAL(28,9)) AS gm9
-  FROM per),
-tot AS (
-  SELECT CAST(sum(gm9) AS DOUBLE) AS sgm,
-    CAST(sum(n) AS DOUBLE) AS sn
-  FROM g)
-SELECT bin, bin / 10.0 AS bin_lo, n,
-  round(CAST(sp9 AS DOUBLE) / n, 6) AS mean_prob,
-  round(sy / CAST(n AS DOUBLE), 6) AS pos_rate,
-  round(abs(sy / CAST(n AS DOUBLE)
-            - CAST(sp9 AS DOUBLE) / n), 6) AS abs_gap,
-  round(sgm / sn, 6) AS ece
-FROM g CROSS JOIN tot
-""",
-        # mirrors functions/evals.py::classifier_eval over the
-        # nb_score_holdout pipeline: distinct-score-grain average
-        # ranks (DECIMAL(28,1) rank mass), rank-sum AUC, confusion at
-        # threshold 0 — the holdout SQL is reused verbatim as the
-        # scored subquery (single source of truth)
-        "nb_holdout_eval": f"""
-WITH j AS (
-  SELECT d.y, sc.nb_log_odds AS s
-  FROM ({_NB_HOLDOUT_SQL}) sc
-  JOIN (
-    SELECT doc_id,
-      CAST(CASE WHEN source IN ('src0','src1','src2','src3')
-           THEN 1 ELSE 0 END AS INT) AS y
-    FROM documents) d USING (doc_id)
-  WHERE sc.nb_log_odds IS NOT NULL),
-g AS (
-  SELECT s, CAST(count(*) AS BIGINT) AS n,
-    CAST(sum(y) AS BIGINT) AS np
-  FROM j GROUP BY 1),
-r AS (
-  SELECT n, np, s,
-    CAST(np * (coalesce(sum(n) OVER (ORDER BY s
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      + (n + 1) / 2.0) AS DECIMAL(28,1)) AS prm
-  FROM g),
-a AS (
-  SELECT CAST(sum(np) AS BIGINT) AS n_pos,
-    CAST(sum(n) - sum(np) AS BIGINT) AS n_neg,
-    CAST(sum(CASE WHEN s > 0.0 THEN np ELSE 0 END) AS BIGINT) AS tp,
-    CAST(sum(CASE WHEN s > 0.0 THEN n - np ELSE 0 END) AS BIGINT)
-      AS fp,
-    sum(prm) AS spr
-  FROM r)
-SELECT n_pos, n_neg, tp, fp,
-  CAST(n_pos - tp AS BIGINT) AS fn,
-  CAST(n_neg - fp AS BIGINT) AS tn,
-  round(tp / nullif(CAST(tp + fp AS DOUBLE), 0.0), 6) AS precision,
-  round(tp / nullif(CAST(n_pos AS DOUBLE), 0.0), 6) AS recall,
-  round(2 * (tp / nullif(CAST(tp + fp AS DOUBLE), 0.0))
-          * (tp / nullif(CAST(n_pos AS DOUBLE), 0.0))
-        / nullif((tp / nullif(CAST(tp + fp AS DOUBLE), 0.0))
-               + (tp / nullif(CAST(n_pos AS DOUBLE), 0.0)), 0.0), 6)
-    AS f1,
-  round((CAST(spr AS DOUBLE) - n_pos * (n_pos + 1) / 2.0)
-        / nullif(CAST(n_pos * n_neg AS DOUBLE), 0.0), 6) AS auc
-FROM a
-""",
-        "pass_at_k_items": """
-WITH per AS (
-  SELECT l_partkey AS task,
-    CAST(least(count(*), 10) AS INTEGER) AS n,
-    CAST(least(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END),
-               least(count(*), 10)) AS INTEGER) AS c
-  FROM lineitem GROUP BY l_partkey),
-expanded AS (
-  SELECT task, CAST(k AS INTEGER) AS k, n, c
-  FROM per CROSS JOIN (VALUES (1), (5)) t(k) WHERE n >= k)
-SELECT task, k, n, c,
-  CASE WHEN n - c < k THEN 1.0 ELSE
-    round(1.0 - (factorial(n - c)
-                 / (factorial(k) * factorial(n - c - k)))
-              / (factorial(n)
-                 / (factorial(k) * factorial(n - k))), 6) END
-    AS pass_at_k
-FROM expanded
-""",
-        "bpe_merges": _bpe_oracle(8),
-        "item_triangles": ORACLE_BASE + f"""
+""")
+def _seasonal_profile_events(spark, sf_dir):
+    """ISO-weekday seasonality profile per event type (operators/
+    timeseries.py::seasonal_profile): mean daily value and weekly
+    share per dow."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        seasonal_profile,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    return seasonal_profile(ev, "event_type", "ts", "value")
+
+
+@_query("item_triangles", ORACLE_BASE + f"""
 , {CAPPED_CTE},
 e AS (
   SELECT a.item_id AS ea, b.item_id AS eb
@@ -10052,9 +7097,1124 @@ SELECT d.node, d.degree,
                   / (d.degree * (d.degree - 1)), 6)
        ELSE 0.0 END AS clustering_coeff
 FROM deg d LEFT JOIN per_node p ON d.node = p.node
-""",
-        # --- round-5 additions
-        "user_behavior_entropy": ORACLE_BASE + """
+""")
+def _item_triangles(spark, sf_dir):
+    """Per-item triangle count + local clustering coefficient over the
+    co-occurrence graph (operators/graph.py::triangle_stats): degree-
+    ordered orientation bounds the wedge join at O(m^1.5). Rides the
+    persisted similarity pair table."""
+    from recmetrics_pyspark_spark.operators.graph import triangle_stats
+
+    inter = R.interactions(spark, sf_dir)
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    return triangle_stats(pairs, "ia", "ib")
+
+
+@_query("bpe_merges", _bpe_oracle(8))
+def _bpe_merges(spark, sf_dir):
+    """Distributed BPE tokenizer training over documents (functions/
+    bpe.py::bpe_train): 8 merge rounds, each one vocabulary-scale
+    pair aggregate + one-row argmax broadcast + scan-local greedy
+    merge application."""
+    from recmetrics_pyspark_spark.functions.bpe import bpe_train
+
+    return bpe_train(_docs(spark, sf_dir), "text", n_merges=8)
+
+
+@_query("qa_eval_docs", r"""
+WITH t AS (
+  SELECT doc_id AS id,
+    array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ')
+      AS pred,
+    array_to_string(list_slice(string_split(text, ' '), 4, 11), ' ')
+      AS ref
+  FROM documents),
+n AS (
+  SELECT id,
+    string_split(trim(regexp_replace(lower(pred), '\s+', ' ', 'g')),
+                 ' ') AS ptoks,
+    string_split(trim(regexp_replace(lower(ref), '\s+', ' ', 'g')),
+                 ' ') AS rtoks
+  FROM t),
+c AS (
+  SELECT id, ptoks, rtoks,
+    coalesce(list_sum(list_transform(list_distinct(ptoks), tk ->
+      least(len(list_filter(ptoks, x1 -> x1 = tk)),
+            len(list_filter(rtoks, x2 -> x2 = tk))))), 0) AS common
+  FROM n)
+SELECT id, ptoks = rtoks AS em,
+  len(ptoks) AS n_pred, len(rtoks) AS n_ref,
+  CASE WHEN common = 0 THEN 0.0 ELSE
+    round(2 * (common / CAST(len(ptoks) AS DOUBLE))
+            * (common / CAST(len(rtoks) AS DOUBLE))
+          / ((common / CAST(len(ptoks) AS DOUBLE))
+             + (common / CAST(len(rtoks) AS DOUBLE))), 6) END AS f1
+FROM c
+""")
+def _qa_eval_docs(spark, sf_dir):
+    """SQuAD-style EM/token-F1 per example (functions/evals.py::
+    qa_token_f1): predictions = first 8 tokens of each doc,
+    references = tokens 4-11 — deterministic partial overlap."""
+    from recmetrics_pyspark_spark.functions.evals import qa_token_f1
+
+    docs = _docs(spark, sf_dir)
+    t = docs.select(
+        "doc_id",
+        F.expr("array_join(slice(split(text, ' '), 1, 8), ' ')").alias(
+            "pred"
+        ),
+        F.expr("array_join(slice(split(text, ' '), 4, 8), ' ')").alias(
+            "ref"
+        ),
+    )
+    return qa_token_f1(t, "doc_id", "pred", "ref")
+
+
+@_query("pass_at_k_items", """
+WITH per AS (
+  SELECT l_partkey AS task,
+    CAST(least(count(*), 10) AS INTEGER) AS n,
+    CAST(least(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END),
+               least(count(*), 10)) AS INTEGER) AS c
+  FROM lineitem GROUP BY l_partkey),
+expanded AS (
+  SELECT task, CAST(k AS INTEGER) AS k, n, c
+  FROM per CROSS JOIN (VALUES (1), (5)) t(k) WHERE n >= k)
+SELECT task, k, n, c,
+  CASE WHEN n - c < k THEN 1.0 ELSE
+    round(1.0 - (factorial(n - c)
+                 / (factorial(k) * factorial(n - c - k)))
+              / (factorial(n)
+                 / (factorial(k) * factorial(n - k))), 6) END
+    AS pass_at_k
+FROM expanded
+""")
+def _pass_at_k_items(spark, sf_dir):
+    """Unbiased pass@k per part (functions/evals.py::pass_at_k):
+    n = purchases capped at 10, c = returned among them."""
+    from recmetrics_pyspark_spark.functions.evals import pass_at_k
+
+    li = load_table(spark, sf_dir, "lineitem")
+    n = F.least(F.count(F.lit(1)), F.lit(10))
+    per = li.groupBy(F.col("l_partkey").alias("task")).agg(
+        n.alias("n"),
+        F.least(
+            F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)),
+            n,
+        ).alias("c"),
+    )
+    return pass_at_k(per, "task", "n", "c", ks=(1, 5))
+
+
+@_query("source_overlap", """
+WITH d AS (
+  SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents
+), sh AS (
+  SELECT DISTINCT source,
+    array_to_string(list_slice(toks, i, i+2), ' ') AS s
+  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
+), sz AS (
+  SELECT source, count(*) AS n FROM sh GROUP BY source
+)
+SELECT a.source AS source_a, b.source AS source_b,
+  CAST(count(*) AS BIGINT) AS n_shared,
+  round(count(*) / CAST(least(sa.n, sb.n) AS DOUBLE), 6) AS overlap,
+  round(count(*) / CAST(sa.n + sb.n - count(*) AS DOUBLE), 6) AS jaccard
+FROM sh a
+JOIN sh b ON a.s = b.s AND a.source < b.source
+JOIN sz sa ON a.source = sa.source
+JOIN sz sb ON b.source = sb.source
+GROUP BY a.source, b.source, sa.n, sb.n
+ORDER BY source_a, source_b
+""")
+def _source_overlap(spark, sf_dir):
+    """Cross-source duplication-leakage matrix over the documents
+    corpus (operators/dedup.py::source_overlap): shared word-3-gram
+    shingles, overlap coefficient and Jaccard per source pair — rides
+    the shared persisted shingle table; the self-join runs on the
+    (source, shingle) DISTINCT projection so fan-out per shingle is
+    capped at n_sources, never doc-quadratic."""
+    return D.source_overlap(_docs(spark, sf_dir)).orderBy(
+        "source_a", "source_b"
+    )
+
+
+@_query("next_item_examples", """
+WITH t AS (
+  SELECT DISTINCT o_custkey AS u, o_orderdate AS dt,
+    o_orderkey AS ok, l_partkey AS it
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+)
+SELECT u AS user_id,
+  CAST(row_number() OVER (
+    PARTITION BY u ORDER BY dt, ok, it) AS BIGINT) AS pos,
+  array_to_string(list(CAST(it AS VARCHAR)) OVER (
+    PARTITION BY u ORDER BY dt, ok, it
+    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING), '>') AS context,
+  CAST(it AS BIGINT) AS label
+FROM t
+QUALIFY pos >= 2
+""")
+def _next_item_examples(spark, sf_dir):
+    """Sequential-recommendation training examples
+    (operators/recommend.py::sequence_examples): per-customer
+    purchase history ordered by (o_orderdate, o_orderkey, l_partkey),
+    emitting (context-of-≤8-prior-items, next-item label) pairs via
+    ONE bounded-frame user window — the SASRec/GRU4Rec data-prep
+    shape, no global sort, no self-join."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    timed = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("user"),
+            F.col("o_orderdate").alias("dt"),
+            F.col("o_orderkey").alias("ok"),
+            F.col("l_partkey").alias("item"),
+        )
+        .distinct()
+    )
+    return R.sequence_examples(timed)
+
+
+@_query("log_odds_terms", """
+WITH toks AS (
+  SELECT source AS grp, unnest(string_split(text, ' ')) AS token
+  FROM documents
+), gw AS (
+  SELECT grp, token, CAST(count(*) AS DOUBLE) AS y_sw
+  FROM toks GROUP BY grp, token
+), wtot AS (
+  SELECT token, sum(y_sw) AS y_w FROM gw GROUP BY token
+), gtot AS (
+  SELECT grp, sum(y_sw) AS n_s FROM gw GROUP BY grp
+), ntot AS (
+  SELECT sum(y_w) AS n FROM wtot
+), sc AS (
+  SELECT grp, token, y_sw,
+    (ln((y_sw + a_w) / (n_s + 100.0 - y_sw - a_w))
+     - ln((y_rw + a_w) / (n_r + 100.0 - y_rw - a_w)))
+    / sqrt(1.0 / (y_sw + a_w) + 1.0 / (y_rw + a_w)) AS zraw
+  FROM (
+    SELECT gw.grp, gw.token, y_sw, 100.0 * y_w / n AS a_w,
+      y_w - y_sw AS y_rw, n - n_s AS n_r, n_s
+    FROM gw JOIN wtot USING (token) JOIN gtot USING (grp) CROSS JOIN ntot
+  ) t
+)
+SELECT grp AS source, token, CAST(y_sw AS BIGINT) AS n_in_group,
+  round(zraw, 6) AS log_odds_z, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY grp ORDER BY zraw DESC, token ASC) AS rnk
+  FROM sc
+) r
+WHERE rnk <= 10
+""")
+def _log_odds_terms(spark, sf_dir):
+    """Distinctive terms per source: Dirichlet-prior log-odds z-scores
+    vs the rest of the corpus (functions/text.py::log_odds_terms,
+    Monroe et al. 2008) — one corpus-scale (source, token) count, then
+    vocabulary-scale arithmetic and a per-source ranking window."""
+    return T.log_odds_terms(_docs(spark, sf_dir))
+
+
+@_query("hashing_features", """
+SELECT doc_id,
+  CAST(('0x' || substr(md5(token), 1, 8))::BIGINT % 64 AS BIGINT) AS dim,
+  CAST(sum(CASE WHEN ('0x' || substr(md5(token), 9, 1))::BIGINT % 2 = 0
+           THEN 1 ELSE -1 END) AS BIGINT) AS weight
+FROM (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
+) t
+GROUP BY doc_id, dim
+HAVING weight != 0
+""")
+def _hashing_features(spark, sf_dir):
+    """Feature-hashing vectorizer (functions/text.py::
+    hashing_vectorize): signed md5-bucketed token counts, 64 dims —
+    vocabulary-free sparse features from one explode + one (doc, dim)
+    aggregate; md5-derived buckets keep the oracle bit-identical."""
+    return T.hashing_vectorize(_docs(spark, sf_dir))
+
+
+@_query("adamic_adar_links", ORACLE_BASE + ITEM_SIMS_SQL + """
+, both_dirs AS (
+  SELECT ia AS z, ib AS nbr, sim AS w FROM sims
+  UNION ALL
+  SELECT ib AS z, ia AS nbr, sim AS w FROM sims
+), adeg AS (
+  SELECT z, count(*) AS deg FROM both_dirs GROUP BY z
+), capped AS (
+  SELECT z, nbr FROM (
+    SELECT z, nbr,
+      row_number() OVER (PARTITION BY z ORDER BY w DESC, nbr ASC) AS r
+    FROM both_dirs) t
+  WHERE r <= 6
+), wedges AS (
+  SELECT l.nbr AS a, r.nbr AS b,
+    CAST(round(1.0 / ln(CAST(deg AS DOUBLE)), 9) AS DECIMAL(18,9)) AS c
+  FROM capped l
+  JOIN capped r ON l.z = r.z AND l.nbr < r.nbr
+  JOIN adeg ON adeg.z = l.z
+), aa_scored AS (
+  SELECT a, b, sum(c) AS aa_dec FROM wedges GROUP BY a, b
+), new_links AS (
+  SELECT a, b, aa_dec FROM aa_scored s
+  WHERE NOT EXISTS (
+    SELECT 1 FROM pcounts p WHERE p.ia = s.a AND p.ib = s.b)
+)
+SELECT CAST(a AS BIGINT) AS item_a, CAST(b AS BIGINT) AS item_b,
+  round(CAST(aa_dec AS DOUBLE), 6) AS aa_score, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (ORDER BY aa_dec DESC, a, b) AS rnk
+  FROM new_links) t
+WHERE rnk <= 20
+""")
+def _adamic_adar_links(spark, sf_dir):
+    """Adamic–Adar link prediction over the item co-occurrence graph
+    (operators/graph.py::adamic_adar_links): top-20 NOT-yet-linked
+    item pairs by Σ 1/ln(deg) over common neighbors, wedges enumerated
+    through each node's 6 strongest edges (hub-capped fan-out);
+    contributions summed in exact DECIMAL. Rides the persisted
+    item-similarity pair table."""
+    from recmetrics_pyspark_spark.operators.graph import adamic_adar_links
+
+    inter = R.interactions(spark, sf_dir)
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    return adamic_adar_links(pairs, col_w="sim")
+
+
+@_query("ips_offline_eval", ORACLE_BASE + """
+, pop AS (
+  SELECT item_id, count(*) AS n_i FROM interactions GROUP BY item_id
+), ntot AS (
+  SELECT count(*) AS n_all FROM interactions
+), j AS (
+  SELECT CAST(i.rating AS DECIMAL(9,3)) AS r,
+    CAST(round((CASE WHEN rec.item_id IS NOT NULL THEN 1 ELSE 0 END)
+      / (CAST(10 AS DOUBLE) * (p.n_i / n.n_all)), 9)
+      AS DECIMAL(18,9)) AS w
+  FROM interactions i
+  JOIN pop p ON i.item_id = p.item_id
+  CROSS JOIN ntot n
+  LEFT JOIN recs rec
+    ON i.user_id = rec.user_id AND i.item_id = rec.item_id
+)
+SELECT CAST(count(*) AS BIGINT) AS n_logs,
+  round(avg(CASE WHEN w > 0 THEN 1.0 ELSE 0.0 END), 6) AS match_rate,
+  round(CAST(sum(w * r) AS DOUBLE) / count(*), 6) AS ips_value,
+  round(CAST(sum(w * r) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 6)
+    AS snips_value
+FROM j
+""")
+def _ips_offline_eval(spark, sf_dir):
+    """Counterfactual IPS/SNIPS offline evaluation of the synthetic
+    top-10 policy against logged purchases
+    (operators/recommend.py::ips_offline_eval): popularity-share
+    propensities, quantity rewards, DECIMAL-exact one-row estimates."""
+    logs = R.interactions(spark, sf_dir, with_rating=True)
+    recs = _synth_recs(spark, sf_dir).select(
+        "user", "item"
+    )
+    return R.ips_offline_eval(logs, recs, k=10)
+
+
+@_query("canonical_docs", _canonical_docs_oracle())
+def _canonical_docs(spark, sf_dir):
+    """Survivor selection per near-dup cluster
+    (operators/dedup.py::canonical_docs): every doc labeled with its
+    component and a canonical flag — highest quality_score wins, ties
+    to lowest id. Detection → decision: filtering is_canonical IS the
+    deduplicated corpus, with the drop decisions auditable. Components
+    come from the _neardup_comps shared build (round-12) — the same
+    table the declared neardup_components query returns."""
+    return D.canonical_docs(
+        _docs(spark, sf_dir), comps=_neardup_comps(spark, sf_dir)
+    )
+
+
+@_query("weighted_sample", """
+SELECT doc_id, lang, weight, priority, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT doc_id, lang, weight, priority,
+    row_number() OVER (
+      PARTITION BY lang ORDER BY priority DESC, doc_id ASC) AS rnk
+  FROM (
+    SELECT doc_id, lang, n_chars AS weight,
+      round(exp(ln(
+        (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+         + 1.0) / 4294967296.0)
+        / CAST(n_chars AS DOUBLE)), 9) AS priority
+    FROM documents) p
+) r
+WHERE rnk <= 25
+""")
+def _weighted_sample(spark, sf_dir):
+    """Per-language weighted sample without replacement, 25 docs per
+    stratum with inclusion ∝ n_chars (functions/curation.py::
+    weighted_sample, Efraimidis–Spirakis priority keys; md5-uniform,
+    RNG-free, repartition-stable)."""
+    return C.weighted_sample(
+        _docs(spark, sf_dir), n=25, col_weight="n_chars",
+        col_stratum="lang",
+    )
+
+
+@_query("langid_confusion", f"""
+WITH pred AS (
+  SELECT doc_id,
+    CASE WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+         WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
+         WHEN s_de >= s_fr THEN 'de'
+         ELSE 'fr' END AS lang_pred
+  FROM (
+    SELECT doc_id,
+      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_EN)})) AS s_en,
+      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_ES)})) AS s_es,
+      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_DE)})) AS s_de,
+      len(list_filter(toks, x -> x IN {_sqlset(T.LEX_FR)})) AS s_fr
+    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents))
+), cells AS (
+  SELECT d.lang AS lang_true, p.lang_pred,
+    CAST(count(*) AS BIGINT) AS n_docs
+  FROM documents d JOIN pred p ON d.doc_id = p.doc_id
+  GROUP BY d.lang, p.lang_pred
+)
+SELECT lang_true, lang_pred, n_docs,
+  round(n_docs / CAST(sum(n_docs) OVER (PARTITION BY lang_true)
+    AS DOUBLE), 6) AS recall
+FROM cells
+""")
+def _langid_confusion(spark, sf_dir):
+    """Declared-vs-detected language confusion matrix with per-true-
+    language recall (functions/text.py::langid_confusion) — the
+    detector audit run before trusting language routing."""
+    return T.langid_confusion(_docs(spark, sf_dir))
+
+
+@_query("quantile_normalize", """
+WITH cuts AS (
+  SELECT source,
+    quantile_cont(n_chars, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9])
+      AS cuts
+  FROM documents GROUP BY source
+)
+SELECT d.doc_id, d.source, d.n_chars,
+  CAST(len(list_filter(c.cuts, x -> d.n_chars > x)) AS BIGINT) AS qbin
+FROM documents d JOIN cuts c ON d.source = c.source
+""")
+def _quantile_normalize(spark, sf_dir):
+    """Per-source decile of document length (functions/curation.py::
+    quantile_normalize) — cross-source score calibration via exact
+    per-group percentile cutoffs broadcast over the scan; no per-group
+    window sort."""
+    return C.quantile_normalize(_docs(spark, sf_dir))
+
+
+@_query("incremental_neardup", _incr_neardup_oracle())
+def _incremental_neardup(spark, sf_dir):
+    """NEAR-dup classification of an incoming batch (doc_id % 5 = 0)
+    against the accumulated LSH index of the rest
+    (operators/dedup.py::incremental_neardup) — the fuzzy twin of
+    incremental_dedup: only the batch is shingled, the index
+    contributes one bucket join, verification reads signatures only."""
+    docs = _docs(spark, sf_dir)
+    batch = docs.filter("doc_id % 5 = 0")
+    seen = docs.filter("doc_id % 5 != 0")
+    return D.incremental_neardup(batch, D.lsh_index(seen))
+
+
+@_query("duplicated_spans", _DUP_SPANS_CTES + """
+SELECT doc_id, start_tok, end_tok, n_dup_shingles FROM spansf
+""")
+def _duplicated_spans(spark, sf_dir):
+    """Maximal duplicated token spans per document
+    (operators/dedup.py::duplicated_spans) — the span-level signal an
+    exact-substring dedup rewriter consumes; gaps-and-islands run
+    assembly inside document-bounded windows."""
+    return D.duplicated_spans(_docs(spark, sf_dir))
+
+
+# No SQL twin (oracle None, so NO_ORACLE): the float feature pipeline
+# is a Python-side pipeline the driver checks rows-only. The codec lane
+# itself is hash-checked via media_decode_meta.
+@_query("media_features", None)
+def _media_features(spark, sf_dir):
+    # Multimodal pipeline in the graded surface: deterministic synthetic
+    # PPM images scaled by SF, decoded (REAL binary-PPM parse, pure
+    # numpy — no codec library needed) and featurized via Arrow-batched
+    # mapInPandas. Python-side by necessity (codec work) -> rows-only
+    # check; compressed formats would route through PIL when present.
+    from recmetrics_pyspark_spark import multimodal as MM
+
+    n = {"0.001": 64, "0.01": 256, "0.1": 1024}.get(
+        sf_dir.rstrip("/").rsplit("sf", 1)[-1], 64
+    )
+    img = MM.decode_and_featurize(
+        MM.synthetic_media(spark, n=n), resize_to=4
+    )
+    # audio rides the same FEATURE_SCHEMA: REAL RIFF/WAVE PCM16 parse
+    # (pure numpy) -> per-frame RMS + zero-crossing features
+    aud = MM.featurize_audio(
+        MM.synthetic_audio(spark, n=n // 2), n_frames=8
+    )
+    feats = img.unionByName(aud)
+    return feats.select(
+        "media_id",
+        "kind",
+        "n_bytes",
+        F.round(
+            F.aggregate("feature", F.lit(0.0), lambda a, x: a + x)
+            / F.size("feature"),
+            4,
+        ).alias("mean_feature"),
+    )
+
+
+# Recomputes multimodal.py's synthetic-generator closed form:
+# image i is a (32+i%32)x32 PPM whose red channel is
+# (8x+i)%256 (y-independent, so the full sum is 32x the row
+# sum); PPM n_bytes = 13-byte header + 3wh. Audio i is PCM16
+# mono at 8000 Hz, 200+i%300 ms -> 8*(200+i%300) samples,
+# 44-byte RIFF header + 2 bytes/sample. The Spark side gets
+# these numbers by PARSING real payloads; the oracle gets them
+# from arithmetic — a hash match witnesses the decode.
+@_query("media_decode_meta", """
+WITH img AS (
+  SELECT i AS media_id, 32 + i % 32 AS w FROM range(0, 256) t(i)
+), imgm AS (
+  SELECT CAST(media_id AS BIGINT) AS media_id, 'image' AS kind,
+    CAST(13 + 3 * 32 * w AS BIGINT) AS n_bytes,
+    CAST(w AS BIGINT) AS dim_a, CAST(32 AS BIGINT) AS dim_b,
+    CAST(32 * sum((8 * x + media_id) % 256) AS BIGINT) AS sum_r
+  FROM img JOIN range(0, 64) s(x) ON x < w
+  GROUP BY media_id, w
+), aud AS (
+  SELECT CAST(i AS BIGINT) AS media_id, 'audio' AS kind,
+    CAST(44 + 16 * (200 + i % 300) AS BIGINT) AS n_bytes,
+    CAST(8 * (200 + i % 300) AS BIGINT) AS dim_a,
+    CAST(8000 AS BIGINT) AS dim_b,
+    CAST(NULL AS BIGINT) AS sum_r
+  FROM range(0, 128) t(i)
+)
+SELECT * FROM imgm UNION ALL SELECT * FROM aud
+""")
+def _media_decode_meta(spark, sf_dir):
+    """Codec-lane correctness witness (multimodal.py::decode_meta):
+    REAL PPM/WAV parses over mapInPandas, emitting only deterministic
+    integers (decoded dims, payload bytes, exact red-channel sum) that
+    the DuckDB oracle recomputes from the synthetic generator's closed
+    form — so the Python decode path is hash-checked, not rows-only.
+    Row count is FIXED (256 images + 128 audio) at every sf: the
+    payloads are synthetic either way, and a constant n keeps the
+    static oracle SQL valid at every ORACLE_SF_DIR."""
+    from recmetrics_pyspark_spark import multimodal as MM
+
+    img = MM.decode_meta(MM.synthetic_media(spark, n=256))
+    aud = MM.decode_meta(MM.synthetic_audio(spark, n=128))
+    return img.unionByName(aud)
+
+
+@_query("funnel_conversion", """
+WITH s1 AS (
+  SELECT user_id AS u, min(ts) AS t0 FROM events
+  WHERE event_type = 'view' GROUP BY 1
+), s2 AS (
+  SELECT e.user_id AS u, min(e.ts) AS t0 FROM events e
+  JOIN s1 ON e.user_id = s1.u
+  WHERE e.event_type = 'click' AND e.ts >= s1.t0 GROUP BY 1
+), s3 AS (
+  SELECT e.user_id AS u, min(e.ts) AS t0 FROM events e
+  JOIN s2 ON e.user_id = s2.u
+  WHERE e.event_type = 'purchase' AND e.ts >= s2.t0 GROUP BY 1
+), counts AS (
+  SELECT 1 AS step_idx, 'view' AS step,
+    CAST(count(*) AS BIGINT) AS n_users FROM s1
+  UNION ALL SELECT 2, 'click', count(*) FROM s2
+  UNION ALL SELECT 3, 'purchase', count(*) FROM s3
+)
+SELECT step_idx, step, n_users,
+  round(n_users / first_value(n_users) OVER (ORDER BY step_idx), 6)
+    AS rate_from_first,
+  round(n_users / coalesce(lag(n_users) OVER (ORDER BY step_idx),
+                           n_users), 6) AS rate_from_prev
+FROM counts ORDER BY step_idx
+""")
+def _funnel_conversion(spark, sf_dir):
+    """Ordered view→click→purchase funnel over events
+    (operators/funnel.py::funnel_conversion): first-touch step
+    binding, per-step user counts and conversion rates; per-step
+    shrinking user-keyed joins, no windows over the event stream."""
+    from recmetrics_pyspark_spark.operators.funnel import funnel_conversion
+
+    return funnel_conversion(
+        load_table(spark, sf_dir, "events"), ["view", "click", "purchase"]
+    )
+
+
+@_query("cohort_retention", """
+WITH ev AS (
+  SELECT user_id AS u,
+    CAST(date_trunc('week', ts) AS DATE) AS wk, event_type
+  FROM events
+), cohorts AS (
+  SELECT u, min(wk) AS cohort_week FROM ev
+  WHERE event_type = 'signup' GROUP BY u
+), sizes AS (
+  SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_size
+  FROM cohorts GROUP BY 1
+), j AS (
+  SELECT c.cohort_week,
+    CAST(date_diff('day', c.cohort_week, a.wk) / 7 AS INT)
+      AS week_offset,
+    a.u
+  FROM (SELECT DISTINCT u, wk FROM ev) a JOIN cohorts c USING (u)
+  WHERE date_diff('day', c.cohort_week, a.wk) BETWEEN 0 AND 56
+)
+SELECT CAST(j.cohort_week AS VARCHAR) AS cohort_week, j.week_offset,
+  CAST(count(DISTINCT j.u) AS BIGINT) AS n_active,
+  s.cohort_size,
+  round(count(DISTINCT j.u) / s.cohort_size, 6) AS retention
+FROM j JOIN sizes s ON j.cohort_week = s.cohort_week
+GROUP BY j.cohort_week, j.week_offset, s.cohort_size
+ORDER BY 1, 2
+""")
+def _cohort_retention(spark, sf_dir):
+    """Weekly signup-cohort retention matrix
+    (operators/funnel.py::cohort_retention): activity collapses to
+    user-week grain before the cohort join; output is cohorts ×
+    offsets, calendar-bounded."""
+    from recmetrics_pyspark_spark.operators.funnel import cohort_retention
+
+    out = cohort_retention(load_table(spark, sf_dir, "events"))
+    # ISO string for the compare harness: pandas renders a DuckDB DATE
+    # as a midnight Timestamp, but a Spark DateType as datetime.date
+    return out.withColumn(
+        "cohort_week", F.col("cohort_week").cast("string")
+    )
+
+
+@_query("doc_perplexity", _DOC_PPLX_SQL)
+def _doc_perplexity(spark, sf_dir):
+    """Self-scored bigram cross-entropy per document
+    (functions/text.py::doc_perplexity): the in-corpus analogue of
+    CCNet's perplexity filter; DECIMAL-exact bit sums, LM join is
+    vocabulary-keyed."""
+    return T.doc_perplexity(_docs(spark, sf_dir))
+
+
+@_query("dsir_importance", """
+WITH tb AS (
+  SELECT doc_id, lang,
+    ('0x' || substr(md5(token), 1, 8))::BIGINT % 64 AS b
+  FROM (SELECT doc_id, lang,
+          unnest(string_split(text, ' ')) AS token FROM documents)
+), raw AS (
+  SELECT b, count(*) AS r_b FROM tb GROUP BY 1
+), tgt AS (
+  SELECT b, count(*) AS t_b FROM tb WHERE lang = 'en' GROUP BY 1
+), tot AS (
+  SELECT count(*) AS r_total,
+    sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_total
+  FROM tb
+), lr AS (
+  SELECT raw.b,
+    CAST(round(
+      log2((coalesce(t_b, 0) + 1) / CAST(t_total + 64 AS DOUBLE))
+      - log2((r_b + 1) / CAST(r_total + 64 AS DOUBLE)), 9)
+      AS DECIMAL(18,9)) AS lr
+  FROM raw LEFT JOIN tgt USING (b) CROSS JOIN tot
+)
+SELECT t.doc_id, t.lang, CAST(count(*) AS BIGINT) AS n_tokens,
+  round(CAST(sum(l.lr) AS DOUBLE) / count(*), 6) AS avg_log_ratio
+FROM tb t JOIN lr l USING (b)
+GROUP BY t.doc_id, t.lang
+""")
+def _dsir_importance(spark, sf_dir):
+    """DSIR hashed-ngram importance weights toward the English slice
+    (functions/curation.py::dsir_importance): bucket log-ratios are
+    64-row broadcasts; one corpus-scale shuffle."""
+    return C.dsir_importance(_docs(spark, sf_dir))
+
+
+@_query("ann_recall_report", _ann_recall_oracle())
+def _ann_recall_report(spark, sf_dir):
+    """Witnessed ANN quality: per-query recall@10 of the LSH
+    multi-probe path against the exact brute-force top-k — the driver
+    twin of tests/test_ann_recall.py's gates, so retrieval QUALITY
+    (not just result determinism) carries an oracle row. Left-joining
+    the exact set against the approximate set is output-scale work
+    (|Q|·k rows). Exact side from the _ann_truth shared build."""
+    embs = _embs(spark, sf_dir)
+    qset = embs.filter(F.col("vec_id") < 5)
+    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
+    approx = S.ann_lsh_topk(embs, qset, k=10).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
+    )
+    return (
+        exact.join(approx, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
+                "n_hit"
+            ),
+        )
+        .select(
+            "query_id",
+            "n_exact",
+            "n_hit",
+            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
+                "recall_at_10"
+            ),
+        )
+    )
+
+
+@_query("common_neighbor_links", ORACLE_BASE + ITEM_SIMS_SQL + """
+, both_dirs AS (
+  SELECT ia AS z, ib AS nbr, sim AS w FROM sims
+  UNION ALL
+  SELECT ib AS z, ia AS nbr, sim AS w FROM sims
+), adeg AS (
+  SELECT z, count(*) AS deg FROM both_dirs GROUP BY z
+), capped AS (
+  SELECT z, nbr FROM (
+    SELECT z, nbr,
+      row_number() OVER (PARTITION BY z ORDER BY w DESC, nbr ASC) AS r
+    FROM both_dirs) t
+  WHERE r <= 6
+), cn_scored AS (
+  SELECT l.nbr AS a, r.nbr AS b, CAST(count(*) AS BIGINT) AS n_common_nbrs
+  FROM capped l
+  JOIN capped r ON l.z = r.z AND l.nbr < r.nbr
+  GROUP BY l.nbr, r.nbr
+), new_links AS (
+  SELECT s.a, s.b, s.n_common_nbrs,
+    round(s.n_common_nbrs
+      / CAST(da.deg + db.deg - s.n_common_nbrs AS DOUBLE), 6)
+      AS jaccard_nbrs
+  FROM cn_scored s
+  JOIN adeg da ON da.z = s.a
+  JOIN adeg db ON db.z = s.b
+  WHERE NOT EXISTS (
+    SELECT 1 FROM pcounts p WHERE p.ia = s.a AND p.ib = s.b)
+)
+SELECT CAST(a AS BIGINT) AS item_a, CAST(b AS BIGINT) AS item_b,
+  n_common_nbrs, jaccard_nbrs, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (
+    ORDER BY n_common_nbrs DESC, jaccard_nbrs DESC, a, b) AS rnk
+  FROM new_links) t
+WHERE rnk <= 20
+""")
+def _common_neighbor_links(spark, sf_dir):
+    """Common-neighbors/Jaccard link prediction over the item
+    co-occurrence graph (operators/graph.py::common_neighbor_links):
+    the counting twin of adamic_adar_links — exact-integer scores, the
+    same hub-capped wedge enumeration, riding the same persisted
+    item-similarity pair table."""
+    from recmetrics_pyspark_spark.operators.graph import (
+        common_neighbor_links,
+    )
+
+    inter = R.interactions(spark, sf_dir)
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    return common_neighbor_links(pairs, col_w="sim")
+
+
+@_query("rfm_segments", """
+WITH per AS (
+  SELECT o_custkey, max(o_orderdate) AS last_order,
+    CAST(count(*) AS BIGINT) AS frequency,
+    sum(CAST(o_totalprice AS DECIMAL(18,6))) AS m_dec
+  FROM orders GROUP BY 1
+), mx AS (SELECT max(o_orderdate) AS max_date FROM orders),
+rfm AS (
+  SELECT date_diff('day', last_order, max_date) AS recency_days,
+    frequency, round(CAST(m_dec AS DOUBLE), 2) AS monetary, m_dec
+  FROM per CROSS JOIN mx
+), cuts AS (
+  SELECT quantile_cont(recency_days, [0.2, 0.4, 0.6, 0.8]) AS rc,
+    quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]) AS fc,
+    quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]) AS mc
+  FROM rfm
+), binned AS (
+  SELECT
+    CAST(len(list_filter(c.rc, x -> r.recency_days > x)) AS INT)
+      AS r_bin,
+    CAST(len(list_filter(c.fc, x -> r.frequency > x)) AS INT)
+      AS f_bin,
+    CAST(len(list_filter(c.mc, x -> r.monetary > x)) AS INT)
+      AS m_bin,
+    r.m_dec
+  FROM rfm r CROSS JOIN cuts c
+)
+SELECT r_bin, f_bin, m_bin,
+  CAST(count(*) AS BIGINT) AS n_customers,
+  round(CAST(sum(m_dec) AS DOUBLE) / count(*), 6) AS avg_monetary
+FROM binned GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+""")
+def _rfm_segments(spark, sf_dir):
+    """RFM customer segmentation over orders
+    (operators/funnel.py::rfm_segments): quintile bins from one
+    broadcast percentile row, scan-side array binning, DECIMAL-exact
+    spend sums."""
+    from recmetrics_pyspark_spark.operators.funnel import rfm_segments
+
+    return rfm_segments(load_table(spark, sf_dir, "orders"))
+
+
+@_query("conversion_latency", """
+WITH fa AS (
+  SELECT user_id AS u, min(ts) AS t0 FROM events
+  WHERE event_type = 'view' GROUP BY 1
+), lat AS (
+  SELECT date_diff('second', x.t0, min(e.ts)) AS latency_sec
+  FROM fa x JOIN events e ON e.user_id = x.u
+  WHERE e.event_type = 'purchase' AND e.ts >= x.t0
+  GROUP BY x.u, x.t0
+)
+SELECT CAST(count(*) AS BIGINT) AS n_converted,
+  round(quantile_cont(latency_sec, 0.25), 6) AS p25,
+  round(quantile_cont(latency_sec, 0.5), 6) AS p50,
+  round(quantile_cont(latency_sec, 0.75), 6) AS p75,
+  round(quantile_cont(latency_sec, 0.9), 6) AS p90,
+  round(CAST(sum(CAST(latency_sec AS DECIMAL(18,6))) AS DOUBLE)
+        / count(*), 6) AS mean_sec
+FROM lat
+""")
+def _conversion_latency(spark, sf_dir):
+    """View-to-purchase time-to-convert distribution
+    (operators/funnel.py::conversion_latency): one-row exact-percentile
+    summary over user-scale integer latencies; DECIMAL-exact mean."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        conversion_latency,
+    )
+
+    return conversion_latency(load_table(spark, sf_dir, "events"))
+
+
+@_query("user_erasure_audit", """
+WITH eids AS (
+  SELECT c_custkey AS eid FROM customer WHERE c_custkey % 97 = 0
+), delo AS (
+  SELECT o_orderkey FROM orders
+  WHERE o_custkey IN (SELECT eid FROM eids)
+), c AS (
+  SELECT 'customer' AS table_name,
+    CAST(count(*) AS BIGINT) AS n_before,
+    CAST(sum(CASE WHEN c_custkey IN (SELECT eid FROM eids)
+             THEN 1 ELSE 0 END) AS BIGINT) AS n_deleted
+  FROM customer
+), o AS (
+  SELECT 'orders',
+    CAST(count(*) AS BIGINT),
+    CAST(sum(CASE WHEN o_custkey IN (SELECT eid FROM eids)
+             THEN 1 ELSE 0 END) AS BIGINT)
+  FROM orders
+), l AS (
+  SELECT 'lineitem',
+    CAST(count(*) AS BIGINT),
+    CAST(sum(CASE WHEN l_orderkey IN (SELECT o_orderkey FROM delo)
+             THEN 1 ELSE 0 END) AS BIGINT)
+  FROM lineitem
+), u AS (
+  SELECT * FROM c UNION ALL SELECT * FROM o UNION ALL SELECT * FROM l
+)
+SELECT table_name, n_before, n_deleted,
+  n_before - n_deleted AS n_after,
+  CAST(0 AS BIGINT) AS residual_refs
+FROM u
+""")
+def _user_erasure_audit(spark, sf_dir):
+    """GDPR erasure-cascade audit (operators/cdc.py::
+    user_erasure_audit): deterministic deletion set (c_custkey %% 97
+    == 0), cascade customer -> orders -> lineitem; the oracle pins the
+    computed residual_refs at zero."""
+    from recmetrics_pyspark_spark.operators.cdc import user_erasure_audit
+
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    erase = cust.filter(F.col("c_custkey") % 97 == 0).select("c_custkey")
+    return user_erasure_audit(cust, orders, li, erase)
+
+
+@_query("split_leakage_audit", """
+WITH tagged AS (
+  SELECT md5(text) AS content_hash,
+    CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+              ::BIGINT % 10 < 8
+         THEN 'train' ELSE 'eval' END AS split
+  FROM documents
+), per_hash AS (
+  SELECT content_hash, CAST(count(*) AS BIGINT) AS n_docs,
+    max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS in_train,
+    max(CASE WHEN split = 'eval' THEN 1 ELSE 0 END) AS in_eval
+  FROM tagged GROUP BY content_hash
+)
+SELECT CASE WHEN in_train = 1 AND in_eval = 1 THEN 'leaked'
+            WHEN in_train = 1 THEN 'train_only'
+            ELSE 'eval_only' END AS status,
+  CAST(count(*) AS BIGINT) AS n_hashes,
+  CAST(sum(n_docs) AS BIGINT) AS n_docs
+FROM per_hash GROUP BY 1 ORDER BY 1
+""")
+def _split_leakage_audit(spark, sf_dir):
+    """Train/eval contamination audit for the hash split
+    (functions/curation.py::split_leakage_audit): distinct content
+    hashes by boundary status; 'leaked' counts exact dups straddling
+    the split."""
+    return C.split_leakage_audit(_docs(spark, sf_dir))
+
+
+@_query("daily_anomaly_events", """
+WITH daily AS (
+  SELECT event_type AS key, CAST(ts AS DATE) AS day,
+    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
+  FROM events GROUP BY 1, 2
+), base AS (
+  SELECT key, day, round(v, 6) AS v,
+    round(avg(v) OVER w, 6) AS base_mean,
+    round(stddev_samp(v) OVER w, 6) AS base_std
+  FROM daily
+  WINDOW w AS (PARTITION BY key ORDER BY day
+               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
+)
+SELECT key, CAST(day AS VARCHAR) AS day, v, base_mean, base_std,
+  round((v - base_mean) / base_std, 6) AS z_score,
+  abs(round((v - base_mean) / base_std, 6)) >= 2.0 AS is_anomaly
+FROM base
+WHERE base_std IS NOT NULL AND base_std > 0
+ORDER BY 1, 2
+""")
+def _daily_anomaly_events(spark, sf_dir):
+    """Trailing-7-day z-score anomaly monitor per event type
+    (operators/timeseries.py::trailing_window_anomaly): baseline
+    excludes the current day; day-scale windows only."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        trailing_window_anomaly,
+    )
+
+    ev = load_table(spark, sf_dir, "events")
+    return trailing_window_anomaly(ev, "event_type", "ts", "value")
+
+
+@_query("skipgram_pairs", """
+WITH t AS (
+  SELECT DISTINCT o_custkey AS u, o_orderdate AS dt,
+    o_orderkey AS ok, l_partkey AS it
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+), seq AS (
+  SELECT u, it, row_number() OVER (
+    PARTITION BY u ORDER BY dt, ok, it) AS pos
+  FROM t
+), pairs AS (
+  SELECT a.it AS center, b.it AS context,
+    CAST(count(*) AS BIGINT) AS n_cooc
+  FROM seq a JOIN seq b
+    ON a.u = b.u AND b.pos <> a.pos AND abs(a.pos - b.pos) <= 2
+  GROUP BY 1, 2
+)
+SELECT CAST(center AS BIGINT) AS center,
+  CAST(context AS BIGINT) AS context, n_cooc,
+  CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (
+    ORDER BY n_cooc DESC, center, context) AS rnk
+  FROM pairs) q
+WHERE rnk <= 200
+""")
+def _skipgram_pairs(spark, sf_dir):
+    """item2vec skip-gram pair distribution
+    (operators/recommend.py::skipgram_pairs): directed co-occurrence
+    counts within a +/-2 position window of each customer's purchase
+    sequence — one bounded-frame window, no positional self-join."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    timed = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(
+            F.col("o_custkey").alias("user"),
+            F.col("o_orderdate").alias("dt"),
+            F.col("o_orderkey").alias("ok"),
+            F.col("l_partkey").alias("item"),
+        )
+        .distinct()
+    )
+    return R.skipgram_pairs(timed)
+
+
+@_query("wow_trending", """
+WITH weekly AS (
+  SELECT user_id AS key,
+    CAST(date_trunc('week', ts) AS DATE) AS wk,
+    CAST(count(*) AS BIGINT) AS n
+  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
+), scored AS (
+  SELECT key, CAST(wk AS VARCHAR) AS week, n,
+    n - lag(n) OVER (PARTITION BY key ORDER BY wk) AS delta,
+    round(CAST(n AS DOUBLE)
+          / lag(n) OVER (PARTITION BY key ORDER BY wk), 6) AS ratio
+  FROM weekly
+)
+SELECT key, week, n, delta, ratio, CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (
+    ORDER BY abs(delta) DESC, key, week) AS rnk
+  FROM scored WHERE delta IS NOT NULL) t
+WHERE rnk <= 20
+""")
+def _wow_trending(spark, sf_dir):
+    """Week-over-week trending users by purchase count
+    (operators/funnel.py::wow_trending): lag over the key-week
+    aggregate, exact integer deltas, global top-k."""
+    from recmetrics_pyspark_spark.operators.funnel import wow_trending
+
+    return wow_trending(load_table(spark, sf_dir, "events"))
+
+
+@_query("churn_training_set", """
+WITH b AS (
+  SELECT max(ts) AS max_ts, max(ts) - INTERVAL 7 DAY AS cutoff
+  FROM events
+), feats AS (
+  SELECT e.user_id AS u,
+    CAST(count(*) AS BIGINT) AS n_events,
+    CAST(sum(CASE WHEN e.event_type = 'purchase' THEN 1 ELSE 0 END)
+         AS BIGINT) AS n_purchases,
+    CAST(count(DISTINCT CAST(e.ts AS DATE)) AS BIGINT)
+      AS n_active_days,
+    CAST(date_diff('day', CAST(max(e.ts) AS DATE),
+                   CAST(max(b.cutoff) AS DATE)) AS INT)
+      AS recency_days
+  FROM events e CROSS JOIN b
+  WHERE e.ts < b.cutoff GROUP BY 1
+), post AS (
+  SELECT DISTINCT e.user_id AS u FROM events e CROSS JOIN b
+  WHERE e.ts >= b.cutoff
+)
+SELECT f.u AS user_id, n_events, n_purchases, n_active_days,
+  recency_days, (p.u IS NULL) AS churned
+FROM feats f LEFT JOIN post p USING (u) ORDER BY 1
+""")
+def _churn_training_set(spark, sf_dir):
+    """Leakage-safe churn training set (operators/funnel.py::
+    churn_training_set): pre-cutoff features, post-cutoff label,
+    7-day horizon; exact integers only."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        churn_training_set,
+    )
+
+    return churn_training_set(load_table(spark, sf_dir, "events"))
+
+
+@_query("containment_pairs", """
+WITH d AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), sh0 AS (
+  SELECT DISTINCT doc_id,
+    array_to_string(list_slice(toks, i, i+2), ' ') AS s
+  FROM d, unnest(generate_series(1, greatest(len(toks)-2, 1))) AS u(i)
+), sh AS (
+  SELECT sh0.doc_id, sh0.s FROM sh0
+  JOIN (SELECT s FROM sh0 GROUP BY s HAVING count(*) <= 1000) keep
+    USING (s)
+), sizes AS (
+  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+  CAST(count(*) AS BIGINT) AS n_inter,
+  round(count(*) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6)
+    AS containment,
+  round(count(*) / CAST(sa.n_sh + sb.n_sh - count(*) AS DOUBLE), 6)
+    AS jaccard
+FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+JOIN sizes sa ON a.doc_id = sa.doc_id
+JOIN sizes sb ON b.doc_id = sb.doc_id
+GROUP BY 1, 2, sa.n_sh, sb.n_sh
+HAVING round(count(*) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6)
+       >= 0.6
+""")
+def _containment_pairs(spark, sf_dir):
+    """Near-superset pairs (operators/dedup.py::containment_pairs):
+    containment = |A∩B| / min(|A|,|B|) over the df-capped shingle
+    universe — catches quoted-inclusion duplicates symmetric Jaccard
+    misses; same inverted-index plan as ngram_jaccard_pairs."""
+    return D.containment_pairs(_docs(spark, sf_dir), threshold=0.6)
+
+
+@_query("sequential_rules", """
+WITH firsts AS (
+  SELECT o_custkey AS u, l_partkey AS it, min(o_orderdate) AS t
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  GROUP BY 1, 2
+), capped AS (
+  SELECT u, it, t FROM (
+    SELECT u, it, t,
+      row_number() OVER (PARTITION BY u ORDER BY t, it) AS r
+    FROM firsts) q
+  WHERE r <= 20
+), nu AS (SELECT count(DISTINCT u) AS n_users FROM capped),
+adopters AS (
+  SELECT it, CAST(count(*) AS BIGINT) AS n_adopt FROM capped GROUP BY 1
+), pairs AS (
+  SELECT a.it AS ant, b.it AS cons,
+    CAST(count(*) AS BIGINT) AS n_ab
+  FROM capped a JOIN capped b ON a.u = b.u AND a.t < b.t
+  GROUP BY 1, 2
+  HAVING count(*) >= 2
+)
+SELECT CAST(ant AS BIGINT) AS antecedent,
+  CAST(cons AS BIGINT) AS consequent, n_ab,
+  round(n_ab / CAST(na.n_adopt AS DOUBLE), 6) AS confidence,
+  round((n_ab * nu.n_users)
+        / CAST(na.n_adopt * nb.n_adopt AS DOUBLE), 6) AS lift,
+  CAST(rnk AS BIGINT) AS rnk
+FROM (
+  SELECT *, row_number() OVER (
+    ORDER BY n_ab DESC, ant, cons) AS rnk
+  FROM pairs) p
+JOIN adopters na ON p.ant = na.it
+JOIN adopters nb ON p.cons = nb.it
+CROSS JOIN nu
+WHERE rnk <= 50
+""")
+def _sequential_rules(spark, sf_dir):
+    """Directed A-then-B purchase rules
+    (operators/recommend.py::sequential_rules): first-adoption times
+    per (customer, part), strictly-later pairs, per-user sequence
+    capped at 20 earliest adoptions; integer-ratio confidence/lift."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    timed = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        F.col("o_custkey").alias("user"),
+        F.col("o_orderdate").alias("dt"),
+        F.col("l_partkey").alias("item"),
+    )
+    return R.sequential_rules(timed)
+
+
+@_query("user_behavior_entropy", ORACLE_BASE + """
 , ui AS (
   SELECT user_id AS u, item_id AS i, CAST(count(*) AS BIGINT) AS n_ui
   FROM interactions GROUP BY 1, 2
@@ -10079,8 +8239,16 @@ FROM (
   SELECT *, row_number() OVER (ORDER BY h_dec DESC, u) AS rnk
   FROM hd) t
 WHERE rnk <= 20
-""",
-        "ucb_arm_stats": """
+""")
+def _user_behavior_entropy(spark, sf_dir):
+    """Per-user Shannon entropy of the item distribution
+    (operators/metrics.py::user_behavior_entropy): top-20 most diverse
+    users over the shared interactions table; DECIMAL-exact
+    contribution sums rank-stable across engines."""
+    return M.user_behavior_entropy(R.interactions(spark, sf_dir))
+
+
+@_query("ucb_arm_stats", """
 WITH armed AS (
   SELECT ('0x' || substr(md5('bandit1|' || CAST(user_id AS VARCHAR)),
                          1, 8))::BIGINT % 4 AS arm,
@@ -10100,8 +8268,19 @@ SELECT arm, n_pulls, n_total,
   round(mean_r9
         + round(sqrt(2.0 * ln(n_total) / n_pulls), 9), 6) AS ucb1
 FROM tot ORDER BY arm
-""",
-        "item_trend_slope": """
+""")
+def _ucb_arm_stats(spark, sf_dir):
+    """Batch UCB1 bandit readout over events
+    (operators/experiment.py::ucb_arm_stats): 4 md5-salted arms,
+    pulls/mean reward/UCB1 index per arm; one arm-keyed aggregate,
+    N via an arm-scale window — zero driver actions."""
+    from recmetrics_pyspark_spark.operators.experiment import ucb_arm_stats
+
+    ev = load_table(spark, sf_dir, "events")
+    return ucb_arm_stats(ev, "user_id", "value", salt="bandit1", n_arms=4)
+
+
+@_query("item_trend_slope", """
 WITH daily AS (
   SELECT l_partkey AS key, o_orderdate AS d,
     CAST(count(*) AS BIGINT) AS y
@@ -10126,8 +8305,26 @@ FROM (
   SELECT *, row_number() OVER (ORDER BY slope DESC, key) AS rnk
   FROM sl WHERE slope IS NOT NULL) t
 WHERE rnk <= 20
-""",
-        "prefix_dedup": """
+""")
+def _item_trend_slope(spark, sf_dir):
+    """Top-20 steepest-rising parts by OLS slope of daily order-line
+    counts (operators/timeseries.py::trend_slope_topk): exact BIGINT
+    Σx/Σy/Σxy/Σx² per part, one closed-form division."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        trend_slope_topk,
+    )
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    daily = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    return trend_slope_topk(daily, "l_partkey", "o_orderdate")
+
+
+@_query("prefix_dedup", """
 WITH p AS (
   SELECT doc_id, source,
     md5(array_to_string(
@@ -10144,8 +8341,16 @@ FROM (
   SELECT *, row_number() OVER (ORDER BY n_docs DESC, keeper) AS rnk
   FROM g) t
 WHERE rnk <= 50
-""",
-        "ngram_novelty_by_source": _DOC_BASE + """
+""")
+def _prefix_dedup(spark, sf_dir):
+    """Shared-prefix boilerplate groups over documents
+    (operators/dedup.py::prefix_dedup): first-4-token md5 groups with
+    ≥2 docs, keeper + distinct-source counts, one hash-keyed
+    aggregate."""
+    return D.prefix_dedup(_docs(spark, sf_dir), k_tokens=4)
+
+
+@_query("ngram_novelty_by_source", _DOC_BASE + """
 , fs AS (
   SELECT s, min(doc_id) AS first_doc FROM sh GROUP BY s
 ), pd AS (
@@ -10162,8 +8367,16 @@ SELECT dd.source AS source, CAST(count(*) AS BIGINT) AS n_docs,
   round(CAST(sum(novelty_dec) AS DOUBLE) / count(*), 6) AS avg_novelty
 FROM nov JOIN documents dd USING (doc_id)
 GROUP BY dd.source ORDER BY source
-""",
-        "repurchase_intervals": """
+""")
+def _ngram_novelty_by_source(spark, sf_dir):
+    """Per-source first-seen 3-gram novelty
+    (operators/dedup.py::ngram_novelty_by_source): fraction of
+    shingles each doc introduces (min-doc-id credit), averaged per
+    source over the shared shingle table."""
+    return D.ngram_novelty_by_source(_docs(spark, sf_dir))
+
+
+@_query("repurchase_intervals", """
 WITH ud AS (
   SELECT DISTINCT o_custkey AS u, l_partkey AS i, o_orderdate AS d
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -10185,9 +8398,30 @@ FROM (
     ORDER BY n_repurchases DESC, item) AS rnk
   FROM agg) t
 WHERE rnk <= 20
-""",
-        # --- round-5 late additions
-        "daily_acf_events": """
+""")
+def _repurchase_intervals(spark, sf_dir):
+    """Per-part repurchase cadence (operators/funnel.py::
+    repurchase_intervals): day gaps between a customer's consecutive
+    purchases of the same part; top-20 parts by repurchase volume
+    with exact mean and interpolated median gaps."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        repurchase_intervals,
+    )
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    purchases = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    return repurchase_intervals(
+        purchases, col_user="o_custkey", col_item="l_partkey",
+        col_date="o_orderdate",
+    )
+
+
+@_query("daily_acf_events", """
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS y
   FROM events GROUP BY 1
@@ -10208,8 +8442,20 @@ WITH daily AS (
 SELECT CAST(k AS INT) AS k, n_pairs,
   round(CAST(sk AS DOUBLE) / nullif(CAST(s0 AS DOUBLE), 0), 6) AS acf
 FROM num CROSS JOIN den ORDER BY k
-""",
-        "cohort_ltv": """
+""")
+def _daily_acf_events(spark, sf_dir):
+    """Lag-1..7 autocorrelation of the daily event-count series
+    (operators/timeseries.py::daily_autocorrelation): corpus collapses
+    to day grain; lag pairing is a ×7 explode equi-join, never a
+    date-range self-join; DECIMAL-exact cross-product sums."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        daily_autocorrelation,
+    )
+
+    return daily_autocorrelation(load_table(spark, sf_dir, "events"))
+
+
+@_query("cohort_ltv", """
 WITH ev AS (
   SELECT user_id AS u,
     CAST(date_trunc('week', ts) AS DATE) AS wk, event_type, value
@@ -10247,8 +8493,20 @@ SELECT CAST(c2.cohort_week AS VARCHAR) AS cohort_week, week_offset,
   round(CAST(cum AS DOUBLE) / cohort_size, 6) AS ltv_per_user
 FROM c2 JOIN sizes s ON c2.cohort_week = s.cohort_week
 ORDER BY 1, 2
-""",
-        "ab_power_mde": """
+""")
+def _cohort_ltv(spark, sf_dir):
+    """Weekly-cohort cumulative revenue / LTV curve
+    (operators/funnel.py::cohort_ltv): revenue collapses to
+    (user, week) grain before the cohort join; DECIMAL running sums."""
+    from recmetrics_pyspark_spark.operators.funnel import cohort_ltv
+
+    out = cohort_ltv(load_table(spark, sf_dir, "events"))
+    return out.withColumn(
+        "cohort_week", F.col("cohort_week").cast("string")
+    )
+
+
+@_query("ab_power_mde", """
 WITH unit AS (
   SELECT user_id,
     CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS v
@@ -10282,8 +8540,20 @@ FROM (
         / nullif(b.n - 1, 0) AS var_b
     FROM (SELECT * FROM per_arm WHERE arm = 0) a
     CROSS JOIN (SELECT * FROM per_arm WHERE arm = 1) b) t1) t2
-""",
-        "benford_order_totals": """
+""")
+def _ab_power_mde(spark, sf_dir):
+    """Minimum detectable effect at 80% power for the running A/B
+    (operators/experiment.py::ab_power_mde): one unit aggregate, one
+    2-row arm aggregate, one-row output."""
+    from recmetrics_pyspark_spark.operators.experiment import ab_power_mde
+
+    return ab_power_mde(
+        load_table(spark, sf_dir, "events"), "user_id", "value",
+        salt="exp1",
+    )
+
+
+@_query("benford_order_totals", """
 WITH d AS (
   SELECT regexp_extract(CAST(o_totalprice AS VARCHAR), '[1-9]', 0)
     AS dgt
@@ -10301,8 +8571,21 @@ SELECT digit, n,
             - round(round(log10(1.0 + 1.0 / digit), 9), 6)), 6)
     AS abs_dev
 FROM t ORDER BY digit
-""",
-        "k_anonymity_customers": """
+""")
+def _benford_order_totals(spark, sf_dir):
+    """Benford first-digit audit of order totals
+    (operators/quality.py::benford_deviation): digit from the STRING
+    form (no log-floor boundary hazard); 9-row output."""
+    from recmetrics_pyspark_spark.operators.quality import (
+        benford_deviation,
+    )
+
+    return benford_deviation(
+        load_table(spark, sf_dir, "orders"), "o_totalprice"
+    )
+
+
+@_query("k_anonymity_customers", """
 WITH g AS (
   SELECT c_nationkey, c_mktsegment, count(*) AS cls
   FROM customer GROUP BY 1, 2
@@ -10316,8 +8599,23 @@ SELECT CAST(5 AS INT) AS k,
   round(CAST(sum(CASE WHEN cls < 5 THEN cls ELSE 0 END) AS DOUBLE)
         / sum(cls), 6) AS risk_fraction
 FROM g
-""",
-        "attribution_time_decay": """
+""")
+def _k_anonymity_customers(spark, sf_dir):
+    """k-anonymity audit of the (nation, market-segment)
+    quasi-identifier projection (operators/quality.py::
+    k_anonymity_audit): one groupBy + one-row class-size reduction."""
+    from recmetrics_pyspark_spark.operators.quality import (
+        k_anonymity_audit,
+    )
+
+    return k_anonymity_audit(
+        load_table(spark, sf_dir, "customer"),
+        ["c_nationkey", "c_mktsegment"],
+        k=5,
+    )
+
+
+@_query("attribution_time_decay", """
 WITH c AS (
   SELECT user_id, event_id AS click_id, ts AS click_ts
   FROM events WHERE event_type = 'click'
@@ -10342,8 +8640,60 @@ SELECT user_id,
   CAST(count(DISTINCT click_id) AS BIGINT) AS n_credited_clicks,
   round(CAST(sum(credit) AS DOUBLE), 6) AS attributed_value
 FROM credited GROUP BY user_id ORDER BY user_id
-""",
-        "centroid_distances": """
+""")
+def _attribution_time_decay(spark, sf_dir):
+    """Multi-touch TIME-DECAY attribution: each purchase's value splits
+    across the user's prior-2h clicks with half-life-30min exponential
+    weights (recency-weighted twin of attribution_linear's equal
+    split). Same band join; weights pre-rounded to DECIMAL(18,9), and
+    per-pair credits to DECIMAL(18,6), so the per-user totals are
+    partial-aggregation-order independent."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", F.col("event_id").alias("p_id"),
+        F.col("ts").alias("p_ts"), F.col("value").alias("p_value"),
+    )
+    pairs = purchases.join(
+        clicks,
+        (purchases.user_id == clicks.user_id)
+        & (F.col("click_ts") <= F.col("p_ts"))
+        & (
+            F.expr("timestampdiff(MICROSECOND, click_ts, p_ts)")
+            <= 7200 * 1_000_000
+        ),
+    ).select(
+        purchases.user_id, "p_id", "p_value", "click_id",
+        F.expr(
+            "CAST(round(power(0.5, timestampdiff(MICROSECOND, click_ts,"
+            " p_ts) / 60e6 / 30.0), 9) AS DECIMAL(18,9))"
+        ).alias("w"),
+    )
+    wsum = pairs.groupBy("p_id").agg(F.sum("w").alias("sw"))
+    credited = pairs.join(wsum, "p_id").select(
+        "user_id",
+        "click_id",
+        F.expr(
+            "CAST(round(p_value * (CAST(w AS DOUBLE)"
+            " / CAST(sw AS DOUBLE)), 6) AS DECIMAL(18,6))"
+        ).alias("credit"),
+    )
+    return (
+        credited.groupBy("user_id")
+        .agg(
+            F.countDistinct("click_id").alias("n_credited_clicks"),
+            F.round(F.sum("credit").cast("double"), 6).alias(
+                "attributed_value"
+            ),
+        )
+        .orderBy("user_id")
+    )
+
+
+@_query("centroid_distances", """
 WITH cents AS (
   SELECT label, i - 1 AS dim_idx, round(avg(v[i]), 6) AS cv
   FROM (SELECT label, embedding::DOUBLE[] AS v FROM embeddings) e,
@@ -10358,8 +8708,15 @@ FROM cents a JOIN cents b USING (dim_idx)
 WHERE a.label < b.label
 GROUP BY a.label, b.label
 ORDER BY label_a, label_b
-""",
-        "heaps_law_docs": """
+""")
+def _centroid_distances(spark, sf_dir):
+    """Pairwise label-centroid distances
+    (operators/similarity.py::centroid_distances): between-class
+    separation over the label×dimension centroid table."""
+    return S.centroid_distances(_embs(spark, sf_dir))
+
+
+@_query("heaps_law_docs", """
 WITH toks AS (
   SELECT doc_id AS id, unnest(string_split(text, ' ')) AS tok
   FROM documents
@@ -10414,15 +8771,237 @@ s AS (
 )
 SELECT bucket, cum_tokens, cum_vocab, heaps_beta
 FROM pts CROSS JOIN fit ORDER BY bucket
-""",
-        "kcore_items": _kcore_oracle(),
-        # until_converged mode lands on the SAME fixed point the
-        # 8-round chain reaches (the peel converges within 8 on every
-        # test corpus — fixture precondition documented on the query),
-        # so the fixed-round CTE chain is its exact expected output
-        "kcore_items_converged": _kcore_oracle(),
-        "pq_distortion": _pq_distortion_oracle(),
-        "degree_distribution": ORACLE_BASE + ITEM_SIMS_SQL + """
+""")
+def _heaps_law_docs(spark, sf_dir):
+    """Vocabulary growth curve + Heaps β
+    (functions/text.py::heaps_law_points): cumulative tokens vs
+    cumulative vocabulary at 10 doc-id cutoffs from ONE pass (token
+    first-seen buckets), log-log OLS fit."""
+    return T.heaps_law_points(_docs(spark, sf_dir))
+
+
+@_query("kcore_items", _kcore_oracle())
+def _kcore_items(spark, sf_dir):
+    """3-core of the item co-occurrence graph
+    (operators/graph.py::k_core_decompose): 8 synchronous peels over
+    the persisted item-pair table; surviving (node, degree) rows —
+    the dense-community extractor. Reads the _kcore_core session
+    memo shared with kcore_items_converged."""
+    return _kcore_core(spark, sf_dir)
+
+
+@_query("corpus_entropy", """
+WITH toks AS (SELECT string_split(text, ' ') AS tk FROM documents),
+uni AS (
+  SELECT tok, count(*) AS n
+  FROM (SELECT unnest(tk) AS tok FROM toks) u GROUP BY tok
+), ut AS (SELECT sum(n) AS tot FROM uni),
+hu AS (
+  SELECT CAST(max(tot) AS BIGINT) AS n_tokens,
+    CAST(count(*) AS BIGINT) AS n_unigrams,
+    sum(CAST(round(-(n / CAST(tot AS DOUBLE))
+                   * log2(n / CAST(tot AS DOUBLE)), 9)
+             AS DECIMAL(18,9))) AS h_uni
+  FROM uni CROSS JOIN ut
+), bi AS (
+  SELECT tk[i] AS tok, tk[i+1] AS nxt, count(*) AS n
+  FROM toks, unnest(generate_series(1, len(tk) - 1)) AS u(i)
+  GROUP BY 1, 2
+), bt AS (SELECT sum(n) AS tot FROM bi),
+hb AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_bigrams,
+    sum(CAST(round(-(n / CAST(tot AS DOUBLE))
+                   * log2(n / CAST(tot AS DOUBLE)), 9)
+             AS DECIMAL(18,9))) AS h_bi
+  FROM bi CROSS JOIN bt
+)
+SELECT n_tokens, n_unigrams, n_bigrams,
+  round(CAST(h_uni AS DOUBLE), 6) AS h_unigram,
+  round(CAST(h_bi AS DOUBLE), 6) AS h_bigram,
+  round(CAST(h_bi - h_uni AS DOUBLE), 6) AS h_cond
+FROM hu CROSS JOIN hb
+""")
+def _corpus_entropy(spark, sf_dir):
+    """Unigram/bigram/conditional entropy rates of the document token
+    stream (functions/text.py::corpus_entropy_rates): DECIMAL-exact
+    contribution sums, one-row output."""
+    return T.corpus_entropy_rates(_docs(spark, sf_dir))
+
+
+@_query("seasonal_decompose_events", """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS d,
+    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS v_dec
+  FROM events WHERE event_type = 'purchase' GROUP BY 1
+), tr AS (
+  SELECT d, v_dec,
+    count(*) OVER w AS n_frame,
+    CAST(sum(v_dec) OVER w AS DECIMAL(18,6)) AS t_sum
+  FROM daily
+  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
+), t2 AS (
+  SELECT d, v_dec,
+    CAST(t_sum AS DOUBLE) / 7.0 AS trend_raw,
+    CAST(round(CAST(v_dec AS DOUBLE) - CAST(t_sum AS DOUBLE) / 7.0, 6)
+         AS DECIMAL(18,6)) AS detr,
+    isodow(d) AS iso_dow
+  FROM tr WHERE n_frame = 7
+), seas AS (
+  SELECT iso_dow, CAST(sum(detr) AS DOUBLE) / count(*) AS seasonal_raw
+  FROM t2 GROUP BY 1
+)
+SELECT CAST(d AS VARCHAR) AS day,
+  round(CAST(v_dec AS DOUBLE), 6) AS value,
+  round(trend_raw, 6) AS trend,
+  round(seasonal_raw, 6) AS seasonal,
+  round(CAST(v_dec AS DOUBLE) - trend_raw - seasonal_raw, 6)
+    AS residual
+FROM t2 JOIN seas USING (iso_dow) ORDER BY day
+""")
+def _seasonal_decompose_events(spark, sf_dir):
+    """Additive trend/seasonal/residual decomposition of daily
+    purchase revenue (operators/timeseries.py::
+    seasonal_decompose_daily): centered-7-day DECIMAL trend, ISO-dow
+    seasonal means, per-day residuals."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        seasonal_decompose_daily,
+    )
+
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    return seasonal_decompose_daily(ev)
+
+
+@_query("pq_distortion", _pq_distortion_oracle())
+def _pq_distortion(spark, sf_dir):
+    """PQ reconstruction-error report per subspace
+    (operators/similarity.py::pq_distortion): mean/max squared
+    assignment distance from the memoized codebooks — the compression
+    quality behind pq_ann_topk's estimates."""
+    return S.pq_distortion(_embs(spark, sf_dir))
+
+
+@_query("shipping_sla_compliance", """
+WITH j AS (
+  SELECT o_orderpriority,
+    CAST(date_diff('day', o_orderdate, l_shipdate) AS BIGINT) AS lag
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+)
+SELECT o_orderpriority,
+  CAST(count(*) AS BIGINT) AS n_lines,
+  round(CAST(sum(CASE WHEN lag <= 7 THEN 1 ELSE 0 END) AS DOUBLE)
+        / count(*), 6) AS pct_within_7d,
+  round(CAST(sum(lag) AS DOUBLE) / count(*), 6) AS avg_lag_days,
+  quantile_cont(lag, 0.9) AS p90_lag_days
+FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority
+""")
+def _shipping_sla_compliance(spark, sf_dir):
+    """Order-to-ship SLA compliance per order priority: line counts,
+    share shipped within 7 days, exact mean lag and interpolated p90 —
+    one fact join + one priority-scale aggregate (integer lags, single
+    double divisions)."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_shipdate"
+    )
+    j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "o_orderpriority",
+        F.datediff("l_shipdate", "o_orderdate").cast("bigint").alias(
+            "lag"
+        ),
+    )
+    return (
+        j.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_lines"),
+            F.round(
+                F.sum(
+                    F.when(F.col("lag") <= 7, 1).otherwise(0)
+                ).cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("pct_within_7d"),
+            F.round(
+                F.sum("lag").cast("double") / F.count(F.lit(1)), 6
+            ).alias("avg_lag_days"),
+            F.expr("percentile(lag, 0.9)").alias("p90_lag_days"),
+        )
+        .orderBy("o_orderpriority")
+    )
+
+
+@_query("source_divergence", """
+WITH toks AS (
+  SELECT source AS src, unnest(string_split(text, ' ')) AS tok
+  FROM documents
+), counts AS (
+  SELECT src, tok, count(*) AS n FROM toks GROUP BY 1, 2
+), totals AS (
+  SELECT src, count(*) AS n_src FROM toks GROUP BY 1
+), vocab AS (SELECT DISTINCT tok FROM counts),
+vs AS (SELECT count(*) AS v FROM vocab),
+grid AS MATERIALIZED (
+  SELECT t.src, vb.tok,
+    (coalesce(c.n, 0) + 1) / CAST(t.n_src + vs.v AS DOUBLE) AS p
+  FROM vocab vb
+  CROSS JOIN totals t
+  LEFT JOIN counts c ON c.src = t.src AND c.tok = vb.tok
+  CROSS JOIN vs
+)
+SELECT a.src AS source_a, b.src AS source_b,
+  round(CAST(sum(
+    CAST(round(0.5 * a.p * log2(a.p / ((a.p + b.p) / 2))
+               + 0.5 * b.p * log2(b.p / ((a.p + b.p) / 2)), 9)
+         AS DECIMAL(18,9))) AS DOUBLE), 6) AS js_divergence
+FROM grid a JOIN grid b ON a.tok = b.tok AND a.src < b.src
+GROUP BY 1, 2 ORDER BY 1, 2
+""")
+def _source_divergence(spark, sf_dir):
+    """Pairwise Jensen-Shannon divergence between sources' smoothed
+    unigram distributions (functions/curation.py::source_divergence):
+    the mixture-balance diagnostic, one number per source pair."""
+    return C.source_divergence(_docs(spark, sf_dir))
+
+
+@_query("session_summary", """
+WITH s AS (
+  SELECT user_id AS u, ts,
+    CASE WHEN lag(ts) OVER w IS NULL
+         OR date_diff('microsecond', lag(ts) OVER w, ts) > 1800000000
+         THEN 1 ELSE 0 END AS new_s
+  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), sess AS (
+  SELECT u, sid, CAST(count(*) AS BIGINT) AS n_events,
+    CAST(date_diff('microsecond', min(ts), max(ts)) AS BIGINT) AS dur_us
+  FROM (
+    SELECT u, ts, sum(new_s) OVER (
+      PARTITION BY u ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+    FROM s) t
+  GROUP BY u, sid
+)
+SELECT CAST(count(*) AS BIGINT) AS n_sessions,
+  round(CAST(sum(n_events) AS DOUBLE) / count(*), 6)
+    AS avg_events_per_session,
+  round(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
+        / count(*), 6) AS bounce_rate,
+  round(CAST(sum(dur_us) AS DOUBLE) / count(*) / 1000000.0, 6)
+    AS avg_duration_sec,
+  quantile_cont(dur_us, 0.5) / 1000000.0 AS median_duration_sec
+FROM sess
+""")
+def _session_summary(spark, sf_dir):
+    """One-row session KPI header (operators/funnel.py::
+    session_summary): session count, events/session, bounce rate,
+    mean + median duration over 30-min-gap sessionization."""
+    from recmetrics_pyspark_spark.operators.funnel import session_summary
+
+    return session_summary(load_table(spark, sf_dir, "events"))
+
+
+@_query("degree_distribution", ORACLE_BASE + ITEM_SIMS_SQL + """
 , dboth AS (
   SELECT ia AS z FROM pcounts UNION ALL SELECT ib AS z FROM pcounts
 ), dh AS (
@@ -10454,60 +9033,23 @@ FROM pts CROSS JOIN fit ORDER BY bucket
 )
 SELECT CAST(deg AS BIGINT) AS degree, n_nodes, powerlaw_alpha
 FROM dh CROSS JOIN dfit ORDER BY degree
-""",
-        "source_divergence": """
-WITH toks AS (
-  SELECT source AS src, unnest(string_split(text, ' ')) AS tok
-  FROM documents
-), counts AS (
-  SELECT src, tok, count(*) AS n FROM toks GROUP BY 1, 2
-), totals AS (
-  SELECT src, count(*) AS n_src FROM toks GROUP BY 1
-), vocab AS (SELECT DISTINCT tok FROM counts),
-vs AS (SELECT count(*) AS v FROM vocab),
-grid AS MATERIALIZED (
-  SELECT t.src, vb.tok,
-    (coalesce(c.n, 0) + 1) / CAST(t.n_src + vs.v AS DOUBLE) AS p
-  FROM vocab vb
-  CROSS JOIN totals t
-  LEFT JOIN counts c ON c.src = t.src AND c.tok = vb.tok
-  CROSS JOIN vs
-)
-SELECT a.src AS source_a, b.src AS source_b,
-  round(CAST(sum(
-    CAST(round(0.5 * a.p * log2(a.p / ((a.p + b.p) / 2))
-               + 0.5 * b.p * log2(b.p / ((a.p + b.p) / 2)), 9)
-         AS DECIMAL(18,9))) AS DOUBLE), 6) AS js_divergence
-FROM grid a JOIN grid b ON a.tok = b.tok AND a.src < b.src
-GROUP BY 1, 2 ORDER BY 1, 2
-""",
-        "session_summary": """
-WITH s AS (
-  SELECT user_id AS u, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-         OR date_diff('microsecond', lag(ts) OVER w, ts) > 1800000000
-         THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), sess AS (
-  SELECT u, sid, CAST(count(*) AS BIGINT) AS n_events,
-    CAST(date_diff('microsecond', min(ts), max(ts)) AS BIGINT) AS dur_us
-  FROM (
-    SELECT u, ts, sum(new_s) OVER (
-      PARTITION BY u ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-    FROM s) t
-  GROUP BY u, sid
-)
-SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-  round(CAST(sum(n_events) AS DOUBLE) / count(*), 6)
-    AS avg_events_per_session,
-  round(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS bounce_rate,
-  round(CAST(sum(dur_us) AS DOUBLE) / count(*) / 1000000.0, 6)
-    AS avg_duration_sec,
-  quantile_cont(dur_us, 0.5) / 1000000.0 AS median_duration_sec
-FROM sess
-""",
-        "gmv_mtd_report": """
+""")
+def _degree_distribution(spark, sf_dir):
+    """Degree histogram + power-law alpha of the item co-occurrence
+    graph (operators/graph.py::degree_distribution): the hub-structure
+    readout behind the wedge caps."""
+    from recmetrics_pyspark_spark.operators.graph import (
+        degree_distribution,
+    )
+
+    inter = R.interactions(spark, sf_dir)
+    pairs = M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
+    return degree_distribution(pairs)
+
+
+@_query("gmv_mtd_report", """
 WITH mx AS (
   SELECT CAST(max(o_orderdate) AS DATE) AS max_d FROM orders
 ),
@@ -10539,8 +9081,19 @@ SELECT CAST(d AS VARCHAR) AS day,
 FROM cur LEFT JOIN prev USING (mth, dom)
 CROSS JOIN mx WHERE d >= max_d - 120
 ORDER BY day
-""",
-        "catalog_freshness": """
+""")
+def _gmv_mtd_report(spark, sf_dir):
+    """Daily GMV with month-to-date running totals and same-day
+    month-over-month ratios (operators/timeseries.py::gmv_mtd_report)
+    over the trailing 120 days of orders; DECIMAL sums throughout."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        gmv_mtd_report,
+    )
+
+    return gmv_mtd_report(load_table(spark, sf_dir, "orders"))
+
+
+@_query("catalog_freshness", """
 WITH ev AS (
   SELECT l_partkey AS i,
     CAST(date_trunc('week', o_orderdate) AS DATE) AS wk
@@ -10553,8 +9106,51 @@ SELECT CAST(wk AS VARCHAR) AS week,
   round(sum(CASE WHEN wk = first_wk THEN 1 ELSE 0 END)
         / CAST(count(*) AS DOUBLE), 6) AS new_item_share
 FROM ev JOIN fw USING (i) GROUP BY wk ORDER BY week
-""",
-        "user_lifecycle_stages": """
+""")
+def _catalog_freshness(spark, sf_dir):
+    """Weekly new-item interaction share (operators/recommend.py::
+    catalog_freshness): cold-start pressure per week from each item's
+    introduction week."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    timed = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    return R.catalog_freshness(
+        timed, col_item="l_partkey", col_time="o_orderdate"
+    )
+
+
+@_query("lsh_parameter_plan", """
+WITH grid AS (
+  SELECT b.bands, r.rows_per_band
+  FROM (VALUES (4), (8), (16), (32)) b(bands)
+  CROSS JOIN (VALUES (2), (4), (8)) r(rows_per_band)
+)
+SELECT CAST(bands AS INT) AS bands,
+  CAST(rows_per_band AS INT) AS rows_per_band,
+  round(round(pow(1.0 / bands, 1.0 / rows_per_band), 9), 6)
+    AS approx_threshold,
+  round(round(1.0 - pow(1.0 - pow(0.5, rows_per_band), bands), 9), 6)
+    AS p_at_s50,
+  round(round(1.0 - pow(1.0 - pow(0.7, rows_per_band), bands), 9), 6)
+    AS p_at_s70,
+  round(round(1.0 - pow(1.0 - pow(0.8, rows_per_band), bands), 9), 6)
+    AS p_at_s80,
+  round(round(1.0 - pow(1.0 - pow(0.9, rows_per_band), bands), 9), 6)
+    AS p_at_s90
+FROM grid ORDER BY bands, rows_per_band
+""")
+def _lsh_parameter_plan(spark, sf_dir):
+    """MinHash-LSH banding planner (operators/dedup.py::
+    lsh_parameter_plan): S-curve thresholds and capture probabilities
+    per (bands, rows) configuration — pure closed-form math."""
+    return D.lsh_parameter_plan(spark)
+
+
+@_query("user_lifecycle_stages", """
 WITH act AS (
   SELECT DISTINCT user_id AS u,
     CAST(date_trunc('week', ts) AS DATE) AS wk
@@ -10587,8 +9183,19 @@ FROM staged s FULL JOIN ch ON ch.wk = s.wk
 CROSS JOIN mw
 WHERE coalesce(s.wk, ch.wk) <= max_wk
 ORDER BY week
-""",
-        "revenue_concentration": """
+""")
+def _user_lifecycle_stages(spark, sf_dir):
+    """Weekly growth accounting (operators/funnel.py::
+    user_lifecycle_stages): new / retained / resurrected / churned
+    user counts per week at user-week grain."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        user_lifecycle_stages,
+    )
+
+    return user_lifecycle_stages(load_table(spark, sf_dir, "events"))
+
+
+@_query("revenue_concentration", """
 WITH per AS (
   SELECT o_custkey AS c,
     CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DECIMAL(18,6))
@@ -10614,8 +9221,19 @@ SELECT top_fraction,
 FROM p2 CROSS JOIN thr CROSS JOIN f
 GROUP BY top_fraction, thrs, idx
 ORDER BY top_fraction
-""",
-        "embedding_outliers": """
+""")
+def _revenue_concentration(spark, sf_dir):
+    """Customer revenue Pareto (operators/funnel.py::
+    revenue_concentration): top-1%/10%/20%/50% customer revenue shares
+    via percentile thresholds — no global sort."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        revenue_concentration,
+    )
+
+    return revenue_concentration(load_table(spark, sf_dir, "orders"))
+
+
+@_query("embedding_outliers", """
 WITH ex AS (
   SELECT vid, i - 1 AS dim_idx, v[i] AS val
   FROM (SELECT vec_id AS vid, embedding::DOUBLE[] AS v
@@ -10636,8 +9254,15 @@ FROM (
     ORDER BY dist_to_centroid DESC, vid) AS rnk
   FROM pv) t
 WHERE rnk <= 20
-""",
-        "scd2_customer_priority": """
+""")
+def _embedding_outliers(spark, sf_dir):
+    """Top-20 far-from-centroid embeddings (operators/similarity.py::
+    embedding_outliers): global-centroid distance screen, exact
+    DECIMAL deviation sums."""
+    return S.embedding_outliers(_embs(spark, sf_dir))
+
+
+@_query("scd2_customer_priority", """
 WITH ch AS (
   SELECT o_custkey AS k, o_orderpriority AS a,
     CAST(o_orderdate AS DATE) AS t,
@@ -10664,8 +9289,22 @@ SELECT k AS key, a AS attr_value,
   row_number() OVER w AS version
 FROM kept WINDOW w AS (PARTITION BY k ORDER BY t)
 ORDER BY key, valid_from
-""",
-        "join_size_lineitem_part": """
+""")
+def _scd2_customer_priority(spark, sf_dir):
+    """Type-2 SCD build (operators/cdc.py::scd2_history): customer
+    order-priority history as half-open validity intervals — change
+    runs collapse, same-day ties break by max order key."""
+    from recmetrics_pyspark_spark.operators.cdc import scd2_history
+
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        "od", F.col("o_orderdate").cast("date")
+    )
+    return scd2_history(
+        orders, "o_custkey", "o_orderpriority", "od", "o_orderkey"
+    )
+
+
+@_query("join_size_lineitem_part", """
 WITH c AS (
   SELECT l_partkey AS key, CAST(count(*) AS BIGINT) AS n
   FROM lineitem GROUP BY 1
@@ -10683,8 +9322,21 @@ SELECT key, n AS n_left, n AS n_right,
 FROM c CROSS JOIN tot
 ORDER BY n_pairs DESC, key
 LIMIT 10
-""",
-        "token_budget_plan": """
+""")
+def _join_size_lineitem_part(spark, sf_dir):
+    """Join-cardinality pre-flight (operators/skew.py::
+    join_size_report): exact output size and top skew keys for the
+    lineitem ⋈ lineitem self-join on l_partkey — the pair-table
+    blowup predictor."""
+    from recmetrics_pyspark_spark.operators.skew import (
+        join_size_report,
+    )
+
+    li = load_table(spark, sf_dir, "lineitem")
+    return join_size_report(li, li, "l_partkey", "l_partkey", top_k=10)
+
+
+@_query("token_budget_plan", """
 WITH per AS (
   SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
     CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -10700,40 +9352,17 @@ SELECT source, n_docs, n_tokens,
         / nullif(CAST(n_tokens AS DOUBLE), 0), 6) AS epochs
 FROM per CROSS JOIN ns
 ORDER BY source
-""",
-        # mirrors functions/curation.py::temperature_mixture_plan:
-        # the only libm term p^0.7 is pre-rounded to 9 decimals and
-        # summed as exact DECIMAL(18,9) on BOTH engines, so the
-        # normalizer and every downstream floor/round agree bitwise
-        "temperature_mixture_plan": """
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY 1
-), tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM per),
-p1 AS (
-  SELECT source, n_docs, n_tokens,
-    CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE) AS p,
-    CAST(round(pow(CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE),
-                   0.7), 9) AS DECIMAL(18,9)) AS pt
-  FROM per CROSS JOIN tot
-), z AS (SELECT sum(pt) AS z FROM p1),
-w AS (
-  SELECT source, n_docs, n_tokens, p,
-    round(CAST(pt AS DOUBLE) / CAST(z AS DOUBLE), 9) AS w9
-  FROM p1 CROSS JOIN z
-)
-SELECT source, n_docs, n_tokens,
-  round(p, 6) AS natural_share,
-  round(w9, 6) AS weight,
-  CAST(floor(10000000 * w9) AS BIGINT) AS allocated_tokens,
-  round(least(1.0, floor(10000000 * w9)
-              / CAST(n_tokens AS DOUBLE)), 6) AS sample_rate,
-  round(floor(10000000 * w9) / CAST(n_tokens AS DOUBLE), 6)
-    AS epochs
-FROM w
-""",
-        "bot_activity_flags": """
+""")
+def _token_budget_plan(spark, sf_dir):
+    """Training-mixture allocator (functions/curation.py::
+    token_budget_plan): equal-weight token budget split across
+    sources with keep rates and epoch factors."""
+    return C.token_budget_plan(
+        load_table(spark, sf_dir, "documents"), 1_000_000
+    )
+
+
+@_query("bot_activity_flags", """
 WITH base AS (
   SELECT user_id AS u, epoch_us(ts) AS mu FROM events
 ), pe AS (
@@ -10756,8 +9385,19 @@ SELECT u AS user_id, n_events,
                > 6.0 * CAST(active_us AS DOUBLE)
        THEN 1 ELSE 0 END AS INT) AS is_bot
 FROM pu WHERE n_events >= 20 ORDER BY user_id
-""",
-        "theil_sen_orders": """
+""")
+def _bot_activity_flags(spark, sf_dir):
+    """Bot/abuse screen (operators/funnel.py::bot_activity_flags):
+    per-user sustained rate + max 10-second burst over the event
+    stream, with inhuman-activity flags."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        bot_activity_flags,
+    )
+
+    return bot_activity_flags(load_table(spark, sf_dir, "events"))
+
+
+@_query("theil_sen_orders", """
 WITH mx AS (
   SELECT max(CAST(o_orderdate AS DATE)) AS max_d FROM orders
 ), daily AS (
@@ -10784,8 +9424,23 @@ WITH mx AS (
 SELECT n_days, n_pairs, round(m, 6) AS slope_per_day,
   round(med_v, 6) AS median_level
 FROM fit CROSS JOIN dd
-""",
-        "seasonal_anomaly_days": """
+""")
+def _theil_sen_orders(spark, sf_dir):
+    """Robust daily-revenue trend (operators/timeseries.py::
+    theil_sen_trend): median of pairwise day slopes over the last 120
+    days — the outlier-proof companion to the OLS trend."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        theil_sen_trend,
+    )
+
+    return theil_sen_trend(
+        load_table(spark, sf_dir, "orders"),
+        "o_orderdate",
+        "o_totalprice",
+    )
+
+
+@_query("seasonal_anomaly_days", """
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS n
   FROM events GROUP BY 1
@@ -10805,8 +9460,80 @@ SELECT CAST(d AS VARCHAR) AS day, n,
 FROM resid CROSS JOIN mad
 WHERE abs(round(r / nullif(1.4826 * mad, 0), 6)) > 2.0
 ORDER BY day
-""",
-        "domain_mix_stats": f"""
+""")
+def _seasonal_anomaly_days(spark, sf_dir):
+    """Weekday-adjusted volume anomalies (operators/timeseries.py::
+    seasonal_residual_anomalies): days whose residual vs their
+    day-of-week mean exceeds 2 robust (MAD) sigmas."""
+    from recmetrics_pyspark_spark.operators.timeseries import (
+        seasonal_residual_anomalies,
+    )
+
+    return seasonal_residual_anomalies(
+        load_table(spark, sf_dir, "events"), "ts", z_threshold=2.0
+    )
+
+
+@_query("peak_concurrency", """
+WITH s AS (
+  SELECT user_id AS u, ts,
+    CASE WHEN lag(ts) OVER w IS NULL
+         OR date_diff('microsecond', lag(ts) OVER w, ts) > 1800000000
+         THEN 1 ELSE 0 END AS new_s
+  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+), sess AS (
+  SELECT u, sid,
+    epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us,
+    CAST(min(ts) AS DATE) AS s_day, CAST(max(ts) AS DATE) AS e_day
+  FROM (SELECT u, ts,
+          sum(new_s) OVER (PARTITION BY u ORDER BY ts) AS sid
+        FROM s) t
+  GROUP BY u, sid
+), segs AS (
+  SELECT day,
+    greatest(s_us, epoch_us(CAST(day AS TIMESTAMP))) AS a_us,
+    least(e_us,
+          epoch_us(CAST((day + 1) AS TIMESTAMP)) - 1) AS b_us
+  FROM (SELECT unnest(generate_series(s_day, e_day,
+                                      INTERVAL 1 DAY))::DATE AS day,
+          s_us, e_us
+        FROM sess) g
+), pts AS (
+  SELECT day, p,
+    CAST(sum(is_s) AS BIGINT) AS s_cnt,
+    CAST(sum(1 - is_s) AS BIGINT) AS e_cnt
+  FROM (
+    SELECT day, a_us AS p, 1 AS is_s FROM segs
+    UNION ALL
+    SELECT day, b_us AS p, 0 AS is_s FROM segs) u
+  GROUP BY day, p
+), act AS (
+  SELECT day,
+    sum(s_cnt) OVER wd - (sum(e_cnt) OVER wd - e_cnt) AS active
+  FROM pts WINDOW wd AS (PARTITION BY day ORDER BY p
+    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+), pk AS (
+  SELECT day, CAST(max(active) AS BIGINT) AS peak_concurrent
+  FROM act GROUP BY day
+), ns AS (
+  SELECT day, CAST(count(*) AS BIGINT) AS n_sessions
+  FROM segs GROUP BY day
+)
+SELECT CAST(pk.day AS VARCHAR) AS day, peak_concurrent, n_sessions
+FROM pk JOIN ns ON pk.day = ns.day ORDER BY day
+""")
+def _peak_concurrency(spark, sf_dir):
+    """Peak simultaneous sessions per day (operators/funnel.py::
+    peak_concurrency): day-partitioned +1/−1 sweep over sessionized
+    event intervals, exact microsecond arithmetic."""
+    from recmetrics_pyspark_spark.operators.funnel import (
+        peak_concurrency,
+    )
+
+    return peak_concurrency(load_table(spark, sf_dir, "events"))
+
+
+@_query("domain_mix_stats", f"""
 WITH {_CLEAN_URL_CTE}, {_domain_prologue()}, agg AS (
   SELECT domain, CAST(count(*) AS BIGINT) AS n_docs,
     CAST(sum(n_chars) AS BIGINT) AS weight
@@ -10835,8 +9562,22 @@ SELECT rnk, domain, n_docs, weight,
   round(sum(n_docs) OVER (ORDER BY rnk ROWS UNBOUNDED PRECEDING)
         / CAST(td AS DOUBLE), 6) AS cum_doc_share
 FROM unioned, tot ORDER BY rnk
-""",
-        "domain_cap_sample": f"""
+""")
+def _domain_mix_stats(spark, sf_dir):
+    """Top-20 registrable domains by doc count + an (other) residual
+    row, with doc/char shares and cumulative doc share
+    (functions/curation.py::domain_mix_stats over the synthetic-URL
+    documents)."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        domain_mix_stats,
+    )
+
+    return domain_mix_stats(
+        _docs_with_urls(spark, sf_dir), "url", "n_chars", top_k=20
+    )
+
+
+@_query("domain_cap_sample", f"""
 WITH {_CLEAN_URL_CTE}, {_domain_prologue()}, r AS (
   SELECT domain, doc_id, CAST(row_number() OVER (
     PARTITION BY domain ORDER BY
@@ -10847,11 +9588,26 @@ WITH {_CLEAN_URL_CTE}, {_domain_prologue()}, r AS (
 )
 SELECT domain, doc_id, keep_rank
 FROM r WHERE keep_rank <= 10 ORDER BY domain, keep_rank
-""",
-        # mirrors functions/curation.py::url_canonicalize verbatim:
-        # same decomposition regex (escape-free, Java<->RE2 portable),
-        # same tracking-param drop list, same sort/join of survivors
-        "canonical_url_dups": f"""
+""")
+def _domain_cap_sample(spark, sf_dir):
+    """Per-registrable-domain document cap: ≤ 10 docs per domain by
+    deterministic md5(domain:id) hash order
+    (functions/curation.py::domain_cap_sample over the synthetic-URL
+    documents)."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        domain_cap_sample,
+    )
+
+    return domain_cap_sample(
+        _docs_with_urls(spark, sf_dir), "url", "doc_id",
+        max_per_domain=10,
+    )
+
+
+# mirrors functions/curation.py::url_canonicalize verbatim:
+# same decomposition regex (escape-free, Java<->RE2 portable),
+# same tracking-param drop list, same sort/join of survivors
+@_query("canonical_url_dups", f"""
 WITH u AS (
   SELECT doc_id,
     'https://' || CASE WHEN doc_id % 2 = 1 THEN 'www.' ELSE '' END
@@ -10903,33 +9659,500 @@ WITH u AS (
 SELECT canonical_url, CAST(count(*) AS BIGINT) AS n_variants,
   min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id
 FROM canon GROUP BY canonical_url HAVING count(*) >= 2
-""",
-        "domain_neardup_rates": _domain_neardup_oracle(),
-        # mirrors functions/text.py::gopher_quality_flags step by step
-        # (same whitespace-class word split, same integer counts, one
-        # double division per ratio, coalesce(cond, false) rule
-        # booleans; repetition axes: same non-empty-segment dup
-        # counts/char sums, the same (count, gram-chars) top-n-gram
-        # tie rule for n=2..4, and the same sum((c-1)*chars)
-        # duplicate-gram mass for n=5..10 — the gram aggregate
-        # groups on the raw (doc, n, gram), same as the Spark side)
-        "gopher_quality_flags":
-            "WITH " + _gopher_ctes() + "\n" + _GOPHER_FLAGS_SELECT,
-        # mirrors functions/text.py::corpus_datacard: same per-doc
-        # primitives (single-space tokens, lexicon argmax, the
-        # quality_score formula pre-rounded DECIMAL(18,9)), one
-        # source-grain aggregate + the (source, md5) dup sub-aggregate
-        "corpus_datacard":
-            "WITH " + _datacard_ctes() + "\n" + _DATACARD_SELECT,
-        # the composed web-curation stack (each stage reuses the
-        # standalone oracles' SQL via the shared fragment builders)
-        "web_curation_pipeline": _web_curation_oracle(),
-        # mirrors _data_mixture_pipeline: the ccnet keep gate, the
-        # canonical_docs chain RE-TARGETED at the kept corpus (the
-        # parameterized fragment the standalone query pins over
-        # `documents`), exact BIGINT micro-unit weighted masses, and
-        # the temperature_mixture_plan allocator SQL over eff6
-        "data_mixture_pipeline": f"""
+""")
+def _canonical_url_dups(spark, sf_dir):
+    """URL-identity dedup table over the messy synthetic URLs
+    (functions/curation.py::canonical_url_dups): canonicalization
+    must collapse every (2k, 2k+1) fetch pair — tracking params,
+    www/port/slash/fragment noise, param order — to one key."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        canonical_url_dups,
+    )
+
+    return canonical_url_dups(
+        _docs_with_messy_urls(spark, sf_dir), "doc_id", "url",
+        min_variants=2,
+    )
+
+
+@_query("domain_neardup_rates", _domain_neardup_oracle())
+def _domain_neardup_rates(spark, sf_dir):
+    """Per-registrable-domain near-dup pressure
+    (functions/curation.py::domain_neardup_rates): MinHash+LSH pairs
+    joined to the domain grain, counting within-domain pairs only.
+    The pair table is handed in PRE-BUILT from the same bare
+    (doc_id, text) projection the minhash_lsh_pairs canary persists —
+    deriving it from the url-augmented frame is a different
+    canonicalized plan, so the session cache silently missed and the
+    whole LSH chain re-ran (measured +8.5 s at sf0.1)."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        domain_neardup_rates,
+    )
+
+    pairs = D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
+    return domain_neardup_rates(
+        _docs_with_urls(spark, sf_dir), "doc_id", "text", "url",
+        threshold=0.1, pairs=pairs,
+    )
+
+
+# mirrors functions/text.py::gopher_quality_flags step by step
+# (same whitespace-class word split, same integer counts, one
+# double division per ratio, coalesce(cond, false) rule
+# booleans; repetition axes: same non-empty-segment dup
+# counts/char sums, the same (count, gram-chars) top-n-gram
+# tie rule for n=2..4, and the same sum((c-1)*chars)
+# duplicate-gram mass for n=5..10 — the gram aggregate
+# groups on the raw (doc, n, gram), same as the Spark side)
+@_query("gopher_quality_flags", "WITH " + _gopher_ctes() + "\n" + _GOPHER_FLAGS_SELECT)
+def _gopher_quality_flags(spark, sf_dir):
+    """Gopher-rules quality gate over documents (functions/text.py::
+    gopher_quality_flags, Rae et al. 2021 A1.1): per-rule booleans +
+    the composite keep decision — the standard CommonCrawl pre-filter
+    as a tunable flag table."""
+    from recmetrics_pyspark_spark.functions.text import (
+        gopher_quality_flags,
+    )
+
+    return gopher_quality_flags(load_table(spark, sf_dir, "documents"))
+
+
+# mirrors operators/dedup.py::ngram_decontaminate over the
+# src0-eval / rest-train split (word-5-gram shingles over the
+# WHITESPACE-CLASS token split — cross-corpus formatting noise
+# must not defeat collisions — positions
+# 1..greatest(len-k+1, 1), distinct per doc; zero-token docs
+# dropped on both sides; the train side additionally emits
+# full n-grams at each distinct sub-k eval-doc length — the
+# GPT-3 min(k, len) containment rule — INERT at every test SF
+# (min doc length 10 words > k=5; the live-regime cross-engine
+# pin is tests/test_round9_ops.py)
+@_query("ngram_decontaminate", """
+WITH d AS (
+  SELECT doc_id, source,
+    list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
+                x -> x <> '') AS toks
+  FROM documents
+), dn AS (
+  SELECT * FROM d WHERE len(toks) > 0
+), sh AS (
+  SELECT DISTINCT doc_id, source,
+    array_to_string(list_slice(toks, i, i + 4), ' ') AS shingle
+  FROM dn, unnest(generate_series(1, greatest(len(toks) - 4, 1))) u(i)
+), ev AS (
+  SELECT DISTINCT shingle, doc_id AS eval_id FROM sh
+  WHERE source = 'src0'
+), shortn AS (
+  SELECT DISTINCT len(toks) AS n FROM dn
+  WHERE source = 'src0' AND len(toks) < 5
+), tr AS (
+  SELECT doc_id, shingle FROM sh WHERE source <> 'src0'
+  UNION ALL
+  SELECT dn.doc_id,
+    array_to_string(list_slice(toks, i, i + n - 1), ' ') AS shingle
+  FROM dn, shortn,
+    unnest(generate_series(1, len(toks) - n + 1)) u(i)
+  WHERE dn.source <> 'src0' AND len(dn.toks) >= shortn.n
+)
+SELECT tr.doc_id AS doc_id,
+  CAST(count(DISTINCT tr.shingle) AS BIGINT) AS n_collisions,
+  CAST(count(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs,
+  min(tr.shingle) AS sample_shingle
+FROM tr JOIN ev USING (shingle)
+GROUP BY tr.doc_id
+""")
+def _ngram_decontaminate(spark, sf_dir):
+    """Cross-corpus eval decontamination
+    (operators/dedup.py::ngram_decontaminate): the src0 documents play
+    the benchmark/eval corpus, every other source is the train corpus;
+    word-5-gram collisions flag contaminated train docs (k=5 keeps the
+    synthetic corpus's collision set non-trivial at every SF — the
+    operator's production default is the GPT-3-style k=13)."""
+    from recmetrics_pyspark_spark.operators.dedup import (
+        ngram_decontaminate,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
+    tr = docs.filter(F.col("source") != "src0").select("doc_id", "text")
+    return ngram_decontaminate(tr, ev, k=5)
+
+
+# salted tie-bucket variant: Spark decomposes rank/cumsum onto
+# the (volume, md5-bucket) grain; within a tie group all items
+# share the volume, so the decomposition equals ONE global
+# order (volume DESC, bucket, item_id) — which DuckDB can
+# afford at test scale. The md5 bucket mirrors
+# conv(substr(md5(item), 1, 15), 16, 10) % 8 exactly.
+@_query("long_tail_stats_salted", ORACLE_BASE
++ """
+, vol AS (
+  SELECT item_id, count(*) AS volume,
+    ('0x' || substr(md5(CAST(item_id AS VARCHAR)), 1, 15))::BIGINT % 8
+      AS tb
+  FROM interactions GROUP BY item_id),
+tot AS (SELECT CAST(sum(volume) AS DOUBLE) AS total FROM vol),
+w AS (
+  SELECT item_id, volume,
+    CAST(row_number() OVER (ORDER BY volume DESC, tb, item_id)
+         AS BIGINT) AS item_rank,
+    CAST(sum(volume) OVER (ORDER BY volume DESC, tb, item_id
+         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumulative_volume
+  FROM vol)
+SELECT item_id, volume, item_rank, cumulative_volume,
+  round(cumulative_volume/total, 6) AS pct_cumulative,
+  CASE WHEN round(cumulative_volume/total, 6) <= 0.5
+       THEN 'head' ELSE 'tail' END AS bucket
+FROM w, tot
+""")
+def _long_tail_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """long_tail_stats with tie_buckets=8 — the salted variant whose
+    md5-bucket rank math (ties break by (md5 bucket, id) instead of
+    (id); offsets window on the (volume, bucket) grain) is the
+    100 TB scale path for the volume=1 tail. Oracle-pinned so the
+    conv/md5 bucket rule stays engine-portable, not just
+    curve-identical (the property test in tests/test_round7_ops.py
+    pins the curve; this pins the per-item ranks)."""
+    inter = R.interactions(spark, sf_dir).select(F.col("item").alias("item_id"))
+    out = M.long_tail_stats(
+        inter, col_item="item_id", percentage=0.5, tie_buckets=8
+    )
+    return out.select(
+        "item_id",
+        "volume",
+        "item_rank",
+        "cumulative_volume",
+        "pct_cumulative",
+        "bucket",
+    )
+
+
+# mirrors functions/text.py::c4_clean over the same
+# deterministic page builder (u CTE == the Spark-side page
+# expression, token for token)
+@_query("c4_clean", """
+WITH u AS (
+  SELECT doc_id,
+    'Intro sentence number ' || CAST(doc_id AS VARCHAR) || '.'
+    || chr(10)
+    || CASE WHEN doc_id % 3 = 0 THEN 'short.'
+            ELSE 'This kept line has plenty of words.' END
+    || chr(10)
+    || 'no terminal punct here ' || substr(text, 1, 20)
+    || chr(10)
+    || CASE WHEN doc_id % 2 = 0
+            THEN 'One more. And another! Plus a third? Then four.'
+                 || ' Finally five.'
+            ELSE 'Just one more here.' END
+    || CASE WHEN doc_id % 7 = 0
+            THEN chr(10) || 'Filler Lorem Ipsum paragraph.'
+            ELSE '' END
+    || CASE WHEN doc_id % 11 = 0
+            THEN chr(10) || 'Contains a { brace in code.'
+            ELSE '' END AS text
+  FROM documents
+), k AS (
+  SELECT doc_id, text,
+    string_split(text, chr(10)) AS lines,
+    list_filter(string_split(text, chr(10)),
+      x -> right(rtrim(x), 1) IN ('.', '!', '?', '"')
+       AND len(list_filter(string_split(x, ' '), w -> w <> '')) >= 5)
+      AS kept
+  FROM u
+), c AS (
+  SELECT doc_id, text,
+    CAST(len(lines) AS BIGINT) AS n_lines,
+    CAST(len(kept) AS BIGINT) AS n_kept_lines,
+    -- DuckDB array_to_string([]) is NULL where Spark array_join([])
+    -- is '' — reachable now that a page can keep zero lines
+    coalesce(array_to_string(kept, chr(10)), '') AS clean_text
+  FROM k
+)
+SELECT doc_id, n_lines, n_kept_lines,
+  CAST(len(clean_text) - len(translate(clean_text, '.!?', ''))
+       AS BIGINT) AS n_sentences,
+  contains(lower(text), 'lorem ipsum') AS has_lorem_ipsum,
+  contains(text, '{') AS has_curly_brace,
+  (len(clean_text) - len(translate(clean_text, '.!?', '')) >= 3
+   AND NOT contains(lower(text), 'lorem ipsum')
+   AND NOT contains(text, '{')) AS keep,
+  clean_text
+FROM c
+""")
+def _c4_clean(spark, sf_dir):
+    """C4 line-level cleaner (functions/text.py::c4_clean) over
+    synthetic pages built deterministically from doc_id + text (the
+    corpus itself is single-line and punctuation-free, so the page
+    builder — mirrored VERBATIM in the oracle's ``u`` CTE — plants
+    kept/dropped lines, varying sentence counts, and lorem/brace
+    tells): line-ending punctuation + min-words retention, sentence
+    minimum, placeholder/code page kills."""
+    from recmetrics_pyspark_spark.functions.text import c4_clean
+
+    docs = load_table(spark, sf_dir, "documents")
+    nl = F.lit("\n")
+    page = F.concat(
+        F.concat(F.lit("Intro sentence number "),
+                 F.col("doc_id").cast("string"), F.lit(".")),
+        nl,
+        F.when(F.col("doc_id") % 3 == 0, F.lit("short.")).otherwise(
+            F.lit("This kept line has plenty of words.")
+        ),
+        nl,
+        F.concat(F.lit("no terminal punct here "),
+                 F.substring(F.col("text"), 1, 20)),
+        nl,
+        F.when(
+            F.col("doc_id") % 2 == 0,
+            F.lit("One more. And another! Plus a third? Then four."
+                  " Finally five."),
+        ).otherwise(F.lit("Just one more here.")),
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(nl, F.lit("Filler Lorem Ipsum paragraph.")),
+        ).otherwise(F.lit("")),
+        F.when(
+            F.col("doc_id") % 11 == 0,
+            F.concat(nl, F.lit("Contains a { brace in code.")),
+        ).otherwise(F.lit("")),
+    )
+    pages = docs.select("doc_id", page.alias("text"))
+    return c4_clean(pages)
+
+
+# eval-grain twin: same collision join (incl. the short-eval
+# containment grams + zero-token filter), grouped by the eval
+# document (operators/dedup.py::eval_contamination_report)
+@_query("eval_contamination_report", """
+WITH d AS (
+  SELECT doc_id, source,
+    list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
+                x -> x <> '') AS toks
+  FROM documents
+), dn AS (
+  SELECT * FROM d WHERE len(toks) > 0
+), sh AS (
+  SELECT DISTINCT doc_id, source,
+    array_to_string(list_slice(toks, i, i + 4), ' ') AS shingle
+  FROM dn, unnest(generate_series(1, greatest(len(toks) - 4, 1))) u(i)
+), ev AS (
+  SELECT DISTINCT shingle, doc_id AS eval_id FROM sh
+  WHERE source = 'src0'
+), shortn AS (
+  SELECT DISTINCT len(toks) AS n FROM dn
+  WHERE source = 'src0' AND len(toks) < 5
+), tr AS (
+  SELECT doc_id, shingle FROM sh WHERE source <> 'src0'
+  UNION ALL
+  SELECT dn.doc_id,
+    array_to_string(list_slice(toks, i, i + n - 1), ' ') AS shingle
+  FROM dn, shortn,
+    unnest(generate_series(1, len(toks) - n + 1)) u(i)
+  WHERE dn.source <> 'src0' AND len(dn.toks) >= shortn.n
+)
+SELECT ev.eval_id AS eval_id,
+  CAST(count(DISTINCT tr.shingle) AS BIGINT) AS n_collisions,
+  CAST(count(DISTINCT tr.doc_id) AS BIGINT) AS n_train_docs,
+  min(tr.shingle) AS sample_shingle
+FROM tr JOIN ev USING (shingle)
+GROUP BY ev.eval_id
+""")
+def _eval_contamination_report(spark, sf_dir):
+    """Eval-grain flip side of ngram_decontaminate
+    (operators/dedup.py::eval_contamination_report): which src0
+    benchmark docs leaked into the train sources, and how widely —
+    same collision join, eval-keyed aggregate."""
+    from recmetrics_pyspark_spark.operators.dedup import (
+        eval_contamination_report,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
+    tr = docs.filter(F.col("source") != "src0").select("doc_id", "text")
+    return eval_contamination_report(tr, ev, k=5)
+
+
+# mirrors functions/text.py::corpus_datacard: same per-doc
+# primitives (single-space tokens, lexicon argmax, the
+# quality_score formula pre-rounded DECIMAL(18,9)), one
+# source-grain aggregate + the (source, md5) dup sub-aggregate
+@_query("corpus_datacard", "WITH " + _datacard_ctes() + "\n" + _DATACARD_SELECT)
+def _corpus_datacard(spark, sf_dir):
+    """Per-source corpus data card (functions/text.py::corpus_datacard):
+    volumes, mean doc length, language mix, DECIMAL-exact mean quality,
+    exact-duplicate pressure — one row per source."""
+    from recmetrics_pyspark_spark.functions.text import corpus_datacard
+
+    return corpus_datacard(load_table(spark, sf_dir, "documents"))
+
+
+# until_converged mode lands on the SAME fixed point the
+# 8-round chain reaches (the peel converges within 8 on every
+# test corpus — fixture precondition documented on the query),
+# so the fixed-round CTE chain is its exact expected output
+@_query("kcore_items_converged", _kcore_oracle())
+def _kcore_items_converged(spark, sf_dir):
+    """k_core_decompose's opt-in ``until_converged=True`` mode over
+    the same 3-core input as kcore_items. CONTRACT (round-13, verdict
+    item 5): this query may read the _kcore_core shared build ONLY
+    while its fixed-8 peel carries a true ``converged``
+    witness — on every declared corpus it does (convergence within 8
+    rounds is property-pinned by test_kcore_peel_idempotent_past_
+    convergence, and then the fixed-8 table IS the fixed point this
+    mode must land on, bit-identically). On an adversarial graph
+    (a long path needs ~n/2 peels) the witness is false and the
+    shared table is a SUPERSET of the true core — the guard below
+    detects that and serves a real until-converged peel instead,
+    itself a shared build (eagerly localCheckpointed, like
+    _kcore_core) so repeated calls peel once. The happy-path cost is
+    one head(1) over the checkpointed node-grain table (the
+    established size-guard-count convention); guard behavior pinned
+    both ways in tests/test_round13_ops.py, shared-vs-fresh equality
+    in tests/test_round12_ops.py."""
+    out = _kcore_core(spark, sf_dir)
+    if out.filter(~F.col("converged")).head(1):
+        return _shared(
+            spark, sf_dir, "kcore_converged",
+            lambda: _kcore_peel(
+                spark, sf_dir, until_converged=True
+            ).localCheckpoint(eager=True),
+        )
+    return out
+
+
+# the composed web-curation stack (each stage reuses the
+# standalone oracles' SQL via the shared fragment builders)
+@_query("web_curation_pipeline", _web_curation_oracle())
+def _web_curation_pipeline(spark, sf_dir):
+    """The canonical web-curation stack end-to-end, as ONE declared
+    query with ONE composed oracle: C4 line cleaning (paper defaults)
+    → exact document dedup (canonical survivor per md5 of cleaned
+    text — BEFORE line dedup, the RefinedWeb ordering: a full-doc
+    duplicate is a set of corpus-duplicated lines, so keep_first
+    line dedup run first would empty copies 2..n itself and leave
+    this stage inert) → cross-document line dedup with rewrite
+    (line_dedup keep_first — CCNet's global paragraph dedup) →
+    Gopher gate keep-filter on the line-deduplicated text
+    (corpus-tuned min_words=20 / min_stopwords=1 — the synthetic
+    vocabulary carries one Gopher stopword, and gate thresholds are
+    corpus policy) → ngram_decontaminate anti-join (eval corpus =
+    RAW src0 texts, k=5, same convention as the declared
+    decontamination queries) → corpus_datacard over what ships.
+    Green pins stage COMPOSITION — schema handoffs, keep-flag
+    filtering, the two clean-text rewrites feeding downstream
+    hashing/shingling — which the per-operator oracles cannot see.
+
+    The corpus is single-line and punctuation-free, so pages are
+    built deterministically from each document (mirrored VERBATIM in
+    the oracle's ``p`` CTE) — keyed on length(text), NOT doc_id, so
+    exact-duplicate documents remain exact-duplicate pages and the
+    dedup stage keeps its bite. Scale: every stage is the declared
+    operator itself (scan-side c4 + gopher's gram aggregate +
+    one md5-grain agg + the broadcast decontamination join + the
+    source-grain card) — composition adds two doc-grain semi/anti
+    joins plus two doc-grain localCheckpoint stage boundaries (the
+    gated and deduped survivor sets each feed 2-4 downstream
+    consumers; without the boundary the Gopher gram aggregate
+    re-runs per consumer — measured 149.5s vs 17.5s at sf0.1. A
+    production pipeline writes each stage to parquet; the
+    checkpoint is the in-session analogue and is doc-grain-sized).
+
+    Stage bite by SF (measured, oracle funnel): sf0.1 = 5000 docs →
+    1944 after C4 → 1941 after exact dedup → 1941 docs after line
+    dedup with 1940 of them REWRITTEN (mean 50% of lines dropped —
+    the stage's bite is the rewrite: the downstream gopher gate
+    kills 644 docs here vs 170 on un-line-deduped text) → 1297
+    after gopher → 1241 train-side → 45 decontaminated → 1196
+    shipped (every stage live). At sf0.001/0.01 the corpus carries
+    no exact-dup texts and no SURVIVING src0 containments, so the
+    exact-dedup/decontamination stages pass everything through —
+    inert-but-mirrored there, live at sf0.1 (the same convention as
+    the basket cap / shingle df-cap; sf0.1 is judge-verified each
+    round); line dedup is live at EVERY SF (the boilerplate lines
+    repeat across all pages)."""
+    from recmetrics_pyspark_spark.functions.text import (
+        c4_clean,
+        corpus_datacard,
+        gopher_quality_flags,
+    )
+    from recmetrics_pyspark_spark.operators.dedup import (
+        exact_dedup,
+        line_dedup,
+        ngram_decontaminate,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    pages = _synthetic_pages(docs)
+    # stage 1: C4 clean + keep-filter + rewrite to the cleaned text
+    # (materialized: stage 2 consumes it twice — exact_dedup's
+    # internal hash-group self-join plus the left-semi probe side)
+    cleaned = pages.select("doc_id", "source").join(
+        c4_clean(pages).filter("keep").select("doc_id", "clean_text"),
+        "doc_id",
+    ).select(
+        "doc_id", "source", F.col("clean_text").alias("text")
+    ).localCheckpoint(eager=False)
+    # stage 2: exact document dedup — canonical survivor per
+    # cleaned-text hash. MUST run before line dedup: a full-document
+    # duplicate is a set of corpus-duplicated lines, so keep_first
+    # line dedup would otherwise empty copies 2..n itself and leave
+    # this stage inert (observed at sf0.1) — document-grain dedup
+    # first, then line-grain, is the RefinedWeb ordering
+    deduped = cleaned.join(
+        exact_dedup(cleaned).filter(~F.col("is_dup")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    ).localCheckpoint(eager=False)
+    # (deduped is materialized: stage 3 consumes it twice inside
+    # line_dedup and a third time in the source re-join below)
+    # stage 3: cross-document line dedup (CCNet global paragraph
+    # dedup, keep_first) — boilerplate lines the C4 rules keep
+    # (well-formed sentences repeated on every page) are dropped
+    # corpus-wide, one canonical copy survives; docs losing every
+    # line leave the funnel here
+    ld = line_dedup(
+        deduped.select("doc_id", "text"), min_df=2, mode="keep_first"
+    )
+    cleaned2 = (
+        ld.filter(F.col("n_lines_kept") > 0)
+        .select("doc_id", F.col("clean_text").alias("text"))
+        .join(deduped.select("doc_id", "source"), "doc_id")
+        .select("doc_id", "source", "text")
+    ).localCheckpoint(eager=False)
+    # stage 4: Gopher gate on the deduplicated text (tuned thresholds).
+    # The gate's token-scale gram aggregate is the pipeline's heavy
+    # stage, and the survivor set feeds the decontamination train
+    # side, the anti-join, and the data card — so it is MATERIALIZED
+    # as a stage boundary (localCheckpoint truncates the lineage; in
+    # a production run each stage writes parquet and this is the
+    # in-session analogue). Without boundaries the gram aggregate
+    # re-ran per consumer (measured 149.5s -> 17.5s cold at sf0.1
+    # for the original five-stage DAG).
+    gated = cleaned2.join(
+        gopher_quality_flags(cleaned2, min_words=20, min_stopwords=1)
+        .filter("keep")
+        .select("doc_id"),
+        "doc_id",
+        "left_semi",
+    ).localCheckpoint(eager=False)
+    # stage 5: decontamination anti-join (train = non-src0 survivors,
+    # eval = RAW src0 documents)
+    ev = docs.filter(F.col("source") == "src0").select("doc_id", "text")
+    tr = gated.filter(F.col("source") != "src0")
+    bad = ngram_decontaminate(
+        tr.select("doc_id", "text"), ev, k=5
+    ).select("doc_id")
+    shipped = tr.join(bad, "doc_id", "left_anti")
+    # stage 6: the data card over what ships
+    return corpus_datacard(shipped)
+
+
+# mirrors _data_mixture_pipeline: the ccnet keep gate, the
+# canonical_docs chain RE-TARGETED at the kept corpus (the
+# parameterized fragment the standalone query pins over
+# `documents`), exact BIGINT micro-unit weighted masses, and
+# the temperature_mixture_plan allocator SQL over eff6
+@_query("data_mixture_pipeline", f"""
 WITH px AS MATERIALIZED (
   SELECT doc_id, avg_bits FROM ({_DOC_PPLX_SQL}) t),
 cut AS (
@@ -10986,285 +10209,683 @@ SELECT source, n_docs, n_tokens,
   round(CAST(10000000 // n_sources AS DOUBLE)
         / (CAST(eff6 AS DOUBLE) / 1000000.0), 6) AS equal_epochs
 FROM w
-""",
-        "line_dedup_pages": _line_dedup_oracle(),
-        "line_dedup_pages_mindf3": _line_dedup_oracle(min_df=3),
-        "line_dedup_pages_dropall": _line_dedup_oracle(mode="drop_all"),
-        "incremental_line_dedup_pages": _incremental_line_dedup_oracle(),
-        # mirrors functions/text.py::c4_clean over the same
-        # deterministic page builder (u CTE == the Spark-side page
-        # expression, token for token)
-        "c4_clean": """
-WITH u AS (
-  SELECT doc_id,
-    'Intro sentence number ' || CAST(doc_id AS VARCHAR) || '.'
-    || chr(10)
-    || CASE WHEN doc_id % 3 = 0 THEN 'short.'
-            ELSE 'This kept line has plenty of words.' END
-    || chr(10)
-    || 'no terminal punct here ' || substr(text, 1, 20)
-    || chr(10)
-    || CASE WHEN doc_id % 2 = 0
-            THEN 'One more. And another! Plus a third? Then four.'
-                 || ' Finally five.'
-            ELSE 'Just one more here.' END
-    || CASE WHEN doc_id % 7 = 0
-            THEN chr(10) || 'Filler Lorem Ipsum paragraph.'
-            ELSE '' END
-    || CASE WHEN doc_id % 11 = 0
-            THEN chr(10) || 'Contains a { brace in code.'
-            ELSE '' END AS text
-  FROM documents
-), k AS (
-  SELECT doc_id, text,
-    string_split(text, chr(10)) AS lines,
-    list_filter(string_split(text, chr(10)),
-      x -> right(rtrim(x), 1) IN ('.', '!', '?', '"')
-       AND len(list_filter(string_split(x, ' '), w -> w <> '')) >= 5)
-      AS kept
-  FROM u
-), c AS (
-  SELECT doc_id, text,
-    CAST(len(lines) AS BIGINT) AS n_lines,
-    CAST(len(kept) AS BIGINT) AS n_kept_lines,
-    -- DuckDB array_to_string([]) is NULL where Spark array_join([])
-    -- is '' — reachable now that a page can keep zero lines
-    coalesce(array_to_string(kept, chr(10)), '') AS clean_text
-  FROM k
+""")
+def _data_mixture_pipeline(spark, sf_dir):
+    """The selection/mixture layer end-to-end, as ONE declared query
+    with ONE composed oracle (the web_curation_pipeline pattern
+    applied to the sampling side): CCNet perplexity bucketing
+    (tercile keep gate, rates 1.0/0.5/0.1) → soft dedup weights
+    (1/cluster_size over canonical_docs of the KEPT corpus) →
+    temperature-mixture allocation (T = 0.7 over the WEIGHTED
+    per-source token mass) with the equal-weight token_budget_plan
+    twin columns beside it, over a 10M-token budget. Green pins the
+    stage HANDOFFS — keep flags filtering the dedup-cluster universe,
+    cluster weights scaling the per-source inventories the allocator
+    normalizes — which the per-operator oracles cannot see.
+
+    Cross-engine determinism: the stage handoff is kept in exact
+    integers — each doc's 6-dp soft weight travels as BIGINT
+    micro-units w6 = round(1e6 / n_members), so the per-source
+    effective mass eff6 = Σ t·w6 is an exact BIGINT sum and the
+    temperature shares divide BIGINT by BIGINT (the
+    temperature_mixture_plan IEEE rule); the only libm term p^0.7 is
+    round-9 DECIMAL(18,9) summed exactly. (A cluster larger than 2M
+    members would floor w6 to 0 — acceptable: a 2M-way duplicate
+    contributes ~nothing by design.)
+
+    Stage bite (oracle funnel, sf0.1): 5000 docs → ~3250 kept by the
+    perplexity gate → clusters re-formed on the kept corpus →
+    per-source weighted masses ~2-5% below raw token counts → 5
+    allocation rows. Scale shape: stage 1 is the perplexity scorer
+    (one token-grain agg) + broadcast cutoffs; stage 2 is the
+    LSH/components machinery of canonical_docs; stage 3-4 are
+    source-grain aggregates with one-row broadcasts — composition
+    adds ONE doc-grain join (kept ⋈ weights), nothing else
+    corpus-scale. The kept corpus is localCheckpointed once (it
+    feeds both the cluster build and the token projection)."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        ccnet_perplexity_buckets,
+    )
+
+    docs = _docs(spark, sf_dir)
+    # stage 1: CCNet perplexity keep gate
+    keep_ids = (
+        ccnet_perplexity_buckets(docs).filter("keep").select("doc_id")
+    )
+    kept = docs.join(keep_ids, "doc_id", "left_semi").localCheckpoint(
+        eager=False
+    )
+    # stage 2: soft dedup weights over the kept corpus, as exact
+    # BIGINT micro-units (w6 = round(1e6 / cluster_size))
+    wts = D.canonical_docs(kept).select(
+        "doc_id",
+        F.round(F.lit(1000000.0) / F.col("n_members"))
+        .cast("bigint")
+        .alias("w6"),
+    )
+    # stage 3: weighted per-source effective token mass (exact BIGINT)
+    per = (
+        kept.select(
+            "doc_id",
+            "source",
+            F.expr("size(split(text, ' '))").cast("long").alias("t"),
+        )
+        .join(wts, "doc_id")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("t").cast("bigint").alias("n_tokens"),
+            F.sum(F.col("t") * F.col("w6")).cast("bigint").alias("eff6"),
+        )
+    )
+    # stage 4: temperature allocator (T=0.7) over eff6 + the
+    # equal-weight token_budget_plan twin
+    budget = 10_000_000
+    tot = per.agg(
+        F.sum("eff6").cast("bigint").alias("__tot6"),
+        F.count(F.lit(1)).cast("bigint").alias("n_sources"),
+    )
+    shared = per.crossJoin(F.broadcast(tot)).withColumn(
+        "__p",
+        F.col("eff6").cast("double") / F.col("__tot6").cast("double"),
+    )
+    keyed = shared.withColumn(
+        "__pt",
+        F.round(F.pow(F.col("__p"), F.lit(0.7)), 9).cast(
+            "decimal(18,9)"
+        ),
+    )
+    normz = keyed.agg(F.sum("__pt").alias("__z"))
+    out = (
+        keyed.crossJoin(F.broadcast(normz))
+        .withColumn(
+            "w9",
+            F.round(
+                F.col("__pt").cast("double")
+                / F.col("__z").cast("double"),
+                9,
+            ),
+        )
+        .withColumn(
+            "allocated_tokens",
+            F.floor(F.lit(budget) * F.col("w9")).cast("bigint"),
+        )
+    )
+    effd = F.col("eff6").cast("double") / F.lit(1000000.0)
+    rate = F.col("allocated_tokens").cast("double") / effd
+    eq_alloc = F.expr(f"{budget}L DIV n_sources").cast("bigint")
+    return out.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        F.round(effd, 6).alias("eff_tokens"),
+        F.round("__p", 6).alias("natural_share"),
+        F.round("w9", 6).alias("weight"),
+        "allocated_tokens",
+        F.round(F.least(F.lit(1.0), rate), 6).alias("sample_rate"),
+        F.round(rate, 6).alias("epochs"),
+        eq_alloc.alias("equal_allocated_tokens"),
+        F.round(eq_alloc.cast("double") / effd, 6).alias(
+            "equal_epochs"
+        ),
+    )
+
+
+@_query("line_dedup_pages", _line_dedup_oracle())
+def _line_dedup_pages(spark, sf_dir):
+    """CCNet/RefinedWeb-style cross-document line dedup with document
+    rewrite (operators/dedup.py::line_dedup, keep_first mode): the
+    synthetic pages share their boilerplate lines ('short.', the
+    parity and filler lines) across every document, so the operator
+    keeps one canonical occurrence of each normalized duplicate line
+    and rewrites every other page without it — live at ALL SFs
+    (unlike the doc-grain dedup stages, which only bite at sf0.1).
+    The page-text lead line is unique per distinct text, so pages
+    survive with their content intact. Oracle: same page CTE, same
+    normalization (lowercase, digits stripped, whitespace collapsed,
+    trimmed), DuckDB window row_number for the first occurrence
+    (the Spark side uses a partial-aggregable min-of-struct instead —
+    same result, skew-safe plan)."""
+    from recmetrics_pyspark_spark.operators.dedup import line_dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    pages = _synthetic_pages(docs).select("doc_id", "text")
+    return line_dedup(pages, min_df=2, mode="keep_first")
+
+
+@_query("line_dedup_pages_mindf3", _line_dedup_oracle(min_df=3))
+def _line_dedup_pages_mindf3(spark, sf_dir):
+    """min_df sensitivity row for line_dedup (same pages, same
+    keep_first mode, threshold raised to 3): a line must appear in
+    >= 3 DISTINCT documents before the dedup engages, so df-2 lines
+    — e.g. the lead lines of exact-duplicate page texts, live at
+    sf0.1 — survive untouched here while line_dedup_pages drops
+    them. Pins the threshold semantics (distinct-doc df, strict <
+    comparison) under rotation; boilerplate lines shared by every
+    page dedup identically in both rows."""
+    from recmetrics_pyspark_spark.operators.dedup import line_dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    pages = _synthetic_pages(docs).select("doc_id", "text")
+    return line_dedup(pages, min_df=3, mode="keep_first")
+
+
+@_query("line_dedup_pages_dropall", _line_dedup_oracle(mode="drop_all"))
+def _line_dedup_pages_dropall(spark, sf_dir):
+    """The drop_all branch of line_dedup (RefinedWeb-style
+    boilerplate removal: EVERY occurrence of a cross-document
+    duplicated line is dropped, no canonical survivor) over the same
+    synthetic pages — driver-pins the mode the standalone keep_first
+    query (line_dedup_pages) and the pipeline composition cannot
+    reach. Oracle: the shared _line_dedup_ctes fragment with the
+    first-occurrence exemption compiled out."""
+    from recmetrics_pyspark_spark.operators.dedup import line_dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    pages = _synthetic_pages(docs).select("doc_id", "text")
+    return line_dedup(pages, min_df=2, mode="drop_all")
+
+
+@_query("incremental_line_dedup_pages", _incremental_line_dedup_oracle())
+def _incremental_line_dedup_pages(spark, sf_dir):
+    """Batch-vs-state line dedup (operators/dedup.py::
+    incremental_line_dedup): pages with doc_id % 5 == 0 arrive as the
+    new batch; the rest are the accumulated corpus whose line-hash
+    state (line_stats_table) is already built. Stream-consistent
+    keep_first: a batch line duplicated in HISTORY is always dropped
+    (the shipped copy is immutable); a line first duplicated within
+    the batch keeps its smallest (id, pos) occurrence. Live at all
+    SFs — the page boilerplate lines sit in the history state with
+    n_docs >= min_df, so every batch page gets rewritten."""
+    from recmetrics_pyspark_spark.operators.dedup import (
+        incremental_line_dedup,
+        line_stats_table,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    pages = _synthetic_pages(docs).select("doc_id", "text")
+    batch = pages.filter(F.col("doc_id") % 5 == 0)
+    hist = pages.filter(F.col("doc_id") % 5 != 0)
+    return incremental_line_dedup(batch, line_stats_table(hist))
+
+
+# mirrors functions/curation.py::temperature_mixture_plan:
+# the only libm term p^0.7 is pre-rounded to 9 decimals and
+# summed as exact DECIMAL(18,9) on BOTH engines, so the
+# normalizer and every downstream floor/round agree bitwise
+@_query("temperature_mixture_plan", """
+WITH per AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+  FROM documents GROUP BY 1
+), tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM per),
+p1 AS (
+  SELECT source, n_docs, n_tokens,
+    CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE) AS p,
+    CAST(round(pow(CAST(n_tokens AS DOUBLE) / CAST(tot AS DOUBLE),
+                   0.7), 9) AS DECIMAL(18,9)) AS pt
+  FROM per CROSS JOIN tot
+), z AS (SELECT sum(pt) AS z FROM p1),
+w AS (
+  SELECT source, n_docs, n_tokens, p,
+    round(CAST(pt AS DOUBLE) / CAST(z AS DOUBLE), 9) AS w9
+  FROM p1 CROSS JOIN z
 )
-SELECT doc_id, n_lines, n_kept_lines,
-  CAST(len(clean_text) - len(translate(clean_text, '.!?', ''))
-       AS BIGINT) AS n_sentences,
-  contains(lower(text), 'lorem ipsum') AS has_lorem_ipsum,
-  contains(text, '{') AS has_curly_brace,
-  (len(clean_text) - len(translate(clean_text, '.!?', '')) >= 3
-   AND NOT contains(lower(text), 'lorem ipsum')
-   AND NOT contains(text, '{')) AS keep,
-  clean_text
+SELECT source, n_docs, n_tokens,
+  round(p, 6) AS natural_share,
+  round(w9, 6) AS weight,
+  CAST(floor(10000000 * w9) AS BIGINT) AS allocated_tokens,
+  round(least(1.0, floor(10000000 * w9)
+              / CAST(n_tokens AS DOUBLE)), 6) AS sample_rate,
+  round(floor(10000000 * w9) / CAST(n_tokens AS DOUBLE), 6)
+    AS epochs
+FROM w
+""")
+def _temperature_mixture_plan(spark, sf_dir):
+    """Temperature-scaled mixture allocator (functions/curation.py::
+    temperature_mixture_plan): the GPT-3 / XLM-R T=0.7 flattening of
+    natural source shares — w_i = p_i^0.7 / Σ p_j^0.7 — with per-
+    source allocations, keep rates, and epoch factors over a 10M
+    token budget."""
+    return C.temperature_mixture_plan(
+        load_table(spark, sf_dir, "documents"), 10_000_000, 0.7
+    )
+
+
+# mirrors functions/evals.py::rouge_n (n=2): bigrams built by
+# a list_transform over positions, clipped multiset overlap by
+# the same distinct-gram least() rule as qa_eval_docs
+@_query("rouge2_eval_docs", r"""
+WITH t AS (
+  SELECT doc_id AS id,
+    list_slice(string_split(text, ' '), 1, 12) AS p,
+    list_slice(string_split(text, ' '), 7, 18) AS r
+  FROM documents),
+g AS (
+  SELECT id,
+    CASE WHEN len(p) < 2 THEN [] ELSE
+      list_transform(generate_series(1, len(p) - 1),
+                     i -> array_to_string(p[i:i+1], ' ')) END AS pg,
+    CASE WHEN len(r) < 2 THEN [] ELSE
+      list_transform(generate_series(1, len(r) - 1),
+                     i -> array_to_string(r[i:i+1], ' ')) END AS rg
+  FROM t),
+c AS (
+  SELECT id, pg, rg,
+    CAST(coalesce(list_sum(list_transform(list_distinct(pg), gm ->
+      least(len(list_filter(pg, x1 -> x1 = gm)),
+            len(list_filter(rg, x2 -> x2 = gm))))), 0) AS BIGINT)
+      AS overlap
+  FROM g)
+SELECT id, CAST(len(pg) AS BIGINT) AS n_pred_grams,
+  CAST(len(rg) AS BIGINT) AS n_ref_grams, overlap,
+  CASE WHEN len(pg) = 0 THEN 0.0
+    ELSE round(overlap / CAST(len(pg) AS DOUBLE), 6) END AS rouge_p,
+  CASE WHEN len(rg) = 0 THEN 0.0
+    ELSE round(overlap / CAST(len(rg) AS DOUBLE), 6) END AS rouge_r,
+  CASE WHEN overlap = 0 THEN 0.0 ELSE
+    round(2 * (overlap / CAST(len(pg) AS DOUBLE))
+            * (overlap / CAST(len(rg) AS DOUBLE))
+          / ((overlap / CAST(len(pg) AS DOUBLE))
+             + (overlap / CAST(len(rg) AS DOUBLE))), 6) END
+    AS rouge_f1
 FROM c
-""",
-        # mirrors operators/dedup.py::ngram_decontaminate over the
-        # src0-eval / rest-train split (word-5-gram shingles over the
-        # WHITESPACE-CLASS token split — cross-corpus formatting noise
-        # must not defeat collisions — positions
-        # 1..greatest(len-k+1, 1), distinct per doc; zero-token docs
-        # dropped on both sides; the train side additionally emits
-        # full n-grams at each distinct sub-k eval-doc length — the
-        # GPT-3 min(k, len) containment rule — INERT at every test SF
-        # (min doc length 10 words > k=5; the live-regime cross-engine
-        # pin is tests/test_round9_ops.py)
-        "ngram_decontaminate": """
-WITH d AS (
-  SELECT doc_id, source,
-    list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
-                x -> x <> '') AS toks
-  FROM documents
-), dn AS (
-  SELECT * FROM d WHERE len(toks) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, source,
-    array_to_string(list_slice(toks, i, i + 4), ' ') AS shingle
-  FROM dn, unnest(generate_series(1, greatest(len(toks) - 4, 1))) u(i)
-), ev AS (
-  SELECT DISTINCT shingle, doc_id AS eval_id FROM sh
-  WHERE source = 'src0'
-), shortn AS (
-  SELECT DISTINCT len(toks) AS n FROM dn
-  WHERE source = 'src0' AND len(toks) < 5
-), tr AS (
-  SELECT doc_id, shingle FROM sh WHERE source <> 'src0'
-  UNION ALL
-  SELECT dn.doc_id,
-    array_to_string(list_slice(toks, i, i + n - 1), ' ') AS shingle
-  FROM dn, shortn,
-    unnest(generate_series(1, len(toks) - n + 1)) u(i)
-  WHERE dn.source <> 'src0' AND len(dn.toks) >= shortn.n
-)
-SELECT tr.doc_id AS doc_id,
-  CAST(count(DISTINCT tr.shingle) AS BIGINT) AS n_collisions,
-  CAST(count(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs,
-  min(tr.shingle) AS sample_shingle
-FROM tr JOIN ev USING (shingle)
-GROUP BY tr.doc_id
-""",
-        # eval-grain twin: same collision join (incl. the short-eval
-        # containment grams + zero-token filter), grouped by the eval
-        # document (operators/dedup.py::eval_contamination_report)
-        "eval_contamination_report": """
-WITH d AS (
-  SELECT doc_id, source,
-    list_filter(regexp_split_to_array(text, '[ \t\n\r]+'),
-                x -> x <> '') AS toks
-  FROM documents
-), dn AS (
-  SELECT * FROM d WHERE len(toks) > 0
-), sh AS (
-  SELECT DISTINCT doc_id, source,
-    array_to_string(list_slice(toks, i, i + 4), ' ') AS shingle
-  FROM dn, unnest(generate_series(1, greatest(len(toks) - 4, 1))) u(i)
-), ev AS (
-  SELECT DISTINCT shingle, doc_id AS eval_id FROM sh
-  WHERE source = 'src0'
-), shortn AS (
-  SELECT DISTINCT len(toks) AS n FROM dn
-  WHERE source = 'src0' AND len(toks) < 5
-), tr AS (
-  SELECT doc_id, shingle FROM sh WHERE source <> 'src0'
-  UNION ALL
-  SELECT dn.doc_id,
-    array_to_string(list_slice(toks, i, i + n - 1), ' ') AS shingle
-  FROM dn, shortn,
-    unnest(generate_series(1, len(toks) - n + 1)) u(i)
-  WHERE dn.source <> 'src0' AND len(dn.toks) >= shortn.n
-)
-SELECT ev.eval_id AS eval_id,
-  CAST(count(DISTINCT tr.shingle) AS BIGINT) AS n_collisions,
-  CAST(count(DISTINCT tr.doc_id) AS BIGINT) AS n_train_docs,
-  min(tr.shingle) AS sample_shingle
-FROM tr JOIN ev USING (shingle)
-GROUP BY ev.eval_id
-""",
-        "peak_concurrency": """
-WITH s AS (
-  SELECT user_id AS u, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-         OR date_diff('microsecond', lag(ts) OVER w, ts) > 1800000000
-         THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-), sess AS (
-  SELECT u, sid,
-    epoch_us(min(ts)) AS s_us, epoch_us(max(ts)) AS e_us,
-    CAST(min(ts) AS DATE) AS s_day, CAST(max(ts) AS DATE) AS e_day
-  FROM (SELECT u, ts,
-          sum(new_s) OVER (PARTITION BY u ORDER BY ts) AS sid
-        FROM s) t
-  GROUP BY u, sid
-), segs AS (
-  SELECT day,
-    greatest(s_us, epoch_us(CAST(day AS TIMESTAMP))) AS a_us,
-    least(e_us,
-          epoch_us(CAST((day + 1) AS TIMESTAMP)) - 1) AS b_us
-  FROM (SELECT unnest(generate_series(s_day, e_day,
-                                      INTERVAL 1 DAY))::DATE AS day,
-          s_us, e_us
-        FROM sess) g
-), pts AS (
-  SELECT day, p,
-    CAST(sum(is_s) AS BIGINT) AS s_cnt,
-    CAST(sum(1 - is_s) AS BIGINT) AS e_cnt
-  FROM (
-    SELECT day, a_us AS p, 1 AS is_s FROM segs
-    UNION ALL
-    SELECT day, b_us AS p, 0 AS is_s FROM segs) u
-  GROUP BY day, p
-), act AS (
-  SELECT day,
-    sum(s_cnt) OVER wd - (sum(e_cnt) OVER wd - e_cnt) AS active
-  FROM pts WINDOW wd AS (PARTITION BY day ORDER BY p
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-), pk AS (
-  SELECT day, CAST(max(active) AS BIGINT) AS peak_concurrent
-  FROM act GROUP BY day
-), ns AS (
-  SELECT day, CAST(count(*) AS BIGINT) AS n_sessions
-  FROM segs GROUP BY day
-)
-SELECT CAST(pk.day AS VARCHAR) AS day, peak_concurrent, n_sessions
-FROM pk JOIN ns ON pk.day = ns.day ORDER BY day
-""",
-        "lsh_parameter_plan": """
-WITH grid AS (
-  SELECT b.bands, r.rows_per_band
-  FROM (VALUES (4), (8), (16), (32)) b(bands)
-  CROSS JOIN (VALUES (2), (4), (8)) r(rows_per_band)
-)
-SELECT CAST(bands AS INT) AS bands,
-  CAST(rows_per_band AS INT) AS rows_per_band,
-  round(round(pow(1.0 / bands, 1.0 / rows_per_band), 9), 6)
-    AS approx_threshold,
-  round(round(1.0 - pow(1.0 - pow(0.5, rows_per_band), bands), 9), 6)
-    AS p_at_s50,
-  round(round(1.0 - pow(1.0 - pow(0.7, rows_per_band), bands), 9), 6)
-    AS p_at_s70,
-  round(round(1.0 - pow(1.0 - pow(0.8, rows_per_band), bands), 9), 6)
-    AS p_at_s80,
-  round(round(1.0 - pow(1.0 - pow(0.9, rows_per_band), bands), 9), 6)
-    AS p_at_s90
-FROM grid ORDER BY bands, rows_per_band
-""",
-        "corpus_entropy": """
-WITH toks AS (SELECT string_split(text, ' ') AS tk FROM documents),
-uni AS (
-  SELECT tok, count(*) AS n
-  FROM (SELECT unnest(tk) AS tok FROM toks) u GROUP BY tok
-), ut AS (SELECT sum(n) AS tot FROM uni),
-hu AS (
-  SELECT CAST(max(tot) AS BIGINT) AS n_tokens,
-    CAST(count(*) AS BIGINT) AS n_unigrams,
-    sum(CAST(round(-(n / CAST(tot AS DOUBLE))
-                   * log2(n / CAST(tot AS DOUBLE)), 9)
-             AS DECIMAL(18,9))) AS h_uni
-  FROM uni CROSS JOIN ut
-), bi AS (
-  SELECT tk[i] AS tok, tk[i+1] AS nxt, count(*) AS n
-  FROM toks, unnest(generate_series(1, len(tk) - 1)) AS u(i)
-  GROUP BY 1, 2
-), bt AS (SELECT sum(n) AS tot FROM bi),
-hb AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_bigrams,
-    sum(CAST(round(-(n / CAST(tot AS DOUBLE))
-                   * log2(n / CAST(tot AS DOUBLE)), 9)
-             AS DECIMAL(18,9))) AS h_bi
-  FROM bi CROSS JOIN bt
-)
-SELECT n_tokens, n_unigrams, n_bigrams,
-  round(CAST(h_uni AS DOUBLE), 6) AS h_unigram,
-  round(CAST(h_bi AS DOUBLE), 6) AS h_bigram,
-  round(CAST(h_bi - h_uni AS DOUBLE), 6) AS h_cond
-FROM hu CROSS JOIN hb
-""",
-        "seasonal_decompose_events": """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d,
-    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS v_dec
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-), tr AS (
-  SELECT d, v_dec,
-    count(*) OVER w AS n_frame,
-    CAST(sum(v_dec) OVER w AS DECIMAL(18,6)) AS t_sum
-  FROM daily
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-), t2 AS (
-  SELECT d, v_dec,
-    CAST(t_sum AS DOUBLE) / 7.0 AS trend_raw,
-    CAST(round(CAST(v_dec AS DOUBLE) - CAST(t_sum AS DOUBLE) / 7.0, 6)
-         AS DECIMAL(18,6)) AS detr,
-    isodow(d) AS iso_dow
-  FROM tr WHERE n_frame = 7
-), seas AS (
-  SELECT iso_dow, CAST(sum(detr) AS DOUBLE) / count(*) AS seasonal_raw
-  FROM t2 GROUP BY 1
-)
-SELECT CAST(d AS VARCHAR) AS day,
-  round(CAST(v_dec AS DOUBLE), 6) AS value,
-  round(trend_raw, 6) AS trend,
-  round(seasonal_raw, 6) AS seasonal,
-  round(CAST(v_dec AS DOUBLE) - trend_raw - seasonal_raw, 6)
-    AS residual
-FROM t2 JOIN seas USING (iso_dow) ORDER BY day
-""",
-        "shipping_sla_compliance": """
+""")
+def _rouge2_eval_docs(spark, sf_dir):
+    """ROUGE-2 per example (functions/evals.py::rouge_n): candidates
+    = first 12 tokens of each doc, references = tokens 7-18 —
+    deterministic partial overlap, so precision/recall/F1 spread
+    across the whole [0, 1] range. Scan-local array lambdas, zero
+    shuffles."""
+    from recmetrics_pyspark_spark.functions.evals import rouge_n
+
+    docs = _docs(spark, sf_dir)
+    t = docs.select(
+        "doc_id",
+        F.expr("array_join(slice(split(text, ' '), 1, 12), ' ')").alias(
+            "pred"
+        ),
+        F.expr("array_join(slice(split(text, ' '), 7, 12), ' ')").alias(
+            "ref"
+        ),
+    )
+    return rouge_n(t, "doc_id", "pred", "ref", n=2)
+
+
+# mirrors functions/curation.py::nb_quality_classifier:
+# per-class Laplace token likelihoods; each ln() rounded to 9
+# decimals as DECIMAL(18,9) BEFORE the per-doc sum (the
+# doc_perplexity house rule), prior nullif-guarded
+@_query("nb_source_classifier", """
+WITH lab AS (
+  SELECT doc_id,
+    CAST(CASE WHEN source IN ('src0','src1','src2','src3')
+         THEN 1 ELSE 0 END AS INT) AS y, text
+  FROM documents),
+toks AS (
+  SELECT doc_id, y, unnest(string_split(text, ' ')) AS w FROM lab),
+st AS (
+  SELECT w, CAST(sum(y) AS BIGINT) AS c_pos,
+    CAST(sum(1 - y) AS BIGINT) AS c_neg
+  FROM toks GROUP BY 1),
+tot AS (
+  SELECT CAST(sum(c_pos) AS BIGINT) AS n_pos,
+    CAST(sum(c_neg) AS BIGINT) AS n_neg,
+    CAST(count(*) AS BIGINT) AS v
+  FROM st),
+llr AS (
+  SELECT w,
+    CAST(round(ln((c_pos + 1) / CAST(n_pos + v AS DOUBLE)), 9)
+         AS DECIMAL(18,9))
+  - CAST(round(ln((c_neg + 1) / CAST(n_neg + v AS DOUBLE)), 9)
+         AS DECIMAL(18,9)) AS llr9
+  FROM st CROSS JOIN tot),
+pri AS (
+  SELECT CAST(round(ln(CAST(sum(y) AS DOUBLE)
+    / nullif(CAST(sum(1 - y) AS DOUBLE), 0.0)), 9)
+    AS DECIMAL(18,9)) AS prior9
+  FROM lab),
+per AS (
+  SELECT doc_id, any_value(y) AS is_labeled_pos,
+    CAST(count(*) AS BIGINT) AS n_tokens, sum(llr9) AS s
+  FROM toks JOIN llr USING (w) GROUP BY 1)
+SELECT doc_id, is_labeled_pos, n_tokens,
+  round(CAST(prior9 + s AS DOUBLE), 6) AS nb_log_odds,
+  CAST(CASE WHEN CAST(prior9 + s AS DOUBLE) > 0 THEN 1
+            WHEN CAST(prior9 + s AS DOUBLE) <= 0 THEN 0
+       END AS INT) AS predicted_pos
+FROM per CROSS JOIN pri
+""")
+def _nb_source_classifier(spark, sf_dir):
+    """GPT-3-style quality classifier (functions/curation.py::
+    nb_quality_classifier): multinomial Naive Bayes trained in one
+    aggregation pass with sources src0-src3 as the 'curated' positive
+    class, then every document scored by its smoothed log-odds.
+    Token-grain + doc-grain shuffles only; the vocabulary-scale LLR
+    table broadcasts."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        nb_quality_classifier,
+    )
+
+    docs = _docs(spark, sf_dir).withColumn(
+        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
+    return nb_quality_classifier(docs, "is_hq")
+
+
+# mirrors functions/curation.py::nb_train + nb_score: model
+# trained on doc_id % 5 != 0, held-out 20% scored with the
+# Laplace unseen-token constant via a LEFT join + coalesce
+@_query("nb_score_holdout", _NB_HOLDOUT_SQL)
+def _nb_score_holdout(spark, sf_dir):
+    """Train-offline / score-online NB split (functions/curation.py::
+    nb_train + nb_score): the model is trained on the 80% of
+    documents with doc_id % 5 != 0 and scores the held-out 20% —
+    out-of-vocabulary tokens take the model's constant unseen_llr9,
+    driver-pinning the Laplace fallback path the in-corpus classifier
+    never exercises."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        nb_score,
+        nb_train,
+    )
+
+    docs = _docs(spark, sf_dir).withColumn(
+        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
+    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
+    return nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
+
+
+# mirrors functions/evals.py::classifier_eval over the
+# nb_score_holdout pipeline: distinct-score-grain average
+# ranks (DECIMAL(28,1) rank mass), rank-sum AUC, confusion at
+# threshold 0 — the holdout SQL is reused verbatim as the
+# scored subquery (single source of truth)
+@_query("nb_holdout_eval", f"""
 WITH j AS (
-  SELECT o_orderpriority,
-    CAST(date_diff('day', o_orderdate, l_shipdate) AS BIGINT) AS lag
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)
-SELECT o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n_lines,
-  round(CAST(sum(CASE WHEN lag <= 7 THEN 1 ELSE 0 END) AS DOUBLE)
-        / count(*), 6) AS pct_within_7d,
-  round(CAST(sum(lag) AS DOUBLE) / count(*), 6) AS avg_lag_days,
-  quantile_cont(lag, 0.9) AS p90_lag_days
-FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority
-""",
-    }
+  SELECT d.y, sc.nb_log_odds AS s
+  FROM ({_NB_HOLDOUT_SQL}) sc
+  JOIN (
+    SELECT doc_id,
+      CAST(CASE WHEN source IN ('src0','src1','src2','src3')
+           THEN 1 ELSE 0 END AS INT) AS y
+    FROM documents) d USING (doc_id)
+  WHERE sc.nb_log_odds IS NOT NULL),
+g AS (
+  SELECT s, CAST(count(*) AS BIGINT) AS n,
+    CAST(sum(y) AS BIGINT) AS np
+  FROM j GROUP BY 1),
+r AS (
+  SELECT n, np, s,
+    CAST(np * (coalesce(sum(n) OVER (ORDER BY s
+        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      + (n + 1) / 2.0) AS DECIMAL(28,1)) AS prm
+  FROM g),
+a AS (
+  SELECT CAST(sum(np) AS BIGINT) AS n_pos,
+    CAST(sum(n) - sum(np) AS BIGINT) AS n_neg,
+    CAST(sum(CASE WHEN s > 0.0 THEN np ELSE 0 END) AS BIGINT) AS tp,
+    CAST(sum(CASE WHEN s > 0.0 THEN n - np ELSE 0 END) AS BIGINT)
+      AS fp,
+    sum(prm) AS spr
+  FROM r)
+SELECT n_pos, n_neg, tp, fp,
+  CAST(n_pos - tp AS BIGINT) AS fn,
+  CAST(n_neg - fp AS BIGINT) AS tn,
+  round(tp / nullif(CAST(tp + fp AS DOUBLE), 0.0), 6) AS precision,
+  round(tp / nullif(CAST(n_pos AS DOUBLE), 0.0), 6) AS recall,
+  round(2 * (tp / nullif(CAST(tp + fp AS DOUBLE), 0.0))
+          * (tp / nullif(CAST(n_pos AS DOUBLE), 0.0))
+        / nullif((tp / nullif(CAST(tp + fp AS DOUBLE), 0.0))
+               + (tp / nullif(CAST(n_pos AS DOUBLE), 0.0)), 0.0), 6)
+    AS f1,
+  round((CAST(spr AS DOUBLE) - n_pos * (n_pos + 1) / 2.0)
+        / nullif(CAST(n_pos * n_neg AS DOUBLE), 0.0), 6) AS auc
+FROM a
+""")
+def _nb_holdout_eval(spark, sf_dir):
+    """Classifier quality report (functions/evals.py::
+    classifier_eval) over the nb_score_holdout pipeline: confusion
+    matrix at threshold 0, precision/recall/F1, and tie-aware
+    rank-sum ROC AUC of the held-out 20% against their true source
+    labels — the evaluate stage of train -> score -> evaluate."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        nb_score,
+        nb_train,
+    )
+    from recmetrics_pyspark_spark.functions.evals import (
+        classifier_eval,
+    )
+
+    docs = _docs(spark, sf_dir).withColumn(
+        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
+    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
+    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
+    labeled = scored.join(
+        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
+        "doc_id",
+    )
+    return classifier_eval(labeled, "y", "nb_log_odds")
+
+
+# mirrors operators/dedup.py::remove_duplicated_spans: the
+# detector's span CTEs (shared verbatim) + a per-token
+# anti-range filter and in-order reassembly
+@_query("remove_duplicated_spans_docs", _DUP_SPANS_CTES + """
+, tok AS (
+  SELECT doc_id, i, toks[i] AS t
+  FROM d, unnest(generate_series(1, len(toks))) AS u(i)
+), kept AS (
+  SELECT tok.doc_id, tok.i, tok.t FROM tok
+  WHERE NOT EXISTS (
+    SELECT 1 FROM spansf sp
+    WHERE sp.doc_id = tok.doc_id
+      AND tok.i BETWEEN sp.start_tok AND sp.end_tok)
+), agg AS (
+  SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS clean_text,
+    CAST(count(*) AS BIGINT) AS n_kept
+  FROM kept GROUP BY 1)
+SELECT d.doc_id, coalesce(agg.clean_text, '') AS clean_text,
+  CAST(len(d.toks) AS BIGINT) AS n_tokens,
+  CAST(len(d.toks) - coalesce(agg.n_kept, 0) AS BIGINT)
+    AS n_tokens_removed
+FROM d LEFT JOIN agg USING (doc_id)
+""")
+def _remove_duplicated_spans_docs(spark, sf_dir):
+    """Exact-substring dedup REWRITE (operators/dedup.py::
+    remove_duplicated_spans): every token inside a corpus-duplicated
+    span is deleted from every carrier and documents re-assembled in
+    token order — the Lee et al. 2022 treatment consuming
+    duplicated_spans' detection; array-local filter, no second
+    corpus pass."""
+    return D.remove_duplicated_spans(_docs(spark, sf_dir))
+
+
+# mirrors functions/evals.py::calibration_bins over the NB
+# holdout scores: sigmoid pre-rounded to 9 (binning agrees
+# across engines), DECIMAL bin means and gap masses, both ECE
+# sums cast to double before dividing
+@_query("nb_calibration_bins", f"""
+WITH j AS (
+  SELECT d.y,
+    round(1.0 / (1.0 + exp(-sc.nb_log_odds)), 9) AS p
+  FROM ({_NB_HOLDOUT_SQL}) sc
+  JOIN (
+    SELECT doc_id,
+      CAST(CASE WHEN source IN ('src0','src1','src2','src3')
+           THEN 1 ELSE 0 END AS INT) AS y
+    FROM documents) d USING (doc_id)
+  WHERE sc.nb_log_odds IS NOT NULL),
+b AS (
+  SELECT y, p,
+    CAST(greatest(0, least(9, floor(p * 10))) AS INT) AS bin
+  FROM j),
+per AS (
+  SELECT bin, CAST(count(*) AS BIGINT) AS n,
+    CAST(sum(y) AS BIGINT) AS sy,
+    sum(CAST(round(p, 9) AS DECIMAL(18,9))) AS sp9
+  FROM b GROUP BY 1),
+g AS (
+  SELECT bin, n, sy, sp9,
+    CAST(round(abs(sy / CAST(n AS DOUBLE)
+                   - CAST(sp9 AS DOUBLE) / n) * n, 9)
+         AS DECIMAL(28,9)) AS gm9
+  FROM per),
+tot AS (
+  SELECT CAST(sum(gm9) AS DOUBLE) AS sgm,
+    CAST(sum(n) AS DOUBLE) AS sn
+  FROM g)
+SELECT bin, bin / 10.0 AS bin_lo, n,
+  round(CAST(sp9 AS DOUBLE) / n, 6) AS mean_prob,
+  round(sy / CAST(n AS DOUBLE), 6) AS pos_rate,
+  round(abs(sy / CAST(n AS DOUBLE)
+            - CAST(sp9 AS DOUBLE) / n), 6) AS abs_gap,
+  round(sgm / sn, 6) AS ece
+FROM g CROSS JOIN tot
+""")
+def _nb_calibration_bins(spark, sf_dir):
+    """Reliability diagram + ECE (functions/evals.py::
+    calibration_bins) of the NB holdout scores: log-odds squashed
+    through a sigmoid pre-rounded to 9 decimals (so binning agrees
+    across engines), fixed-width decile bins, N-weighted |gap| ECE —
+    the calibration half of the classifier report."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        nb_score,
+        nb_train,
+    )
+    from recmetrics_pyspark_spark.functions.evals import (
+        calibration_bins,
+    )
+
+    docs = _docs(spark, sf_dir).withColumn(
+        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
+    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
+    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
+    labeled = scored.join(
+        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
+        "doc_id",
+    ).withColumn(
+        "p", F.round(1.0 / (1.0 + F.exp(-F.col("nb_log_odds"))), 9)
+    )
+    return calibration_bins(labeled, "y", "p")
+
+
+# mirrors functions/text.py::excess_surprisal: union-vocab
+# Laplace unigram bits under the scored corpus's own LM and
+# the src0 reference LM, round-9 DECIMAL sums per doc
+@_query("excess_surprisal_docs", """
+WITH sd AS (
+  SELECT doc_id, text FROM documents WHERE source != 'src0'),
+rd AS (SELECT text FROM documents WHERE source = 'src0'),
+toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM sd),
+sc AS (
+  SELECT w, CAST(count(*) AS BIGINT) AS c_self FROM toks GROUP BY 1),
+rc AS (
+  SELECT w, CAST(count(*) AS BIGINT) AS c_ref FROM (
+    SELECT unnest(string_split(text, ' ')) AS w FROM rd) t
+  GROUP BY 1),
+vocab AS (
+  SELECT coalesce(sc.w, rc.w) AS w,
+    coalesce(c_self, 0) AS c_self, coalesce(c_ref, 0) AS c_ref
+  FROM sc FULL JOIN rc ON sc.w = rc.w),
+tot AS (
+  SELECT CAST(sum(c_self) AS BIGINT) AS n_self,
+    CAST(sum(c_ref) AS BIGINT) AS n_ref,
+    CAST(count(*) AS BIGINT) AS v
+  FROM vocab),
+bits AS (
+  SELECT w,
+    CAST(round(-log2((c_self + 1) / CAST(n_self + v AS DOUBLE)), 9)
+         AS DECIMAL(18,9)) AS b_self9,
+    CAST(round(-log2((c_ref + 1) / CAST(n_ref + v AS DOUBLE)), 9)
+         AS DECIMAL(18,9)) AS b_ref9
+  FROM vocab CROSS JOIN tot)
+SELECT doc_id, n_tokens,
+  round(CAST(ss AS DOUBLE) / n_tokens, 6) AS bits_self,
+  round(CAST(sr AS DOUBLE) / n_tokens, 6) AS bits_ref,
+  round(CAST(ss - sr AS DOUBLE) / n_tokens, 6) AS excess_bits
+FROM (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+    sum(b_self9) AS ss, sum(b_ref9) AS sr
+  FROM toks JOIN bits USING (w) GROUP BY 1) p
+""")
+def _excess_surprisal_docs(spark, sf_dir):
+    """Reference-model selection signal (functions/text.py::
+    excess_surprisal): every non-src0 document scored under its own
+    corpus's unigram LM minus the src0 reference LM — the RHO-loss /
+    DoReMi-family 'learnable and not yet learned' ranking at unigram
+    grain; union-vocabulary Laplace smoothing on both sides."""
+    from recmetrics_pyspark_spark.functions.text import (
+        excess_surprisal,
+    )
+
+    docs = _docs(spark, sf_dir)
+    return excess_surprisal(
+        docs.filter(F.col("source") != "src0"),
+        docs.filter(F.col("source") == "src0"),
+    )
+
+
+# mirrors functions/curation.py::ccnet_perplexity_buckets:
+# the doc_perplexity SQL as the scorer subquery, round-6
+# quantile_cont cutoffs, mixture_sample's md5-bucket keep
+@_query("ccnet_perplexity_buckets", f"""
+WITH px AS (
+  SELECT doc_id, avg_bits FROM ({_DOC_PPLX_SQL}) t),
+cut AS (
+  SELECT round(quantile_cont(avg_bits, 0.33), 6) AS c1,
+    round(quantile_cont(avg_bits, 0.67), 6) AS c2
+  FROM px)
+SELECT doc_id, avg_bits,
+  CASE WHEN avg_bits <= c1 THEN 'head'
+       WHEN avg_bits <= c2 THEN 'middle' ELSE 'tail' END AS bucket,
+  CASE WHEN avg_bits <= c1 THEN 1.0
+       WHEN avg_bits <= c2 THEN 0.5 ELSE 0.1 END AS keep_rate,
+  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 3)) AS BIGINT)
+      / 4096.0
+    < CASE WHEN avg_bits <= c1 THEN 1.0
+           WHEN avg_bits <= c2 THEN 0.5 ELSE 0.1 END AS keep
+FROM px CROSS JOIN cut
+""")
+def _ccnet_perplexity_buckets(spark, sf_dir):
+    """CCNet head/middle/tail perplexity bucketing
+    (functions/curation.py::ccnet_perplexity_buckets): tercile
+    cutoffs over the in-corpus bigram perplexity, md5-bucket keep
+    decisions at rates 1.0/0.5/0.1 — the Wenzek et al. 2020 filter
+    step as one declared query."""
+    from recmetrics_pyspark_spark.functions.curation import (
+        ccnet_perplexity_buckets,
+    )
+
+    return ccnet_perplexity_buckets(_docs(spark, sf_dir))
+
+
+# mirrors _soft_dedup_weights: the canonical_docs oracle
+# reused verbatim, reduced to the 1/cluster_size weight
+@_query("soft_dedup_weights", f"""
+SELECT doc_id, component_id, n_members,
+  round(1.0 / n_members, 6) AS weight
+FROM ({_canonical_docs_oracle()}) t
+""")
+def _soft_dedup_weights(spark, sf_dir):
+    """Soft dedup (the SemDeDup-paper alternative to hard removal):
+    keep every near-dup cluster member but down-weight each to
+    1/cluster_size, so a cluster contributes one document's worth of
+    training mass however many copies it has. Rides canonical_docs'
+    component table (via the _neardup_comps shared build, round-12);
+    singletons weigh 1."""
+    out = D.canonical_docs(
+        _docs(spark, sf_dir), comps=_neardup_comps(spark, sf_dir)
+    )
+    return out.select(
+        "doc_id",
+        "component_id",
+        "n_members",
+        F.round(F.lit(1.0) / F.col("n_members"), 6).alias("weight"),
+    )
+
+
+NO_ORACLE = tuple(n for n, sql in _ORACLES.items() if sql is None)

@@ -1,3 +1,3 @@
-from . import relational, relational2, relational3, relational4
+from . import relational
 
-__all__ = ["relational", "relational2", "relational3", "relational4"]
+__all__ = ["relational"]

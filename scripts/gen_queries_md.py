@@ -45,9 +45,9 @@ def main() -> None:
         fn = qs[name]
         mod = inspect.getmodule(fn).__name__
         if mod == "__spark_entry__":
-            src = inspect.getsource(fn)
+            # the body only: the @_query(...) oracle SQL above it is not code
+            src = inspect.getsource(fn).split("\ndef ", 1)[-1]
             for token, target in (
-                ("Q3.", "plans.relational3"), ("Q2.", "plans.relational2"),
                 ("Q.", "plans.relational"), ("M.", "operators.metrics"),
                 ("R.", "operators.recommend"), ("D.", "operators.dedup"),
                 ("S.", "operators.similarity"), ("T.", "functions.text"),

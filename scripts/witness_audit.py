@@ -3,15 +3,15 @@
 records: for every declared query, its latest driver-witness round;
 the vintage histogram; queries never witnessed; and any witnessed
 query that has since been REMOVED from the declaration (a contract
-regression). This codifies the bookkeeping the per-round rotation
-notes (queries() docstring) and the round verdicts compute by hand —
-run it when composing the next round's witness window.
+regression). Run it when composing the next witness window: the
+first 50 names of queries(), set by ``_DRIVER_WINDOW`` in
+__spark_entry__.py.
 
 Usage: python scripts/witness_audit.py [--window]
   --window  also diff the current first-50 declaration order against
             the audit (which witnesses the window would refresh).
 
-No Spark session is created (queries() only builds the dict).
+No Spark session is created (queries() only reads the registry).
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ from recmetrics_pyspark_spark import get_spark
 # the slow lane (SPARK_GRAFT_SLOW_TESTS=1 / -m slow / direct file
 # invocation); regenerate this set from a fresh --durations run when
 # the suite drifts.
+# Slow lane: SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q -p no:cacheprovider
 _MEASURED_SLOW = frozenset({
     "test_plan_flags_match_expectations",
     "test_ngram_jaccard_bounds_and_orientation",
