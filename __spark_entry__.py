@@ -151,9 +151,11 @@ ORACLE_BASE = """WITH interactions AS (
 
 # Heavy-basket cap. The operator default is None (exact co-occurrence,
 # the reference's semantics — ADVICE r7); every declared query here
-# OPTS IN by passing max_basket=MAX_BASKET explicitly (all consumers
-# must pass the same value so their canonicalized plans share the
-# session cache), and each oracle mirrors the cut: pair GENERATION
+# OPTS IN by passing max_basket=MAX_BASKET explicitly (the graph and
+# MMR queries through the one _item_sims build; item_item_topk,
+# item_based_recommendations and association_rules share that table
+# only by plan matching, so they must pass the same value), and each
+# oracle mirrors the cut: pair GENERATION
 # reads each user's MAX_BASKET smallest item ids (row_number cut ==
 # Spark's slice(sort_array(items), 1, cap)); item sizes stay uncapped
 # on both sides. Inert on TPC-H-ish baskets (≤ ~40 items/user), live
@@ -2131,6 +2133,21 @@ def _item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared(spark, sf_dir, "item_recs", build)
 
 
+def _item_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The canonical (ia < ib) item-pair cosine table
+    (operators/metrics.py::item_similarity_pairs, min_common=2,
+    MAX_BASKET), a shared build per (application, sf_dir): the k-core,
+    PageRank, MMR, triangle, link-prediction and degree queries all
+    read it. The operator persists and materializes it."""
+    return _shared(
+        spark, sf_dir, "item_sims",
+        lambda: M.item_similarity_pairs(
+            R.interactions(spark, sf_dir), "user", "item",
+            min_common=2, max_basket=MAX_BASKET,
+        ),
+    )
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
@@ -2273,13 +2290,10 @@ def _kcore_core(spark, sf_dir):
 
 def _kcore_peel(spark, sf_dir, **peel):
     """k_core_decompose at _KCORE_K over the item co-occurrence graph
-    (the persisted item-pair table over the shared interactions)."""
+    (the shared _item_sims pair table)."""
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     return k_core_decompose(pairs, k=_KCORE_K, **peel)
 
 
@@ -3073,13 +3087,7 @@ def _pagerank_items(spark, sf_dir):
     damping 0.85 (operators/graph.py::pagerank_from_edges)."""
     from recmetrics_pyspark_spark.operators.graph import pagerank_from_edges
 
-    inter = R.interactions(spark, sf_dir)
-    # item_similarity_pairs is the persisted intermediate shared with
-    # item_item_topk — same canonicalized plan, so a session that ran
-    # the item queries reuses the cache and the graph build is free
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     edges = pairs.select(
         F.col("ia").alias("src"), F.col("ib").alias("dst")
     ).unionByName(
@@ -3862,33 +3870,9 @@ def _personalization_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Rating-weighted variant (compat.personalization_pandas semantics):
     # user vectors weighted by avg rating instead of binary.
     inter = R.interactions(spark, sf_dir, with_rating=True)
-    vecs = inter.groupBy("user", "item").agg(F.avg("rating").alias("v"))
-    norms = vecs.groupBy("user").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-    )
-    wtd = vecs.join(norms, "user").select(
-        "item", (F.col("v") / F.col("nrm")).alias("w")
-    )
-    # same closed form as metrics.personalization: per-item
-    # Σ_{u<v} w_u·w_v = ((Σw)² − Σw²)/2 — no self-join, O(nnz)
-    isum = wtd.groupBy("item").agg(
-        F.sum("w").alias("sw"), F.sum(F.col("w") * F.col("w")).alias("sww")
-    )
-    s = isum.agg(
-        F.coalesce(
-            F.sum((F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)),
-            F.lit(0.0),
-        ).alias("s")
-    )
-    n = norms.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    from pyspark.sql.functions import broadcast as bc
-
-    return s.crossJoin(bc(n)).select(
-        F.round(
-            F.lit(1.0) - F.lit(2.0) * F.col("s") / (F.col("n") * (F.col("n") - 1)),
-            6,
-        ).alias("personalization_weighted")
-    )
+    return M.personalization(
+        inter, col_index="user", col_columns="item", col_values="rating"
+    ).select(F.col("personalization").alias("personalization_weighted"))
 
 
 @_query("intra_list_similarity", ORACLE_BASE
@@ -6691,21 +6675,12 @@ def _serendipity(spark, sf_dir):
 def _mmr_rerank(spark, sf_dir):
     """MMR-diversified top-5 over the item-based candidate lists
     (operators/recommend.py::mmr_rerank; Carbonell & Goldstein 1998).
-    Rides the persisted similarity table for both candidate scoring
+    Rides the shared _item_sims table for both candidate scoring
     and the diversity penalty; candidates come from the shared
     _item_recs memo (the same frame the item_based_recommendations
     query declares), not a re-derivation."""
-    inter = R.interactions(spark, sf_dir)
     cands = _item_recs(spark, sf_dir)
-    sims = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
-    # symmetric=True (round 13): item_similarity_pairs IS the canonical
-    # ia<ib cosine table, so the operator probes it directly — half the
-    # candidate-pair generate, half the sims join side vs the previous
-    # 2x bidirectional union; values bit-identical (see mmr_rerank's
-    # contract note), oracle unchanged.
-    return R.mmr_rerank(cands, sims, k=5, lam=0.7, symmetric=True)
+    return R.mmr_rerank(cands, _item_sims(spark, sf_dir), k=5, lam=0.7)
 
 
 @_query("baseline_predictor_rmse", """
@@ -7102,13 +7077,10 @@ def _item_triangles(spark, sf_dir):
     """Per-item triangle count + local clustering coefficient over the
     co-occurrence graph (operators/graph.py::triangle_stats): degree-
     ordered orientation bounds the wedge join at O(m^1.5). Rides the
-    persisted similarity pair table."""
+    shared _item_sims pair table."""
     from recmetrics_pyspark_spark.operators.graph import triangle_stats
 
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     return triangle_stats(pairs, "ia", "ib")
 
 
@@ -7381,14 +7353,11 @@ def _adamic_adar_links(spark, sf_dir):
     (operators/graph.py::adamic_adar_links): top-20 NOT-yet-linked
     item pairs by Σ 1/ln(deg) over common neighbors, wedges enumerated
     through each node's 6 strongest edges (hub-capped fan-out);
-    contributions summed in exact DECIMAL. Rides the persisted
-    item-similarity pair table."""
+    contributions summed in exact DECIMAL. Rides the shared
+    _item_sims pair table."""
     from recmetrics_pyspark_spark.operators.graph import adamic_adar_links
 
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     return adamic_adar_links(pairs, col_w="sim")
 
 
@@ -7820,16 +7789,13 @@ def _common_neighbor_links(spark, sf_dir):
     """Common-neighbors/Jaccard link prediction over the item
     co-occurrence graph (operators/graph.py::common_neighbor_links):
     the counting twin of adamic_adar_links — exact-integer scores, the
-    same hub-capped wedge enumeration, riding the same persisted
-    item-similarity pair table."""
+    same hub-capped wedge enumeration, riding the same shared
+    _item_sims pair table."""
     from recmetrics_pyspark_spark.operators.graph import (
         common_neighbor_links,
     )
 
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     return common_neighbor_links(pairs, col_w="sim")
 
 
@@ -9042,10 +9008,7 @@ def _degree_distribution(spark, sf_dir):
         degree_distribution,
     )
 
-    inter = R.interactions(spark, sf_dir)
-    pairs = M.item_similarity_pairs(
-        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-    )
+    pairs = _item_sims(spark, sf_dir)
     return degree_distribution(pairs)
 
 

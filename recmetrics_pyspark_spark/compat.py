@@ -137,43 +137,10 @@ def personalization_pandas(
     ``col_values``): P = 1 − mean pairwise cosine of user vectors
     weighted by col_values (binary when col_values is None)."""
     spark = SparkSession.active()
-    sdf = spark.createDataFrame(df)
-    if col_values is None:
-        return personalization(sdf, col_index, col_columns)
-    # weighted variant, closed form (same as operators.metrics): per
-    # item Σ_{u<v} w_u·w_v = ((Σw)² − Σw²)/2 — no self-join needed
-    vecs = (
-        sdf.groupBy(
-            F.col(col_index).alias("u"), F.col(col_columns).alias("i")
-        )
-        .agg(F.avg(col_values).alias("v"))
+    v = personalization_value(
+        spark.createDataFrame(df), col_index, col_columns, col_values
     )
-    norms = vecs.groupBy("u").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-    )
-    # try_divide: a zero-norm user vector contributes 0 to every pair
-    # (sklearn's normalize() leaves zero rows zero — same semantics)
-    w = vecs.join(norms, "u").select(
-        "i", F.try_divide(F.col("v"), F.col("nrm")).alias("w")
-    )
-    s_row = (
-        w.groupBy("i")
-        .agg(
-            F.sum("w").alias("sw"),
-            F.sum(F.col("w") * F.col("w")).alias("sww"),
-        )
-        .agg(
-            F.coalesce(
-                F.sum((F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)),
-                F.lit(0.0),
-            ).alias("s")
-        )
-        .head()
-    )
-    n = norms.count()
-    if n < 2:
-        return float("nan")
-    return 1.0 - 2.0 * s_row["s"] / (n * (n - 1))
+    return float("nan") if v is None else float(v)
 
 
 def get_similarities_from_stacked(

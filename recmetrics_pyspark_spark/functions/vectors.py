@@ -26,7 +26,3 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))

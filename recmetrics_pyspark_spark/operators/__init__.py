@@ -1,134 +1,3 @@
-from .dedup import (
-    canonical_docs,
-    duplicated_spans,
-    incremental_dedup,
-    incremental_neardup,
-    lsh_index,
-    record_linkage_pairs,
-    dup_ngram_fraction,
-    exact_dedup,
-    minhash_jaccard_estimate,
-    minhash_lsh_pairs,
-    eval_contamination_report,
-    minhash_signatures,
-    ngram_decontaminate,
-    ngram_jaccard_pairs,
-    normalized_dedup,
-    simhash_near_pairs,
-    simhash_signatures,
-    source_overlap,
-)
-from .cdc import rollup_merge, snapshot_diff
-from .graph import (
-    adamic_adar_links,
-    pagerank_from_edges,
-    star_components,
-    triangle_stats,
-)
-from .joins import asof_join, range_self_join
-from .metrics import (
-    coverage,
-    item_cooccurrence_pairs,
-    item_item_topk,
-    item_similarity_pairs,
-    intra_list_similarity,
-    long_tail_stats,
-    novelty,
-    personalization,
-)
-from .quality import (
-    check_columns,
-    psi_drift,
-    check_foreign_key,
-    check_unique,
-    run_checks,
-)
-from .recommend import (
-    association_rules,
-    negative_sampling,
-    baseline_predictor_rmse,
-    interactions,
-    item_based_recommendations,
-    ips_offline_eval,
-    ranking_metrics_at_k,
-    sequence_examples,
-    synthetic_recommendations,
-    top_k_per_group,
-)
-from .similarity import (
-    ann_bruteforce_topk,
-    hard_negative_mining,
-    cluster_eval,
-    embedding_gram,
-    embedding_near_duplicates,
-    embedding_pca,
-    ivfpq_ann_topk,
-    semantic_dedup,
-    pq_ann_topk,
-    pq_codebooks,
-)
-from .experiment import ab_test_analysis, km_survival
-from .timeseries import cusum_changepoint, holt_forecast, seasonal_profile
-from .skew import key_skew_stats, salted_join
-
-__all__ = [
-    "snapshot_diff",
-    "rollup_merge",
-    "check_columns",
-    "check_unique",
-    "check_foreign_key",
-    "run_checks",
-    "ranking_metrics_at_k",
-    "item_based_recommendations",
-    "embedding_pca",
-    "dup_ngram_fraction",
-    "key_skew_stats",
-    "coverage",
-    "novelty",
-    "personalization",
-    "intra_list_similarity",
-    "long_tail_stats",
-    "interactions",
-    "synthetic_recommendations",
-    "top_k_per_group",
-    "exact_dedup",
-    "eval_contamination_report",
-    "ngram_decontaminate",
-    "ngram_jaccard_pairs",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "simhash_signatures",
-    "simhash_near_pairs",
-    "ann_bruteforce_topk",
-    "ivfpq_ann_topk",
-    "pq_ann_topk",
-    "pq_codebooks",
-    "embedding_near_duplicates",
-    "asof_join",
-    "range_self_join",
-    "salted_join",
-    "star_components",
-    "psi_drift",
-    "association_rules",
-    "baseline_predictor_rmse",
-    "semantic_dedup",
-    "cluster_eval",
-    "incremental_dedup",
-    "record_linkage_pairs",
-    "negative_sampling",
-    "hard_negative_mining",
-    "ab_test_analysis",
-    "km_survival",
-    "holt_forecast",
-    "cusum_changepoint",
-    "seasonal_profile",
-    "triangle_stats",
-    "source_overlap",
-    "canonical_docs",
-    "incremental_neardup",
-    "duplicated_spans",
-    "lsh_index",
-    "sequence_examples",
-    "adamic_adar_links",
-    "ips_offline_eval",
-]
+"""Distributed operators, one submodule per family (``metrics``,
+``recommend``, ``dedup``, ``similarity``, ``graph``, ...). Import the
+submodule: ``from recmetrics_pyspark_spark.operators import metrics``."""

@@ -8,9 +8,10 @@ Re-expresses the reference's public API (SURVEY.md §2.8) Spark-first:
 - ``long_tail_stats``← reference recmetrics_pyspark.py:27-103 (stats only;
   plotting stays a thin optional adapter)
 - ``personalization``← reference recmetrics_pyspark.py:300-412 — the
-  pivot/BlockMatrix/DIMSUM paths replaced by an exact item-key self-join
-  cosine (SURVEY §2.7 "golden operator" plan)
+  pivot/BlockMatrix/DIMSUM paths replaced by an exact closed-form
+  pairwise-cosine sum (SURVEY §2.7 "golden operator" plan)
 - ``intra_list_similarity`` ← reference recmetrics_pyspark.py:415-432
+  (the same pairwise-cosine sum, per group)
 
 Every function composes lazy transformations and returns a DataFrame;
 ``*_value`` helpers trigger the single action and return the scalar.
@@ -255,6 +256,83 @@ def long_tail_stats(
 
 
 # ---------------------------------------------------------------------------
+# pairwise cosine sums (personalization, intra-list similarity)
+# ---------------------------------------------------------------------------
+
+def _pairwise_cosine_sum(
+    df: DataFrame,
+    keys: list[str],
+    col_index: str,
+    col_columns: str,
+    col_values: str | None = None,
+) -> DataFrame:
+    """Per group of ``keys`` (one row when there are none): ``n``, the
+    number of distinct ``col_index`` values, and ``s``, the sum of the
+    cosines of all unordered pairs of their vectors over
+    ``col_columns``. A cell's value is ``avg(col_values)``, or 1.0
+    when ``col_values`` is None (binary vectors).
+
+    The pair sum needs no self-join: with unit-normalized vectors,
+    Σ_{a<b} cos(a, b) = Σ over features of Σ_{a<b} w_a·w_b, and within
+    one feature Σ_{a<b} w_a·w_b = ((Σw)² − Σw²)/2. The whole sum is a
+    per-feature aggregate of (Σw, Σw²) — O(nnz) work, no quadratic
+    blow-up on the hottest feature. Pairs sharing no feature add 0.
+
+    One exchange on (keys, index) serves the cell aggregate, the
+    per-index norms and the cells⋈norms join; ``cells`` fans out to
+    the last two and is persisted (lazily). try_divide: an all-zero
+    vector has norm 0, its weights go NULL and the feature sums skip
+    them — it adds 0 to every pair (sklearn's ``normalize()`` leaves a
+    zero row zero) while still counting in ``n``; plain division would
+    raise under ANSI."""
+    vals = [] if col_values is None else [col_values]
+    cells = df.select(
+        *keys,
+        F.col(col_index).alias("_ix"),
+        F.col(col_columns).alias("_f"),
+        *vals,
+    ).repartition(*keys, "_ix")
+    # binary cells are the distinct (index, feature) pairs. Over the
+    # interactions frame that is the plan of recommend.distinct_pairs,
+    # so a session that built it reads its cached rows; a groupBy with
+    # a constant column would build a second copy
+    if col_values is None:
+        cells, v = cells.distinct(), F.lit(1.0)
+    else:
+        cells = cells.groupBy(*keys, "_ix", "_f").agg(
+            F.avg(col_values).alias("_v")
+        )
+        v = F.col("_v")
+    cells = cells.persist()
+    norms = cells.groupBy(*keys, "_ix").agg(
+        F.sqrt(F.sum(v * v)).alias("_nrm")
+    )
+    n = norms.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("double").alias("n")
+    )
+    w = F.try_divide(v, F.col("_nrm")).alias("w")
+    s = (
+        cells.join(norms, [*keys, "_ix"])
+        .select(*keys, "_f", w)
+        .groupBy(*keys, "_f")
+        .agg(
+            F.sum("w").alias("sw"),
+            F.sum(F.col("w") * F.col("w")).alias("sww"),
+        )
+        .groupBy(*keys)
+        .agg(
+            F.sum(
+                (F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)
+            ).alias("s")
+        )
+    )
+    both = n.join(s, keys, "left") if keys else s.crossJoin(broadcast(n))
+    return both.select(
+        *keys, "n", F.coalesce(F.col("s"), F.lit(0.0)).alias("s")
+    )
+
+
+# ---------------------------------------------------------------------------
 # personalization
 # ---------------------------------------------------------------------------
 
@@ -262,54 +340,28 @@ def personalization(
     df: DataFrame,
     col_index: str = "person",
     col_columns: str = "product",
+    col_values: str | None = None,
 ) -> DataFrame:
-    """P = 1 − mean pairwise cosine of users' binary item vectors; 1-row DF.
+    """P = 1 − mean pairwise cosine of users' item vectors; 1-row DF.
+    Vectors are binary, or weighted by ``avg(col_values)`` per (user,
+    item) when ``col_values`` is given (reference :190-193).
 
     The reference builds a dynamic pivot → user×item matrix → Gram
     product via BlockMatrix or DIMSUM (recmetrics_pyspark.py:300-412,
     three versions, all equal). Those paths need a dense index, a global
     single-partition window, and RDD matrix ops. The exact
-    DataFrame-native equivalent (SURVEY §2.7): with unit-normalized
-    binary vectors, cos(u,v) = Σ_shared-items 1/√(|u|·|v|), so
-
-        Σ_{i<j} cos = Σ over item-co-occurrence pairs of w_i·w_j,
-        w_u = 1/√|basket(u)|
-
-    and the pair sum needs NO self-join at all: within one item,
-    Σ_{u<v} w_u·w_v = ((Σw)² − Σw²)/2, so the whole metric is a
-    per-item aggregate of (Σw, Σw²) followed by one scalar reduce —
-    O(nnz) work, TWO shuffles, and the hottest-item quadratic blow-up
-    (the classic personalization scale killer; the round-1 plan's
-    self-join had it) simply does not exist. Users with no overlap
-    contribute 0 implicitly. Doctest fixture (:321-333) gives exactly
-    2/3.
+    DataFrame-native equivalent (SURVEY §2.7) is the closed-form pair
+    sum of ``_pairwise_cosine_sum`` with users as the index and items
+    as the features: no self-join, so the hottest-item quadratic
+    blow-up (the classic personalization scale killer; the round-1
+    plan's self-join had it) does not exist. Doctest fixture
+    (:321-333) gives exactly 2/3.
     """
-    # persist(): baskets feeds the sizes aggregate AND the weighted
-    # join; vocabulary-scale (distinct pairs), MEMORY_AND_DISK.
-    # repartition("u") before the distinct (round 13): one user-keyed
-    # exchange satisfies the (u, i) distinct, the per-user sizes
-    # aggregate, AND the baskets⋈sizes join — the sizes re-shuffle
-    # disappears from the plan.
-    _require_cols(df, "personalization", col_index, col_columns)
-    baskets = df.select(
-        F.col(col_index).alias("u"), F.col(col_columns).alias("i")
-    ).repartition("u").distinct().persist()
-    sizes = baskets.groupBy("u").agg(F.count(F.lit(1)).alias("sz"))
-    weighted = baskets.join(sizes, "u").select(
-        "i", (F.lit(1.0) / F.sqrt(F.col("sz"))).alias("w")
-    )
-    isum = weighted.groupBy("i").agg(
-        F.sum("w").alias("sw"), F.sum(F.col("w") * F.col("w")).alias("sww")
-    )
-    pair_sum = isum.agg(
-        F.coalesce(
-            F.sum((F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)),
-            F.lit(0.0),
-        ).alias("s")
-    )
-    n = sizes.agg(F.count(F.lit(1)).cast("double").alias("n"))
+    _require_cols(df, "personalization", col_index, col_columns,
+                  *([col_values] if col_values is not None else []))
+    sums = _pairwise_cosine_sum(df, [], col_index, col_columns, col_values)
     # n < 2 users -> no pairs -> metric undefined: null, not a div-0 error
-    return pair_sum.crossJoin(broadcast(n)).select(
+    return sums.select(
         F.when(
             F.col("n") >= 2,
             F.round(
@@ -321,8 +373,12 @@ def personalization(
     )
 
 
-def personalization_value(df, col_index="person", col_columns="product") -> float:
-    return personalization(df, col_index, col_columns).head()["personalization"]
+def personalization_value(
+    df, col_index="person", col_columns="product", col_values=None
+) -> float:
+    return personalization(
+        df, col_index, col_columns, col_values
+    ).head()["personalization"]
 
 
 # ---------------------------------------------------------------------------
@@ -443,14 +499,15 @@ def item_similarity_pairs(
     max_basket: int | None = None,
 ) -> DataFrame:
     """All co-occurrence pairs (ia < ib) with their cosine similarity —
-    the persisted intermediate behind item_item_topk, exposed so graph
-    consumers (pagerank_items) build the IDENTICAL canonicalized plan
-    and hit the session cache instead of re-running the pair pipeline.
-    Persisted and materialized before return: every caller fans out to
-    at least two consumers. ``max_basket`` is the opt-in heavy-basket
-    cap (default None = exact; see item_cooccurrence_pairs) — sibling
-    consumers must pass the SAME value to build the same canonical
-    plan and share the cache."""
+    the persisted intermediate behind item_item_topk, exposed for graph
+    consumers (the declared queries read it through one named shared
+    build, ``__spark_entry__._item_sims``). Persisted and materialized
+    before return: every caller fans out to at least two consumers.
+    ``max_basket`` is the opt-in heavy-basket cap (default None =
+    exact; see item_cooccurrence_pairs). Plan matching in the session
+    cache still links the library-internal callers (item_item_topk,
+    item_based_recommendations, association_rules) to that build, so
+    they must pass the same ``min_common`` and ``max_basket``."""
     counts, sizes = item_cooccurrence_pairs(
         df, col_user, col_item, min_common, max_basket
     )
@@ -568,68 +625,24 @@ def intra_list_similarity(
     Reference semantics (recmetrics_pyspark.py:415-432): per group,
     pandas pivot_table (aggfunc=mean) → item×feature matrix → cosine →
     mean of off-diagonal entries. Driver-side per group in the
-    reference; here one distributed pipeline:
-
-      feature vectors → per-item norms → NORMALIZE, then the pair sum
-      is closed-form: within one (group, feature),
-      Σ_{i<j} w_i·w_j = ((Σw)² − Σw²)/2, so the whole metric reduces
-      to per-(group, feature) aggregates of (Σw, Σw²) — no item-pair
-      self-join, no C(n_items, 2) blow-up for big lists, O(nnz) work.
-      Pairs sharing no feature contribute 0 implicitly; we divide by
-      the full pair count.
+    reference; here one distributed pipeline: the closed-form pair sum
+    of ``_pairwise_cosine_sum`` per group, divided by the full pair
+    count — no item-pair self-join, no C(n_items, 2) blow-up for big
+    lists. An all-zero item vector has cosine 0 with every item.
 
     Groups with a single item return null (pandas yields NaN there too).
     """
-    # vecs fans out to norms AND the normalize join — persist
-    # (item-vector scale, small next to the input).
     _require_cols(df, "intra_list_similarity", col_group, col_index,
                   col_columns, col_values)
-    vecs = (
-        df.groupBy(
-            F.col(col_group).alias("g"),
-            F.col(col_index).alias("it"),
-            F.col(col_columns).alias("f"),
-        )
-        .agg(F.avg(col_values).alias("v"))
-    ).persist()
-    norms = vecs.groupBy("g", "it").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-    ).persist()
-    n_items = norms.groupBy("g").agg(F.count(F.lit(1)).alias("n_it"))
-    # try_divide: an all-zero feature vector has norm 0 — its weights
-    # go NULL, the feature sums skip them, and the item contributes 0
-    # to every pair (cosine with a zero vector is defined as 0 here)
-    # while still counting in the pair denominator; without the guard
-    # ANSI division crashes on the first zero-vector item
-    w = vecs.join(norms, ["g", "it"]).select(
-        "g", "f", F.try_divide(F.col("v"), F.col("nrm")).alias("w")
+    sums = _pairwise_cosine_sum(
+        df, [col_group], col_index, col_columns, col_values
     )
-    cos_sums = (
-        w.groupBy("g", "f")
-        .agg(
-            F.sum("w").alias("sw"),
-            F.sum(F.col("w") * F.col("w")).alias("sww"),
-        )
-        .groupBy("g")
-        .agg(
-            F.sum(
-                (F.col("sw") * F.col("sw") - F.col("sww")) / F.lit(2.0)
-            ).alias("cos_sum")
-        )
-    )
-    return (
-        n_items.join(cos_sums, "g", "left")
-        .select(
-            F.col("g").alias(col_group),
-            F.when(
-                F.col("n_it") >= 2,
-                F.round(
-                    F.coalesce(F.col("cos_sum"), F.lit(0.0))
-                    / (F.col("n_it") * (F.col("n_it") - 1) / 2.0),
-                    6,
-                ),
-            ).alias("intra_list_similarity"),
-        )
+    return sums.select(
+        col_group,
+        F.when(
+            F.col("n") >= 2,
+            F.round(F.col("s") / (F.col("n") * (F.col("n") - 1) / 2.0), 6),
+        ).alias("intra_list_similarity"),
     )
 
 

@@ -13,25 +13,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_table(df: DataFrame, approx_distinct: bool = False) -> DataFrame:
+def profile_table(df: DataFrame) -> DataFrame:
     """One row per column: nulls, distincts, min/max (as strings so
-    heterogeneous column types stack into one result).
-
-    ``approx_distinct=True`` swaps exact countDistinct for HLL sketches
-    — the 100 TB default, where exact per-column distincts are the
-    profiler's dominant cost."""
+    heterogeneous column types stack into one result)."""
     cols = df.columns
-    distinct_fn = (
-        (lambda c: F.approx_count_distinct(c, 0.01))
-        if approx_distinct
-        else F.countDistinct
-    )
     aggs = []
     for c in cols:
         aggs += [
             F.count(F.lit(1)).alias(f"{c}__rows"),
             F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            distinct_fn(c).alias(f"{c}__distinct"),
+            F.countDistinct(c).alias(f"{c}__distinct"),
             # cast AFTER the aggregate: min/max must compare in the
             # column's native type, not lexicographically on strings
             F.min(F.col(c)).cast("string").alias(f"{c}__min"),

@@ -663,13 +663,12 @@ def serendipity_at_k(
 
 def mmr_rerank(
     candidates: DataFrame,
-    sims_bidir: DataFrame,
+    sims: DataFrame,
     k: int = 5,
     lam: float = 0.7,
     col_user: str = "user_id",
     col_item: str = "item_id",
     col_rel: str = "score",
-    symmetric: bool = False,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversification (Carbonell &
     Goldstein 1998): greedily pick ``k`` items per user where each
@@ -680,8 +679,10 @@ def mmr_rerank(
     Greedy selection is inherently sequential in k, so the plan unrolls
     k steps; each step's work is CANDIDATE × SELECTED scale per user
     (≤ |pool|·k rows — the pool is a bounded top-N retrieval, never the
-    catalog), with the pairwise similarity looked up in ``sims_bidir``
-    (ia, ib, sim — missing pair = 0).
+    catalog), with the pairwise similarity looked up in ``sims``
+    (ia, ib, sim — missing pair = 0). ``sims`` is a canonical table:
+    each unordered pair stored ONCE as ia < ib, with sim(i,j) ==
+    sim(j,i) — item_similarity_pairs' shape.
 
     Determinism note: the MMR combination λ·rel − (1−λ)·msim runs in
     exact DECIMAL arithmetic (λ as a decimal literal over 6-decimal
@@ -701,20 +702,6 @@ def mmr_rerank(
     rounds: 20 s at sf0.1); this one runs the identical arithmetic
     scan-locally in ~3 s, and at 100 TB keeps selection embarrassingly
     parallel — no step barrier, no user-keyed traffic after the pack.
-
-    ``symmetric=False`` (default) accepts an ARBITRARY directed
-    ``sims_bidir`` (ia, ib, sim): both lookup directions must be
-    present explicitly. ``symmetric=True`` is the opt-in contract for
-    canonical similarity tables (each unordered pair stored ONCE as
-    ia < ib with sim(i,j) == sim(j,i) — item_similarity_pairs' shape):
-    candidate pairs are generated once per unordered pair (i < j,
-    half the rows) and joined against the canonical table directly
-    (half the build/shuffle side), with the two lookup directions
-    re-emitted AFTER the join by a 2-way explode of the matched rows
-    (join OUTPUT scale, bounded by real sims) — both join inputs are
-    halved while the map entries, and therefore the selection
-    arithmetic and the output, are bit-identical (round-13 guide §3:
-    shrink both sides of the heaviest join).
 
     Returns (user, item, step, mmr_score) for step = 1..k; lam must be
     exactly representable at 2 decimal places."""
@@ -738,7 +725,7 @@ def mmr_rerank(
         .persist()
     )
     cand.count()
-    simsr = sims_bidir.select(
+    simsr = sims.select(
         F.col("ia"),
         F.col("ib"),
         F.round("sim", 6).cast("decimal(18,6)").alias("s"),
@@ -747,56 +734,43 @@ def mmr_rerank(
     # pool² rows per user flow through ONE equi-join against the big
     # similarity table, then collapse to a map<neighbor, sim> per
     # (user, candidate) — absent pairs are looked up as 0 at selection
-    # time, so the maps carry only REAL sims (sparse, bounded by pool²)
-    if symmetric:
-        # canonical contract: generate each unordered candidate pair
-        # once (i < j — half of i != j) and probe the canonical table
-        # directly (half of the 2x union); mirror the MATCHED rows with
-        # a 2-way explode so the map entries are the same multiset the
-        # directed path builds
-        entries = (
-            cand.select("u", "i")
-            .join(cand.select("u", F.col("i").alias("j")), "u")
-            .filter(F.col("i") < F.col("j"))
-            .join(
-                simsr,
-                (F.col("i") == simsr.ia) & (F.col("j") == simsr.ib),
-            )
-            .select(
-                "u",
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("i").alias("i"),
-                            F.col("j").alias("jj"),
-                            F.col("s").alias("s"),
-                        ),
-                        F.struct(
-                            F.col("j").alias("i"),
-                            F.col("i").alias("jj"),
-                            F.col("s").alias("s"),
-                        ),
-                    )
-                ).alias("e"),
-            )
-            .select(
-                "u",
-                F.col("e.i").alias("i"),
-                F.col("e.jj").alias("j"),
-                F.col("e.s").alias("s"),
-            )
+    # time, so the maps carry only REAL sims (sparse, bounded by pool²).
+    # Each unordered candidate pair is generated once (i < j) and probes
+    # the canonical table directly; the MATCHED rows are mirrored by a
+    # 2-way explode (join output scale, bounded by real sims) so each
+    # candidate's map holds both lookup directions
+    entries = (
+        cand.select("u", "i")
+        .join(cand.select("u", F.col("i").alias("j")), "u")
+        .filter(F.col("i") < F.col("j"))
+        .join(
+            simsr,
+            (F.col("i") == simsr.ia) & (F.col("j") == simsr.ib),
         )
-    else:
-        entries = (
-            cand.select("u", "i")
-            .join(cand.select("u", F.col("i").alias("j")), "u")
-            .filter(F.col("i") != F.col("j"))
-            .join(
-                simsr,
-                (F.col("i") == simsr.ia) & (F.col("j") == simsr.ib),
-            )
-            .select("u", "i", "j", F.col("s"))
+        .select(
+            "u",
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("i").alias("i"),
+                        F.col("j").alias("jj"),
+                        F.col("s").alias("s"),
+                    ),
+                    F.struct(
+                        F.col("j").alias("i"),
+                        F.col("i").alias("jj"),
+                        F.col("s").alias("s"),
+                    ),
+                )
+            ).alias("e"),
         )
+        .select(
+            "u",
+            F.col("e.i").alias("i"),
+            F.col("e.jj").alias("j"),
+            F.col("e.s").alias("s"),
+        )
+    )
     pair_maps = entries.groupBy("u", "i").agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("j"), F.col("s")))

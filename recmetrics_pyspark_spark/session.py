@@ -71,9 +71,6 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # FAIR scheduling: concurrent jobs (multi-user notebooks, threaded
-        # callers) share executors instead of FIFO head-of-line blocking
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
         .config(
             "spark.sql.warehouse.dir",

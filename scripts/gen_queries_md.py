@@ -48,6 +48,7 @@ def main() -> None:
             # the body only: the @_query(...) oracle SQL above it is not code
             src = inspect.getsource(fn).split("\ndef ", 1)[-1]
             for token, target in (
+                ("operators.graph", "operators.graph"),
                 ("Q.", "plans.relational"), ("M.", "operators.metrics"),
                 ("R.", "operators.recommend"), ("D.", "operators.dedup"),
                 ("S.", "operators.similarity"), ("T.", "functions.text"),

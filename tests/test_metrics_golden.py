@@ -46,6 +46,53 @@ NB64_PREDS = [["a", "b", "c"], ["d", "e", "f"], ["a", "b", "f"], ["d", "e", "c"]
 NB64_POPS = {"a": 8, "b": 3, "c": 1, "d": 4, "e": 7, "f": 6, "g": 7}
 
 
+# users 1-5 with baskets of 1-4 items, some shared, one disjoint
+_BASKETS = [
+    (1, 1), (1, 2), (1, 3), (2, 2), (2, 3), (2, 4), (2, 5),
+    (3, 1), (4, 5), (4, 2), (5, 9),
+]
+
+
+def test_personalization_constant_values_equal_binary(spark):
+    # a constant weight c normalizes away: c / sqrt(n·c²) == 1/sqrt(n)
+    # (c = 4.0 keeps every step exact in binary floating point)
+    df = spark.createDataFrame(
+        [(u, i, 4.0) for u, i in _BASKETS], ["u", "i", "c"]
+    )
+    binary = personalization_value(df, "u", "i")
+    assert personalization_value(df, "u", "i", col_values="c") == binary
+    assert 0.0 < binary < 1.0
+
+
+def test_personalization_is_one_minus_intra_list_similarity(spark):
+    # one group, index = user, feature = item, weight 1: the same pair
+    # sum, divided by the same pair count
+    df = spark.createDataFrame(
+        [(0, u, i, 1.0) for u, i in _BASKETS], ["g", "u", "i", "v"]
+    )
+    p = personalization_value(df, "u", "i")
+    (ils,) = intra_list_similarity(df, "g", "u", "i", "v").collect()
+    assert p == round(1.0 - ils["intra_list_similarity"], 6)
+
+
+def test_personalization_zero_vector_and_single_user(spark):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    # user 2's only weight is 0.0: a zero vector, cosine 0 with both
+    # others (no division-by-zero error). u1 = (1, 2, 0)/√5,
+    # u3 = (0, 3, 1)/√10, cos(u1, u3) = 6/√50; P = 1 − cos/3
+    df = spark.createDataFrame(
+        [(1, "a", 1.0), (1, "b", 2.0), (2, "a", 0.0),
+         (3, "b", 3.0), (3, "c", 1.0)],
+        ["u", "i", "r"],
+    )
+    got = personalization_value(df, "u", "i", col_values="r")
+    assert got == pytest.approx(1.0 - 6.0 / math.sqrt(50) / 3.0, abs=1e-6)
+    # one user: no pairs, the metric is undefined
+    one = df.filter("u = 1")
+    assert personalization_value(one, "u", "i", col_values="r") is None
+    assert personalization_value(one, "u", "i") is None
+
+
 def _nb64_frames(spark):
     sales_rows = [
         (uid, item) for item, pop in NB64_POPS.items() for uid in range(pop)

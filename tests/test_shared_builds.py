@@ -2,6 +2,7 @@
 per (application, name, key) however many threads ask at once, the
 re-persist guard on a hit, and release_shared."""
 
+import os
 import sys
 import threading
 import time
@@ -82,4 +83,23 @@ def test_nested_builds_and_keys(spark):
     assert outer == (inner, 7)
     other = shared(spark, "registry-inner", "k2", lambda: spark.range(4))
     assert other is not inner
+    release_shared(spark)
+
+
+def test_item_pair_table_is_one_named_build(spark, shared_names):
+    """The graph and MMR queries read the item-pair table through one
+    named build (`_item_sims`), not through plan matching of separate
+    item_similarity_pairs calls: two of them leave one entry."""
+    from tests.oracle import SF_DIR_SMALL
+
+    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", SF_DIR_SMALL)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    import __spark_entry__ as e
+
+    release_shared(spark)
+    qs = e.queries()
+    assert qs["degree_distribution"](spark, sf_dir).count() > 0
+    assert qs["item_triangles"](spark, sf_dir).count() > 0
+    assert shared_names().count("item_sims") == 1
     release_shared(spark)
