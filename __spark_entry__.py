@@ -2255,6 +2255,35 @@ def _ann_truth(spark, sf_dir):
     return _shared(spark, sf_dir, "ann_truth", build)
 
 
+def _recall_at_10(spark, sf_dir, approx, lane=None):
+    """Per-query recall@10 of an approximate top-10 against the
+    _ann_truth build: (lane,) query_id, n_exact, n_hit, recall_at_10.
+    Left-joining the exact set against the approximate one is
+    output-scale work (|Q|·k rows); the ``lane`` column is present
+    only when a lane is named."""
+    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    return (
+        exact.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
+                "n_hit"
+            ),
+        )
+        .select(
+            *([F.lit(lane).alias("lane")] if lane else []),
+            "query_id",
+            "n_exact",
+            "n_hit",
+            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
+                "recall_at_10"
+            ),
+        )
+    )
+
+
 # the k every declared k-core query peels at; the convergence guard's
 # fallback must rebuild with the SAME k (tests override it to drive
 # adversarial graphs through the guard)
@@ -4369,40 +4398,13 @@ def _pq_recall_report(spark, sf_dir):
     branches fan out from materialized blocks)."""
     embs = _embs(spark, sf_dir)
     qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    parts = []
-    for lane, approx in (
-        ("pq", S.pq_ann_topk(embs, qset, k=10, m=4, k_codes=16)),
-        (
-            "ivfpq",
-            S.ivfpq_ann_topk(
-                embs, qset, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
-            ),
-        ),
-    ):
-        a = approx.select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        parts.append(
-            exact.join(a, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_hit"),
-            )
-            .select(
-                F.lit(lane).alias("lane"),
-                "query_id",
-                "n_exact",
-                "n_hit",
-                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                    "recall_at_10"
-                ),
-            )
-        )
-    return parts[0].unionByName(parts[1])
+    pq = S.pq_ann_topk(embs, qset, k=10, m=4, k_codes=16)
+    ivfpq = S.ivfpq_ann_topk(
+        embs, qset, k=10, n_cells=8, nprobe=3, m=4, k_codes=16
+    )
+    return _recall_at_10(spark, sf_dir, pq, "pq").unionByName(
+        _recall_at_10(spark, sf_dir, ivfpq, "ivfpq")
+    )
 
 
 # ann_recall_report's shape over the trained-IVF lane
@@ -4430,28 +4432,8 @@ def _ivf_recall_report(spark, sf_dir):
     _ann_truth shared build."""
     embs = _embs(spark, sf_dir)
     qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = S.ivf_ann_topk(
-        embs, qset, k=10, n_cells=8, nprobe=3
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                "recall_at_10"
-            ),
-        )
-    )
+    approx = S.ivf_ann_topk(embs, qset, k=10, n_cells=8, nprobe=3)
+    return _recall_at_10(spark, sf_dir, approx)
 
 
 @_query("dedup_pipeline", """
@@ -4562,10 +4544,11 @@ def _ivfpq_ann_topk(spark, sf_dir):
     )
 
 
-# mirrors operators/similarity.py::sq_ann_topk — the SQ code
-# and midpoint-reconstruction kernels are index-form CASE/floor
-# expressions shared verbatim with the Spark side (_SQ_CODE /
-# _SQ_RECON), so the doubles agree bitwise before round(,6)
+# mirrors operators/similarity.py::sq_ann_topk — the oracle spells
+# out the same index-form CASE/floor code and midpoint-reconstruction
+# arithmetic as the Spark side's _SQ_CODE / _SQ_RECON in its own
+# text, in the same operation order, so the doubles agree bitwise
+# before round(,6)
 @_query("sq_ann_topk", _SQ_ANN_SQL)
 def _sq_ann_topk(spark, sf_dir):
     """SQ8 asymmetric ANN (operators/similarity.py::sq_ann_topk):
@@ -4634,35 +4617,11 @@ def _sq_recall_report(spark, sf_dir):
     rows). Exact side from the _ann_truth shared build."""
     embs = _embs(spark, sf_dir)
     qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    parts = []
-    for lane, approx in (
-        ("sq8", S.sq_ann_topk(embs, qset, k=10)),
-        ("ivfsq8", S.ivfsq_ann_topk(embs, qset, k=10)),
-    ):
-        a = approx.select(
-            "query_id", "neighbor_id", F.lit(1).alias("hit")
-        )
-        parts.append(
-            exact.join(a, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_hit"),
-            )
-            .select(
-                F.lit(lane).alias("lane"),
-                "query_id",
-                "n_exact",
-                "n_hit",
-                F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                    "recall_at_10"
-                ),
-            )
-        )
-    return parts[0].unionByName(parts[1])
+    sq = S.sq_ann_topk(embs, qset, k=10)
+    ivfsq = S.ivfsq_ann_topk(embs, qset, k=10)
+    return _recall_at_10(spark, sf_dir, sq, "sq8").unionByName(
+        _recall_at_10(spark, sf_dir, ivfsq, "ivfsq8")
+    )
 
 
 @_query("dim_truncation_recall", _dim_trunc_oracle())
@@ -7724,28 +7683,7 @@ def _ann_recall_report(spark, sf_dir):
     (|Q|·k rows). Exact side from the _ann_truth shared build."""
     embs = _embs(spark, sf_dir)
     qset = embs.filter(F.col("vec_id") < 5)
-    exact = _ann_truth(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = S.ann_lsh_topk(embs, qset, k=10).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("bigint").alias(
-                "n_hit"
-            ),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            F.round(F.col("n_hit") / F.col("n_exact"), 6).alias(
-                "recall_at_10"
-            ),
-        )
-    )
+    return _recall_at_10(spark, sf_dir, S.ann_lsh_topk(embs, qset, k=10))
 
 
 @_query("common_neighbor_links", ORACLE_BASE + ITEM_SIMS_SQL + """

@@ -1,6 +1,6 @@
-"""Shared global top-k idiom.
+"""Shared top-k idioms.
 
-Every ranked-output operator in the engine uses the same two-step
+Every globally ranked operator in the engine uses the same two-step
 shape: ``orderBy(spec).limit(k)`` — which Spark plans as
 TakeOrderedAndProject, a map-side partial top-k where every task keeps
 only k rows (a global row_number window instead would sort the full
@@ -8,7 +8,9 @@ table in ONE partition) — followed by numbering the k-row result with
 ``row_number`` over the SAME ordering. Keeping both sort specs in one
 place guarantees the invariant that the limit's ordering and the rank
 column's ordering agree, and makes a tie-break change a one-line edit
-per operator instead of two.
+per operator instead of two. The per-group twin, ``top_k_per_group``,
+ranks inside a partitioned window instead (per-query retrievers,
+per-user recommendation lists).
 """
 
 from __future__ import annotations
@@ -36,6 +38,27 @@ def ranked_topk(
         .limit(k)
         .withColumn(rank_col, F.row_number().over(wk).cast("bigint"))
     )
+
+
+def top_k_per_group(
+    df: DataFrame,
+    col_group: str | list[str],
+    order_cols: list,
+    k: int,
+    rank_col: str = "rnk",
+) -> DataFrame:
+    """Generic per-group top-k: a BIGINT ``rank_col`` numbered by
+    row_number over a window partitioned by ``col_group`` (a name or a
+    list of names) under ``order_cols``, keeping ranks ≤ ``k``.
+
+    This is the scalable idiom for the reference's recommendForAllUsers
+    pattern — partitionBy keeps every group's ranking local to its
+    shuffle partition (no global sort), and Spark plans the rank
+    filter as a per-partition WindowGroupLimit ahead of the window."""
+    w = Window.partitionBy(col_group).orderBy(*order_cols)
+    return df.withColumn(
+        rank_col, F.row_number().over(w).cast("bigint")
+    ).filter(F.col(rank_col) <= k)
 
 
 def rrf_fuse(
@@ -86,13 +109,10 @@ def rrf_fuse(
         F.count(F.lit(1)).cast("bigint").alias("n_lists"),
         F.sum("c9").alias("s"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("s"), F.asc("neighbor_id")
-    )
     return (
-        agg.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
-        .select(
+        top_k_per_group(
+            agg, "query_id", [F.desc("s"), F.asc("neighbor_id")], k
+        ).select(
             "query_id",
             "neighbor_id",
             "n_lists",
@@ -220,7 +240,7 @@ def _bt_fit(
                 F.round(F.col("r0") / z, 9).alias("r"),
             )
             # LAZY checkpoint: the plan collapses to a LogicalRDD
-            # immediately (shallow re-analysis, the _km_refine
+            # immediately (shallow re-analysis, the _lloyd
             # motivation) but all rounds evaluate inside the
             # consumer's single action instead of paying 8 eager
             # per-round job round-trips
@@ -301,7 +321,7 @@ def bradley_terry_ratings(
     rounds off ONE chain instead of fitting twice. After that, every
     round is two broadcast-scale hash joins + one item-grain
     aggregate over the pair table, nothing row-scale. Each round's
-    rating table is item-grain and localCheckpointed (the _km_refine
+    rating table is item-grain and localCheckpointed (the _lloyd
     rule: Catalyst re-analyzes the whole tree per action, so an
     un-truncated 8-round lineage re-plans quadratically). Output:
     one row per item — (item, n_wins, n_games, rating, rnk), ranked

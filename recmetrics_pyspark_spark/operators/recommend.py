@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..session import shared
 from ..sources.io import load_table
+from .ranking import top_k_per_group
 
 # Knuth-style multiplicative constants; small enough that
 # user*A + item*B stays far from int64 overflow at any realistic SF.
@@ -84,24 +85,6 @@ def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pseudo_score(user_col, item_col):
     """Deterministic engine-portable pseudo-random score in [0, 1000003)."""
     return (user_col * F.lit(_HASH_A) + item_col * F.lit(_HASH_B)) % F.lit(_HASH_MOD)
-
-
-def top_k_per_group(
-    df: DataFrame,
-    col_group: str,
-    order_cols: list,
-    k: int,
-    rank_col: str = "rnk",
-) -> DataFrame:
-    """Generic per-group top-k: row_number over a partitioned window.
-
-    This is the scalable idiom for the reference's recommendForAllUsers
-    pattern — partitionBy keeps every group's ranking local to its
-    shuffle partition (no global sort)."""
-    w = Window.partitionBy(col_group).orderBy(*order_cols)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
 
 
 def item_based_recommendations(

@@ -4,38 +4,227 @@ array<float>).
 Brute-force cosine top-k is the exact baseline: broadcast the (small)
 query set against the corpus, score with zip_with/aggregate (JVM
 codegen, no UDF), rank per query with a partitioned window. The scale
-path buckets the corpus first (block join / LSH) so each query scores a
-partition, not the planet; `embedding_near_duplicates` shows the blocked
-variant (block key = `label` here; any coarse quantizer key works).
+path buckets the corpus first (block join / LSH / IVF cells) so each
+query scores a partition, not the planet; `embedding_near_duplicates`
+shows the blocked variant (block key = `label` here; any coarse
+quantizer key works).
+
+Every retriever is a candidate generator composed from a few shared
+parts: one side-prep (:func:`_prep`), one zero-guarded cosine kernel
+(:func:`_cos`), one nearest-centroid router (:func:`_route`, the
+k-means / IVF / PQ assignment and probe step) and one per-query top-k
+(``ranking.top_k_per_group``).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot, norm
 from ..session import shared
+from .ranking import ranked_topk, top_k_per_group
+
+# (id alias, vector, norm) column names of each scoring side
+_Q = ("query_id", "qv", "qn")
+_C = ("neighbor_id", "cv", "cn")
+_T = ("train_id", "tv", "tn")
+_E = ("eval_id", "qv", "qn")
 
 
 def _memo_trained(kind: str, df: DataFrame, params: tuple, build):
     """Session-shared build (session.py::shared) of a trained index
-    artifact (k-means centroids, PQ codebooks): identical (corpus
-    plan, params) requests return the SAME materialized DataFrame
-    instead of re-running the iterative trainer — train once, serve
-    every ANN/dedup variant.
+    artifact (k-means centroids, PQ codebooks) or of the k-means base
+    frame: identical (corpus plan, params) requests return the SAME
+    materialized DataFrame instead of re-running the iterative trainer
+    — train once, serve every ANN/dedup variant.
 
     Keyed by the corpus' analyzed-plan semantic hash + params under
-    the artifact ``kind``. Artifacts are centroid/codebook-scale
-    (k×dim — broadcast-sized), so the registry's memory is
-    negligible; ``release_shared`` drops them with every other shared
+    the artifact ``kind``. Trained artifacts are centroid/codebook-
+    scale (k×dim — broadcast-sized); the k-means base frame is the
+    one corpus-scale entry (persisted once instead of once per
+    caller). ``release_shared`` drops them with every other shared
     build."""
     key = (df._jdf.queryExecution().analyzed().semanticHash(), *params)
     return shared(df.sparkSession, kind, key, build)
+
+
+def _prep(
+    df: DataFrame, col_id: str, vec: str | Column, names: tuple, *keep
+) -> DataFrame:
+    """One scoring side: (id alias, double vector, its norm) under
+    ``names``, plus the ``keep`` columns. ``vec`` is a column name
+    (cast to array<double>) or an already-built double-vector Column
+    (a truncated prefix, an SQ8 reconstruction). Norms are computed
+    once per side, so each scored pair costs one dot product."""
+    i, v, n = names
+    vec = as_double(vec) if isinstance(vec, str) else vec
+    return df.select(F.col(col_id).alias(i), vec.alias(v), *keep).withColumn(
+        n, norm(F.col(v))
+    )
+
+
+def _cos(num: Column, na: Column, nb: Column) -> Column:
+    """The one cosine kernel: ``num`` (a dot product, or PQ's ADC
+    estimate) over the product of the two norms, rounded at 6. The
+    denominator is zero-guarded, so an all-zero vector on either side
+    scores NULL instead of raising DIVIDE_BY_ZERO under ANSI mode (or
+    NaN-sorting FIRST under Spark's NaN-greatest DESC order): NULL
+    ranks after every real score (DESC puts NULLs last on both
+    engines) and fails every ``>= threshold`` filter. The guard never
+    changes a non-degenerate value."""
+    return F.round(num / F.nullif(na * nb, F.lit(0.0)), 6)
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "cos_sim", rank_col: str = "rnk"
+) -> DataFrame:
+    """Each query's top-``k`` by descending ``score`` (NULLs last),
+    ties broken by neighbour id — the per-query window every
+    retriever ends in."""
+    return top_k_per_group(
+        scored, "query_id", [F.desc(score), F.asc("neighbor_id")], k, rank_col
+    )
+
+
+def _rank_pairs(pairs: DataFrame, k: int, *keep) -> DataFrame:
+    """Score candidate (query, neighbour) pairs — rows carrying both
+    :func:`_prep` sides (``_Q`` and ``_C``) — with the guarded cosine,
+    drop self-matches, keep each query's top-``k``: (query_id,
+    neighbor_id, *keep, cos_sim, rnk)."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        _cos(dot(F.col("qv"), F.col("cv")), F.col("qn"), F.col("cn")).alias(
+            "cos_sim"
+        ),
+    )
+    return _top_k(scored, k)
+
+
+def _route(
+    side: DataFrame,
+    centroids: DataFrame,
+    key: str | list[str],
+    vec: str,
+    n: int = 1,
+    on: str | None = None,
+) -> DataFrame:
+    """The nearest-centroid router: for each ``key`` row of ``side``
+    (which carries ``vec`` and its squared norm ``{vec}_sq``), keep
+    the ``n`` centroids (cid, c) nearest on the expanded distance
+    |x|² − 2x·c + |c|² (bit-identical in the SQL oracle), rounded at
+    6, ties broken by cid. ``on`` equi-joins side and centroids (PQ's
+    per-subspace codebooks); otherwise every centroid is a candidate.
+    Returns the side's columns plus (cid, c_sq, dist). The centroid
+    table is k×dim, so it broadcasts at any corpus size."""
+    keys = [on] if on else []
+    cents = centroids.select(
+        *keys, "cid", "c", dot(F.col("c"), F.col("c")).alias("c_sq")
+    )
+    pairs = (
+        side.join(broadcast(cents), on)
+        if on
+        else side.crossJoin(broadcast(cents))
+    )
+    dist = F.round(
+        F.col(f"{vec}_sq") - 2.0 * dot(F.col(vec), F.col("c")) + F.col("c_sq"),
+        6,
+    )
+    return top_k_per_group(
+        pairs.select(*side.columns, "cid", "c_sq", dist.alias("dist")),
+        key,
+        [F.asc("dist"), F.asc("cid")],
+        n,
+    ).drop("rnk")
+
+
+def _lloyd(
+    base: DataFrame,
+    centroids: DataFrame,
+    rounds: int,
+    vec: str,
+    key: str | list[str],
+    on: str | None = None,
+) -> DataFrame:
+    """``rounds`` Lloyd re-centroid steps from the given seeds (cid,
+    c), over ``base`` rows routed by ``key`` (per ``on`` group for PQ
+    subspaces). Each round's k×dim result is lineage-truncated
+    (localCheckpoint) so the next round's plan stays shallow —
+    Catalyst re-analyzes the whole tree per action (see
+    neardup_components for the measured blow-up)."""
+    keys = [on] if on else []
+    for _ in range(rounds):
+        centroids = (
+            _route(base, centroids, key, vec, on=on)
+            .select(*keys, "cid", F.posexplode(vec).alias("dim_idx", "val"))
+            .groupBy(*keys, "cid", "dim_idx")
+            .agg(F.avg("val").alias("cv"))
+            .groupBy(*keys, "cid")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct("dim_idx", "cv"))
+                ).alias("pairs")
+            )
+            .select(
+                *keys, "cid", F.expr("transform(pairs, p -> p.cv)").alias("c")
+            )
+            .localCheckpoint(eager=True)
+        )
+    return centroids
+
+
+def _km_base(corpus: DataFrame, col_id: str, col_vec: str) -> DataFrame:
+    """(vid, v, v_sq), persisted AND filled — the frame every Lloyd /
+    IVF stage fans out from. A shared build per (corpus plan, col_id,
+    col_vec): the IVF, IVF-PQ, IVF-SQ, k-means, cluster-eval,
+    SemDeDup and IVF-decontamination operators read one entry."""
+
+    def build():
+        base = corpus.select(
+            F.col(col_id).alias("vid"), as_double(col_vec).alias("v")
+        ).withColumn("v_sq", dot(F.col("v"), F.col("v"))).persist()
+        base.count()
+        return base
+
+    return _memo_trained("km_base", corpus, (col_id, col_vec), build)
+
+
+def _ivf(
+    corpus: DataFrame,
+    queries: DataFrame,
+    n_cells: int,
+    nprobe: int,
+    refinements: int,
+    col_id: str,
+    col_vec: str,
+    names: tuple = _Q,
+    quantizer: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF candidate generator: (cells, probes). ``cells`` routes
+    every corpus vector to its nearest trained cell (the k-means base
+    columns plus cid); ``probes`` is each query's ``nprobe`` nearest
+    cells as a :func:`_prep` side under ``names`` plus cid. Centroids
+    train on ``quantizer`` (default: the corpus)."""
+    base = _km_base(corpus, col_id, col_vec)
+    centroids = kmeans_centroids(
+        corpus if quantizer is None else quantizer,
+        n_cells,
+        refinements,
+        col_id,
+        col_vec,
+    )
+    i, v, n = names
+    q = _prep(queries, col_id, col_vec, names).withColumn(
+        f"{v}_sq", dot(F.col(v), F.col(v))
+    )
+    probes = _route(q, centroids, i, v, nprobe).select(i, v, n, "cid")
+    return _route(base, centroids, "vid", "v"), probes
 
 
 def rademacher_planes(n_planes: int, dim: int, seed: str = "ann") -> list[list[float]]:
@@ -55,12 +244,7 @@ def lsh_bucket_expr(vec_col, planes: list[list[float]]):
     """Random-hyperplane bucket id: bit p = sign(v · plane_p)."""
     bits = []
     for p, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        proj = F.aggregate(
-            F.zip_with(vec_col, arr, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        proj = dot(vec_col, F.array(*[F.lit(x) for x in plane]))
         bits.append(F.when(proj >= 0, F.lit(2 ** p)).otherwise(F.lit(0)))
     out = bits[0]
     for b in bits[1:]:
@@ -105,12 +289,11 @@ def ann_lsh_topk(
     fraction collapses (16 planes → 137 of 65k cells ≈ 0.2% of the
     corpus per query). Corpus vectors keep exactly one cell; probe
     cells are distinct, so each (query, neighbour) pair is scored at
-    most once and no dedup step is needed."""
+    most once and no dedup step is needed. Scores use the guarded
+    cosine (:func:`_cos`): a zero vector scores NULL and ranks last."""
     planes = rademacher_planes(n_planes, dim)
-    q = queries.select(
-        F.col(col_id).alias("query_id"), as_double(col_vec).alias("qv")
-    ).withColumn("bucket", lsh_bucket_expr(F.col("qv"), planes)).withColumn(
-        "qn", norm(F.col("qv"))
+    q = _prep(queries, col_id, col_vec, _Q).withColumn(
+        "bucket", lsh_bucket_expr(F.col("qv"), planes)
     )
     # multi-probe fan-out: one row per (query, probed cell)
     probes = q.select(
@@ -126,29 +309,10 @@ def ann_lsh_topk(
             )
         ).alias("bucket"),
     )
-    c = corpus.select(
-        F.col(col_id).alias("neighbor_id"), as_double(col_vec).alias("cv")
-    ).withColumn("bucket", lsh_bucket_expr(F.col("cv"), planes)).withColumn(
-        "cn", norm(F.col("cv"))
+    c = _prep(corpus, col_id, col_vec, _C).withColumn(
+        "bucket", lsh_bucket_expr(F.col("cv"), planes)
     )
-    scored = (
-        c.join(broadcast(probes), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank_pairs(c.join(broadcast(probes), "bucket"), k)
 
 
 def ann_bruteforce_topk(
@@ -162,43 +326,15 @@ def ann_bruteforce_topk(
 
     Broadcast-cross-join (|Q| small) → codegen'd cosine → per-query
     row_number. Self-matches are excluded. Ties broken by neighbour id
-    so ranks are deterministic. The denominator is nullif-guarded and
-    the rank window is desc_nulls_last: an all-zero vector on either
-    side scores NULL and sorts after every real score on both engines
-    (instead of raising DIVIDE_BY_ZERO under ANSI mode, or NaN-sorting
-    FIRST under Spark's NaN-greatest DESC order while DuckDB diverges)
-    — the same degenerate-vector rule as dim_truncation_recall and
-    semantic_decontaminate."""
-    # norms are precomputed per side so each of the |Q|x|C| pairs does
-    # one dot product, not one dot + two norms
-    q = queries.select(
-        F.col(col_id).alias("query_id"),
-        as_double(col_vec).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    c = corpus.select(
-        F.col(col_id).alias("neighbor_id"),
-        as_double(col_vec).alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    scored = (
-        c.crossJoin(broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv"))
-                / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_last("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    so ranks are deterministic. The cosine is the guarded kernel
+    (:func:`_cos`) every scorer of this module shares: an all-zero
+    vector on either side scores NULL and sorts after every real score
+    on both engines (instead of raising DIVIDE_BY_ZERO under ANSI
+    mode, or NaN-sorting FIRST under Spark's NaN-greatest DESC order
+    while DuckDB diverges)."""
+    q = _prep(queries, col_id, col_vec, _Q)
+    c = _prep(corpus, col_id, col_vec, _C)
+    return _rank_pairs(c.crossJoin(broadcast(q)), k)
 
 
 def hard_negative_mining(
@@ -221,35 +357,16 @@ def hard_negative_mining(
     corpus scale the exact scorer swaps for any of the ANN retrievers
     (retrieve ~k·oversample with IVF/PQ, filter labels, rerank); this
     exact form is the oracle-checkable baseline."""
-    q = queries.select(
-        F.col(col_id).alias("query_id"),
-        F.col(col_label).alias("query_label"),
-        as_double(col_vec).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    c = corpus.select(
-        F.col(col_id).alias("neighbor_id"),
-        F.col(col_label).alias("neighbor_label"),
-        as_double(col_vec).alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    scored = (
-        c.crossJoin(broadcast(q))
-        .filter(F.col("query_label") != F.col("neighbor_label"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
+    q = _prep(
+        queries, col_id, col_vec, _Q, F.col(col_label).alias("query_label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+    c = _prep(
+        corpus, col_id, col_vec, _C, F.col(col_label).alias("neighbor_label")
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+    pairs = c.crossJoin(broadcast(q)).filter(
+        F.col("query_label") != F.col("neighbor_label")
     )
+    return _rank_pairs(pairs, k, "neighbor_label")
 
 
 def label_centroids(
@@ -268,63 +385,6 @@ def label_centroids(
         .groupBy(col_label, "dim_idx")
         .agg(F.round(F.avg("val"), 6).alias("centroid_val"))
     )
-
-
-def _km_base(corpus: DataFrame, col_id: str, col_vec: str) -> DataFrame:
-    """(vid, v, v_sq), persisted AND filled — the frame every Lloyd /
-    IVF stage fans out from."""
-    base = corpus.select(
-        F.col(col_id).alias("vid"), as_double(col_vec).alias("v")
-    ).withColumn("v_sq", dot(F.col("v"), F.col("v"))).persist()
-    base.count()
-    return base
-
-
-def _km_assign(base: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: expanded-form |x|² − 2x·c + |c|²
-    (bit-identical in the SQL oracle), rounded distances, ties broken
-    by cluster id."""
-    w = Window.partitionBy("vid").orderBy(F.asc("dist"), F.asc("cid"))
-    c_sq = centroids.withColumn("c_sq", dot(F.col("c"), F.col("c")))
-    return (
-        base.crossJoin(broadcast(c_sq))
-        .select(
-            "vid",
-            "v",
-            "v_sq",
-            "cid",
-            F.round(
-                F.col("v_sq") - 2.0 * dot(F.col("v"), F.col("c")) + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-def _km_refine(base: DataFrame, centroids: DataFrame, rounds: int) -> DataFrame:
-    """``rounds`` Lloyd re-centroid steps from the given seeds. Each
-    round's k×dim result is lineage-truncated (localCheckpoint) so the
-    next round's plan stays shallow — Catalyst re-analyzes the whole
-    tree per action (see neardup_components for the measured blow-up)."""
-    for _ in range(rounds):
-        centroids = (
-            _km_assign(base, centroids)
-            .select("cid", F.posexplode("v").alias("dim_idx", "val"))
-            .groupBy("cid", "dim_idx")
-            .agg(F.avg("val").alias("cv"))
-            .groupBy("cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim_idx", "cv"))
-                ).alias("pairs")
-            )
-            .select("cid", F.expr("transform(pairs, p -> p.cv)").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-    return centroids
 
 
 def kmeans_centroids(
@@ -346,7 +406,7 @@ def kmeans_centroids(
         seeds = base.filter(F.col("vid") < k).select(
             F.col("vid").cast("int").alias("cid"), F.col("v").alias("c")
         )
-        return _km_refine(base, seeds, refinements)
+        return _lloyd(base, seeds, refinements, "v", "vid")
 
     return _memo_trained(
         "km_centroids", corpus, (k, refinements, col_id, col_vec), build
@@ -375,9 +435,9 @@ def kmeans_assignments(
     # iters Lloyd iterations == assign with (iters-1)-times-refined
     # centroids (the last re-centroid step never affects the output)
     centroids = kmeans_centroids(corpus, k, iters - 1, col_id, col_vec)
-    assign = _km_assign(base, centroids)
     return (
-        assign.groupBy("cid")
+        _route(base, centroids, "vid", "v")
+        .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.round(F.avg("dist"), 6).alias("mean_dist"),
@@ -413,71 +473,30 @@ def ivf_ann_topk(
     nprobe=4 (50%) — vs 82% for the Hamming-2 LSH multi-probe, which
     scores 69% of it. Raise ``nprobe`` (or ``n_cells`` with
     proportionally more probes) for more recall."""
-    base = _km_base(corpus, col_id, col_vec)
-    centroids = kmeans_centroids(
-        corpus, n_cells, refinements, col_id, col_vec
+    cells, probes = _ivf(
+        corpus, queries, n_cells, nprobe, refinements, col_id, col_vec
     )
-    cells = _km_assign(base, centroids).select(
-        F.col("vid").alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.sqrt(F.col("v_sq")).alias("cn"),
-        "cid",
-    )
-    qbase = queries.select(
-        F.col(col_id).alias("query_id"), as_double(col_vec).alias("qv")
-    ).withColumn("q_sq", dot(F.col("qv"), F.col("qv")))
-    c_sq = centroids.withColumn("c_sq", dot(F.col("c"), F.col("c")))
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cid"))
-    probes = (
-        qbase.crossJoin(broadcast(c_sq))
-        .select(
-            "query_id",
-            "qv",
-            F.sqrt(F.col("q_sq")).alias("qn"),
-            "cid",
-            F.round(
-                F.col("q_sq") - 2.0 * dot(F.col("qv"), F.col("c")) + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", "cid")
-    )
-    scored = (
-        cells.join(broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    c = _prep(cells, "vid", "v", _C, "cid")
+    return _rank_pairs(c.join(broadcast(probes), "cid"), k)
 
 
 def _pq_subspaces(
-    df: DataFrame, m: int, sub_dim: int, col_id: str, col_vec: str
+    df: DataFrame, m: int, col_id: str, col_vec: str
 ) -> DataFrame:
     """(vid, sub, sv, sv_sq): one row per (vector, subspace), produced
     by a single explode — every PQ stage (train, encode, query tables)
     for ALL subspaces then runs as ONE job instead of m, since the
     subspace id is just a grouping column (measured: per-subspace loops
-    cost m× the scheduling and scan work for identical results)."""
+    cost m× the scheduling and scan work for identical results). The
+    subspace width size(v) div m is computed inside the plan, so no
+    separate job collects the dimension first."""
     v = as_double(col_vec)
+    sub_dim = F.floor(F.size(v) / m).cast("int")
     entries = F.array(
         *[
             F.struct(
                 F.lit(s).alias("sub"),
-                F.slice(v, s * sub_dim + 1, sub_dim).alias("sv"),
+                F.slice(v, sub_dim * s + 1, sub_dim).alias("sv"),
             )
             for s in range(m)
         ]
@@ -489,32 +508,11 @@ def _pq_subspaces(
     )
 
 
-def _pq_assign(subs: DataFrame, books: DataFrame) -> DataFrame:
-    """Nearest sub-centroid per (vector, subspace): broadcast codebook
-    join + argmin on the 6-rounded expanded distance, cid tie-break —
-    the same determinism contract as the k-means family."""
-    wmin = Window.partitionBy("vid", "sub").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    return (
-        subs.join(broadcast(books), "sub")
-        .select(
-            "vid",
-            "sub",
-            "sv",
-            "cid",
-            "c_sq",
-            F.round(
-                F.col("sv_sq")
-                - 2.0 * dot(F.col("sv"), F.col("c"))
-                + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wmin))
-        .filter(F.col("rn") == 1)
-        .select("vid", "sub", "sv", "cid", "c_sq")
-    )
+def _pq_codes(subs: DataFrame, books: DataFrame) -> DataFrame:
+    """Nearest sub-centroid per (vector, subspace) — the router over
+    the per-subspace codebooks, with the same determinism contract as
+    the k-means family: (vid, sub, sv, sv_sq, cid, c_sq, dist)."""
+    return _route(subs, books, ["vid", "sub"], "sv", on="sub")
 
 
 def pq_codebooks(
@@ -533,56 +531,75 @@ def pq_codebooks(
     c_sq) — m·k_codes rows of dim/m floats, broadcast-scale at any
     corpus size. Memoized per (corpus plan, m, k_codes, refinements):
     the PQ-Flat, rerank, and IVF-PQ variants all serve from ONE
-    training run per session (see ``_memo_trained``)."""
+    training run per session (see ``_memo_trained``), checkpointed
+    once inside the build."""
     def build():
-        return _pq_train(corpus, m, k_codes, refinements, col_id, col_vec)
+        subs = _pq_subspaces(corpus, m, col_id, col_vec)
+        seeds = subs.filter(F.col("vid") < k_codes).select(
+            "sub", F.col("vid").cast("int").alias("cid"), F.col("sv").alias("c")
+        )
+        books = _lloyd(subs, seeds, refinements, "sv", ["vid", "sub"], "sub")
+        return books.withColumn(
+            "c_sq", dot(F.col("c"), F.col("c"))
+        ).localCheckpoint(eager=True)
 
     return _memo_trained(
         "pq_books", corpus, (m, k_codes, refinements, col_id, col_vec), build
     )
 
 
-def _pq_train(
+def _pq_adc(
     corpus: DataFrame,
+    queries: DataFrame,
     m: int,
     k_codes: int,
     refinements: int,
     col_id: str,
     col_vec: str,
+    cells: DataFrame | None = None,
+    probes: DataFrame | None = None,
 ) -> DataFrame:
-    dim_info = corpus.select(F.size(as_double(col_vec)).alias("d")).first()
-    sub_dim = dim_info["d"] // m
-    subs = _pq_subspaces(corpus, m, sub_dim, col_id, col_vec)
-    books = (
-        subs.filter(F.col("vid") < k_codes)
-        .select(
-            "sub",
-            F.col("vid").cast("int").alias("cid"),
-            F.col("sv").alias("c"),
-        )
-        .withColumn("c_sq", dot(F.col("c"), F.col("c")))
+    """The PQ asymmetric-distance scorer: (query_id, neighbor_id,
+    cos_est). Corpus codes join the per-(query, subspace, code)
+    partial-dot tables; the estimate is Σ pdot over the guarded
+    product of the query norm and the reconstructed corpus norm
+    √Σ|c|². With ``cells`` (vid, ccid) and ``probes`` (query_id,
+    ccid), codes are first restricted to each query's probed IVF
+    cells (IVF-PQ)."""
+    books = pq_codebooks(corpus, m, k_codes, refinements, col_id, col_vec)
+    # encode: nearest sub-centroid per (vector, subspace) — ONE job for
+    # all subspaces over the exploded subspace table
+    codes = _pq_codes(_pq_subspaces(corpus, m, col_id, col_vec), books).select(
+        "vid", "sub", "cid", "c_sq"
     )
-    for _ in range(refinements):
-        assigned = _pq_assign(subs, books)
-        books = (
-            assigned.select(
-                "sub", "cid", F.posexplode("sv").alias("dim_idx", "val")
-            )
-            .groupBy("sub", "cid", "dim_idx")
-            .agg(F.avg("val").alias("cv"))
-            .groupBy("sub", "cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim_idx", "cv"))
-                ).alias("pairs")
-            )
-            .select(
-                "sub", "cid", F.expr("transform(pairs, p -> p.cv)").alias("c")
-            )
-            .withColumn("c_sq", dot(F.col("c"), F.col("c")))
-            .localCheckpoint(eager=True)
+    # ADC tables: per (query, subspace, code) partial dot — tiny
+    tables = (
+        _pq_subspaces(queries, m, col_id, col_vec)
+        .select(F.col("vid").alias("query_id"), "sub", F.col("sv").alias("qs"))
+        .join(broadcast(books), "sub")
+        .select(
+            "query_id", "sub", "cid", dot(F.col("qs"), F.col("c")).alias("pdot")
         )
-    return books
+    )
+    keys = ["sub", "cid"]
+    if probes is not None:
+        codes = codes.join(cells, "vid").join(broadcast(probes), "ccid")
+        keys = ["query_id", *keys]
+    qn = _prep(queries, col_id, col_vec, _Q).select("query_id", "qn")
+    return (
+        codes.join(broadcast(tables), keys)
+        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
+        .agg(F.sum("pdot").alias("adc_dot"), F.sum("c_sq").alias("cn2_rec"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .join(broadcast(qn), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            _cos(
+                F.col("adc_dot"), F.col("qn"), F.sqrt(F.col("cn2_rec"))
+            ).alias("cos_est"),
+        )
+    )
 
 
 def pq_ann_topk(
@@ -624,54 +641,11 @@ def pq_ann_topk(
     rerank_factor=4 → 90% @ 8, exact-scoring only 16% of the corpus).
     Output column becomes ``cos_sim`` (exact) instead of
     ``cos_est``."""
-    dim_info = corpus.select(
-        F.size(as_double(col_vec)).alias("d")
-    ).first()
-    sub_dim = dim_info["d"] // m
-    books = pq_codebooks(
-        corpus, m, k_codes, refinements, col_id, col_vec
-    ).localCheckpoint(eager=True)
-    # encode: nearest sub-centroid per (vector, subspace) — ONE job for
-    # all subspaces over the exploded subspace table
-    subs = _pq_subspaces(corpus, m, sub_dim, col_id, col_vec)
-    codes = _pq_assign(subs, books).select("vid", "sub", "cid", "c_sq")
-    # ADC tables: per (query, subspace, code) partial dot — tiny
-    qs = _pq_subspaces(queries, m, sub_dim, col_id, col_vec).select(
-        F.col("vid").alias("query_id"), "sub", F.col("sv").alias("qs")
-    )
-    qn = queries.select(
-        F.col(col_id).alias("query_id"),
-        norm(as_double(col_vec)).alias("qn"),
-    )
-    tables = qs.join(broadcast(books), "sub").select(
-        "query_id", "sub", "cid", dot(F.col("qs"), F.col("c")).alias("pdot")
-    )
-    scored = (
-        codes.join(broadcast(tables), ["sub", "cid"])
-        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
-        .agg(
-            F.sum("pdot").alias("adc_dot"),
-            F.sum("c_sq").alias("cn2_rec"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.col("adc_dot") / (F.col("qn") * F.sqrt(F.col("cn2_rec"))),
-                6,
-            ).alias("cos_est"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_est"), F.asc("neighbor_id")
+    scored = _pq_adc(
+        corpus, queries, m, k_codes, refinements, col_id, col_vec
     )
     if not rerank_factor:
-        return (
-            scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= k)
-        )
+        return _top_k(scored, k, "cos_est")
     return _exact_rerank(
         scored, corpus, queries, k, k * rerank_factor, col_id, col_vec
     )
@@ -691,39 +665,14 @@ def _exact_rerank(
     ONLY that pool with true vectors, return the exact top-k. The pool
     is queries×pool_size rows — broadcast against the corpus join at
     any scale."""
-    w0 = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_est"), F.asc("neighbor_id")
+    pool = _top_k(scored, pool_size, "cos_est", "rnk0").select(
+        "query_id", "neighbor_id"
     )
-    pool = (
-        scored.withColumn("rnk0", F.row_number().over(w0))
-        .filter(F.col("rnk0") <= pool_size)
-        .select("query_id", "neighbor_id")
-    )
-    cvecs = corpus.select(
-        F.col(col_id).alias("neighbor_id"),
-        as_double(col_vec).alias("cv"),
-    ).withColumn("cn", norm(F.col("cv")))
-    qvecs = queries.select(
-        F.col(col_id).alias("query_id"), as_double(col_vec).alias("qv")
-    ).withColumn("qn", norm(F.col("qv")))
-    exact = (
-        cvecs.join(broadcast(pool), "neighbor_id")
-        .join(broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+    c = _prep(corpus, col_id, col_vec, _C)
+    q = _prep(queries, col_id, col_vec, _Q)
+    return _rank_pairs(
+        c.join(broadcast(pool), "neighbor_id").join(broadcast(q), "query_id"),
+        k,
     )
 
 
@@ -756,77 +705,44 @@ def ivfpq_ann_topk(
     Deterministic end-to-end (both quantizers break ties on id over
     6-rounded distances), so the SQL oracle reproduces cells, codes,
     ADC tables, and ranking exactly."""
-    base = _km_base(corpus, col_id, col_vec)
-    centroids = kmeans_centroids(
-        corpus, n_cells, refinements, col_id, col_vec
+    cells, probes = _ivf(
+        corpus, queries, n_cells, nprobe, refinements, col_id, col_vec
     )
-    coarse = _km_assign(base, centroids).select(
-        "vid", F.col("cid").alias("ccid")
+    scored = _pq_adc(
+        corpus,
+        queries,
+        m,
+        k_codes,
+        refinements,
+        col_id,
+        col_vec,
+        cells.select("vid", F.col("cid").alias("ccid")),
+        probes.select("query_id", F.col("cid").alias("ccid")),
     )
-    dim_info = corpus.select(F.size(as_double(col_vec)).alias("d")).first()
-    sub_dim = dim_info["d"] // m
-    books = pq_codebooks(
-        corpus, m, k_codes, refinements, col_id, col_vec
-    ).localCheckpoint(eager=True)
-    subs = _pq_subspaces(corpus, m, sub_dim, col_id, col_vec)
-    codes = (
-        _pq_assign(subs, books)
-        .select("vid", "sub", "cid", "c_sq")
-        .join(coarse, "vid")
+    return _top_k(scored, k, "cos_est")
+
+
+def _self_pairs(base: DataFrame, col_id: str, keys: list) -> DataFrame:
+    """(id_a, id_b, *keys, cos_sim) for every id_a < id_b pair of
+    ``base`` (id, v, nrm, *keys) sharing ``keys`` — all pairs without
+    keys — scored with the guarded cosine: the self-join behind
+    embedding near-dups and SemDeDup pruning."""
+    a = base.select(
+        F.col(col_id).alias("id_a"), F.col("v").alias("va"),
+        F.col("nrm").alias("na"), *keys,
     )
-    # query side: nprobe nearest coarse cells (same construction as
-    # ivf_ann_topk), plus the per-query ADC tables
-    qbase = queries.select(
-        F.col(col_id).alias("query_id"), as_double(col_vec).alias("qv")
-    ).withColumn("q_sq", dot(F.col("qv"), F.col("qv")))
-    c_sq = centroids.withColumn("csq", dot(F.col("c"), F.col("c")))
-    wq = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("cid"))
-    probes = (
-        qbase.crossJoin(broadcast(c_sq))
-        .select(
-            "query_id",
-            "cid",
-            F.round(
-                F.col("q_sq") - 2.0 * dot(F.col("qv"), F.col("c"))
-                + F.col("csq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", F.col("cid").alias("ccid"))
+    b = base.select(
+        F.col(col_id).alias("id_b"), F.col("v").alias("vb"),
+        F.col("nrm").alias("nb"), *keys,
     )
-    qs = _pq_subspaces(queries, m, sub_dim, col_id, col_vec).select(
-        F.col("vid").alias("query_id"), "sub", F.col("sv").alias("qs")
-    )
-    tables = qs.join(broadcast(books), "sub").select(
-        "query_id", "sub", "cid", dot(F.col("qs"), F.col("c")).alias("pdot")
-    )
-    qn = queries.select(
-        F.col(col_id).alias("query_id"), norm(as_double(col_vec)).alias("qn")
-    )
-    scored = (
-        codes.join(broadcast(probes), "ccid")
-        .join(broadcast(tables), ["query_id", "sub", "cid"])
-        .groupBy("query_id", F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("pdot").alias("adc_dot"), F.sum("c_sq").alias("cn2_rec"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.col("adc_dot") / (F.col("qn") * F.sqrt(F.col("cn2_rec"))),
-                6,
-            ).alias("cos_est"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_est"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+    joined = a.join(b, keys) if keys else a.crossJoin(b)
+    return joined.filter(F.col("id_a") < F.col("id_b")).select(
+        "id_a",
+        "id_b",
+        *keys,
+        _cos(dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")).alias(
+            "cos_sim"
+        ),
     )
 
 
@@ -841,33 +757,29 @@ def embedding_near_duplicates(
 
     With a block column the self-join is per-block (an IVF-style coarse
     partition: only same-cell pairs are scored); without one it degrades
-    to the full cross self-join — exact but corpus²."""
-    base = corpus.select(
-        F.col(col_id), as_double(col_vec).alias("v"),
-        *([F.col(col_block)] if col_block else []),
-    ).withColumn("nrm", norm(F.col("v"))).persist()
-    join_keys = [col_block] if col_block else []
-    a = base.select(
-        F.col(col_id).alias("id_a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"), *join_keys,
-    )
-    b = base.select(
-        F.col(col_id).alias("id_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"), *join_keys,
-    )
-    joined = a.join(b, join_keys) if join_keys else a.crossJoin(b)
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            *([F.col(col_block)] if col_block else []),
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cos_sim"),
+    to the full cross self-join — exact but corpus². A zero vector's
+    pairs score NULL and never pass the threshold."""
+    keys = [col_block] if col_block else []
+    base = _prep(corpus, col_id, col_vec, (col_id, "v", "nrm"), *keys).persist()
+    return _self_pairs(base, col_id, keys).filter(F.col("cos_sim") >= threshold)
+
+
+def _outer_products(v: str, index_base: int) -> Column:
+    """One row per upper-triangle product of ``v`` with itself: (i, j,
+    p = v[i]·v[j]) for i ≤ j, BIGINT indices counted from
+    ``index_base``. Exploded and summed per (i, j), this is the Gram
+    matrix as a dimension-scale aggregate."""
+    return F.explode(
+        F.expr(
+            f"""
+            flatten(transform({v}, (x, i0) ->
+              transform(slice({v}, i0 + 1, size({v})), (y, j0) ->
+                struct(CAST(i0 + {index_base} AS BIGINT) AS i,
+                       CAST(i0 + j0 + {index_base} AS BIGINT) AS j,
+                       x * y AS p))))
+            """
         )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    ).alias("t")
 
 
 def embedding_gram(
@@ -885,19 +797,7 @@ def embedding_gram(
     Accumulation in float64 (cast before multiply); 1-based (i, j)
     with i ≤ j."""
     emb = df.select(as_double(col_vec).alias("v"))
-    pairs = emb.select(
-        F.explode(
-            F.expr(
-                """
-                flatten(transform(v, (x, i0) ->
-                  transform(slice(v, i0 + 1, size(v)), (y, j0) ->
-                    struct(CAST(i0 + 1 AS BIGINT) AS i,
-                           CAST(i0 + j0 + 1 AS BIGINT) AS j,
-                           x * y AS p))))
-                """
-            )
-        ).alias("t")
-    ).select("t.*")
+    pairs = emb.select(_outer_products("v", 1)).select("t.*")
     return pairs.groupBy("i", "j").agg(F.round(F.sum("p"), 6).alias("g"))
 
 
@@ -923,36 +823,21 @@ def semantic_dedup(
     (paper: 50k clusters for LAION) so cells stay ~constant-sized —
     k is the knob, the plan shape doesn't change. Everything else is
     the one-shuffle k-means pipeline plus a cell-local join; no
-    corpus×corpus product ever materializes.
+    corpus×corpus product ever materializes. A zero vector's cosines
+    are NULL, so it is never dropped and never drops another.
 
     Returns per-cluster accounting (n_docs, n_dropped, n_kept,
     round(drop_ratio, 6)) ordered by cid — the table a curation run
     reads to pick the threshold."""
     base = _km_base(corpus, col_id, col_vec)
     centroids = kmeans_centroids(corpus, k, iters - 1, col_id, col_vec)
-    assign = (
-        _km_assign(base, centroids)
-        .withColumn("nrm", norm(F.col("v")))
-        .select("vid", "v", "nrm", "cid")
-    )
-    a = assign.select(
-        F.col("vid").alias("id_a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"), "cid",
-    )
-    b = assign.select(
-        F.col("vid").alias("id_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"), "cid",
+    assign = _prep(
+        _route(base, centroids, "vid", "v"), "vid", "v", ("vid", "v", "nrm"),
+        "cid",
     )
     dropped = (
-        a.join(b, "cid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                6,
-            )
-            >= threshold
-        )
+        _self_pairs(assign, "vid", ["cid"])
+        .filter(F.col("cos_sim") >= threshold)
         .select("id_b")
         .distinct()
         .withColumn("is_dup", F.lit(1))
@@ -1009,21 +894,9 @@ def embedding_pca(
         F.col(col_id),
         F.zip_with("v", mu_lit, lambda x, m: x - m).alias("v"),
     )
-    # corpus-scale pass 2: upper-triangle outer-product sums (the
-    # embedding_gram plan, inlined over the centered vectors)
-    pairs = centered.select(
-        F.explode(
-            F.expr(
-                """
-                flatten(transform(v, (x, i0) ->
-                  transform(slice(v, i0 + 1, size(v)), (y, j0) ->
-                    struct(CAST(i0 AS INT) AS i,
-                           CAST(i0 + j0 AS INT) AS j,
-                           x * y AS p))))
-                """
-            )
-        ).alias("t")
-    ).select("t.*")
+    # corpus-scale pass 2: the embedding_gram outer-product sums over
+    # the centered vectors, 0-based so (i, j) index numpy directly
+    pairs = centered.select(_outer_products("v", 0)).select("t.*")
     gram = pairs.groupBy("i", "j").agg(F.sum("p").alias("g")).collect()
     n_rows = emb.count()
     cov = np.zeros((d, d))
@@ -1041,16 +914,7 @@ def embedding_pca(
     proj_cols = []
     for c in range(comps.shape[1]):
         w = F.array(*[F.lit(float(x)) for x in comps[:, c]])
-        proj_cols.append(
-            F.round(
-                F.aggregate(
-                    F.zip_with("v", w, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias(f"pc{c + 1}")
-        )
+        proj_cols.append(F.round(dot(F.col("v"), w), 6).alias(f"pc{c + 1}"))
     return centered.select(F.col(col_id), *proj_cols)
 
 
@@ -1078,7 +942,7 @@ def cluster_eval(
     size."""
     base = _km_base(corpus, col_id, col_vec)
     centroids = kmeans_centroids(corpus, k, iters - 1, col_id, col_vec)
-    assign = _km_assign(base, centroids).select("vid", "cid")
+    assign = _route(base, centroids, "vid", "v").select("vid", "cid")
     lab = corpus.select(
         F.col(col_id).alias("vid"), F.col(col_label).alias("lbl")
     )
@@ -1200,41 +1064,14 @@ def pq_distortion(
 
     Serves from the same memoized codebooks as the PQ/ANN family (one
     training run per session). The per-(vector, subspace) error is the
-    SAME 6-rounded expanded-form distance the assignment argmin uses —
-    re-derived here with the dist column kept (the shared _pq_assign
-    drops it; kept separate so the witnessed ANN queries' code stays
-    untouched). Errors sum in DECIMAL(18,6), so the means are
-    partition-order independent.
+    SAME 6-rounded expanded-form distance the encoding argmin uses —
+    the router's ``dist`` column. Errors sum in DECIMAL(18,6), so the
+    means are partition-order independent.
 
     Scale shape: one subspace explode, one broadcast codebook join +
     per-(vid, sub) argmin window, one m-row aggregate."""
-    dim_info = corpus.select(
-        F.size(as_double(col_vec)).alias("d")
-    ).first()
-    sub_dim = dim_info["d"] // m
-    books = pq_codebooks(
-        corpus, m, k_codes, refinements, col_id, col_vec
-    )
-    subs = _pq_subspaces(corpus, m, sub_dim, col_id, col_vec)
-    wmin = Window.partitionBy("vid", "sub").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    assigned = (
-        subs.join(broadcast(books), "sub")
-        .select(
-            "vid",
-            "sub",
-            "cid",
-            F.round(
-                F.col("sv_sq")
-                - 2.0 * dot(F.col("sv"), F.col("c"))
-                + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wmin))
-        .filter(F.col("rn") == 1)
-    )
+    books = pq_codebooks(corpus, m, k_codes, refinements, col_id, col_vec)
+    assigned = _pq_codes(_pq_subspaces(corpus, m, col_id, col_vec), books)
     return (
         assigned.groupBy(F.col("sub").cast("int").alias("sub"))
         .agg(
@@ -1292,8 +1129,6 @@ def embedding_outliers(
             )
         )
     )
-    from .ranking import ranked_topk
-
     return ranked_topk(
         per_vec, [F.desc("dist_to_centroid"), F.asc("vid")], k
     ).select(
@@ -1331,16 +1166,35 @@ def sq_minmax_bounds(
     )
 
 
-# index-form SQ kernels, shared verbatim with the DuckDB oracle: the
-# i-th code/reconstruction from value x, bounds (mn, mx). floor() on an
-# identically-ordered double expression is exact cross-engine; codes
-# clamp to [0, 255] so x == mx lands in the top bucket.
+# index-form SQ kernels: the i-th code/reconstruction from value x,
+# bounds (mn, mx). The DuckDB oracles spell out the same arithmetic in
+# their own text; floor() on an identically-ordered double expression
+# is exact cross-engine; codes clamp to [0, 255] so x == mx lands in
+# the top bucket.
 _SQ_CODE = (
     "CASE WHEN {mx} - {mn} = 0 THEN 0 ELSE "
     "least(255, greatest(0, "
     "floor(({x} - {mn}) / ({mx} - {mn}) * 256))) END"
 )
 _SQ_RECON = "{mn} + ({code} + 0.5) * ({mx} - {mn}) / 256.0"
+
+
+def _sq8(vec: str, recon: bool) -> Column:
+    """Per-dimension SQ8 transform of the double vector ``vec`` against
+    the broadcast bounds row (mins, maxs): the int codes, or with
+    ``recon`` the bucket-midpoint reconstruction the quantized lanes
+    score through."""
+    at = {
+        k: f"element_at({arr}, CAST(i AS INT))"
+        for k, arr in (("x", vec), ("mn", "mins"), ("mx", "maxs"))
+    }
+    code = _SQ_CODE.format(**at)
+    body = (
+        _SQ_RECON.format(code=f"({code})", mn=at["mn"], mx=at["mx"])
+        if recon
+        else f"CAST(({code}) AS INT)"
+    )
+    return F.expr(f"transform(sequence(1, size({vec})), i -> {body})")
 
 
 def sq_quantize(
@@ -1359,23 +1213,10 @@ def sq_quantize(
     row; coding is a pure scan-side transform over the corpus — zero
     corpus-scale shuffles."""
     bounds = sq_minmax_bounds(corpus, col_id, col_vec)
-    code_i = _SQ_CODE.format(
-        x="element_at(cv, CAST(i AS INT))",
-        mn="element_at(mins, CAST(i AS INT))",
-        mx="element_at(maxs, CAST(i AS INT))",
-    )
     return (
-        corpus.select(
-            F.col(col_id), as_double(col_vec).alias("cv")
-        )
+        corpus.select(F.col(col_id), as_double(col_vec).alias("cv"))
         .crossJoin(broadcast(bounds))
-        .select(
-            col_id,
-            F.expr(
-                "transform(sequence(1, size(cv)), i -> "
-                f"CAST(({code_i}) AS INT))"
-            ).alias("codes"),
-        )
+        .select(col_id, _sq8("cv", recon=False).alias("codes"))
     )
 
 
@@ -1400,57 +1241,15 @@ def sq_ann_topk(
     scan reads uint8 codes instead of float32 vectors. Compose with
     the IVF cell router for sublinear scoring exactly as
     ivfpq_ann_topk routes PQ. Degenerate vectors (all-zero query or
-    reconstruction) score NULL via the nullif guard and rank last
-    (desc_nulls_last) — the ann_bruteforce_topk rule."""
+    reconstruction) score NULL through the guarded cosine and rank
+    last — the ann_bruteforce_topk rule."""
     bounds = sq_minmax_bounds(corpus, col_id, col_vec)
-    code_i = _SQ_CODE.format(
-        x="element_at(cv, CAST(i AS INT))",
-        mn="element_at(mins, CAST(i AS INT))",
-        mx="element_at(maxs, CAST(i AS INT))",
-    )
-    recon_i = _SQ_RECON.format(
-        code=f"({code_i})",
-        mn="element_at(mins, CAST(i AS INT))",
-        mx="element_at(maxs, CAST(i AS INT))",
-    )
-    recon = (
-        corpus.select(
-            F.col(col_id).alias("neighbor_id"),
-            as_double(col_vec).alias("cv"),
-        )
-        .crossJoin(broadcast(bounds))
-        .select(
-            "neighbor_id",
-            F.expr(
-                f"transform(sequence(1, size(cv)), i -> {recon_i})"
-            ).alias("rv"),
-        )
-        .withColumn("cn", norm(F.col("rv")))
-    )
-    q = queries.select(
-        F.col(col_id).alias("query_id"),
-        as_double(col_vec).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    scored = (
-        recon.crossJoin(broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("rv"))
-                / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_last("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    stored = corpus.select(
+        F.col(col_id), as_double(col_vec).alias("cv")
+    ).crossJoin(broadcast(bounds))
+    c = _prep(stored, col_id, _sq8("cv", recon=True), _C)
+    q = _prep(queries, col_id, col_vec, _Q)
+    return _rank_pairs(c.crossJoin(broadcast(q)), k)
 
 
 def dim_truncation_recall(
@@ -1479,57 +1278,30 @@ def dim_truncation_recall(
     ranking's own id tiebreak, the same rule both engines pin.
 
     A truncated prefix can be ALL-ZERO even when the full vector is
-    not, so the truncated cosine's denominator is nullif-guarded:
-    zero-norm pairs score NULL and sort after every real score on
-    both engines (DESC puts NULLs last) instead of raising under
-    ANSI mode. The exact baseline (``ann_bruteforce_topk``) applies
-    the SAME guard and desc_nulls_last ordering, so the frac-1.0 row
-    really is recall 1 by construction — both passes rank degenerate
-    vectors identically (k-boundary ties still break by neighbour id
-    in both)."""
+    not; the guarded cosine scores such pairs NULL and sorts them
+    after every real score on both engines (DESC puts NULLs last)
+    instead of raising under ANSI mode. The exact baseline
+    (``ann_bruteforce_topk``) shares the SAME kernel and ordering, so
+    the frac-1.0 row really is recall 1 by construction — both passes
+    rank degenerate vectors identically (k-boundary ties still break
+    by neighbour id in both)."""
     exact = ann_bruteforce_topk(
         corpus, queries, k, col_id, col_vec
     ).select("query_id", "neighbor_id")
     parts = []
     for frac in fractions:
-        d_expr = (
+        prefix = F.expr(
             f"slice(cv, 1, greatest(1, "
             f"cast(floor(size(cv) * {frac!r}) as int)))"
         )
-        c = corpus.select(
-            F.col(col_id).alias("neighbor_id"),
-            as_double(col_vec).alias("cv"),
-        ).select(
-            "neighbor_id", F.expr(d_expr).alias("tv")
-        ).withColumn("cn", norm(F.col("tv")))
-        q = queries.select(
-            F.col(col_id).alias("query_id"),
-            as_double(col_vec).alias("cv"),
-        ).select(
-            "query_id", F.expr(d_expr).alias("qv")
-        ).withColumn("qn", norm(F.col("qv")))
-        scored = (
-            c.crossJoin(broadcast(q))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    dot(F.col("qv"), F.col("tv"))
-                    / F.nullif(
-                        F.col("qn") * F.col("cn"), F.lit(0.0)
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc_nulls_last("cos_sim"), F.asc("neighbor_id")
-        )
-        approx = (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", F.lit(1).alias("m"))
+
+        def side(df, names):
+            full = df.select(F.col(col_id), as_double(col_vec).alias("cv"))
+            return _prep(full, col_id, prefix, names)
+
+        c, q = side(corpus, _C), side(queries, _Q)
+        approx = _rank_pairs(c.crossJoin(broadcast(q)), k).select(
+            "query_id", "neighbor_id", F.lit(1).alias("m")
         )
         j = exact.join(approx, ["query_id", "neighbor_id"], "left")
         parts.append(
@@ -1555,50 +1327,20 @@ def dim_truncation_recall(
     return out
 
 
-def semantic_decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    threshold: float = 0.9,
-    col_id: str = "vec_id",
-    col_vec: str = "embedding",
-) -> DataFrame:
-    """Embedding-space eval decontamination — the semantic twin of
-    ngram_decontaminate: flag every TRAIN vector whose cosine to ANY
-    eval vector reaches ``threshold`` (paraphrased benchmark leakage
-    that an n-gram scan cannot see; the scrub used alongside string
-    matching in modern instruction-tuning pipelines). Output one row
-    per contaminated train vector: (train_id, n_eval_hits,
-    best_eval_id, best_cos), best = highest cosine with eval-id
-    tiebreak.
-
-    Scale shape — deliberately identical to the n-gram
-    decontamination join: the eval side is benchmark-sized and
-    BROADCASTS; the 100 TB train side is one scan (per-pair cosine
-    inside codegen), and only HIT-scale rows reach the per-train
-    window. No train-side shuffle before the filter. At very large
-    eval sets, swap the broadcast for the IVF cell router exactly as
-    ivfpq_ann_topk does."""
-    t = train.select(
-        F.col(col_id).alias("train_id"),
-        as_double(col_vec).alias("tv"),
-    ).withColumn("tn", norm(F.col("tv")))
-    q = eval_df.select(
-        F.col(col_id).alias("eval_id"),
-        as_double(col_vec).alias("qv"),
-    ).withColumn("qn", norm(F.col("qv")))
-    hits = (
-        t.crossJoin(broadcast(q))
-        .select(
-            "train_id",
-            "eval_id",
-            F.round(
-                dot(F.col("tv"), F.col("qv"))
-                / F.nullif(F.col("tn") * F.col("qn"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+def _best_hits(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Decontamination tail over (train, eval) pairs carrying both
+    :func:`_prep` sides (``_T`` and ``_E``): guarded cosine, keep hits
+    ≥ ``threshold``, then one row per hit train vector (train_id,
+    n_eval_hits, best_eval_id, best_cos), best = highest cosine with
+    eval-id tiebreak. Only HIT-scale rows reach the per-train
+    window."""
+    hits = pairs.select(
+        "train_id",
+        "eval_id",
+        _cos(dot(F.col("tv"), F.col("qv")), F.col("tn"), F.col("qn")).alias(
+            "cos_sim"
+        ),
+    ).filter(F.col("cos_sim") >= threshold)
     w = Window.partitionBy("train_id").orderBy(
         F.desc("cos_sim"), F.asc("eval_id")
     )
@@ -1618,6 +1360,34 @@ def semantic_decontaminate(
             F.col("cos_sim").alias("best_cos"),
         )
     )
+
+
+def semantic_decontaminate(
+    train: DataFrame,
+    eval_df: DataFrame,
+    threshold: float = 0.9,
+    col_id: str = "vec_id",
+    col_vec: str = "embedding",
+) -> DataFrame:
+    """Embedding-space eval decontamination — the semantic twin of
+    ngram_decontaminate: flag every TRAIN vector whose cosine to ANY
+    eval vector reaches ``threshold`` (paraphrased benchmark leakage
+    that an n-gram scan cannot see; the scrub used alongside string
+    matching in modern instruction-tuning pipelines). Output one row
+    per contaminated train vector: (train_id, n_eval_hits,
+    best_eval_id, best_cos), best = highest cosine with eval-id
+    tiebreak. A zero vector on either side never counts as a hit.
+
+    Scale shape — deliberately identical to the n-gram
+    decontamination join: the eval side is benchmark-sized and
+    BROADCASTS; the 100 TB train side is one scan (per-pair cosine
+    inside codegen), and only HIT-scale rows reach the per-train
+    window. No train-side shuffle before the filter. At very large
+    eval sets, swap the broadcast for the IVF cell router exactly as
+    ivfpq_ann_topk does."""
+    t = _prep(train, col_id, col_vec, _T)
+    q = _prep(eval_df, col_id, col_vec, _E)
+    return _best_hits(t.crossJoin(broadcast(q)), threshold)
 
 
 def ivfsq_ann_topk(
@@ -1643,84 +1413,15 @@ def ivfsq_ann_topk(
 
     Deterministic end-to-end; the SQL oracle reproduces cells,
     probes, bounds, reconstruction, and ranking bit-for-bit."""
-    base = _km_base(corpus, col_id, col_vec)
-    centroids = kmeans_centroids(
-        corpus, n_cells, refinements, col_id, col_vec
+    cells, probes = _ivf(
+        corpus, queries, n_cells, nprobe, refinements, col_id, col_vec
     )
     bounds = sq_minmax_bounds(corpus, col_id, col_vec)
-    recon_i = _SQ_RECON.format(
-        code="("
-        + _SQ_CODE.format(
-            x="element_at(cv, CAST(i AS INT))",
-            mn="element_at(mins, CAST(i AS INT))",
-            mx="element_at(maxs, CAST(i AS INT))",
-        )
-        + ")",
-        mn="element_at(mins, CAST(i AS INT))",
-        mx="element_at(maxs, CAST(i AS INT))",
+    c = _prep(
+        cells.crossJoin(broadcast(bounds)), "vid", _sq8("v", recon=True),
+        _C, "cid",
     )
-    cells = (
-        _km_assign(base, centroids)
-        .select(
-            F.col("vid").alias("neighbor_id"),
-            F.col("v").alias("cv"),
-            "cid",
-        )
-        .crossJoin(broadcast(bounds))
-        .select(
-            "neighbor_id",
-            "cid",
-            F.expr(
-                f"transform(sequence(1, size(cv)), i -> {recon_i})"
-            ).alias("rv"),
-        )
-        .withColumn("cn", norm(F.col("rv")))
-    )
-    qbase = queries.select(
-        F.col(col_id).alias("query_id"), as_double(col_vec).alias("qv")
-    ).withColumn("q_sq", dot(F.col("qv"), F.col("qv")))
-    c_sq = centroids.withColumn("c_sq", dot(F.col("c"), F.col("c")))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    probes = (
-        qbase.crossJoin(broadcast(c_sq))
-        .select(
-            "query_id",
-            "qv",
-            F.sqrt(F.col("q_sq")).alias("qn"),
-            "cid",
-            F.round(
-                F.col("q_sq")
-                - 2.0 * dot(F.col("qv"), F.col("c"))
-                + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", "cid")
-    )
-    scored = (
-        cells.join(broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("qv"), F.col("rv"))
-                / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc_nulls_last("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank_pairs(c.join(broadcast(probes), "cid"), k)
 
 
 def semantic_decontaminate_ivf(
@@ -1773,81 +1474,14 @@ def semantic_decontaminate_ivf(
     HIT-scale rows reach the per-train window. Deterministic
     end-to-end; the SQL oracle reproduces cells, probes, and ranking
     bit-for-bit."""
-    qcorp = train if quantizer is None else quantizer
-    base = _km_base(train, col_id, col_vec)
-    centroids = kmeans_centroids(
-        qcorp, n_cells, refinements, col_id, col_vec
+    cells, probes = _ivf(
+        train, eval_df, n_cells, nprobe, refinements, col_id, col_vec,
+        _E, quantizer,
     )
-    cells = (
-        _km_assign(base, centroids)
-        .select(
-            F.col("vid").alias("train_id"),
-            F.col("v").alias("tv"),
-            "cid",
-        )
-        .withColumn("tn", norm(F.col("tv")))
-    )
-    qbase = eval_df.select(
-        F.col(col_id).alias("eval_id"), as_double(col_vec).alias("qv")
-    ).withColumn("q_sq", dot(F.col("qv"), F.col("qv")))
-    c_sq = centroids.withColumn("c_sq", dot(F.col("c"), F.col("c")))
-    wq = Window.partitionBy("eval_id").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    probes = (
-        qbase.crossJoin(broadcast(c_sq))
-        .select(
-            "eval_id",
-            "qv",
-            F.sqrt(F.col("q_sq")).alias("qn"),
-            "cid",
-            F.round(
-                F.col("q_sq")
-                - 2.0 * dot(F.col("qv"), F.col("c"))
-                + F.col("c_sq"),
-                6,
-            ).alias("dist"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("eval_id", "qv", "qn", "cid")
-    )
+    t = _prep(cells, "vid", "v", _T, "cid")
     n_probe_rows = eval_df.count() * min(int(nprobe), int(n_cells))
     if n_probe_rows <= broadcast_probe_limit:
-        routed = cells.join(broadcast(probes), "cid")
+        routed = t.join(broadcast(probes), "cid")
     else:
-        routed = cells.repartition("cid").join(
-            probes.repartition("cid"), "cid"
-        )
-    hits = (
-        routed
-        .select(
-            "train_id",
-            "eval_id",
-            F.round(
-                dot(F.col("tv"), F.col("qv"))
-                / F.nullif(F.col("tn") * F.col("qn"), F.lit(0.0)),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-    w = Window.partitionBy("train_id").orderBy(
-        F.desc("cos_sim"), F.asc("eval_id")
-    )
-    return (
-        hits.withColumn("rnk", F.row_number().over(w))
-        .withColumn(
-            "n_eval_hits",
-            F.count(F.lit(1))
-            .over(Window.partitionBy("train_id"))
-            .cast("bigint"),
-        )
-        .filter(F.col("rnk") == 1)
-        .select(
-            "train_id",
-            "n_eval_hits",
-            F.col("eval_id").alias("best_eval_id"),
-            F.col("cos_sim").alias("best_cos"),
-        )
-    )
+        routed = t.repartition("cid").join(probes.repartition("cid"), "cid")
+    return _best_hits(routed, threshold)

@@ -103,3 +103,22 @@ def test_item_pair_table_is_one_named_build(spark, shared_names):
     assert qs["item_triangles"](spark, sf_dir).count() > 0
     assert shared_names().count("item_sims") == 1
     release_shared(spark)
+
+
+def test_km_base_is_one_named_build(spark, shared_names):
+    """The IVF lanes read the k-means base frame (vid, v, v_sq) through
+    one named build (`km_base`), not through plan matching of separate
+    persist() calls: two of them leave one entry."""
+    from tests.oracle import SF_DIR_SMALL
+
+    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", SF_DIR_SMALL)
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    import __spark_entry__ as e
+
+    release_shared(spark)
+    qs = e.queries()
+    assert qs["ivf_ann_topk"](spark, sf_dir).count() > 0
+    assert qs["ivfsq_ann_topk"](spark, sf_dir).count() > 0
+    assert shared_names().count("km_base") == 1
+    release_shared(spark)
