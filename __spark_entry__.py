@@ -9581,19 +9581,16 @@ def _domain_neardup_rates(spark, sf_dir):
     """Per-registrable-domain near-dup pressure
     (functions/curation.py::domain_neardup_rates): MinHash+LSH pairs
     joined to the domain grain, counting within-domain pairs only.
-    The pair table is handed in PRE-BUILT from the same bare
-    (doc_id, text) projection the minhash_lsh_pairs canary persists —
-    deriving it from the url-augmented frame is a different
-    canonicalized plan, so the session cache silently missed and the
-    whole LSH chain re-ran (measured +8.5 s at sf0.1)."""
+    The url-augmented frame reads the same dedup builds as the
+    minhash_lsh_pairs query: they key on the optimized (doc_id, text)
+    plan."""
     from recmetrics_pyspark_spark.functions.curation import (
         domain_neardup_rates,
     )
 
-    pairs = D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
     return domain_neardup_rates(
         _docs_with_urls(spark, sf_dir), "doc_id", "text", "url",
-        threshold=0.1, pairs=pairs,
+        threshold=0.1,
     )
 
 

@@ -1415,12 +1415,12 @@ def domain_neardup_rates(
     col_text: str = "text",
     col_url: str = "url",
     threshold: float = 0.2,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-registrable-domain near-duplicate pressure: join the
     MinHash+LSH near-dup pairs (``operators.dedup.minhash_lsh_pairs``,
-    shared defaults so the session reuses its persisted candidate
-    caches) back to the domain grain and report, per domain,
+    shared defaults, so the session reuses its shingle and candidate
+    builds: they key on the (id, text) plan, which the url column does
+    not change) back to the domain grain and report, per domain,
     (n_docs, n_neardup_pairs, n_dup_docs, dup_doc_share) counting only
     WITHIN-domain pairs — the "which domains are template farms"
     readout that decides per-domain caps in a CommonCrawl-style
@@ -1431,22 +1431,12 @@ def domain_neardup_rates(
     id-keyed joins against the scan-side domain projection (doc-scale,
     hash-partitioned — never broadcast: the domain map is corpus-
     sized); everything after is domain-grain. Unordered output
-    (domain-grain at web scale is ~1e8 rows — no tail sort).
-
-    ``pairs`` lets the caller hand in an already-built near-dup pair
-    table (id_a, id_b) INSTEAD of deriving it from ``df``: Spark's
-    cache lookup matches canonicalized plans, so a pair chain built
-    from a url-AUGMENTED frame is a different plan than the plain
-    (id, text) chain the standalone dedup queries persisted — a
-    silent full LSH re-run (measured +8.5 s at sf0.1). Pass pairs
-    built from the same bare projection the rest of the session uses
-    and the persisted signature/candidate caches hit."""
+    (domain-grain at web scale is ~1e8 rows — no tail sort)."""
     from ..operators.dedup import minhash_lsh_pairs
 
-    if pairs is None:
-        pairs = minhash_lsh_pairs(
-            df, col_id=col_id, col_text=col_text, threshold=threshold
-        )
+    pairs = minhash_lsh_pairs(
+        df, col_id=col_id, col_text=col_text, threshold=threshold
+    )
     doms = df.select(
         F.col(col_id).alias("did"),
         registrable_domain(F.col(col_url)).alias("domain"),

@@ -19,80 +19,115 @@ band-bucket join materializes only same-bucket pairs, exactly like a
 production MinHash dedup. Embedding-cosine near-dup lives in
 ``operators.similarity``.
 
-Cache contract (session lifetime): the shared intermediates these
-operators persist (the shingle table, the threshold-independent Jaccard
-pair table, simhash signatures) are deliberately left cached for the
-life of the SparkSession — Spark's cache manager dedupes the identical
-plan across operators, which is what makes the dedup family's marginal
-costs additive in a notebook/bench session. They use MEMORY_AND_DISK,
-so eviction is safe but disk usage grows with every distinct (df,
-params) variant queried. Long-lived services that churn through many
-corpora should call ``spark.catalog.clearCache()`` between corpora (or
-``df.unpersist()`` on the returned tables) — there is intentionally no
-hidden registry doing this behind the caller's back.
+Every query is composed from one copy of each part: one word-gram
+emitter (:func:`_gram_rows`), one ``id_a < id_b`` doc-pair self-join
+(:func:`_doc_pairs`), one overlap scorer (:func:`_overlap_scores`:
+size join, containment, Jaccard), one MinHash band stacker
+(:func:`_band_stack`) and one hash-group dedup (:func:`_hash_dedup`).
+
+Cache contract (session lifetime): the intermediates several queries
+read are named shared builds (session.py::shared_plan) — the shingle
+table (``word_shingles``), its df-capped cut (``capped_shingles``),
+the threshold-independent pair table (``jaccard_pairs``), the MinHash
+band stack and candidates (``minhash_bands``, ``minhash_candidates``)
+and the SimHash signatures (``simhash_signatures``). Each is keyed on
+the optimized plan of the (id, text) projection it reads plus its
+parameters, so a frame carrying extra columns hits the same build;
+each is ``persist()`` + ``count()`` (MEMORY_AND_DISK) and lives until
+``release_shared(spark)``, which a service churning through many
+corpora calls between them. The one other persisted table,
+``build_eval_shingles``, belongs to its caller.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def content_hashes(df: DataFrame, col_id: str, col_text: str) -> DataFrame:
-    return df.select(F.col(col_id), F.md5(F.col(col_text)).alias("content_hash"))
+from ..session import shared_plan
 
 
-def exact_dedup(
-    df: DataFrame, col_id: str = "doc_id", col_text: str = "text"
+def _hash_dedup(
+    df: DataFrame, col_id: str, h: Column, col_hash: str
 ) -> DataFrame:
-    """Per-doc exact-duplicate assignment: smallest id in each
-    content-hash group is canonical; everything else is a duplicate."""
-    hashed = content_hashes(df, col_id, col_text)
-    groups = hashed.groupBy("content_hash").agg(
+    """Per-doc duplicate assignment by hash group: the smallest id in
+    each ``h`` group is canonical; everything else is a duplicate. One
+    shuffle on the hash."""
+    hashed = df.select(F.col(col_id), h.alias(col_hash))
+    groups = hashed.groupBy(col_hash).agg(
         F.count(F.lit(1)).alias("n_copies"),
         F.min(col_id).alias("canonical_id"),
     )
-    return hashed.join(groups, "content_hash").select(
+    return hashed.join(groups, col_hash).select(
         col_id,
-        "content_hash",
+        col_hash,
         "n_copies",
         "canonical_id",
         (F.col(col_id) != F.col("canonical_id")).alias("is_dup"),
     )
 
 
-def _shingle_rows(
+def exact_dedup(
+    df: DataFrame, col_id: str = "doc_id", col_text: str = "text"
+) -> DataFrame:
+    """Per-doc exact-duplicate assignment over the raw-text md5."""
+    return _hash_dedup(df, col_id, F.md5(F.col(col_text)), "content_hash")
+
+
+def _gram_rows(
     df: DataFrame,
     col_id: str,
     col_text: str,
     k: int,
-    distinct: bool = True,
     whitespace: bool = False,
     skip_empty: bool = False,
+    pos: bool = False,
+    short_ns: list[int] | tuple[int, ...] = (),
 ) -> DataFrame:
-    """Unpersisted word-k-gram rows — the shared construction behind
-    word_shingles (which adds persist for fan-out consumers) and
-    ngram_decontaminate's corpora (single flowing consumers that
-    must NOT materialize a corpus-scale shingle table).
-    ``distinct=False`` skips the per-doc set shuffle for consumers
-    whose downstream aggregate already counts DISTINCT — the raw
-    stream stays a pure scan-side pipeline. ``whitespace=True``
-    tokenizes on a whitespace CLASS ([ \\t\\n\\r]+, empty tokens
-    dropped) instead of the single literal space — cross-corpus
-    consumers need it (a line-wrapped copy of a single-spaced quote
-    must still collide); the single-space default is the pinned
-    within-corpus tokenization every existing shingle oracle
-    mirrors. ``skip_empty=True`` drops zero-token documents BEFORE
-    the position explode — without it an empty/whitespace-only doc
-    still emits one empty-string partial shingle (greatest(..., 1)
+    """Unpersisted, un-deduplicated word-gram rows ``(col_id[, pos],
+    shingle)`` — the one gram emitter behind word_shingles (which adds
+    the per-doc set and the shared build), duplicated_spans
+    (``pos=True``: the start position rides along) and both sides of
+    the decontamination scan (single flowing consumers that must NOT
+    materialize a corpus-scale shingle table).
+
+    Tokenization is materialized as a column BEFORE the gram
+    construction: referencing ``split(text)`` inline re-splits the
+    whole document per gram (quadratic in doc length). Each gram is
+    built by posexplode over the start positions plus k
+    ``try_element_at`` lookups — ALL codegen'd expressions, measured
+    ~2x faster than the equivalent interpreted ``transform``/``slice``
+    lambda (1.0s vs 2.6s cold at sf0.1 for the same 260k shingles).
+    ``try_element_at`` returns NULL past the array end and concat_ws
+    skips NULLs, so a document shorter than k yields one partial gram
+    of its whole text (and ANSI mode stays crash-free).
+
+    ``whitespace=True`` tokenizes on a whitespace CLASS ([ \\t\\n\\r]+,
+    empty tokens dropped) instead of the single literal space —
+    cross-corpus consumers need it (a line-wrapped copy of a
+    single-spaced quote must still collide); the single-space default
+    is the pinned within-corpus tokenization every existing shingle
+    oracle mirrors. ``skip_empty=True`` drops zero-token documents
+    BEFORE the position explode — without it an empty/whitespace-only
+    doc still emits one empty-string partial gram (greatest(..., 1)
     forces position 1 and concat_ws over all-NULL lookups yields '');
     the decontamination path needs the filter so two whitespace-only
     docs across corpora don't read as a contamination hit, while
     word_shingles keeps the historical partial-shingle semantics its
-    oracles pin."""
-    lookups = [
-        F.expr(f"try_element_at(__toks, pos + {i})") for i in range(k)
-    ]
+    oracles pin.
+
+    ``short_ns`` (the decontamination train side) adds full n-gram
+    levels for each 0 < n < k: a sub-k-word benchmark answer quoted
+    inside a long train page must still collide, so the train side
+    emits grams at exactly those lengths too. All levels share ONE
+    tokenization and ONE position explode over
+    1..greatest(size - min_n + 1, 1); per-level validity guards decide
+    emission (the k level keeps its whole-doc partial for docs shorter
+    than k), so the scan stays single-pass and shuffle-free. A doc of
+    exactly n tokens emits its whole text at both the k-partial and
+    the n level — harmless, every downstream aggregate counts
+    DISTINCT."""
+    ns = sorted({int(n) for n in short_ns if 0 < int(n) < k})
     if whitespace:
         toks = F.filter(
             F.split(F.col(col_text), "[ \\t\\n\\r]+"), lambda x: x != ""
@@ -102,44 +137,58 @@ def _shingle_rows(
     base = df.select(F.col(col_id), toks.alias("__toks"))
     if skip_empty:
         base = base.filter(F.size("__toks") > 0)
-    out = (
-        base
-        .select(
-            F.col(col_id),
-            "__toks",
-            F.posexplode(
-                F.expr(f"sequence(1, greatest(size(__toks) - {k - 1}, 1))")
-            ).alias("__i", "pos"),
-        )
-        .select(F.col(col_id), F.concat_ws(" ", *lookups).alias("shingle"))
+    n_min = ns[0] if ns else k
+    at = base.select(
+        F.col(col_id),
+        "__toks",
+        F.posexplode(
+            F.expr(f"sequence(1, greatest(size(__toks) - {n_min - 1}, 1))")
+        ).alias("__i", "pos"),
     )
-    return out.distinct() if distinct else out
+
+    def gram(n: int) -> Column:
+        return F.concat_ws(
+            " ",
+            *[F.expr(f"try_element_at(__toks, pos + {i})") for i in range(n)],
+        )
+
+    if not ns:
+        return at.select(
+            F.col(col_id), *(["pos"] if pos else []), gram(k).alias("shingle")
+        )
+
+    def full(n: int) -> str:
+        return f"pos + {n - 1} <= size(__toks)"
+
+    partial = f"pos = 1 and size(__toks) < {k}"
+    levels = [F.when(F.expr(f"{full(k)} or ({partial})"), gram(k))] + [
+        F.when(F.expr(full(n)), gram(n)) for n in ns
+    ]
+    return at.select(
+        F.col(col_id), F.explode(F.array(*levels)).alias("shingle")
+    ).filter(F.col("shingle").isNotNull())
 
 
 def word_shingles(
     df: DataFrame, col_id: str, col_text: str, k: int = 3
 ) -> DataFrame:
-    """Distinct word k-gram shingles per document (set semantics).
+    """Distinct word k-gram shingles per document (set semantics), from
+    the one gram emitter (:func:`_gram_rows`).
 
-    Tokenization is materialized as a column BEFORE the shingle
-    construction: referencing ``split(text)`` inline re-splits the
-    whole document per shingle (quadratic in doc length). The shingle
-    itself is built by posexplode over the start positions plus k
-    ``try_element_at`` lookups — ALL codegen'd expressions, measured
-    ~2x faster than the equivalent interpreted ``transform``/``slice``
-    lambda (1.0s vs 2.6s cold at sf0.1 for the same 260k shingles).
-    ``try_element_at`` returns NULL past the array end and concat_ws
-    skips NULLs, so short documents yield the same partial shingle the
-    slice form produced (and ANSI mode stays crash-free)."""
-    # persisted AND filled eagerly: every consumer (signatures,
-    # inverted-index sides, size aggregate) fans out from this table,
-    # and sibling branches of one job racing an unfilled cache would
-    # each re-run the explode+distinct (measured ~5s/evaluation cold at
-    # sf0.01). Spark's cache manager dedupes the identical plan across
-    # operators in one session, so later calls' count() hits the cache.
-    out = _shingle_rows(df, col_id, col_text, k).persist()
-    out.count()
-    return out
+    A named shared build (``word_shingles``, keyed on the (col_id,
+    col_text) plan of ``df`` + k), persisted AND filled eagerly: every
+    consumer (signatures, inverted-index sides, size aggregate) fans
+    out from this table, and sibling branches of one job racing an
+    unfilled cache would each re-run the explode+distinct (measured
+    ~5s/evaluation cold at sf0.01)."""
+    docs = df.select(col_id, col_text)
+
+    def build():
+        out = _gram_rows(docs, col_id, col_text, k).distinct().persist()
+        out.count()
+        return out
+
+    return shared_plan("word_shingles", docs, (col_id, col_text, k), build)
 
 
 # Default document-frequency cap for the exact-Jaccard shingle
@@ -174,20 +223,139 @@ def capped_shingles(
 
     The hot-shingle list is df-scale (only shingles ABOVE the cut) —
     tiny relative to the shingle table — so the anti-join broadcasts
-    under AQE at every realistic scale. Persisted + filled eagerly for
-    the same fan-out reason as word_shingles."""
-    sh = word_shingles(df, col_id, col_text, k)
+    under AQE at every realistic scale. A named shared build
+    (``capped_shingles``, keyed like word_shingles + max_df),
+    persisted + filled eagerly for the same fan-out reason."""
     if max_df is None:
-        return sh
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("shingle")
+        return word_shingles(df, col_id, col_text, k)
+    docs = df.select(col_id, col_text)
+
+    def build():
+        sh = word_shingles(docs, col_id, col_text, k)
+        hot = (
+            sh.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > max_df)
+            .select("shingle")
+        )
+        out = sh.join(hot, "shingle", "left_anti").persist()
+        out.count()
+        return out
+
+    return shared_plan(
+        "capped_shingles", docs, (col_id, col_text, k, max_df), build
     )
-    out = sh.join(hot, "shingle", "left_anti").persist()
-    out.count()
-    return out
+
+
+def _doc_pairs(
+    side: DataFrame, on: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """The one doc-pair self-join: ``side`` rows (id, *on, *carry)
+    equi-joined to themselves on ``on``, each unordered pair once
+    (``id_a < id_b``), every ``carry`` column c as c_a / c_b. Only
+    same-key pairs are generated, so the join scales with key
+    occupancy, never with corpus²."""
+
+    def half(s: str) -> DataFrame:
+        return side.select(
+            F.col("id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            *on,
+        )
+
+    return half("a").join(half("b"), on).filter(F.col("id_a") < F.col("id_b"))
+
+
+def _overlap(n: Column, na: Column, nb: Column) -> tuple[Column, Column]:
+    """(containment, Jaccard) of two sets of sizes ``na`` and ``nb``
+    sharing ``n`` members: n / min(na, nb) and n / (na + nb − n), one
+    double division each, rounded to 6 places."""
+    return (
+        F.round(n / F.least(na, nb).cast("double"), 6),
+        F.round(n / (na + nb - n).cast("double"), 6),
+    )
+
+
+def _overlap_scores(inter: DataFrame, sh: DataFrame, col_id: str) -> DataFrame:
+    """Pair overlap (id_a, id_b, n_inter) + the per-doc shingle counts
+    of ``sh`` → (id_a, id_b, n_inter, containment, jaccard)
+    (:func:`_overlap`). The sizes are doc-scale; over a cached
+    shingle table Catalyst has real size stats, so they broadcast when
+    small and fall back to a shuffle join at corpus scale — no forced
+    hint here."""
+    sizes = sh.groupBy(col_id).agg(F.count(F.lit(1)).alias("n_sh"))
+    na = sizes.select(F.col(col_id).alias("id_a"), F.col("n_sh").alias("n_a"))
+    nb = sizes.select(F.col(col_id).alias("id_b"), F.col("n_sh").alias("n_b"))
+    containment, jaccard = _overlap(
+        F.col("n_inter"), F.col("n_a"), F.col("n_b")
+    )
+    return (
+        inter.join(na, "id_a")
+        .join(nb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            "n_inter",
+            containment.alias("containment"),
+            jaccard.alias("jaccard"),
+        )
+    )
+
+
+def _pair_table(
+    df: DataFrame,
+    col_id: str,
+    col_text: str,
+    k: int,
+    max_df: int | None,
+) -> DataFrame:
+    """Threshold-INDEPENDENT pair table: every pair sharing ≥1 capped
+    shingle, with (n_inter, containment, jaccard). A named shared build
+    (``jaccard_pairs``), persisted + filled before fan-out: the
+    near-pair queries at several thresholds, containment, the
+    component builder and the MinHash accuracy report all filter the
+    SAME table, so the inverted-index join + pair count is paid once
+    per session.
+
+    The co-shingle count groups on a single packed BIGINT pair key
+    (``id_a * 2^32 + id_b``) so the aggregate takes the
+    single-primitive-key fast hash map path (same trick, same measured
+    ~1.5x, as item_item_topk; ids must fit in 32 bits — ANSI mode
+    overflows loudly otherwise). The shingle universe is df-capped
+    (capped_shingles) so no single shingle key can blow the self-join
+    up quadratically; |A| and |B| count capped shingles too, keeping
+    the scores self-consistent over the capped universe."""
+    docs = df.select(col_id, col_text)
+
+    def build():
+        id_type = dict(docs.dtypes)[col_id]
+        sh = capped_shingles(docs, col_id, col_text, k, max_df)
+        co = _doc_pairs(
+            sh.select(F.col(col_id).alias("id"), "shingle"), ["shingle"]
+        ).select(
+            (F.col("id_a").cast("bigint") * F.lit(4294967296).cast("bigint")
+             + F.col("id_b").cast("bigint")).alias("pk")
+        )
+        inter = (
+            # ~1.27M co-shingle rows hold ~1.13M distinct pairs at sf0.1
+            # — reduction factor ~1.1, so skip the map-side combine
+            # (same measured rule as item_cooccurrence_pairs)
+            co.repartition("pk")
+            .groupBy("pk")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+            .select(
+                F.expr("pk div 4294967296").cast(id_type).alias("id_a"),
+                (F.col("pk") % F.lit(4294967296)).cast(id_type).alias("id_b"),
+                "n_inter",
+            )
+        )
+        out = _overlap_scores(inter, sh, col_id).persist()
+        out.count()
+        return out
+
+    return shared_plan(
+        "jaccard_pairs", docs, (col_id, col_text, k, max_df), build
+    )
 
 
 def ngram_jaccard_pairs(
@@ -203,87 +371,17 @@ def ngram_jaccard_pairs(
     Inverted-index plan: only pairs sharing at least one shingle are
     ever materialized (the same sparsity the personalization self-join
     exploits); |A|,|B| come from a broadcastable per-doc aggregate.
-    The co-shingle count groups on a single packed BIGINT pair key
-    (``id_a * 2^32 + id_b``) so the aggregate takes the
-    single-primitive-key fast hash map path (same trick, same measured
-    ~1.5x, as item_item_topk; ids must fit in 32 bits — ANSI mode
-    overflows loudly otherwise).
+    Filters the shared threshold-independent pair table
+    (:func:`_pair_table`).
 
     ``max_df`` caps per-shingle document frequency (capped_shingles):
     Jaccard is computed over the df ≤ max_df shingle universe, which
     bounds the inverted-index join's worst key at max_df^2/2 pairs."""
-    return _jaccard_all_pairs(df, col_id, col_text, k, max_df).filter(
-        F.col("jaccard") >= threshold
+    return (
+        _pair_table(df, col_id, col_text, k, max_df)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
-
-
-def _jaccard_all_pairs(
-    df: DataFrame,
-    col_id: str,
-    col_text: str,
-    k: int,
-    max_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Threshold-INDEPENDENT Jaccard pair table: every pair sharing ≥1
-    shingle, with its exact Jaccard. Persisted + materialized because
-    consumers (near-pair queries at several thresholds, the component
-    builder, the MinHash accuracy report) all filter the SAME table —
-    the session cache dedupes the identical plan, so the inverted-index
-    join + pair count is paid once per session, not once per caller.
-
-    The shingle universe is df-capped (capped_shingles) so no single
-    shingle key can blow the self-join up quadratically; |A| and |B|
-    count capped shingles too, keeping the Jaccard self-consistent
-    over the capped universe."""
-    id_type = dict(df.dtypes)[col_id]
-    sh = capped_shingles(df, col_id, col_text, k, max_df)
-    sizes = sh.groupBy(col_id).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(col_id).alias("id_a"), "shingle")
-    b = sh.select(F.col(col_id).alias("id_b"), "shingle")
-    co = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            (F.col("id_a").cast("bigint") * F.lit(4294967296).cast("bigint")
-             + F.col("id_b").cast("bigint")).alias("pk")
-        )
-    )
-    inter = (
-        # ~1.27M co-shingle rows hold ~1.13M distinct pairs at sf0.1 —
-        # reduction factor ~1.1, so skip the map-side combine (same
-        # measured rule as item_cooccurrence_pairs)
-        co.repartition("pk")
-        .groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .select(
-            F.expr("pk div 4294967296").cast(id_type).alias("id_a"),
-            (F.col("pk") % F.lit(4294967296)).cast(id_type).alias("id_b"),
-            "n_inter",
-        )
-    )
-    na = sizes.select(F.col(col_id).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(col_id).alias("id_b"), F.col("n_sh").alias("n_b"))
-    out = (
-        # sizes is doc-scale; the cached shingle table gives Catalyst
-        # real size stats, so it broadcasts when small and falls back
-        # to a shuffle join at corpus scale — no forced hint here
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .persist()
-    )
-    # fill before fan-out: sibling branches of one job would race the
-    # unfilled cache and re-run the inverted-index join
-    out.count()
-    return out
 
 
 def minhash_signatures(
@@ -304,6 +402,68 @@ def minhash_signatures(
         for i in range(n_hashes)
     ]
     return sh.groupBy(col_id).agg(*mins)
+
+
+def _band_stack(
+    index: DataFrame, col_id: str, bands: int, id_alias: str, *keep
+) -> DataFrame:
+    """An :func:`lsh_index` stacked to one row per (doc, band):
+    (id_alias, *keep, band_idx, band_sig) — the side of every LSH
+    bucket join."""
+    return index.select(
+        F.col(col_id).alias(id_alias),
+        *keep,
+        F.posexplode(
+            F.array(*[F.col(f"band{b}") for b in range(bands)])
+        ).alias("band_idx", "band_sig"),
+    )
+
+
+def _agreement(a: str, b: str, n_hashes: int) -> Column:
+    """Count of agreeing MinHash components between the ``a{i}`` and
+    ``b{i}`` signature columns — n_hashes × the Jaccard estimate."""
+    return sum(
+        [
+            F.when(F.col(f"{a}{i}") == F.col(f"{b}{i}"), 1).otherwise(0)
+            for i in range(n_hashes)
+        ],
+        F.lit(0),
+    )
+
+
+def _minhash_candidates(
+    df: DataFrame,
+    col_id: str,
+    col_text: str,
+    k_shingle: int,
+    n_hashes: int,
+    bands: int,
+) -> tuple[DataFrame, int]:
+    """(candidate pairs (id_a, id_b), their count): every distinct pair
+    sharing a band bucket. Two named shared builds: the band stack
+    (``minhash_bands``, read by both bucket-join sides — filled once)
+    and the candidates (``minhash_candidates``, whose count both fills
+    the cache and sizes the verify join)."""
+    docs = df.select(col_id, col_text)
+    params = (col_id, col_text, k_shingle, n_hashes, bands)
+
+    def stack():
+        index = lsh_index(docs, col_id, col_text, k_shingle, n_hashes, bands)
+        out = _band_stack(index, col_id, bands, "id").persist()
+        out.count()
+        return out
+
+    def build():
+        stacked = shared_plan("minhash_bands", docs, params, stack)
+        cand = (
+            _doc_pairs(stacked, ["band_idx", "band_sig"])
+            .select("id_a", "id_b")
+            .distinct()
+            .persist()
+        )
+        return cand, cand.count()
+
+    return shared_plan("minhash_candidates", docs, params, build)
 
 
 def minhash_lsh_pairs(
@@ -332,46 +492,21 @@ def minhash_lsh_pairs(
     is a map-side join against the shingle table; above it the verify
     falls back to a shuffle join (same guard class as
     pagerank_from_edges' broadcast_node_limit). The count that decides
-    also fills the persisted candidate cache, so it costs nothing
-    extra. Verify-side Jaccard uses the df-capped shingle universe
-    (capped_shingles), matching ngram_jaccard_pairs' semantics."""
-    rows = n_hashes // bands
-    sigs = minhash_signatures(df, col_id, col_text, k_shingle, n_hashes)
-    band_cols = [
-        F.md5(F.concat(*[F.col(f"mh{b * rows + r}") for r in range(rows)])).alias(
-            f"band{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(F.col(col_id), *band_cols)
-    stacked = banded.select(
-        F.col(col_id),
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
-            "band_idx", "band_sig"
-        ),
-    ).persist()
-    stacked.count()  # both bucket-join sides read it — fill once
-    ca = stacked.select(F.col(col_id).alias("id_a"), "band_idx", "band_sig")
-    cb = stacked.select(F.col(col_id).alias("id_b"), "band_idx", "band_sig")
-    candidates = (
-        ca.join(cb, ["band_idx", "band_sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .persist()
+    is the one that filled the shared candidate build, so it costs
+    nothing extra. Verify ONLY the candidate pairs, instead of
+    materializing every co-shingle pair in the corpus (LSH exists
+    precisely to avoid that); verify-side Jaccard uses the df-capped
+    shingle universe (capped_shingles), matching ngram_jaccard_pairs'
+    semantics."""
+    candidates, n_candidates = _minhash_candidates(
+        df, col_id, col_text, k_shingle, n_hashes, bands
     )
-    # Verify ONLY the candidate pairs, instead of materializing every
-    # co-shingle pair in the corpus (LSH exists precisely to avoid
-    # that). Size-guarded broadcast: the count fills the persisted
-    # candidate cache AND decides the join strategy.
-    n_candidates = candidates.count()
     cand_side = (
         F.broadcast(candidates)
         if n_candidates <= broadcast_pair_limit
         else candidates
     )
     sh = capped_shingles(df, col_id, col_text, k_shingle, max_df)
-    sizes = sh.groupBy(col_id).agg(F.count(F.lit(1)).alias("n_sh"))
     sh_a = sh.select(F.col(col_id).alias("id_a"), "shingle")
     sh_b = sh.select(F.col(col_id).alias("id_b"), "shingle")
     inter = (
@@ -380,20 +515,9 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    na = sizes.select(F.col(col_id).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(col_id).alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
+        _overlap_scores(inter, sh, col_id)
+        .select("id_a", "id_b", "jaccard")
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -539,7 +663,7 @@ def canonical_docs(
     ``is_canonical`` yields the deduplicated corpus while keeping the
     full decision table auditable (who was dropped, for whom).
 
-    Scale shape: components ride the shared shingle/pair tables;
+    Scale shape: components ride the named shingle and pair builds;
     quality is a scan-side projection; the survivor argmax and member
     count are ONE component-partitioned window pass whose groups are
     near-dup-cluster-sized (bounded by the dedup graph, never the
@@ -631,9 +755,19 @@ def simhash_near_pairs(
     deduped (a pair can collide in several bands) and Hamming-verified
     with one xor+bit_count. Same trick as ``minhash_lsh_pairs``'
     band-bucket join; the join is shuffle-by-band-value, so it scales
-    with band-bucket occupancy instead of corpus²."""
-    sigs = simhash_signatures(df, col_id, col_text, bits=bits).persist()
-    sigs.count()  # both join sides read it — fill the cache once
+    with band-bucket occupancy instead of corpus². The signatures are
+    a named shared build (``simhash_signatures``): both join sides
+    read it, so it is filled once."""
+    docs = df.select(col_id, col_text)
+
+    def build():
+        out = simhash_signatures(docs, col_id, col_text, bits=bits).persist()
+        out.count()
+        return out
+
+    sigs = shared_plan(
+        "simhash_signatures", docs, (col_id, col_text, bits), build
+    )
     n_bands = max_hamming + 1
     base = bits // n_bands
     band_cols, off = [], 0
@@ -651,20 +785,11 @@ def simhash_near_pairs(
         off += sz
     banded = sigs.select(
         F.col(col_id).alias("id"),
-        "simhash",
+        F.col("simhash").alias("sh"),
         F.explode(F.array(*band_cols)).alias("b"),
-    ).select("id", "simhash", "b.band_idx", "b.band_val")
-    a = banded.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"),
-        "band_idx", "band_val",
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sh_b"),
-        "band_idx", "band_val",
-    )
+    ).select("id", "sh", "b.band_idx", "b.band_val")
     candidates = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _doc_pairs(banded, ["band_idx", "band_val"], ("sh",))
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
     )
@@ -693,18 +818,7 @@ def normalized_dedup(
             " ",
         )
     )
-    hashed = df.select(F.col(col_id), F.md5(norm).alias("norm_hash"))
-    groups = hashed.groupBy("norm_hash").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min(col_id).alias("canonical_id"),
-    )
-    return hashed.join(groups, "norm_hash").select(
-        col_id,
-        "norm_hash",
-        "n_copies",
-        "canonical_id",
-        (F.col(col_id) != F.col("canonical_id")).alias("is_dup"),
-    )
+    return _hash_dedup(df, col_id, F.md5(norm), "norm_hash")
 
 
 def minhash_jaccard_estimate(
@@ -734,13 +848,7 @@ def minhash_jaccard_estimate(
         F.col(col_id).alias("id_b"),
         *[F.col(f"mh{i}").alias(f"b{i}") for i in range(n_hashes)],
     )
-    agree = sum(
-        [
-            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(n_hashes)
-        ],
-        F.lit(0),
-    )
+    agree = _agreement("a", "b", n_hashes)
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
@@ -836,6 +944,7 @@ def source_overlap(
     )
     sa = sizes.select(F.col("g").alias("source_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("g").alias("source_b"), F.col("n_sh").alias("nb"))
+    overlap, jaccard = _overlap(F.col("n_shared"), F.col("na"), F.col("nb"))
     return (
         pairs.join(F.broadcast(sa), "source_a")
         .join(F.broadcast(sb), "source_b")
@@ -843,16 +952,8 @@ def source_overlap(
             "source_a",
             "source_b",
             "n_shared",
-            F.round(
-                F.col("n_shared") / F.least("na", "nb").cast("double"), 6
-            ).alias("overlap"),
-            F.round(
-                F.col("n_shared")
-                / (F.col("na") + F.col("nb") - F.col("n_shared")).cast(
-                    "double"
-                ),
-                6,
-            ).alias("jaccard"),
+            overlap.alias("overlap"),
+            jaccard.alias("jaccard"),
         )
     )
 
@@ -936,19 +1037,8 @@ def record_linkage_pairs(
         F.col(col_name).alias("name"),
         F.concat_ws("|", *key).alias("block"),
     )
-    a = side.select(
-        F.col("id").alias("id_a"),
-        F.col("name").alias("name_a"),
-        "block",
-    )
-    b = side.select(
-        F.col("id").alias("id_b"),
-        F.col("name").alias("name_b"),
-        "block",
-    )
     return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _doc_pairs(side, ["block"], ("name",))
         .select(
             "id_a",
             "id_b",
@@ -1012,28 +1102,17 @@ def incremental_neardup(
     estimate matches/n is exact rational arithmetic, engine-portable.
     Candidate fan-out is bounded by bucket occupancy, and the
     best-match window partitions by batch doc (bounded groups)."""
-    rows = n_hashes // bands
     from pyspark.sql.window import Window
 
+    def stack(index: DataFrame, side: str) -> DataFrame:
+        return _band_stack(
+            index, col_id, bands, f"{side}id",
+            *[F.col(f"mh{i}").alias(f"{side}_mh{i}") for i in range(n_hashes)],
+        )
+
     bsig = lsh_index(batch, col_id, col_text, k_shingle, n_hashes, bands)
-    bstack = bsig.select(
-        F.col(col_id).alias("bid"),
-        *[F.col(f"mh{i}").alias(f"b_mh{i}") for i in range(n_hashes)],
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(bands)])
-        ).alias("band_idx", "band_sig"),
-    )
-    istack = index.select(
-        F.col(col_id).alias("sid"),
-        *[F.col(f"mh{i}").alias(f"s_mh{i}") for i in range(n_hashes)],
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(bands)])
-        ).alias("band_idx", "band_sig"),
-    )
-    agree = sum(
-        F.when(F.col(f"b_mh{i}") == F.col(f"s_mh{i}"), 1).otherwise(0)
-        for i in range(n_hashes)
-    )
+    bstack, istack = stack(bsig, "b"), stack(index, "s")
+    agree = _agreement("b_mh", "s_mh", n_hashes)
     cand = (
         bstack.join(istack, ["band_idx", "band_sig"])
         .select(
@@ -1092,26 +1171,7 @@ def duplicated_spans(
     bounded by document length, never corpus-wide."""
     from pyspark.sql.window import Window
 
-    lookups = [
-        F.expr(f"try_element_at(__toks, pos + {i})") for i in range(k)
-    ]
-    sh_pos = (
-        df.select(
-            F.col(col_id), F.split(F.col(col_text), " ").alias("__toks")
-        )
-        .select(
-            F.col(col_id),
-            "__toks",
-            F.posexplode(
-                F.expr(f"sequence(1, greatest(size(__toks) - {k - 1}, 1))")
-            ).alias("__i", "pos"),
-        )
-        .select(
-            F.col(col_id),
-            "pos",
-            F.concat_ws(" ", *lookups).alias("shingle"),
-        )
-    )
+    sh_pos = _gram_rows(df, col_id, col_text, k, pos=True)
     # distinct-doc frequency per shingle (word_shingles is already
     # doc-distinct, so its groupBy counts documents)
     dfreq = (
@@ -1155,60 +1215,16 @@ def containment_pairs(
     exact-substring dedup pipelines (Lee et al. 2022) track
     containment separately from resemblance.
 
-    Same inverted-index plan and df-capped shingle universe as
-    ngram_jaccard_pairs (worst key bounded at max_df²/2 pairs); the
-    only change is the denominator. Output: (id_a, id_b, n_inter,
-    containment, jaccard) for pairs over threshold — jaccard rides
-    along so consumers can see both signals."""
-    id_type = dict(df.dtypes)[col_id]
-    sh = capped_shingles(df, col_id, col_text, k, max_df)
-    sizes = sh.groupBy(col_id).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(col_id).alias("id_a"), "shingle")
-    b = sh.select(F.col(col_id).alias("id_b"), "shingle")
-    co = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            (
-                F.col("id_a").cast("bigint")
-                * F.lit(4294967296).cast("bigint")
-                + F.col("id_b").cast("bigint")
-            ).alias("pk")
-        )
-    )
-    inter = (
-        co.repartition("pk")
-        .groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .select(
-            F.expr("pk div 4294967296").cast(id_type).alias("id_a"),
-            (F.col("pk") % F.lit(4294967296)).cast(id_type).alias("id_b"),
-            "n_inter",
-        )
-    )
-    na = sizes.select(F.col(col_id).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(col_id).alias("id_b"), F.col("n_sh").alias("n_b"))
+    Reads the same shared pair table as ngram_jaccard_pairs (one
+    inverted index over the df-capped shingle universe, worst key
+    bounded at max_df²/2 pairs); only the filter differs. Output:
+    (id_a, id_b, n_inter, containment, jaccard) for pairs over
+    threshold — jaccard rides along so consumers can see both
+    signals."""
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.col("n_inter").cast("bigint").alias("n_inter"),
-            F.round(
-                F.col("n_inter")
-                / F.least("n_a", "n_b").cast("double"),
-                6,
-            ).alias("containment"),
-            F.round(
-                F.col("n_inter")
-                / (
-                    F.col("n_a") + F.col("n_b") - F.col("n_inter")
-                ).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
+        _pair_table(df, col_id, col_text, k, max_df)
         .filter(F.col("containment") >= threshold)
+        .select("id_a", "id_b", "n_inter", "containment", "jaccard")
     )
 
 
@@ -1440,7 +1456,7 @@ def ngram_decontaminate(
     ``eval_shingles=build_eval_shingles(...)`` to both grains and
     owns that one cache (unpersist when done). The train side
     streams SHUFFLE-FREE: raw un-deduplicated gram rows
-    (_train_collision_shingles — never a materialized or even
+    (_gram_rows with the short-eval levels — never a materialized or even
     set-deduplicated corpus-scale table; the per-doc distinct would
     cost a token-scale exchange the final countDistinct makes
     redundant) flow scan → explode → broadcast-join, and only
@@ -1482,10 +1498,11 @@ def build_eval_shingles(
             eval_df, eval_col_id, eval_col_text
         )
     out = (
-        _shingle_rows(
+        _gram_rows(
             eval_df, eval_col_id, eval_col_text, k,
             whitespace=True, skip_empty=True,
         )
+        .distinct()
         .select(
             F.col(eval_col_id),
             # the (k, normalize) stamp rides the SCHEMA (no extra
@@ -1515,86 +1532,6 @@ def _decontamination_normalize(
         F.regexp_replace(
             F.lower(F.col(ctext)), "[^a-z0-9]", " "
         ).alias(ctext),
-    )
-
-
-def _train_collision_shingles(
-    train_df: DataFrame,
-    col_id: str,
-    col_text: str,
-    k: int,
-    extra_ns: list,
-) -> DataFrame:
-    """Raw (un-deduplicated) train-side gram rows for the
-    decontamination join: the k-level stream (full k-grams, plus the
-    whole-doc partial for docs shorter than k — mirroring the eval
-    side's min(k, len) emission) UNION the full n-gram streams for
-    each n in ``extra_ns`` (the distinct lengths of eval docs shorter
-    than k — a sub-k-word benchmark answer quoted inside a long train
-    page must still collide, so the train side emits grams at exactly
-    those lengths too). All levels share ONE whitespace-class
-    tokenization and ONE position explode over
-    1..greatest(size - min_n + 1, 1) (codegen'd posexplode +
-    try_element_at, the house gram pattern); per-level validity
-    guards decide emission, so the scan stays single-pass and
-    shuffle-free. Zero-token docs are dropped before the explode.
-    Duplicate (doc, shingle) rows across levels (a doc of exactly n
-    tokens emits its whole text at both the k-partial and the n
-    level) are harmless: every downstream aggregate counts
-    DISTINCT."""
-    ns = sorted({int(n) for n in extra_ns if 0 < int(n) < k})
-    if not ns:
-        # the k-level stream IS the house gram construction — one
-        # definition (tokenization, zero-token filter, partial rule)
-        # shared with the eval side it must collide with
-        return _shingle_rows(
-            train_df, col_id, col_text, k,
-            distinct=False, whitespace=True, skip_empty=True,
-        )
-    toks = F.filter(
-        F.split(F.col(col_text), "[ \\t\\n\\r]+"), lambda x: x != ""
-    )
-    base = (
-        train_df.select(F.col(col_id), toks.alias("__toks"))
-        .filter(F.size("__toks") > 0)
-    )
-    n_min = ns[0]
-    pos_df = base.select(
-        F.col(col_id),
-        "__toks",
-        F.posexplode(
-            F.expr(f"sequence(1, greatest(size(__toks) - {n_min - 1}, 1))")
-        ).alias("__i", "pos"),
-    )
-
-    def _gram(n: int, partial: bool):
-        g = F.concat_ws(
-            " ",
-            *[
-                F.expr(f"try_element_at(__toks, pos + {i})")
-                for i in range(n)
-            ],
-        )
-        if partial:
-            # full n-grams, plus the whole-doc partial at position 1
-            # for docs shorter than n (the k-level's min(k, len) rule)
-            cond = F.expr(
-                f"pos + {n - 1} <= size(__toks)"
-                f" or (pos = 1 and size(__toks) < {n})"
-            )
-        else:
-            cond = F.expr(f"pos + {n - 1} <= size(__toks)")
-        return F.when(cond, g)
-
-    levels = [_gram(k, partial=True)] + [
-        _gram(n, partial=False) for n in ns
-    ]
-    return (
-        pos_df.select(
-            F.col(col_id),
-            F.explode(F.array(*levels)).alias("shingle"),
-        )
-        .filter(F.col("shingle").isNotNull())
     )
 
 
@@ -1650,10 +1587,10 @@ def _decontamination_hits(
             eval_df = _decontamination_normalize(
                 eval_df, eval_col_id, eval_col_text
             )
-        ev = _shingle_rows(
+        ev = _gram_rows(
             eval_df, eval_col_id, eval_col_text, k,
             whitespace=True, skip_empty=True,
-        )
+        ).distinct()
     if normalize:
         train_df = _decontamination_normalize(
             train_df, col_id, col_text
@@ -1684,8 +1621,11 @@ def _decontamination_hits(
                 f"k={k})."
             )
     ev = ev.select(F.col(eval_col_id).alias("__eval_id"), "shingle")
-    tr = _train_collision_shingles(
-        train_df, col_id, col_text, k, short_ns
+    # raw (un-deduplicated) train grams at k and at each short eval
+    # length: shuffle-free up to the collision join
+    tr = _gram_rows(
+        train_df, col_id, col_text, k,
+        whitespace=True, skip_empty=True, short_ns=short_ns,
     )
     ev_side = F.broadcast(ev) if ev_rows <= broadcast_eval_limit else ev
     return tr.join(ev_side, "shingle")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import shared
+from ..session import shared_plan
 
 
 def _node_broadcast_hint(df: DataFrame, limit: int):
@@ -371,13 +371,13 @@ def _capped_adjacency(
     top_neighbors: int,
     broadcast_node_limit: int,
 ):
-    """Session-shared build (session.py::shared) of the wedge machinery
-    shared VERBATIM by :func:`adamic_adar_links` and
+    """Plan-keyed shared build (session.py::shared_plan) of the wedge
+    machinery shared VERBATIM by :func:`adamic_adar_links` and
     :func:`common_neighbor_links`: the symmetrized adjacency's degree
     table (checkpointed + counted by the broadcast guard) and the
     top-``top_neighbors`` capped adjacency (checkpointed — it feeds
-    both sides of each predictor's wedge self-join). Keyed by the pair
-    table's analyzed-plan semantic hash + params, so the two link
+    both sides of each predictor's wedge self-join). Keyed by the plan
+    of the pair table's three columns + params, so the two link
     predictors over the same graph pay the edge-scale ranking window
     and the degree aggregate ONCE per session instead of once each.
     Returns (capped, deg, hint).
@@ -413,15 +413,12 @@ def _capped_adjacency(
         ).localCheckpoint(eager=True)
         return capped, deg, hint
 
-    key = (
-        pairs._jdf.queryExecution().analyzed().semanticHash(),
-        col_a,
-        col_b,
-        col_w,
-        int(top_neighbors),
-        int(broadcast_node_limit),
+    return shared_plan(
+        "capped_adjacency",
+        pairs.select(col_a, col_b, col_w),
+        (col_a, col_b, col_w, int(top_neighbors), int(broadcast_node_limit)),
+        build,
     )
-    return shared(pairs.sparkSession, "capped_adjacency", key, build)
 
 
 def adamic_adar_links(

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from ..session import shared
 from ..sources.io import load_table
-from .ranking import top_k_per_group
+from .ranking import ranked_topk, top_k_per_group
 
 # Knuth-style multiplicative constants; small enough that
 # user*A + item*B stays far from int64 overflow at any realistic SF.
@@ -137,12 +137,11 @@ def item_based_recommendations(
     ).agg(F.sum("sim").alias("score"))
     owned = baskets.select("buser", F.col("bitem").alias("neighbor_id"))
     fresh = candidates.join(owned, ["buser", "neighbor_id"], "left_anti")
-    w = Window.partitionBy("buser").orderBy(
-        F.desc(F.round("score", 6)), F.asc("neighbor_id")
-    )
     return (
-        fresh.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+        top_k_per_group(
+            fresh, "buser",
+            [F.desc(F.round("score", 6)), F.asc("neighbor_id")], k,
+        )
         .select(
             F.col("buser").alias("user_id"),
             F.col("neighbor_id").alias("item_id"),
@@ -293,13 +292,13 @@ def negative_sampling(
     ).distinct()
     neg = cand.join(pos, ["u", "neg_item"], "left_anti")
     w_dup = Window.partitionBy("u", "neg_item").orderBy("j")
-    w_rank = Window.partitionBy("u").orderBy("j")
-    return (
+    first = (
         neg.withColumn("first_draw", F.row_number().over(w_dup))
         .filter(F.col("first_draw") == 1)
         .drop("first_draw")
-        .withColumn("rnk", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rnk") <= k)
+    )
+    return (
+        top_k_per_group(first, "u", [F.col("j")], k)
         .select(
             F.col("u").alias(col_user),
             F.col("neg_item"),
@@ -334,15 +333,14 @@ def association_rules(
     rint(sim · √(sza·szb)) — sim is stored unrounded as n/√(sza·szb),
     so the product is an integer up to ~1e-10 float error and rint is
     exact. Everything after is pair-scale arithmetic with
-    catalog-scale broadcasts; top-k via one window over the filtered
-    rule set. N enters declaratively as a one-row
-    crossJoin(broadcast(·)) frame over the persisted basket table
-    (the sequential_rules pattern) — the former N formula scalar is
-    gone; the only build-time action left is ``user_baskets``' own
-    documented cache-fill count, which the sims path above has
-    already executed, so it is a cache read, not a scan."""
-    from pyspark.sql.window import Window
-
+    catalog-scale broadcasts; global top-k via ``ranked_topk``
+    (orderBy + limit, then a k-row rank window). N enters
+    declaratively as a one-row crossJoin(broadcast(·)) frame over the
+    persisted basket table (the sequential_rules pattern) — the
+    former N formula scalar is gone; the only build-time action left
+    is ``user_baskets``' own documented cache-fill count, which the
+    sims path above has already executed, so it is a cache read, not
+    a scan."""
     from .metrics import (
         item_cooccurrence_pairs,
         item_similarity_pairs,
@@ -401,12 +399,12 @@ def association_rules(
         )
         .filter(F.col("confidence") >= min_confidence)
     )
-    w = Window.orderBy(
-        F.desc("lift"), F.asc("antecedent"), F.asc("consequent")
-    )
     return (
-        rules.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
+        ranked_topk(
+            rules,
+            [F.desc("lift"), F.asc("antecedent"), F.asc("consequent")],
+            top_k,
+        )
         .select(
             "rnk", "antecedent", "consequent", "n_common",
             "support", "confidence", "lift",
@@ -483,29 +481,22 @@ def item_exposure(
     (position bias included, unlike raw impression counts).
 
     Scale: one item-keyed aggregate (catalog-scale result), a one-row
-    total broadcast, and a top-k window over the catalog table."""
-    from pyspark.sql.window import Window
-
+    total broadcast, and a global top-k (``ranked_topk``: map-side
+    partial top-k, never a one-partition sort of the catalog)."""
     per_item = recs.groupBy(F.col(col_item).alias("item")).agg(
         F.sum(1.0 / F.log2(F.col(col_rank) + 1)).alias("exposure"),
         F.count(F.lit(1)).alias("n_impressions"),
     )
     total = per_item.agg(F.sum("exposure").alias("tot"))
-    w = Window.orderBy(F.desc("exposure"), F.asc("item"))
-    return (
-        per_item.crossJoin(F.broadcast(total))
-        .select(
-            "item",
-            "n_impressions",
-            F.round("exposure", 6).alias("exposure"),
-            F.round(F.col("exposure") / F.col("tot"), 6).alias(
-                "exposure_share"
-            ),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
-        .select("rnk", "item", "n_impressions", "exposure", "exposure_share")
+    shares = per_item.crossJoin(F.broadcast(total)).select(
+        "item",
+        "n_impressions",
+        F.round("exposure", 6).alias("exposure"),
+        F.round(F.col("exposure") / F.col("tot"), 6).alias("exposure_share"),
     )
+    return ranked_topk(
+        shares, [F.desc("exposure"), F.asc("item")], top_k
+    ).select("rnk", "item", "n_impressions", "exposure", "exposure_share")
 
 
 def calibration_kl(
@@ -1048,14 +1039,12 @@ def skipgram_pairs(
             )
         ).alias("p")
     ).select("p.center", "p.context", F.col("p.n_cooc").cast("bigint").alias("n_cooc"))
-    wk = Window.orderBy(
-        F.desc("n_cooc"), F.asc("center"), F.asc("context")
-    )
     return (
-        directed
-        .orderBy(F.desc("n_cooc"), F.asc("center"), F.asc("context"))
-        .limit(top_k)
-        .withColumn("rnk", F.row_number().over(wk).cast("bigint"))
+        ranked_topk(
+            directed,
+            [F.desc("n_cooc"), F.asc("center"), F.asc("context")],
+            top_k,
+        )
         .select(
             F.col("center").cast("bigint").alias("center"),
             F.col("context").cast("bigint").alias("context"),
@@ -1137,8 +1126,7 @@ def sequential_rules(
     nb = adopters.select(
         F.col("it").alias("cons"), F.col("n_adopt").alias("n_b")
     )
-    wk = Window.orderBy(F.desc("n_ab"), F.asc("ant"), F.asc("cons"))
-    return (
+    rules = (
         pairs.join(F.broadcast(na), "ant")
         .join(F.broadcast(nb), "cons")
         .crossJoin(F.broadcast(nu))
@@ -1155,13 +1143,11 @@ def sequential_rules(
                 6,
             ).alias("lift"),
         )
-        .orderBy(F.desc("n_ab"), F.asc("antecedent"), F.asc("consequent"))
-        .limit(top_k)
-        .withColumn("rnk", F.row_number().over(
-            Window.orderBy(
-                F.desc("n_ab"), F.asc("antecedent"), F.asc("consequent")
-            )
-        ).cast("bigint"))
+    )
+    return ranked_topk(
+        rules,
+        [F.desc("n_ab"), F.asc("antecedent"), F.asc("consequent")],
+        top_k,
     )
 
 

@@ -26,7 +26,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from ..functions.vectors import as_double, dot, norm
-from ..session import shared
+from ..session import shared_plan
 from .ranking import ranked_topk, top_k_per_group
 
 # (id alias, vector, norm) column names of each scoring side
@@ -34,23 +34,6 @@ _Q = ("query_id", "qv", "qn")
 _C = ("neighbor_id", "cv", "cn")
 _T = ("train_id", "tv", "tn")
 _E = ("eval_id", "qv", "qn")
-
-
-def _memo_trained(kind: str, df: DataFrame, params: tuple, build):
-    """Session-shared build (session.py::shared) of a trained index
-    artifact (k-means centroids, PQ codebooks) or of the k-means base
-    frame: identical (corpus plan, params) requests return the SAME
-    materialized DataFrame instead of re-running the iterative trainer
-    — train once, serve every ANN/dedup variant.
-
-    Keyed by the corpus' analyzed-plan semantic hash + params under
-    the artifact ``kind``. Trained artifacts are centroid/codebook-
-    scale (k×dim — broadcast-sized); the k-means base frame is the
-    one corpus-scale entry (persisted once instead of once per
-    caller). ``release_shared`` drops them with every other shared
-    build."""
-    key = (df._jdf.queryExecution().analyzed().semanticHash(), *params)
-    return shared(df.sparkSession, kind, key, build)
 
 
 def _prep(
@@ -181,8 +164,9 @@ def _lloyd(
 
 def _km_base(corpus: DataFrame, col_id: str, col_vec: str) -> DataFrame:
     """(vid, v, v_sq), persisted AND filled — the frame every Lloyd /
-    IVF stage fans out from. A shared build per (corpus plan, col_id,
-    col_vec): the IVF, IVF-PQ, IVF-SQ, k-means, cluster-eval,
+    IVF stage fans out from. A plan-keyed shared build
+    (session.py::shared_plan) per (corpus (col_id, col_vec) plan,
+    col_id, col_vec): the IVF, IVF-PQ, IVF-SQ, k-means, cluster-eval,
     SemDeDup and IVF-decontamination operators read one entry."""
 
     def build():
@@ -192,7 +176,9 @@ def _km_base(corpus: DataFrame, col_id: str, col_vec: str) -> DataFrame:
         base.count()
         return base
 
-    return _memo_trained("km_base", corpus, (col_id, col_vec), build)
+    return shared_plan(
+        "km_base", corpus.select(col_id, col_vec), (col_id, col_vec), build
+    )
 
 
 def _ivf(
@@ -408,8 +394,9 @@ def kmeans_centroids(
         )
         return _lloyd(base, seeds, refinements, "v", "vid")
 
-    return _memo_trained(
-        "km_centroids", corpus, (k, refinements, col_id, col_vec), build
+    return shared_plan(
+        "km_centroids", corpus.select(col_id, col_vec),
+        (k, refinements, col_id, col_vec), build,
     )
 
 
@@ -531,7 +518,7 @@ def pq_codebooks(
     c_sq) — m·k_codes rows of dim/m floats, broadcast-scale at any
     corpus size. Memoized per (corpus plan, m, k_codes, refinements):
     the PQ-Flat, rerank, and IVF-PQ variants all serve from ONE
-    training run per session (see ``_memo_trained``), checkpointed
+    training run per session (session.py::shared_plan), checkpointed
     once inside the build."""
     def build():
         subs = _pq_subspaces(corpus, m, col_id, col_vec)
@@ -543,8 +530,9 @@ def pq_codebooks(
             "c_sq", dot(F.col("c"), F.col("c"))
         ).localCheckpoint(eager=True)
 
-    return _memo_trained(
-        "pq_books", corpus, (m, k_codes, refinements, col_id, col_vec), build
+    return shared_plan(
+        "pq_books", corpus.select(col_id, col_vec),
+        (m, k_codes, refinements, col_id, col_vec), build,
     )
 
 

@@ -80,8 +80,9 @@ def get_spark(
     return builder.getOrCreate()
 
 
-# (applicationId, name, key) -> (value, its frames persisted at build)
-_SHARED: dict[tuple, tuple[Any, list[DataFrame]]] = {}
+# (applicationId, name, key) -> (value, its frames persisted at build,
+# the optimized plan a plan-keyed entry was built for, else None)
+_SHARED: dict[tuple, tuple[Any, list[DataFrame], Any]] = {}
 # reentrant: builds nest (_bt_chain -> _arena_games -> interactions)
 _SHARED_LOCK = threading.RLock()
 
@@ -102,6 +103,23 @@ def _persisted(df: DataFrame) -> bool:
     return df.storageLevel.useMemory or df.storageLevel.useDisk
 
 
+def _get_or_build(
+    full_key: tuple, build: Callable[[], Any], plan: Any
+) -> Any:
+    with _SHARED_LOCK:
+        if full_key not in _SHARED:
+            value = build()
+            _SHARED[full_key] = (
+                value, [df for df in _frames(value) if _persisted(df)], plan
+            )
+            return value
+        value, persisted, _ = _SHARED[full_key]
+        for df in persisted:
+            if not _persisted(df):
+                df.persist()
+        return value
+
+
 def shared(
     spark: SparkSession, name: str, key: Hashable, build: Callable[[], Any]
 ) -> Any:
@@ -114,19 +132,43 @@ def shared(
     build time and has lost its storage level since
     (``spark.catalog.clearCache()``), so an entry never silently
     recomputes its lineage per consumer."""
-    full_key = (spark.sparkContext.applicationId, name, key)
+    return _get_or_build(
+        (spark.sparkContext.applicationId, name, key), build, None
+    )
+
+
+def _plan_hash(plan: Any) -> int:
+    """The semantic hash of a Catalyst plan: 32 bits, so a bucket
+    rather than an identity."""
+    return plan.semanticHash()
+
+
+def shared_plan(
+    name: str, df: DataFrame, params: Hashable, build: Callable[[], Any]
+) -> Any:
+    """:func:`shared` for an intermediate derived from a DataFrame the
+    caller holds: keyed by the OPTIMIZED plan of ``df`` (pass the
+    projection of the columns the build reads) and ``params``.
+
+    The optimized plan is what makes two derivations of one input the
+    same key: a frame with extra columns the build never reads (a
+    url-augmented document table) optimizes to the same projection as
+    the bare one, while their analyzed plans differ. The plan hash only
+    picks a bucket; a hit must also pass ``sameResult`` against the
+    plan the entry was built for, and a colliding plan takes the next
+    slot of the bucket with a build of its own. An input that is itself
+    cached optimizes to its cache entry, so a frame unpersisted and
+    persisted again keys a new entry."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    app = df.sparkSession.sparkContext.applicationId
     with _SHARED_LOCK:
-        if full_key not in _SHARED:
-            value = build()
-            _SHARED[full_key] = (
-                value, [df for df in _frames(value) if _persisted(df)]
-            )
-            return value
-        value, persisted = _SHARED[full_key]
-        for df in persisted:
-            if not _persisted(df):
-                df.persist()
-        return value
+        slot = 0
+        while True:
+            full_key = (app, name, (_plan_hash(plan), params, slot))
+            held = _SHARED.get(full_key)
+            if held is None or held[2].sameResult(plan):
+                return _get_or_build(full_key, build, plan)
+            slot += 1
 
 
 def release_shared(spark: SparkSession) -> None:
