@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from recmetrics_pyspark_spark.functions import curation as C
 from recmetrics_pyspark_spark.functions import text as T
+from recmetrics_pyspark_spark.functions.fitting import md5_prefix
 from recmetrics_pyspark_spark.functions.curation import (
     TRACKING_PARAM_PATTERN as _CUR_TRACK,
     _SCHEME_STRIP_PATTERN as _CUR_SCHEME_STRIP,
@@ -34,6 +35,7 @@ from recmetrics_pyspark_spark.operators import dedup as D
 from recmetrics_pyspark_spark.operators import metrics as M
 from recmetrics_pyspark_spark.operators import recommend as R
 from recmetrics_pyspark_spark.operators import joins as J
+from recmetrics_pyspark_spark.operators.ranking import ranked_topk
 from recmetrics_pyspark_spark.operators import similarity as S
 from recmetrics_pyspark_spark.plans import relational as Q
 from recmetrics_pyspark_spark.session import shared
@@ -2853,8 +2855,6 @@ def _session_paths(spark, sf_dir):
     The collect_list is SESSION-bounded (watermark-analogous bound in
     batch), the path ranking runs over the path-vocabulary aggregate,
     and ties break lexicographically for determinism."""
-    from pyspark.sql.window import Window
-
     ev = load_table(spark, sf_dir, "events")
     sess = W.assign_session_ids(ev, gap_minutes=30)
     with_type = sess.join(
@@ -2878,12 +2878,7 @@ def _session_paths(spark, sf_dir):
         .groupBy("path")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
     )
-    w = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
-    return (
-        paths.orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(20)
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-    )
+    return ranked_topk(paths, [F.desc("n_sessions"), F.asc("path")], 20)
 
 
 @_query("q_recursive_bfs", RECURSIVE_BFS_SQL)
@@ -3445,9 +3440,7 @@ def _balanced_sample(spark, sf_dir):
             F.lit(4294967296.0) * F.col("min_n") / F.col("n")
         ).alias("u_threshold"),
     )
-    key = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    key = md5_prefix(F.md5(F.col("doc_id").cast("string")), 8)
     kept = (
         docs.withColumn("u", key)
         .join(F.broadcast(thresholds), "lang")
@@ -3691,9 +3684,7 @@ def _freshness_decay_sample(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     mx = orders.agg(F.max(yr).alias("max_year"))
-    u = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    u = md5_prefix(F.md5(F.col("o_orderkey").cast("string")), 8)
     keyed = orders.select(
         yr.alias("o_year"), u.alias("u")
     ).crossJoin(F.broadcast(mx))
@@ -5991,9 +5982,7 @@ def _curation_pipeline(spark, sf_dir):
             F.lit(4294967296.0) * F.col("min_n") / F.col("n")
         ).alias("u_threshold"),
     )
-    key = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    key = md5_prefix(F.md5(F.col("doc_id").cast("string")), 8)
     kept = (
         scored.withColumn("u", key)
         .join(F.broadcast(thresholds), "lang")
@@ -6094,9 +6083,7 @@ def _grouped_split(spark, sf_dir):
     per-split user/event counts plus a cross-split-user counter the
     oracle pins at ZERO."""
     ev = load_table(spark, sf_dir, "events")
-    u = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    u = md5_prefix(F.md5(F.col("user_id").cast("string")), 8)
     split = (
         F.when(u % 10 < 8, "train")
         .when(u % 10 < 9, "val")
@@ -10471,6 +10458,22 @@ def _nb_source_classifier(spark, sf_dir):
     return nb_quality_classifier(docs, "is_hq")
 
 
+def _nb_holdout(spark, sf_dir):
+    """The NB train/score split of the three holdout queries: the
+    model (functions/curation.py::nb_train) is trained on the 80% of
+    documents with doc_id % 5 != 0, labeled positive for sources
+    src0-src3, and nb_score scores the held-out 20%. Returns the
+    scores and the (doc_id, y) labels they are evaluated against."""
+    docs = _docs(spark, sf_dir).withColumn(
+        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
+    model = C.nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
+    scored = C.nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
+    return scored, docs.select(
+        "doc_id", F.col("is_hq").cast("int").alias("y")
+    )
+
+
 # mirrors functions/curation.py::nb_train + nb_score: model
 # trained on doc_id % 5 != 0, held-out 20% scored with the
 # Laplace unseen-token constant via a LEFT join + coalesce
@@ -10482,16 +10485,7 @@ def _nb_score_holdout(spark, sf_dir):
     out-of-vocabulary tokens take the model's constant unseen_llr9,
     driver-pinning the Laplace fallback path the in-corpus classifier
     never exercises."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
-
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    return nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
+    return _nb_holdout(spark, sf_dir)[0]
 
 
 # mirrors functions/evals.py::classifier_eval over the
@@ -10547,24 +10541,14 @@ def _nb_holdout_eval(spark, sf_dir):
     matrix at threshold 0, precision/recall/F1, and tie-aware
     rank-sum ROC AUC of the held-out 20% against their true source
     labels — the evaluate stage of train -> score -> evaluate."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
     from recmetrics_pyspark_spark.functions.evals import (
         classifier_eval,
     )
 
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
+    scored, labels = _nb_holdout(spark, sf_dir)
+    return classifier_eval(
+        scored.join(labels, "doc_id"), "y", "nb_log_odds"
     )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
-    labeled = scored.join(
-        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
-        "doc_id",
-    )
-    return classifier_eval(labeled, "y", "nb_log_odds")
 
 
 # mirrors operators/dedup.py::remove_duplicated_spans: the
@@ -10648,23 +10632,12 @@ def _nb_calibration_bins(spark, sf_dir):
     through a sigmoid pre-rounded to 9 decimals (so binning agrees
     across engines), fixed-width decile bins, N-weighted |gap| ECE —
     the calibration half of the classifier report."""
-    from recmetrics_pyspark_spark.functions.curation import (
-        nb_score,
-        nb_train,
-    )
     from recmetrics_pyspark_spark.functions.evals import (
         calibration_bins,
     )
 
-    docs = _docs(spark, sf_dir).withColumn(
-        "is_hq", F.col("source").isin("src0", "src1", "src2", "src3")
-    )
-    model = nb_train(docs.filter(F.col("doc_id") % 5 != 0), "is_hq")
-    scored = nb_score(model, docs.filter(F.col("doc_id") % 5 == 0))
-    labeled = scored.join(
-        docs.select("doc_id", F.col("is_hq").cast("int").alias("y")),
-        "doc_id",
-    ).withColumn(
+    scored, labels = _nb_holdout(spark, sf_dir)
+    labeled = scored.join(labels, "doc_id").withColumn(
         "p", F.round(1.0 / (1.0 + F.exp(-F.col("nb_log_odds"))), 9)
     )
     return calibration_bins(labeled, "y", "p")

@@ -18,7 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .text import STOPWORDS_EN, count_in_lexicon
+from ..operators.ranking import ranked_topk, top_k_per_group
+from .fitting import dec9, md5_prefix
+from .text import STOPWORDS_EN, _doc_sums, count_in_lexicon, tokens_col
 
 
 def dpo_pair_mining(
@@ -169,12 +171,9 @@ def doc_cooccurrence_pmi(
             6,
         ).alias("pmi"),
     )
-    w = Window.orderBy(F.desc("pmi"), F.asc("tok_a"), F.asc("tok_b"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= top_k)
-        .select("rnk", "tok_a", "tok_b", "n_ab", "pmi")
-    )
+    return ranked_topk(
+        scored, [F.desc("pmi"), F.asc("tok_a"), F.asc("tok_b")], top_k
+    ).select("rnk", "tok_a", "tok_b", "n_ab", "pmi")
 
 
 def entity_extract_stats(
@@ -396,10 +395,8 @@ def zipf_fit(
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count)
     )
-    w = Window.orderBy(F.desc("n"), F.asc("tok"))
     ranked = (
-        freqs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
+        ranked_topk(freqs, [F.desc("n"), F.asc("tok")], top_k)
         .select(
             F.log(F.col("rnk").cast("double")).alias("x"),
             F.log(F.col("n").cast("double")).alias("y"),
@@ -618,22 +615,15 @@ def weighted_sample(
     the SQL oracle. Priorities are computed as exp(ln(u)/w)
     scan-side.
 
-    Scale shape: with no stratum, the global top-n runs as
-    orderBy+limit → TakeOrderedAndProject (every task keeps n rows,
-    no single-reducer sort). With ``col_stratum``, a per-stratum
-    window selects n rows per group — bounded-group state, the same
-    contract as top_k_per_group."""
+    Scale shape: with no stratum, the global top-n is
+    ``ranking.ranked_topk`` (orderBy+limit → TakeOrderedAndProject:
+    every task keeps n rows, no single-reducer sort). With
+    ``col_stratum``, ``ranking.top_k_per_group`` selects n rows per
+    group — bounded-group state."""
     u = (
-        (
-            F.conv(
-                F.substring(F.md5(F.col(col_id).cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("double")
-            + 1.0
-        )
-        / F.lit(4294967296.0)
-    )
+        md5_prefix(F.md5(F.col(col_id).cast("string")), 8).cast("double")
+        + 1.0
+    ) / F.lit(4294967296.0)
     pri = F.exp(F.log(u) / F.col(col_weight).cast("double"))
     base = df.select(
         F.col(col_id),
@@ -641,19 +631,10 @@ def weighted_sample(
         F.col(col_weight).alias("weight"),
         F.round(pri, 9).alias("priority"),
     )
+    order = [F.desc("priority"), F.asc(col_id)]
     if col_stratum is None:
-        w = Window.orderBy(F.desc("priority"), F.asc(col_id))
-        return (
-            base.orderBy(F.desc("priority"), F.asc(col_id))
-            .limit(n)
-            .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        )
-    w = Window.partitionBy(col_stratum).orderBy(
-        F.desc("priority"), F.asc(col_id)
-    )
-    return base.withColumn(
-        "rnk", F.row_number().over(w).cast("bigint")
-    ).filter(F.col("rnk") <= n)
+        return ranked_topk(base, order, n)
+    return top_k_per_group(base, col_stratum, order, n)
 
 
 def quantile_normalize(
@@ -723,11 +704,7 @@ def dsir_importance(
         F.col(col_id),
         F.col(col_lang).alias("lang"),
         F.explode(F.split(F.col(col_text), " ")).alias("token"),
-    ).withColumn(
-        "b",
-        F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint")
-        % n_buckets,
-    )
+    ).withColumn("b", md5_prefix(F.md5("token"), 8) % n_buckets)
     raw = toks.groupBy("b").agg(F.count(F.lit(1)).alias("r_b"))
     tgt = (
         toks.filter(F.col("lang") == target_lang)
@@ -745,7 +722,7 @@ def dsir_importance(
         .crossJoin(F.broadcast(totals))
         .select(
             "b",
-            F.round(
+            dec9(
                 F.log2(
                     (F.coalesce("t_b", F.lit(0)) + 1).cast("double")
                     / (F.col("t_total") + n_buckets)
@@ -753,26 +730,20 @@ def dsir_importance(
                 - F.log2(
                     (F.col("r_b") + 1).cast("double")
                     / (F.col("r_total") + n_buckets)
-                ),
-                9,
-            ).cast("decimal(18,9)").alias("lr"),
+                )
+            ).alias("lr"),
         )
     )
-    return (
-        toks.join(F.broadcast(lr), "b")
-        .groupBy(col_id, "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("lr").alias("sum_lr"),
-        )
-        .select(
-            col_id,
-            "lang",
-            "n_tokens",
-            F.round(
-                F.col("sum_lr").cast("double") / F.col("n_tokens"), 6
-            ).alias("avg_log_ratio"),
-        )
+    per = _doc_sums(
+        toks, F.broadcast(lr), "b", [col_id, "lang"], sum_lr="lr"
+    )
+    return per.select(
+        col_id,
+        "lang",
+        "n_tokens",
+        F.round(
+            F.col("sum_lr").cast("double") / F.col("n_tokens"), 6
+        ).alias("avg_log_ratio"),
     )
 
 
@@ -800,9 +771,7 @@ def split_leakage_audit(
     scan-side md5s, no text shuffle beyond the hash), one hash-keyed
     aggregate, one status-scale rollup — the same single-shuffle
     cost as exact dedup itself."""
-    u = F.conv(
-        F.substring(F.md5(F.col(col_id).cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
+    u = md5_prefix(F.md5(F.col(col_id).cast("string")), 8)
     tagged = df.select(
         F.md5(F.col(col_text)).alias("content_hash"),
         F.when(u % train_mod < train_lt, "train")
@@ -890,11 +859,9 @@ def source_divergence(
     b = grid.select(
         F.col("src").alias("source_b"), "tok", F.col("p").alias("pb")
     )
-    contrib = F.expr(
-        "CAST(round(0.5 * pa * log2(pa / ((pa + pb) / 2))"
-        " + 0.5 * pb * log2(pb / ((pa + pb) / 2)), 9)"
-        " AS DECIMAL(18,9))"
-    )
+    pa, pb = F.col("pa"), F.col("pb")
+    m = (pa + pb) / 2
+    contrib = dec9(0.5 * pa * F.log2(pa / m) + 0.5 * pb * F.log2(pb / m))
     return (
         a.join(b, "tok")
         .filter(F.col("source_a") < F.col("source_b"))
@@ -1036,9 +1003,7 @@ def temperature_mixture_plan(
         F.col("n_tokens").cast("double")
         / F.col("__tot").cast("double"),
     )
-    pt9 = F.round(F.pow(F.col("__p"), F.lit(t)), 9).cast(
-        "decimal(18,9)"
-    )
+    pt9 = dec9(F.pow(F.col("__p"), F.lit(t)))
     keyed = shared.withColumn("__pt", pt9)
     norm = keyed.agg(F.sum("__pt").alias("__z"))
     w = F.round(
@@ -1273,26 +1238,16 @@ def domain_cap_sample(
         F.col(col_id).alias("id"),
     ).withColumn(
         "h",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col("domain"), F.col("id").cast("string")
-                    )
-                ),
-                1,
-                15,
+        md5_prefix(
+            F.md5(
+                F.concat_ws(":", F.col("domain"), F.col("id").cast("string"))
             ),
-            16,
-            10,
-        ).cast("bigint"),
+            15,
+        ),
     )
-    w = Window.partitionBy("domain").orderBy(F.asc("h"), F.asc("id"))
-    return (
-        per.withColumn("keep_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("keep_rank") <= max_per_domain)
-        .select("domain", F.col("id").alias(col_id), "keep_rank")
-    )
+    return top_k_per_group(
+        per, "domain", [F.asc("h"), F.asc("id")], max_per_domain, "keep_rank"
+    ).select("domain", F.col("id").alias(col_id), "keep_rank")
 
 
 # Full URL decomposition in ONE escape-free regex (verbatim-portable
@@ -1502,122 +1457,36 @@ def nb_quality_classifier(
     curation filter (Brown et al. 2020 §A trained a classifier on
     WebText-positive vs CommonCrawl-negative and kept high-scoring CC
     documents; NB is its closed-form, fully aggregation-expressible
-    cousin). Train and score in ONE pass over the corpus: documents
-    labeled ``col_label`` = true are the positive class, the rest
-    negative; every document is then scored by its log-odds under the
-    two class-conditional unigram models with Laplace ``alpha``
-    smoothing plus the class log-prior.
+    cousin). Documents labeled ``col_label`` = true are the positive
+    class, the rest negative; the model is :func:`nb_train`'s over the
+    whole input, and every document is then scored by
+    :func:`nb_score`'s scorer — its log-odds under the two
+    class-conditional unigram models with Laplace ``alpha`` smoothing
+    plus the class log-prior — with its label carried through:
 
     score(d) = ln(D_pos/D_neg)
              + Σ_{w∈d} [ ln((c_pos(w)+α)/(N_pos+αV))
                        − ln((c_neg(w)+α)/(N_neg+αV)) ]
 
-    Cross-engine determinism: each ln() output is rounded to 9
-    decimals and cast to DECIMAL(18,9) BEFORE the per-document sum
-    (the doc_perplexity / adamic_adar house rule), so the sum is
-    partition-order independent and bitwise equal in any engine; the
-    ln() operands are IEEE-exact integer-ratio divisions, identical
-    on both sides.
-
-    Scale shape (100 TB): ONE token-grain shuffle builds the
-    per-class vocabulary counts (map-side combined — the key space is
-    the vocabulary, not the corpus); class totals and doc priors are
-    one-row broadcasts; the vocabulary-scale log-likelihood-ratio
-    table hash-joins back onto the token stream (broadcastable under
-    AQE when the vocabulary fits); ONE doc-grain shuffle sums the
-    scores. No driver actions, no quadratic anywhere.
-
-    Degenerate classes: if either class has zero documents the prior
-    is NULL (nullif-guarded, not ±inf) and every score is NULL — a
-    loud signal, not a silent wrong answer.
+    Every token of the scored corpus is in the model's vocabulary, so
+    the out-of-vocabulary constant never applies here. Determinism,
+    scale shape and the one-class NULL prior are nb_train's and
+    nb_score's: each ln() is pre-rounded to DECIMAL(18,9) before the
+    per-document sum; one token-grain shuffle trains, one doc-grain
+    shuffle scores.
 
     Output: (id, is_labeled_pos, n_tokens, nb_log_odds,
-    predicted_pos). Zero-token documents cannot occur for non-NULL
-    text (split always yields >= 1 token); both engines tokenize
-    identically. NULL-text documents contribute no tokens to the
+    predicted_pos). NULL-text documents contribute no tokens to the
     model but are CONSERVED in the output with NULL n_tokens /
-    nb_log_odds / predicted_pos (the module's loud-NULL rule —
-    explode over split(NULL) would silently drop the row), via a
-    scan-side filtered union, no extra shuffle.
+    nb_log_odds / predicted_pos (the module's loud-NULL rule).
     """
-    lab = df.select(
+    docs = df.select(
         F.col(col_id),
-        F.col(col_label).cast("int").alias("y"),
-        F.col(col_text).alias("__text"),
+        F.col(col_label).cast("int").alias("is_labeled_pos"),
+        F.col(col_text),
     )
-    toks = lab.select(
-        col_id, "y", F.explode(F.split("__text", " ")).alias("w")
-    )
-    stats = toks.groupBy("w").agg(
-        F.sum("y").cast("bigint").alias("c_pos"),
-        F.sum(1 - F.col("y")).cast("bigint").alias("c_neg"),
-    )
-    totals = stats.agg(
-        F.sum("c_pos").cast("bigint").alias("n_pos"),
-        F.sum("c_neg").cast("bigint").alias("n_neg"),
-        F.count(F.lit(1)).cast("bigint").alias("v"),
-    )
-    # one-row broadcast: the class token totals + vocabulary size
-    a = F.lit(alpha)
-
-    def _ln9(num, den):
-        return F.round(F.log(num / den), 9).cast("decimal(18,9)")
-
-    llr = stats.crossJoin(F.broadcast(totals)).select(
-        "w",
-        (
-            _ln9(
-                (F.col("c_pos") + a),
-                (F.col("n_pos") + a * F.col("v")).cast("double"),
-            )
-            - _ln9(
-                (F.col("c_neg") + a),
-                (F.col("n_neg") + a * F.col("v")).cast("double"),
-            )
-        ).alias("llr9"),
-    )
-    # doc-count prior, nullif-guarded against a one-class corpus
-    prior = lab.agg(
-        F.round(
-            F.log(
-                F.sum("y").cast("double")
-                / F.nullif(
-                    F.sum(1 - F.col("y")).cast("double"), F.lit(0.0)
-                )
-            ),
-            9,
-        )
-        .cast("decimal(18,9)")
-        .alias("prior9")
-    )
-    per = (
-        toks.join(llr, "w")
-        .groupBy(col_id)
-        .agg(
-            F.any_value("y").alias("is_labeled_pos"),
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("llr9").alias("s"),
-        )
-    )
-    score = (F.col("prior9") + F.col("s")).cast("double")
-    scored = per.crossJoin(F.broadcast(prior)).select(
-        col_id,
-        "is_labeled_pos",
-        "n_tokens",
-        F.round(score, 6).alias("nb_log_odds"),
-        F.when(score > 0, 1)
-        .when(score <= 0, 0)
-        .cast("int")
-        .alias("predicted_pos"),
-    )
-    null_text = lab.filter(F.col("__text").isNull()).select(
-        col_id,
-        F.col("y").alias("is_labeled_pos"),
-        F.lit(None).cast("bigint").alias("n_tokens"),
-        F.lit(None).cast("double").alias("nb_log_odds"),
-        F.lit(None).cast("int").alias("predicted_pos"),
-    )
-    return scored.unionByName(null_text)
+    model = nb_train(df, col_label, col_text, alpha)
+    return _nb_scores(model, docs, [col_id, "is_labeled_pos"], col_text)
 
 
 def nb_train(
@@ -1635,9 +1504,17 @@ def nb_train(
     at scoring time, ln((N_neg+αV)/(N_pos+αV)) under Laplace α).
     Write it to parquet and ship it to any scorer; vocabulary-scale.
 
-    Same determinism rule as the one-pass classifier: every ln() is
-    rounded to 9 decimals into DECIMAL(18,9) at train time, so any
-    scorer's sum is partition-order independent and engine-portable.
+    Cross-engine determinism: every ln() is rounded to 9 decimals
+    into DECIMAL(18,9) at train time (``fitting.dec9``), so any
+    scorer's sum is partition-order independent and engine-portable;
+    the ln() operands are IEEE-exact integer-ratio divisions.
+
+    Scale shape: ONE token-grain shuffle builds the per-class
+    vocabulary counts (map-side combined — the key space is the
+    vocabulary, not the corpus); class totals and the doc-count prior
+    are one-row broadcasts. If either class has zero documents the
+    prior is NULL (nullif-guarded, not ±inf), so every score is NULL —
+    a loud signal, not a silent wrong answer.
     """
     lab = df.select(
         F.col(col_label).cast("int").alias("y"),
@@ -1655,47 +1532,30 @@ def nb_train(
         F.count(F.lit(1)).cast("bigint").alias("v"),
     )
     prior = lab.agg(
-        F.round(
+        dec9(
             F.log(
                 F.sum("y").cast("double")
                 / F.nullif(
                     F.sum(1 - F.col("y")).cast("double"), F.lit(0.0)
                 )
-            ),
-            9,
-        )
-        .cast("decimal(18,9)")
-        .alias("prior9")
+            )
+        ).alias("prior9")
     )
-
-    def _ln9(num, den):
-        return F.round(F.log(num / den), 9).cast("decimal(18,9)")
-
+    den_pos = (F.col("n_pos") + a * F.col("v")).cast("double")
+    den_neg = (F.col("n_neg") + a * F.col("v")).cast("double")
     return (
         stats.crossJoin(F.broadcast(totals))
         .crossJoin(F.broadcast(prior))
         .select(
             "w",
             (
-                _ln9(
-                    (F.col("c_pos") + a),
-                    (F.col("n_pos") + a * F.col("v")).cast("double"),
-                )
-                - _ln9(
-                    (F.col("c_neg") + a),
-                    (F.col("n_neg") + a * F.col("v")).cast("double"),
-                )
+                dec9(F.log((F.col("c_pos") + a) / den_pos))
+                - dec9(F.log((F.col("c_neg") + a) / den_neg))
             ).alias("llr9"),
             "prior9",
             (
-                _ln9(
-                    a.cast("bigint"),
-                    (F.col("n_pos") + a * F.col("v")).cast("double"),
-                )
-                - _ln9(
-                    a.cast("bigint"),
-                    (F.col("n_neg") + a * F.col("v")).cast("double"),
-                )
+                dec9(F.log(a.cast("bigint") / den_pos))
+                - dec9(F.log(a.cast("bigint") / den_neg))
             ).alias("unseen_llr9"),
         )
     )
@@ -1714,42 +1574,46 @@ def nb_score(
     with novel words scores correctly instead of silently dropping.
 
     On the training corpus itself this reproduces
-    :func:`nb_quality_classifier` log-odds exactly (every token is
-    in-vocabulary; pytest-pinned equivalence).
+    :func:`nb_quality_classifier` log-odds exactly (the classifier is
+    this scorer over the model trained on its input).
 
     Scale shape: the model is vocabulary-scale and broadcastable
     (AQE) or hash-joinable; constants ride one one-row broadcast;
-    ONE doc-grain shuffle sums the scores. NULL-text documents are
-    conserved with NULL n_tokens / nb_log_odds / predicted_pos
-    (loud-NULL rule, scan-side union — explode over split(NULL)
-    would silently drop them). In streaming, call this inside
-    foreachBatch with the model read once — the model is static
-    state, the batch is the only moving data."""
+    ONE doc-grain shuffle sums the scores (the family's per-document
+    scorer, ``text._doc_sums``). NULL-text documents are conserved
+    with NULL n_tokens / nb_log_odds / predicted_pos (loud-NULL rule,
+    scan-side union — explode over split(NULL) would silently drop
+    them). In streaming, call this inside foreachBatch with the model
+    read once — the model is static state, the batch is the only
+    moving data."""
+    return _nb_scores(model, df, [col_id], col_text)
+
+
+def _nb_scores(
+    model: DataFrame, docs: DataFrame, keys: list[str], col_text: str
+) -> DataFrame:
+    """nb_score's scorer over documents keyed by ``keys``: (*keys,
+    n_tokens, nb_log_odds, predicted_pos), NULL-text rows conserved
+    with NULL scores by a scan-side union."""
     consts = model.agg(
         F.first("prior9").alias("prior9"),
         F.first("unseen_llr9").alias("unseen_llr9"),
     )
-    toks = df.select(
-        F.col(col_id), F.explode(F.split(F.col(col_text), " ")).alias("w")
-    )
-    per = (
-        toks.join(model.select("w", "llr9"), "w", "left")
-        .crossJoin(F.broadcast(consts))
-        .select(
-            col_id,
-            F.coalesce("llr9", "unseen_llr9").alias("t9"),
-            "prior9",
-        )
-        .groupBy(col_id)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("t9").alias("s"),
-            F.first("prior9").alias("prior9"),
-        )
+    toks = docs.select(
+        *keys, F.explode(tokens_col(col_text)).alias("w")
+    ).crossJoin(F.broadcast(consts))
+    # prior9 is one constant: grouping by it too carries it through
+    per = _doc_sums(
+        toks,
+        model.select("w", "llr9"),
+        "w",
+        [*keys, "prior9"],
+        how="left",
+        s=F.coalesce("llr9", "unseen_llr9"),
     )
     score = (F.col("prior9") + F.col("s")).cast("double")
     scored = per.select(
-        col_id,
+        *keys,
         "n_tokens",
         F.round(score, 6).alias("nb_log_odds"),
         F.when(score > 0, 1)
@@ -1757,10 +1621,8 @@ def nb_score(
         .cast("int")
         .alias("predicted_pos"),
     )
-    # conserve NULL-text documents with NULL scores (loud-NULL rule;
-    # explode over split(NULL) drops the row) — scan-side union
-    null_text = df.filter(F.col(col_text).isNull()).select(
-        F.col(col_id),
+    null_text = docs.filter(F.col(col_text).isNull()).select(
+        *keys,
         F.lit(None).cast("bigint").alias("n_tokens"),
         F.lit(None).cast("double").alias("nb_log_odds"),
         F.lit(None).cast("int").alias("predicted_pos"),
@@ -1803,11 +1665,7 @@ def ccnet_perplexity_buckets(
         ).alias("c2"),
     )
     u = (
-        F.conv(
-            F.substring(F.md5(F.col(col_id).cast("string")), 1, 3),
-            16,
-            10,
-        ).cast("double")
+        md5_prefix(F.md5(F.col(col_id).cast("string")), 3).cast("double")
         / 4096.0
     )
     bucket = (

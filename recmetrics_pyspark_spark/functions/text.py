@@ -16,6 +16,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.ranking import ranked_topk, top_k_per_group
+from .fitting import centered_ols_slope, dec9, md5_prefix
+
 # Tiny stopword lexicons (lowercase). Kept deliberately small and
 # hardcoded: they are part of the operator's deterministic contract.
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -39,6 +42,65 @@ def count_in_lexicon(tokens_expr: str, lexicon: tuple[str, ...]) -> Column:
     """# tokens belonging to a lexicon, via a JVM higher-order filter."""
     return F.expr(
         f"size(filter({tokens_expr}, t -> t IN {_sql_set(lexicon)}))"
+    )
+
+
+def _bigrams(df: DataFrame, col_text: str, *keys: str) -> DataFrame:
+    """The family's one bigram emitter: ``(*keys, w1, w2)`` for every
+    adjacent token pair of every document, read scan-side (posexplode
+    of the split array, paired with the array's next element), so no
+    document-keyed exchange or per-document sort is needed. Documents
+    with fewer than two tokens, and NULL text, emit nothing."""
+    return (
+        df.select(*keys, tokens_col(col_text).alias("__toks"))
+        .select(*keys, "__toks", F.posexplode("__toks").alias("pos", "w1"))
+        .select(
+            *keys,
+            "w1",
+            F.expr("try_element_at(__toks, pos + 2)").alias("w2"),
+        )
+        .filter(F.col("w2").isNotNull())
+    )
+
+
+def _bigram_counts(bigrams: DataFrame) -> DataFrame:
+    """The corpus bigram LM table over emitted bigram rows:
+    ``(w1, w2, c12, c1)``, c12 = c(w1,w2) and c1 = Σ c12 over the
+    pair's w1 (the conditional denominator, over observed bigrams)."""
+    from pyspark.sql.window import Window
+
+    return (
+        bigrams.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c12"))
+        .withColumn(
+            "c1",
+            F.sum("c12").over(Window.partitionBy("w1")).cast("bigint"),
+        )
+    )
+
+
+def _doc_sums(
+    toks: DataFrame,
+    scores: DataFrame,
+    on: str | list[str],
+    keys: list[str],
+    how: str = "inner",
+    **sums,
+) -> DataFrame:
+    """The family's one per-document scorer: token rows joined
+    (``how``) to a per-token score table on ``on``, grouped by the
+    document ``keys``. Returns the keys, ``n_tokens`` (joined rows per
+    document) and, per ``name=score`` keyword, the exact sum of that
+    DECIMAL(18,9) column or expression (see ``fitting.dec9``), so the
+    sum cannot move with partition order. Callers project their own
+    means: the one doc-grain shuffle is here."""
+    return (
+        toks.join(scores, on, how)
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+            *(F.sum(c).alias(name) for name, c in sums.items()),
+        )
     )
 
 
@@ -178,9 +240,8 @@ def tfidf_top_terms(
 
     idf = ln((N+1)/(df+1)) + 1 (sklearn's smooth idf); score = tf·idf.
     Two vocabulary-scale aggregates + a broadcast join; ranking is
-    per-document (partitioned window)."""
+    per-document (``ranking.top_k_per_group``)."""
     from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
 
     toks = df.select(
         F.col(col_id), F.explode(F.split(col_text, " ")).alias("token")
@@ -199,10 +260,8 @@ def tfidf_top_terms(
         "token",
         F.round(F.col("tf") * F.col("idf"), 6).alias("tfidf"),
     )
-    w = Window.partitionBy(col_id).orderBy(F.desc("tfidf"), F.asc("token"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+    return top_k_per_group(
+        scored, col_id, [F.desc("tfidf"), F.asc("token")], k
     )
 
 
@@ -256,9 +315,7 @@ def dataset_split(
     thresholds. Stable under any partitioning/ordering, reproducible in
     plain SQL — the property a 100 TB split must have (no RNG state,
     no global shuffle)."""
-    bucket = F.conv(
-        F.substring(F.md5(F.col(col_id).cast("string")), 1, 2), 16, 10
-    ).cast("long")
+    bucket = md5_prefix(F.md5(F.col(col_id).cast("string")), 2)
     val_hi = 256 * val_pct // 100
     test_hi = val_hi + 256 * test_pct // 100
     return df.withColumn("_bucket", bucket).withColumn(
@@ -479,9 +536,7 @@ def mixture_sample(
     predicate, no shuffle at all)."""
     r = rates or MIXTURE_RATES
     u = (
-        F.conv(
-            F.substring(F.md5(F.col(col_id).cast("string")), 1, 3), 16, 10
-        ).cast("double")
+        md5_prefix(F.md5(F.col(col_id).cast("string")), 3).cast("double")
         / 4096.0
     )
     src_num = F.regexp_extract(F.col(col_source), r"(\d+)$", 1).cast("long")
@@ -541,36 +596,22 @@ def bigram_lm(
 ) -> DataFrame:
     """Corpus bigram language model: P(w2|w1) = c(w1,w2) / c(w1·),
     with the denominator summed over observed bigrams so the
-    distribution is properly conditional. Adjacency via ``lead`` over
-    a per-document position window (each document's token stream stays
-    on one reducer — document-scale state, never corpus-scale). Output
-    is the global top-``top_n`` bigrams by count: the final ranking
-    window is a single-reducer sort over the VOCABULARY² aggregate
-    (bounded, catalog-scale), not over the corpus."""
-    from pyspark.sql.window import Window
-
-    tok = df.select(
-        F.col(col_id), F.posexplode(tokens_col(col_text)).alias("pos", "w1")
-    )
-    wdoc = Window.partitionBy(col_id).orderBy("pos")
-    big = (
-        tok.withColumn("w2", F.lead("w1").over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    wuni = Window.partitionBy("w1")
-    scored = big.withColumn(
-        "c1", F.sum("c12").over(wuni).cast("bigint")
-    ).withColumn(
+    distribution is properly conditional. Adjacency comes from the
+    family's one bigram emitter (:func:`_bigrams`): each token is
+    paired with the next element of its document's split array in the
+    scan, so there is no document-keyed exchange or per-document sort,
+    and ``col_id`` is not read (a pair never crosses documents). The
+    corpus shuffles once, map-side combined, to count the
+    VOCABULARY²-bounded pair table; the c1 denominator is a window per
+    w1 over that table. Output is the global top-``top_n`` bigrams by
+    count via ``ranking.ranked_topk`` (orderBy + limit: every task
+    keeps ``top_n`` rows, then the result is numbered)."""
+    scored = _bigram_counts(_bigrams(df, col_text)).withColumn(
         "p_cond", F.round(F.col("c12").cast("double") / F.col("c1"), 6)
     )
-    wtop = Window.orderBy(F.desc("c12"), F.asc("w1"), F.asc("w2"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wtop).cast("bigint"))
-        .filter(F.col("rnk") <= top_n)
-        .select("w1", "w2", "c12", "c1", "p_cond", "rnk")
-    )
+    return ranked_topk(
+        scored, [F.desc("c12"), F.asc("w1"), F.asc("w2")], top_n
+    ).select("w1", "w2", "c12", "c1", "p_cond", "rnk")
 
 
 def vocab_encode(
@@ -665,9 +706,7 @@ def shuffle_shards(
     from pyspark.sql.window import Window
 
     h = F.md5(F.col(col_id).cast("string"))
-    shard = (
-        F.conv(F.substring(h, 1, 4), 16, 10).cast("bigint") % n_shards
-    ).alias("shard")
+    shard = (md5_prefix(h, 4) % n_shards).alias("shard")
     w = Window.partitionBy("shard").orderBy(F.col("h"), F.col(col_id))
     return (
         df.select(F.col(col_id), h.alias("h"), shard)
@@ -706,7 +745,6 @@ def log_odds_terms(
     broadcasts, and the ranking window partitions by group over vocab
     rows. No corpus-scale join, window, or second pass."""
     from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
 
     toks = df.select(
         F.col(col_group).alias("grp"),
@@ -763,10 +801,8 @@ def log_odds_terms(
             ).alias("zraw"),
         )
     )
-    w = Window.partitionBy("grp").orderBy(F.desc("zraw"), F.asc("token"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= k)
+        top_k_per_group(scored, "grp", [F.desc("zraw"), F.asc("token")], k)
         .select(
             F.col("grp").alias(col_group),
             "token",
@@ -801,7 +837,7 @@ def hashing_vectorize(
     joins, no windows, no driver state. Exact-zero cancellations are
     dropped (sparse output)."""
     h = F.md5(F.col("token"))
-    dim = F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % n_dims
+    dim = md5_prefix(h, 8) % n_dims
     sign = F.when(
         F.conv(F.substring(h, 9, 1), 16, 10).cast("bigint") % 2 == 0,
         F.lit(1),
@@ -871,53 +907,31 @@ def doc_perplexity(
     partition-order independent and engine-portable (the same rule as
     adamic_adar's DECIMAL-exact sums).
 
-    Scale shape: the doc-bigram stream shuffles once to build the
-    vocabulary²-bounded LM (map-side combined) and once more keyed on
-    (w1,w2) to pick up counts — the join's build side is the LM table
-    (catalog-scale, broadcastable under AQE); per-doc aggregation is
-    the only corpus-scale shuffle. Single-token documents have no
+    Scale shape: bigrams come from the family's one emitter
+    (:func:`_bigrams`, scan-side: no document-keyed exchange, no
+    per-document sort, nothing persisted — the emitter is cheap to
+    re-read, so the LM side and the scoring side each scan). The
+    stream shuffles once to build the vocabulary²-bounded LM
+    (map-side combined) and once more keyed on (w1,w2) to pick up its
+    bits — the join's build side is the LM table (catalog-scale,
+    broadcastable under AQE); the per-doc sum (:func:`_doc_sums`) is
+    the only doc-grain shuffle. Single-token documents have no
     bigrams and drop out (both engines agree)."""
-    from pyspark.sql.window import Window
-
-    tok = df.select(
-        F.col(col_id), F.posexplode(tokens_col(col_text)).alias("pos", "w1")
+    big = _bigrams(df, col_text, col_id)
+    bits = _bigram_counts(big).select(
+        "w1",
+        "w2",
+        dec9(-F.log2(F.col("c12").cast("double") / F.col("c1"))).alias(
+            "bits"
+        ),
     )
-    wdoc = Window.partitionBy(col_id).orderBy("pos")
-    docbig = (
-        tok.withColumn("w2", F.lead("w1").over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .select(col_id, "w1", "w2")
-        .persist()
-    )
-    lm = (
-        docbig.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c12"))
-        .withColumn(
-            "c1",
-            F.sum("c12").over(Window.partitionBy("w1")).cast("bigint"),
-        )
-    )
-    bits = F.round(
-        -F.log2(F.col("c12").cast("double") / F.col("c1")), 9
-    ).cast("decimal(18,9)")
-    return (
-        docbig.join(lm, ["w1", "w2"])
-        .select(F.col(col_id), bits.alias("bits"))
-        .groupBy(col_id)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-            F.sum("bits").alias("sum_bits"),
-        )
-        .select(
-            col_id,
-            "n_bigrams",
-            F.round(
-                F.col("sum_bits").cast("double") / F.col("n_bigrams"), 6
-            ).alias("avg_bits"),
-            F.floor(
-                F.col("sum_bits").cast("double") / F.col("n_bigrams")
-            ).cast("int").alias("bits_bucket"),
-        )
+    per = _doc_sums(big, bits, ["w1", "w2"], [col_id], sum_bits="bits")
+    avg = F.col("sum_bits").cast("double") / F.col("n_tokens")
+    return per.select(
+        col_id,
+        F.col("n_tokens").alias("n_bigrams"),
+        F.round(avg, 6).alias("avg_bits"),
+        F.floor(avg).cast("int").alias("bits_bucket"),
     )
 
 
@@ -1012,16 +1026,8 @@ def heaps_law_points(
             F.col("cum_vocab").cast("bigint").alias("cum_vocab"),
         )
     )
-    lx = F.expr(
-        "CAST(round(log10(CAST(cum_tokens AS DOUBLE)), 9)"
-        " AS DECIMAL(18,9))"
-    )
-    ly = F.expr(
-        "CAST(round(log10(CAST(cum_vocab AS DOUBLE)), 9)"
-        " AS DECIMAL(18,9))"
-    )
-    from .fitting import centered_ols_slope
-
+    lx = dec9(F.log10(F.col("cum_tokens").cast("double")))
+    ly = dec9(F.log10(F.col("cum_vocab").cast("double")))
     fit = centered_ols_slope(
         points.select(lx.alias("x"), ly.alias("y")), "heaps_beta"
     )
@@ -1051,34 +1057,21 @@ def corpus_entropy_rates(
     aggregate and one bigram-vocabulary aggregate (both with map-side
     partial combine), two one-row reductions. Nothing wider than the
     n-gram vocabularies shuffles."""
-    toks = df.select(
-        F.col(col_id).alias("id"),
-        F.split(F.col(col_text), " ").alias("__toks"),
+    uni = (
+        df.select(F.explode(tokens_col(col_text)).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    uni = toks.select(
-        F.explode("__toks").alias("tok")
-    ).groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     bi = (
-        toks.select(
-            "id",
-            "__toks",
-            F.posexplode("__toks").alias("pos", "tok"),
-        )
-        .select(
-            "tok",
-            F.expr("try_element_at(__toks, pos + 2)").alias("nxt"),
-        )
-        .filter(F.col("nxt").isNotNull())
-        .groupBy("tok", "nxt")
+        _bigrams(df, col_text)
+        .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
     def _entropy(counts, label):
         tot = counts.agg(F.sum("n").alias("tot"))
-        contrib = F.expr(
-            "CAST(round(-(n / CAST(tot AS DOUBLE))"
-            " * log2(n / CAST(tot AS DOUBLE)), 9) AS DECIMAL(18,9))"
-        )
+        p = F.col("n") / F.col("tot").cast("double")
+        contrib = dec9(-p * F.log2(p))
         return counts.crossJoin(F.broadcast(tot)).agg(
             F.max("tot").cast("bigint").alias(f"n_{label}_tokens"),
             F.count(F.lit(1)).cast("bigint").alias(f"n_{label}_types"),
@@ -1594,12 +1587,11 @@ def corpus_datacard(
     stop_ratio = F.try_divide(
         count_in_lexicon(t, STOPWORDS_EN).cast("bigint"), n_tokens
     )
-    q = F.round(
+    q = dec9(
         F.least(n_tokens / F.lit(50.0), F.lit(1.0)) * 0.4
         + alpha * 0.4
-        + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.2,
-        9,
-    ).cast("decimal(18,9)")
+        + F.least(stop_ratio * 5.0, F.lit(1.0)) * 0.2
+    )
     s_en = count_in_lexicon(t, LEX_EN)
     s_es = count_in_lexicon(t, LEX_ES)
     s_de = count_in_lexicon(t, LEX_DE)
@@ -1729,28 +1721,17 @@ def excess_surprisal(
         F.count(F.lit(1)).cast("bigint").alias("v"),
     )
 
-    def _bits9(c, n):
-        return (
-            F.round(
-                -F.log2((c + 1) / (n + F.col("v")).cast("double")), 9
-            )
-            .cast("decimal(18,9)")
+    def bits(c, n):  # Laplace-smoothed -log2 p over the union vocab
+        return dec9(
+            -F.log2((F.col(c) + 1) / (F.col(n) + F.col("v")).cast("double"))
         )
 
-    bits = vocab.crossJoin(F.broadcast(totals)).select(
+    table = vocab.crossJoin(F.broadcast(totals)).select(
         "w",
-        _bits9(F.col("c_self"), F.col("n_self")).alias("b_self9"),
-        _bits9(F.col("c_ref"), F.col("n_ref")).alias("b_ref9"),
+        bits("c_self", "n_self").alias("b_self9"),
+        bits("c_ref", "n_ref").alias("b_ref9"),
     )
-    per = (
-        toks.join(bits, "w")
-        .groupBy(col_id)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("b_self9").alias("ss"),
-            F.sum("b_ref9").alias("sr"),
-        )
-    )
+    per = _doc_sums(toks, table, "w", [col_id], ss="b_self9", sr="b_ref9")
     return per.select(
         col_id,
         "n_tokens",

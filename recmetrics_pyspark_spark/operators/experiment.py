@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.fitting import md5_prefix
+
 
 def _per_arm_stats(
     df: DataFrame, col_unit: str, col_value: str, salt: str
@@ -30,14 +32,9 @@ def _per_arm_stats(
         )
         .select(
             (
-                F.conv(
-                    F.substring(F.md5(
-                        F.concat_ws("|", F.lit(salt),
-                                    F.col("unit").cast("string"))
-                    ), 1, 8),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_prefix(F.md5(F.concat_ws(
+                    "|", F.lit(salt), F.col("unit").cast("string")
+                )), 8)
                 % 2
             ).alias("arm"),
             "v",
@@ -237,18 +234,9 @@ def ucb_arm_stats(
 
     armed = df.select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|", F.lit(salt),
-                            F.col(col_unit).cast("string"),
-                        )
-                    ),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("bigint")
+            md5_prefix(F.md5(F.concat_ws(
+                "|", F.lit(salt), F.col(col_unit).cast("string")
+            )), 8)
             % n_arms
         ).alias("arm"),
         F.col(col_value).cast("decimal(18,6)").alias("r"),

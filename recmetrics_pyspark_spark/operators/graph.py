@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import shared_plan
+from .ranking import ranked_topk
 
 
 def _node_broadcast_hint(df: DataFrame, limit: int):
@@ -464,8 +465,6 @@ def adamic_adar_links(
     :func:`_capped_adjacency` shared build, also read by
     :func:`common_neighbor_links` — the two predictors over one graph
     pay the edge-scale ranking window once."""
-    from pyspark.sql.window import Window
-
     capped, deg, hint = _capped_adjacency(
         pairs, col_a, col_b, col_w, top_neighbors, broadcast_node_limit
     )
@@ -484,16 +483,12 @@ def adamic_adar_links(
     existing = pairs.select(
         F.col(col_a).alias("a"), F.col(col_b).alias("b")
     )
-    # global top-k via orderBy+limit → TakeOrderedAndProject (map-side
-    # partial top-k, every task keeps k rows) — a global row_number
-    # window here would sort the full candidate table in one partition;
-    # the rank column is then numbered on the k-row result
-    wk = Window.orderBy(F.desc("aa_dec"), F.asc("a"), F.asc("b"))
     return (
-        scored.join(existing, ["a", "b"], "left_anti")
-        .orderBy(F.desc("aa_dec"), F.asc("a"), F.asc("b"))
-        .limit(k)
-        .withColumn("rnk", F.row_number().over(wk).cast("bigint"))
+        ranked_topk(
+            scored.join(existing, ["a", "b"], "left_anti"),
+            [F.desc("aa_dec"), F.asc("a"), F.asc("b")],
+            k,
+        )
         .select(
             F.col("a").alias("item_a"),
             F.col("b").alias("item_b"),
@@ -537,8 +532,6 @@ def common_neighbor_links(
     vocabulary-scale table at 100 TB. The degree table and the capped
     adjacency come from the :func:`_capped_adjacency` shared build
     shared with :func:`adamic_adar_links`."""
-    from pyspark.sql.window import Window
-
     capped, deg, hint = _capped_adjacency(
         pairs, col_a, col_b, col_w, top_neighbors, broadcast_node_limit
     )
@@ -555,11 +548,7 @@ def common_neighbor_links(
     existing = pairs.select(
         F.col(col_a).alias("a"), F.col(col_b).alias("b")
     )
-    wk = Window.orderBy(
-        F.desc("n_common_nbrs"), F.desc("jaccard_nbrs"),
-        F.asc("a"), F.asc("b"),
-    )
-    return (
+    candidates = (
         scored.join(existing, ["a", "b"], "left_anti")
         .join(hint(da), "a")
         .join(hint(db), "b")
@@ -576,12 +565,16 @@ def common_neighbor_links(
                 6,
             ).alias("jaccard_nbrs"),
         )
-        .orderBy(
-            F.desc("n_common_nbrs"), F.desc("jaccard_nbrs"),
-            F.asc("a"), F.asc("b"),
+    )
+    return (
+        ranked_topk(
+            candidates,
+            [
+                F.desc("n_common_nbrs"), F.desc("jaccard_nbrs"),
+                F.asc("a"), F.asc("b"),
+            ],
+            k,
         )
-        .limit(k)
-        .withColumn("rnk", F.row_number().over(wk).cast("bigint"))
         .select(
             F.col("a").alias("item_a"),
             F.col("b").alias("item_b"),

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from ..functions.fitting import md5_prefix
+
 
 def _require_cols(df: DataFrame, fn: str, *cols: str) -> None:
     """Fail fast with the available schema instead of a deep Catalyst
@@ -198,13 +200,7 @@ def long_tail_stats(
         vol = vol.withColumn(
             "tb",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(F.col(col_item).cast("string")), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
+                md5_prefix(F.md5(F.col(col_item).cast("string")), 15)
                 % tie_buckets
             ).cast("int"),
         )

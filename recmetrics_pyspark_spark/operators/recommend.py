@@ -586,10 +586,10 @@ def serendipity_at_k(
     averaged over users.
 
     Scale: popularity is one item-keyed aggregate; the baseline is
-    baseline_k rows (broadcast); hits are one (user, item) join —
-    everything else is user-scale."""
-    from pyspark.sql.window import Window
-
+    its top ``baseline_k`` rows by orderBy + limit (a map-side partial
+    top-k, broadcast — never a one-partition sort of the popularity
+    table); hits are one (user, item) join — everything else is
+    user-scale."""
     r = recs.select(
         F.col(col_user).alias("u"),
         F.col(col_item).alias("i"),
@@ -599,10 +599,9 @@ def serendipity_at_k(
         F.col(col_user).alias("u"), F.col(col_item).alias("i")
     ).distinct()
     pop = t.groupBy("i").agg(F.count(F.lit(1)).alias("cnt"))
-    wb = Window.orderBy(F.desc("cnt"), F.asc("i"))
     baseline = (
-        pop.withColumn("brnk", F.row_number().over(wb))
-        .filter(F.col("brnk") <= baseline_k)
+        pop.orderBy(F.desc("cnt"), F.asc("i"))
+        .limit(baseline_k)
         .select("i", F.lit(1).alias("in_baseline"))
     )
     hits = t.select("u", "i", F.lit(1).alias("is_hit"))

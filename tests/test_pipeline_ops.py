@@ -62,6 +62,85 @@ def test_bigram_lm_probabilities_conditionally_normalize(spark):
     assert counts == sorted(counts, reverse=True)
 
 
+def _edge_docs(spark):
+    """Tokenization edge cases: double, leading and trailing spaces,
+    a one-token document, empty text and NULL text."""
+    rows = [
+        (1, "a b  c a b"),
+        (2, " a b"),
+        (3, "b a "),
+        (4, "solo"),
+        (5, ""),
+        (6, None),
+        (7, "a b c a"),
+    ]
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def test_text_family_shares_one_bigram_definition(spark):
+    """bigram_lm, corpus_entropy_rates and doc_perplexity count the
+    same bigrams (adjacent pairs of the single-space split, empty
+    tokens included) on edge-case text."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from recmetrics_pyspark_spark.functions.text import (
+        corpus_entropy_rates,
+        doc_perplexity,
+    )
+
+    docs = _edge_docs(spark)
+    want = Counter(
+        pair
+        for _, t in docs.collect()
+        if t is not None
+        for pair in zip(t.split(" "), t.split(" ")[1:])
+    )
+    lm = bigram_lm(docs, top_n=10**6).collect()
+    assert {(r.w1, r.w2): r.c12 for r in lm} == dict(want)
+    assert len(lm) == corpus_entropy_rates(docs).first().n_bigrams
+    n_scored = doc_perplexity(docs).agg(F.sum("n_bigrams")).first()[0]
+    assert sum(r.c12 for r in lm) == n_scored == sum(want.values())
+
+
+def test_text_scorers_leave_no_cache_manager_entries(spark):
+    """The LM scorers persist nothing: after a cleared cache, building
+    and running each of them leaves the CacheManager empty."""
+    from pyspark.sql import functions as F
+
+    from recmetrics_pyspark_spark.functions.curation import (
+        ccnet_perplexity_buckets,
+        dsir_importance,
+        nb_quality_classifier,
+        nb_score,
+        nb_train,
+    )
+    from recmetrics_pyspark_spark.functions.text import (
+        doc_perplexity,
+        excess_surprisal,
+    )
+
+    spark.catalog.clearCache()
+    docs = _edge_docs(spark).select(
+        "doc_id",
+        "text",
+        (F.col("doc_id") % 2 == 0).alias("y"),
+        F.when(F.col("doc_id") < 4, "en").otherwise("de").alias("lang"),
+    )
+    for out in (
+        doc_perplexity(docs),
+        ccnet_perplexity_buckets(docs),
+        nb_quality_classifier(docs, "y"),
+        nb_score(nb_train(docs, "y"), docs),
+        excess_surprisal(docs, docs),
+        dsir_importance(docs),
+    ):
+        out.collect()
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_mgr.isEmpty(), "a text scorer left cached plans"
+
+
 def test_vocab_encode_ids_dense_and_frequency_ranked(spark):
     docs = _docs(spark)
     rows = sorted(vocab_encode(docs).collect(), key=lambda r: r["token_id"])

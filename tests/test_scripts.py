@@ -1,5 +1,6 @@
-"""Command-line helpers: bench.py's query subset check and the
-replicas of scripts/gen_sf.py."""
+"""Command-line helpers: bench.py's query subset check, the
+replicas of scripts/gen_sf.py and scripts/row_hashes.py's
+fingerprints."""
 
 import importlib.util
 import os
@@ -54,3 +55,29 @@ def test_gen_sf_replica_zero_is_the_source():
     assert r1.column("text").to_pylist() == ["abb cdb", "éb"]
     assert r1.column("n_chars").to_pylist() == [7, 2]
     assert r1.column("doc_id").to_pylist() == [1_000_001, 1_000_002]
+
+
+def test_row_hashes_are_stable_and_see_an_altered_row(spark):
+    """Two builds of one query hash alike (row order does not count);
+    changing one value of one row changes the hash."""
+    import __spark_entry__ as e
+    from tests.oracle import SF_DIR_SMALL
+
+    spec = importlib.util.spec_from_file_location(
+        "row_hashes", os.path.join(ROOT, "scripts", "row_hashes.py")
+    )
+    row_hashes = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(row_hashes)
+
+    q = e.queries()["dataset_split"]
+    a = row_hashes.row_hash("dataset_split", q(spark, SF_DIR_SMALL))
+    b = row_hashes.row_hash("dataset_split", q(spark, SF_DIR_SMALL))
+    assert a == b
+
+    rows = q(spark, SF_DIR_SMALL).collect()
+    assert len(rows) > 1
+    assert row_hashes.rows_sha256(rows[::-1]) == a["sha256"]
+    first = rows[0].asDict()
+    first["split"] = first["split"] + "x"
+    altered = [type(rows[0])(**first)] + rows[1:]
+    assert row_hashes.rows_sha256(altered) != a["sha256"]
